@@ -239,13 +239,13 @@ final case class Raster(tiles: Dataset[Tile], ref: GridRef, res: Int = 6) {
   /** Watershed basins + downstream path step counts per cell. */
   def watershed: DataFrame = Flow.downstream(tiles, ref, res)
 
-  /** Stream network: D8 edges with accumulation >= `threshold` cells. */
-  /** Strahler stream order per stream cell (Strahler 1957) — pointer-
-    * doubling chain condensation + junction-forest solve
+  /** Strahler stream order per stream cell (Strahler 1957) — chain-head
+    * resolve + junction-forest fold
     * ([[graft.operators.Flow.strahlerOrder]]). */
   def strahler(threshold: Long): DataFrame =
     Flow.strahlerOrder(tiles, ref, res, threshold)
 
+  /** Stream network: D8 edges with accumulation >= `threshold` cells. */
   def streamNetwork(threshold: Long): DataFrame =
     Flow.streamNetwork(tiles, ref, res, threshold)
 

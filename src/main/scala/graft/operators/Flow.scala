@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.reflect.ClassTag
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core._
 
@@ -31,10 +32,9 @@ import graft.core._
   *   2. a condensed solve over CROSSING EDGES ONLY (O(perimeter), the
   *      same ~4/2^res fraction) — a weighted accumulation on a
   *      functional DAG (acyclic because z strictly decreases along
-  *      flow). Driver-side under `driverLimit`; above it the same
-  *      condensation applies recursively at supertile granularity
-  *      (crossing edges of a 4^k-tile block are a subset of its
-  *      children's), so no single solve ever exceeds the budget;
+  *      flow). On the driver while the collected summaries stay within
+  *      `driverLimit` rows; above it a distributed batched topological
+  *      peel, one round per level of the crossing DAG ([[foldUpstream]]);
   *   3. a second per-tile pass seeding resolved external inflows at
   *      entry cells and re-running the local accumulation.
   * Both DuckDB-oracled: flowDir per-cell (identical IEEE operand order,
@@ -115,17 +115,51 @@ object Flow {
     }.toDF("row", "col", "dir")
   }
 
-  /** Per-tile summary emitted by the first accumulation pass (public:
-    * encoder derivation / codegen needs visible row classes). */
-  final case class TileSummary(
-      crossing: Array[(Long, Long, Long, Long, Long)], // (uR, uC, tR, tC, base)
-      routing: Array[(Long, Long, Long, Long)]) // (bR, bC, exitUR, exitUC); exit -1 -1 = dies in-tile
+  // ---------------------------------------------------------------------
+  // Tile condensation — the scale shape of flowAcc, longestUpstream,
+  // downstream and nearestDrainage:
+  //   1. per tile, an in-tile solve plus the tile's boundary summary
+  //      ([[TraceSummary]]): crossing edges (cell -> neighbor-tile cell)
+  //      and, for every border cell, where its in-tile D8 path ends;
+  //   2. a solve over the CROSSING GRAPH only (O(perimeter), ~4/2^res of
+  //      the cells). A crossing's successor is the exit crossing its
+  //      target's in-tile path reaches; z strictly decreases along flow,
+  //      so the graph is a functional forest. [[foldUpstream]] or
+  //      [[resolveChains]] solves it — on the driver while the summaries
+  //      stay within `driverLimit` collected rows ([[place]]), distributed
+  //      above;
+  //   3. a second per-tile pass seeded with the solved values ([[seeded]]).
+  // Path lengths are kept as INTEGER (cardinal, diagonal) step counts so
+  // results are exact cross-engine; physical length = cellsize * (ncard +
+  // ndiag * sqrt(2)).
 
-  /** Local topological accumulation over one padded tile. `seeds` maps a
-    * GLOBAL (row, col) to an external inflow count added at that cell.
-    * Returns acc(i) for valid cells (0 where NaN). */
+  /** Per-tile boundary summary (public for encoder derivation).
+    * crossing: (xR, xC, tR, tC, a, b) — a crossing cell, its out-of-tile
+    * target and the in-tile upstream value (a, b) at the crossing cell.
+    * routing: (bR, bC, kind, termR, termC, nc, nd) — each border cell's
+    * in-tile trace end ([[localTrace]] kind 1 pit | 2 crossing cell |
+    * 4 stop cell) and the step counts to it. */
+  final case class TraceSummary(
+      crossing: Array[(Long, Long, Long, Long, Long, Long)],
+      routing: Array[(Long, Long, Int, Long, Long, Long, Long)])
+
+  private type Crossing = (Long, Long, Long, Long, Long, Long)
+  private type Route = (Long, Long, Int, Long, Long, Long, Long)
+
+  /** Halo'd tile with the LOCAL indices of its stop cells
+    * ([[nearestDrainage]]'s stream mask; empty for every other operator). */
+  private type Masked = (Stencil.Padded, Array[Int])
+
+  /** In-tile upstream solve: per-cell value (a, b) given the external
+    * seeds arriving at the tile's entry cells, keyed by GLOBAL (row, col). */
+  private type Local = (Stencil.Padded, Array[Int],
+    scala.collection.Map[(Long, Long), (Long, Long)]) => (Array[Long], Array[Long])
+
+  /** Local topological accumulation over one padded tile; a seed's `_1`
+    * is the external inflow count added at its cell. Returns acc(i) for
+    * valid cells (0 where NaN). */
   private def localAcc(pt: Stencil.Padded, dirs: Array[Int],
-      seeds: scala.collection.Map[(Long, Long), Long]): Array[Long] = {
+      seeds: scala.collection.Map[(Long, Long), (Long, Long)]): Array[Long] = {
     val n = pt.h * pt.w
     val acc = new Array[Long](n)
     val indeg = new Array[Int](n)
@@ -149,8 +183,8 @@ object Flow {
     i = 0
     while (i < n) {
       if (dirs(i) >= 0) {
-        acc(i) = 1L + seeds.getOrElse(
-          ((pt.row0 + i / pt.w).toLong, (pt.col0 + i % pt.w).toLong), 0L)
+        acc(i) = 1L + seeds.get(
+          ((pt.row0 + i / pt.w).toLong, (pt.col0 + i % pt.w).toLong)).fold(0L)(_._1)
         if (indeg(i) == 0) queue.add(i)
       }
       i += 1
@@ -167,223 +201,6 @@ object Flow {
     acc
   }
 
-  /** Follow the in-tile path from local index `i`; returns the local index
-    * of the cell that exits the tile (its dir crosses the boundary), or -1
-    * if the path terminates inside (pit). */
-  private def pathExit(pt: Stencil.Padded, dirs: Array[Int], start: Int): Int = {
-    var i = start
-    var steps = 0
-    val n = pt.h * pt.w
-    while (steps <= n) { // z strictly decreases -> cycle-free; bound is a guard
-      if (dirs(i) <= 0) return -1
-      val (dr, dc) = delta(dirs(i))
-      val tr = i / pt.w + dr
-      val tc = i % pt.w + dc
-      if (tr < 0 || tr >= pt.h || tc < 0 || tc >= pt.w) return i
-      i = tr * pt.w + tc
-      steps += 1
-    }
-    throw new IllegalStateException("flow path cycle — non-monotone dir plane")
-  }
-
-  /** D8 flow accumulation: (row, col, acc) for every valid cell; acc
-    * includes the cell itself. `driverLimit` bounds the condensed solve
-    * (crossing-edge count) accepted on the driver. */
-  def flowAcc(tiles: Dataset[Tile], ref: GridRef, res: Int,
-      driverLimit: Int = 2000000): DataFrame = {
-    import tiles.sparkSession.implicits._
-    val cs = ref.cellsize
-    val padded = Stencil.padded(tiles, ref, res).localCheckpoint(false)
-    try {
-      // (padded is consumed twice: the summary pass and the seeded
-      // finalize; the finalize is handed off via eager localCheckpoint so
-      // the cache can be released before returning — the GraphOps/Knn
-      // loop-cache discipline.)
-      // pass 1: per-tile local accumulation + boundary summary (a
-      // DATASET — whether it ever lands on the driver depends on the
-      // crossing count vs driverLimit below)
-      val summariesDs: Dataset[TileSummary] = padded.mapPartitions { it =>
-        it.map { pt =>
-          val dirs = dirPlane(pt, cs)
-          val acc = localAcc(pt, dirs, Map.empty)
-          val crossing = Array.newBuilder[(Long, Long, Long, Long, Long)]
-          var i = 0
-          while (i < dirs.length) {
-            if (dirs(i) > 0) {
-              val (dr, dc) = delta(dirs(i))
-              val tr = i / pt.w + dr
-              val tc = i % pt.w + dc
-              if (tr < 0 || tr >= pt.h || tc < 0 || tc >= pt.w)
-                crossing += (((pt.row0 + i / pt.w).toLong, (pt.col0 + i % pt.w).toLong,
-                  (pt.row0 + tr).toLong, (pt.col0 + tc).toLong, acc(i)))
-            }
-            i += 1
-          }
-          // routing for border cells (any could be an entry)
-          val routing = Array.newBuilder[(Long, Long, Long, Long)]
-          var r = 0
-          while (r < pt.h) {
-            var c = 0
-            while (c < pt.w) {
-              if ((r == 0 || r == pt.h - 1 || c == 0 || c == pt.w - 1) &&
-                dirs(r * pt.w + c) >= 0) {
-                val ex = pathExit(pt, dirs, r * pt.w + c)
-                val (er, ec) =
-                  if (ex < 0) (-1L, -1L)
-                  else ((pt.row0 + ex / pt.w).toLong, (pt.col0 + ex % pt.w).toLong)
-                routing += (((pt.row0 + r).toLong, (pt.col0 + c).toLong, er, ec))
-              }
-              c += 1
-            }
-            r += 1
-          }
-          TileSummary(crossing.result(), routing.result())
-        }
-      }.localCheckpoint(false)
-      try {
-        val nCollect = collectLenCount(
-          summariesDs.map(s => (s.crossing.length + s.routing.length).toLong))
-        if (nCollect <= driverLimit) {
-          // condensed solve on the driver: crossing edges keyed by source
-          // cell — O(perimeter) rows, tiny next to cells
-          val summaries = summariesDs.collect()
-          val crossings = summaries.flatMap(_.crossing)
-          val route = summaries.flatMap(_.routing)
-            .map { case (br, bc, er, ec) => (br, bc) -> (er, ec) }.toMap
-          val base = crossings.map { case (ur, uc, _, _, b) => (ur, uc) -> b }.toMap
-          val target = crossings.map { case (ur, uc, tr, tc, _) => (ur, uc) -> (tr, tc) }.toMap
-          // succ over crossing edges: x exits at target(x); the owning tile
-          // routes that entry cell on to its own exit crossing edge (or dies)
-          val succ: Map[(Long, Long), Option[(Long, Long)]] = target.map { case (u, t) =>
-            u -> route.get(t).filter(_._1 >= 0).filter(base.contains)
-          }
-          val w = scala.collection.mutable.Map(base.toSeq: _*)
-          val indeg = scala.collection.mutable.Map[(Long, Long), Int]().withDefaultValue(0)
-          succ.values.flatten.foreach(v => indeg(v) += 1)
-          val q = scala.collection.mutable.Queue(base.keys.filter(indeg(_) == 0).toSeq: _*)
-          var processed = 0
-          while (q.nonEmpty) {
-            val u = q.dequeue()
-            processed += 1
-            succ(u).foreach { v =>
-              w(v) += w(u)
-              indeg(v) -= 1
-              if (indeg(v) == 0) q.enqueue(v)
-            }
-          }
-          require(processed == base.size, "condensed flow graph is cyclic — non-monotone dirs")
-          // external inflow per entry cell
-          val seeds: Map[(Long, Long), Long] =
-            crossings.groupBy { case (_, _, tr, tc, _) => (tr, tc) }
-              .map { case (t, xs) => t -> xs.map { case (ur, uc, _, _, _) => w((ur, uc)) }.sum }
-
-          // pass 2: seed external inflows and finalize
-          val bc = tiles.sparkSession.sparkContext.broadcast(seeds)
-          padded.flatMap { pt =>
-            val dirs = dirPlane(pt, cs)
-            val acc = localAcc(pt, dirs, bc.value)
-            val out = Array.newBuilder[(Long, Long, Long)]
-            var i = 0
-            while (i < dirs.length) {
-              if (dirs(i) >= 0)
-                out += (((pt.row0 + i / pt.w).toLong, (pt.col0 + i % pt.w).toLong, acc(i)))
-              i += 1
-            }
-            out.result().iterator
-          }.toDF("row", "col", "acc").localCheckpoint(true)
-        } else {
-          // ABOVE-LIMIT branch: the condensed solve runs FULLY ON THE
-          // CLUSTER — a distributed batched topological peel over the
-          // crossing-edge DAG (VERDICT r4 #4 replaced the former
-          // require-refusal). Each round finalizes EVERY current
-          // indegree-0 crossing, pushes its subtree sum to its successor
-          // and drops it; rounds = condensed-DAG depth (the longest
-          // tile-crossing chain), each round shuffling only the
-          // still-active O(perimeter) descriptor rows. No driver
-          // materialization anywhere: seeds reach pass 2 via an equi-join
-          // on the owning tile's cell id.
-          val crossDf = summariesDs.flatMap(_.crossing.iterator)
-            .toDF("xr", "xc", "tr", "tc", "b")
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val routeDf = summariesDs.flatMap(_.routing.iterator)
-            .toDF("br", "bc", "er", "ec")
-          val keys = crossDf.select($"xr".as("kr"), $"xc".as("kc"))
-          // succ(x) = route(target(x)) when that exit exists and is
-          // itself a crossing edge (mirrors the driver path's filters)
-          var active = crossDf
-            .join(routeDf, $"tr" === $"br" && $"tc" === $"bc", "left")
-            .join(keys, $"er" === $"kr" && $"ec" === $"kc", "left")
-            .select($"xr", $"xc", $"b".as("w"),
-              when($"kr".isNotNull && $"er" >= 0, $"er").as("sr"),
-              when($"kr".isNotNull && $"er" >= 0, $"ec").as("sc"))
-            .localCheckpoint(true)
-          var remaining = active.count()
-          val doneParts = scala.collection.mutable.ArrayBuffer[DataFrame]()
-          while (remaining > 0) {
-            val predKeys = active.where($"sr".isNotNull)
-              .select($"sr".as("xr"), $"sc".as("xc")).distinct()
-            val frontier = active.join(predKeys, Seq("xr", "xc"), "left_anti")
-              .localCheckpoint(true)
-            val nf = frontier.count()
-            require(nf > 0, "condensed flow graph is cyclic — non-monotone dirs")
-            doneParts += frontier.select($"xr", $"xc", $"w")
-            val contrib = frontier.where($"sr".isNotNull)
-              .groupBy($"sr", $"sc").agg(sum($"w").as("add"))
-              .select($"sr".as("xr"), $"sc".as("xc"), $"add")
-            active = active
-              .join(frontier.select($"xr", $"xc"), Seq("xr", "xc"), "left_anti")
-              .join(contrib, Seq("xr", "xc"), "left")
-              .select($"xr", $"xc",
-                ($"w" + coalesce($"add", lit(0L))).as("w"), $"sr", $"sc")
-              .localCheckpoint(true)
-            remaining -= nf
-          }
-          val resolved = doneParts.reduce(_ unionByName _)
-          // seeds per entry cell, keyed by the owning tile for pass 2
-          val seedRows = resolved
-            .join(crossDf.select($"xr", $"xc", $"tr", $"tc"), Seq("xr", "xc"))
-            .groupBy($"tr", $"tc").agg(sum($"w").as("inflow"))
-            .as[(Long, Long, Long)]
-            .map { case (tr, tc, inflow) =>
-              (CellId.ofPixel(tr, tc, res), tr, tc, inflow) }
-            .groupByKey(_._1)
-            .mapGroups { (cid, it) =>
-              (cid, it.map(t => (t._2, t._3, t._4)).toArray) }
-          val accDf = padded
-            .joinWith(seedRows, padded("cellId") === seedRows("_1"), "left_outer")
-            .flatMap { case (pt, sd) =>
-              val seeds: Map[(Long, Long), Long] =
-                if (sd == null) Map.empty
-                else sd._2.iterator.map(t => (t._1, t._2) -> t._3).toMap
-              val dirs = dirPlane(pt, cs)
-              val acc = localAcc(pt, dirs, seeds)
-              val out = Array.newBuilder[(Long, Long, Long)]
-              var i = 0
-              while (i < dirs.length) {
-                if (dirs(i) >= 0)
-                  out += (((pt.row0 + i / pt.w).toLong, (pt.col0 + i % pt.w).toLong, acc(i)))
-                i += 1
-              }
-              out.result().iterator
-            }.toDF("row", "col", "acc").localCheckpoint(true)
-          // only after the eager checkpoint above — seedRows joins
-          // crossDf lazily, so an earlier unpersist would force its
-          // second read to recompute the crossing flatMap
-          crossDf.unpersist()
-          accDf
-        }
-      } finally summariesDs.unpersist()
-    } finally padded.unpersist()
-  }
-
-  // ---------------------------------------------------------------------
-  // Downstream trace (watershed basins + flow path length) and longest
-  // upstream drainage path — both ride the same tile-condensation shape
-  // as flowAcc: per-tile memoized traces, a crossing-edge-only condensed
-  // solve (O(perimeter)), and a seeded second pass. Path lengths are kept
-  // as INTEGER (cardinal, diagonal) step counts so results are exact
-  // cross-engine; physical length = cellsize * (ncard + ndiag * sqrt(2)).
-
   /** Per-cell in-tile trace memo. For every local index i:
     * `typ` 1 = path ends at in-tile pit `term(i)`, 2 = path reaches the
     * crossing cell `term(i)` (whose dir leaves the tile), 3 = NaN cell,
@@ -399,12 +216,12 @@ object Flow {
     val term = new Array[Int](n)
     val cnc = new Array[Int](n)
     val cnd = new Array[Int](n)
-    val stack = new scala.collection.mutable.ArrayBuffer[Int]
+    val stack = new Array[Int](n)
     var i = 0
     while (i < n) {
       if (dirs(i) == -1) typ(i) = 3
       else if (typ(i) == 0) {
-        stack.clear()
+        var sp = 0
         var j = i
         var resolved = false
         while (!resolved) {
@@ -417,35 +234,24 @@ object Flow {
             val tc = j % pt.w + dc
             if (tr < 0 || tr >= pt.h || tc < 0 || tc >= pt.w) {
               typ(j) = 2; term(j) = j; resolved = true
-            } else { stack += j; j = tr * pt.w + tc }
+            } else { stack(sp) = j; sp += 1; j = tr * pt.w + tc }
           }
         }
-        var k = stack.length - 1
-        while (k >= 0) {
-          val u = stack(k)
+        while (sp > 0) {
+          sp -= 1
+          val u = stack(sp)
           val (dr, dc) = delta(dirs(u))
           val v = (u / pt.w + dr) * pt.w + (u % pt.w + dc)
           val diag = dr != 0 && dc != 0
           typ(u) = typ(v); term(u) = term(v)
           cnc(u) = cnc(v) + (if (diag) 0 else 1)
           cnd(u) = cnd(v) + (if (diag) 1 else 0)
-          k -= 1
         }
       }
       i += 1
     }
     (typ, term, cnc, cnd)
   }
-
-  /** Pass-1 summary for the trace solves (public for encoder derivation).
-    * crossing: (xR, xC, tR, tC, diag 0/1, bestNc, bestNd) — crossing cell,
-    * its out-of-tile target, the crossing step kind, and the tile-local
-    * longest-upstream counts at x (for [[longestUpstream]]).
-    * routing: (bR, bC, kind 1|2, termR, termC, nc, nd) — each border
-    * cell's in-tile trace terminal (pit or exit crossing cell) + counts. */
-  final case class TraceSummary(
-      crossing: Array[(Long, Long, Long, Long, Int, Long, Long)],
-      routing: Array[(Long, Long, Int, Long, Long, Long, Long)])
 
   /** weighted-length comparator: is (anc, and) strictly better than
     * (bnc, bnd)? Longer `nc + nd*sqrt2`; ties -> larger cardinal count.
@@ -509,235 +315,413 @@ object Flow {
     (bnc, bnd)
   }
 
-  /** Collect the pass-1 trace summaries (shared by [[downstream]] and
-    * [[longestUpstream]]): per tile, crossing edges + border routing. */
-  private def traceSummariesDs(padded: Dataset[Stencil.Padded], cs: Double)
+  /** No in-tile value: the chain resolves carry counts only. */
+  private val NoLocal: Local = (pt, _, _) => {
+    val z = new Array[Long](pt.h * pt.w)
+    (z, z)
+  }
+
+  /** (cardinal, diagonal) count of the one D8 step from (xr, xc) to its
+    * neighbour (tr, tc). */
+  private def step(xr: Long, xc: Long, tr: Long, tc: Long): (Long, Long) =
+    if (xr != tr && xc != tc) (0L, 1L) else (1L, 0L)
+
+  private def stopMask(pt: Stencil.Padded, idx: Array[Int]): Array[Boolean] =
+    if (idx.isEmpty) null
+    else {
+      val stop = new Array[Boolean](pt.h * pt.w)
+      idx.foreach(stop(_) = true)
+      stop
+    }
+
+  /** Halo'd tiles paired with their stop cells, held for the two passes.
+    * (A localCheckpoint is not a cache-manager entry: it is released with
+    * its lineage, not by `unpersist`.) */
+  private def masked(tiles: Dataset[Tile], ref: GridRef, res: Int,
+      stops: Option[Dataset[(Long, Array[Int])]]): Dataset[Masked] = {
+    import tiles.sparkSession.implicits._
+    val bare = Stencil.padded(tiles, ref, res)
+    (stops match {
+      case None => bare.map(pt => (pt, Array.emptyIntArray))
+      case Some(st) =>
+        bare.joinWith(st, bare("cellId") === st("_1"), "left_outer")
+          .map { case (pt, s) => (pt, if (s == null) Array.emptyIntArray else s._2) }
+    }).localCheckpoint(false)
+  }
+
+  /** Pass 1: per tile, the crossing edges carrying `local`'s in-tile value
+    * at the crossing cell, and every border cell's in-tile trace end. */
+  private def traceSummariesDs(padded: Dataset[Masked], cs: Double, local: Local)
       : Dataset[TraceSummary] = {
     import padded.sparkSession.implicits._
-    padded.mapPartitions { it =>
-      it.map { pt =>
-        val dirs = dirPlane(pt, cs)
-        val (typ, term, cnc, cnd) = localTrace(pt, dirs)
-        val (bnc, bnd) = localLongest(pt, dirs, Map.empty)
-        val crossing = Array.newBuilder[(Long, Long, Long, Long, Int, Long, Long)]
-        var i = 0
-        while (i < dirs.length) {
-          if (typ(i) == 2 && term(i) == i) {
-            val (dr, dc) = delta(dirs(i))
-            crossing += (((pt.row0 + i / pt.w).toLong, (pt.col0 + i % pt.w).toLong,
-              (pt.row0 + i / pt.w + dr).toLong, (pt.col0 + i % pt.w + dc).toLong,
-              if (dr != 0 && dc != 0) 1 else 0, bnc(i), bnd(i)))
-          }
-          i += 1
+    padded.map { case (pt, stopIdx) =>
+      val dirs = dirPlane(pt, cs)
+      val (typ, term, cnc, cnd) = localTrace(pt, dirs, stopMask(pt, stopIdx))
+      val (a, b) = local(pt, dirs, Map.empty)
+      val crossing = Array.newBuilder[Crossing]
+      var i = 0
+      while (i < dirs.length) {
+        if (typ(i) == 2 && term(i) == i) {
+          val (dr, dc) = delta(dirs(i))
+          crossing += (((pt.row0 + i / pt.w).toLong, (pt.col0 + i % pt.w).toLong,
+            (pt.row0 + i / pt.w + dr).toLong, (pt.col0 + i % pt.w + dc).toLong, a(i), b(i)))
         }
-        val routing = Array.newBuilder[(Long, Long, Int, Long, Long, Long, Long)]
-        var r = 0
-        while (r < pt.h) {
-          var c = 0
-          while (c < pt.w) {
-            val j = r * pt.w + c
-            if ((r == 0 || r == pt.h - 1 || c == 0 || c == pt.w - 1) && typ(j) != 3)
-              routing += (((pt.row0 + r).toLong, (pt.col0 + c).toLong, typ(j).toInt,
-                (pt.row0 + term(j) / pt.w).toLong, (pt.col0 + term(j) % pt.w).toLong,
-                cnc(j).toLong, cnd(j).toLong))
-            c += 1
-          }
-          r += 1
-        }
-        TraceSummary(crossing.result(), routing.result())
+        i += 1
       }
+      val routing = Array.newBuilder[Route]
+      var r = 0
+      while (r < pt.h) {
+        var c = 0
+        while (c < pt.w) {
+          val j = r * pt.w + c
+          if ((r == 0 || r == pt.h - 1 || c == 0 || c == pt.w - 1) && typ(j) != 3)
+            routing += (((pt.row0 + r).toLong, (pt.col0 + c).toLong, typ(j).toInt,
+              (pt.row0 + term(j) / pt.w).toLong, (pt.col0 + term(j) % pt.w).toLong,
+              cnc(j).toLong, cnd(j).toLong))
+          c += 1
+        }
+        r += 1
+      }
+      TraceSummary(crossing.result(), routing.result())
     }
   }
 
-  /** Driver-collect row count of a persisted summary Dataset — the
-    * driver-vs-distributed branch decision reads ONLY this aggregate.
-    * It counts EVERYTHING the driver branch's `collect()` would pull —
-    * crossing AND routing arrays — not just the crossing edges: a tiling
-    * where most border cells drain inward has crossings << routing rows,
-    * and a crossing-only gate would admit an O(total border cells)
-    * driver materialization the limit was meant to bound. One definition
-    * of the threshold statistic for BOTH summary shapes (TileSummary in
-    * flowAcc, TraceSummary in the trace family). */
-  private def collectLenCount(lens: Dataset[Long]): Long = {
-    import lens.sparkSession.implicits._
-    lens.toDF("n").agg(coalesce(sum($"n"), lit(0L))).collect()(0).getLong(0)
-  }
+  // ---------------------------------------------------------------------
+  // The two crossing-graph solvers. Each operator states its summary and
+  // its combine rule as Scala functions; the driver placement and the
+  // distributed placement run the same functions.
 
-  private def collectCount(ds: Dataset[TraceSummary]): Long = {
+  /** Rows of a solve: `Left` on the driver, `Right` distributed. */
+  private[operators] type Placed[T] = Either[Array[T], Dataset[T]]
+
+  /** The driver-vs-distributed gate, for every solve: collect `ds` for the
+    * driver placement when the rows that brings to the driver — `rows` of
+    * each element, summed — stay within `driverLimit`; else leave it
+    * distributed. For tile summaries that is crossing AND routing rows: a
+    * tiling where most border cells drain inward has crossings << routing
+    * rows, and a crossing-only gate would admit an O(border cells)
+    * driver materialization the limit was meant to bound. */
+  private def place[T](ds: Dataset[T], driverLimit: Int)(rows: T => Long): Placed[T] = {
     import ds.sparkSession.implicits._
-    collectLenCount(ds.map(s => (s.crossing.length + s.routing.length).toLong))
+    val n = ds.map(rows).toDF("n").agg(coalesce(sum($"n"), lit(0L))).collect()(0).getLong(0)
+    if (n <= driverLimit) Left(ds.collect()) else Right(ds)
   }
 
-  /** Distributed chain resolve over the crossing FUNCTIONAL graph by
-    * pointer doubling with additive carry — the above-driverLimit branch
-    * shared by [[downstream]] and [[nearestDrainage]] (the same loop
-    * shape [[strahlerOrder]] uses for chain heads, plus count carries).
-    * Init columns (xr, xc, done, ok, lr, lc, nc, nd): done rows carry the
-    * terminal label in (lr, lc) and final counts; active rows point (lr,
-    * lc) at ANOTHER crossing with (nc, nd) covering the walked segment.
-    * Each round every active row jumps to its pointer's pointer and adds
-    * its pointer's carry — O(log chainLen) rounds, each a descriptor-only
-    * self-join + eager localCheckpoint (constant-size plan). */
-  private def resolveChainsDoubling(init: DataFrame): DataFrame = {
-    val spark = init.sparkSession
-    import spark.implicits._
-    // lazy checkpoints: the per-round remaining-count is the round's only
-    // job and materializes the checkpoint as a side effect
-    var l = init.localCheckpoint(false)
-    var remaining = l.where(!$"done").count()
-    while (remaining > 0) {
-      val tgt = l.select($"xr".as("lr"), $"xc".as("lc"),
-        $"done".as("tdone"), $"ok".as("tok"), $"lr".as("tlr"),
-        $"lc".as("tlc"), $"nc".as("tnc"), $"nd".as("tnd"))
-      l = l.join(tgt, Seq("lr", "lc"), "left")
-        .select($"xr", $"xc",
-          ($"done" || coalesce($"tdone", lit(false))).as("done"),
-          when($"done", $"ok").otherwise(coalesce($"tok", lit(false))).as("ok"),
-          when($"done", $"lr").otherwise($"tlr").as("lr"),
-          when($"done", $"lc").otherwise($"tlc").as("lc"),
-          when($"done", $"nc").otherwise($"nc" + $"tnc").as("nc"),
-          when($"done", $"nd").otherwise($"nd" + $"tnd").as("nd"))
-        .localCheckpoint(false)
-      val next = l.where(!$"done").count()
-      require(next < remaining, "pointer doubling stalled — crossing chain cycle")
-      remaining = next
+  private def mapPlaced[T, U: Encoder: ClassTag](p: Placed[T])(f: T => U): Placed[U] =
+    p match {
+      case Left(a) => Left(a.map(f))
+      case Right(ds) => Right(ds.map(f))
     }
-    l
+
+  private def toDs[T: Encoder](spark: SparkSession, p: Placed[T]): Dataset[T] =
+    p.fold(a => spark.createDataset(a.toSeq), identity)
+
+  /** Node of an upstream fold: key (xr, xc); the crossing target (tr, tc)
+    * the tile pass seeds; successor (sr, sc) when `hasSucc`; value (a, b);
+    * and the carry (ea, eb) [[LongestRule]]'s message picks up on its way
+    * to the successor (public for encoder derivation). */
+  final case class FoldNode(xr: Long, xc: Long, tr: Long, tc: Long,
+      hasSucc: Boolean, sr: Long, sc: Long, a: Long, b: Long, ea: Long, eb: Long)
+
+  /** An upstream fold's combine rule: `send` is the message a final node
+    * passes to its successor, `merge` folds a message into a value. `merge`
+    * must be associative and commutative: the distributed placement folds
+    * messages in batches, in any order. */
+  private[operators] final case class FoldRule(send: FoldNode => (Long, Long),
+      merge: ((Long, Long), (Long, Long)) => (Long, Long))
+
+  /** flowAcc: a crossing passes its whole subtree count on. */
+  private[operators] val SumRule = FoldRule(n => (n.a, n.b),
+    (x, y) => (x._1 + y._1, x._2 + y._2))
+
+  /** longestUpstream: max-plus under [[longer]]. */
+  private[operators] val LongestRule = FoldRule(n => (n.a + n.ea, n.b + n.eb),
+    (x, y) => if (longer(y._1, y._2, x._1, x._2)) y else x)
+
+  /** Strahler order of a junction whose parents' orders fold to
+    * (max, count of max): sources are 1; +1 when two or more parents
+    * share the max. */
+  private def strahler(max: Long, count: Long): Long =
+    if (count == 0) 1L else max + (if (count >= 2) 1L else 0L)
+
+  /** strahlerOrder's junction forest: (max, count-of-max) of the parents'
+    * orders. */
+  private[operators] val StrahlerRule = FoldRule(n => (strahler(n.a, n.b), 1L),
+    (x, y) => if (y._1 > x._1) y else if (y._1 < x._1) x else (x._1, x._2 + y._2))
+
+  /** Upstream fold over a functional forest: every node's value merged
+    * with the message of each predecessor, sent once that predecessor is
+    * final. Driver placement: Kahn's queue. Distributed placement: a
+    * batched topological peel — each round finalizes every node no active
+    * node points at and folds its messages into their targets; rounds =
+    * forest depth, each over the still-active rows only. A message to a
+    * key that is not a node is dropped; a cycle is rejected. */
+  private[operators] def foldUpstream(nodes: Placed[FoldNode], rule: FoldRule)
+      : Placed[FoldNode] = nodes match {
+    case Left(ns) =>
+      val index = ns.indices.iterator.map(i => (ns(i).xr, ns(i).xc) -> i).toMap
+      val succ = ns.map(n => if (n.hasSucc) index.getOrElse((n.sr, n.sc), -1) else -1)
+      val indeg = new Array[Int](ns.length)
+      succ.foreach(s => if (s >= 0) indeg(s) += 1)
+      val out = ns.clone()
+      val queue = new java.util.ArrayDeque[Int]()
+      ns.indices.foreach(i => if (indeg(i) == 0) queue.add(i))
+      var seen = 0
+      while (!queue.isEmpty) {
+        val u = queue.poll()
+        seen += 1
+        val s = succ(u)
+        if (s >= 0) {
+          val (a, b) = rule.merge((out(s).a, out(s).b), rule.send(out(u)))
+          out(s) = out(s).copy(a = a, b = b)
+          indeg(s) -= 1
+          if (indeg(s) == 0) queue.add(s)
+        }
+      }
+      require(seen == ns.length, "crossing graph is cyclic — non-monotone dirs")
+      Left(out)
+    case Right(ds) =>
+      import ds.sparkSession.implicits._
+      // lazy checkpoints: each round's frontier count materializes both
+      // the active rows and the frontier
+      var active = ds.localCheckpoint(false)
+      var remaining = active.count()
+      val done = scala.collection.mutable.ArrayBuffer[Dataset[FoldNode]]()
+      while (remaining > 0) {
+        val blocked = active.filter(_.hasSucc).select($"sr".as("xr"), $"sc".as("xc"))
+        val frontier = active.join(blocked, Seq("xr", "xc"), "left_anti").as[FoldNode]
+          .localCheckpoint(false)
+        val nf = frontier.count()
+        require(nf > 0, "crossing graph is cyclic — non-monotone dirs")
+        done += frontier
+        // the rest, each with the messages addressed to it folded in; a
+        // message travels as a (target key, message value) node flagged
+        // true. Union + group, not an outer join: a join's size estimate
+        // is the product of its sides and would compound every round.
+        val msgs = frontier.filter(_.hasSucc).map { n =>
+          val (a, b) = rule.send(n)
+          (FoldNode(n.sr, n.sc, 0L, 0L, false, 0L, 0L, a, b, 0L, 0L), true)
+        }
+        active = active.join(frontier.select($"xr", $"xc"), Seq("xr", "xc"), "left_anti")
+          .as[FoldNode].map((_, false)).union(msgs)
+          .groupByKey(p => (p._1.xr, p._1.xc))
+          .flatMapGroups { (_, it) =>
+            val (ms, ns) = it.toArray.partition(_._2)
+            ns.iterator.map { case (n, _) =>
+              ms.foldLeft(n) { case (acc, (m, _)) =>
+                val (a, b) = rule.merge((acc.a, acc.b), (m.a, m.b))
+                acc.copy(a = a, b = b)
+              }
+            }
+          }.localCheckpoint(false)
+        remaining -= nf
+      }
+      Right(if (done.isEmpty) active else done.reduce(_ union _))
   }
 
-  /** Group per-crossing resolutions by their owning tile's cell id so
-    * pass 2 can join them tile-locally (each tile only ever looks up its
-    * OWN crossing cells — the resolution table never lands on the
-    * driver). Rows: (xr, xc, ok, lr, lc, nc, nd). */
-  private def byTile(resolved: DataFrame, res: Int)
-      : Dataset[(Long, Array[(Long, Long, Boolean, Long, Long, Long, Long)])] = {
-    import resolved.sparkSession.implicits._
-    resolved.select("xr", "xc", "ok", "lr", "lc", "nc", "nd")
-      .as[(Long, Long, Boolean, Long, Long, Long, Long)]
-      .groupByKey(t => CellId.ofPixel(t._1, t._2, res))
-      .mapGroups { (cid, it) => (cid, it.toArray) }
+  /** Row of a chain resolve: key (xr, xc). A done row carries its terminal
+    * label (lr, lc), `ok` and its step counts (nc, nd); an active row points
+    * (lr, lc) at another row, with (nc, nd) covering the segment up to it
+    * (public for encoder derivation). */
+  final case class ChainRow(xr: Long, xc: Long, done: Boolean, ok: Boolean,
+      lr: Long, lc: Long, nc: Long, nd: Long)
+
+  /** `x` followed through the row `t` it points at: t's pointer or
+    * terminal, and the counts of both segments. */
+  private def jump(x: ChainRow, t: ChainRow): ChainRow =
+    x.copy(done = t.done, ok = t.ok, lr = t.lr, lc = t.lc, nc = x.nc + t.nc, nd = x.nd + t.nd)
+
+  /** Chain resolve over a functional forest: every row followed to its
+    * terminal by [[jump]]. Driver placement: a memoized walk. Distributed
+    * placement: pointer doubling — each round every active row jumps
+    * through the row it points at, O(log chain length) rounds, each one
+    * self-join. A pointer to a missing row and a cycle are both
+    * rejected. */
+  private[operators] def resolveChains(rows: Placed[ChainRow]): Placed[ChainRow] =
+    rows match {
+      case Left(rs) =>
+        val byKey = rs.iterator.map(r => (r.xr, r.xc) -> r).toMap
+        val memo = scala.collection.mutable.HashMap[(Long, Long), ChainRow]()
+        Left(rs.map { r0 =>
+          val path = scala.collection.mutable.ArrayBuffer[ChainRow]()
+          var cur = r0
+          while (!cur.done && !memo.contains((cur.xr, cur.xc))) {
+            require(path.length < rs.length, "chain resolve cycle — non-monotone dirs")
+            path += cur
+            cur = byKey.getOrElse((cur.lr, cur.lc), throw new IllegalStateException(
+              s"chain row (${cur.xr},${cur.xc}) points at no row (${cur.lr},${cur.lc})"))
+          }
+          var end = memo.getOrElse((cur.xr, cur.xc), cur)
+          var k = path.length - 1
+          while (k >= 0) {
+            end = jump(path(k), end)
+            memo((end.xr, end.xc)) = end
+            k -= 1
+          }
+          end
+        })
+      case Right(ds) =>
+        import ds.sparkSession.implicits._
+        // lazy checkpoints: the per-round remaining-count materializes the
+        // checkpoint as a side effect
+        var l = ds.localCheckpoint(false)
+        var remaining = l.filter(!_.done).count()
+        while (remaining > 0) {
+          l = l.as("x").joinWith(l.as("t"), $"x.lr" === $"t.xr" && $"x.lc" === $"t.xc",
+              "left_outer")
+            .map { case (x, t) =>
+              if (x.done) x
+              else if (t == null) throw new IllegalStateException(
+                s"chain row (${x.xr},${x.xc}) points at no row (${x.lr},${x.lc})")
+              else jump(x, t)
+            }.localCheckpoint(false)
+          val next = l.filter(!_.done).count()
+          require(next < remaining, "pointer doubling stalled — chain resolve cycle")
+          remaining = next
+        }
+        Right(l)
+    }
+
+  // ---------------------------------------------------------------------
+  // Each tile operator's summary: how a crossing becomes a solver row.
+
+  /** The crossing graph: `node(crossing, its target's routing row)` per
+    * crossing edge, the routing row null when there is none — a route map
+    * on the driver, a left equi-join distributed. */
+  private def crossingGraph[N: Encoder: ClassTag](summaries: Dataset[TraceSummary],
+      driverLimit: Int)(node: (Crossing, Route) => N): Placed[N] =
+    place(summaries, driverLimit)(s => s.crossing.length + s.routing.length) match {
+      case Left(s) =>
+        val route = s.iterator.flatMap(_.routing).map(r => (r._1, r._2) -> r).toMap
+        Left(s.flatMap(_.crossing).map(x => node(x, route.getOrElse((x._3, x._4), null))))
+      case Right(ds) =>
+        import ds.sparkSession.implicits._
+        val cross = ds.flatMap(_.crossing)
+        val route = ds.flatMap(_.routing)
+        Right(cross.joinWith(route, cross("_3") === route("_1") && cross("_4") === route("_2"),
+          "left_outer").map { case (x, r) => node(x, r) })
+    }
+
+  /** Fold node of crossing `x`: its in-tile value; its successor, the exit
+    * crossing its target's path reaches; its carry, x's step plus that path. */
+  private def foldNode(x: Crossing, r: Route): FoldNode = {
+    val (sc, sd) = step(x._1, x._2, x._3, x._4)
+    val next = r != null && r._3 == 2
+    FoldNode(x._1, x._2, x._3, x._4, next, if (next) r._4 else 0L, if (next) r._5 else 0L,
+      x._5, x._6, sc + (if (r == null) 0L else r._6), sd + (if (r == null) 0L else r._7))
   }
+
+  /** Chain row of crossing `x`: done (ok) where its target's path ends at
+    * a `terminal` cell, done (not ok) at any other end, else pointing at
+    * the exit crossing; counts cover x's step plus the target's path. */
+  private def chainRow(terminal: Int)(x: Crossing, r: Route): ChainRow = {
+    if (r == null)
+      throw new IllegalStateException(s"no routing for crossing target (${x._3},${x._4})")
+    val (sc, sd) = step(x._1, x._2, x._3, x._4)
+    ChainRow(x._1, x._2, r._3 != 2, r._3 == terminal, r._4, r._5, sc + r._6, sd + r._7)
+  }
+
+  /** Pass 2: `kernel` on every tile with the solved seeds it owns, keyed by
+    * cell, duplicates folded by `merge`. Driver-placed seeds reach the
+    * tiles in one broadcast; distributed ones by an equi-join on the owning
+    * tile's cell id, so they never land on the driver. */
+  private def seeded[V, O: Encoder](padded: Dataset[Masked], res: Int,
+      seeds: Placed[((Long, Long), V)], merge: (V, V) => V)
+      (kernel: (Masked, scala.collection.Map[(Long, Long), V]) => Iterator[O])
+      (implicit byTileEnc: Encoder[(Long, Array[((Long, Long), V)])]): Dataset[O] =
+    seeds match {
+      case Left(s) =>
+        val bc = padded.sparkSession.sparkContext.broadcast(s.groupMapReduce(_._1)(_._2)(merge))
+        padded.flatMap(p => kernel(p, bc.value))
+      case Right(ds) =>
+        import ds.sparkSession.implicits._
+        val byTile = ds.groupByKey(s => CellId.ofPixel(s._1._1, s._1._2, res))
+          .mapGroups((cid, it) => (cid, it.toArray))
+        padded.joinWith(byTile, padded("_1.cellId") === byTile("_1"), "left_outer")
+          .flatMap { case (p, t) =>
+            kernel(p, if (t == null) Map.empty else t._2.groupMapReduce(_._1)(_._2)(merge))
+          }
+    }
+
+  /** Body of [[flowAcc]] and [[longestUpstream]]: `local` per tile, an
+    * upstream fold of the crossing graph under `rule`, then `local` again
+    * with each entry cell seeded by `seed` of the crossings into it
+    * (merged by the rule). Columns (row, col, a, b), every valid cell. */
+  private def upstreamTiles(tiles: Dataset[Tile], ref: GridRef, res: Int,
+      driverLimit: Int, rule: FoldRule, local: Local)(seed: FoldNode => (Long, Long))
+      : DataFrame = {
+    import tiles.sparkSession.implicits._
+    val cs = ref.cellsize
+    val padded = masked(tiles, ref, res, None)
+    val summaries = traceSummariesDs(padded, cs, local).localCheckpoint(false)
+    val nodes = crossingGraph(summaries, driverLimit)(foldNode)
+    val seeds = mapPlaced(foldUpstream(nodes, rule))(n => ((n.tr, n.tc), seed(n)))
+    seeded(padded, res, seeds, rule.merge) { case ((pt, _), m) =>
+      val dirs = dirPlane(pt, cs)
+      val (a, b) = local(pt, dirs, m)
+      val out = Array.newBuilder[(Long, Long, Long, Long)]
+      var i = 0
+      while (i < dirs.length) {
+        if (dirs(i) >= 0)
+          out += (((pt.row0 + i / pt.w).toLong, (pt.col0 + i % pt.w).toLong, a(i), b(i)))
+        i += 1
+      }
+      out.result().iterator
+    }.toDF("row", "col", "a", "b").localCheckpoint(true)
+  }
+
+  /** Body of [[downstream]] and [[nearestDrainage]]: every valid cell whose
+    * D8 path ends at a `terminal` cell (1 pit, 4 stop cell), with that cell
+    * and the exact step counts to it — `localTrace` per tile, a chain
+    * resolve of the crossing graph, and `localTrace` again finishing every
+    * path that leaves its tile. */
+  private def traceTiles(tiles: Dataset[Tile], ref: GridRef, res: Int,
+      driverLimit: Int, stops: Option[Dataset[(Long, Array[Int])]], terminal: Int)
+      : Dataset[(Long, Long, Long, Long, Long, Long)] = {
+    import tiles.sparkSession.implicits._
+    val cs = ref.cellsize
+    val padded = masked(tiles, ref, res, stops)
+    val summaries = traceSummariesDs(padded, cs, NoLocal).localCheckpoint(false)
+    val rows = crossingGraph(summaries, driverLimit)(chainRow(terminal))
+    val seeds = mapPlaced(resolveChains(rows))(r => ((r.xr, r.xc), r))
+    seeded(padded, res, seeds, (a: ChainRow, _: ChainRow) => a) { case ((pt, stopIdx), m) =>
+      val dirs = dirPlane(pt, cs)
+      val (typ, term, cnc, cnd) = localTrace(pt, dirs, stopMask(pt, stopIdx))
+      val out = Array.newBuilder[(Long, Long, Long, Long, Long, Long)]
+      var i = 0
+      while (i < dirs.length) {
+        val (r, c) = ((pt.row0 + i / pt.w).toLong, (pt.col0 + i % pt.w).toLong)
+        val (er, ec) = ((pt.row0 + term(i) / pt.w).toLong, (pt.col0 + term(i) % pt.w).toLong)
+        if (typ(i) == terminal) out += ((r, c, er, ec, cnc(i).toLong, cnd(i).toLong))
+        else if (typ(i) == 2) {
+          val x = m((er, ec))
+          if (x.ok) out += ((r, c, x.lr, x.lc, cnc(i) + x.nc, cnd(i) + x.nd))
+        }
+        i += 1
+      }
+      out.result().iterator
+    }.localCheckpoint(true)
+  }
+
+  /** D8 flow accumulation: (row, col, acc) for every valid cell; acc
+    * includes the cell itself. `driverLimit` bounds the rows the crossing
+    * solve collects on the driver ([[place]]). */
+  def flowAcc(tiles: Dataset[Tile], ref: GridRef, res: Int,
+      driverLimit: Int = 2000000): DataFrame =
+    upstreamTiles(tiles, ref, res, driverLimit, SumRule,
+      (pt, dirs, seeds) => (localAcc(pt, dirs, seeds), new Array[Long](dirs.length)))(
+      n => (n.a, n.b))
+      .select(col("row"), col("col"), col("a").as("acc"))
 
   /** Watershed + downstream flow length: for every valid cell, the basin
     * outlet (terminal pit) its D8 path drains to and the path step counts
     * to that outlet — `(row, col, basin_r, basin_c, ncard, ndiag)`. Pits
     * map to themselves with (0, 0). Same condensation scale shape as
-    * [[flowAcc]]; `driverLimit` bounds the crossing-edge solve. */
+    * [[flowAcc]], with a chain resolve for the crossing solve. */
   def downstream(tiles: Dataset[Tile], ref: GridRef, res: Int,
-      driverLimit: Int = 2000000): DataFrame = {
-    import tiles.sparkSession.implicits._
-    val cs = ref.cellsize
-    val padded = Stencil.padded(tiles, ref, res).localCheckpoint(false)
-    try {
-      val summariesDs = traceSummariesDs(padded, cs)
-        .localCheckpoint(false)
-      try {
-        val resolvedByTile: Dataset[(Long, Array[(Long, Long, Boolean, Long, Long, Long, Long)])] =
-          if (collectCount(summariesDs) <= driverLimit) {
-            // driver condensed solve: chain walk with memoization over
-            // O(perimeter) crossing edges
-            val summaries = summariesDs.collect()
-            val crossings = summaries.flatMap(_.crossing)
-            val target = crossings.map { case (xr, xc, tr, tc, dg, _, _) =>
-              (xr, xc) -> (tr, tc, dg) }.toMap
-            val route = summaries.flatMap(_.routing)
-              .map { case (br, bc, k, tr, tc, nc, nd) => (br, bc) -> (k, tr, tc, nc, nd) }.toMap
-            // resolve every crossing cell to (pitR, pitC, nc, nd) — counts from
-            // the crossing cell INCLUSIVE of its crossing step. Iterative chain
-            // walk with memoization; acyclic because z strictly decreases.
-            val memo = scala.collection.mutable.Map[(Long, Long), (Long, Long, Long, Long)]()
-            target.keys.foreach { x0 =>
-              if (!memo.contains(x0)) {
-                // walk the crossing chain until a memoized cell or an in-tile pit,
-                // recording each chain cell's own step+route counts; then unwind.
-                val chain = scala.collection.mutable.ArrayBuffer[((Long, Long), Long, Long)]()
-                var cur = x0
-                var base: (Long, Long, Long, Long) = null // F(cell after the chain)
-                while (base == null) {
-                  memo.get(cur) match {
-                    case Some(f) => base = f
-                    case None =>
-                      val (tr, tc, dg) = target(cur)
-                      val stepNc = if (dg == 1) 0L else 1L
-                      val stepNd = if (dg == 1) 1L else 0L
-                      val (k, er, ec, nc, nd) = route.getOrElse((tr, tc),
-                        throw new IllegalStateException(s"no routing for crossing target ($tr,$tc)"))
-                      if (k == 1) { // dies at pit (er, ec) in the target tile
-                        base = (er, ec, stepNc + nc, stepNd + nd)
-                        memo(cur) = base
-                      } else {
-                        chain += ((cur, stepNc + nc, stepNd + nd))
-                        require(chain.length <= target.size, "crossing chain cycle — non-monotone dirs")
-                        cur = (er, ec) // the exit crossing cell of the target tile
-                      }
-                  }
-                }
-                var k = chain.length - 1
-                while (k >= 0) {
-                  val (x, addNc, addNd) = chain(k)
-                  base = (base._1, base._2, base._3 + addNc, base._4 + addNd)
-                  memo(x) = base
-                  k -= 1
-                }
-              }
-            }
-            val rows = memo.iterator.map { case ((xr, xc), (pr, pc, nc, nd)) =>
-              (xr, xc, true, pr, pc, nc, nd) }.toSeq
-            byTile(tiles.sparkSession.createDataset(rows)
-              .toDF("xr", "xc", "ok", "lr", "lc", "nc", "nd"), res)
-          } else {
-            // ABOVE-LIMIT branch: pointer doubling with carry over the
-            // crossing functional graph, fully on the cluster (VERDICT r4
-            // #4). The crossing set never lands on the driver.
-            val crossDf = summariesDs.flatMap(_.crossing.iterator)
-              .toDF("xr", "xc", "tr", "tc", "dg", "bnc", "bnd")
-            val routeDf = summariesDs.flatMap(_.routing.iterator)
-              .toDF("br", "bc", "k", "er", "ec", "rnc", "rnd")
-            // LEFT join + per-row raise, not an inner join: an inner join
-            // would silently DROP a crossing whose routing row is missing
-            // (the invariant the driver branch guards with
-            // IllegalStateException) and the loss would surface rows later
-            // as an undiagnosable pointer-doubling stall
-            val init = crossDf
-              .join(routeDf, $"tr" === $"br" && $"tc" === $"bc", "left")
-              .select($"xr", $"xc",
-                ($"k" === 1).as("done"),
-                when($"br".isNull, raise_error(format_string(
-                  "no routing for crossing target (%d,%d)", $"tr", $"tc")))
-                  .otherwise(lit(true)).as("ok"),
-                $"er".as("lr"), $"ec".as("lc"),
-                (when($"dg" === 1, 0L).otherwise(1L) + $"rnc").as("nc"),
-                (when($"dg" === 1, 1L).otherwise(0L) + $"rnd").as("nd"))
-            byTile(resolveChainsDoubling(init), res)
-          }
-        padded
-          .joinWith(resolvedByTile, padded("cellId") === resolvedByTile("_1"), "left_outer")
-          .flatMap { case (pt, rv) =>
-            val m: Map[(Long, Long), (Long, Long, Long, Long)] =
-              if (rv == null) Map.empty
-              else rv._2.iterator.map(t => (t._1, t._2) -> ((t._4, t._5, t._6, t._7))).toMap
-            val dirs = dirPlane(pt, cs)
-            val (typ, term, cnc, cnd) = localTrace(pt, dirs)
-            val out = Array.newBuilder[(Long, Long, Long, Long, Long, Long)]
-            var i = 0
-            while (i < dirs.length) {
-              if (typ(i) == 1) {
-                out += (((pt.row0 + i / pt.w).toLong, (pt.col0 + i % pt.w).toLong,
-                  (pt.row0 + term(i) / pt.w).toLong, (pt.col0 + term(i) % pt.w).toLong,
-                  cnc(i).toLong, cnd(i).toLong))
-              } else if (typ(i) == 2) {
-                val x = ((pt.row0 + term(i) / pt.w).toLong, (pt.col0 + term(i) % pt.w).toLong)
-                val (pr, pc, nc, nd) = m(x)
-                out += (((pt.row0 + i / pt.w).toLong, (pt.col0 + i % pt.w).toLong,
-                  pr, pc, cnc(i) + nc, cnd(i) + nd))
-              }
-              i += 1
-            }
-            out.result().iterator
-          }.toDF("row", "col", "basin_r", "basin_c", "ncard", "ndiag").localCheckpoint(true)
-      } finally summariesDs.unpersist()
-    } finally padded.unpersist()
-  }
+      driverLimit: Int = 2000000): DataFrame =
+    traceTiles(tiles, ref, res, driverLimit, None, terminal = 1)
+      .toDF("row", "col", "basin_r", "basin_c", "ncard", "ndiag")
 
   /** Longest upstream drainage path per cell (time-of-concentration /
     * hydraulic-length analog): `(row, col, ncard, ndiag)` of the longest
@@ -745,168 +729,11 @@ object Flow {
     * ties broken to the larger cardinal count. Max-plus condensation over
     * crossing edges, mirroring [[flowAcc]]'s sum solve. */
   def longestUpstream(tiles: Dataset[Tile], ref: GridRef, res: Int,
-      driverLimit: Int = 2000000): DataFrame = {
-    import tiles.sparkSession.implicits._
-    val cs = ref.cellsize
-    val padded = Stencil.padded(tiles, ref, res).localCheckpoint(false)
-    try {
-      val summariesDs = traceSummariesDs(padded, cs)
-        .localCheckpoint(false)
-      try {
-        // seeds: best (nc, nd) arriving INTO each crossing target cell,
-        // grouped by its owning tile for the pass-2 equi-join
-        val seedsByTile: Dataset[(Long, Array[(Long, Long, Long, Long)])] =
-          if (collectCount(summariesDs) <= driverLimit) {
-            val summaries = summariesDs.collect()
-            val crossings = summaries.flatMap(_.crossing)
-            val route = summaries.flatMap(_.routing)
-              .map { case (br, bcc, k, tr, tc, nc, nd) => (br, bcc) -> (k, tr, tc, nc, nd) }.toMap
-            // condensed max-plus: node = crossing cell; W init = tile-local best;
-            // edge x -> x2 when x's target routes to exit x2, weight = crossing
-            // step + in-tile path(target -> x2)
-            val w = scala.collection.mutable.Map[(Long, Long), (Long, Long)]()
-            val targetOf = scala.collection.mutable.Map[(Long, Long), (Long, Long, Int)]()
-            crossings.foreach { case (xr, xc, tr, tc, dg, bnc, bnd) =>
-              w((xr, xc)) = (bnc, bnd)
-              targetOf((xr, xc)) = (tr, tc, dg)
-            }
-            val succ: Map[(Long, Long), Option[((Long, Long), Long, Long)]] =
-              targetOf.map { case (x, (tr, tc, dg)) =>
-                val stepNc = if (dg == 1) 0L else 1L
-                val stepNd = if (dg == 1) 1L else 0L
-                x -> route.get((tr, tc)).flatMap { case (k, er, ec, nc, nd) =>
-                  if (k == 2 && w.contains((er, ec)))
-                    Some(((er, ec), stepNc + nc, stepNd + nd))
-                  else None
-                }
-              }.toMap
-            val indeg = scala.collection.mutable.Map[(Long, Long), Int]().withDefaultValue(0)
-            succ.values.flatten.foreach { case (v, _, _) => indeg(v) += 1 }
-            val q = scala.collection.mutable.Queue(w.keys.filter(indeg(_) == 0).toSeq: _*)
-            var processed = 0
-            while (q.nonEmpty) {
-              val u = q.dequeue()
-              processed += 1
-              succ(u).foreach { case (v, addNc, addNd) =>
-                val (unc, und) = w(u)
-                val cand = (unc + addNc, und + addNd)
-                val (vnc, vnd) = w(v)
-                if (longer(cand._1, cand._2, vnc, vnd)) w(v) = cand
-                indeg(v) -= 1
-                if (indeg(v) == 0) q.enqueue(v)
-              }
-            }
-            require(processed == w.size, "condensed trace graph is cyclic — non-monotone dirs")
-            // seeds: best value arriving INTO each crossing target (step counted)
-            val seeds = scala.collection.mutable.Map[(Long, Long), (Long, Long)]()
-            crossings.foreach { case (xr, xc, tr, tc, dg, _, _) =>
-              val (unc, und) = w((xr, xc))
-              val cand = (unc + (if (dg == 1) 0L else 1L), und + (if (dg == 1) 1L else 0L))
-              seeds.get((tr, tc)) match {
-                case Some((snc, snd)) if !longer(cand._1, cand._2, snc, snd) => ()
-                case _ => seeds((tr, tc)) = cand
-              }
-            }
-            val rows = seeds.iterator.map { case ((tr, tc), (nc, nd)) =>
-              (tr, tc, nc, nd) }.toSeq
-            tiles.sparkSession.createDataset(rows)
-              .groupByKey(t => CellId.ofPixel(t._1, t._2, res))
-              .mapGroups { (cid, it) => (cid, it.toArray) }
-          } else {
-            // ABOVE-LIMIT branch: distributed batched topological peel
-            // with MAX-PLUS semantics over the crossing DAG (VERDICT r4
-            // #4) — each round finalizes every crossing with no active
-            // predecessor and offers its best path to its successor;
-            // rounds = condensed depth, rows stay O(perimeter), nothing
-            // lands on the driver. The (length, ncard) ordering of
-            // [[longer]] maps to a lexicographic struct max.
-            val crossDf = summariesDs.flatMap(_.crossing.iterator)
-              .toDF("xr", "xc", "tr", "tc", "dg", "bnc", "bnd")
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            val routeDf = summariesDs.flatMap(_.routing.iterator)
-              .toDF("br", "bc", "k", "er", "ec", "rnc", "rnd")
-            val keys = crossDf.select($"xr".as("kr"), $"xc".as("kc"))
-            var active = crossDf
-              .join(routeDf, $"tr" === $"br" && $"tc" === $"bc", "left")
-              .join(keys, $"er" === $"kr" && $"ec" === $"kc", "left")
-              .select($"xr", $"xc", $"bnc".as("wnc"), $"bnd".as("wnd"),
-                when($"k" === 2 && $"kr".isNotNull, $"er").as("sr"),
-                when($"k" === 2 && $"kr".isNotNull, $"ec").as("sc"),
-                (when($"dg" === 1, 0L).otherwise(1L) + coalesce($"rnc", lit(0L))).as("anc"),
-                (when($"dg" === 1, 1L).otherwise(0L) + coalesce($"rnd", lit(0L))).as("and"))
-              .localCheckpoint(true)
-            var remaining = active.count()
-            val doneParts = scala.collection.mutable.ArrayBuffer[DataFrame]()
-            while (remaining > 0) {
-              val predKeys = active.where($"sr".isNotNull)
-                .select($"sr".as("xr"), $"sc".as("xc")).distinct()
-              val frontier = active.join(predKeys, Seq("xr", "xc"), "left_anti")
-                .localCheckpoint(true)
-              val nf = frontier.count()
-              require(nf > 0, "condensed trace graph is cyclic — non-monotone dirs")
-              doneParts += frontier.select($"xr", $"xc", $"wnc", $"wnd")
-              val offer = frontier.where($"sr".isNotNull)
-                .select($"sr".as("xr"), $"sc".as("xc"),
-                  ($"wnc" + $"anc").as("cnc"), ($"wnd" + $"and").as("cnd"))
-                .groupBy($"xr", $"xc")
-                .agg(max(struct(($"cnc" + $"cnd" * lit(Sqrt2)).as("la"),
-                  $"cnc", $"cnd")).as("best"))
-                .select($"xr", $"xc", $"best.cnc".as("cnc"), $"best.cnd".as("cnd"))
-              val better = $"cnc".isNotNull &&
-                (($"cnc" + $"cnd" * lit(Sqrt2)) > ($"wnc" + $"wnd" * lit(Sqrt2)) ||
-                 (($"cnc" + $"cnd" * lit(Sqrt2)) === ($"wnc" + $"wnd" * lit(Sqrt2)) &&
-                  $"cnc" > $"wnc"))
-              active = active
-                .join(frontier.select($"xr", $"xc"), Seq("xr", "xc"), "left_anti")
-                .join(offer, Seq("xr", "xc"), "left")
-                .select($"xr", $"xc",
-                  when(better, $"cnc").otherwise($"wnc").as("wnc"),
-                  when(better, $"cnd").otherwise($"wnd").as("wnd"),
-                  $"sr", $"sc", $"anc", $"and")
-                .localCheckpoint(true)
-              remaining -= nf
-            }
-            val resolved = doneParts.reduce(_ unionByName _)
-            val seedRows = resolved
-              .join(crossDf.select($"xr", $"xc", $"tr", $"tc", $"dg"), Seq("xr", "xc"))
-              .select($"tr", $"tc",
-                ($"wnc" + when($"dg" === 1, 0L).otherwise(1L)).as("cnc"),
-                ($"wnd" + when($"dg" === 1, 1L).otherwise(0L)).as("cnd"))
-              .groupBy($"tr", $"tc")
-              .agg(max(struct(($"cnc" + $"cnd" * lit(Sqrt2)).as("la"),
-                $"cnc", $"cnd")).as("best"))
-              .select($"tr", $"tc", $"best.cnc".as("nc"), $"best.cnd".as("nd"))
-              .as[(Long, Long, Long, Long)]
-            // checkpoint eagerly BEFORE dropping crossDf — seedRows
-            // reads it lazily, and the outer flatMap runs later
-            val byTile = seedRows
-              .groupByKey(t => CellId.ofPixel(t._1, t._2, res))
-              .mapGroups { (cid, it) => (cid, it.toArray) }
-              .localCheckpoint(true)
-            crossDf.unpersist()
-            byTile
-          }
-        padded
-          .joinWith(seedsByTile, padded("cellId") === seedsByTile("_1"), "left_outer")
-          .flatMap { case (pt, sd) =>
-            val seeds: Map[(Long, Long), (Long, Long)] =
-              if (sd == null) Map.empty
-              else sd._2.iterator.map(t => (t._1, t._2) -> ((t._3, t._4))).toMap
-            val dirs = dirPlane(pt, cs)
-            val (bnc, bnd) = localLongest(pt, dirs, seeds)
-            val out = Array.newBuilder[(Long, Long, Long, Long)]
-            var i = 0
-            while (i < dirs.length) {
-              if (dirs(i) >= 0)
-                out += (((pt.row0 + i / pt.w).toLong, (pt.col0 + i % pt.w).toLong,
-                  bnc(i), bnd(i)))
-              i += 1
-            }
-            out.result().iterator
-          }.toDF("row", "col", "ncard", "ndiag").localCheckpoint(true)
-      } finally summariesDs.unpersist()
-    } finally padded.unpersist()
-  }
+      driverLimit: Int = 2000000): DataFrame =
+    upstreamTiles(tiles, ref, res, driverLimit, LongestRule, localLongest)({ n =>
+      val (sc, sd) = step(n.xr, n.xc, n.tr, n.tc)
+      (n.a + sc, n.b + sd)
+    }).toDF("row", "col", "ncard", "ndiag")
 
   // ---------------------------------------------------------------------
   // Depression filling (Priority-Flood) — the standard DEM-conditioning
@@ -1026,10 +853,10 @@ object Flow {
     * tile/grid ratio — the fixpoint `fill(c) = max(z(c), min over
     * neighbors fill(n))` is unique, so the result is bit-identical to
     * the iterative halo relaxation (FlowSpec gates both against each
-    * other and the Jacobi oracle). Above `driverLimit` condensed border
+    * other and the Jacobi oracle). Above `driverLimit` estimated border
     * cells the driver solve would not be driver-safe, so the iterative
-    * halo loop takes over (the same recursive supertile condensation as
-    * [[flowAcc]] is the production path there). */
+    * halo relaxation ([[fillSinksIterative]]) runs instead: one job per
+    * round, rounds bounded by `maxRounds`. */
   def fillSinksTiles(tiles: Dataset[Tile], ref: GridRef, res: Int,
       maxRounds: Int = 10000, driverLimit: Int = 2000000): Dataset[Tile] = {
     val tilesX = ((ref.ncols - 1) >> res) + 1
@@ -1335,10 +1162,6 @@ object Flow {
     } finally z.unpersist()
   }
 
-  /** Stream-network extraction: the D8 edges whose source cell's flow
-    * accumulation meets `threshold` — `(row, col, to_r, to_c, acc)`. The
-    * classic channel-initiation rule (acc >= support area). One join of
-    * [[flowAcc]] and [[flowDir]] on the cell key. */
   /** Nearest drainage along the D8 path — the routing core of HAND (Height
     * Above Nearest Drainage, Rennó et al. 2008): for every valid cell whose
     * downstream path touches a stream cell (flow accumulation >=
@@ -1346,15 +1169,12 @@ object Flow {
     * to it — `(row, col, stream_r, stream_c, ncard, ndiag)`. Stream cells
     * map to themselves with (0, 0); cells draining to a pit without
     * crossing a stream are omitted (HAND undefined). Same condensation
-    * scale shape as [[downstream]]: tile-local memoized traces that STOP at
-    * stream cells, a driver-side crossing-chain resolve bounded by
-    * `driverLimit`, and one broadcast of the resolved crossings — the
-    * stream mask itself arrives per tile via an equi-join on the tile cell
-    * id (never collected). */
+    * scale shape as [[downstream]], with tile-local traces that STOP at
+    * stream cells — the stream mask arrives per tile via an equi-join on
+    * the tile cell id (never collected). */
   def nearestDrainage(tiles: Dataset[Tile], ref: GridRef, res: Int,
       threshold: Long, driverLimit: Int = 2000000): DataFrame = {
     import tiles.sparkSession.implicits._
-    val cs = ref.cellsize
     val size = 1 << res
     val ncols = ref.ncols
     // per-tile stream mask as LOCAL indices, keyed by the owning tile's id
@@ -1366,156 +1186,8 @@ object Flow {
         (CellId.ofPixel(r, c, res), ((r - ((r >> res) << res)) * w + (c - col0)).toInt)
       }
       .groupByKey(_._1).mapValues(_._2).mapGroups((cid, it) => (cid, it.toArray))
-    val bare = Stencil.padded(tiles, ref, res)
-    val padded = bare
-      .joinWith(stops, bare("cellId") === stops("_1"), "left_outer")
-      .map { case (pt, st) => (pt, if (st == null) Array.empty[Int] else st._2) }
-      .persist()
-    try {
-      // pass 1: per-tile crossing edges + border routing, stream-aware
-      val summariesDs: Dataset[TraceSummary] = padded.mapPartitions { it =>
-        it.map { case (pt, streamIdx) =>
-          val stop = new Array[Boolean](pt.h * pt.w)
-          streamIdx.foreach(stop(_) = true)
-          val dirs = dirPlane(pt, cs)
-          val (typ, term, cnc, cnd) = localTrace(pt, dirs, stop)
-          val crossing = Array.newBuilder[(Long, Long, Long, Long, Int, Long, Long)]
-          var i = 0
-          while (i < dirs.length) {
-            if (typ(i) == 2 && term(i) == i) {
-              val (dr, dc) = delta(dirs(i))
-              crossing += (((pt.row0 + i / pt.w).toLong, (pt.col0 + i % pt.w).toLong,
-                (pt.row0 + i / pt.w + dr).toLong, (pt.col0 + i % pt.w + dc).toLong,
-                if (dr != 0 && dc != 0) 1 else 0, 0L, 0L))
-            }
-            i += 1
-          }
-          val routing = Array.newBuilder[(Long, Long, Int, Long, Long, Long, Long)]
-          var r = 0
-          while (r < pt.h) {
-            var c = 0
-            while (c < pt.w) {
-              val j = r * pt.w + c
-              if ((r == 0 || r == pt.h - 1 || c == 0 || c == pt.w - 1) && typ(j) != 3)
-                routing += (((pt.row0 + r).toLong, (pt.col0 + c).toLong, typ(j).toInt,
-                  (pt.row0 + term(j) / pt.w).toLong, (pt.col0 + term(j) % pt.w).toLong,
-                  cnc(j).toLong, cnd(j).toLong))
-              c += 1
-            }
-            r += 1
-          }
-          TraceSummary(crossing.result(), routing.result())
-        }
-      }.localCheckpoint(false)
-      try {
-        val resolvedByTile: Dataset[(Long, Array[(Long, Long, Boolean, Long, Long, Long, Long)])] =
-          if (collectCount(summariesDs) <= driverLimit) {
-            val summaries = summariesDs.collect()
-            val crossings = summaries.flatMap(_.crossing)
-            val target = crossings.map { case (xr, xc, tr, tc, dg, _, _) =>
-              (xr, xc) -> (tr, tc, dg) }.toMap
-            val route = summaries.flatMap(_.routing)
-              .map { case (br, bc, k, tr, tc, nc, nd) => (br, bc) -> (k, tr, tc, nc, nd) }.toMap
-            // resolve each crossing cell to (defined, streamR, streamC, nc, nd) —
-            // counts from the crossing cell inclusive of its crossing step;
-            // defined=false when the chain dies at a pit before any stream cell.
-            val memo = scala.collection.mutable.Map[(Long, Long), (Boolean, Long, Long, Long, Long)]()
-            target.keys.foreach { x0 =>
-              if (!memo.contains(x0)) {
-                val chain = scala.collection.mutable.ArrayBuffer[((Long, Long), Long, Long)]()
-                var cur = x0
-                var base: (Boolean, Long, Long, Long, Long) = null
-                while (base == null) {
-                  memo.get(cur) match {
-                    case Some(f) => base = f
-                    case None =>
-                      val (tr, tc, dg) = target(cur)
-                      val stepNc = if (dg == 1) 0L else 1L
-                      val stepNd = if (dg == 1) 1L else 0L
-                      val (k, er, ec, nc, nd) = route.getOrElse((tr, tc),
-                        throw new IllegalStateException(s"no routing for crossing target ($tr,$tc)"))
-                      if (k == 4) { // first stream cell (er, ec) in the target tile
-                        base = (true, er, ec, stepNc + nc, stepNd + nd)
-                        memo(cur) = base
-                      } else if (k == 1) { // pit before any stream — undefined
-                        base = (false, 0L, 0L, 0L, 0L)
-                        memo(cur) = base
-                      } else {
-                        chain += ((cur, stepNc + nc, stepNd + nd))
-                        require(chain.length <= target.size, "crossing chain cycle — non-monotone dirs")
-                        cur = (er, ec)
-                      }
-                  }
-                }
-                var k = chain.length - 1
-                while (k >= 0) {
-                  val (x, addNc, addNd) = chain(k)
-                  base = if (base._1) (true, base._2, base._3, base._4 + addNc, base._5 + addNd)
-                         else base
-                  memo(x) = base
-                  k -= 1
-                }
-              }
-            }
-            val rows = memo.iterator.map { case ((xr, xc), (ok, sr, sc, nc, nd)) =>
-              (xr, xc, ok, sr, sc, nc, nd) }.toSeq
-            byTile(tiles.sparkSession.createDataset(rows)
-              .toDF("xr", "xc", "ok", "lr", "lc", "nc", "nd"), res)
-          } else {
-            // ABOVE-LIMIT branch: the same pointer-doubling carry resolve
-            // as [[downstream]], with the ok flag carrying "reached a
-            // stream cell" vs "died at a pit first" (VERDICT r4 #4).
-            val crossDf = summariesDs.flatMap(_.crossing.iterator)
-              .toDF("xr", "xc", "tr", "tc", "dg", "bnc", "bnd")
-            val routeDf = summariesDs.flatMap(_.routing.iterator)
-              .toDF("br", "bc", "k", "er", "ec", "rnc", "rnd")
-            // LEFT join + per-row raise — same missing-routing loudness
-            // contract as [[downstream]]'s above-limit branch
-            val init = crossDf
-              .join(routeDf, $"tr" === $"br" && $"tc" === $"bc", "left")
-              .select($"xr", $"xc",
-                ($"k" === 4 || $"k" === 1).as("done"),
-                when($"br".isNull, raise_error(format_string(
-                  "no routing for crossing target (%d,%d)", $"tr", $"tc")))
-                  .otherwise($"k" === 4).as("ok"),
-                when($"k" === 1, 0L).otherwise($"er").as("lr"),
-                when($"k" === 1, 0L).otherwise($"ec").as("lc"),
-                when($"k" === 1, 0L)
-                  .otherwise(when($"dg" === 1, 0L).otherwise(1L) + $"rnc").as("nc"),
-                when($"k" === 1, 0L)
-                  .otherwise(when($"dg" === 1, 1L).otherwise(0L) + $"rnd").as("nd"))
-            byTile(resolveChainsDoubling(init), res)
-          }
-        padded
-          .joinWith(resolvedByTile, padded("_1.cellId") === resolvedByTile("_1"), "left_outer")
-          .flatMap { case ((pt, streamIdx), rv) =>
-            val m: Map[(Long, Long), (Boolean, Long, Long, Long, Long)] =
-              if (rv == null) Map.empty
-              else rv._2.iterator.map(t => (t._1, t._2) -> ((t._3, t._4, t._5, t._6, t._7))).toMap
-            val stop = new Array[Boolean](pt.h * pt.w)
-            streamIdx.foreach(stop(_) = true)
-            val dirs = dirPlane(pt, cs)
-            val (typ, term, cnc, cnd) = localTrace(pt, dirs, stop)
-            val out = Array.newBuilder[(Long, Long, Long, Long, Long, Long)]
-            var i = 0
-            while (i < dirs.length) {
-              if (typ(i) == 4) {
-                out += (((pt.row0 + i / pt.w).toLong, (pt.col0 + i % pt.w).toLong,
-                  (pt.row0 + term(i) / pt.w).toLong, (pt.col0 + term(i) % pt.w).toLong,
-                  cnc(i).toLong, cnd(i).toLong))
-              } else if (typ(i) == 2) {
-                val x = ((pt.row0 + term(i) / pt.w).toLong, (pt.col0 + term(i) % pt.w).toLong)
-                val (defined, sr, sc, nc, nd) = m(x)
-                if (defined)
-                  out += (((pt.row0 + i / pt.w).toLong, (pt.col0 + i % pt.w).toLong,
-                    sr, sc, cnc(i) + nc, cnd(i) + nd))
-              }
-              i += 1
-            }
-            out.result().iterator
-          }.toDF("row", "col", "stream_r", "stream_c", "ncard", "ndiag").localCheckpoint(true)
-      } finally summariesDs.unpersist()
-    } finally padded.unpersist()
+    traceTiles(tiles, ref, res, driverLimit, Some(stops), terminal = 4)
+      .toDF("row", "col", "stream_r", "stream_c", "ncard", "ndiag")
   }
 
   /** Strahler stream order (Strahler 1957): for every stream cell (flow
@@ -1528,29 +1200,23 @@ object Flow {
     *   1. classify: stream cells with in-degree != 1 are NODES (sources,
     *      junctions); in-degree-1 cells are CHAIN cells with a unique
     *      parent pointer.
-    *   2. pointer doubling UP the chains (`ptr = ptr(ptr)` per round,
-    *      frozen at nodes): O(log maxChainLen) rounds, each one equi-join
-    *      shuffle, plans kept constant-size with localCheckpoint — gives
-    *      every stream cell its chain HEAD node.
-    *   3. condensed junction-forest solve: each stream edge into a node,
-    *      tagged with its source's head, is one condensed edge
-    *      (head -> node); the forest has O(#sources) nodes, solved
-    *      driver-side under `driverLimit` (above it, the same
-    *      condensation recurses at supertile granularity like
-    *      [[flowAcc]]'s crossing solve), then one broadcast maps heads
-    *      to orders. */
+    *   2. a chain resolve UP the parent pointers ([[resolveChains]], zero
+    *      counts) gives every stream cell its chain HEAD node.
+    *   3. an upstream fold of the junction forest ([[foldUpstream]] under
+    *      [[StrahlerRule]]): a node's successor is the node its chain
+    *      enters; O(#nodes) rows.
+    * Each solve runs on the driver while its rows stay within
+    * `driverLimit`; above it, pointer doubling and the batched
+    * topological peel run on the cluster. */
   def strahlerOrder(tiles: Dataset[Tile], ref: GridRef, res: Int,
-      threshold: Long, driverLimit: Int = 2000000,
-      headsViaDoubling: Boolean = false): DataFrame = {
-    import tiles.sparkSession.implicits._
-    import org.apache.spark.sql.functions._
+      threshold: Long, driverLimit: Int = 2000000): DataFrame = {
+    val spark = tiles.sparkSession
+    import spark.implicits._
     // ONE flowAcc feeds both the channel mask and the edge set (calling
     // streamNetwork here would run the whole tile condensation twice)
     val streamCells = flowAcc(tiles, ref, res).where($"acc" >= threshold)
-      .select($"row", $"col").persist()
-    val dirs = flowDir(tiles, ref, res).where($"dir" > 0)
-      .select($"row", $"col", $"dir")
-    val net = streamCells.join(dirs, Seq("row", "col"))
+      .select($"row", $"col")
+    val net = streamCells.join(flowDir(tiles, ref, res).where($"dir" > 0), Seq("row", "col"))
       .select($"row", $"col",
         ($"row" + expr(D8RowCase)).as("to_r"),
         ($"col" + expr(D8ColCase)).as("to_c"))
@@ -1560,206 +1226,42 @@ object Flow {
         .agg(count(lit(1)).as("indeg"))
       val deg = streamCells.join(indeg, Seq("row", "col"), "left")
         .na.fill(0L, Seq("indeg"))
-      val nodesDF = deg.where($"indeg" =!= 1).select($"row", $"col").persist()
-      // chain cells carry their unique parent as the initial pointer
       val parents = net.select($"to_r".as("row"), $"to_c".as("col"),
         $"row".as("pr"), $"col".as("pc"))
-      val chainPtrDF = deg.where($"indeg" === 1).select($"row", $"col")
-        .join(parents, Seq("row", "col"))
-        .select($"row", $"col", $"pr", $"pc")
-        .persist()
-      // Hybrid head resolution (the GraphOps pattern): below driverLimit
-      // the chain set is collected and chased with memoization — O(cells)
-      // driver work replacing O(log chainLen) rounds of join+checkpoint+
-      // count (each round is 3 Spark jobs; the distributed loop cost ~10s
-      // of pure job overhead at fixture scale). Above the limit, the
-      // pointer-doubling loop below is the scale path. The gate bounds
-      // BOTH collected sets — the chain pointers AND the junction nodes
-      // (a network of millions of short disjoint segments has few chain
-      // cells but a junction set as large as the stream mask).
-      // ONE bounded probe action replaces the former count + count +
-      // collect + collect sequence: both sets come back in a single
-      // limit(driverLimit + 1) collect, and the gate trips exactly when
-      // the probe overflows the cap (same predicate as the old
-      // chainCount + nodeCount <= driverLimit, two fewer driver
-      // round-trips and no separate counting pass).
-      val probe: Array[(Long, Long, Long, Long, Boolean)] =
-        if (headsViaDoubling) Array.empty
-        else nodesDF
-          .select($"row", $"col", lit(0L).as("pr"), lit(0L).as("pc"),
-            lit(true).as("isNode"))
-          .unionByName(chainPtrDF
-            .select($"row", $"col", $"pr", $"pc", lit(false).as("isNode")))
-          .as[(Long, Long, Long, Long, Boolean)]
-          .limit(driverLimit + 1)
-          .collect()
-      val useDriverHeads = !headsViaDoubling && probe.length <= driverLimit
-      val nodeArr: Array[(Long, Long)] =
-        if (useDriverHeads) probe.filter(_._5).map(t => (t._1, t._2))
-        else Array.empty
-      val nNodes = if (useDriverHeads) nodeArr.length.toLong else nodesDF.count()
-      var lab: DataFrame = if (useDriverHeads) {
-        val nodeSet = nodeArr.toSet
-        val chain = probe.filterNot(_._5).map(t => (t._1, t._2, t._3, t._4))
-        val ptr = chain.map(t => (t._1, t._2) -> ((t._3, t._4))).toMap
-        val head = scala.collection.mutable.HashMap[(Long, Long), (Long, Long)]()
-        def resolve(start: (Long, Long)): (Long, Long) = {
-          var path = List.empty[(Long, Long)]
-          var cur = start
-          var steps = 0
-          while (!nodeSet.contains(cur) && !head.contains(cur)) {
-            require(steps <= ptr.size, "pointer chase stalled — stream chain cycle")
-            path ::= cur
-            cur = ptr(cur)
-            steps += 1
-          }
-          val h = if (nodeSet.contains(cur)) cur else head(cur)
-          path.foreach(p => head(p) = h)
-          h
-        }
-        val rows = nodeSet.toSeq.map(n => (n._1, n._2, n._1, n._2, true)) ++
-          chain.map { t =>
-            val h = resolve((t._1, t._2)); (t._1, t._2, h._1, h._2, true)
-          }
-        tiles.sparkSession.createDataset(rows)
-          .toDF("row", "col", "hr", "hc", "done")
-      } else {
-        var l = nodesDF
-          .select($"row", $"col", $"row".as("hr"), $"col".as("hc"), lit(true).as("done"))
-          .unionByName(chainPtrDF
-            .select($"row", $"col", $"pr".as("hr"), $"pc".as("hc"), lit(false).as("done")))
-          .localCheckpoint(true)
-        var remaining = l.where(!$"done").count()
-        while (remaining > 0) {
-          val tgt = l.select($"row".as("hr"), $"col".as("hc"),
-            $"hr".as("thr"), $"hc".as("thc"), $"done".as("tdone"))
-          l = l.join(tgt, Seq("hr", "hc"), "left")
-            .select($"row", $"col",
-              when($"done", $"hr").otherwise($"thr").as("hr"),
-              when($"done", $"hc").otherwise($"thc").as("hc"),
-              ($"done" || $"tdone").as("done"))
-            .localCheckpoint(true)
-          val next = l.where(!$"done").count()
-          require(next < remaining, "pointer doubling stalled — stream chain cycle")
-          remaining = next
-        }
-        l
-      }
-      // condensed edges: stream edges whose target is a node, keyed by the
-      // source cell's head — one edge per incoming chain
-      val nodeKeys = nodesDF.select($"row".as("to_r"), $"col".as("to_c"))
-      val condensedDf = net.join(nodeKeys, Seq("to_r", "to_c"))
-        .join(lab.select($"row", $"col", $"hr", $"hc"), Seq("row", "col"))
-        .select($"hr", $"hc", $"to_r", $"to_c")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // same bounded-probe trick for the condensed-edge gate: one
-      // limit-collect whose overflow IS the gate (the cap accounts for
-      // the node rows the Kahn branch would also hold)
-      val capLeft = driverLimit.toLong - nNodes + 1
-      val condProbe: Array[(Long, Long, Long, Long)] =
-        if (capLeft >= 1)
-          condensedDf.as[(Long, Long, Long, Long)]
-            .limit(math.min(capLeft, Int.MaxValue.toLong).toInt).collect()
-        else Array.empty
-      val orderDf: DataFrame =
-        if (capLeft >= 1 && condProbe.length < capLeft) {
-          // Kahn over the junction forest on the driver: order(node with
-          // no incoming) = 1; order(w) = max incoming head orders, +1
-          // when >=2 share the max. Gate includes the NODE count — this
-          // branch collects nodesDF too, and zero-edge forests (all
-          // single-junction streams) can still carry millions of nodes.
-          val condensed = condProbe
-          val nodes: Array[(Long, Long)] =
-            if (useDriverHeads) nodeArr else nodesDF.as[(Long, Long)].collect()
-          val incoming = condensed.groupBy(e => (e._3, e._4))
-            .map { case (w, es) => w -> es.map(e => (e._1, e._2)) }
-          val outEdge = condensed.map(e => (e._1, e._2) -> ((e._3, e._4))).toMap
-          val pending = scala.collection.mutable.Map[(Long, Long), Int]() ++
-            nodes.map(n => n -> incoming.get(n).map(_.length).getOrElse(0))
-          val order = scala.collection.mutable.Map[(Long, Long), Int]()
-          val queue = new java.util.ArrayDeque[(Long, Long)]()
-          pending.foreach { case (n, p) => if (p == 0) queue.add(n) }
-          var seen = 0
-          while (!queue.isEmpty) {
-            val u = queue.poll(); seen += 1
-            val ins = incoming.getOrElse(u, Array.empty[(Long, Long)])
-            order(u) =
-              if (ins.isEmpty) 1
-              else {
-                val os = ins.map(order).sorted(Ordering[Int].reverse)
-                os(0) + (if (os.length >= 2 && os(1) == os(0)) 1 else 0)
-              }
-            outEdge.get(u).foreach { w =>
-              pending(w) -= 1
-              if (pending(w) == 0) queue.add(w)
-            }
-          }
-          require(seen == nodes.length, "junction forest cyclic — non-monotone dirs")
-          tiles.sparkSession.createDataset(
-            order.iterator.map { case ((r, c), o) => (r, c, o.toLong) }.toSeq)
-            .toDF("hr", "hc", "ord")
-        } else {
-          // ABOVE-LIMIT branch (VERDICT r4 #4's family, completed for the
-          // junction forest too): distributed batched topological peel.
-          // Each round finalizes every junction with no still-active
-          // predecessor; its order flows along its out-edges and targets
-          // fold the (max, count-of-max) pair — the Strahler rule
-          // order = maxIn + (1 when >=2 share maxIn) — associatively
-          // across rounds. Rounds = junction-forest depth; rows stay
-          // O(#junctions); nothing lands on the driver.
-          var active = nodesDF.select($"row", $"col")
-            .withColumn("b", lit(0L)).withColumn("k", lit(0L))
-            .localCheckpoint(true)
-          var remaining = active.count()
-          val done = scala.collection.mutable.ArrayBuffer[DataFrame]()
-          while (remaining > 0) {
-            val activeSrc = active.select($"row".as("hr"), $"col".as("hc"))
-            val blocked = condensedDf.join(activeSrc, Seq("hr", "hc"))
-              .select($"to_r".as("row"), $"to_c".as("col")).distinct()
-            val frontier = active.join(blocked, Seq("row", "col"), "left_anti")
-              .localCheckpoint(true)
-            val nf = frontier.count()
-            require(nf > 0, "junction forest cyclic — non-monotone dirs")
-            val fOrd = frontier.select($"row", $"col",
-              when($"k" === 0L, 1L)
-                .otherwise($"b" + when($"k" >= 2L, 1L).otherwise(0L)).as("ord"))
-              .localCheckpoint(true)
-            done += fOrd
-            val raw = condensedDf
-              .join(fOrd.select($"row".as("hr"), $"col".as("hc"), $"ord"),
-                Seq("hr", "hc"))
-              .select($"to_r", $"to_c", $"ord")
-            val mx = raw.groupBy($"to_r", $"to_c").agg(max($"ord").as("m"))
-            val contrib = raw.join(mx, Seq("to_r", "to_c"))
-              .where($"ord" === $"m")
-              .groupBy($"to_r", $"to_c")
-              .agg(max($"m").as("m"), count(lit(1)).as("c"))
-              .select($"to_r".as("row"), $"to_c".as("col"), $"m", $"c")
-            active = active
-              .join(frontier.select($"row", $"col"), Seq("row", "col"), "left_anti")
-              .join(contrib, Seq("row", "col"), "left")
-              .select($"row", $"col",
-                when($"m".isNotNull && $"m" > $"b", $"m").otherwise($"b").as("b"),
-                when($"m".isNotNull && $"m" > $"b", $"c")
-                  .when($"m".isNotNull && $"m" === $"b", $"k" + $"c")
-                  .otherwise($"k").as("k"))
-              .localCheckpoint(true)
-            remaining -= nf
-          }
-          done.reduce(_ unionByName _)
-            .select($"row".as("hr"), $"col".as("hc"), $"ord")
-        }
-      condensedDf.unpersist()
-      nodesDF.unpersist()
-      lab.select($"row", $"col", $"hr", $"hc")
-        .join(orderDf, Seq("hr", "hc"))
-        .select($"row", $"col", $"ord".cast("long").as("strahler"))
+      // nodes head themselves; chain cells point at their unique parent
+      val chain = deg.where($"indeg" =!= 1)
+        .select($"row", $"col", lit(true).as("done"), $"row".as("pr"), $"col".as("pc"))
+        .unionByName(deg.where($"indeg" === 1).join(parents, Seq("row", "col"))
+          .select($"row", $"col", lit(false).as("done"), $"pr", $"pc"))
+        .select($"row".as("xr"), $"col".as("xc"), $"done", lit(true).as("ok"),
+          $"pr".as("lr"), $"pc".as("lc"), lit(0L).as("nc"), lit(0L).as("nd"))
+        .as[ChainRow]
+      val heads = toDs(spark, resolveChains(place(chain, driverLimit)(_ => 1L)))
+        .select($"xr".as("row"), $"xc".as("col"), $"lr".as("hr"), $"lc".as("hc"))
+      val nodes = heads.where($"row" === $"hr" && $"col" === $"hc")
+        .select($"row".as("xr"), $"col".as("xc"))
+      // the node each chain enters: the target of its last edge
+      val enters = net.join(heads, Seq("row", "col"))
+        .join(nodes.select($"xr".as("to_r"), $"xc".as("to_c")), Seq("to_r", "to_c"))
+        .select($"hr".as("xr"), $"hc".as("xc"), $"to_r".as("sr"), $"to_c".as("sc"))
+      val forest = nodes.join(enters, Seq("xr", "xc"), "left")
+        .select($"xr", $"xc", lit(0L).as("tr"), lit(0L).as("tc"),
+          $"sr".isNotNull.as("hasSucc"), coalesce($"sr", lit(0L)).as("sr"),
+          coalesce($"sc", lit(0L)).as("sc"), lit(0L).as("a"), lit(0L).as("b"),
+          lit(0L).as("ea"), lit(0L).as("eb"))
+        .as[FoldNode]
+      val orders = toDs(spark, foldUpstream(place(forest, driverLimit)(_ => 1L), StrahlerRule))
+        .map(n => (n.xr, n.xc, strahler(n.a, n.b))).toDF("hr", "hc", "strahler")
+      heads.join(orders, Seq("hr", "hc"))
+        .select($"row", $"col", $"strahler")
         .localCheckpoint(true)
-    } finally { net.unpersist(); streamCells.unpersist() }
-    // (chainPtrDF unpersists with the session; the final localCheckpoint
-    // already cut the lineage so nothing downstream re-reads it)
+    } finally net.unpersist()
   }
 
+  /** Stream-network extraction: the D8 edges whose source cell's flow
+    * accumulation meets `threshold` — `(row, col, to_r, to_c, acc)`. The
+    * classic channel-initiation rule (acc >= support area). One join of
+    * [[flowAcc]] and [[flowDir]] on the cell key. */
   def streamNetwork(tiles: Dataset[Tile], ref: GridRef, res: Int,
       threshold: Long): DataFrame = {
     import tiles.sparkSession.implicits._
@@ -1768,8 +1270,8 @@ object Flow {
       .select($"row", $"col", $"dir")
     acc.join(dir, Seq("row", "col"))
       .select($"row", $"col",
-        ($"row" + org.apache.spark.sql.functions.expr(D8RowCase)).as("to_r"),
-        ($"col" + org.apache.spark.sql.functions.expr(D8ColCase)).as("to_c"),
+        ($"row" + expr(D8RowCase)).as("to_r"),
+        ($"col" + expr(D8ColCase)).as("to_c"),
         $"acc")
   }
 }

@@ -268,7 +268,7 @@ class FlowSpec extends AnyFunSuite {
     // pointer-doubling loop and compare
     val tiles6 = TileOps.tileGrid(spark, ref, 6)(Synth.demValue)
     val dist = Flow.strahlerOrder(tiles6, ref, 6, threshold,
-        headsViaDoubling = true)
+        driverLimit = 0)
       .collect()
       .map(r => (r.getLong(0).toInt, r.getLong(1).toInt) -> r.getLong(2)).toMap
     assert(dist == want.toMap, "distributed branch diverges from driver chase")
@@ -459,5 +459,100 @@ class FlowSpec extends AnyFunSuite {
     // every cell's unit of water ends at exactly one pit
     val pitSum = dirG.collect { case (rc, 0) => rows(rc) }.sum
     assert(pitSum == rows.size.toLong, s"pit mass $pitSum != ${rows.size}")
+  }
+
+  test("crossing-graph operators release every Dataset they persist, both placements") {
+    // a persisted Dataset is a cache-manager entry until unpersisted; from
+    // an empty cache, a call must leave it empty, on either placement
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    spark.catalog.clearCache()
+    val ref = Synth.demRef
+    val tiles = TileOps.tileGrid(spark, ref, 6)(Synth.demValue)
+    for (limit <- Seq(2000000, 0)) {
+      val ops = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+        "flowAcc" -> (() => Flow.flowAcc(tiles, ref, 6, driverLimit = limit)),
+        "downstream" -> (() => Flow.downstream(tiles, ref, 6, driverLimit = limit)),
+        "longestUpstream" -> (() => Flow.longestUpstream(tiles, ref, 6, driverLimit = limit)),
+        "nearestDrainage" -> (() =>
+          Flow.nearestDrainage(tiles, ref, 6, threshold = 25L, driverLimit = limit)),
+        "strahlerOrder" -> (() =>
+          Flow.strahlerOrder(tiles, ref, 6, threshold = 25L, driverLimit = limit)))
+      for ((name, op) <- ops) {
+        assert(op().count() > 0, s"$name driverLimit=$limit empty")
+        assert(cache.isEmpty, s"$name driverLimit=$limit left a persisted Dataset cached")
+      }
+    }
+  }
+
+  test("crossing-graph solvers: driver placement == distributed placement; cycles rejected") {
+    import spark.implicits._
+    import Flow.{ChainRow, FoldNode}
+    val rnd = new scala.util.Random(11)
+    // a forest over n keys: a deep chain 0 -> 1 -> ... -> chainLen, then
+    // every other key a singleton (no edge in or out), a root, or the
+    // child of a random later key (many roots, random fan-in)
+    def forest(n: Int, chainLen: Int): Array[Option[Int]] = {
+      val singleton = Array.tabulate(n)(i => i > chainLen && rnd.nextInt(6) == 0)
+      Array.tabulate(n) { i =>
+        if (i < chainLen) Some(i + 1)
+        else if (singleton(i) || i == n - 1 || rnd.nextInt(5) == 0) None
+        else Some(i + 1 + rnd.nextInt(n - i - 1)).filterNot(singleton)
+      }
+    }
+    def key(i: Int): (Long, Long) = ((i / 37).toLong, (i % 37).toLong)
+    def both[T: org.apache.spark.sql.Encoder](rows: Array[T],
+        solve: Flow.Placed[T] => Flow.Placed[T]): (Array[T], Array[T]) =
+      (solve(Left(rows)).fold(identity, _.collect()),
+        solve(Right(spark.createDataset(rows.toSeq))).fold(identity, _.collect()))
+
+    val succ = forest(400, 16)
+    def nodes(value: Int => (Long, Long)): Array[FoldNode] = succ.indices.map { i =>
+      val (xr, xc) = key(i)
+      val (sr, sc) = succ(i).map(key).getOrElse((0L, 0L))
+      val (a, b) = value(i)
+      FoldNode(xr, xc, 0L, 0L, succ(i).isDefined, sr, sc, a, b,
+        rnd.nextInt(3).toLong, rnd.nextInt(3).toLong)
+    }.toArray
+    for ((name, rule, ns) <- Seq(
+        ("sum", Flow.SumRule, nodes(_ => (1L + rnd.nextInt(9), 0L))),
+        ("longest", Flow.LongestRule, nodes(_ => (rnd.nextInt(5).toLong, rnd.nextInt(5).toLong))),
+        ("strahler", Flow.StrahlerRule, nodes(_ => (0L, 0L))))) {
+      val (d, s) = both[FoldNode](ns, Flow.foldUpstream(_, rule))
+      assert(d.sortBy(n => (n.xr, n.xc)).toSeq == s.sortBy(n => (n.xr, n.xc)).toSeq, name)
+      assert(d.length == ns.length, s"$name rows")
+      if (name == "sum") // every unit ends at exactly one root
+        assert(d.filterNot(_.hasSucc).map(_.a).sum == ns.map(_.a).sum, "sum mass")
+    }
+
+    val up = forest(2000, 300)
+    val rows = up.indices.map { i =>
+      val (xr, xc) = key(i)
+      up(i) match {
+        case Some(j) => ChainRow(xr, xc, done = false, ok = false, key(j)._1, key(j)._2,
+          rnd.nextInt(3).toLong, rnd.nextInt(3).toLong)
+        case None => ChainRow(xr, xc, done = true, ok = rnd.nextBoolean(),
+          rnd.nextInt(1000).toLong, rnd.nextInt(1000).toLong, rnd.nextInt(3).toLong, 0L)
+      }
+    }.toArray
+    val (d, s) = both[ChainRow](rows, Flow.resolveChains)
+    assert(d.sortBy(r => (r.xr, r.xc)).toSeq == s.sortBy(r => (r.xr, r.xc)).toSeq, "chains")
+    assert(d.forall(_.done) && d.length == rows.length, "chains resolved")
+    assert(d.exists(r => r.nc + r.nd > 300), "no deep chain")
+
+    // a planted cycle 0 -> 1 -> 2 -> 0 with a tail 3 -> 0
+    val cyc = Array(1, 2, 0, 0)
+    val cycNodes = cyc.indices.map { i =>
+      FoldNode(key(i)._1, key(i)._2, 0L, 0L, true, key(cyc(i))._1, key(cyc(i))._2, 1L, 0L, 0L, 0L)
+    }.toArray
+    val cycRows = cyc.indices.map { i =>
+      ChainRow(key(i)._1, key(i)._2, false, false, key(cyc(i))._1, key(cyc(i))._2, 1L, 0L)
+    }.toArray
+    for (placed <- Seq[Flow.Placed[FoldNode]](Left(cycNodes),
+        Right(spark.createDataset(cycNodes.toSeq))))
+      intercept[IllegalArgumentException](Flow.foldUpstream(placed, Flow.SumRule))
+    for (placed <- Seq[Flow.Placed[ChainRow]](Left(cycRows),
+        Right(spark.createDataset(cycRows.toSeq))))
+      intercept[IllegalArgumentException](Flow.resolveChains(placed))
   }
 }
