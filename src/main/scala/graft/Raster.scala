@@ -164,25 +164,24 @@ final case class Raster(tiles: Dataset[Tile], ref: GridRef, res: Int = 6) {
     * grid. Methods: nearest (exact 1-NN), linear (distributed Delaunay),
     * cubic (reduced Clough-Tocher C1), idw (exact-k inverse distance). */
   def pointInterpolate(points: Dataset[PtRec], method: String = "nearest",
-      k: Int = 4, power: Double = 2.0): DataFrame = method match {
-    case "nearest" => Knn.nearestBucketed(spark, points, ref, res)
-    case "linear" => Delaunay.linearBucketed(spark, points, ref, res)
-    case "cubic" => Delaunay.cubicBucketed(spark, points, ref, res)
-    case "idw" => Knn.idwBucketed(spark, points, ref, res, k, power)
-    case other => throw new IllegalArgumentException(
-      s"point_interpolate method '$other' (nearest|linear|cubic|idw)")
-  }
+      k: Int = 4, power: Double = 2.0): DataFrame =
+    interpolate("point_interpolate", points, ref, method, k, power)
 
   /** `grid_interpolate` (Raster.py:431-455): this grid's non-NaN cells as
     * sites, interpolated onto `target`. */
   def gridInterpolate(target: GridRef, method: String = "nearest",
-      k: Int = 4, power: Double = 2.0): DataFrame = method match {
-    case "nearest" => GridInterpolate.nearest(tiles, ref, target, res)
-    case "linear" => GridInterpolate.linear(tiles, ref, target, res)
-    case "cubic" => GridInterpolate.cubic(tiles, ref, target, res)
-    case "idw" => GridInterpolate.idw(tiles, ref, target, res, k, power)
+      k: Int = 4, power: Double = 2.0): DataFrame =
+    interpolate("grid_interpolate", GridInterpolate.explodeCells(tiles, ref),
+      target, method, k, power)
+
+  private def interpolate(op: String, points: Dataset[PtRec], target: GridRef,
+      method: String, k: Int, power: Double): DataFrame = method match {
+    case "nearest" => Knn.nearestBucketed(spark, points, target, res)
+    case "linear" => Delaunay.linearBucketed(spark, points, target, res)
+    case "cubic" => Delaunay.cubicBucketed(spark, points, target, res)
+    case "idw" => Knn.idwBucketed(spark, points, target, res, k, power)
     case other => throw new IllegalArgumentException(
-      s"grid_interpolate method '$other' (nearest|linear|cubic|idw)")
+      s"$op method '$other' (nearest|linear|cubic|idw)")
   }
 
   /** `resample` to a new cellsize (Raster.py:369-405), nearest|bilinear:

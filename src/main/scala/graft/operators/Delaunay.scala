@@ -18,11 +18,13 @@ import graft.core._
   * cells that fail (or fall outside the local hull) escalate with a
   * doubled ring, and at the exhaustive ring every point is present so the
   * result (value, or NaN outside the global hull) is exact by
-  * construction. Same bucket/halo shape as [[Knn.nearestBucketed]].
+  * construction. Each round gathers POINTS to the buckets that still hold
+  * unresolved cells (the cells never move), on the shared
+  * [[BucketLattice]] and its one escalation loop.
   *
   * Grid edges: points outside the grid clamp into edge buckets
-  * ([[Knn]]'s pointBucket rule), so when a ring reaches the lattice edge
-  * the gathered region extends to infinity on that side — the
+  * ([[BucketLattice.pointBucket]]), so when a ring reaches the lattice
+  * edge the gathered region extends to infinity on that side — the
   * containment proof stays sound for out-of-grid points.
   *
   * Determinism: barycentric weights are evaluated with the triangle's
@@ -660,7 +662,7 @@ object Delaunay {
         }
       }
     }
-    escalateBuckets(spark, points, ref, res)(solver)
+    gatherRounds(spark, points, ref, res)(solver)
   }
 
   /** Per-bucket cell solver: (deduped gathered points, unresolved (r,c)
@@ -705,113 +707,64 @@ object Delaunay {
         }
       }
     }
-    escalateBuckets(spark, points, ref, res)(solver)
+    gatherRounds(spark, points, ref, res)(solver)
   }
 
-  /** Ring-doubling bucketed escalation harness shared by the linear and
-    * cubic interpolators: bucket the points, and per round cogroup each
-    * unresolved bucket's cells with the points gathered from its k-ring;
-    * the solver marks each cell proven (exact vs the global mesh) or not,
-    * and unproven cells re-run with a doubled ring until the exhaustive
-    * ring (everything gathered => exact by construction). */
-  private def escalateBuckets(spark: SparkSession, points: Dataset[PtRec],
+  /** Bucketed point gather shared by the linear and cubic interpolators,
+    * run by [[BucketLattice.escalate]]: each round cogroups every bucket
+    * that still holds unresolved cells with the points gathered from its
+    * ring; the solver marks each cell proven (exact vs the global mesh) or
+    * not, and unproven cells re-run with a doubled ring until the
+    * exhaustive ring (everything gathered => exact by construction). */
+  private def gatherRounds(spark: SparkSession, points: Dataset[PtRec],
       ref: GridRef, res: Int)(solver: BucketSolver): DataFrame = {
     import spark.implicits._
-    val bucketPx = 1 << res
-    val bucketW = bucketPx * ref.cellsize
-    val nrows = ref.nrows
+    val lat = BucketLattice(ref, res)
     val ncols = ref.ncols
-    val (left, top, cs) = (ref.left, ref.top, ref.cellsize)
-    val maxCx = (ncols - 1).toLong >> res
-    val maxCy = (nrows - 1).toLong >> res
-    val maxRing = (math.max(maxCx, maxCy) + 1).toInt
-
-    def pointBucket(p: PtRec): Long = {
-      val r = math.max(0, math.min(nrows - 1, Math.rint((top - p.y) / cs - 0.5).toInt))
-      val c = math.max(0, math.min(ncols - 1, Math.rint((p.x - left) / cs - 0.5).toInt))
-      CellId.ofPixel(r.toLong, c.toLong, res)
-    }
-
-    val pts = points.map(p => (pointBucket(p), p))
-      .toDF("bucket", "p").as[(Long, PtRec)]
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    var unresolved: Dataset[(Int, Int)] = spark.range(ref.numCells).map { id =>
+    val (left, top, bucketW) = (ref.left, ref.top, lat.bucketW)
+    val delta = 1e-6 * ref.cellsize
+    val cells = spark.range(ref.numCells).map { id =>
       ((id / ncols).toInt, (id % ncols).toInt)
-    }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var out: DataFrame = Seq.empty[(Int, Int, Double)].toDF("row", "col", "v")
+    }.toDF("row", "col")
     // tiny lattices (reference-scale grids) skip escalation entirely:
     // one exhaustive round costs less than the proof/escalate machinery
-    var ring = if ((maxCx + 1) * (maxCy + 1) <= 16) maxRing else 2
-
-    var done = false
-    while (!done) {
-      // Only buckets that still hold unresolved cells need a gather this
-      // round. Without this filter every round replicates every point
-      // (2*ring+1)^2 times — quadrupling shuffle volume per escalation
-      // while the unresolved set shrinks. The distinct-bucket collect is
-      // O(#buckets with unresolved cells), bounded by the grid's bucket
-      // count (not by data volume) and monotonically shrinking; it also
-      // doubles as the loop's emptiness test (no separate count() job).
-      val needBuckets: Array[Long] = unresolved.map { case (r, c) =>
-        CellId.ofPixel(r.toLong, c.toLong, res)
-      }.distinct().collect().sorted
-      if (needBuckets.isEmpty) { done = true }
-      else {
-      val ringUsed = ring
-      val exhaustive = ringUsed >= maxRing
-      val bcNeed = spark.sparkContext.broadcast(needBuckets)
-      // points replicated to every needed bucket within the ring (clamped)
-      val gathered = pts.flatMap { case (b, p) =>
-        CellId.kRingClamped(b, ringUsed, maxCx, maxCy).iterator
-          .filter(g => java.util.Arrays.binarySearch(bcNeed.value, g) >= 0)
-          .map(g => (g, p))
-      }.toDF("bucket", "p").as[(Long, PtRec)]
-      val cellsByBucket = unresolved.map { case (r, c) =>
-        (CellId.ofPixel(r.toLong, c.toLong, res), r, c)
-      }.toDF("bucket", "row", "col").as[(Long, Int, Int)]
-
-      val resolvedRound = cellsByBucket.groupByKey(_._1)
-        .cogroup(gathered.groupByKey(_._1)) { (bucket, cellIt, ptIt) =>
-          val cells = cellIt.toArray
-          if (cells.isEmpty) Iterator.empty
-          else {
-            val ps = dedup(ptIt.map(_._2).toArray)
-            // gathered region of this bucket at ringUsed; rings touching
-            // the lattice edge extend to infinity (clamped points live in
-            // edge buckets, so everything beyond the edge was gathered)
-            val bx = CellId.cx(bucket); val by = CellId.cy(bucket)
-            val rxMin = if (bx - ringUsed <= 0) Double.NegativeInfinity
-              else left + (bx - ringUsed) * bucketW
-            val rxMax = if (bx + ringUsed >= maxCx) Double.PositiveInfinity
-              else left + (bx + ringUsed + 1) * bucketW
-            val ryMax = if (by - ringUsed <= 0) Double.PositiveInfinity
-              else top - (by - ringUsed) * bucketW
-            val ryMin = if (by + ringUsed >= maxCy) Double.NegativeInfinity
-              else top - (by + ringUsed + 1) * bucketW
-            solver(ps, cells.map(t => (t._2, t._3)),
-              (rxMin, rxMax, ryMin, ryMax), exhaustive, 1e-6 * cs)
-          }
-        }.toDF("row", "col", "v", "proven")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-      import org.apache.spark.sql.functions._
-      val provenInc = resolvedRound.filter($"proven")
-        .select($"row", $"col", $"v").localCheckpoint(true)
-      val nextUnresolved =
-        if (exhaustive) spark.emptyDataset[(Int, Int)]
-        else resolvedRound.filter(!$"proven")
-          .select($"row", $"col").as[(Int, Int)].localCheckpoint(true)
-      resolvedRound.unpersist()
-      unresolved.unpersist()
-      bcNeed.destroy()
-      out = out.unionByName(provenInc)
-      unresolved = nextUnresolved
-      ring = ring * 2
-      }
+    val firstRing =
+      if ((lat.maxCx + 1) * (lat.maxCy + 1) <= 16) lat.maxRing else 2
+    lat.escalate(spark, points, firstRing,
+      Seq.empty[(Int, Int, Double)].toDF("row", "col", "v"), cells) {
+      (open, need, byBucket, ring, exhaustive) =>
+        // points go only to buckets that still hold unresolved cells:
+        // without this filter every round replicates every point
+        // (2*ring+1)^2 times while the unresolved set shrinks
+        val gathered = byBucket.flatMap { case (b, p) =>
+          lat.ring(b, ring).iterator
+            .filter(g => java.util.Arrays.binarySearch(need.value, g) >= 0)
+            .map(g => (g, p))
+        }
+        val cellsByBucket = open.select($"row", $"col").as[(Int, Int)]
+          .map { case (r, c) => (lat.cellBucket(r, c), r, c) }
+        cellsByBucket.groupByKey(_._1)
+          .cogroup(gathered.groupByKey(_._1)) { (bucket, cellIt, ptIt) =>
+            val cells = cellIt.toArray
+            if (cells.isEmpty) Iterator.empty
+            else {
+              val ps = dedup(ptIt.map(_._2).toArray)
+              // gathered region of this bucket at `ring`; rings touching
+              // the lattice edge extend to infinity (clamped points live in
+              // edge buckets, so everything beyond the edge was gathered)
+              val bx = CellId.cx(bucket); val by = CellId.cy(bucket)
+              val rxMin = if (bx - ring <= 0) Double.NegativeInfinity
+                else left + (bx - ring) * bucketW
+              val rxMax = if (bx + ring >= lat.maxCx) Double.PositiveInfinity
+                else left + (bx + ring + 1) * bucketW
+              val ryMax = if (by - ring <= 0) Double.PositiveInfinity
+                else top - (by - ring) * bucketW
+              val ryMin = if (by + ring >= lat.maxCy) Double.NegativeInfinity
+                else top - (by + ring + 1) * bucketW
+              solver(ps, cells.map(t => (t._2, t._3)),
+                (rxMin, rxMax, ryMin, ryMax), exhaustive, delta)
+            }
+          }.toDF("row", "col", "v", "proven")
     }
-    unresolved.unpersist()
-    pts.unpersist()
-    out
   }
 }

@@ -2,32 +2,140 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.storage.StorageLevel
 import graft.core._
 
 /** Scattered point record for kNN interpolation. */
 final case class PtRec(pid: Long, x: Double, y: Double, v: Double)
 
-/** kNN / scattered->grid interpolation join (reference `point_interpolate`
-  * method='nearest' = scipy cKDTree 1-NN, Raster.py:409-429; `grid_interpolate`
-  * Raster.py:431-455 is the same with exploded tile centroids as points).
+/** The bucket lattice every bucketed interpolator works on: `ref`'s grid
+  * cut into square buckets of 2^res pixels, addressed by [[CellId]] at
+  * resolution `res`. A point belongs to the bucket of the pixel it falls
+  * in, clamped to the grid, so points outside the grid live in edge
+  * buckets and a ring that reaches the lattice edge has gathered
+  * everything beyond it. The k-nearest ring guards and Delaunay's
+  * circumcircle-containment proof both rest on this rule.
   *
-  * Two physical strategies, identical semantics (ties -> lowest point id):
-  *  - `nearestBrute`: crossJoin + min-by window. Exact; O(cells x points);
-  *    the small-scale oracle path.
-  *  - `nearestBucketed`: the SCALE path per the north star — fully
-  *    distributed, NO driver collect of the point set at any stage:
-  *    pass 1 replicates points to a k-ring halo of their Z-order bucket and
-  *    cogroups target cells with candidates (per-partition k-d tree);
-  *    cells whose best hit cannot be PROVEN nearest (d > ringK*bucketWidth:
-  *    a closer point could hide outside the halo) escalate to
-  *    QUERY-replication passes — each unresolved cell ships a tiny
-  *    (row, col) descriptor to exactly the ring of buckets its own distance
-  *    bound requires (ring = ceil(d/bucketWidth)), the per-bucket best hits
-  *    are min-merged by (d2, pid). Cells with NO pass-1 candidate loop with
-  *    a doubling ring until one is found (bounded by the grid's bucket
-  *    diameter, at which point the search is exhaustive and uncondition-
-  *    ally exact). Unresolved counts shrink geometrically with point
-  *    density, so the escalation traffic is a vanishing fraction of pass 1.
+  * [[escalate]] is the one ring-escalation loop; each interpolator
+  * supplies only its round. */
+final case class BucketLattice(ref: GridRef, res: Int) {
+  private val left = ref.left
+  private val top = ref.top
+  private val cs = ref.cellsize
+
+  /** Bucket side in map units. */
+  val bucketW: Double = (1 << res) * cs
+  /** Largest bucket coordinates: rings clamp to [0, maxCx] x [0, maxCy]. */
+  val maxCx: Long = (ref.ncols - 1).toLong >> res
+  val maxCy: Long = (ref.nrows - 1).toLong >> res
+  /** The ring that reaches every bucket from any bucket: a search at this
+    * ring has seen every point, so its answer is exact by construction. */
+  val maxRing: Int = (math.max(maxCx, maxCy) + 1).toInt
+
+  def cellBucket(row: Int, col: Int): Long =
+    CellId.ofPixel(row.toLong, col.toLong, res)
+
+  /** Bucket of the pixel `p` falls in, clamped to the grid. */
+  def pointBucket(p: PtRec): Long = {
+    val r = math.max(0, math.min(ref.nrows - 1, Math.rint((top - p.y) / cs - 0.5).toInt))
+    val c = math.max(0, math.min(ref.ncols - 1, Math.rint((p.x - left) / cs - 0.5).toInt))
+    cellBucket(r, c)
+  }
+
+  /** Map coordinates of a cell centre. */
+  def centreX(col: Int): Double = left + (col + 0.5) * cs
+  def centreY(row: Int): Double = top - (row + 0.5) * cs
+
+  /** Buckets within Chebyshev ring `k` of `bucket`, clamped to the lattice
+    * (near the exhaustive bound an unclamped ring is mostly addresses
+    * outside the grid: shuffle volume that buys nothing). */
+  def ring(bucket: Long, k: Int): Array[Long] =
+    CellId.kRingClamped(bucket, k, maxCx, maxCy)
+
+  /** The ring-escalation loop. `open` holds the cells still unresolved
+    * (row, col, plus whatever its round carries); `settled` the cells
+    * already final. Each round gets the open cells, the sorted buckets
+    * they fall in, the points keyed by their own bucket, the ring and
+    * whether that ring is exhaustive, and returns one row per open cell
+    * with a boolean `proven` column. Proven rows, in `settled`'s columns,
+    * join the result; the rest stay open. The ring starts at `firstRing`
+    * and doubles; a round at [[maxRing]] has seen every point and is the
+    * last, so it must prove every cell that has an answer.
+    *
+    * Each increment and each open set is a lineage-cut local checkpoint,
+    * so a long run neither replays a deep lazy union nor keeps dead
+    * rounds cached; each round's cache and the bucketed points are
+    * released in `finally`. The emptiness test is one collect of the open
+    * buckets, which the Delaunay gather also needs. */
+  def escalate(spark: SparkSession, points: Dataset[PtRec], firstRing: Int,
+      settled: DataFrame, open: DataFrame)(round: BucketLattice.Round): DataFrame = {
+    import spark.implicits._
+    val outCols = settled.columns.map(col)
+    // built on the first round only: a call that proves everything in
+    // pass 1 never keys the points
+    lazy val byBucket = points.map(p => (pointBucket(p), p))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    def bucketsOf(cells: DataFrame): Array[Long] =
+      cells.select($"row", $"col").as[(Int, Int)]
+        .map { case (r, c) => cellBucket(r, c) }.distinct().collect().sorted
+    var out = settled
+    var live = open
+    var need = bucketsOf(live)
+    var ring = firstRing
+    var rounds = 0
+    try {
+      while (need.nonEmpty) {
+        rounds += 1
+        val exhaustive = ring >= maxRing
+        val bcNeed = spark.sparkContext.broadcast(need)
+        val solved = round(live, bcNeed, byBucket, ring, exhaustive)
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        try {
+          out = out.unionByName(
+            solved.filter($"proven").select(outCols: _*).localCheckpoint(true))
+          if (!exhaustive) live = solved.filter(!$"proven").localCheckpoint(true)
+        } finally {
+          solved.unpersist()
+          bcNeed.destroy()
+        }
+        need = if (exhaustive) Array.empty else bucketsOf(live)
+        ring *= 2
+      }
+    } finally if (rounds > 0) byBucket.unpersist()
+    out
+  }
+}
+
+object BucketLattice {
+
+  /** One escalation round: (open cells, their sorted buckets, points keyed
+    * by their own bucket, ring, exhaustive?) => one row per open cell with
+    * a boolean `proven` column. */
+  type Round = (DataFrame, Broadcast[Array[Long]], Dataset[(Long, PtRec)],
+    Int, Boolean) => DataFrame
+}
+
+/** Scattered->grid k-nearest interpolation: the reference's
+  * `point_interpolate` method='nearest' (scipy cKDTree 1-NN,
+  * Raster.py:409-429; `grid_interpolate`, Raster.py:431-455, is the same
+  * with exploded tile centroids as points), and IDW over the exact k
+  * nearest. Ties go to the lowest point id everywhere.
+  *
+  *  - `nearestBrute` / `idwBrute`: exact all-pairs oracles for tests and
+  *    tiny point sets.
+  *  - `nearestBucketed` / `idwBucketed`: shells over one exact k-nearest
+  *    solver that never collects the point set to the driver. Pass 1
+  *    replicates points to a ringK halo of their bucket and cogroups the
+  *    target cells with those candidates (per-bucket k-d tree); a cell
+  *    whose k-th distance lies inside the halo is proven. The others
+  *    escalate through [[BucketLattice.escalate]] by QUERY replication:
+  *    each ships a tiny (row, col) descriptor to exactly the ring its own
+  *    k-th distance requires (ceil(d/bucketWidth)), and per-bucket
+  *    partials are merged by (d2, pid). Cells with fewer than k candidates
+  *    probe the loop's doubling ring, which at the lattice diameter is
+  *    exhaustive. Open counts shrink geometrically with point density, so
+  *    escalation traffic is a vanishing fraction of pass 1.
   */
 object Knn {
 
@@ -49,8 +157,9 @@ object Knn {
       .select($"row", $"col", $"best.v".as("v"), $"best.pid".as("pid"))
   }
 
-  /** A pass-1 result: best-so-far for a cell, plus whether it is PROVEN
-    * nearest. pid = -1 marks "no candidate found yet" (d2 = +Inf).
+  /** A cell's state in the k-nearest solver: proven rows carry the final
+    * (v, pid); open rows carry their k-th distance `d2` as the bound of
+    * the ring they need next (+Inf with fewer than k candidates).
     * (Public: codegen'd predicates instantiate the class from generated
     * Java — a private case class forces interpreted fallback.) */
   final case class Hit(row: Int, col: Int, v: Double, pid: Long,
@@ -59,342 +168,145 @@ object Knn {
   /** An escalation query shipped to one point-bucket. */
   final case class Query(bucket: Long, row: Int, col: Int, ring: Int)
 
-  /** Scale path: bucketed halo join + per-bucket k-d tree; exactness
-    * restored by distributed query-replication escalation (see object doc).
-    * `res` = bucket resolution in pixels (bucket side = 2^res pixels).
+  /** point_interpolate method='nearest' onto `ref`: (row, col, v, pid) of
+    * each cell's nearest point. `res` = bucket resolution in pixels
+    * (bucket side = 2^res pixels); `ringK` = pass-1 halo in buckets.
     * `targets` restricts the query side to a (row, col) subset — the
     * footprint-repair case (r60 remove_block): cost then scales with the
     * subset, not the grid area; None queries every cell of `ref`. */
   def nearestBucketed(spark: SparkSession, points: Dataset[PtRec],
       ref: GridRef, res: Int, ringK: Int = 1,
-      targets: Option[DataFrame] = None): DataFrame = {
-    import spark.implicits._
-    val bucketPx = 1 << res
-    val bucketW = bucketPx * ref.cellsize
-    val guard2 = (ringK * bucketW) * (ringK * bucketW) // provable radius^2
-    val nrows = ref.nrows
-    val ncols = ref.ncols
-    val (left, top, cs) = (ref.left, ref.top, ref.cellsize)
-    // ring that covers EVERY bucket of the grid from any cell: beyond this
-    // the search is exhaustive and the best candidate is exact by fiat
-    val maxRing = math.max((nrows + bucketPx - 1) / bucketPx,
-      (ncols + bucketPx - 1) / bucketPx)
-    // valid bucket lattice — rings are clamped to it so escalation on
-    // sparse point sets never ships queries to nonexistent buckets
-    val maxCx = (ncols - 1).toLong >> res
-    val maxCy = (nrows - 1).toLong >> res
+      targets: Option[DataFrame] = None): DataFrame =
+    kNearest(spark, points, BucketLattice(ref, res), ringK, 1, targets) {
+      best => (best(0)._2, best(0)._1)
+    }
 
-    def pointBucket(p: PtRec): Long = {
-      val r = math.max(0, math.min(nrows - 1, Math.rint((top - p.y) / cs - 0.5).toInt))
-      val c = math.max(0, math.min(ncols - 1, Math.rint((p.x - left) / cs - 0.5).toInt))
-      CellId.ofPixel(r.toLong, c.toLong, res)
+  /** IDW interpolation over the EXACT k nearest points: (row, col, v). The
+    * reference's point_interpolate non-nearest methods are Delaunay
+    * linear/cubic (scipy griddata, Raster.py:421-426); IDW is the
+    * standardized scattered-field variant promised in SURVEY §2.3 J5.
+    * Weight 1/d^power; d == 0 snaps to that point's value (lowest pid on
+    * ties); the k-set boundary ties by (d2, pid). */
+  def idwBucketed(spark: SparkSession, points: Dataset[PtRec], ref: GridRef,
+      res: Int, k: Int, power: Double = 2.0): DataFrame =
+    kNearest(spark, points, BucketLattice(ref, res), 1, k, None) {
+      best => (idwOf(best, power), 0L)
+    }.select("row", "col", "v")
+
+  private def idwOf(best: Array[(Long, Double, Double)], power: Double): Double = {
+    val zero = best.filter(_._3 == 0.0)
+    if (zero.nonEmpty) zero.minBy(_._1)._2
+    else {
+      var num = 0.0; var den = 0.0
+      best.foreach { case (_, v, d2) =>
+        val w = 1.0 / math.pow(d2, power / 2.0)
+        num += w * v; den += w
+      }
+      num / den
+    }
+  }
+
+  /** The exact k-nearest solver: each queried cell's k nearest points
+    * ((pid, v, d2) ordered by (d2, pid); fewer only when the whole point
+    * set is smaller), reduced by `combine` to the cell's (v, pid).
+    * Returns (row, col, v, pid). Its kernels emit flat [[Hit]] rows; no
+    * per-cell array crosses a shuffle. */
+  private def kNearest(spark: SparkSession, points: Dataset[PtRec],
+      lat: BucketLattice, ringK: Int, k: Int, targets: Option[DataFrame])(
+      combine: Array[(Long, Double, Double)] => (Double, Long)): DataFrame = {
+    import spark.implicits._
+    val (nrows, ncols) = (lat.ref.nrows, lat.ref.ncols)
+
+    def hit(r: Int, c: Int, best: Array[(Long, Double, Double)],
+        proven: Double => Boolean): Hit = {
+      val dk = if (best.length == k) best.last._3 else Double.PositiveInfinity
+      if (best.nonEmpty && proven(dk)) {
+        val (v, pid) = combine(best)
+        Hit(r, c, v, pid, dk, proven = true)
+      } else Hit(r, c, Double.NaN, -1L, dk, proven = false)
     }
 
     // ---- pass 1: point-replication halo cogroup --------------------------
+    val guard2 = (ringK * lat.bucketW) * (ringK * lat.bucketW)
     val candidates = points.flatMap { p =>
-      CellId.kRingClamped(pointBucket(p), ringK, maxCx, maxCy).map(b => (b, p))
-    }.toDF("bucket", "p").as[(Long, PtRec)]
-
+      lat.ring(lat.pointBucket(p), ringK).map(b => (b, p))
+    }
     val cells = targets match {
       case Some(t) =>
-        t.select(col("row").cast("int"), col("col").cast("int"))
-          .as[(Int, Int)]
-          .map { case (r0, c0) =>
-            require(r0 >= 0 && r0 < nrows && c0 >= 0 && c0 < ncols,
-              s"nearestBucketed: target ($r0, $c0) outside the $nrows x $ncols grid")
-            (CellId.ofPixel(r0.toLong, c0.toLong, res), r0, c0)
-          }.toDF("bucket", "row", "col").as[(Long, Int, Int)]
+        t.select(col("row").cast("int"), col("col").cast("int")).as[(Int, Int)]
+          .map { case (r, c) =>
+            require(r >= 0 && r < nrows && c >= 0 && c < ncols,
+              s"nearestBucketed: target ($r, $c) outside the $nrows x $ncols grid")
+            (lat.cellBucket(r, c), r, c)
+          }
       case None =>
-        spark.range(ref.numCells).map { id =>
-          val row = (id / ncols).toInt
-          val col = (id % ncols).toInt
-          (CellId.ofPixel(row.toLong, col.toLong, res), row, col)
-        }.toDF("bucket", "row", "col").as[(Long, Int, Int)]
+        spark.range(lat.ref.numCells).map { id =>
+          val r = (id / ncols).toInt
+          val c = (id % ncols).toInt
+          (lat.cellBucket(r, c), r, c)
+        }
     }
-
+    // a lazy local checkpoint, not a cache: the escalation loop's emptiness
+    // collect materializes it in full, and the proven leg of the result
+    // reads it on the caller's action
     val p1 = cells.groupByKey(_._1).cogroup(candidates.groupByKey(_._1)) {
       (_, cellIt, candIt) =>
-        val cs0 = cellIt.toArray
-        if (cs0.isEmpty) Iterator.empty
+        val cs = cellIt.toArray
+        if (cs.isEmpty) Iterator.empty
         else {
           val pts = candIt.map(_._2).toArray.distinct
-          val localTree =
-            if (pts.isEmpty) null
-            else KdTree.build(pts.map(p => (p.pid, p.x, p.y, p.v)))
-          cs0.iterator.map { case (_, r, c) =>
-            val cx = left + (c + 0.5) * cs
-            val cy = top - (r + 0.5) * cs
-            if (localTree == null)
-              Hit(r, c, Double.NaN, -1L, Double.PositiveInfinity, proven = false)
-            else {
-              val (pid, v, d2) = localTree.nearest(cx, cy)
-              // STRICT: an unexamined point one bucket outside the ring
-              // can sit at exactly ringK*bucketW and win the lowest-pid
-              // tie — equality must escalate, not prove
-              Hit(r, c, v, pid, d2, proven = d2 < guard2)
-            }
+          val tree = KdTree.build(pts.map(p => (p.pid, p.x, p.y, p.v)))
+          // strict: pass 1 proves only inside the guard; escalation
+          // rounds prove at equality (margin argument below)
+          cs.iterator.map { case (_, r, c) =>
+            hit(r, c, tree.knn(lat.centreX(c), lat.centreY(r), k), _ < guard2)
           }
         }
-    }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }.toDF().localCheckpoint(eager = false)
 
-    var out: DataFrame = p1.filter(_.proven).toDF()
-      .select($"row", $"col", $"v", $"pid")
-
-    // ---- escalation: query-replication passes ----------------------------
-    // points keyed ONCE by their own bucket (replication factor 1)
-    lazy val ptsByBucket = points.map(p => (pointBucket(p), p))
-      .toDF("bucket", "p").as[(Long, PtRec)]
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    var unresolved = p1.filter(h => !h.proven)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var escalated = false
-    var ring = math.max(2 * ringK, 2)
-    // count() (one job) not isEmpty (take(1) = staged multi-job scan
-    // when the set IS empty, the common dense case)
-    while (unresolved.count() > 0) {
-      escalated = true
-      val ringUsed = ring
-      val exhaustive = ringUsed >= maxRing
-      // cells WITH a bound query exactly the ring their bound requires
-      // (guaranteed proven this pass); boundless cells probe `ringUsed`.
-      // Rings clamp to the bucket lattice: near the exhaustive bound an
-      // unclamped ring is mostly out-of-grid addresses — shuffle volume
-      // that buys nothing (empty buckets return sentinels).
-      val queries = unresolved.flatMap { h =>
-        val bkt = CellId.ofPixel(h.row.toLong, h.col.toLong, res)
-        val need =
-          if (h.pid >= 0) math.min(maxRing,
-            math.max(1, math.ceil(math.sqrt(h.d2) / bucketW).toInt))
-          else math.min(maxRing, ringUsed)
-        CellId.kRingClamped(bkt, need, maxCx, maxCy).iterator
+    // ---- escalation: query-replication rounds ----------------------------
+    lat.escalate(spark, points, math.max(2 * ringK, 2),
+      p1.filter($"proven").select($"row", $"col", $"v", $"pid"),
+      p1.filter(!$"proven")) { (open, _, byBucket, ring, exhaustive) =>
+      // a cell with a bound queries exactly the ring that bound requires,
+      // so it settles this round; a boundless cell probes `ring`
+      val queries = open.as[Hit].flatMap { h =>
+        val need = math.min(lat.maxRing,
+          if (h.d2.isInfinite) ring
+          else math.max(1, math.ceil(math.sqrt(h.d2) / lat.bucketW).toInt))
+        lat.ring(lat.cellBucket(h.row, h.col), need).iterator
           .map(b => Query(b, h.row, h.col, need))
       }
-      // every query emits a row even when its bucket holds no points
-      // (d2 = +Inf sentinel), so empty-ring cells stay in the loop
-      val perBucket = queries.groupByKey(_.bucket)
-        .cogroup(ptsByBucket.groupByKey(_._1)) { (_, qIt, pIt) =>
-          val qs = qIt.toArray
-          if (qs.isEmpty) Iterator.empty
-          else {
-            val pts = pIt.map(_._2).toArray
-            val tree =
-              if (pts.isEmpty) null
-              else KdTree.build(pts.map(p => (p.pid, p.x, p.y, p.v)))
-            qs.iterator.map { q =>
-              if (tree == null)
-                (q.row, q.col, q.ring, Double.NaN, -1L, Double.PositiveInfinity)
-              else {
-                val cx = left + (q.col + 0.5) * cs
-                val cy = top - (q.row + 0.5) * cs
-                val (pid, v, d2) = tree.nearest(cx, cy)
-                (q.row, q.col, q.ring, v, pid, d2)
-              }
-            }
-          }
-        }.toDF("row", "col", "ring", "v", "pid", "d2")
-      val best = perBucket.groupBy($"row", $"col")
-        .agg(min_by(struct($"v", $"pid", $"d2", $"ring"),
-          struct($"d2", $"pid")).as("b"))
-        .select($"row", $"col", $"b.v".as("v"), $"b.pid".as("pid"),
-          $"b.d2".as("d2"), $"b.ring".as("ring"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // proven: found within the searched ring's guard (cells that queried
-      // their own bound-derived ring always pass — the true nearest cannot
-      // lie outside that ring), or the search was exhaustive.
-      // Boundary-tie soundness of `<=`: queries are CELL CENTERS, which
-      // sit at least cellsize/2 inside their bucket on every axis, so any
-      // UNEXAMINED point (bucket Chebyshev >= ring+1) is at distance
-      // >= ring*bucketW + cellsize/2 — STRICTLY beyond the guard. A
-      // candidate at exactly ring*bucketW can therefore never be tied by
-      // a hidden lower-pid point; equality proves. (Pass 1's strict `<`
-      // is belt-and-braces, not a requirement of this geometry.)
-      val provenCond =
-        ($"pid" >= 0) && ($"d2" <= ($"ring" * bucketW) * ($"ring" * bucketW) ||
-          lit(exhaustive))
-      // Both derivations of `best` are materialized as lineage-cut local
-      // checkpoints, then the round's working caches are RELEASED — a long
-      // ring-doubling run otherwise fills executor storage with dead
-      // round-(N-1) frames and the final action replays a deep lazy union.
-      val provenInc = best.filter(provenCond)
-        .select($"row", $"col", $"v", $"pid").localCheckpoint(true)
-      val nextUnresolved =
-        if (exhaustive) spark.emptyDataset[Hit]
-        else best.filter(!provenCond && $"pid" >= 0 || $"pid" < 0)
-          .select($"row", $"col", $"v", $"pid", $"d2")
-          .withColumn("proven", lit(false)).as[Hit].localCheckpoint(true)
-      best.unpersist()
-      unresolved.unpersist()
-      out = out.unionByName(provenInc)
-      unresolved = nextUnresolved
-      ring = ring * 2
-    }
-    unresolved.unpersist() // final (empty) round cache
-    if (escalated) ptsByBucket.unpersist() // loop-only input; increments are checkpointed
-    // p1 stays cached: the pass-1 proven leg of `out` reads it lazily on
-    // the caller's action; it evicts LRU / dies with the session
-    out
-  }
-
-  /** IDW interpolation over the EXACT k nearest points. The reference's
-    * point_interpolate non-nearest methods are Delaunay linear/cubic
-    * (scipy griddata, Raster.py:421-426) — triangulation does not
-    * distribute; IDW is the standardized scattered-field variant promised
-    * in SURVEY §2.3 J5. Weight 1/d^power; d == 0 snaps to that point's
-    * value (lowest pid on ties); the k-set boundary ties by (d2, pid).
-    * Same fully-distributed shape as [[nearestBucketed]]: halo cogroup,
-    * then query-replication escalation until the k-th distance is provably
-    * inside the searched ring. */
-  def idwBucketed(spark: SparkSession, points: Dataset[PtRec], ref: GridRef,
-      res: Int, k: Int, power: Double = 2.0, ringK: Int = 1): DataFrame = {
-    import spark.implicits._
-    val bucketPx = 1 << res
-    val bucketW = bucketPx * ref.cellsize
-    val guard2 = (ringK * bucketW) * (ringK * bucketW)
-    val nrows = ref.nrows
-    val ncols = ref.ncols
-    val (left, top, cs) = (ref.left, ref.top, ref.cellsize)
-    val maxRing = math.max((nrows + bucketPx - 1) / bucketPx,
-      (ncols + bucketPx - 1) / bucketPx)
-    val maxCx = (ncols - 1).toLong >> res
-    val maxCy = (nrows - 1).toLong >> res
-
-    def pointBucket(p: PtRec): Long = {
-      val r = math.max(0, math.min(nrows - 1, Math.rint((top - p.y) / cs - 0.5).toInt))
-      val c = math.max(0, math.min(ncols - 1, Math.rint((p.x - left) / cs - 0.5).toInt))
-      CellId.ofPixel(r.toLong, c.toLong, res)
-    }
-    /** combine a cell's (pid, v, d2) list -> IDW value. */
-    def idwOf(best: Array[(Long, Double, Double)]): Double = {
-      val zero = best.filter(_._3 == 0.0)
-      if (zero.nonEmpty) zero.minBy(_._1)._2
-      else {
-        var num = 0.0; var den = 0.0
-        best.foreach { case (_, v, d2) =>
-          val w = 1.0 / math.pow(d2, power / 2.0)
-          num += w * v; den += w
-        }
-        num / den
-      }
-    }
-
-    val candidates = points.flatMap { p =>
-      CellId.kRingClamped(pointBucket(p), ringK, maxCx, maxCy).map(b => (b, p))
-    }.toDF("bucket", "p").as[(Long, PtRec)]
-    val cells = spark.range(ref.numCells).map { id =>
-      val row = (id / ncols).toInt
-      val col = (id % ncols).toInt
-      (CellId.ofPixel(row.toLong, col.toLong, res), row, col)
-    }.toDF("bucket", "row", "col").as[(Long, Int, Int)]
-
-    // pass 1: proven cells emit their IDW value; rest carry the k-th bound
-    val p1 = cells.groupByKey(_._1).cogroup(candidates.groupByKey(_._1)) {
-      (_, cellIt, candIt) =>
-        val cs0 = cellIt.toArray
-        if (cs0.isEmpty) Iterator.empty
-        else {
-          val pts = candIt.map(_._2).toArray.distinct
-          val tree =
-            if (pts.isEmpty) null
-            else KdTree.build(pts.map(p => (p.pid, p.x, p.y, p.v)))
-          cs0.iterator.map { case (_, r, c) =>
-            val cx = left + (c + 0.5) * cs
-            val cy = top - (r + 0.5) * cs
-            if (tree == null)
-              Hit(r, c, Double.NaN, -1L, Double.PositiveInfinity, proven = false)
-            else {
-              val best = tree.knn(cx, cy, k)
-              val dk = best.last._3
-              // strict, same boundary-tie rule as nearestBucketed
-              if (best.length == k && dk < guard2)
-                Hit(r, c, idwOf(best), 0L, dk, proven = true)
-              else Hit(r, c, Double.NaN,
-                if (best.length == k) 0L else -1L,
-                if (best.length == k) dk else Double.PositiveInfinity,
-                proven = false)
-            }
-          }
-        }
-    }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    var out: DataFrame = p1.filter(_.proven).toDF().select($"row", $"col", $"v")
-    lazy val ptsByBucket = points.map(p => (pointBucket(p), p))
-      .toDF("bucket", "p").as[(Long, PtRec)]
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var unresolved = p1.filter(h => !h.proven)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var escalated = false
-    var ring = math.max(2 * ringK, 2)
-    // count() (one job) not isEmpty (take(1) = staged multi-job scan
-    // when the set IS empty, the common dense case)
-    while (unresolved.count() > 0) {
-      escalated = true
-      val ringUsed = ring
-      val exhaustive = ringUsed >= maxRing
-      val queries = unresolved.flatMap { h =>
-        val bkt = CellId.ofPixel(h.row.toLong, h.col.toLong, res)
-        val need =
-          if (h.pid >= 0) math.min(maxRing,
-            math.max(1, math.ceil(math.sqrt(h.d2) / bucketW).toInt))
-          else math.min(maxRing, ringUsed)
-        CellId.kRingClamped(bkt, need, maxCx, maxCy).iterator
-          .map(b => Query(b, h.row, h.col, need))
-      }
-      // per-bucket k-best partials (points keyed by OWN bucket: no dups)
+      // every query answers, with a (pid -1, d2 +Inf) sentinel when its
+      // bucket holds no points, so a cell whose ring is empty stays open
       val partials = queries.groupByKey(_.bucket)
-        .cogroup(ptsByBucket.groupByKey(_._1)) { (_, qIt, pIt) =>
+        .cogroup(byBucket.groupByKey(_._1)) { (_, qIt, pIt) =>
           val qs = qIt.toArray
           if (qs.isEmpty) Iterator.empty
           else {
-            val pts = pIt.map(_._2).toArray
-            if (pts.isEmpty)
-              qs.iterator.map(q => (q.row, q.col, q.ring, -1L, Double.NaN,
-                Double.PositiveInfinity))
-            else {
-              val tree = KdTree.build(pts.map(p => (p.pid, p.x, p.y, p.v)))
-              qs.iterator.flatMap { q =>
-                val cx = left + (q.col + 0.5) * cs
-                val cy = top - (q.row + 0.5) * cs
-                tree.knn(cx, cy, k).iterator
-                  .map(b => (q.row, q.col, q.ring, b._1, b._2, b._3))
-              }
+            val tree = KdTree.build(pIt.map { case (_, p) => (p.pid, p.x, p.y, p.v) }.toArray)
+            qs.iterator.flatMap { q =>
+              val best = tree.knn(lat.centreX(q.col), lat.centreY(q.row), k)
+              if (best.isEmpty)
+                Iterator.single((q.row, q.col, q.ring, -1L, Double.NaN, Double.PositiveInfinity))
+              else best.iterator.map(b => (q.row, q.col, q.ring, b._1, b._2, b._3))
             }
           }
         }
-      // merge partials per cell, prove, emit IDW
-      val merged = partials.groupByKey(t => (t._1, t._2)).mapGroups {
-        (key: (Int, Int), it: Iterator[(Int, Int, Int, Long, Double, Double)]) =>
-          val (r, c) = key
-          val all = it.toArray
-          val ringQ = all.head._3
-          val best = all.filter(_._4 >= 0).map(t => (t._4, t._5, t._6))
-            .sortBy(t => (t._3, t._1)).take(k)
-          val dk = if (best.length == k) best.last._3 else Double.PositiveInfinity
-          val g = ringQ.toDouble * bucketW
-          // `<=` boundary-tie soundness: same cell-center margin lemma as
-          // nearestBucketed's provenCond — unexamined points sit at
-          // >= g + cellsize/2, strictly beyond a k-th neighbor at exactly g
-          if (best.nonEmpty && (dk <= g * g || exhaustive))
-            (r, c, idwOf(best), 0L, dk, true)
-          else (r, c, Double.NaN, if (best.length == k) 0L else -1L, dk, false)
-      }.toDF("row", "col", "v", "pid", "d2", "proven")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // materialize both derivations (lineage-cut), release round caches
-      // (same storage-hygiene contract as nearestBucketed)
-      val provenInc = merged.filter($"proven")
-        .select($"row", $"col", $"v").localCheckpoint(true)
-      val nextUnresolved =
-        if (exhaustive) spark.emptyDataset[Hit]
-        else merged.filter(!$"proven").as[Hit].localCheckpoint(true)
-      merged.unpersist()
-      unresolved.unpersist()
-      out = out.unionByName(provenInc)
-      unresolved = nextUnresolved
-      ring = ring * 2
+      // proven: the k-th neighbour lies within the searched ring's guard,
+      // or the search was exhaustive. `<=` is sound because queries are
+      // cell centres, at least cellsize/2 inside their bucket on every
+      // axis: any unexamined point (bucket Chebyshev >= ring+1) is at
+      // distance >= ring*bucketW + cellsize/2, strictly beyond the guard,
+      // so it cannot tie a neighbour at exactly ring*bucketW.
+      partials.groupByKey(t => (t._1, t._2)).mapGroups { (rc, it) =>
+        val all = it.toArray
+        val g = all.head._3 * lat.bucketW
+        val best = all.filter(_._4 >= 0).map(t => (t._4, t._5, t._6))
+          .sortBy(t => (t._3, t._1)).take(k)
+        hit(rc._1, rc._2, best, dk => dk <= g * g || exhaustive)
+      }.toDF()
     }
-    unresolved.unpersist()
-    if (escalated) ptsByBucket.unpersist()
-    out
   }
 
   /** Brute-exact IDW (oracle path). */
@@ -428,16 +340,13 @@ object Knn {
 
 /** grid_interpolate (reference Raster.py:431-455): source GRID cells become
   * the scattered points (NaN sources dropped, ids = row-major pixel index
-  * for the deterministic tie-break), then the same kNN machinery fills the
-  * target grid. */
+  * for the deterministic tie-break), which any point interpolator then
+  * places on the target grid ([[graft.Raster.gridInterpolate]]). */
 object GridInterpolate {
-  import org.apache.spark.sql.DataFrame
-  import graft.core._
 
   /** Non-NaN source cells as scattered points; pid = row-major pixel
     * index (the deterministic tie-break shared by every variant). */
-  def explodeCells(srcTiles: org.apache.spark.sql.Dataset[Tile],
-      srcRef: GridRef): org.apache.spark.sql.Dataset[PtRec] = {
+  def explodeCells(srcTiles: Dataset[Tile], srcRef: GridRef): Dataset[PtRec] = {
     import srcTiles.sparkSession.implicits._
     srcTiles.flatMap { t =>
       val out = Iterator.newBuilder[PtRec]
@@ -455,33 +364,4 @@ object GridInterpolate {
       out.result()
     }
   }
-
-  def nearest(srcTiles: org.apache.spark.sql.Dataset[Tile], srcRef: GridRef,
-      targetRef: GridRef, res: Int): DataFrame =
-    Knn.nearestBucketed(srcTiles.sparkSession,
-      explodeCells(srcTiles, srcRef), targetRef, res, ringK = 1)
-
-  /** grid_interpolate method='linear' (Raster.py:431-455): the source
-    * grid's cells become the Delaunay sites; same exactness machinery as
-    * [[Delaunay.linearBucketed]]. */
-  def linear(srcTiles: org.apache.spark.sql.Dataset[Tile], srcRef: GridRef,
-      targetRef: GridRef, res: Int): DataFrame =
-    Delaunay.linearBucketed(srcTiles.sparkSession,
-      explodeCells(srcTiles, srcRef), targetRef, res)
-
-  /** grid_interpolate method='cubic' (Raster.py:431-455): reduced
-    * Clough-Tocher C1 cubic over the exploded-cell sites. */
-  def cubic(srcTiles: org.apache.spark.sql.Dataset[Tile], srcRef: GridRef,
-      targetRef: GridRef, res: Int): DataFrame =
-    Delaunay.cubicBucketed(srcTiles.sparkSession,
-      explodeCells(srcTiles, srcRef), targetRef, res)
-
-  /** grid_interpolate with the IDW variant: same exploded-cell point feed
-    * through [[Knn.idwBucketed]] (the engine's standardized scattered-
-    * field alternative alongside nearest/linear, SURVEY §7.5). */
-  def idw(srcTiles: org.apache.spark.sql.Dataset[Tile], srcRef: GridRef,
-      targetRef: GridRef, res: Int, k: Int, power: Double = 2.0)
-      : org.apache.spark.sql.DataFrame =
-    Knn.idwBucketed(srcTiles.sparkSession,
-      explodeCells(srcTiles, srcRef), targetRef, res, k, power)
 }

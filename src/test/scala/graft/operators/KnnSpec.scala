@@ -106,8 +106,9 @@ class KnnSpec extends AnyFunSuite {
     val got = Knn.nearestBucketed(spark, pts, Synth.knnRef, res = 5, ringK = 1)
     assert(got.count() == Synth.knnRef.numCells)
     val after = spark.sparkContext.getPersistentRDDs.size
-    // p1 + one checkpointed increment per escalation round (<= log2(maxRing)
-    // + 2 rounds); superseded best/unresolved/ptsByBucket must be gone
+    // pass 1's lazy local checkpoint + the checkpointed increments and open
+    // sets of the escalation rounds (<= log2(maxRing) + 2 rounds); the
+    // rounds' cached frames and the bucketed points must be gone
     assert(after - before <= 8, s"persistent RDDs grew $before -> $after")
     // and the result is still exact
     val brute = Knn.nearestBrute(spark, pts, Synth.knnRef)
@@ -115,6 +116,69 @@ class KnnSpec extends AnyFunSuite {
     val bucketed = got.collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> (r.getDouble(2), r.getLong(3))).toMap
     assert(bucketed == brute)
+  }
+
+  test("targets subset == nearestBrute on that subset; out-of-grid target rejected") {
+    import spark.implicits._
+    val ref = Synth.knnRef
+    val corner = Seq(PtRec(0L, -4.75, 0.25, 1.0), PtRec(1L, -4.25, 0.75, 2.0),
+      PtRec(2L, -3.75, 0.25, 3.0))
+    val pts = spark.createDataset(corner)
+    val subset = (for (r <- 0 until ref.nrows by 7; c <- 0 until ref.ncols by 9)
+      yield (r, c)).toSet
+    val brute = Knn.nearestBrute(spark, pts, ref)
+      .collect().map(r => (r.getInt(0), r.getInt(1)) -> (r.getDouble(2), r.getLong(3)))
+      .toMap.filter { case (rc, _) => subset(rc) }
+    // the corner points sit beyond the pass-1 halo (one 16-unit bucket)
+    // of most subset cells, so those cells are settled by escalation
+    val bucketW = (1 << 5) * ref.cellsize
+    val escalating = subset.count { case (r, c) =>
+      val (cx, cy) = ref.sub2map(r, c)
+      corner.forall(p => math.hypot(cx - p.x, cy - p.y) >= bucketW)
+    }
+    assert(escalating > subset.size / 2, s"$escalating of ${subset.size}")
+    val got = Knn.nearestBucketed(spark, pts, ref, res = 5, ringK = 1,
+        targets = Some(subset.toSeq.toDF("row", "col")))
+      .collect().map(r => (r.getInt(0), r.getInt(1)) -> (r.getDouble(2), r.getLong(3))).toMap
+    assert(got == brute)
+    val err = intercept[Exception] {
+      Knn.nearestBucketed(spark, pts, ref, res = 5, ringK = 1,
+        targets = Some(Seq((0, ref.ncols)).toDF("row", "col"))).collect()
+    }
+    val want = s"nearestBucketed: target (0, ${ref.ncols}) outside the " +
+      s"${ref.nrows} x ${ref.ncols} grid"
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains(want)), err.toString)
+  }
+
+  test("interpolators release every Dataset they persist") {
+    import spark.implicits._
+    // a persisted Dataset is a cache-manager entry until unpersisted; from
+    // an empty cache, a call must leave it empty, with or without escalation
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    spark.catalog.clearCache()
+    val ref = Synth.knnRef
+    val targets = (for (r <- 0 until ref.nrows by 5; c <- 0 until ref.ncols by 5)
+      yield (r, c)).toDF("row", "col")
+    for (ptsArr <- Seq(
+      fixturePts.map(p => PtRec(p._1, p._2, p._3, p._4)),
+      Array(PtRec(0L, -4.75, 0.25, 1.0), PtRec(1L, -4.25, 0.75, 2.0),
+        PtRec(2L, -3.75, 0.25, 3.0), PtRec(3L, 50.25, 25.25, 4.0)))) {
+      val pts = spark.createDataset(ptsArr.toSeq)
+      val ops = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+        "nearest" -> (() => Knn.nearestBucketed(spark, pts, ref, res = 5)),
+        "nearest targets" -> (() =>
+          Knn.nearestBucketed(spark, pts, ref, res = 5, targets = Some(targets))),
+        "idw" -> (() => Knn.idwBucketed(spark, pts, ref, res = 5, k = 3)),
+        "linear" -> (() => Delaunay.linearBucketed(spark, pts, ref, res = 5)),
+        "cubic" -> (() => Delaunay.cubicBucketed(spark, pts, ref, res = 5)))
+      for ((name, op) <- ops) {
+        assert(op().count() > 0, s"$name (${ptsArr.length} points) empty")
+        assert(cache.isEmpty,
+          s"$name (${ptsArr.length} points) left a persisted Dataset cached")
+      }
+    }
   }
 
   test("1e6 points complete without any driver collect of the point set") {

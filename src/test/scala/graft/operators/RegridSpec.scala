@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core._
+import graft.Raster
 import graft.corpus.Synth
 import scala.collection.mutable
 
@@ -112,7 +113,7 @@ class RegridSpec extends AnyFunSuite {
       if ((r * 7 + c * 3) % 41 == 5) ((r * 29 + c) % 50).toDouble else Double.NaN
     val src = TileOps.tileGrid(spark, srcRef, 5)(sparse)
     val target = GridRef(20, 20, 0, 0, 2)
-    val got = GridInterpolate.nearest(src, srcRef, target, 5)
+    val got = Raster(src, srcRef, 5).gridInterpolate(target, "nearest")
       .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
     // oracle: brute nearest over the same exploded points
     val pts = for {
@@ -131,7 +132,7 @@ class RegridSpec extends AnyFunSuite {
       if ((r * 7 + c * 3) % 41 == 5) ((r * 29 + c) % 50).toDouble else Double.NaN
     val src = TileOps.tileGrid(spark, srcRef, 5)(sparse)
     val target = GridRef(20, 20, 0, 0, 2)
-    val got = GridInterpolate.linear(src, srcRef, target, 5)
+    val got = Raster(src, srcRef, 5).gridInterpolate(target, "linear")
       .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
     val pts = (for {
       r <- 0 until srcRef.nrows; c <- 0 until srcRef.ncols
@@ -156,7 +157,7 @@ class RegridSpec extends AnyFunSuite {
       if ((r * 7 + c * 3) % 41 == 5) ((r * 29 + c) % 50).toDouble else Double.NaN
     val src = TileOps.tileGrid(spark, srcRef, 5)(sparse)
     val target = GridRef(20, 20, 0, 0, 2)
-    val got = GridInterpolate.cubic(src, srcRef, target, 5)
+    val got = Raster(src, srcRef, 5).gridInterpolate(target, "cubic")
       .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
     val pts = (for {
       r <- 0 until srcRef.nrows; c <- 0 until srcRef.ncols
