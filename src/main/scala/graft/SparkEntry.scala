@@ -1019,7 +1019,7 @@ object SparkEntry {
       val prevPin = rsum(s2)
       val gone =
         try { il.read(s, dir, 1L).count(); 0L }
-        catch { case _: Throwable => 1L }
+        catch { case _: il.SnapshotNotFound => 1L }
       s.createDataset(Seq(
         ("a_before", nBefore, headBefore),
         ("b_after", nAfter, headAfter),
@@ -1063,7 +1063,7 @@ object SparkEntry {
       val (postN, postSum) = stats(1L)
       val gone =
         (try { il.read(s, dir, staged).count(); 0L }
-        catch { case _: Throwable => 1L }) min
+        catch { case _: il.SnapshotNotFound => 1L }) min
           (if (il.refSnapshot(dir, "audit").isEmpty) 1L else 0L)
       s.createDataset(Seq(
         ("a_main_pre", preN, preSum),

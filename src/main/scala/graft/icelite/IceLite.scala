@@ -1,8 +1,9 @@
 package graft.icelite
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.LongAccumulator
 import graft.core.Tile
@@ -21,7 +22,14 @@ import graft.core.Tile
   *   table/lineage/{snap}/b-{i}.json staged per-bucket lineage (the
   *                                   checkpoint; written BEFORE the final
   *                                   metadata commit)
-  *   table/data/{snap}/b-{i}/        one parquet dir per bucket
+  *   table/refs/{name}.json          staged (unpublished) WAP snapshot
+  *   table/data/{snap}/bucket={i}/   one parquet dir per bucket
+  *
+  * Every writer goes through the same three steps: [[writeBuckets]]
+  * writes a `bucket`-partitioned frame and returns each bucket's stats,
+  * [[commitSnapshot]] records each bucket's outcome (lineage rows, then
+  * the manifest) and [[flip]] writes the metadata version that makes the
+  * snapshot current. Each file kind has one encoder, next to its parser.
   */
 object IceLite {
 
@@ -29,25 +37,24 @@ object IceLite {
   final case class DataFileEntry(path: String, bucket: Int, rows: Long,
       minCell: Long, maxCell: Long)
 
+  /** A snapshot with no manifest on disk: expired, abandoned or never
+    * written. */
+  final case class SnapshotNotFound(table: String, snap: Long)
+      extends RuntimeException(s"icelite: snapshot $snap has no manifest in $table")
+
   private def mkdirs(p: Path): Unit = { Files.createDirectories(p); () }
 
-  /** Bounded wait for an [[org.apache.spark.sql.Observation]]'s metrics
-    * (they are delivered on the async listener bus just after the
-    * observed action returns); empty map on timeout so callers can fall
-    * back to a separate aggregate pass instead of hanging. */
-  private def awaitMetrics(
-      obs: org.apache.spark.sql.Observation): Map[String, Any] = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration._
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val t0 = System.nanoTime()
-    val r: Map[String, Any] =
-      try Await.result(Future(obs.get), 10.seconds)
-      catch { case _: java.util.concurrent.TimeoutException => Map.empty }
-    if (sys.env.contains("SPARK_GRAFT_OBS_DEBUG"))
-      System.err.println(f"[obs-wait] ${(System.nanoTime()-t0)/1e6}%.1f ms")
-    r
-  }
+  /** Bounded wait for an [[Observation]]'s metrics (they are delivered on
+    * the async listener bus just after the observed action returns);
+    * empty map on timeout so callers can fall back to a separate
+    * aggregate pass instead of hanging. Waits on the observation's own
+    * future, so a timeout leaves no thread behind. */
+  private[icelite] def awaitMetrics(obs: Observation,
+      timeout: FiniteDuration = 10.seconds): Map[String, Any] =
+    try {
+      val row = scala.concurrent.Await.ready(obs.future, timeout).value.get.get
+      row.getValuesMap[Any](row.schema.fieldNames.toSeq)
+    } catch { case _: java.util.concurrent.TimeoutException => Map.empty }
 
   private def q(s: String) = "\"" + s + "\""
 
@@ -57,6 +64,14 @@ object IceLite {
     Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
   }
+
+  /** Numeric / string field of one of icelite's json files. */
+  private def numField(json: String, name: String): Option[Long] =
+    ("\"" + name + "\"\\s*:\\s*(\\d+)").r.findFirstMatchIn(json)
+      .map(_.group(1).toLong)
+  private def strField(json: String, name: String): Option[String] =
+    ("\"" + name + "\"\\s*:\\s*\"([^\"]+)\"").r.findFirstMatchIn(json)
+      .map(_.group(1))
 
   /** The physical Tile schema, pinned so snapshot reads never pay a
     * schema-inference footer job (every [[read]] call previously launched
@@ -87,38 +102,61 @@ object IceLite {
     }
   }
 
-  def currentSnapshot(table: String): Option[Long] = {
+  /** Text of the current metadata version, with its number. */
+  private def currentMetadata(table: String): Option[(Int, String)] = {
     val v = currentVersion(table)
     if (v == 0) None
-    else {
-      val s = Files.readString(Paths.get(table, "metadata", s"v$v.json"))
-      "\"current_snapshot\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(s).map(_.group(1).toLong)
-    }
+    else Some(v -> Files.readString(Paths.get(table, "metadata", s"v$v.json")))
+  }
+
+  def currentSnapshot(table: String): Option[Long] =
+    currentMetadata(table).flatMap { case (_, s) => numField(s, "current_snapshot") }
+
+  /** Metadata version file: the current-snapshot pointer, its manifest,
+    * bucket count and declared schema (absent for tables written before
+    * schema tracking — an empty `"schema": []` would trip
+    * [[tableSchema]]'s drift guard). */
+  private def encodeMetadata(snap: Long, manifest: String, buckets: Int,
+      schema: Option[Seq[(String, String)]]): String =
+    s"""{"format": "icelite/1", "current_snapshot": $snap,
+       | "manifest": ${q(manifest)},
+       | "buckets": $buckets""".stripMargin +
+      schema.fold("")(cols => ",\n \"schema\": " + encodeSchema(cols)) + "}"
+
+  /** THE pointer flip: one atomic rename writes metadata version
+    * current + 1, making `snap` the table's current snapshot. Returns
+    * the new version. */
+  private def flip(table: String, snap: Long, buckets: Int,
+      schema: Option[Seq[(String, String)]],
+      manifest: Option[String] = None): Int = {
+    val v = currentVersion(table) + 1
+    mkdirs(Paths.get(table, "metadata"))
+    writeAtomic(Paths.get(table, "metadata", s"v$v.json"),
+      encodeMetadata(snap, manifest.getOrElse(s"$table/manifests/m-$snap.json"),
+        buckets, schema))
+    v
   }
 
   /** Buckets already checkpointed for a snapshot attempt (resume set). */
-  def committedBuckets(table: String, snap: Long): Set[Int] = {
-    val dir = Paths.get(table, "lineage", snap.toString)
-    if (!Files.exists(dir)) Set.empty
-    else listDir(dir).iterator.map(_.getFileName.toString)
+  def committedBuckets(table: String, snap: Long): Set[Int] =
+    listDir(Paths.get(table, "lineage", snap.toString)).iterator
+      .map(_.getFileName.toString)
       .filter(n => n.startsWith("b-") && n.endsWith(".json"))
       .map(_.stripPrefix("b-").stripSuffix(".json").toInt).toSet
-  }
 
   /** Resumable ingest: ONE dynamic-partition write of every
-    * not-yet-committed bucket, ONE read-back aggregation for lineage
-    * checksums + manifest stats, then per-bucket lineage rows committed
-    * atomically in bucket order; already-checkpointed buckets are SKIPPED
-    * on re-run (the kill/resume contract — a killed job re-run on the same
-    * table redoes exactly the buckets whose lineage row is missing).
-    * `failAtBucket` injects a crash between lineage commits for tests.
-    * Returns the snapshot id once ALL buckets committed + metadata flipped.
+    * not-yet-committed bucket (its stats observed on the write job), then
+    * per-bucket lineage rows committed atomically in bucket order;
+    * already-checkpointed buckets are SKIPPED on re-run (the kill/resume
+    * contract — a killed job re-run on the same table redoes exactly the
+    * buckets whose lineage row is missing). `failAtBucket` injects a
+    * crash between lineage commits for tests. Returns the snapshot id
+    * once ALL buckets committed + metadata flipped.
     *
-    * Scale shape: 2 jobs total regardless of bucket count (the round-1
-    * version ran 2 jobs PER bucket over a cached full dataset — N
-    * sequential passes). Bucketing is on the Z-order cell id's high bits,
-    * so each bucket is a contiguous cell range — manifest min/max stats
-    * stay tight and reads prune by range. */
+    * Scale shape: 2 jobs total regardless of bucket count (cell range,
+    * write). Bucketing is on the Z-order cell id's high bits, so each
+    * bucket is a contiguous cell range — manifest min/max stats stay
+    * tight and reads prune by range. */
   def commitResumable(spark: SparkSession, tiles: Dataset[Tile], table: String,
       buckets: Int, snap: Long, failAtBucket: Option[Int] = None,
       rowsCommitted: Option[LongAccumulator] = None,
@@ -132,7 +170,8 @@ object IceLite {
     * records exactly the DataFrame's columns. [[compact]] MUST use this
     * form over [[readDf]]: the typed Dataset[Tile] read would silently
     * strip evolved columns from both the data files and the recorded
-    * schema. */
+    * schema. A `stageRef` stages the snapshot on that WAP ref instead of
+    * making it current (see [[publish]]). */
   def commitResumableDf(spark: SparkSession, rows: DataFrame, table: String,
       buckets: Int, snap: Long, failAtBucket: Option[Int] = None,
       rowsCommitted: Option[LongAccumulator] = None,
@@ -140,143 +179,156 @@ object IceLite {
     import spark.implicits._
     require(rows.columns.contains("cellId") && rows.columns.contains("payload"),
       "commitResumableDf: rows must carry cellId and payload columns")
-    // NOT persisted: the commit's three passes (range agg, write, stats)
-    // recompute the input, which measures FASTER than paying the
-    // InMemoryRelation columnar cache build for typical commit inputs
-    // (generated tiles / just-read parquet); callers with an expensive
-    // upstream pipeline persist at their own level
-    val tiles = rows
-    mkdirs(Paths.get(table, "metadata"))
-    mkdirs(Paths.get(table, "manifests"))
-    mkdirs(Paths.get(table, "lineage", snap.toString))
-
+    // NOT persisted: the commit's passes recompute the input, which
+    // measures FASTER than paying the InMemoryRelation columnar cache
+    // build for typical commit inputs (generated tiles / just-read
+    // parquet); callers with an expensive upstream persist at their level
     val done = committedBuckets(table, snap)
     // range-bucket on the Z-order id so each bucket is a CONTIGUOUS cell
     // range -> manifest min/max stats stay tight and reads prune by range
     spark.sparkContext.setJobDescription(s"icelite commit $table@$snap range-agg")
-    val zr = tiles.agg(min($"cellId"), max($"cellId")).collect()(0)
+    val zr = rows.agg(min($"cellId"), max($"cellId")).collect()(0)
     val (zlo, zhi) =
       if (zr.isNullAt(0)) (0L, 0L) else (zr.getLong(0), zr.getLong(1))
     val span = math.max(1L, zhi - zlo + 1)
-    val bucketed = tiles
+    val bucketed = rows
       .withColumn("bucket",
         least(lit(buckets - 1),
           (($"cellId" - lit(zlo)) * lit(buckets.toLong) / lit(span)).cast("int")))
+    val stats = writeBuckets(spark, table, snap, bucketed,
+      (0 until buckets).filterNot(done.contains), "commit",
+      resumed = done.nonEmpty, rowsCommitted)
+    commitSnapshot(table, snap, (0 until buckets).map(b => b -> Rewritten(stats(b))),
+      Some(schemaOf(rows)), stageRef, done, failAtBucket)
+  }
 
-    val stageRoot = s"$table/data/$snap"
-    val todo = (0 until buckets).filterNot(done.contains)
-    // per-bucket rows, order-independent checksum, and cell min/max
-    // (lineage + manifest). FRESH-COMMIT FAST PATH: the stats ride the
-    // write job itself as observed metrics (Observation + 4 conditional
-    // aggregates per bucket) — one job per commit instead of write +
-    // stats-agg, with values identical by definition (same frame the
-    // write consumed). The checksum term stays a JVM udf (Long
-    // wraparound; the SQL expression would throw under ANSI overflow on
-    // high Z ids). Resumed commits (stats must also cover already-done
-    // buckets), accumulator-instrumented commits, and wide layouts
-    // (> 64 buckets — 4 aggregates per bucket stops being a sane plan;
-    // production tables that wide take the one extra aggregate pass)
-    // use the separate codegen'd partial/final aggregate below.
-    val useObserve = done.isEmpty && rowsCommitted.isEmpty &&
-      buckets <= 64 && todo.nonEmpty
-    val obs = org.apache.spark.sql.Observation(s"commit_${snap}_b$buckets")
+  /** One bucket's rows, order-independent checksum and cell range. */
+  private final case class Stats(rows: Long, checksum: Long, minCell: Long,
+      maxCell: Long)
+  private val NoRows = Stats(0L, 0L, 0L, 0L)
+
+  /** THE bucketed write: writes the rows of the `bucket`-partitioned
+    * `frame` whose bucket is in `todo` to `data/<snap>` (dynamic partition
+    * overwrite replaces ONLY those bucket dirs) and returns each bucket's
+    * stats (NoRows for a bucket with none). The stats ride the write job
+    * as observed metrics — 4 conditional aggregates per bucket, one job,
+    * the values of the very rows written. A separate aggregate pass over
+    * `frame` computes them instead when `frame` also holds buckets an
+    * earlier attempt wrote (`resumed`: the manifest needs their stats
+    * too), when `rowsCommitted` counts the rows, past 64 buckets (4
+    * aggregates per bucket stops being a sane plan) or when the metrics
+    * do not arrive. */
+  private def writeBuckets(spark: SparkSession, table: String, snap: Long,
+      frame: DataFrame, todo: Seq[Int], op: String, resumed: Boolean = false,
+      rowsCommitted: Option[LongAccumulator] = None): Map[Int, Stats] = {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    // the checksum term is a JVM udf: Long wraparound (the SQL expression
+    // would throw under ANSI overflow on high Z ids)
+    val term = udf { (cid: Long, n: Int) =>
+      rowsCommitted.foreach(_.add(1L)); cid * 31 + n }
+    def withTerm(df: DataFrame) =
+      df.withColumn("chk_term", term($"cellId", size($"payload")))
+    val observed = !resumed && rowsCommitted.isEmpty && todo.nonEmpty &&
+      todo.size <= 64
+    val obs = Observation()
     if (todo.nonEmpty) {
-      val base = bucketed.filter($"bucket".isInCollection(todo))
+      val rows = if (resumed) frame.filter($"bucket".isInCollection(todo)) else frame
       val toWrite =
-        if (!useObserve) base
+        if (!observed) rows
         else {
-          val chkTerm = udf((cid: Long, n: Int) => cid * 31 + n)
-          val chkv = chkTerm($"cellId", size($"payload"))
           val aggs = todo.flatMap { b =>
             val c = $"bucket" === lit(b)
             Seq(count(when(c, lit(1))).as(s"n$b"),
-              expr(s"bit_xor(IF(bucket = $b, chk_term, NULL))").as(s"x$b"),
+              bit_xor(when(c, $"chk_term")).as(s"x$b"),
               min(when(c, $"cellId")).as(s"lo$b"),
               max(when(c, $"cellId")).as(s"hi$b"))
           }
-          base.withColumn("chk_term", chkv)
-            .observe(obs, aggs.head, aggs.tail: _*)
-            .drop("chk_term")
+          withTerm(rows).observe(obs, aggs.head, aggs.tail: _*).drop("chk_term")
         }
-      // single write job: dynamic partition overwrite touches ONLY the
-      // re-written buckets, leaving committed ones' files intact
-      spark.sparkContext.setJobDescription(s"icelite commit $table@$snap write")
+      sc.setJobDescription(s"icelite $op $table@$snap write")
       toWrite.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("bucket")
-        .parquet(stageRoot)
+        .parquet(s"$table/data/$snap")
     }
-
-    def statsAgg(): Map[Int, (Int, Long, Long, Long, Long)] = bucketed
-      .select($"bucket".cast("int"), $"cellId", size($"payload"))
-      .as[(Int, Long, Int)]
-      .map { case (b, cid, n) =>
-        rowsCommitted.foreach(_.add(1L))
-        (b, cid, cid * 31 + n)
-      }
-      .toDF("b", "cid", "chk")
-      .groupBy($"b")
-      .agg(count(lit(1)).as("rows"), expr("bit_xor(chk)").as("chk"),
-        min($"cid").as("lo"), max($"cid").as("hi"))
-      .as[(Int, Long, Long, Long, Long)]
-      .collect().map(s => s._1 -> s).toMap
-
-    val stats: Map[Int, (Int, Long, Long, Long, Long)] =
-      if (!useObserve) statsAgg()
+    val m = if (observed) awaitMetrics(obs) else Map.empty[String, Any]
+    val stats =
+      if (todo.isEmpty && !resumed) Map.empty[Int, Stats]
+      else if (m.nonEmpty) todo.flatMap { b =>
+        def l(k: String) = Option(m(k)).fold(0L)(_.asInstanceOf[Long])
+        val n = l(s"n$b")
+        if (n == 0L) None else Some(b -> Stats(n, l(s"x$b"), l(s"lo$b"), l(s"hi$b")))
+      }.toMap
       else {
-        // observed metrics arrive on the listener thread just after the
-        // write returns; bounded wait, with the aggregate pass as a
-        // belt-and-braces fallback (never expected to fire)
-        val m = awaitMetrics(obs)
-        if (m.isEmpty) statsAgg()
-        else todo.map { b =>
-          def l(k: String) =
-            Option(m(k)).map(_.asInstanceOf[Long]).getOrElse(0L)
-          b -> ((b, m(s"n$b").asInstanceOf[Long], l(s"x$b"),
-            l(s"lo$b"), l(s"hi$b")))
-        }.toMap
+        sc.setJobDescription(s"icelite $op $table@$snap stats")
+        withTerm(frame).groupBy($"bucket".cast("int"))
+          .agg(count(lit(1)), bit_xor($"chk_term"), min($"cellId"), max($"cellId"))
+          .as[(Int, Long, Long, Long, Long)].collect()
+          .map { case (b, n, x, lo, hi) => b -> Stats(n, x, lo, hi) }.toMap
       }
+    sc.setJobDescription(null)
+    stats.withDefaultValue(NoRows)
+  }
 
-    (0 until buckets).foreach { b =>
-      if (!done.contains(b)) {
-        failAtBucket.filter(_ == b).foreach { _ =>
-          throw new RuntimeException(s"injected failure before bucket $b")
+  /** What a new snapshot records for one bucket. */
+  private sealed trait Outcome
+  /** Rewritten to `data/<snap>/bucket=<b>` with these stats (NoRows:
+    * emptied). */
+  private final case class Rewritten(stats: Stats) extends Outcome
+  /** Carried BY REFERENCE from snapshot `from`: same entry, its lineage
+    * row copied forward. */
+  private final case class Carried(entry: DataFileEntry, from: Long) extends Outcome
+  /** Dropped at the METADATA level: the old path stays for time travel,
+    * rows 0. */
+  private final case class Dropped(path: String) extends Outcome
+
+  /** THE snapshot commit: writes each bucket's lineage row (new, or
+    * copied forward), then the manifest, then the metadata version — or,
+    * with `stageRef`, the WAP ref, leaving the current pointer alone.
+    * Buckets in `checkpointed` already hold their lineage row from an
+    * earlier attempt; `failAtBucket` injects a crash before a bucket's
+    * lineage row. Returns `snap`. */
+  private def commitSnapshot(table: String, snap: Long,
+      outcomes: Seq[(Int, Outcome)], schema: Option[Seq[(String, String)]],
+      stageRef: Option[String] = None, checkpointed: Set[Int] = Set.empty,
+      failAtBucket: Option[Int] = None): Long = {
+    val lin = Paths.get(table, "lineage", snap.toString)
+    mkdirs(lin)
+    val entries = outcomes.map { case (b, outcome) =>
+      val row = lin.resolve(s"b-$b.json")
+      def record(rows: Long, checksum: Long): Unit =
+        if (!checkpointed.contains(b)) {
+          if (failAtBucket.contains(b))
+            throw new RuntimeException(s"injected failure before bucket $b")
+          writeAtomic(row, encodeLineage(Lineage(b, rows, checksum)))
         }
-        val (rows, chk) = stats.get(b).map(s => (s._2, s._3)).getOrElse((0L, 0L))
-        writeAtomic(Paths.get(table, "lineage", snap.toString, s"b-$b.json"),
-          s"""{"bucket": $b, "rows": $rows, "checksum": $chk}""")
+      outcome match {
+        case Rewritten(s) =>
+          record(s.rows, s.checksum)
+          DataFileEntry(s"$table/data/$snap/bucket=$b", b, s.rows, s.minCell, s.maxCell)
+        case Carried(e, from) =>
+          val old = Paths.get(table, "lineage", from.toString, s"b-$b.json")
+          if (Files.exists(old))
+            Files.copy(old, row, StandardCopyOption.REPLACE_EXISTING)
+          e
+        case Dropped(path) =>
+          record(0L, 0L)
+          DataFileEntry(path, b, 0L, 0L, 0L)
       }
     }
-
-    // manifest: data files with cell min/max for pruning
-    val entries = (0 until buckets).map { b =>
-      val dir = s"$stageRoot/bucket=$b"
-      val (n, lo, hi) = stats.get(b).map(s => (s._2, s._4, s._5))
-        .getOrElse((0L, 0L, 0L))
-      s"""{"path": ${q(dir)}, "bucket": $b, "rows": $n, "min_cell": $lo, "max_cell": $hi}"""
-    }
+    mkdirs(Paths.get(table, "manifests"))
     writeAtomic(Paths.get(table, "manifests", s"m-$snap.json"),
-      entries.mkString("[", ",\n", "]"))
-
-    spark.sparkContext.setJobDescription(null)
+      entries.map(encodeEntry).mkString("[", ",\n", "]"))
     stageRef match {
       case Some(name) =>
-        // WRITE-AUDIT-PUBLISH staging: the snapshot's data, lineage and
-        // manifest are all durable, but the current-snapshot pointer
-        // does NOT move — readers of the table keep seeing the old
-        // snapshot while auditors read the ref by name. `publish` flips
-        // the pointer atomically after validation.
+        // WRITE-AUDIT-PUBLISH staging: data, lineage and manifest are
+        // durable, but readers of the table keep seeing the old snapshot
+        // while auditors read the ref by name; `publish` flips the pointer
         mkdirs(Paths.get(table, "refs"))
-        writeAtomic(Paths.get(table, "refs", s"$name.json"),
-          s"""{"snap": $snap, "buckets": $buckets,
-             | "schema": ${schemaJson(tiles)}}""".stripMargin)
-      case None =>
-        val v = currentVersion(table) + 1
-        writeAtomic(Paths.get(table, "metadata", s"v$v.json"),
-          s"""{"format": "icelite/1", "current_snapshot": $snap,
-             | "manifest": ${q(s"$table/manifests/m-$snap.json")},
-             | "buckets": $buckets,
-             | "schema": ${schemaJson(tiles)}}""".stripMargin)
+        writeAtomic(refPath(table, name),
+          encodeRef(snap, outcomes.length, schema.getOrElse(Seq.empty)))
+      case None => flip(table, snap, outcomes.length, schema)
     }
     snap
   }
@@ -300,17 +352,7 @@ object IceLite {
   def rollback(table: String, snap: Long): Long = {
     require(Files.exists(Paths.get(table, "manifests", s"m-$snap.json")),
       s"rollback: snapshot $snap has no manifest in $table")
-    val v = currentVersion(table) + 1
-    val schemaPart = tableSchema(table).map { cols =>
-      ",\n \"schema\": " + cols.map { case (n, t) =>
-        s"""{"name": ${q(n)}, "type": ${q(t)}}"""
-      }.mkString("[", ", ", "]")
-    }.getOrElse("")
-    val buckets = manifestEntries(table, snap).length
-    writeAtomic(Paths.get(table, "metadata", s"v$v.json"),
-      s"""{"format": "icelite/1", "current_snapshot": $snap,
-         | "manifest": ${q(s"$table/manifests/m-$snap.json")},
-         | "buckets": $buckets$schemaPart}""".stripMargin)
+    flip(table, snap, manifestEntries(table, snap).length, tableSchema(table))
     snap
   }
 
@@ -336,22 +378,27 @@ object IceLite {
     }.toDF("snapshot", "n_files", "n_rows", "is_current")
   }
 
+  /** WAP ref file: the staged snapshot, its bucket count and schema. */
+  private def encodeRef(snap: Long, buckets: Int,
+      schema: Seq[(String, String)]): String =
+    s"""{"snap": $snap, "buckets": $buckets,
+       | "schema": ${encodeSchema(schema)}}""".stripMargin
+
+  /** Snapshot a ref file names. */
+  private def refSnap(ref: Path): Option[Long] =
+    numField(Files.readString(ref), "snap")
+
+  private def refPath(table: String, name: String): Path =
+    Paths.get(table, "refs", s"$name.json")
+
   /** Snapshots pinned by staged (unpublished) WAP refs. */
-  def stagedRefs(table: String): Seq[Long] = {
-    val dir = Paths.get(table, "refs")
-    if (!Files.exists(dir)) Seq.empty
-    else listDir(dir).flatMap { p =>
-      "\"snap\"\\s*:\\s*(\\d+)".r
-        .findFirstMatchIn(Files.readString(p)).map(_.group(1).toLong)
-    }
-  }
+  def stagedRefs(table: String): Seq[Long] =
+    listDir(Paths.get(table, "refs")).flatMap(refSnap)
 
   /** Snapshot a named staging ref points at (write-audit-publish). */
   def refSnapshot(table: String, name: String): Option[Long] = {
-    val p = Paths.get(table, "refs", s"$name.json")
-    if (!Files.exists(p)) None
-    else "\"snap\"\\s*:\\s*(\\d+)".r
-      .findFirstMatchIn(Files.readString(p)).map(_.group(1).toLong)
+    val p = refPath(table, name)
+    if (!Files.exists(p)) None else refSnap(p)
   }
 
   /** PUBLISH a staged ref — the write-audit-publish pointer flip: after
@@ -364,26 +411,16 @@ object IceLite {
     * rule), after which publish fails loudly here on the missing
     * manifest rather than publishing a half-cleared stage. */
   def publish(table: String, name: String): Long = {
-    val p = Paths.get(table, "refs", s"$name.json")
+    val p = refPath(table, name)
     require(Files.exists(p), s"publish: no staged ref `$name` in $table")
-    val s = Files.readString(p)
-    val snap = "\"snap\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(s)
-      .map(_.group(1).toLong)
-      .getOrElse(throw new IllegalStateException(
-        s"publish: ref `$name` in $table carries no snap"))
-    val buckets = "\"buckets\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(s)
-      .map(_.group(1).toInt).getOrElse(0)
-    val schema = "\"schema\"\\s*:\\s*(\\[.*\\])".r.findFirstMatchIn(s)
-      .map(_.group(1)).getOrElse("[]")
+    val snap = refSnap(p).getOrElse(throw new IllegalStateException(
+      s"publish: ref `$name` in $table carries no snap"))
     require(Files.exists(Paths.get(table, "manifests", s"m-$snap.json")),
       s"publish: staged snapshot $snap of ref `$name` has no manifest " +
         "(cleared by a concurrent op?) — refusing to publish")
-    val v = currentVersion(table) + 1
-    writeAtomic(Paths.get(table, "metadata", s"v$v.json"),
-      s"""{"format": "icelite/1", "current_snapshot": $snap,
-         | "manifest": ${q(s"$table/manifests/m-$snap.json")},
-         | "buckets": $buckets,
-         | "schema": $schema}""".stripMargin)
+    val ref = Files.readString(p)
+    flip(table, snap, numField(ref, "buckets").fold(0)(_.toInt),
+      Some(parseSchema(ref)))
     Files.deleteIfExists(p)
     snap
   }
@@ -396,50 +433,40 @@ object IceLite {
     * to abandon a published snapshot. Returns the number of data
     * directories deleted (0 when the ref does not exist). */
   def abandonStaged(table: String, name: String): Int = {
-    val p = Paths.get(table, "refs", s"$name.json")
+    val p = refPath(table, name)
     if (!Files.exists(p)) return 0
-    val snap = "\"snap\"\\s*:\\s*(\\d+)".r
-      .findFirstMatchIn(Files.readString(p)).map(_.group(1).toLong)
-      .getOrElse(throw new IllegalStateException(
-        s"abandonStaged: ref `$name` in $table carries no snap"))
+    val snap = refSnap(p).getOrElse(throw new IllegalStateException(
+      s"abandonStaged: ref `$name` in $table carries no snap"))
     require(!currentSnapshot(table).contains(snap),
       s"abandonStaged: snapshot $snap of ref `$name` is PUBLISHED — " +
         "use expireSnapshots for retention, not abandon")
     Files.deleteIfExists(p)
-    val live = snapshots(table).filterNot(_ == snap)
-      .flatMap(s => manifestEntries(table, s).map(_.path))
-      .map(Paths.get(_).normalize.toString).toSet
-    var deleted = 0
-    manifestEntries(table, snap).foreach { e =>
-      val d = Paths.get(e.path).normalize
-      if (!live.contains(d.toString) && Files.exists(d)) {
-        deleteRecursively(d); deleted += 1
-      }
-    }
-    Files.deleteIfExists(Paths.get(table, "manifests", s"m-$snap.json"))
-    val lin = Paths.get(table, "lineage", snap.toString)
-    if (Files.exists(lin)) deleteRecursively(lin)
-    deleted
+    dropSnapshot(table, snap,
+      referencedPaths(table, snapshots(table).filterNot(_ == snap)))
   }
 
-  /** JSON schema record of a DataFrame (partition col `bucket` excluded). */
-  private def schemaJson(df: DataFrame): String =
-    df.schema.fields.filterNot(_.name == "bucket").map { f =>
-      s"""{"name": ${q(f.name)}, "type": ${q(f.dataType.sql)}}"""
-    }.mkString("[", ", ", "]")
+  /** Schema record: (name, Spark SQL type) columns. */
+  private def encodeSchema(cols: Seq[(String, String)]): String =
+    cols.map { case (n, t) => s"""{"name": ${q(n)}, "type": ${q(t)}}""" }
+      .mkString("[", ", ", "]")
+
+  private def parseSchema(json: String): Seq[(String, String)] =
+    """\{\s*"name"\s*:\s*"([^"]+)"\s*,\s*"type"\s*:\s*"([^"]+)"\s*\}""".r
+      .findAllMatchIn(json).map(m => (m.group(1), m.group(2))).toSeq
+
+  /** Columns of a DataFrame as recorded (partition col `bucket` excluded). */
+  private def schemaOf(df: DataFrame): Seq[(String, String)] =
+    df.schema.fields.toSeq.filterNot(_.name == "bucket")
+      .map(f => (f.name, f.dataType.sql))
 
   /** Declared table schema (column name, Spark SQL type) from the current
     * metadata version; None for tables written before schema tracking. */
-  def tableSchema(table: String): Option[Seq[(String, String)]] = {
-    val v = currentVersion(table)
-    if (v == 0) None
-    else {
-      val s = Files.readString(Paths.get(table, "metadata", s"v$v.json"))
+  def tableSchema(table: String): Option[Seq[(String, String)]] =
+    currentMetadata(table).flatMap { case (v, s) =>
       // whitespace-tolerant parse; and if the metadata DECLARES a schema
       // that yields no columns, fail loudly instead of silently degrading
       // readDf to the observed parquet schema (ADVICE r4 #4)
-      val re = """\{\s*"name"\s*:\s*"([^"]+)"\s*,\s*"type"\s*:\s*"([^"]+)"\s*\}""".r
-      val cols = re.findAllMatchIn(s).map(m => (m.group(1), m.group(2))).toSeq
+      val cols = parseSchema(s)
       if (cols.nonEmpty) Some(cols)
       else if (s.contains("\"schema\""))
         throw new IllegalStateException(
@@ -448,7 +475,6 @@ object IceLite {
             "to the observed parquet schema")
       else None
     }
-  }
 
   /** SCHEMA EVOLUTION (add column) — Iceberg's metadata-ONLY evolution:
     * a new metadata version extends the declared schema and is committed
@@ -459,29 +485,26 @@ object IceLite {
     * present the table's CURRENT schema — time-traveling to an old
     * snapshot replays old DATA under the current column set. */
   def evolveAddColumn(table: String, name: String, sqlType: String): Int = {
-    val v = currentVersion(table)
-    require(v > 0, s"evolveAddColumn: no committed metadata in $table")
+    val meta = currentMetadata(table)
+    require(meta.nonEmpty, s"evolveAddColumn: no committed metadata in $table")
     val cur = tableSchema(table).getOrElse(throw new IllegalStateException(
       s"evolveAddColumn: $table has no recorded schema (pre-evolution table)"))
     require(!cur.exists(_._1 == name),
       s"evolveAddColumn: column `$name` already exists in $table")
-    val old = Files.readString(Paths.get(table, "metadata", s"v$v.json"))
     val snap = currentSnapshot(table).getOrElse(
       throw new IllegalStateException(s"evolveAddColumn: no snapshot in $table"))
-    val manifest = "\"manifest\"\\s*:\\s*\"([^\"]+)\"".r.findFirstMatchIn(old)
-      .map(_.group(1)).getOrElse(s"$table/manifests/m-$snap.json")
-    val buckets = "\"buckets\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(old)
-      .map(_.group(1).toInt).getOrElse(0)
-    val schema = (cur :+ (name, sqlType)).map { case (n, t) =>
-      s"""{"name": ${q(n)}, "type": ${q(t)}}"""
-    }.mkString("[", ", ", "]")
-    writeAtomic(Paths.get(table, "metadata", s"v${v + 1}.json"),
-      s"""{"format": "icelite/1", "current_snapshot": $snap,
-         | "manifest": ${q(manifest)},
-         | "buckets": $buckets,
-         | "schema": $schema}""".stripMargin)
-    v + 1
+    val old = meta.get._2
+    flip(table, snap, numField(old, "buckets").fold(0)(_.toInt),
+      Some(cur :+ (name -> sqlType)), strField(old, "manifest"))
   }
+
+  /** Live data files of a snapshot, pruned to those whose manifest
+    * min/max overlaps `cellRange`. */
+  private def scanFiles(table: String, snap: Long,
+      cellRange: Option[(Long, Long)]): Seq[String] =
+    cellRange.fold(manifestEntries(table, snap).filter(_.rows > 0)) {
+      case (lo, hi) => planFiles(table, snap, lo, hi)
+    }.map(_.path)
 
   /** Snapshot-pinned DataFrame read under the DECLARED schema: data
     * files written before a column existed surface it as NULL (parquet
@@ -491,38 +514,20 @@ object IceLite {
     * [[read]]. */
   def readDf(spark: SparkSession, table: String, snap: Long,
       cellRange: Option[(Long, Long)] = None): DataFrame = {
-    val files = manifestEntries(table, snap).flatMap { e =>
-      if (e.rows == 0) None
-      else cellRange match {
-        case Some((a, b)) if e.maxCell < a || e.minCell > b => None // pruned
-        case _ => Some(e.path)
-      }
-    }
+    val files = scanFiles(table, snap, cellRange)
     val declared = tableSchema(table)
-    if (files.isEmpty) {
-      // all files pruned/empty: the declared schema still shapes the
-      // result; a pre-schema-tracking table derives it from the manifest
-      // files themselves (limit(0) — footers only, no data) so pruned
-      // and unpruned reads stay union-compatible
-      val cols = declared.getOrElse {
-        val allFiles = manifestEntries(table, snap).filter(_.rows > 0).map(_.path)
-        if (allFiles.isEmpty) Seq("cellId" -> "BIGINT")
-        else spark.read.option("mergeSchema", "true").parquet(allFiles: _*)
-          .schema.fields.toSeq.map(f => (f.name, f.dataType.sql))
+    // all files pruned/empty: the declared schema still shapes the
+    // result; a pre-schema-tracking table derives it from the manifest
+    // files themselves (footers only, no data) so pruned and unpruned
+    // reads stay union-compatible
+    val shape =
+      if (files.nonEmpty || declared.nonEmpty) declared
+      else {
+        val allFiles = scanFiles(table, snap, None)
+        Some(if (allFiles.isEmpty) Seq("cellId" -> "BIGINT")
+          else schemaOf(spark.read.option("mergeSchema", "true").parquet(allFiles: _*)))
       }
-      spark.range(0).select(cols.map { case (n, t) =>
-        lit(null).cast(t).as(n) }: _*)
-    } else {
-      declared match {
-        case Some(cols) =>
-          // explicit declared schema: no inference or mergeSchema footer
-          // jobs; parquet null-fills columns a file predates — exactly
-          // what the former select/cast wrapper emulated
-          spark.read.schema(structOf(cols)).parquet(files: _*)
-        case None =>
-          spark.read.option("mergeSchema", "true").parquet(files: _*)
-      }
-    }
+    readFilesDeclared(spark, files, shape)
   }
 
   /** Incremental CHANGELOG read between two committed snapshots — the
@@ -546,22 +551,14 @@ object IceLite {
       fromSnap: Long, toSnap: Long): DataFrame = {
     require(fromSnap <= toSnap,
       s"readChanges: fromSnap $fromSnap must be <= toSnap $toSnap")
-    val fromE = manifestEntries(table, fromSnap)
-    val toE = manifestEntries(table, toSnap)
-    val oldPaths = fromE.map(_.path).toSet
-    val newPaths = toE.map(_.path).toSet
-    val addedFiles =
-      toE.filter(e => e.rows > 0 && !oldPaths.contains(e.path)).map(_.path)
-    val droppedFiles =
-      fromE.filter(e => e.rows > 0 && !newPaths.contains(e.path)).map(_.path)
+    val (droppedFiles, addedFiles) = changedFiles(table, fromSnap, toSnap)
     // both sides MUST project the same columns or the image structs
     // won't compare; a pre-schema-tracking table derives the union
     // schema from the changed files themselves (footers only)
     val declared = tableSchema(table).orElse {
       val any = addedFiles ++ droppedFiles
       if (any.isEmpty) None
-      else Some(spark.read.option("mergeSchema", "true").parquet(any: _*)
-        .schema.fields.toSeq.map(f => (f.name, f.dataType.sql)))
+      else Some(schemaOf(spark.read.option("mergeSchema", "true").parquet(any: _*)))
     }
     val nSide = readFilesDeclared(spark, addedFiles, declared)
     val oSide = readFilesDeclared(spark, droppedFiles, declared)
@@ -605,8 +602,10 @@ object IceLite {
   }
 
   /** Read an explicit data-file list under a declared (name, type) schema
-    * — absent columns null-fill, an empty file list yields an empty frame
-    * of exactly the declared columns. */
+    * — absent columns null-fill (an explicit schema: no inference or
+    * mergeSchema footer jobs), an empty file list yields an empty frame
+    * of exactly the declared columns. Without a declared schema the
+    * files' mergeSchema union is read. */
   private def readFilesDeclared(spark: SparkSession, files: Seq[String],
       declared: Option[Seq[(String, String)]]): DataFrame = {
     if (files.isEmpty) {
@@ -614,17 +613,22 @@ object IceLite {
       spark.range(0).select(cols.map { case (nm, t) =>
         lit(null).cast(t).as(nm) }: _*)
     } else declared match {
-      case Some(cols) =>
-        // explicit schema — no inference/mergeSchema jobs (see readDf)
-        spark.read.schema(structOf(cols)).parquet(files: _*)
-      case None =>
-        spark.read.option("mergeSchema", "true").parquet(files: _*)
+      case Some(cols) => spark.read.schema(structOf(cols)).parquet(files: _*)
+      case None => spark.read.option("mergeSchema", "true").parquet(files: _*)
     }
   }
 
-  /** Parsed data-file list of a snapshot's manifest. */
+  /** Manifest entry: one data file of a snapshot with its stats. */
+  private def encodeEntry(e: DataFileEntry): String =
+    s"""{"path": ${q(e.path)}, "bucket": ${e.bucket}, "rows": ${e.rows}, "min_cell": ${e.minCell}, "max_cell": ${e.maxCell}}"""
+
+  /** Parsed data-file list of a snapshot's manifest; [[SnapshotNotFound]]
+    * when the snapshot has none. */
   def manifestEntries(table: String, snap: Long): Seq[DataFileEntry] = {
-    val manifest = Files.readString(Paths.get(table, "manifests", s"m-$snap.json"))
+    val manifest =
+      try Files.readString(Paths.get(table, "manifests", s"m-$snap.json"))
+      catch { case _: java.nio.file.NoSuchFileException =>
+        throw SnapshotNotFound(table, snap) }
     val entryRe =
       """\{"path": "([^"]+)", "bucket": (\d+), "rows": (\d+), "min_cell": (-?\d+), "max_cell": (-?\d+)\}""".r
     entryRe.findAllMatchIn(manifest).map { m =>
@@ -656,13 +660,7 @@ object IceLite {
   def read(spark: SparkSession, table: String, snap: Long,
       cellRange: Option[(Long, Long)] = None): Dataset[Tile] = {
     import spark.implicits._
-    val files = manifestEntries(table, snap).flatMap { e =>
-      if (e.rows == 0) None
-      else cellRange match {
-        case Some((a, b)) if e.maxCell < a || e.minCell > b => None // pruned
-        case _ => Some(e.path)
-      }
-    }
+    val files = scanFiles(table, snap, cellRange)
     if (files.isEmpty) spark.emptyDataset[Tile]
     // pinned Tile schema: no schema-inference footer job per read; files
     // carrying evolved extra columns simply don't surface them (same as
@@ -713,6 +711,52 @@ object IceLite {
   def deleteRows(spark: SparkSession, table: String, keys: DataFrame): Long =
     cowMutate(spark, table, keys.select("cellId"), isDelete = true)
 
+  /** Claims the next snapshot id for a copy-on-write `op` over the
+    * current snapshot. A mutation never resumes from partial state — any
+    * uncommitted debris at the new id (a crashed upsert, or a crashed
+    * compact's staged buckets) would pollute the dynamic-partition dirs;
+    * it is cleared and the id claimed with an op marker, so a LATER
+    * compact knows this lineage is not its own resume set. Returns
+    * (current snapshot, new snapshot, current manifest entries). */
+  private def claim(table: String, who: String,
+      op: String): (Long, Long, Seq[DataFileEntry]) = {
+    val snap = currentSnapshot(table).getOrElse(
+      throw new IllegalStateException(s"$who: no committed snapshot in $table"))
+    val newSnap = nextSnapshotId(table)
+    clearUncommitted(table, newSnap)
+    writeOpMarker(table, newSnap, op)
+    val entries = manifestEntries(table, snap)
+    require(entries.nonEmpty, s"$who: empty manifest for $table@$snap")
+    (snap, newSnap, entries)
+  }
+
+  /** Ownership ranges of a snapshot's live files as a (bucket, lo, hi)
+    * table: contiguous Z-ranges by construction, both edges open. */
+  private def ownershipRanges(spark: SparkSession,
+      entries: Seq[DataFileEntry]): DataFrame = {
+    import spark.implicits._
+    val owned = entries.filter(_.rows > 0).sortBy(_.minCell)
+    owned.indices.map { i =>
+      (owned(i).bucket, if (i == 0) Long.MinValue else owned(i).minCell,
+        if (i == owned.length - 1) Long.MaxValue else owned(i + 1).minCell - 1)
+    }.toDF("bucket", "lo", "hi")
+  }
+
+  /** `rows` with the `bucket` column that owns each cellId. */
+  private def withOwner(rows: DataFrame, ranges: DataFrame): DataFrame =
+    rows.join(broadcast(ranges), col("cellId") >= col("lo") && col("cellId") <= col("hi"))
+      .drop("lo", "hi")
+
+  /** Rows of the touched data files under the declared schema, each with
+    * its owning bucket (the partition column is not stored in the leaf
+    * files). Touched files may span SNAPSHOT EPOCHS with different
+    * physical schemas — the declared (or, untracked, mergeSchema) read
+    * null-fills columns a file predates, so a previously backfilled
+    * column can never read as absent and be erased by the rewrite. */
+  private def readOwned(spark: SparkSession, table: String,
+      files: Seq[DataFileEntry], ranges: DataFrame): DataFrame =
+    withOwner(readFilesDeclared(spark, files.map(_.path), tableSchema(table)), ranges)
+
   /** Range DELETE over the Z-order cell-id key — the retention /
     * partition-drop shape (`DELETE WHERE key BETWEEN lo AND hi`): a data
     * file whose manifest [minCell, maxCell] lies ENTIRELY inside the
@@ -726,100 +770,21 @@ object IceLite {
       hi: Long): Long = {
     import spark.implicits._
     require(lo <= hi, s"deleteRange: lo $lo must be <= hi $hi")
-    val snap = currentSnapshot(table).getOrElse(
-      throw new IllegalStateException(s"deleteRange: no committed snapshot in $table"))
-    val newSnap = nextSnapshotId(table)
-    clearUncommitted(table, newSnap)
-    writeOpMarker(table, newSnap, "delete")
-    val entries = manifestEntries(table, snap)
-    require(entries.nonEmpty, s"deleteRange: empty manifest for $table@$snap")
+    val (snap, newSnap, entries) = claim(table, "deleteRange", "delete")
     def overlaps(e: DataFileEntry) = e.rows > 0 && e.minCell <= hi && e.maxCell >= lo
     def fullIn(e: DataFileEntry) = e.rows > 0 && e.minCell >= lo && e.maxCell <= hi
     val straddle = entries.filter(e => overlaps(e) && !fullIn(e))
-    val stageRoot = s"$table/data/$newSnap"
-    val stats: Map[Int, (Int, Long, Long, Long, Long)] =
-      if (straddle.isEmpty) Map.empty
-      else {
-        // re-derive the partition column from the ownership ranges, as in
-        // the key-level COW path
-        val owned = entries.filter(_.rows > 0).sortBy(_.minCell)
-        val ranges = owned.zipWithIndex.map { case (e, i) =>
-          val rl = if (i == 0) Long.MinValue else owned(i).minCell
-          val rh = if (i == owned.length - 1) Long.MaxValue
-                   else owned(i + 1).minCell - 1
-          (e.bucket, rl, rh)
-        }
-        val rangeDf = spark.createDataset(ranges).toDF("bucket", "lo", "hi")
-        val srcBase = tableSchema(table) match {
-          case Some(cols) =>
-            spark.read.schema(structOf(cols)).parquet(straddle.map(_.path): _*)
-          case None => spark.read.option("mergeSchema", "true")
-            .parquet(straddle.map(_.path): _*)
-        }
-        // persist the survivor frame: the write materializes it once and
-        // the stats aggregation reads the cache (replaces the former
-        // written-files read-back — deterministic write, same values)
-        val surv = srcBase
-          .join(broadcast(rangeDf), $"cellId" >= $"lo" && $"cellId" <= $"hi")
-          .drop("lo", "hi")
-          .filter($"cellId" < lit(lo) || $"cellId" > lit(hi))
-          .localCheckpoint(false)
-        surv.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("bucket")
-          .parquet(stageRoot)
-        val st = surv
-          .select($"bucket".cast("int"), $"cellId", size($"payload"))
-          .as[(Int, Long, Int)]
-          .map { case (b, cid, nn) => (b, cid, cid * 31 + nn) }
-          .toDF("b", "cid", "chk")
-          .groupBy($"b")
-          .agg(count(lit(1)).as("rows"), expr("bit_xor(chk)").as("chk"),
-            min($"cid").as("rl"), max($"cid").as("rh"))
-          .as[(Int, Long, Long, Long, Long)]
-          .collect().map(s => s._1 -> s).toMap
-        surv.unpersist()
-        st
-      }
-    val straddleBuckets = straddle.map(_.bucket).toSet
-    mkdirs(Paths.get(table, "lineage", newSnap.toString))
-    val newEntries = entries.map { e =>
-      if (fullIn(e)) {
-        // METADATA-ONLY drop: old path kept for time travel, rows 0
-        writeAtomic(Paths.get(table, "lineage", newSnap.toString, s"b-${e.bucket}.json"),
-          s"""{"bucket": ${e.bucket}, "rows": 0, "checksum": 0}""")
-        s"""{"path": ${q(e.path)}, "bucket": ${e.bucket}, "rows": 0, "min_cell": 0, "max_cell": 0}"""
-      } else if (straddleBuckets.contains(e.bucket)) {
-        val (rows, chk, rl, rh) = stats.get(e.bucket)
-          .map(s => (s._2, s._3, s._4, s._5)).getOrElse((0L, 0L, 0L, 0L))
-        writeAtomic(Paths.get(table, "lineage", newSnap.toString, s"b-${e.bucket}.json"),
-          s"""{"bucket": ${e.bucket}, "rows": $rows, "checksum": $chk}""")
-        val dir = s"$stageRoot/bucket=${e.bucket}"
-        s"""{"path": ${q(dir)}, "bucket": ${e.bucket}, "rows": $rows, "min_cell": $rl, "max_cell": $rh}"""
-      } else {
-        val oldLin = Paths.get(table, "lineage", snap.toString, s"b-${e.bucket}.json")
-        if (Files.exists(oldLin))
-          Files.copy(oldLin,
-            Paths.get(table, "lineage", newSnap.toString, s"b-${e.bucket}.json"),
-            StandardCopyOption.REPLACE_EXISTING)
-        s"""{"path": ${q(e.path)}, "bucket": ${e.bucket}, "rows": ${e.rows}, "min_cell": ${e.minCell}, "max_cell": ${e.maxCell}}"""
-      }
-    }
-    writeAtomic(Paths.get(table, "manifests", s"m-$newSnap.json"),
-      newEntries.mkString("[", ",\n", "]"))
-    val v = currentVersion(table) + 1
-    // a pre-schema-tracking table keeps its metadata schema-LESS — an
-    // empty "schema": [] would trip tableSchema's drift guard
-    val schemaPart = tableSchema(table).map { cols =>
-      ",\n \"schema\": " + cols.map { case (n, t) =>
-        s"""{"name": ${q(n)}, "type": ${q(t)}}"""
-      }.mkString("[", ", ", "]")
-    }.getOrElse("")
-    writeAtomic(Paths.get(table, "metadata", s"v$v.json"),
-      s"""{"format": "icelite/1", "current_snapshot": $newSnap,
-         | "manifest": ${q(s"$table/manifests/m-$newSnap.json")},
-         | "buckets": ${entries.length}$schemaPart}""".stripMargin)
-    newSnap
+    val rewrite = straddle.map(_.bucket).toSet
+    val stats = writeBuckets(spark, table, newSnap,
+      readOwned(spark, table, straddle, ownershipRanges(spark, entries))
+        .filter($"cellId" < lit(lo) || $"cellId" > lit(hi)),
+      rewrite.toSeq.sorted, "delete")
+    commitSnapshot(table, newSnap, entries.map { e =>
+      e.bucket -> (
+        if (fullIn(e)) Dropped(e.path)
+        else if (rewrite.contains(e.bucket)) Rewritten(stats(e.bucket))
+        else Carried(e, snap))
+    }, tableSchema(table))
   }
 
   /** Shared copy-on-write mutation core of [[upsertDf]] (merge rows in)
@@ -832,171 +797,42 @@ object IceLite {
     val op = if (isDelete) "delete" else "upsert"
     require(updates.columns.contains("cellId"),
       s"$op: rows must carry a cellId key column")
-    val snap = currentSnapshot(table).getOrElse(
-      throw new IllegalStateException(s"$op: no committed snapshot in $table"))
-    val newSnap = nextSnapshotId(table)
-    // upsert never resumes from partial state — any uncommitted debris
-    // at newSnap (a previous crashed upsert, or a crashed compact's
-    // staged buckets) would pollute the stageRoot read-back and the
-    // dynamic-partition dirs; clear it and claim the id with a marker so
-    // a LATER compact knows this lineage is not its own resume set
-    clearUncommitted(table, newSnap)
-    writeOpMarker(table, newSnap, op)
-    val entries = manifestEntries(table, snap)
-    require(entries.nonEmpty, s"$op: empty manifest for $table@$snap")
-    val owned = entries.filter(_.rows > 0).sortBy(_.minCell)
-    require(owned.nonEmpty, s"$op: no data files in $table@$snap")
-    // ownership ranges: contiguous Z-ranges by construction; edges open
-    val ranges = owned.zipWithIndex.map { case (e, i) =>
-      val lo = if (i == 0) Long.MinValue else owned(i).minCell
-      val hi = if (i == owned.length - 1) Long.MaxValue
-               else owned(i + 1).minCell - 1
-      (e.bucket, lo, hi)
-    }
-    val rangeDf = spark.createDataset(ranges).toDF("bucket", "lo", "hi")
-    val updB = updates
-      .join(broadcast(rangeDf), $"cellId" >= $"lo" && $"cellId" <= $"hi")
-      .drop("lo", "hi").localCheckpoint(false)
+    val (snap, newSnap, entries) = claim(table, op, op)
+    require(entries.exists(_.rows > 0), s"$op: no data files in $table@$snap")
+    val ranges = ownershipRanges(spark, entries)
+    val updB = withOwner(updates, ranges).localCheckpoint(false)
     spark.sparkContext.setJobDescription(s"icelite $op $table@$newSnap touched-buckets")
     val touched = updB.select($"bucket").distinct().as[Int].collect().toSet
-    if (touched.isEmpty) { updB.unpersist(); return snap } // no-op upsert
-    val keys = updB.select($"cellId")
-    val oldTouchedFiles = owned.filter(e => touched.contains(e.bucket)).map(_.path)
-    // partition column `bucket` is not stored in the leaf files; survivors
-    // re-derive it from the same range table (contiguous ranges guarantee
-    // each row maps back to its own bucket)
-    // mergeSchema: touched buckets may span SNAPSHOT EPOCHS with
-    // different physical schemas (one already backfilled an evolved
-    // column, another predates it) — without the union schema, parquet
-    // would pick one file's schema arbitrarily and a previously
-    // backfilled column could silently read as absent and be erased by
-    // the rewrite
-    val survivorsBase = tableSchema(table) match {
-      case Some(cols) =>
-        // declared schema read: no mergeSchema all-footers job; files
-        // from older snapshot epochs null-fill the evolved columns —
-        // the same union-schema view mergeSchema produced
-        spark.read.schema(structOf(cols)).parquet(oldTouchedFiles: _*)
-      case None =>
-        spark.read.option("mergeSchema", "true").parquet(oldTouchedFiles: _*)
-    }
-    val survivors = survivorsBase
-      .join(broadcast(rangeDf), $"cellId" >= $"lo" && $"cellId" <= $"hi")
-      .drop("lo", "hi")
-      .join(keys, Seq("cellId"), "left_anti")
-    val stageRoot = s"$table/data/$newSnap"
+    if (touched.isEmpty) return snap // no-op upsert
+    val survivors = readOwned(spark, table,
+      entries.filter(e => touched.contains(e.bucket)), ranges)
+      .join(updB.select($"cellId"), Seq("cellId"), "left_anti")
     // allowMissingColumns: survivors written before an evolveAddColumn
     // lack the new columns — they null-fill here (schema evolution's
     // write path); updates lacking a dropped-from-updates column would
     // likewise null-fill rather than fail. Delete keeps ONLY survivors.
-    val merged0 =
+    val merged =
       if (isDelete) survivors
       else survivors.unionByName(updB, allowMissingColumns = true)
     // lineage checksums carried forward BY REFERENCE for untouched
-    // buckets use the (cid*31 + payload size) formula — rewritten
-    // buckets must use the same one or the table's checksum set would
-    // mix two formulas; a payload-less table has no creation path here.
+    // buckets use the payload-size checksum term — rewritten buckets must
+    // use the same one or the table's checksum set would mix two
+    // formulas; a payload-less table has no creation path here.
     // Validated BEFORE the stage write so a payload-less table fails
     // without leaving staged debris under data/<newSnap> (ADVICE r4 #3).
-    require(merged0.columns.contains("payload"),
+    require(merged.columns.contains("payload"),
       s"$op: tables without a payload column are not supported " +
         "(lineage checksum formula is payload-based)")
-    // stats of the rewritten buckets only: rows, order-independent
-    // checksum, cell min/max (a delete that empties every touched bucket
-    // simply yields empty stats; all touched buckets then record
-    // rows: 0). FAST PATH (same as commitResumableDf): the stats ride
-    // the write job as observed metrics — one job for merge + write +
-    // stats, no persist of the merge frame at all. Wide touch sets
-    // (> 64 buckets) persist and aggregate separately as before.
-    val touchedSeq = touched.toSeq.sorted
-    val useObserve = touchedSeq.size <= 64
-    val obs = org.apache.spark.sql.Observation(s"$op$newSnap")
-    val merged =
-      if (useObserve) {
-        val chkTerm = udf((cid: Long, nn: Int) => cid * 31 + nn)
-        val aggs = touchedSeq.flatMap { b =>
-          val c = $"bucket" === lit(b)
-          Seq(count(when(c, lit(1))).as(s"n$b"),
-            expr(s"bit_xor(IF(bucket = $b, chk_term, NULL))").as(s"x$b"),
-            min(when(c, $"cellId")).as(s"lo$b"),
-            max(when(c, $"cellId")).as(s"hi$b"))
-        }
-        merged0.withColumn("chk_term", chkTerm($"cellId", size($"payload")))
-          .observe(obs, aggs.head, aggs.tail: _*)
-          .drop("chk_term")
-      } else
-        merged0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    spark.sparkContext.setJobDescription(s"icelite $op $table@$newSnap write")
-    merged
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("bucket")
-      .parquet(stageRoot)
-    updB.unpersist()
-    def statsAgg(): Map[Int, (Int, Long, Long, Long, Long)] = merged
-      .select($"bucket".cast("int"), $"cellId", size($"payload"))
-      .as[(Int, Long, Int)]
-      .map { case (b, cid, nn) => (b, cid, cid * 31 + nn) }
-      .toDF("b", "cid", "chk")
-      .groupBy($"b")
-      .agg(count(lit(1)).as("rows"), expr("bit_xor(chk)").as("chk"),
-        min($"cid").as("lo"), max($"cid").as("hi"))
-      .as[(Int, Long, Long, Long, Long)]
-      .collect().map(s => s._1 -> s).toMap
-    val stats: Map[Int, (Int, Long, Long, Long, Long)] =
-      if (!useObserve) statsAgg()
-      else {
-        val m = awaitMetrics(obs)
-        if (m.isEmpty) statsAgg()
-        else touchedSeq.flatMap { b =>
-          val rows = m(s"n$b").asInstanceOf[Long]
-          if (rows == 0L) None // emptied bucket: records rows 0 below
-          else {
-            def l(k: String) = m(k).asInstanceOf[Long]
-            Some(b -> ((b, rows, l(s"x$b"), l(s"lo$b"), l(s"hi$b"))))
-          }
-        }.toMap
-      }
-    if (!useObserve) merged.unpersist()
-    spark.sparkContext.setJobDescription(null)
-    mkdirs(Paths.get(table, "lineage", newSnap.toString))
-    val newEntries = entries.map { e =>
-      if (!touched.contains(e.bucket)) {
-        // BY REFERENCE: untouched bucket keeps its old data files; its
-        // lineage row carries forward unchanged
-        val oldLin = Paths.get(table, "lineage", snap.toString, s"b-${e.bucket}.json")
-        if (Files.exists(oldLin))
-          Files.copy(oldLin,
-            Paths.get(table, "lineage", newSnap.toString, s"b-${e.bucket}.json"),
-            StandardCopyOption.REPLACE_EXISTING)
-        s"""{"path": ${q(e.path)}, "bucket": ${e.bucket}, "rows": ${e.rows}, "min_cell": ${e.minCell}, "max_cell": ${e.maxCell}}"""
-      } else {
-        val (rows, chk, lo, hi) = stats.get(e.bucket)
-          .map(s => (s._2, s._3, s._4, s._5)).getOrElse((0L, 0L, 0L, 0L))
-        writeAtomic(Paths.get(table, "lineage", newSnap.toString, s"b-${e.bucket}.json"),
-          s"""{"bucket": ${e.bucket}, "rows": $rows, "checksum": $chk}""")
-        val dir = s"$stageRoot/bucket=${e.bucket}"
-        s"""{"path": ${q(dir)}, "bucket": ${e.bucket}, "rows": $rows, "min_cell": $lo, "max_cell": $hi}"""
-      }
-    }
-    writeAtomic(Paths.get(table, "manifests", s"m-$newSnap.json"),
-      newEntries.mkString("[", ",\n", "]"))
-    val v = currentVersion(table) + 1
+    val stats = writeBuckets(spark, table, newSnap, merged, touched.toSeq.sorted, op)
     // declared schema survives an upsert that doesn't carry an evolved
     // column; columns first seen in this upsert append at the end
     val declared = tableSchema(table).getOrElse(Seq.empty)
-    val written = merged.schema.fields.filterNot(_.name == "bucket")
-      .map(f => (f.name, f.dataType.sql)).toSeq
-    val outSchema = declared ++ written.filterNot(c => declared.exists(_._1 == c._1))
-    val outSchemaJson = outSchema.map { case (n, t) =>
-      s"""{"name": ${q(n)}, "type": ${q(t)}}"""
-    }.mkString("[", ", ", "]")
-    writeAtomic(Paths.get(table, "metadata", s"v$v.json"),
-      s"""{"format": "icelite/1", "current_snapshot": $newSnap,
-         | "manifest": ${q(s"$table/manifests/m-$newSnap.json")},
-         | "buckets": ${entries.length},
-         | "schema": $outSchemaJson}""".stripMargin)
-    newSnap
+    val written = schemaOf(merged)
+    commitSnapshot(table, newSnap, entries.map { e =>
+      e.bucket -> (
+        if (touched.contains(e.bucket)) Rewritten(stats(e.bucket))
+        else Carried(e, snap))
+    }, Some(declared ++ written.filterNot(c => declared.exists(_._1 == c._1))))
   }
 
   /** Small-file COMPACTION — the Iceberg `rewrite_data_files` analog and
@@ -1048,9 +884,7 @@ object IceLite {
 
   private def opMarkerOf(table: String, snap: Long): Option[String] = {
     val p = Paths.get(table, "lineage", snap.toString, "op.json")
-    if (!Files.exists(p)) None
-    else "\"op\"\\s*:\\s*\"([^\"]+)\"".r
-      .findFirstMatchIn(Files.readString(p)).map(_.group(1))
+    if (!Files.exists(p)) None else strField(Files.readString(p), "op")
   }
 
   /** Delete UNCOMMITTED lineage + staged data at a snapshot id (the
@@ -1063,7 +897,8 @@ object IceLite {
   }
 
   /** List a directory's children with the stream CLOSED afterwards
-    * (bare `Files.list(...).iterator()` leaks one fd per call). */
+    * (bare `Files.list(...).iterator()` leaks one fd per call); empty
+    * when the directory does not exist. */
   private def listDir(p: Path): Seq[Path] = {
     if (!Files.exists(p)) Seq.empty
     else {
@@ -1087,6 +922,23 @@ object IceLite {
     ()
   }
 
+  /** Normalized data paths referenced by the manifests of `snaps`. */
+  private def referencedPaths(table: String, snaps: Iterable[Long]): Set[String] =
+    snaps.iterator.flatMap(manifestEntries(table, _))
+      .map(e => Paths.get(e.path).normalize.toString).toSet
+
+  /** Deletes snapshot `snap`: every data dir of its manifest not in
+    * `live`, the manifest and its lineage dir. Returns the deleted data
+    * dir count. */
+  private def dropSnapshot(table: String, snap: Long, live: Set[String]): Int = {
+    val dirs = manifestEntries(table, snap).map(e => Paths.get(e.path).normalize)
+      .filter(d => !live.contains(d.toString) && Files.exists(d))
+    dirs.foreach(deleteRecursively)
+    Files.deleteIfExists(Paths.get(table, "manifests", s"m-$snap.json"))
+    deleteRecursively(Paths.get(table, "lineage", snap.toString))
+    dirs.length
+  }
+
   /** SNAPSHOT EXPIRY — the Iceberg `expire_snapshots` analog: keep the
     * most recent `keepLast` snapshots (the current one always survives)
     * and delete the manifests, lineage dirs and data files of the rest.
@@ -1105,21 +957,8 @@ object IceLite {
     val keep = (all.takeRight(keepLast) ++ current ++ stagedRefs(table)).toSet
     val expired = all.filterNot(keep.contains)
     if (expired.isEmpty) return 0
-    val liveFiles = keep.toSeq.flatMap(s => manifestEntries(table, s).map(_.path))
-      .map(Paths.get(_).normalize.toString).toSet
-    var deleted = 0
-    expired.foreach { s =>
-      manifestEntries(table, s).foreach { e =>
-        val p = Paths.get(e.path).normalize
-        if (!liveFiles.contains(p.toString) && Files.exists(p)) {
-          deleteRecursively(p); deleted += 1
-        }
-      }
-      Files.deleteIfExists(Paths.get(table, "manifests", s"m-$s.json"))
-      val lin = Paths.get(table, "lineage", s.toString)
-      if (Files.exists(lin)) deleteRecursively(lin)
-    }
-    deleted
+    val live = referencedPaths(table, keep)
+    expired.map(dropSnapshot(table, _, live)).sum
   }
 
   /** ORPHAN-FILE GC — the Iceberg `remove_orphan_files` analog: delete
@@ -1149,9 +988,7 @@ object IceLite {
       try now - Files.getLastModifiedTime(p).toMillis < graceMs
       catch { case _: java.io.IOException => true } // racing writer: skip
     val live = snapshots(table).toSet
-    val referenced = live.toSeq
-      .flatMap(s => manifestEntries(table, s).map(_.path))
-      .map(Paths.get(_).normalize.toString).toSet
+    val referenced = referencedPaths(table, live)
     var deleted = 0
     listDir(dataRoot).foreach { snapDir =>
       if (Files.isDirectory(snapDir)) {
@@ -1174,8 +1011,7 @@ object IceLite {
         if (manifestLess && !snapFresh) {
           // the snapshot never committed: its checkpoint rows must die
           // with its data (see scaladoc)
-          val lin = Paths.get(table, "lineage", snapName)
-          if (Files.exists(lin)) deleteRecursively(lin)
+          deleteRecursively(Paths.get(table, "lineage", snapName))
         }
         if (listDir(snapDir).isEmpty) Files.deleteIfExists(snapDir)
       }
@@ -1183,20 +1019,17 @@ object IceLite {
     deleted
   }
 
+  /** Lineage row: one bucket's committed rows and checksum. */
+  private def encodeLineage(l: Lineage): String =
+    s"""{"bucket": ${l.bucket}, "rows": ${l.rows}, "checksum": ${l.checksum}}"""
+
   /** Lineage rows of a snapshot (metrics surface). */
   def lineage(table: String, snap: Long): Seq[Lineage] = {
-    val dir = Paths.get(table, "lineage", snap.toString)
-    if (!Files.exists(dir)) Seq.empty
-    else {
-      val re = """\{"bucket": (\d+), "rows": (\d+), "checksum": (-?\d+)\}""".r
-      val out = Seq.newBuilder[Lineage]
-      Files.list(dir).iterator().forEachRemaining { p =>
-        if (p.getFileName.toString.endsWith(".json"))
-          re.findFirstMatchIn(Files.readString(p)).foreach { m =>
-            out += Lineage(m.group(1).toInt, m.group(2).toLong, m.group(3).toLong)
-          }
-      }
-      out.result().sortBy(_.bucket)
-    }
+    val re = """\{"bucket": (\d+), "rows": (\d+), "checksum": (-?\d+)\}""".r
+    listDir(Paths.get(table, "lineage", snap.toString))
+      .filter(_.getFileName.toString.endsWith(".json"))
+      .flatMap(p => re.findFirstMatchIn(Files.readString(p)))
+      .map(m => Lineage(m.group(1).toInt, m.group(2).toLong, m.group(3).toLong))
+      .sortBy(_.bucket)
   }
 }

@@ -288,7 +288,7 @@ class IceLiteSpec extends AnyFunSuite {
     assert(IceLite.snapshots(table) == Seq(1L))
     assert(IceLite.refSnapshot(table, "bad").isEmpty)
     assert(IceLite.read(spark, table, 1L).count() == 6) // main intact
-    intercept[Exception] { IceLite.read(spark, table, 2L).count() }
+    intercept[IceLite.SnapshotNotFound] { IceLite.read(spark, table, 2L).count() }
     // the freed id is safely reclaimable by the next writer
     assert(IceLite.nextSnapshotId(table) == 2L)
     // published snapshots refuse the abandon arm
@@ -541,7 +541,7 @@ class IceLiteSpec extends AnyFunSuite {
     assert(IceLite.read(spark, table, 2L).count() == n2)
     assert(IceLite.lineage(table, 1L).isEmpty)
     // time travel to the expired snapshot now fails (manifest gone)
-    intercept[Exception] { IceLite.manifestEntries(table, 1L) }
+    intercept[IceLite.SnapshotNotFound] { IceLite.manifestEntries(table, 1L) }
     // idempotent: nothing left to expire or GC
     assert(IceLite.expireSnapshots(table, keepLast = 1) == 0)
     assert(IceLite.removeOrphanFiles(table, graceMs = 0L) == 0)
@@ -569,5 +569,218 @@ class IceLiteSpec extends AnyFunSuite {
       assert(v.zip(want(k)).forall { case (x, y) =>
         x == y || (x.isNaN && y.isNaN) })
     }
+  }
+
+  /** Every metadata/manifest/lineage/ref file of `table`, sorted by path,
+    * with the table path replaced by `<T>`. */
+  private def formatDump(table: String, dirs: Seq[String]): String = {
+    val root = java.nio.file.Paths.get(table)
+    dirs.map(root.resolve).filter(Files.exists(_)).flatMap { d =>
+      val st = Files.walk(d)
+      try st.filter(Files.isRegularFile(_)).toArray.toSeq
+        .map(_.asInstanceOf[java.nio.file.Path])
+      finally st.close()
+    }.map { p =>
+      s"== ${root.relativize(p)}\n" + Files.readString(p).replace(table, "<T>")
+    }.sorted.mkString("\n")
+  }
+
+  // Existing tables are read back through these exact bytes (resume and
+  // the lineage audit trust the checksums), so every writer runs once on
+  // one small table and its files must match the literals below verbatim.
+  test("on-disk format pin: bytes of every writer's metadata, manifests, lineage and refs") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    import graft.core.{CellId, GridRef}
+    val ref = GridRef(ncols = 1024, nrows = 64, xll = 0, yll = 0,
+      cellsize = 1, nodata = -9999)
+    val strip = TileOps.tileGrid(spark, ref, 6)((r, c) => (r + c).toDouble)
+    val table = Files.createTempDirectory("icelite-pin").toString
+    IceLite.commitResumable(spark, strip, table, buckets = 4, snap = 1L)
+    IceLite.commitResumable(spark, strip.filter(_.col0 != 0), table,
+      buckets = 4, snap = 2L, stageRef = Some("audit"))
+    val staged = formatDump(table, Seq("refs"))
+    IceLite.publish(table, "audit")
+    val s3 = IceLite.upsert(spark, table, strip.filter(_.col0 <= 64)
+      .map(t => t.copy(payload = t.payload.map(_ + 1.0))))
+    val s4 = IceLite.deleteRows(spark, table,
+      strip.filter(_.col0 == 960).toDF().select("cellId"))
+    val s5 = IceLite.deleteRange(spark, table,
+      CellId.encode(6, 7, 0), CellId.encode(6, 8, 0))
+    IceLite.evolveAddColumn(table, "grade", "BIGINT")
+    val s6 = IceLite.upsertDf(spark, table, IceLite.readDf(spark, table, s5)
+      .filter($"col0" === 128).withColumn("grade", lit(9L)))
+    IceLite.rollback(table, s5)
+    val s7 = IceLite.compact(spark, table, targetBuckets = 2)
+    assert(Seq(s3, s4, s5, s6, s7) == Seq(3L, 4L, 5L, 6L, 7L))
+    val all = formatDump(table, Seq("metadata", "manifests", "lineage", "refs"))
+    assert(staged == """== refs/audit.json
+      |{"snap": 2, "buckets": 4,
+      | "schema": [{"name": "cellId", "type": "BIGINT"}, {"name": "row0", "type": "INT"}, {"name": "col0", "type": "INT"}, {"name": "h", "type": "INT"}, {"name": "w", "type": "INT"}, {"name": "payload", "type": "ARRAY<DOUBLE>"}]}""".stripMargin)
+    assert(all == """== lineage/1/b-0.json
+      |{"bucket": 0, "rows": 8, "checksum": 992}
+      |== lineage/1/b-1.json
+      |{"bucket": 1, "rows": 0, "checksum": 0}
+      |== lineage/1/b-2.json
+      |{"bucket": 2, "rows": 1, "checksum": -1729382256910264384}
+      |== lineage/1/b-3.json
+      |{"bucket": 3, "rows": 7, "checksum": -1729382256910264416}
+      |== lineage/2/b-0.json
+      |{"bucket": 0, "rows": 7, "checksum": -1729382256910265376}
+      |== lineage/2/b-1.json
+      |{"bucket": 1, "rows": 0, "checksum": 0}
+      |== lineage/2/b-2.json
+      |{"bucket": 2, "rows": 1, "checksum": -1729382256910264384}
+      |== lineage/2/b-3.json
+      |{"bucket": 3, "rows": 7, "checksum": -1729382256910264416}
+      |== lineage/3/b-0.json
+      |{"bucket": 0, "rows": 8, "checksum": 992}
+      |== lineage/3/b-1.json
+      |{"bucket": 1, "rows": 0, "checksum": 0}
+      |== lineage/3/b-2.json
+      |{"bucket": 2, "rows": 1, "checksum": -1729382256910264384}
+      |== lineage/3/b-3.json
+      |{"bucket": 3, "rows": 7, "checksum": -1729382256910264416}
+      |== lineage/3/op.json
+      |{"op": "upsert"}
+      |== lineage/4/b-0.json
+      |{"bucket": 0, "rows": 8, "checksum": 992}
+      |== lineage/4/b-1.json
+      |{"bucket": 1, "rows": 0, "checksum": 0}
+      |== lineage/4/b-2.json
+      |{"bucket": 2, "rows": 1, "checksum": -1729382256910264384}
+      |== lineage/4/b-3.json
+      |{"bucket": 3, "rows": 6, "checksum": 3563}
+      |== lineage/4/op.json
+      |{"op": "delete"}
+      |== lineage/5/b-0.json
+      |{"bucket": 0, "rows": 7, "checksum": -1729382256910266005}
+      |== lineage/5/b-1.json
+      |{"bucket": 1, "rows": 0, "checksum": 0}
+      |== lineage/5/b-2.json
+      |{"bucket": 2, "rows": 0, "checksum": 0}
+      |== lineage/5/b-3.json
+      |{"bucket": 3, "rows": 6, "checksum": 3563}
+      |== lineage/5/op.json
+      |{"op": "delete"}
+      |== lineage/6/b-0.json
+      |{"bucket": 0, "rows": 7, "checksum": -1729382256910266005}
+      |== lineage/6/b-1.json
+      |{"bucket": 1, "rows": 0, "checksum": 0}
+      |== lineage/6/b-2.json
+      |{"bucket": 2, "rows": 0, "checksum": 0}
+      |== lineage/6/b-3.json
+      |{"bucket": 3, "rows": 6, "checksum": 3563}
+      |== lineage/6/op.json
+      |{"op": "upsert"}
+      |== lineage/7/b-0.json
+      |{"bucket": 0, "rows": 7, "checksum": -1729382256910266005}
+      |== lineage/7/b-1.json
+      |{"bucket": 1, "rows": 6, "checksum": 3563}
+      |== lineage/7/op.json
+      |{"op": "compact"}
+      |== manifests/m-1.json
+      |[{"path": "<T>/data/1/bucket=0", "bucket": 0, "rows": 8, "min_cell": 1729382256910270464, "max_cell": 1729382256910270485},
+      |{"path": "<T>/data/1/bucket=1", "bucket": 1, "rows": 0, "min_cell": 0, "max_cell": 0},
+      |{"path": "<T>/data/1/bucket=2", "bucket": 2, "rows": 1, "min_cell": 1729382256910270528, "max_cell": 1729382256910270528},
+      |{"path": "<T>/data/1/bucket=3", "bucket": 3, "rows": 7, "min_cell": 1729382256910270529, "max_cell": 1729382256910270549}]
+      |== manifests/m-2.json
+      |[{"path": "<T>/data/2/bucket=0", "bucket": 0, "rows": 7, "min_cell": 1729382256910270465, "max_cell": 1729382256910270485},
+      |{"path": "<T>/data/2/bucket=1", "bucket": 1, "rows": 0, "min_cell": 0, "max_cell": 0},
+      |{"path": "<T>/data/2/bucket=2", "bucket": 2, "rows": 1, "min_cell": 1729382256910270528, "max_cell": 1729382256910270528},
+      |{"path": "<T>/data/2/bucket=3", "bucket": 3, "rows": 7, "min_cell": 1729382256910270529, "max_cell": 1729382256910270549}]
+      |== manifests/m-3.json
+      |[{"path": "<T>/data/3/bucket=0", "bucket": 0, "rows": 8, "min_cell": 1729382256910270464, "max_cell": 1729382256910270485},
+      |{"path": "<T>/data/2/bucket=1", "bucket": 1, "rows": 0, "min_cell": 0, "max_cell": 0},
+      |{"path": "<T>/data/2/bucket=2", "bucket": 2, "rows": 1, "min_cell": 1729382256910270528, "max_cell": 1729382256910270528},
+      |{"path": "<T>/data/2/bucket=3", "bucket": 3, "rows": 7, "min_cell": 1729382256910270529, "max_cell": 1729382256910270549}]
+      |== manifests/m-4.json
+      |[{"path": "<T>/data/3/bucket=0", "bucket": 0, "rows": 8, "min_cell": 1729382256910270464, "max_cell": 1729382256910270485},
+      |{"path": "<T>/data/2/bucket=1", "bucket": 1, "rows": 0, "min_cell": 0, "max_cell": 0},
+      |{"path": "<T>/data/2/bucket=2", "bucket": 2, "rows": 1, "min_cell": 1729382256910270528, "max_cell": 1729382256910270528},
+      |{"path": "<T>/data/4/bucket=3", "bucket": 3, "rows": 6, "min_cell": 1729382256910270529, "max_cell": 1729382256910270548}]
+      |== manifests/m-5.json
+      |[{"path": "<T>/data/5/bucket=0", "bucket": 0, "rows": 7, "min_cell": 1729382256910270464, "max_cell": 1729382256910270484},
+      |{"path": "<T>/data/2/bucket=1", "bucket": 1, "rows": 0, "min_cell": 0, "max_cell": 0},
+      |{"path": "<T>/data/2/bucket=2", "bucket": 2, "rows": 0, "min_cell": 0, "max_cell": 0},
+      |{"path": "<T>/data/4/bucket=3", "bucket": 3, "rows": 6, "min_cell": 1729382256910270529, "max_cell": 1729382256910270548}]
+      |== manifests/m-6.json
+      |[{"path": "<T>/data/6/bucket=0", "bucket": 0, "rows": 7, "min_cell": 1729382256910270464, "max_cell": 1729382256910270484},
+      |{"path": "<T>/data/2/bucket=1", "bucket": 1, "rows": 0, "min_cell": 0, "max_cell": 0},
+      |{"path": "<T>/data/2/bucket=2", "bucket": 2, "rows": 0, "min_cell": 0, "max_cell": 0},
+      |{"path": "<T>/data/4/bucket=3", "bucket": 3, "rows": 6, "min_cell": 1729382256910270529, "max_cell": 1729382256910270548}]
+      |== manifests/m-7.json
+      |[{"path": "<T>/data/7/bucket=0", "bucket": 0, "rows": 7, "min_cell": 1729382256910270464, "max_cell": 1729382256910270484},
+      |{"path": "<T>/data/7/bucket=1", "bucket": 1, "rows": 6, "min_cell": 1729382256910270529, "max_cell": 1729382256910270548}]
+      |== metadata/v1.json
+      |{"format": "icelite/1", "current_snapshot": 1,
+      | "manifest": "<T>/manifests/m-1.json",
+      | "buckets": 4,
+      | "schema": [{"name": "cellId", "type": "BIGINT"}, {"name": "row0", "type": "INT"}, {"name": "col0", "type": "INT"}, {"name": "h", "type": "INT"}, {"name": "w", "type": "INT"}, {"name": "payload", "type": "ARRAY<DOUBLE>"}]}
+      |== metadata/v2.json
+      |{"format": "icelite/1", "current_snapshot": 2,
+      | "manifest": "<T>/manifests/m-2.json",
+      | "buckets": 4,
+      | "schema": [{"name": "cellId", "type": "BIGINT"}, {"name": "row0", "type": "INT"}, {"name": "col0", "type": "INT"}, {"name": "h", "type": "INT"}, {"name": "w", "type": "INT"}, {"name": "payload", "type": "ARRAY<DOUBLE>"}]}
+      |== metadata/v3.json
+      |{"format": "icelite/1", "current_snapshot": 3,
+      | "manifest": "<T>/manifests/m-3.json",
+      | "buckets": 4,
+      | "schema": [{"name": "cellId", "type": "BIGINT"}, {"name": "row0", "type": "INT"}, {"name": "col0", "type": "INT"}, {"name": "h", "type": "INT"}, {"name": "w", "type": "INT"}, {"name": "payload", "type": "ARRAY<DOUBLE>"}]}
+      |== metadata/v4.json
+      |{"format": "icelite/1", "current_snapshot": 4,
+      | "manifest": "<T>/manifests/m-4.json",
+      | "buckets": 4,
+      | "schema": [{"name": "cellId", "type": "BIGINT"}, {"name": "row0", "type": "INT"}, {"name": "col0", "type": "INT"}, {"name": "h", "type": "INT"}, {"name": "w", "type": "INT"}, {"name": "payload", "type": "ARRAY<DOUBLE>"}]}
+      |== metadata/v5.json
+      |{"format": "icelite/1", "current_snapshot": 5,
+      | "manifest": "<T>/manifests/m-5.json",
+      | "buckets": 4,
+      | "schema": [{"name": "cellId", "type": "BIGINT"}, {"name": "row0", "type": "INT"}, {"name": "col0", "type": "INT"}, {"name": "h", "type": "INT"}, {"name": "w", "type": "INT"}, {"name": "payload", "type": "ARRAY<DOUBLE>"}]}
+      |== metadata/v6.json
+      |{"format": "icelite/1", "current_snapshot": 5,
+      | "manifest": "<T>/manifests/m-5.json",
+      | "buckets": 4,
+      | "schema": [{"name": "cellId", "type": "BIGINT"}, {"name": "row0", "type": "INT"}, {"name": "col0", "type": "INT"}, {"name": "h", "type": "INT"}, {"name": "w", "type": "INT"}, {"name": "payload", "type": "ARRAY<DOUBLE>"}, {"name": "grade", "type": "BIGINT"}]}
+      |== metadata/v7.json
+      |{"format": "icelite/1", "current_snapshot": 6,
+      | "manifest": "<T>/manifests/m-6.json",
+      | "buckets": 4,
+      | "schema": [{"name": "cellId", "type": "BIGINT"}, {"name": "row0", "type": "INT"}, {"name": "col0", "type": "INT"}, {"name": "h", "type": "INT"}, {"name": "w", "type": "INT"}, {"name": "payload", "type": "ARRAY<DOUBLE>"}, {"name": "grade", "type": "BIGINT"}]}
+      |== metadata/v8.json
+      |{"format": "icelite/1", "current_snapshot": 5,
+      | "manifest": "<T>/manifests/m-5.json",
+      | "buckets": 4,
+      | "schema": [{"name": "cellId", "type": "BIGINT"}, {"name": "row0", "type": "INT"}, {"name": "col0", "type": "INT"}, {"name": "h", "type": "INT"}, {"name": "w", "type": "INT"}, {"name": "payload", "type": "ARRAY<DOUBLE>"}, {"name": "grade", "type": "BIGINT"}]}
+      |== metadata/v9.json
+      |{"format": "icelite/1", "current_snapshot": 7,
+      | "manifest": "<T>/manifests/m-7.json",
+      | "buckets": 2,
+      | "schema": [{"name": "cellId", "type": "BIGINT"}, {"name": "row0", "type": "INT"}, {"name": "col0", "type": "INT"}, {"name": "h", "type": "INT"}, {"name": "w", "type": "INT"}, {"name": "payload", "type": "ARRAY<DOUBLE>"}, {"name": "grade", "type": "BIGINT"}]}""".stripMargin)
+  }
+
+  test("lineage() closes its directory stream: 500 calls leak no fds") {
+    val table = Files.createTempDirectory("icelite-fd").toString
+    IceLite.commitResumable(spark, demTiles, table, buckets = 4, snap = 1L)
+    val fdDir = java.nio.file.Paths.get("/proc/self/fd")
+    def openFds(): Int = {
+      val st = Files.list(fdDir)
+      try st.count().toInt finally st.close()
+    }
+    val before = openFds()
+    (1 to 500).foreach(_ => assert(IceLite.lineage(table, 1L).size == 4))
+    assert(openFds() - before < 10)
+  }
+
+  test("awaitMetrics: an Observation that never fires yields no metrics and parks no thread") {
+    import scala.concurrent.duration._
+    import scala.jdk.CollectionConverters._
+    val never = org.apache.spark.sql.Observation("icelite-never-fires")
+    assert(IceLite.awaitMetrics(never, 200.millis).isEmpty)
+    val parked = Thread.getAllStackTraces.asScala.filter { case (t, st) =>
+      t.isAlive && st.exists(f => f.getClassName == classOf[
+        org.apache.spark.sql.Observation].getName && f.getMethodName == "get")
+    }.keys.map(_.getName)
+    assert(parked.isEmpty, s"threads parked in Observation.get: $parked")
   }
 }
