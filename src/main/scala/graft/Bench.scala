@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.core._
 import graft.corpus.{ImageCorpus, Synth}
 import graft.operators._
+import scala.util.control.NonFatal
 
 /** Benchmark main (driver contract: ONE JSON line on stdout).
   *
@@ -195,6 +196,12 @@ object Bench {
     }
   }
 
+  /** Write the `n`-tile input corpus table to `path` unless a complete
+    * one (its `_SUCCESS` marker) is already there. */
+  private[graft] def writeCorpus(s: SparkSession, path: String, n: Long, gridW: Int): Unit =
+    if (!new java.io.File(path + "/_SUCCESS").exists())
+      ImageCorpus.generate(s, n, gridW).write.mode("overwrite").parquet(path)
+
   private def time[A](f: => A): (A, Double) = {
     val t0 = System.nanoTime()
     val a = f
@@ -217,32 +224,34 @@ object Bench {
     // on at 100TB where warmup is amortized to zero.
     val s1 = session(cpus, coalesce = true)
     val skipQueries = sys.env.contains("SPARK_GRAFT_BENCH_10X_ONLY")
-    val sorted =
-      if (skipQueries) Seq.empty else SparkEntry.queries.toSeq.sortBy(_._1)
-    sorted.foreach { case (_, fn) =>
-      try fn(s1, sfDir).count() catch { case _: Throwable => }
-    }
+    val sorted = if (skipQueries) Seq.empty else SparkEntry.gated.sortBy(_.name)
+    // a query that throws on any pass is listed under queries_failed and
+    // gets no time: a failure's wall is not the query's cost
+    val failed = scala.collection.mutable.ArrayBuffer[String]()
+    def ran(g: graft.gated.GatedQuery): Boolean =
+      try { g.run(s1, sfDir).count(); true }
+      catch { case NonFatal(e) =>
+        System.err.println(s"[bench] ${g.name} failed: $e")
+        failed += g.name
+        false
+      }
+    val warmed = sorted.filter(ran)
     // min of two timed executions per query: co-tenant load on this host
     // is bursty and one-sided (stalls only ever ADD time), so a single
     // sample can catch a multi-second steal window; the min estimates
     // steady-state operator cost
-    val results = sorted.map { case (name, fn) =>
-      val secs = (1 to 2).map { _ =>
-        val (_, sec) = time {
-          try fn(s1, sfDir).count()
-          catch { case _: Throwable => -1L }
-        }
-        sec
-      }
-      name -> secs.min
+    val results = warmed.flatMap { g =>
+      val secs = Iterator.fill(2)(time(ran(g))).takeWhile(_._1).map(_._2).toSeq
+      if (secs.size == 2) Some(g.name -> secs.min) else None
     }
+    val failedJson = failed.map(n => "\"" + n + "\"").mkString("[", ",", "]")
     // local-iteration mode: print the query table and stop before the
     // pipeline/scaling sections (the driver never sets this)
     if (sys.env.contains("SPARK_GRAFT_BENCH_QUERIES_ONLY")) {
       val qj = results.map { case (n, t) => s""""$n":$t""" }.mkString(",")
-      println(s"""{"metric":"queries_only","value":${results.map(_._2).sum},"unit":"sec","queries":{$qj},"sf":"$sfDir","load_avg_1m":${
+      println(s"""{"metric":"queries_only","value":${results.map(_._2).sum},"unit":"sec","queries":{$qj},"queries_failed":$failedJson,"sf":"$sfDir","load_avg_1m":${
         try scala.io.Source.fromFile("/proc/loadavg").mkString.split(" ")(0).toDouble
-        catch { case _: Throwable => -1.0 }}}""")
+        catch { case NonFatal(_) => -1.0 }}}""")
       s1.stop()
       return
     }
@@ -251,10 +260,8 @@ object Bench {
     val corpusPath = s"/dev/shm/graft_bench_corpus_$nTiles"
     val warmPath = "/dev/shm/graft_bench_corpus_warm"
     val warmTiles = 512L
-    if (!new java.io.File(corpusPath + "/_SUCCESS").exists())
-      ImageCorpus.generate(s1, nTiles, gridW).write.mode("overwrite").parquet(corpusPath)
-    if (!new java.io.File(warmPath + "/_SUCCESS").exists())
-      ImageCorpus.generate(s1, warmTiles, gridW).write.mode("overwrite").parquet(warmPath)
+    writeCorpus(s1, corpusPath, nTiles, gridW)
+    writeCorpus(s1, warmPath, warmTiles, gridW)
     // accumulator-backed metrics: one UNTIMED instrumented pass on the
     // warm corpus — demonstrates the counters roll up through the real
     // decode/burn tasks; timed reps below stay uninstrumented
@@ -272,7 +279,7 @@ object Bench {
     // whichever level happened to run during a stall.
     def loadAvg1m(): Double = try {
       scala.io.Source.fromFile("/proc/loadavg").mkString.split(" ")(0).toDouble
-    } catch { case _: Throwable => -1.0 }
+    } catch { case NonFatal(_) => -1.0 }
     val loadSamples = scala.collection.mutable.Map[Int, Vector[Double]]()
       .withDefaultValue(Vector.empty)
     // (b) 10x-scale smoke FIRST — the SAME pipeline at ~163k tiles (~11 GB
@@ -302,9 +309,7 @@ object Bench {
     val corpus10x = s"/dev/shm/graft_bench_corpus_$tiles10x"
     if (tiles10x > 0) {
       val sGen = session(32)
-      if (!new java.io.File(corpus10x + "/_SUCCESS").exists())
-        ImageCorpus.generate(sGen, tiles10x, gridW)
-          .write.mode("overwrite").parquet(corpus10x)
+      writeCorpus(sGen, corpus10x, tiles10x, gridW)
       // UNTIMED JIT warm at 1x size before any timed 10x rep: the 512-tile
       // metrics pass is far short of the ~10k decode invocations C2 needs,
       // and with the 10x section ordered FIRST the ladder no longer warms
@@ -466,10 +471,10 @@ object Bench {
     // line that always fits; "detail" names the sidecar.
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", "BENCH_DETAIL.json")
     val fullJson =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir","load_avg_1m":$loadAvg%.2f,"pipeline":{"tiles":$nTiles,"tiles_per_sec_2":$thr2%.2f,"tiles_per_sec_8":$thr8%.2f,"tiles_per_sec_32":$thr32%.2f,"sec_1":$sec1%.2f,"sec_4":$sec4%.2f,"sec_2":$sec2%.2f,"sec_8":$sec8%.2f,"sec_32":$sec32%.2f,"raw_1":${arr(raw1)},"raw_4":${arr(raw4)},"raw_2":${arr(raw2)},"raw_8":${arr(raw8)},"raw_32":${arr(raw32)},"load_raw_1":${larr(1)},"load_raw_4":${larr(4)},"load_raw_2":${larr(2)},"load_raw_8":${larr(8)},"load_raw_32":${larr(32)},"scaling_efficiency":$eff2to8%.3f,"scaling_efficiency_1_to_4":$eff1to4%.3f,"scaling_efficiency_8_to_32":$eff8to32%.3f},"pipeline10x":{"tiles":$tiles10x,"sec_8":$sec10_8%.2f,"sec_32":$sec10_32%.2f,"tiles_per_sec_8":$thr10_8%.2f,"tiles_per_sec_32":$thr10_32%.2f,"raw_8":${arr(acc10(8))},"raw_32":${arr(acc10(32))},"load_raw_8":${arr(load10(8))},"load_raw_32":${arr(load10(32))},"scaling_efficiency_8_to_32":$eff10_8to32%.3f,"scaleup_throughput_ratio_32":$scaleUp32%.3f},"metrics":$pmJson}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"queries_failed":$failedJson,"sf":"$sfDir","load_avg_1m":$loadAvg%.2f,"pipeline":{"tiles":$nTiles,"tiles_per_sec_2":$thr2%.2f,"tiles_per_sec_8":$thr8%.2f,"tiles_per_sec_32":$thr32%.2f,"sec_1":$sec1%.2f,"sec_4":$sec4%.2f,"sec_2":$sec2%.2f,"sec_8":$sec8%.2f,"sec_32":$sec32%.2f,"raw_1":${arr(raw1)},"raw_4":${arr(raw4)},"raw_2":${arr(raw2)},"raw_8":${arr(raw8)},"raw_32":${arr(raw32)},"load_raw_1":${larr(1)},"load_raw_4":${larr(4)},"load_raw_2":${larr(2)},"load_raw_8":${larr(8)},"load_raw_32":${larr(32)},"scaling_efficiency":$eff2to8%.3f,"scaling_efficiency_1_to_4":$eff1to4%.3f,"scaling_efficiency_8_to_32":$eff8to32%.3f},"pipeline10x":{"tiles":$tiles10x,"sec_8":$sec10_8%.2f,"sec_32":$sec10_32%.2f,"tiles_per_sec_8":$thr10_8%.2f,"tiles_per_sec_32":$thr10_32%.2f,"raw_8":${arr(acc10(8))},"raw_32":${arr(acc10(32))},"load_raw_8":${arr(load10(8))},"load_raw_32":${arr(load10(32))},"scaling_efficiency_8_to_32":$eff10_8to32%.3f,"scaleup_throughput_ratio_32":$scaleUp32%.3f},"metrics":$pmJson}"""
     try java.nio.file.Files.write(java.nio.file.Paths.get(detailPath),
       (fullJson + "\n").getBytes("UTF-8"))
-    catch { case e: Throwable => System.err.println(s"[bench] detail write failed: $e") }
+    catch { case NonFatal(e) => System.err.println(s"[bench] detail write failed: $e") }
     // headline query subset on stdout: one representative per family
     // (relational agg, raster clip/mosaic/burn/kNN/resample/reproject,
     // dedup, ANN, ingest, streaming) — the full map is in the sidecar
@@ -483,6 +488,6 @@ object Bench {
     val slowest = results.sortBy(-_._2).take(3)
       .map { case (n, v) => "\"" + n + f"\":$v%.3f" }.mkString("{", ",", "}")
     println(
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","sf":"$sfDir","queries_count":${results.size},"queries":$hq,"slowest":$slowest,"load_avg_1m":$loadAvg%.2f,"pipeline":{"tiles":$nTiles,"tiles_per_sec_2":$thr2%.2f,"tiles_per_sec_8":$thr8%.2f,"tiles_per_sec_32":$thr32%.2f,"sec_1":$sec1%.2f,"sec_4":$sec4%.2f,"sec_2":$sec2%.2f,"sec_8":$sec8%.2f,"sec_32":$sec32%.2f,"scaling_efficiency":$eff2to8%.3f,"scaling_efficiency_1_to_4":$eff1to4%.3f,"scaling_efficiency_8_to_32":$eff8to32%.3f},"pipeline10x":{"tiles":$tiles10x,"sec_8":$sec10_8%.2f,"sec_32":$sec10_32%.2f,"tiles_per_sec_8":$thr10_8%.2f,"tiles_per_sec_32":$thr10_32%.2f,"scaling_efficiency_8_to_32":$eff10_8to32%.3f,"scaleup_throughput_ratio_32":$scaleUp32%.3f},"detail":"$detailPath"}""")
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","sf":"$sfDir","queries_count":${results.size},"queries":$hq,"queries_failed":$failedJson,"slowest":$slowest,"load_avg_1m":$loadAvg%.2f,"pipeline":{"tiles":$nTiles,"tiles_per_sec_2":$thr2%.2f,"tiles_per_sec_8":$thr8%.2f,"tiles_per_sec_32":$thr32%.2f,"sec_1":$sec1%.2f,"sec_4":$sec4%.2f,"sec_2":$sec2%.2f,"sec_8":$sec8%.2f,"sec_32":$sec32%.2f,"scaling_efficiency":$eff2to8%.3f,"scaling_efficiency_1_to_4":$eff1to4%.3f,"scaling_efficiency_8_to_32":$eff8to32%.3f},"pipeline10x":{"tiles":$tiles10x,"sec_8":$sec10_8%.2f,"sec_32":$sec10_32%.2f,"tiles_per_sec_8":$thr10_8%.2f,"tiles_per_sec_32":$thr10_32%.2f,"scaling_efficiency_8_to_32":$eff10_8to32%.3f,"scaleup_throughput_ratio_32":$scaleUp32%.3f},"detail":"$detailPath"}""")
   }
 }

@@ -200,9 +200,9 @@ object Plans {
     sb.append("# PLANS — physical-plan evidence (`.explain(\"formatted\")`)\n\n")
     sb.append("Generated by `graft.Plans` on the gated queries; regenerate with\n")
     sb.append("`sbt \"runMain graft.Plans /root/testdata/sf0.01 PLANS.md\"`.\n\n")
-    picks.foreach { case (name, why) =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      sb.append(s"## $name\n\n$why\n\n```\n")
+    SparkEntry.select(picks.map(_._1)).zip(picks.map(_._2)).foreach { case (g, why) =>
+      val df = g.run(spark, sfDir)
+      sb.append(s"## ${g.name}\n\n$why\n\n```\n")
       sb.append(df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode))
       sb.append("\n```\n\n")

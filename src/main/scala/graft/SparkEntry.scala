@@ -2,284 +2,19 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.core._
 import graft.corpus.{ImageCorpus, Synth}
-import graft.operators.{Bilinear, ClipPolygon, Contour, Convolve, Downsample, Flow, Focal, Gather, Knn, Line2Sub, PtRec, Rasterize, Reproject, Stencil, TileFns, TileOps, Vectorize}
+import graft.gated._
+import graft.gated.Fixtures.tileRes
+import graft.operators.{Rasterize, TileOps}
 
-/** Driver contract — one `queries` entry per implemented operator
-  * (SURVEY.md §2), each with a DuckDB-equivalent `oracleSql` where SQL can
-  * express it. Raster operators run the real distributed path (tiles +
-  * cell-id shuffles); their oracles regenerate the same integer-derived
-  * fixture grid in SQL, so results hash-match bit-for-bit (no libm floats).
+/** The flagship [[entry]] pipeline and the registry of gated queries.
+  * Each [[GatedQuery]] pairs one implemented operator's query (SURVEY.md
+  * §2) with the DuckDB SQL that rebuilds the same result from the same
+  * fixture; each family lives in one file under `graft/gated/`, each
+  * query directly above its oracle.
   */
 object SparkEntry {
-
-  private val tileRes = 6 // 64x64-pixel tiles for the small fixture grids
-
-  /** Scratch space for fixture tables, stream staging and checkpoints:
-    * tmpfs-backed when available. Streaming checkpoints write offset/
-    * commit logs and state-store deltas with an fsync PER MICRO-BATCH,
-    * and the icelite fixture queries commit/rewrite small parquet files
-    * per run — on this sandbox /tmp is a spinning-rust-class virtual
-    * disk while /dev/shm is RAM, so scratch placement is pure latency
-    * with zero semantic difference (every dir here is created fresh by
-    * the query run and holds no cross-run results). A production
-    * deployment points checkpoints/tables at durable storage; the gated
-    * results never depend on the location. */
-  private val scratchBase: java.nio.file.Path = {
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    if (java.nio.file.Files.isDirectory(shm) &&
-        java.nio.file.Files.isWritable(shm)) shm.resolve("graft-scratch")
-    else java.nio.file.Paths.get(sys.props.getOrElse("java.io.tmpdir", "/tmp"))
-  }
-  // scratch is tmpfs-backed when available (icelite tables rewrite small
-  // parquet files per run; streaming checkpoints fsync offset/commit
-  // logs and state deltas per micro-batch — on this sandbox /tmp is a
-  // REAL DISK and those fsyncs dominate the metadata-bound queries).
-  // Every dir this JVM creates is removed on exit so repeated runs
-  // cannot accumulate in shared memory.
-  private val scratchCreated =
-    new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
-  private lazy val scratchHook: Unit = {
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      scratchCreated.forEach { p =>
-        try {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverseIterator
-            .foreach(f => try java.nio.file.Files.deleteIfExists(f) catch {
-              case _: Throwable => ()
-            })
-        } catch { case _: Throwable => () }
-      }))
-    ()
-  }
-  private def scratchDir(prefix: String): String = {
-    scratchHook
-    java.nio.file.Files.createDirectories(scratchBase)
-    val d = java.nio.file.Files.createTempDirectory(scratchBase, prefix)
-    scratchCreated.add(d)
-    d.toString
-  }
-
-  private def table(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
-  /** Unrolled full-BPE DuckDB oracle for d25: w0 = the word-freq table
-    * with each word as a '[sym][sym]' bracket-wrapped string; per round,
-    * OVERLAPPING pair counts come from adjacent positions of the re-split
-    * symbol list, the winner is (cnt desc, a, b), and the greedy
-    * left-to-right merge is exactly SQL replace()'s left-to-right
-    * non-overlapping substitution on the wrapped form (brackets make
-    * symbol boundaries unambiguous). */
-  private def bpeChainSql(n: Int): String = {
-    val sb = new StringBuilder(
-      """WITH w0 AS (
-        |  SELECT x AS word, count(*) AS freq,
-        |    '[' || array_to_string(string_split(x, ''), '][') || ']' AS s
-        |  FROM documents d, unnest(string_split(d.text, ' ')) t(x)
-        |  GROUP BY x)""".stripMargin)
-    for (r <- 1 to n) {
-      val p = r - 1
-      sb.append(s""",
-        |p$r AS (
-        |  SELECT t.toks[j.j + 1] AS a, t.toks[j.j + 2] AS b, sum(t.freq) AS cnt
-        |  FROM (SELECT freq, string_split(s[2:-2], '][') AS toks FROM w$p) t,
-        |       unnest(range(len(t.toks) - 1)) j(j)
-        |  GROUP BY 1, 2),
-        |m$r AS (SELECT a, b, cnt FROM p$r ORDER BY cnt DESC, a, b LIMIT 1),
-        |w$r AS (
-        |  SELECT word, freq,
-        |    replace(s, '[' || m.a || '][' || m.b || ']', '[' || m.a || m.b || ']') AS s
-        |  FROM w$p, m$r m)""".stripMargin)
-    }
-    sb.toString
-  }
-
-  private def bpeOracleSql(n: Int): String = {
-    val parts = (1 to n).map(r =>
-      s"SELECT $r AS merge_rank, a AS left_sym, b AS right_sym, " +
-        s"CAST(cnt AS BIGINT) AS pair_count FROM m$r").mkString(" UNION ALL ")
-    s"${bpeChainSql(n)}\nSELECT * FROM ($parts) ORDER BY merge_rank"
-  }
-
-  /** d26 oracle: every corpus word mapped through the learned w$n
-    * bracket-form, re-assembled per document in word order; the md5 of
-    * the '|'-joined token stream gates the complete encoding. */
-  private def bpeEncodeOracleSql(n: Int): String =
-    s"""${bpeChainSql(n)},
-       |docw AS (
-       |  SELECT ws.doc_id, j.j AS pos, ws.w[j.j + 1] AS word
-       |  FROM (SELECT doc_id, string_split(trim(text), ' ') AS w
-       |        FROM documents) ws,
-       |       unnest(range(len(ws.w))) j(j)),
-       |enc AS (
-       |  SELECT dw.doc_id, dw.pos, wn.s,
-       |    len(string_split(wn.s[2:-2], '][')) AS ntok
-       |  FROM docw dw JOIN w$n wn ON wn.word = dw.word)
-       |SELECT doc_id, CAST(sum(ntok) AS BIGINT) AS n_tok_bpe,
-       |  md5(replace((string_agg(s, '' ORDER BY pos))[2:-2], '][', '|')) AS tok_md5
-       |FROM enc GROUP BY doc_id ORDER BY doc_id""".stripMargin
-
-  /** The DEM fixture served from an ICELITE-BACKED Parquet table (written
-    * once, resumable commit), not from in-memory `spark.range` tiles — so
-    * the correctness run exercises the engine's real scan path: manifest
-    * min/max file pruning + pushed cellId range predicates on the Parquet
-    * scan (the scale story's load-bearing machinery, PLANS.md r2). */
-  private val demTableDir =
-    scratchBase.resolve("graft_icelite_dem_v1").toString
-  private def demTiles(s: SparkSession): org.apache.spark.sql.Dataset[Tile] =
-    SparkEntry.synchronized {
-      val existing = graft.icelite.IceLite.currentSnapshot(demTableDir)
-      val snap = existing.getOrElse {
-        graft.icelite.IceLite.commitResumable(s,
-          TileOps.tileGrid(s, Synth.demRef, tileRes)(Synth.demValue),
-          demTableDir, buckets = 4, snap = 1L)
-      }
-      graft.icelite.IceLite.read(s, demTableDir, snap)
-    }
-
-  /** The i3 dedup corpus as a MATERIALIZED parquet table (written once per
-    * tmpdir, then scanned) — the north-star input is a table of
-    * image+caption pairs, so the dedup query must read its phash/bytes
-    * columns off storage, not regenerate them in both sides of the
-    * self-join. */
-  private val corpusTableDir =
-    scratchBase.resolve("graft_corpus_1024_v1").toString
-  private def corpusTable(s: SparkSession): DataFrame =
-    SparkEntry.synchronized {
-      if (!new java.io.File(corpusTableDir + "/_SUCCESS").exists())
-        ImageCorpus.generate(s, 1024L, 8)
-          .write.mode("overwrite").parquet(corpusTableDir)
-      s.read.parquet(corpusTableDir)
-    }
-
-  private val perceptualCorpusDir =
-    scratchBase.resolve("graft_corpus_percep_1024_v1").toString
-  private def perceptualCorpusTable(s: SparkSession): DataFrame =
-    SparkEntry.synchronized {
-      if (!new java.io.File(perceptualCorpusDir + "/_SUCCESS").exists())
-        ImageCorpus.generatePerceptual(s, 1024L)
-          .write.mode("overwrite").parquet(perceptualCorpusDir)
-      s.read.parquet(perceptualCorpusDir)
-    }
-
-  /** Decode + phash of the perceptual corpus (one definition for
-    * i4/i5/m4). Measured: a pre-decode repartition to core count LOSES
-    * here — the byte shuffle costs more than the fixture's decode saves
-    * (the scan already yields enough splits) — so the kernel runs
-    * directly on the scan partitions. */
-  private def phashedPerceptual(s: SparkSession): DataFrame = {
-    import s.implicits._
-    import graft.codecs.ImageCodec
-    perceptualCorpusTable(s).select($"image_id", $"bytes", $"fmt")
-      .as[(String, Array[Byte], String)]
-      .map { case (id, bytes, fmt) =>
-        val (px, w, h) = ImageCodec.decode(bytes, fmt)
-        (id.stripPrefix("img-").toLong, ImageCodec.phash64(px, w, h))
-      }
-      .toDF("doc_id", "simhash")
-  }
-
-
-  /** Shared e-family fixture: 16 true clusters x 30 members, dim 16,
-    * dyadic coordinates (bit-identical cosines across engines). e2/e3/e4
-    * consume it verbatim (e7 rebuilds it with a lang column) and their
-    * DuckDB oracles regenerate this exact closed form — ONE definition
-    * keeps the four hash gates synchronized. */
-  private def clusteredEmbeddings(s: SparkSession): DataFrame = {
-    import s.implicits._
-    val C = 16; val M = 30; val dim = 16
-    s.range(C.toLong * M).map { vid =>
-      val cl = (vid % C).toInt; val m = (vid / C).toInt
-      val v = Array.tabulate(dim) { d =>
-        val center = if (d == cl) 8.0f else 0.0f
-        center + (((m * 31 + d * 17 + cl * 7) % 13) - 6) * 0.125f
-      }
-      (vid, v)
-    }.toDF("vec_id", "embedding")
-  }
-
-  /** Shared v-family fixture: 8 GIF clips x 12 frames with a planted
-    * scene cut at frame 6 (v2/v3/v4; v1 uses a cut-free variant). Same
-    * single-source-of-truth rule as [[clusteredEmbeddings]]. */
-  private def sceneCutGifClips(s: SparkSession) = {
-    import s.implicits._
-    s.range(8).map { cid =>
-      val frames = (0 until 12).map { f =>
-        Array.tabulate(48 * 32) { i =>
-          val code = if (f < 6) (cid * 37 + f * 11 + i) % 251
-                     else (cid * 37 + f * 11 + i * 3 + 97) % 251
-          code.toDouble
-        }
-      }
-      (cid.toLong, graft.sources.GifWriter.writeAnimatedBytes(
-        frames, 48, 32, lo = 0, hi = 250, delayCs = 10))
-    }
-  }
-
-  /** Cents helper: exact integer money via floor(v*100 + 0.5) — pure
-    * IEEE multiply/add/floor, bit-identical in Spark and DuckDB. round()
-    * is banned for gated money columns: Spark rounds the shortest-decimal
-    * BigDecimal HALF_UP while DuckDB rounds the binary double, so a
-    * dyadic *.x5 boundary row flips the hash (the r4 q9 regression). */
-  private def cents(c: org.apache.spark.sql.Column) =
-    floor(c * 100 + lit(0.5)).cast("long")
-
-  /** Chronologically staged event stream for the s1/s2 streaming queries
-    * (one staging per events table per JVM; each query run gets a fresh
-    * checkpoint + memory sink). Runs the real Structured Streaming
-    * machinery at few shuffle partitions — state-store commit overhead is
-    * per (partition x micro-batch), and the fixture state is tiny. */
-  private val stagedStreams = scala.collection.mutable.Map[String, String]()
-  private def stagedEvents(s: SparkSession, dir: String): String =
-    SparkEntry.synchronized {
-      stagedStreams.getOrElseUpdate(dir, {
-        val d = scratchDir("graft_stream")
-        graft.streaming.StreamOps.stageChronological(
-          s, s"$dir/events.parquet", d, chunks = 2)
-      })
-    }
-  private def stagedLateEvents(s: SparkSession, dir: String): String =
-    SparkEntry.synchronized {
-      stagedStreams.getOrElseUpdate(s"__s8_late__$dir", {
-        val d = scratchDir("s8_stream")
-        graft.streaming.StreamOps.stageWithLateArrivals(
-          s, s"$dir/events.parquet", d)
-      })
-    }
-  private def stagedImageStream(s: SparkSession): String =
-    SparkEntry.synchronized {
-      stagedStreams.getOrElseUpdate("__s7_images__", {
-        val d = scratchDir("s7_stream")
-        graft.streaming.StreamOps.stageImageChunks(s, 64L, 8, d, chunks = 8)
-      })
-    }
-  /** State-store partition count for the drained fixture streams.
-    * Stateful-op overhead is per (partition x micro-batch) — each
-    * partition opens and commits its state stores every batch — so the
-    * count should track stream VOLUME, not the host's cores: measured on
-    * the ~100k-row fixture batches, 2 beats both 4 (more per-batch store
-    * commits than the data warrants) and 1 (no parallelism on the real
-    * chunks). Production streams size this by throughput per the usual
-    * 100MB-1GB-per-partition rule; checkpoints pin it per query. */
-  private def withFewPartitions[A](s: SparkSession)(f: => A): A = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "2")
-    try f finally s.conf.set("spark.sql.shuffle.partitions", prev)
-  }
-  /** Remove a drained stream's checkpoint dir — the returned result lives
-    * in the memory-sink table, so nothing references the checkpoint once
-    * awaitTermination returned; repeated runs would otherwise accumulate
-    * orphaned temp dirs. */
-  private def dropCheckpoint(dir: String): Unit = {
-    val p = java.nio.file.Paths.get(dir)
-    if (java.nio.file.Files.exists(p))
-      java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => java.nio.file.Files.deleteIfExists(f))
-  }
-
-  // ---------------------------------------------------------------- queries
 
   /** Flagship: the full north-star shape end-to-end —
     * (1) image+caption corpus -> decode -> dedup-early mosaic (last-wins by
@@ -322,7548 +57,23 @@ object SparkEntry {
     spark.createDataset(rows).toDF("stage", "n", "checksum")
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ---- relational over driver tables (Catalyst built-ins showcase) ----
-    "q1_lineitem_agg" -> ((s, dir) => {
-      import s.implicits._
-      table(s, dir, "lineitem")
-        .groupBy($"l_returnflag", $"l_linestatus")
-        .agg(
-          sum($"l_quantity").as("sum_qty"),
-          sum(cents($"l_extendedprice")).as("sum_price_cents"),
-          sum(cents($"l_extendedprice" * (lit(1.0) - $"l_discount"))).as("rev_cents"),
-          count(lit(1)).as("n"))
-        .orderBy($"l_returnflag", $"l_linestatus")
-    }),
-
-    "q2_top_orders" -> ((s, dir) => {
-      import s.implicits._
-      val l = table(s, dir, "lineitem")
-      val o = table(s, dir, "orders")
-      val c = table(s, dir, "customer")
-      val rev = l.groupBy($"l_orderkey")
-        .agg(sum(cents($"l_extendedprice" * (lit(1.0) - $"l_discount"))).as("rev_cents"))
-      rev.join(o, $"l_orderkey" === $"o_orderkey")
-        .join(broadcast(c), $"o_custkey" === $"c_custkey")
-        .select($"o_orderkey", $"c_name", $"rev_cents",
-          unix_millis($"o_orderdate".cast("timestamp")).as("order_epoch"))
-        .orderBy($"rev_cents".desc, $"o_orderkey")
-        .limit(10)
-    }),
-
-    "q3_events_window" -> ((s, dir) => {
-      import s.implicits._
-      val w = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
-      table(s, dir, "events")
-        .withColumn("rn", row_number().over(w))
-        .withColumn("prev_event", lag($"event_id", 1).over(w))
-        .filter($"rn" <= 3)
-        .select($"user_id", $"rn", $"event_id",
-          unix_millis($"ts".cast("timestamp")).as("ts_epoch"), $"prev_event")
-        .orderBy($"user_id", $"rn")
-    }),
-
-    "q4_sessionize" -> ((s, dir) => {
-      import s.implicits._
-      val w = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
-      table(s, dir, "events")
-        .withColumn("gap", unix_millis($"ts".cast("timestamp")) - lag(unix_millis($"ts".cast("timestamp")), 1).over(w))
-        .withColumn("new_sess", when($"gap".isNull || $"gap" > 1800000, 1L).otherwise(0L))
-        .withColumn("sess", sum($"new_sess")
-          .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .groupBy($"user_id")
-        .agg(max($"sess").as("n_sessions"), count(lit(1)).as("n_events"))
-        .orderBy($"user_id")
-    }),
-
-    // ---- raster operators (distributed tile path; SURVEY.md §2) ----
-    // A1/A2: NaN-ignoring stats over the tiled DEM (icelite-backed scan)
-    "r1_grid_stats" -> ((s, _) => {
-      TileOps.stats(demTiles(s))
-    }),
-
-    // P1: rect_clip with snap (tutorial extent), banded checksum — reads
-    // the icelite table, so the Z-range cover predicate pushes into a real
-    // Parquet scan (PushedFilters on cellId)
-    "r2_rect_clip" -> ((s, _) => {
-      import s.implicits._
-      val dem = demTiles(s)
-      val (clipped, (r0, _, _, _)) =
-        TileOps.rectClip(dem, Synth.demRef, Synth.tutorialClip, tileRes)
-      TileOps.cells(clipped)
-        .withColumn("band", floor(($"row" - lit(r0)) / 16).cast("long"))
-        .groupBy($"band")
-        .agg(count($"v").as("n_valid"), count(lit(1)).as("n_cells"),
-          sum($"v").as("sum_v"))
-        .orderBy($"band")
-    }),
-
-    // J3: union-extent mosaic, later source wins INCLUDING nodata
-    "r3_mosaic" -> ((s, _) => {
-      import s.implicits._
-      val a = TileOps.tileGrid(s, Synth.gridARef, tileRes)(Synth.gridAValue)
-      val b = TileOps.tileGrid(s, Synth.gridBRef, tileRes)(Synth.gridBValue)
-      val patches = TileOps.alignedPatches(a, Synth.gridARef, Synth.mosaicRef,
-          tileRes, seq = 0, coverAll = true)
-        .union(TileOps.alignedPatches(b, Synth.gridBRef, Synth.mosaicRef,
-          tileRes, seq = 1, coverAll = true))
-      TileOps.cells(TileOps.mosaic(patches))
-        .withColumn("band", floor($"row" / 16).cast("long"))
-        .groupBy($"band")
-        .agg(count($"v").as("n_valid"), sum($"v").as("sum_v"))
-        .orderBy($"band")
-    }),
-
-    // J1: rasterize burn join (CA1 features, attribute burn, last wins)
-    "r4_rasterize" -> ((s, _) => {
-      import s.implicits._
-      Rasterize(s, Synth.ca1Features, Synth.demRef, tileRes, useAttr = true)
-        .toDF("row", "col", "burn")
-        .groupBy($"burn")
-        .agg(count(lit(1)).as("n"), sum($"row").as("sum_row"),
-          sum($"col").as("sum_col"))
-        .orderBy($"burn")
-    }),
-
-    // The reference's flagship tutorial pipeline end-to-end
-    // (demo/tutorial_edit_DEM.ipynb cells 4-12) as ONE gated query:
-    // rect_clip(extent) -> rasterize(features, attribute burn) ->
-    // arithmetic edit `dem - 2*burn` under the burn mask -> band
-    // aggregates of original vs edited surface + edit counts. Every
-    // value is exact dyadic (quarter-unit DEM, integer attrs), so band
-    // sums are order-free and the composite hash-gates. Plan shape:
-    // pruned clip scan + broadcast burn join + one hash agg — the
-    // "edit DEM by features" job a reference user runs today, in tile
-    // form end to end.
-    "r54_edit_dem" -> ((s, _) => {
-      import s.implicits._
-      val (clipped, (r0, _, _, _)) =
-        TileOps.rectClip(demTiles(s), Synth.demRef, Synth.tutorialClip, tileRes)
-      val burned = Rasterize(s, Synth.ca1Features, Synth.demRef, tileRes,
-        useAttr = true)
-      Rasterize.editJoin(TileOps.cells(clipped), burned)
-        .select($"row", $"col", $"v",
-          when($"burn".isNotNull, $"v" - $"burn" * 2.0).otherwise($"v")
-            .as("v_edit"),
-          ($"v".isNotNull && $"burn".isNotNull).as("edited"))
-        .withColumn("band", floor(($"row" - lit(r0)) / 16).cast("long"))
-        .groupBy($"band")
-        .agg(count(lit(1)).as("n_cells"), sum($"v").as("sum_v"),
-          sum($"v_edit").as("sum_edit"),
-          count(when($"edited", 1)).as("n_edited"))
-        .orderBy($"band")
-    }),
-
-    // J5: kNN scattered->grid interpolation (bucketed k-d tree path)
-    "r5_knn" -> ((s, _) => {
-      import s.implicits._
-      val pts = s.createDataset(Synth.knnPoints.map(p => PtRec(p._1, p._2, p._3, p._4)))
-      Knn.nearestBucketed(s, pts, Synth.knnRef, res = 5, ringK = 1)
-        .select($"row".cast("long").as("row"), $"col".cast("long").as("col"),
-          $"v", $"pid")
-        .orderBy($"row", $"col")
-    }),
-
-    // W3: grid_resample_nearest gather join (5m DEM -> offset 10m grid)
-    "r6_resample" -> ((s, _) => {
-      import s.implicits._
-      val dem = TileOps.tileGrid(s, Synth.demRef, tileRes)(Synth.demValue)
-      Gather.resampleNearest(dem, Synth.demRef, Synth.resampleTargetRef,
-          tileRes, clamp = false)
-        .select($"row".cast("long").as("row"), $"col".cast("long").as("col"), $"v")
-        .orderBy($"row", $"col")
-    }),
-
-    // line2sub generator (Raster.py:340-366)
-    "r7_line2sub" -> ((s, _) => {
-      import s.implicits._
-      val (xs, ys) = Synth.fixtureLine
-      val lines = s.createDataset(Seq(Line2Sub.LineRec(0L, xs, ys)))
-      Line2Sub.cells(lines, Synth.knnRef)
-        .select($"seq", $"row", $"col")
-        .orderBy($"seq")
-    }),
-
-    // ANN/similarity: brute-force cosine top-5 per query vector (exact)
-    "e1_knn_cosine" -> ((s, dir) => {
-      import s.implicits._
-      val e = table(s, dir, "embeddings")
-      val q = e.filter($"vec_id" < 10)
-        .select($"vec_id".as("qid"), $"embedding".as("qv"))
-      graft.sim.Similarity.bruteTopK(q,
-          e.select($"vec_id".as("vid"), $"embedding".as("v")), 5)
-        .orderBy($"qid", $"rank")
-    }),
-
-    // ANN scale path: IVF with a k-means coarse quantizer over a
-    // deterministic CLUSTERED fixture (16 orthogonal centers x 30 members,
-    // dyadic perturbations) — the regime IVF exists for, and the regime
-    // where it is oracle-checkable: k-means init (lowest 16 vids = one
-    // member per true cluster) provably recovers the clusters, every
-    // query's exact top-5 lives in its probed lists, so the IVF rank rows
-    // EQUAL DuckDB's exact-cosine top-5 (recall 1.0 by construction; any
-    // index bug breaks the hash). All coordinates are dyadic -> cosines
-    // are bit-identical across engines and rank gaps are ~1e-3, far above
-    // ULP. Recall-vs-brute on a clustered fixture also stays in SimSpec.
-    "e2_ann_ivf" -> ((s, _) => {
-      import s.implicits._
-      val e = clusteredEmbeddings(s)
-      // init (lowest 16 vids) is already one member per true cluster, so
-      // Lloyd's converges on iteration 1; 2 iterations = convergence proof
-      // at half the fixed per-job overhead of 4
-      val (clusters, centroids) = graft.sim.Similarity.kmeansWithCentroids(
-        s, e, "vec_id", "embedding", k = 16, iters = 2) // k = #true clusters
-      val withCl = e.join(clusters, e("vec_id") === clusters("vid")).drop("vid")
-      val q = e.filter($"vec_id" < 10)
-        .select($"vec_id".as("qid"), $"embedding".as("qv"))
-      graft.sim.Similarity.ivfTopK(s, withCl, "vec_id", "embedding", "cl",
-          q, k = 5, nProbe = 2, centroidTable = Some(centroids))
-        .orderBy($"qid", $"rank")
-    }),
-
-    // FILTERED ANN (hybrid search) — the production retrieval shape:
-    // a metadata predicate (lang = 'en', i.e. vid % 3 = 0 — 10 of each
-    // cluster's 30 members) composes with the IVF scan by filtering the
-    // inverted lists BEFORE the candidate join; clustering and probe
-    // selection stay on the full corpus (the FAISS IDSelector pattern).
-    // On the e2 fixture every query's filtered exact top-5 lives in its
-    // own (always-probed) cluster, so IVF-filtered == exact-filtered and
-    // the DuckDB brute oracle gates it.
-    "e7_ann_filtered" -> ((s, _) => {
-      import s.implicits._
-      val C = 16; val M = 30; val dim = 16
-      val e = s.range(C.toLong * M).map { vid =>
-        val cl = (vid % C).toInt; val m = (vid / C).toInt
-        val v = Array.tabulate(dim) { d =>
-          val center = if (d == cl) 8.0f else 0.0f
-          center + (((m * 31 + d * 17 + cl * 7) % 13) - 6) * 0.125f
-        }
-        (vid, v, Seq("en", "de", "fr")((vid % 3).toInt))
-      }.toDF("vec_id", "embedding", "lang")
-      val (clusters, centroids) = graft.sim.Similarity.kmeansWithCentroids(
-        s, e.select($"vec_id", $"embedding"), "vec_id", "embedding",
-        k = C, iters = 2)
-      val withCl = e.join(clusters, e("vec_id") === clusters("vid")).drop("vid")
-      val filtered = withCl.filter($"lang" === "en")
-      val q = e.filter($"vec_id" < 10)
-        .select($"vec_id".as("qid"), $"embedding".as("qv"))
-      graft.sim.Similarity.ivfTopK(s, filtered, "vec_id", "embedding", "cl",
-          q, k = 5, nProbe = 2, centroidTable = Some(centroids))
-        .orderBy($"qid", $"rank")
-    }),
-
-    // RANGE (radius) search — top-k's set-valued sibling (FAISS
-    // range_search): every corpus vector with cosine >= tau per query.
-    // Unlike e2's nProbe heuristic, the probe set is the per-cluster
-    // BALL BOUND (triangle inequality on unit-normalized vectors) — an
-    // exact superset, so recall is 1.0 BY CONSTRUCTION on any data and
-    // the result equals brute force with zero probabilistic caveat. On
-    // the clustered fixture the cross/within-cluster cosine chasm is
-    // [0.218, 0.920], so tau = 0.6 sits 0.38 from the nearest data
-    // point on either side — no engine's float summation order can
-    // flip a membership. Output: the 290 same-cluster (qid, vid) pairs.
-    "e8_range_search" -> ((s, _) => {
-      import s.implicits._
-      val e = clusteredEmbeddings(s)
-      val (clusters, centroids) = graft.sim.Similarity.kmeansWithCentroids(
-        s, e, "vec_id", "embedding", k = 16, iters = 2)
-      val withCl = e.join(clusters, e("vec_id") === clusters("vid")).drop("vid")
-      val q = e.filter($"vec_id" < 10)
-        .select($"vec_id".as("qid"), $"embedding".as("qv"))
-      graft.sim.Similarity.rangeSearch(s, withCl, "vec_id", "embedding",
-          "cl", q, tau = 0.6, centroidTable = Some(centroids))
-        .orderBy($"qid", $"vid")
-    }),
-
-    // Maximum-inner-product search via the norm-augmentation reduction
-    // (Shrivastava & Li 2014): corpus vectors gain sqrt(M^2 - |x|^2),
-    // queries gain 0, making the augmented corpus CONSTANT-norm so any
-    // cosine/L2 index serves MIPS (recommendation retrieval where
-    // higher-norm items must win — cosine alone ranks them wrong).
-    // Fixture: the e1 clustered recipe with norms deliberately skewed
-    // 5x by (vid % 5 + 1)/4 — a scale-up under which cosine and MIPS
-    // top-5 genuinely differ (spec asserts it). Every scaled coordinate
-    // is a dyadic multiple of 2^-5, so inner products are EXACT doubles
-    // in both engines; ranking by raw augmented ip (not per-row cosine)
-    // keeps exact ties breaking on vid, never float noise. Oracle: the
-    // brute raw-dot top-5 in DuckDB.
-    "e9_mips" -> ((s, _) => {
-      import s.implicits._
-      val e = clusteredEmbeddings(s).select($"vec_id",
-        transform($"embedding",
-          x => x * (($"vec_id" % 5 + 1).cast("float") * lit(0.25f))).as("v"))
-      val q = e.filter($"vec_id" < 10).select($"vec_id".as("qid"), $"v".as("qv"))
-      graft.sim.Similarity.mipsTopK(q, e, "vec_id", "v", k = 5)
-        .orderBy($"qid", $"rank")
-    }),
-
-    // Product-quantization ANN: m=4 byte codes per vector, broadcast ADC
-    // lookup tables, shortlist by ADC + exact cosine re-rank of
-    // SURVIVORS ONLY (the compressed exhaustive path — codes are 4 B vs
-    // 64 B raw, so the scan is bandwidth-compressed 16x; compose with
-    // e2's IVF lists for sublinear IVF-PQ). On the separated fixture the
-    // shortlist provably contains the true top-5 (inter-cluster ADC gap
-    // ~128 vs intra ~20 dwarfs quantization error), so the re-ranked
-    // output equals DuckDB's exact top-5 — hash-gated.
-    "e3_ann_pq" -> ((s, _) => {
-      import s.implicits._
-      val e = clusteredEmbeddings(s)
-      val q = e.filter($"vec_id" < 10)
-        .select($"vec_id".as("qid"), $"embedding".as("qv"))
-      graft.sim.Similarity.pqTopK(s, e, "vec_id", "embedding", q,
-          m = 4, ksub = 16, iters = 2, shortlist = 60, k = 5)
-        .orderBy($"qid", $"rank")
-    }),
-
-    // IVF-PQ: coarse lists bound WHICH vectors are scanned (nProbe=2 of
-    // 16 lists), byte codes bound HOW MUCH each scan reads — the FAISS
-    // production composition of e2 + e3. Same separated fixture: the
-    // probed lists contain the true top-5 and the ADC gap dwarfs
-    // quantization error, so shortlist + exact re-rank == exact top-5.
-    "e4_ann_ivfpq" -> ((s, _) => {
-      import s.implicits._
-      val e = clusteredEmbeddings(s)
-      val (clusters, centroids) = graft.sim.Similarity.kmeansWithCentroids(
-        s, e, "vec_id", "embedding", k = 16, iters = 2) // k = #true clusters
-      val withCl = e.join(clusters, e("vec_id") === clusters("vid")).drop("vid")
-      val q = e.filter($"vec_id" < 10)
-        .select($"vec_id".as("qid"), $"embedding".as("qv"))
-      graft.sim.Similarity.ivfPqTopK(s, withCl, "vec_id", "embedding", "cl",
-          q, centroids, m = 4, ksub = 16, iters = 2, nProbe = 2,
-          shortlist = 40, k = 5)
-        .orderBy($"qid", $"rank")
-    }),
-
-    // Distributed cell-cover compaction (the H3 compact / S2 cell-union
-    // normalize): a res-0 rectangle cover folds to the minimal mixed-res
-    // cover by repeated replace-4-siblings-by-parent, entirely as 64-bit
-    // id arithmetic (parent z = z >> 2) — one groupBy-parent shuffle per
-    // level, data shrinking 4x per round. The 14 x 11 window is chosen so
-    // every level participates: full 2x2 blocks merge to res 1, those to
-    // res 2, one block reaches res 3, and each level leaves a ragged
-    // remainder. Output decoded to (r, x, y); the oracle replays the
-    // sibling-merge rounds as chained HAVING count(*)=4 CTEs.
-    "r58_cell_compact" -> ((s, _) => {
-      import s.implicits._
-      val cells = s.range(14).toDF("x").crossJoin(s.range(11).toDF("y"))
-        .as[(Long, Long)]
-        .map { case (x, y) => graft.core.CellId.encode(0, x, y) }
-        .toDF("cell")
-      graft.operators.CellOps.compactCells(cells, "cell")
-        .as[Long]
-        .map(id => (graft.core.CellId.res(id).toLong,
-          graft.core.CellId.cx(id), graft.core.CellId.cy(id)))
-        .toDF("r", "x", "y")
-        .orderBy($"r", $"x", $"y")
-    }),
-
-    // SPATIAL AUTOCORRELATION (global Moran's I + Geary's C) — the
-    // terrain-QA statistic that says whether a surface is spatially
-    // structured or noise. Scale-invariant in the cell values, so it
-    // runs on the integer codes q = 4*v, and the query emits the exact
-    // integer SUFFICIENT STATISTICS (n, S, Σq², W, Σq_iq_j, Σdeg·q,
-    // Σdeg·q²) instead of the assembled float ratio: both engines gate
-    // bit-exact Longs, and I = A/(W·B), C = n(n−1)G/(2W·B) with
-    // A = n²Σq_iq_j − 2nS·Σdeg·q + WS², B = n·Σq² − S², G = 2Σdeg·q² −
-    // 2Σq_iq_j assemble driver-side in BigDecimal (OperatorSpec proves
-    // the algebra against brute force; the raw A overflows Int64 at
-    // this n by design — the decomposition is WHY the distributed job
-    // only ever sums small integers). Plan: rook pairs as ONE equi-join
-    // against its 4 shifted copies — join key (row, col) is uniform, no
-    // skew, no windows; holds at any raster size.
-    "r59_spatial_autocorr" -> ((s, _) => {
-      import s.implicits._
-      val cells = TileOps.cells(demTiles(s))
-        .filter($"v".isNotNull)
-        .select($"row", $"col", ($"v" * 4).cast("long").as("q"))
-      val base = cells.agg(count(lit(1)).as("n"), sum($"q").as("s_sum"),
-        sum($"q" * $"q").as("q2"))
-      val shifted = Seq((0, 1), (0, -1), (1, 0), (-1, 0)).map {
-        case (dr, dc) =>
-          cells.select(($"row" + dr).as("row"), ($"col" + dc).as("col"),
-            $"q".as("qn"))
-      }.reduce(_ unionByName _)
-      val pairAgg = cells.join(shifted, Seq("row", "col"))
-        .agg(count(lit(1)).as("w_pairs"), sum($"q" * $"qn").as("pair_prod"),
-          sum($"q").as("deg_val"), sum($"q" * $"q").as("deg_val_sq"))
-      base.crossJoin(pairAgg)
-        .select($"n", $"s_sum", $"q2", $"w_pairs", $"pair_prod",
-          $"deg_val", $"deg_val_sq")
-    }),
-
-    // REMOVE_BLOCK — the reference's documented-but-absent overhead-
-    // block-removal module (docs/source/Modules/index.rst:4-15, README
-    // features 3-4: strip bridges/overhead structures from a DEM and
-    // repair the footprint from the surrounding terrain), composed from
-    // three gated pieces: the r4 PIP rasterize marks the block
-    // footprint, the footprint cells drop, and each repairs from its
-    // NEAREST surviving valid cell via the r5 bucketed ring-search
-    // kernel (deterministic (d2, pid) tie-break; d2 is exact — all
-    // coordinates dyadic multiples of 2.5, so squares and sums carry no
-    // rounding). Band aggregates gate the whole repaired surface.
-    "r60_remove_block" -> ((s, _) => {
-      import s.implicits._
-      val ref = Synth.demRef
-      // footprint mask from the r4 PIP burn (the burn VALUE is not
-      // needed — only membership)
-      val mask = Rasterize(s, Synth.ca1Features, ref, tileRes,
-          useAttr = false)
-        .toDF("row", "col", "burn")
-        .select($"row", $"col", lit(true).as("m"))
-      // persist: the mask join + DEM scan feed BOTH the repair kernel's
-      // point/hole sides and the final stitch — without it the burn job
-      // and the icelite scan would run twice
-      val masked = TileOps.cells(demTiles(s))
-        .join(mask, Seq("row", "col"), "left")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val pts = masked.filter($"m".isNull && $"v".isNotNull)
-        .select(($"row".cast("long") * ref.ncols + $"col").as("pid"),
-          (lit(ref.left) + ($"col" + 0.5) * ref.cellsize).as("x"),
-          (lit(ref.top) - ($"row" + 0.5) * ref.cellsize).as("y"),
-          $"v")
-        .as[PtRec]
-      // repair ONLY the footprint cells (targets subset): kernel cost
-      // scales with the block area, not the grid area
-      val holes = masked.filter($"m".isNotNull).select($"row", $"col")
-      val filled = Knn.nearestBucketed(s, pts, ref, res = 5, ringK = 1,
-          targets = Some(holes))
-        .select($"row".cast("long").as("row"), $"col".cast("long").as("col"),
-          $"v".as("fv"))
-      val out = masked.join(filled, Seq("row", "col"), "left")
-        .select($"row",
-          when($"m".isNotNull, $"fv").otherwise($"v").as("rv"),
-          $"m".isNotNull.as("was_block"))
-        .withColumn("band", floor($"row" / 16).cast("long"))
-        .groupBy($"band")
-        .agg(count(when($"was_block", 1)).as("n_filled"),
-          count($"rv").as("n_valid"),
-          sum(($"rv" * 4).cast("long")).as("sum_vq"))
-        .orderBy($"band")
-        .localCheckpoint(true) // eager, so the persist can release now
-      masked.unpersist()
-      out
-    }),
-
-    // r61: distributed SUMMED-AREA TABLE + O(1) arbitrary-radius box
-    // stats. One global 2-D prefix sum (per-tile marginals -> three
-    // narrow grouped prefix scans -> one equi-join home; payloads never
-    // shuffle), then radius-20 box sums at a stride-16 probe lattice —
-    // including border probes whose clamped windows exercise the signed
-    // 4-corner formula's edge cases. The multi-scale sibling of the
-    // r43/r44 focal family: window cost is 4 lookups at ANY radius.
-    "r61_sat_boxstats" -> ((s, _) => {
-      import s.implicits._
-      val ref = GridRef(ncols = 768, nrows = 512, xll = 0, yll = 0,
-        cellsize = 1, nodata = -9999)
-      val tiles = TileOps.tileGrid(s, ref, tileRes)((r, c) =>
-        ((r * 7 + c * 3) % 100).toDouble)
-      val sat = graft.operators.Sat.satTiles(tiles)
-      val pts = s.range(32L * 48).map(i =>
-        ((i / 48).toInt * 16, (i % 48).toInt * 16)).toDF("qr", "qc")
-      graft.operators.Sat.boxSumAt(sat, ref, tileRes, pts, k = 20)
-        .select($"qr".cast("long").as("qr"), $"qc".cast("long").as("qc"),
-          $"box_n", $"box_sum".cast("long").as("box_sum"))
-        .orderBy($"qr", $"qc")
-    }),
-
-    // r62: MULTI-SCALE topographic position index -> Weiss two-scale
-    // landform classes, the flagship consumer of the r61 SAT: ONE
-    // prefix-sum pass serves box means at BOTH radii (4 and 16) as four
-    // lookups each — the r43-style separable focal pass would re-scan
-    // the window per radius. All comparisons are scaled-integer exact:
-    // tpi*n = v*box_n - box_sum, classified against threshold*box_n, so
-    // no float mean ever forms. Probes are generated distributively
-    // (4 corner rows per cell), joined home on the owning tile id.
-    "r62_tpi_landform" -> ((s, _) => {
-      import s.implicits._
-      val ref = GridRef(ncols = 384, nrows = 256, xll = 0, yll = 0,
-        cellsize = 1, nodata = -9999)
-      val tiles = TileOps.tileGrid(s, ref, tileRes)((r, c) =>
-        ((r * 7 + c * 3) % 100).toDouble)
-      val sat = graft.operators.Sat.satTiles(tiles)
-        .localCheckpoint(false)
-      val cells = TileOps.cells(tiles)
-        .select($"row".cast("int").as("qr"), $"col".cast("int").as("qc"),
-          $"v".cast("long").as("v"))
-      // ONE probe pass + ONE SAT join serve BOTH radii (boxSumAtRadii),
-      // pivoted to per-radius columns with conditional aggregates — the
-      // per-radius boxSumAt calls ran the whole probe pipeline twice and
-      // needed two joins back onto the cells
-      val boxes = graft.operators.Sat.boxSumAtRadii(sat, ref, tileRes,
-          cells, Seq(4, 16))
-        .groupBy($"qr", $"qc")
-        .agg(max(when($"k" === 4, $"box_n")).as("n_s"),
-          max(when($"k" === 4, $"box_sum")).cast("long").as("bs_s"),
-          max(when($"k" === 16, $"box_n")).as("n_l"),
-          max(when($"k" === 16, $"box_sum")).cast("long").as("bs_l"))
-      val out = cells
-        .join(boxes, Seq("qr", "qc"))
-        .withColumn("tpi_s", $"v" * $"n_s" - $"bs_s")
-        .withColumn("tpi_l", $"v" * $"n_l" - $"bs_l")
-        .withColumn("class_s",
-          when($"tpi_s" > lit(5) * $"n_s", 1L)
-            .when($"tpi_s" < lit(-5) * $"n_s", -1L).otherwise(0L))
-        .withColumn("class_l",
-          when($"tpi_l" > lit(5) * $"n_l", 1L)
-            .when($"tpi_l" < lit(-5) * $"n_l", -1L).otherwise(0L))
-        .groupBy($"class_s", $"class_l")
-        .agg(count(lit(1)).as("n_cells"),
-          sum($"tpi_s").as("sum_tpi_s"), sum($"tpi_l").as("sum_tpi_l"))
-        .orderBy($"class_s", $"class_l")
-        .localCheckpoint(true)
-      sat.unpersist()
-      out
-    }),
-
-    // COST BACKLINK (r63) — the ArcGIS CostDistance "backlink" output
-    // over the converged r45 surface: per reachable cell, the D8 index
-    // (1..8, clockwise from east; 0 at sources) of the chosen
-    // predecessor on an optimal path. Among exact witnesses
-    // (dist(v) + (q(v)+q(u))*wgt == dist(u) — exact dyadic sums) the
-    // smallest direction wins, so the raster is engine- and
-    // partitioning-independent. Scale shape: ONE halo exchange over the
-    // already-converged distance tiles; no iteration, no driver state.
-    "r63_cost_backlink" -> ((s, _) => {
-      import s.implicits._
-      graft.operators.CostDistance.backlink(demTiles(s), Synth.demRef,
-          tileRes, isSource = _ >= 240.0)
-        .orderBy($"row", $"col")
-    }),
-
-    // LEAST-COST PATH (r64) — CostPath from a fixed target back to the
-    // nearest source, following r63's deterministic backlink chain.
-    // Scale shape: the chain is enumerated by POINTER DOUBLING over the
-    // predecessor DataFrame (jump table doubles its stride each round,
-    // path prefix doubles with one equi-join) — O(log pathLen) rounds,
-    // never a per-step driver walk; no path cell is ever collected.
-    "r64_cost_path" -> ((s, _) => {
-      graft.operators.CostDistance.leastCostPath(demTiles(s), Synth.demRef,
-        tileRes, isSource = _ >= 240.0, targetRow = 200, targetCol = 150)
-    }),
-
-    // ICELITE LINEAGE AUDIT (q28): the per-partition LINEAGE ROWS the
-    // north rule requires — (bucket, rows, order-independent checksum)
-    // as durably recorded at commit time — under the driver hash gate.
-    // The checksum is XOR of (cellId*31 + payload_len) over the
-    // bucket's rows (Long wraparound), recomputed independently by the
-    // oracle from the closed-form Z-order layout via HUGEINT mod-2^64
-    // arithmetic, so a single dropped or double-committed row anywhere
-    // in any bucket flips the gate.
-    "q28_lineage_audit" -> ((s, _) => {
-      import s.implicits._
-      val il = graft.icelite.IceLite
-      val dir = scratchDir("q28-icelite")
-      val ref = GridRef(ncols = 1024, nrows = 64, xll = 0, yll = 0,
-        cellsize = 1, nodata = -9999)
-      val strip = TileOps.tileGrid(s, ref, tileRes)((r, c) =>
-        ((r * 7 + c * 3) % 100).toDouble)
-      il.commitResumable(s, strip, dir, buckets = 4, snap = 1L)
-      s.createDataset(il.lineage(dir, 1L))
-        .select($"bucket".cast("long").as("bucket"), $"rows",
-          $"checksum")
-        .orderBy($"bucket")
-    }),
-
-    // ICELITE METADATA-ONLY COUNT (q29): the Iceberg count(*) pushdown —
-    // per-stage (live files, total rows) answered from the MANIFEST
-    // ALONE across a commit -> range delete -> COW upsert sequence; no
-    // parquet footer or data page is opened for any count. The numbers
-    // must track every mutation exactly: the delete drops one full file
-    // at the metadata level and COW-shrinks the straddler; the upsert
-    // rewrites one bucket in place (counts unchanged).
-    "q29_meta_count" -> ((s, _) => {
-      import s.implicits._
-      val il = graft.icelite.IceLite
-      val dir = scratchDir("q29-icelite")
-      val ref = GridRef(ncols = 1024, nrows = 64, xll = 0, yll = 0,
-        cellsize = 1, nodata = -9999)
-      val strip = TileOps.tileGrid(s, ref, tileRes)((r, c) =>
-        ((r * 7 + c * 3) % 100).toDouble)
-      il.commitResumable(s, strip, dir, buckets = 4, snap = 1L)
-      val s2 = il.deleteRange(s, dir,
-        graft.core.CellId.encode(tileRes, 7, 0),
-        graft.core.CellId.encode(tileRes, 8, 0))
-      val upd = strip.filter(t => t.col0 == 0)
-        .map(t => t.copy(payload = t.payload.map(_ + 1000.0)))
-      val s3 = il.upsert(s, dir, upd)
-      val rows = Seq(1L, s2, s3).zipWithIndex.map { case (sn, i) =>
-        ((i + 1).toLong, il.dataFileCount(dir, sn).toLong,
-          il.countRows(dir, sn))
-      }
-      s.createDataset(rows).toDF("stage", "n_files", "n_rows")
-        .orderBy($"stage")
-    }),
-
-    // ICELITE SCAN-PLAN PRUNING (q30): the pruning DECISION itself under
-    // the hash gate — for five probe ranges over the q25 strip, the
-    // files the planner opens (manifest min/max overlap), the rows those
-    // files hold, and the rows actually in range after the exact filter.
-    // Probe 2 lands in the gap BETWEEN buckets (all files pruned — the
-    // empty-scan path); probe 3 straddles two buckets where scanned (9)
-    // >> in-range (2) — the case manifest stats exist for at 100 TB.
-    "q30_scan_prune" -> ((s, _) => {
-      import s.implicits._
-      val il = graft.icelite.IceLite
-      val dir = scratchDir("q30-icelite")
-      val ref = GridRef(ncols = 1024, nrows = 64, xll = 0, yll = 0,
-        cellsize = 1, nodata = -9999)
-      val strip = TileOps.tileGrid(s, ref, tileRes)((r, c) =>
-        ((r * 7 + c * 3) % 100).toDouble)
-      il.commitResumable(s, strip, dir, buckets = 4, snap = 1L)
-      val b = graft.core.CellId.encode(tileRes, 0, 0)
-      val probes = Seq((1L, b, b + 21L), (2L, b + 22L, b + 63L),
-        (3L, b + 21L, b + 64L), (4L, b + 65L, b + 85L), (5L, b, b + 85L))
-      val rows = probes.map { case (pid, lo, hi) =>
-        val nFiles = il.planFiles(dir, 1L, lo, hi).size.toLong
-        val scanned = il.read(s, dir, 1L, Some((lo, hi)))
-        val nScan = scanned.count()
-        val nRange = scanned.filter(t => t.cellId >= lo && t.cellId <= hi)
-          .count()
-        (pid, nFiles, nScan, nRange)
-      }
-      s.createDataset(rows).toDF("probe", "n_files", "n_scanned", "n_in_range")
-        .orderBy($"probe")
-    }),
-
-    // ANN RECALL EVALUATION (e11) — the eval-harness op every production
-    // retrieval pipeline runs: recall of IVF nProbe=1 against the exact
-    // top-3, per query, on the e10 fixture TRANSLATED by +10 (same
-    // degenerate-init Lloyd dynamics — k-means is translation invariant —
-    // but cosine becomes well-defined: no vector is ever zero). e10's
-    // gated final state genuinely SPLITS blob 0 across two clusters and
-    // merges blobs 1+2, so nProbe=1 has real misses: this gate hashes
-    // honest per-query recall < 1, not a recall-1.0-by-construction
-    // fixture like e2. n_ann < 3 where the probed list is short (cluster
-    // {0,5,10} offers 2 candidates) — the boundary IVF behavior itself.
-    "e11_recall_eval" -> ((s, _) => {
-      import s.implicits._
-      val pts = s.range(36).map { i =>
-        val g = (i / 12).toInt; val m = (i % 12).toInt
-        val x = 10 + (if (g == 1) 100 else 0) + m % 5 - 2
-        val y = 10 + (if (g == 2) 100 else 0) + (m * 7) % 5 - 2
-        (i, Array(x.toFloat, y.toFloat))
-      }.toDF("vec_id", "embedding")
-      val (assign, centroids) = graft.sim.Similarity.kmeansWithCentroids(
-        s, pts, "vec_id", "embedding", k = 3, iters = 2)
-      val withCl = pts.join(assign, pts("vec_id") === assign("vid"))
-        .drop("vid")
-      val q = pts.select($"vec_id".as("qid"), $"embedding".as("qv"))
-      val ann = graft.sim.Similarity.ivfTopK(s, withCl, "vec_id",
-        "embedding", "cl", q, k = 3, nProbe = 1,
-        centroidTable = Some(centroids))
-      val exact = graft.sim.Similarity.bruteTopK(q,
-        pts.select($"vec_id".as("vid"), $"embedding".as("v")), 3)
-      val annN = ann.groupBy($"qid").agg(count(lit(1)).as("na"))
-      val hitN = ann.join(exact.select($"qid", $"vid"), Seq("qid", "vid"))
-        .groupBy($"qid").agg(count(lit(1)).as("nh"))
-      q.select($"qid").join(annN, Seq("qid"), "left")
-        .join(hitN, Seq("qid"), "left")
-        .select($"qid", coalesce($"na", lit(0L)).as("n_ann"),
-          coalesce($"nh", lit(0L)).as("n_hits"))
-        .orderBy($"qid")
-    }),
-
-    // HARD-NEGATIVE MINING (m8) — the contrastive-training batch
-    // primitive: per anchor, the top-5 most-similar corpus vectors with
-    // a DIFFERENT lang label (the near-misses an InfoNCE loss needs),
-    // on the e7 labeled fixture. One composite-predicate join + window
-    // top-k; dyadic coordinates make every cosine bit-identical
-    // cross-engine, so the full ranking hash-gates.
-    "m8_hard_negatives" -> ((s, _) => {
-      import s.implicits._
-      val C = 16; val M = 30; val dim = 16
-      val e = s.range(C.toLong * M).map { vid =>
-        val cl = (vid % C).toInt; val m = (vid / C).toInt
-        val v = Array.tabulate(dim) { d =>
-          val center = if (d == cl) 8.0f else 0.0f
-          center + (((m * 31 + d * 17 + cl * 7) % 13) - 6) * 0.125f
-        }
-        (vid, v, Seq("en", "de", "fr")((vid % 3).toInt))
-      }.toDF("vec_id", "embedding", "lang")
-      val anchors = e.filter($"vec_id" < 10)
-        .select($"vec_id".as("qid"), $"embedding".as("qv"),
-          $"lang".as("qlabel"))
-      val corpus = e.select($"vec_id".as("vid"), $"embedding".as("v"),
-        $"lang".as("label"))
-      graft.sim.Similarity.hardNegatives(anchors, corpus, k = 5)
-        .orderBy($"qid", $"rank")
-    }),
-
-    // ICELITE SNAPSHOT EXPIRY + GC (q31): the retention lifecycle under
-    // the hash gate — expire keeps the last 2 snapshots, deletes exactly
-    // the ONE data directory no live manifest references (bucket 0's
-    // pre-upsert file; bucket 3's old file is still referenced by the
-    // kept snap 2 and MUST survive), the head and the kept pin stay
-    // byte-identical, and reading the expired snapshot fails loudly.
-    "q31_expire_gc" -> ((s, _) => {
-      import s.implicits._
-      val il = graft.icelite.IceLite
-      val dir = scratchDir("q31-icelite")
-      val ref = GridRef(ncols = 1024, nrows = 64, xll = 0, yll = 0,
-        cellsize = 1, nodata = -9999)
-      val strip = TileOps.tileGrid(s, ref, tileRes)((r, c) =>
-        ((r * 7 + c * 3) % 100).toDouble)
-      il.commitResumable(s, strip, dir, buckets = 4, snap = 1L)
-      val s2 = il.upsert(s, dir, strip.filter(t => t.col0 == 0)
-        .map(t => t.copy(payload = t.payload.map(_ + 1000.0))))
-      val s3 = il.upsert(s, dir, strip.filter(t => t.col0 == 960)
-        .map(t => t.copy(payload = t.payload.map(_ + 500.0))))
-      def rsum(snap: Long): Long = il.read(s, dir, snap).map { t =>
-        var x = 0L; t.payload.foreach(v => x += Math.rint(v).toLong); x
-      }.reduce(_ + _)
-      val nBefore = il.snapshots(dir).size.toLong
-      val headBefore = rsum(s3)
-      val removed = il.expireSnapshots(dir, keepLast = 2).toLong
-      val nAfter = il.snapshots(dir).size.toLong
-      val headAfter = rsum(s3)
-      val prevPin = rsum(s2)
-      val gone =
-        try { il.read(s, dir, 1L).count(); 0L }
-        catch { case _: il.SnapshotNotFound => 1L }
-      s.createDataset(Seq(
-        ("a_before", nBefore, headBefore),
-        ("b_after", nAfter, headAfter),
-        ("c_gc", removed, prevPin),
-        ("d_expired_pin", gone, 0L)))
-        .toDF("stage", "n", "rint_sum")
-        .orderBy($"stage")
-    }),
-
-    // ICELITE WAP AUDIT-REJECT (q32) — the arm q24 does not cover: a
-    // staged snapshot FAILS its audit (4 of 6 tiles — a broken
-    // upstream), is abandoned instead of published, and the abandon
-    // must GC exactly the staged artifacts (4 data dirs — every staged
-    // bucket is unshared), leave main byte-identical, and make both
-    // the ref and the staged snapshot loudly unreadable.
-    "q32_wap_reject" -> ((s, _) => {
-      import s.implicits._
-      val il = graft.icelite.IceLite
-      val dir = scratchDir("q32-icelite")
-      val ref = GridRef(ncols = 160, nrows = 96, xll = 0, yll = 0,
-        cellsize = 1, nodata = -9999)
-      val base = TileOps.tileGrid(s, ref, tileRes)((r, c) =>
-        ((r * 7 + c * 3) % 100).toDouble)
-      il.commitResumable(s, base, dir, buckets = 4, snap = 1L)
-      // broken upstream: the tx=0 tile column went missing
-      il.commitResumable(s, base.filter(t => t.col0 != 0), dir,
-        buckets = 4, snap = 2L, stageRef = Some("audit"))
-      def stats(snap: Long): (Long, Long) = {
-        val r0 = il.read(s, dir, snap).map { t =>
-          var x = 0L; t.payload.foreach(v => x += Math.rint(v).toLong)
-          (1L, x)
-        }.reduce((a, b) => (a._1 + b._1, a._2 + b._2))
-        r0
-      }
-      val (preN, preSum) = stats(1L)
-      val staged = il.refSnapshot(dir, "audit").get
-      val (stN, stSum) = stats(staged)
-      val rejected = if (stN != preN) 1L else 0L // the audit verdict
-      require(rejected == 1L, "q32: audit unexpectedly passed")
-      val gc = il.abandonStaged(dir, "audit").toLong
-      val (postN, postSum) = stats(1L)
-      val gone =
-        (try { il.read(s, dir, staged).count(); 0L }
-        catch { case _: il.SnapshotNotFound => 1L }) min
-          (if (il.refSnapshot(dir, "audit").isEmpty) 1L else 0L)
-      s.createDataset(Seq(
-        ("a_main_pre", preN, preSum),
-        ("b_staged", stN, stSum),
-        ("c_reject", rejected, 0L),
-        ("d_gc", gc, 0L),
-        ("e_main_post", postN, postSum),
-        ("f_staged_gone", gone, 0L)))
-        .toDF("stage", "n", "rint_sum")
-        .orderBy($"stage")
-    }),
-
-    // MULTIDIRECTIONAL HILLSHADE (r65) — the soft-shadow rendering pass
-    // (GDAL -multidirectional family), and the FIRST hillshade-family
-    // numeric surface under the cross-engine hash: the sqrt-only
-    // Lambertian formulation (light dot unit-normal; constants all in
-    // {0, +-1, +-sqrt(0.5)}) has no libm trig, so every shade value is
-    // a chain of correctly-rounded IEEE ops on the r8-gated gradient.
-    "r65_multidir_hillshade" -> ((s, _) => {
-      import s.implicits._
-      val dem = TileOps.tileGrid(s, Synth.demRef, tileRes)(Synth.demValue)
-      Stencil.multidirShade(Stencil.hornGradient(dem, Synth.demRef, tileRes))
-        .filter(($"row" * lit(Synth.demRef.ncols) + $"col") % 23 === 7)
-        .select($"row".cast("long").as("row"), $"col".cast("long").as("col"),
-          $"shade")
-        .orderBy($"row", $"col")
-    }),
-
-    // P2: clip-by-polygon semi-join mask (rasterio.mask semantics)
-    "r12_clip_polygon" -> ((s, _) => {
-      import s.implicits._
-      val dem = demTiles(s) // icelite scan; semi-join prune hits PushedFilters
-      val masked = ClipPolygon(dem, Synth.demRef, tileRes, Synth.ca1Features)
-      TileOps.cells(masked)
-        .filter($"v".isNotNull)
-        .withColumn("band", floor($"row" / 16).cast("long"))
-        .groupBy($"band")
-        .agg(count(lit(1)).as("n_valid"), sum($"v").as("sum_v"))
-        .orderBy($"band")
-    }),
-
-    // A4: rank classification counts (grid_show breaks semantics)
-    "r13_classify" -> ((s, _) => {
-      import s.implicits._
-      val dem = TileOps.tileGrid(s, Synth.demRef, tileRes)(Synth.demValue)
-      val classed = TileFns.classify(dem, Array(50.0, 100.0, 150.0, 200.0))
-      TileOps.cells(classed)
-        .groupBy($"v".as("class"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy($"class")
-    }),
-
-    // Hypsometric histogram (elevation-band areas + cumulative
-    // area-above-elevation — the hypsometric-curve prep of terrain
-    // analysis): exact integer counts per 25 m band over the DEM, one
-    // partial/final hash agg; the cumulative window runs over the 10
-    // band rows only. Band edges (k*25) divide the quarter-step fixture
-    // values exactly, so floor(v/25) is engine-identical.
-    "r55_hypsometry" -> ((s, _) => {
-      import s.implicits._
-      val dem = TileOps.tileGrid(s, Synth.demRef, tileRes)(Synth.demValue)
-      val hist = TileOps.cells(dem).filter($"v".isNotNull && !isnan($"v"))
-        .withColumn("bucket", floor($"v" / 25.0).cast("long"))
-        .groupBy($"bucket").agg(count(lit(1)).as("n"))
-      val w = Window.orderBy($"bucket".desc)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      hist.withColumn("n_at_or_above", sum($"n").over(w))
-        .select($"bucket", $"n", $"n_at_or_above")
-        .orderBy($"bucket")
-    }),
-
-    // XYZ slippy-map TILE PYRAMID export — the raster-serving op: levels
-    // z=0..3 (fixed 64px tiles; average-downsample by 2^z via the real
-    // window-agg operator, reassembled through tilesFromCells), each tile
-    // rendered to a REAL PNG by renderPng, decoded back in-task and
-    // reduced to integer code sums. The fixture's integer values with
-    // lo=0/hi=1000 make every level's codes exact integers (64*s/4^z
-    // with 4^z <= 64), so DuckDB regenerates every tile's checksum from
-    // the closed form — render + encode + decode round-trip included.
-    // z=3's single 32x32 tile exercises the partial-tile edge.
-    "r56_xyz_tiles" -> ((s, _) => {
-      import s.implicits._
-      val ref = GridRef(256, 256, 0.0, 0.0, 1.0, -9999.0, "")
-      val dem = TileOps.tileGrid(s, ref, 6)(
-        (r, c) => ((r * 31 + c * 17) % 1000).toDouble)
-      // the gate drives the SHIPPED facade method (progressive fold,
-      // render, PNG encode), then decodes each tile back for checksums
-      graft.Raster(dem, ref, 6).tilePyramidPng(levels = 4, 0.0, 1000.0)
-        .as[(Long, Long, Long, Array[Byte])]
-        .map { case (z, x, y, png) =>
-          val (px, w, h) = graft.codecs.ImageCodec.decode(png, "png")
-          var sum = 0L; var j = 0
-          while (j < px.length) { sum += Math.rint(px(j) * 64.0).toLong; j += 1 }
-          (z, x, y, w, h, sum)
-        }
-        .toDF("z", "x", "y", "w", "h", "sum_code")
-        .orderBy($"z", $"y", $"x")
-    }),
-
-    // Per-language length-distribution profile — how curation thresholds
-    // (p50/p90/p99 length cutoffs) are actually derived in a pipeline:
-    // exact-interpolation percentiles over integer n_chars (a + f*(b-a)
-    // of exact integers, identical in both engines), one hash agg.
-    // At 100 TB the same profile runs via approx_percentile with a
-    // documented error bound; the exact form here is the oracle-able
-    // gate of the GROUPING + interpolation semantics.
-    "d23_length_profile" -> ((s, dir) => {
-      import s.implicits._
-      table(s, dir, "documents")
-        .groupBy($"lang")
-        .agg(count(lit(1)).as("n"),
-          min($"n_chars").as("min_chars"), max($"n_chars").as("max_chars"),
-          expr("percentile(n_chars, 0.5D)").as("p50"),
-          expr("percentile(n_chars, 0.9D)").as("p90"),
-          expr("percentile(n_chars, 0.99D)").as("p99"))
-        .orderBy($"lang")
-    }),
-
-    // image corpus invariants: decode + PSNR + caption lineage + phash dups
-    // (rows-only gate — DuckDB cannot decode PNG/JPEG)
-    "i1_image_invariants" -> ((s, _) => {
-      import s.implicits._
-      val n = 64L
-      val gridW = 8
-      val corpus = ImageCorpus.generate(s, n, gridW)
-      val decoded = ImageCorpus.decodeTiles(corpus, gridW)
-      val checks = decoded.map { t =>
-        val i = t.imageId.stripPrefix("img-").toLong
-        val src = if (i > 0 && i % 251 == 0) i - 1 else i
-        val tx = (src % gridW).toInt
-        val ty = (src / gridW).toInt
-        val fmt = ImageCorpus.fmtOf(src)
-        val truth = ImageCorpus.tilePayload(tx, ty).map { v =>
-          if (fmt == "png") Math.rint(v * graft.codecs.ImageCodec.PngScale) / graft.codecs.ImageCodec.PngScale
-          else Math.rint(v * graft.codecs.ImageCodec.JpgScale) / graft.codecs.ImageCodec.JpgScale
-        }
-        val p = graft.codecs.ImageCodec.psnr(t.payload, truth, 60.0)
-        val captionOk = t.caption == s"tile $tx,$ty of synthetic terrain; seed=42; fmt=$fmt"
-        (fmt, p, captionOk)
-      }.toDF("fmt", "psnr", "caption_ok")
-      // Oracle-gated as the north-star INVARIANTS: every row must clear
-      // PSNR >= 40 dB (lossy gate), every png must round-trip exactly
-      // (psnr = inf), every caption must propagate byte-equal — the raw
-      // PSNR value itself is decoder-specific (JVM JPEG) and excluded;
-      // the DuckDB side derives the fmt layout from the corpus rules and
-      // asserts the invariant counts equal n per fmt.
-      checks.groupBy($"fmt").agg(
-        count(lit(1)).as("n"),
-        sum(when($"psnr" >= 40.0, 1L).otherwise(0L)).as("n_psnr40_ok"),
-        sum(when($"psnr" === Double.PositiveInfinity, 1L).otherwise(0L)).as("n_exact"),
-        sum(when($"caption_ok", 1L).otherwise(0L)).as("n_caption_ok"))
-        .orderBy($"fmt")
-    }),
-
-    // audio modality: opaque WAV binary column -> distributed PCM decode
-    // -> windowed integer features (energy, zero crossings); the encode ->
-    // REAL RIFF bytes -> decode round trip runs inside the task, and the
-    // integer-exact features hash-match the SQL oracle
-    "a1_audio_features" -> ((s, _) => {
-      import s.implicits._
-      s.range(100).flatMap { k =>
-        val samples = Array.tabulate(1000)(i =>
-          (((k * 7 + i * 31) % 2001) - 1000).toShort)
-        val bytes = graft.codecs.WavCodec.encode(samples, 16000)
-        val (dec, _) = graft.codecs.WavCodec.decode(bytes)
-        graft.codecs.WavCodec.windowFeatures(dec, 250).iterator.map {
-          case (w, n, ss, zc) => (k, w.toLong, n, ss, zc)
-        }
-      }.toDF("clip_id", "win", "n", "sum_sq", "zc")
-        .orderBy($"clip_id", $"win")
-    }),
-
-    // Audio SILENCE TRIMMING (VAD gate): per clip, windows whose energy
-    // (sum of squared samples) falls below a threshold are silent; the
-    // clip keeps everything between the first and last loud window. The
-    // fixture plants k%3 leading and k%2 trailing quiet windows (|v|<=20,
-    // energy <= 1e5) around the a1 loud pattern (energy ~8e7), all
-    // integer-exact so the threshold needs no margins. Real RIFF
-    // encode -> decode in-task like a1; per-clip kernel, zero shuffle.
-    "a2_audio_trim" -> ((s, _) => {
-      import s.implicits._
-      s.range(100).map { k =>
-        val lead = (k % 3).toInt; val trail = (k % 2).toInt
-        val samples = Array.tabulate(1000) { i =>
-          val silent = i < 250 * lead || i >= 1000 - 250 * trail
-          if (silent) (((k * 7 + i * 31) % 41) - 20).toShort
-          else (((k * 7 + i * 31) % 2001) - 1000).toShort
-        }
-        val bytes = graft.codecs.WavCodec.encode(samples, 16000)
-        val (dec, _) = graft.codecs.WavCodec.decode(bytes)
-        val (nw, nLead, nTrail, kept) =
-          graft.codecs.WavCodec.trimSilence(dec, 250, energyThreshold = 1000000L)
-        (k, nw, nLead, nTrail, kept)
-      }.toDF("clip_id", "n_win", "lead_silent", "trail_silent", "kept_samples")
-        .orderBy($"clip_id")
-    }),
-
-    // Audio RESAMPLING (decimate-by-2, 2-tap box pre-filter): the
-    // sample-rate normalization every audio corpus pass runs before
-    // feature extraction. Same real RIFF encode -> decode in-task as a1;
-    // the position-WEIGHTED checksum gates sample ORDER and the floor
-    // rounding, sum_abs gates magnitudes. All integer-exact.
-    "a3_audio_resample" -> ((s, _) => {
-      import s.implicits._
-      s.range(100).map { k =>
-        val samples = Array.tabulate(1000)(i =>
-          (((k * 7 + i * 31) % 2001) - 1000).toShort)
-        val bytes = graft.codecs.WavCodec.encode(samples, 16000)
-        val (dec, _) = graft.codecs.WavCodec.decode(bytes)
-        val out = graft.codecs.WavCodec.downsample2(dec)
-        var wsum = 0L; var sabs = 0L
-        var j = 0
-        while (j < out.length) {
-          wsum += (j + 1).toLong * out(j); sabs += math.abs(out(j).toLong)
-          j += 1
-        }
-        (k, out.length.toLong, wsum, sabs)
-      }.toDF("clip_id", "n_out", "wsum", "sum_abs")
-        .orderBy($"clip_id")
-    }),
-
-    // Audio GAIN NORMALIZATION — measure per-clip peak, derive the exact
-    // power-of-two gain (largest shift with peak<<s <= 32767), and
-    // checksum the normalized stream. The fixture divides the a1 pattern
-    // by 1 + k%4 so peaks (and hence shifts 5/6/6/7) vary per clip; all
-    // integer-exact (trunc division, bit-shift gain). Same real RIFF
-    // encode -> decode in-task as a1; per-clip kernel, zero shuffle.
-    "a4_audio_gain" -> ((s, _) => {
-      import s.implicits._
-      s.range(100).map { k =>
-        val div = (1 + k % 4).toInt
-        val samples = Array.tabulate(1000)(i =>
-          (((((k * 7 + i * 31) % 2001) - 1000) / div).toShort))
-        val bytes = graft.codecs.WavCodec.encode(samples, 16000)
-        val (dec, _) = graft.codecs.WavCodec.decode(bytes)
-        val (peak, shift) = graft.codecs.WavCodec.gainShift(dec)
-        var wsum = 0L
-        var j = 0
-        while (j < dec.length) {
-          wsum += (j + 1).toLong * (dec(j).toLong << shift); j += 1
-        }
-        (k, peak, shift.toLong, wsum)
-      }.toDF("clip_id", "peak", "shift", "norm_wsum")
-        .orderBy($"clip_id")
-    }),
-
-    // Audio RATIONAL-rate conversion (2:3, the 48 kHz -> 32 kHz shape):
-    // a3's by-2 decimator generalized to the rational ratios real
-    // corpora need. Output k sits at source position 3k/2 — direct read
-    // on even k, exact floor-mean of the straddling pair on odd k (all
-    // half-sample fractions, so the interpolation is dyadic-integer).
-    // Same real RIFF encode -> decode in-task as a1; per-clip kernel,
-    // zero shuffle; the position-weighted checksum gates order+rounding.
-    "a6_rate_convert" -> ((s, _) => {
-      import s.implicits._
-      s.range(100).map { k =>
-        val samples = Array.tabulate(1000)(i =>
-          (((k * 7 + i * 31) % 2001) - 1000).toShort)
-        val bytes = graft.codecs.WavCodec.encode(samples, 48000)
-        val (dec, _) = graft.codecs.WavCodec.decode(bytes)
-        val out = graft.codecs.WavCodec.resample2of3(dec)
-        var wsum = 0L; var sabs = 0L
-        var j = 0
-        while (j < out.length) {
-          wsum += (j + 1).toLong * out(j)
-          sabs += math.abs(out(j).toLong)
-          j += 1
-        }
-        (k, out.length.toLong, wsum, sabs)
-      }.toDF("clip_id", "n_out", "wsum", "sum_abs")
-        .orderBy($"clip_id")
-    }),
-
-    // Audio VAD SEGMENTATION (utterance splitting): where a2 trims one
-    // span, this emits EVERY maximal run of loud windows as a segment —
-    // the pass that splits long recordings into utterances for ASR
-    // corpora. The fixture interleaves quiet windows (|v|<=20, energy
-    // <= 1e5) through the a1 loud pattern (energy ~8e7) on a per-clip
-    // rotating rule, so clips carry 2-3 islands at varying positions.
-    // Real RIFF encode -> decode in-task; per-clip kernel, zero shuffle;
-    // integer-exact so the gaps-and-islands SQL form matches bit-for-bit.
-    "a5_vad_segments" -> ((s, _) => {
-      import s.implicits._
-      s.range(100).flatMap { k =>
-        val samples = Array.tabulate(2000) { i =>
-          val quiet = (k + 3L * (i / 250)) % 4 == 0
-          if (quiet) (((k * 7 + i * 31) % 41) - 20).toShort
-          else (((k * 7 + i * 31) % 2001) - 1000).toShort
-        }
-        val bytes = graft.codecs.WavCodec.encode(samples, 16000)
-        val (dec, _) = graft.codecs.WavCodec.decode(bytes)
-        graft.codecs.WavCodec.vadSegments(dec, 250, 1000000L).iterator.map {
-          case (seg, start, nw, es) => (k, seg, start, nw, es)
-        }
-      }.toDF("clip_id", "seg", "start_win", "n_win", "energy")
-        .orderBy($"clip_id", $"seg")
-    }),
-
-    // Video SCENE-CHANGE detection: SAD between consecutive decoded
-    // frames, cut where SAD > 65000. The fixture switches the pixel
-    // formula at frame 6 (i -> 3i+97 remap), so the 5->6 transition SADs
-    // ~130k while drift steps sit ~33k — and both engines compute the
-    // same exact integers regardless. Same per-clip GIF-decode kernel
-    // as v1.
-    "v2_scene_cuts" -> ((s, _) => {
-      import s.implicits._
-      val clips = sceneCutGifClips(s)
-      graft.codecs.VideoOps.sceneCuts(clips, threshold = 65000L)
-        .orderBy($"clip_id", $"frame_idx")
-    }),
-
-    // Temporal CLIP WINDOWING — the video analog of d24 chunking: each
-    // 12-frame clip cut into 4-frame training windows stepped by 3
-    // (tail window = 3 frames). Same v2 fixture (formula switch at
-    // frame 6), all integers; the position-weighted gray-sum checksum
-    // pins frame order inside each window.
-    // Video FPS RESAMPLING — nearest-frame temporal normalization (the
-    // a3 decimator's video sibling): 10 fps source clips to 4 fps by
-    // the exact half-up integer selection rule; each selected frame
-    // REALLY decodes (GIF89a round trip) to integer gray sums. 12
-    // frames -> 5 outputs picking sources 0,3,5,8,10. Per-clip kernel,
-    // zero shuffle.
-    "v5_fps_resample" -> ((s, _) => {
-      import s.implicits._
-      val clips = s.range(8).map { cid =>
-        val frames = (0 until 12).map { f =>
-          Array.tabulate(48 * 32)(i => ((cid * 37 + f * 11 + i) % 251).toDouble)
-        }
-        (cid.toLong, graft.sources.GifWriter.writeAnimatedBytes(
-          frames, 48, 32, lo = 0, hi = 250, delayCs = 10))
-      }
-      graft.codecs.VideoOps.fpsResample(clips, srcFps = 10, dstFps = 4)
-        .orderBy($"clip_id", $"out_idx")
-    }),
-
-    "v3_clip_windows" -> ((s, _) => {
-      import s.implicits._
-      val clips = sceneCutGifClips(s)
-      graft.codecs.VideoOps.clipWindows(clips, winFrames = 4, stride = 3)
-        .orderBy($"clip_id", $"win_idx")
-    }),
-
-    // KEYFRAME selection — each v3 window elects its largest-gray-sum
-    // frame (ties -> smallest index). Same v2/v3 fixture; the formula
-    // switch at frame 6 makes gray-sums vary within windows, and the
-    // integer argmax is engine-independent. Per-clip kernel, no shuffle.
-    "v4_keyframes" -> ((s, _) => {
-      import s.implicits._
-      val clips = sceneCutGifClips(s)
-      graft.codecs.VideoOps.keyFrames(clips, winFrames = 4, stride = 3)
-        .orderBy($"clip_id", $"win_idx")
-    }),
-
-    // semi-structured: JSON props extraction + conditional agg
-    "q6_json_props" -> ((s, dir) => {
-      import s.implicits._
-      table(s, dir, "events")
-        .withColumn("k", get_json_object($"props", "$.k").cast("long"))
-        .groupBy($"event_type")
-        .agg(count($"k").as("n"), sum($"k").as("sum_k"),
-          sum(when($"k" > 50, 1L).otherwise(0L)).as("n_gt50"))
-        .orderBy($"event_type")
-    }),
-
-    // Backward AS-OF join (click -> most recent prior view by the same
-    // user): the temporal operator Spark lacks natively, built as ONE
-    // key-shuffle + a streaming last(ignoreNulls) window frame — a hot
-    // user key costs linear work in one task, never the O(l x r) of the
-    // naive inequality-join + row_number formulation
-    "q7_asof_join" -> ((s, dir) => {
-      import s.implicits._
-      val ev = table(s, dir, "events")
-      val clicks = ev.filter($"event_type" === "click")
-        .select($"event_id", $"user_id", $"ts")
-      val views = ev.filter($"event_type" === "view")
-        .select($"event_id", $"user_id", $"ts")
-      graft.operators.AsOfJoin.asOf(clicks, views, "user_id", "ts", "ts",
-          rightCols = Seq("event_id", "ts"), rightPrefix = "view_")
-        .withColumn("gap_sec",
-          (unix_micros($"ts".cast("timestamp")) - unix_micros($"view_ts".cast("timestamp"))) / 1000000.0)
-        .orderBy($"event_id")
-    }),
-
-    // Tolerance range join (click <-> error by the same user within 2h):
-    // right side exploded to its 3 tolerance buckets -> EQUI-join on
-    // (user, bucket) + exact |dt| filter — shuffle is 3x the descriptor
-    // volume, never the inequality-join cartesian
-    "q8_range_join" -> ((s, dir) => {
-      import s.implicits._
-      val ev = table(s, dir, "events")
-      val clicks = ev.filter($"event_type" === "click")
-      val errors = ev.filter($"event_type" === "error")
-      graft.operators.AsOfJoin.rangeJoin(clicks, errors, "user_id",
-          "ts", "ts", tolSec = 7200L,
-          leftCols = Seq("event_id"), rightCols = Seq("event_id"),
-          rightPrefix = "err_")
-        .orderBy($"event_id", $"err_event_id")
-    }),
-
-    // SQL analytic windows (built-in WindowExec — listed in SURVEY §2.5 as
-    // free from Spark; gated here so the claim is evidence, not assertion):
-    // per-user ordered running stats over the event stream.
-    // EVERY value column rides as exact integer cents (the q1 trick, end to
-    // end): the cent conversion is floor(value*100 + 0.5), pure IEEE
-    // multiply/add/floor on the same double bits in both engines — round()
-    // is banned here because Spark rounds the SHORTEST-DECIMAL BigDecimal
-    // HALF_UP while DuckDB rounds the binary double, and a *.x5 boundary
-    // row flips the hash (r4 regression, VERDICT r4 #1).
-    "q9_window_analytics" -> ((s, dir) => {
-      import s.implicits._
-      val w = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
-      val wm = w.rowsBetween(-2, 0)
-      table(s, dir, "events")
-        .withColumn("value_c", floor($"value" * 100 + 0.5).cast("long"))
-        .select($"event_id", $"user_id", $"value_c",
-          lag($"value_c", 1).over(w).as("prev_value_c"),
-          sum($"value_c").over(wm).as("mov_sum_c3"),
-          max($"value_c").over(wm).as("mov_max_c3"),
-          row_number().over(w).cast("long").as("seq"))
-        .orderBy($"event_id")
-    }),
-
-    // grouping sets / rollup (built-in Expand) over event day x type
-    "q10_rollup" -> ((s, dir) => {
-      import s.implicits._
-      table(s, dir, "events")
-        .withColumn("day", to_date($"ts"))
-        .rollup($"day", $"event_type")
-        .agg(count(lit(1)).as("n"),
-          sum(floor($"value" * 100 + lit(0.5)).cast("long")).as("sum_c"),
-          grouping_id($"day", $"event_type").cast("long").as("lvl"))
-        .orderBy($"lvl", $"day", $"event_type")
-    }),
-
-    // PIVOT (built-in conditional-agg rewrite): per-user event-type
-    // matrix — Spark compiles the pivot to one partial/final hash agg
-    // with CASE projections, never a per-type pass
-    "q11_pivot" -> ((s, dir) => {
-      import s.implicits._
-      table(s, dir, "events")
-        .groupBy($"user_id")
-        .pivot("event_type", Seq("click", "error", "purchase", "signup", "view"))
-        .agg(count(lit(1)))
-        .na.fill(0L)
-        .select($"user_id", $"click".as("n_click"), $"error".as("n_error"),
-          $"purchase".as("n_purchase"), $"signup".as("n_signup"),
-          $"view".as("n_view"))
-        .orderBy($"user_id")
-    }),
-
-    // CUBE (all 4 grouping levels through one Expand, SURVEY §2.4): the
-    // day-of-week x type traffic matrix with both margins and the grand
-    // total in ONE partial/final hash agg — never 4 passes over events
-    "q13_cube" -> ((s, dir) => {
-      import s.implicits._
-      table(s, dir, "events")
-        .withColumn("dow", dayofweek($"ts").cast("long"))
-        .cube($"dow", $"event_type")
-        .agg(count(lit(1)).as("n"),
-          sum(floor($"value" * 100 + lit(0.5)).cast("long")).as("sum_c"),
-          grouping_id($"dow", $"event_type").cast("long").as("lvl"))
-        .orderBy($"lvl", $"dow", $"event_type")
-    }),
-
-    // approx_count_distinct (HyperLogLog++) next to the exact count —
-    // the cardinality-estimation op a 100 TB profile pass runs where
-    // exact DISTINCT would shuffle every value: the sketch is a
-    // fixed-size mergeable partial (bytes per partition, not rows). The
-    // gate is the INVARIANT row: the exact count is cross-checked
-    // hash-exact and hll_ok asserts the sketch landed within its
-    // documented rsd envelope (5% config -> test at 3x = 15%).
-    "q14_approx_distinct" -> ((s, dir) => {
-      import s.implicits._
-      table(s, dir, "events")
-        .groupBy($"event_type")
-        .agg(countDistinct($"user_id").as("n_exact"),
-          approx_count_distinct($"user_id", rsd = 0.05).as("n_hll"))
-        .select($"event_type", $"n_exact",
-          (abs($"n_hll" - $"n_exact") <=
-            round($"n_exact" * 0.15, 0).cast("long") + 1).as("hll_ok"))
-        .orderBy($"event_type")
-    }),
-
-    // OHLC time bars — the resample-to-bars op (metrics/time-series
-    // rollup): per user x hour, open/close by arg_min/arg_max on the
-    // (ts, event_id) order key (deterministic under duplicate
-    // timestamps), high/low/volume in exact cents. One partial/final
-    // hash agg, one shuffle on the bar key.
-    "q15_ohlc_bars" -> ((s, dir) => {
-      import s.implicits._
-      val cents = floor($"value" * 100 + lit(0.5)).cast("long")
-      table(s, dir, "events")
-        .select($"user_id", date_trunc("hour", $"ts").as("bar"),
-          $"ts", $"event_id", cents.as("c"))
-        .groupBy($"user_id", $"bar")
-        .agg(min_by($"c", struct($"ts", $"event_id")).as("open_c"),
-          max_by($"c", struct($"ts", $"event_id")).as("close_c"),
-          max($"c").as("high_c"), min($"c").as("low_c"),
-          count(lit(1)).as("n"), sum($"c").as("vol_c"))
-        .orderBy($"user_id", $"bar")
-    }),
-
-    // PIVOT — long-to-wide reshape (RelationalGroupedDataset.pivot), the
-    // report/feature-matrix shape: day-of-week x event-type revenue grid
-    // in exact cents. The pivot VALUES are passed explicitly — without
-    // them Spark runs an extra blocking distinct-scan job over 100 TB to
-    // discover them, and the column set becomes data-dependent (schema
-    // drift on a new event type). Compiles to ONE partial/final hash agg
-    // on dow with conditional sums — same plan as the CASE-WHEN oracle,
-    // no per-value shuffle.
-    "q16_pivot" -> ((s, dir) => {
-      import s.implicits._
-      table(s, dir, "events")
-        .withColumn("dow", dayofweek($"ts").cast("long"))
-        .select($"dow", $"event_type", cents($"value").as("c"))
-        .groupBy($"dow")
-        .pivot("event_type", Seq("click", "error", "purchase", "signup", "view"))
-        .agg(sum($"c"))
-        .orderBy($"dow")
-    }),
-
-    // EXACT grouped quantiles via VALUE-HISTOGRAM rank selection — the
-    // 100 TB-safe exact form (d23 documents approx_percentile as the
-    // sketch form; this is its exact sibling). Spark's percentile() agg
-    // buffers every value per group in executor memory, and a global-sort
-    // row_number collapses to one partition — both scale traps. Here the
-    // shuffle key is (group, value): a distinct-value histogram + one
-    // window pass over DISTINCT values (50 quantities, not 60k rows)
-    // locates the two order-statistic taps per quantile, and the
-    // interpolation is exact integer arithmetic (x4 fixed-point: the
-    // rank fraction is always a quarter). Holds whenever distinct values
-    // << rows — prices, quantities, scores; the d23 sketch covers the
-    // unbounded-cardinality case.
-    "q17_exact_quantiles" -> ((s, dir) => {
-      import s.implicits._
-      val li = table(s, dir, "lineitem")
-        .select($"l_returnflag".as("flag"), $"l_quantity".cast("long").as("v"))
-      val hist = li.groupBy($"flag", $"v").agg(count(lit(1)).as("c"))
-      val n = li.groupBy($"flag").agg(count(lit(1)).as("n"))
-      val w = Window.partitionBy($"flag").orderBy($"v")
-      // 0-based rank interval [rank_lo, rank_hi) of each distinct value
-      val cum = hist.withColumn("rank_hi", sum($"c").over(w))
-        .withColumn("rank_lo", $"rank_hi" - $"c")
-      val ps = Seq(1L, 2L, 3L).toDF("p4") // p = p4/4: quartiles
-      val taps = cum.join(n, "flag").join(broadcast(ps))
-        // floor tap index — floor()+cast because Spark's `/` on longs is
-        // DOUBLE division (a bare `/ 4` would carry a .25/.5/.75 tail)
-        .withColumn("i0", floor(($"p4" * ($"n" - 1)) / 4).cast("long"))
-        .withColumn("f4", ($"p4" * ($"n" - 1)) % 4) // quarter fraction
-        .withColumn("contrib",
-          when($"rank_lo" <= $"i0" && $"i0" < $"rank_hi",
-            (lit(4L) - $"f4") * $"v").otherwise(0L) +
-          when($"f4" > 0 && $"rank_lo" <= $"i0" + 1 && $"i0" + 1 < $"rank_hi",
-            $"f4" * $"v").otherwise(0L))
-      taps.groupBy($"flag", $"n").pivot("p4", Seq("1", "2", "3"))
-        .agg(sum($"contrib"))
-        .withColumnRenamed("1", "q25_x4")
-        .withColumnRenamed("2", "q50_x4")
-        .withColumnRenamed("3", "q75_x4")
-        .orderBy($"flag")
-    }),
-
-    // STREAMING INGEST into the table format, gated end-to-end: a real
-    // Structured Streaming AvailableNow drain of a parquet backlog ->
-    // per-batch last-wins dedup -> icelite resumable snapshot commit ->
-    // read the committed snapshot back and emit content invariants.
-    // Composes the north star's three non-query claims (streaming,
-    // exactly-once ingest, snapshot resumability) into one driver-gated
-    // surface; StreamIngestSpec additionally kills and resumes the same
-    // path. Source written as 4 files (< maxFilesPerTrigger), so the
-    // drain is one batch and the final snapshot carries the full corpus.
-    "s9_stream_ingest" -> ((s, _) => {
-      import s.implicits._
-      val tmp = java.nio.file.Paths.get(scratchDir("s9-ingest"))
-      val src = tmp.resolve("src").toString
-      val tbl = tmp.resolve("icelite").toString
-      val ckpt = tmp.resolve("ckpt").toString
-      ImageCorpus.generateExact(s, 64L, 8).coalesce(4).write.parquet(src)
-      graft.streaming.StreamIngest.runAvailableNow(s, src, tbl, ckpt,
-        gridW = 8)
-      val snap = graft.icelite.IceLite.currentSnapshot(tbl).getOrElse(
-        sys.error("s9: no snapshot committed"))
-      graft.icelite.IceLite.read(s, tbl, snap).map { t =>
-        var sq = 0L
-        t.payload.foreach(v => sq += Math.rint(v * 64.0).toLong)
-        (1L, t.payload.length.toLong, sq)
-      }.toDF("t", "n", "sq")
-        .agg(sum($"t").as("n_tiles"), sum($"n").as("n_cells"),
-          sum($"sq").as("sum_q"))
-    }),
-
-    // SNAPSHOT COMPACTION equivalence (rewrite_data_files analog): 8
-    // small buckets compact to 2, and BOTH snapshots — pre- and post-
-    // compaction — read back with identical content invariants; the
-    // compacted snapshot is a pure physical rewrite (fewer, larger
-    // files), never a logical change. With q18 (COW upsert) and s9
-    // (streaming ingest) this completes the driver-gated table-format
-    // maintenance story.
-    "q20_compact_equiv" -> ((s, _) => {
-      import s.implicits._
-      val dir = scratchDir("q20-icelite")
-      val ref = GridRef(ncols = 160, nrows = 96, xll = 0, yll = 0,
-        cellsize = 1, nodata = -9999)
-      val base = TileOps.tileGrid(s, ref, tileRes)((r, c) =>
-        ((r * 7 + c * 3) % 100).toDouble)
-      graft.icelite.IceLite.commitResumable(s, base, dir, buckets = 8,
-        snap = 1L)
-      val snap2 = graft.icelite.IceLite.compact(s, dir, targetBuckets = 2)
-      def stats(snap: Long, tag: Long) =
-        graft.icelite.IceLite.read(s, dir, snap).map { t =>
-          var sv = 0L
-          t.payload.foreach(v => sv += Math.rint(v).toLong)
-          (tag, 1L, t.payload.length.toLong, sv)
-        }.toDF("snap", "t", "n", "sv")
-      stats(1L, 1L).unionByName(stats(snap2, 2L))
-        .groupBy($"snap")
-        .agg(sum($"t").as("n_tiles"), sum($"n").as("n_cells"),
-          sum($"sv").as("sum_v"))
-        .orderBy($"snap")
-    }),
-
-    // SCHEMA EVOLUTION gated end-to-end: metadata-only add-column (no
-    // data file touched), read-time NULL-fill of pre-evolution files,
-    // then a COW upsert backfilling the new column for 2 of 6 tiles —
-    // the 4 untouched tiles carry by reference and still null-fill.
-    // Payload sums prove the evolution/backfill never perturbs data.
-    "q21_schema_evolution" -> ((s, _) => {
-      import s.implicits._
-      val dir = scratchDir("q21-icelite")
-      val ref = GridRef(ncols = 160, nrows = 96, xll = 0, yll = 0,
-        cellsize = 1, nodata = -9999)
-      val base = TileOps.tileGrid(s, ref, tileRes)((r, c) =>
-        ((r * 7 + c * 3) % 100).toDouble)
-      graft.icelite.IceLite.commitResumable(s, base, dir, buckets = 4,
-        snap = 1L)
-      graft.icelite.IceLite.evolveAddColumn(dir, "grade", "BIGINT")
-      val updates = base.filter(_.col0 == 0).toDF()
-        .withColumn("grade", lit(7L))
-      val snap2 = graft.icelite.IceLite.upsertDf(s, dir, updates)
-      def stats(snap: Long, tag: Long) =
-        graft.icelite.IceLite.readDf(s, dir, snap)
-          .select(lit(tag).as("phase"), lit(1L).as("t"),
-            when($"grade".isNotNull, 1L).otherwise(0L).as("gs"),
-            coalesce($"grade", lit(0L)).as("g"),
-            aggregate($"payload", lit(0L),
-              (acc, v) => acc + v.cast("long")).as("sv"))
-      stats(1L, 1L).unionByName(stats(snap2, 2L))
-        .groupBy($"phase")
-        .agg(sum($"t").as("n_tiles"), sum($"gs").as("n_grade_set"),
-          sum($"g").as("sum_grade"), sum($"sv").as("sum_v"))
-        .orderBy($"phase")
-    }),
-
-    // FORWARD-FILL gap imputation (time-series LOCF) — carry each user's
-    // last observed non-view amount forward across view-event gaps: the
-    // sensor/price imputation every feature pipeline runs before
-    // windowed training. ONE hashpartitioning(user_id) exchange feeding
-    // a running last(ignoreNulls) frame — per-user streaming state, no
-    // self-join, no driver; leading gaps keep a -1 sentinel. Cents stay
-    // exact (the q1 floor rule) so the gate is integer.
-    "q19_gap_fill" -> ((s, dir) => {
-      import s.implicits._
-      val w = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      table(s, dir, "events")
-        .withColumn("c", when($"event_type" =!= "view", cents($"value")))
-        .withColumn("filled", last($"c", ignoreNulls = true).over(w))
-        .select($"user_id", $"event_id", $"c".isNull.as("was_gap"),
-          coalesce($"filled", lit(-1L)).as("filled_cents"))
-        .orderBy($"user_id", $"event_id")
-    }),
-
-    // ICELITE INCREMENTAL CHANGELOG read (Iceberg incremental-scan /
-    // Delta Change-Data-Feed analog) gated end-to-end: commit snapshot 1,
-    // COW upsert (+1000 on the even 64-col tile bands, one appended
-    // tile) -> snapshot 2, COW row-level DELETE (the appended tile + the
-    // untouched (0,64) tile) -> snapshot 3, then readChanges over BOTH
-    // intervals. Pruning is metadata-only — files carried between
-    // manifests by reference are never opened, so the diff reads only
-    // the touched buckets — and updates emit pre+post images whose
-    // content-equality backstop drops rewritten-but-unchanged carries.
-    // Gated as per-interval per-change-type tile/cell/value totals.
-    "q22_incremental_read" -> ((s, _) => {
-      import s.implicits._
-      val dir = scratchDir("q22-icelite")
-      val ref = GridRef(ncols = 160, nrows = 96, xll = 0, yll = 0,
-        cellsize = 1, nodata = -9999)
-      val base = TileOps.tileGrid(s, ref, tileRes)((r, c) =>
-        ((r * 7 + c * 3) % 100).toDouble)
-      graft.icelite.IceLite.commitResumable(s, base, dir, buckets = 4,
-        snap = 1L)
-      val upd = base.filter(t => (t.col0 / 64) % 2 == 0)
-        .map(t => t.copy(payload = t.payload.map(_ + 1000.0)))
-      val extra = s.createDataset(Seq(graft.core.Tile(
-        graft.core.CellId.encode(tileRes, 999, 999), 999 * 64, 999 * 64,
-        2, 2, Array(1.0, 2.0, 3.0, 4.0))))
-      val snap2 = graft.icelite.IceLite.upsert(s, dir, upd.union(extra))
-      val delKeys = base.filter(t => t.row0 == 0 && t.col0 == 64).toDF()
-        .select($"cellId")
-        .unionByName(extra.toDF().select($"cellId"))
-      val snap3 = graft.icelite.IceLite.deleteRows(s, dir, delKeys)
-      def phase(a: Long, b: Long, tag: Long) =
-        graft.icelite.IceLite.readChanges(s, dir, a, b)
-          .select(lit(tag).as("phase"), $"_change_type".as("ct"), $"payload")
-          .as[(Long, String, Array[Double])]
-      phase(1L, snap2, 1L).union(phase(snap2, snap3, 2L))
-        .map { case (p, ct, pl) =>
-          var sv = 0L
-          pl.foreach(v => sv += Math.rint(v).toLong)
-          (p, ct, 1L, pl.length.toLong, sv)
-        }
-        .toDF("phase", "change_type", "t", "n", "sv")
-        .groupBy($"phase", $"change_type")
-        .agg(sum($"t").as("n_tiles"), sum($"n").as("n_cells"),
-          sum($"sv").as("sum_v"))
-        .orderBy($"phase", $"change_type")
-    }),
-
-    // ICELITE ROLLBACK (q26): metadata-only rollback_to_snapshot — the
-    // bad-commit undo. After rolling back past an upsert, the head
-    // re-reads as the original image, the ABANDONED snapshot still
-    // time-travels by pin (until expiry), and the next write allocates
-    // ids PAST the abandoned head (nextSnapshotId), branching history
-    // without overwriting it.
-    "q26_rollback" -> ((s, _) => {
-      import s.implicits._
-      val il = graft.icelite.IceLite
-      val dir = scratchDir("q26-icelite")
-      val ref = GridRef(ncols = 160, nrows = 96, xll = 0, yll = 0,
-        cellsize = 1, nodata = -9999)
-      val base = TileOps.tileGrid(s, ref, tileRes)((r, c) =>
-        ((r * 7 + c * 3) % 100).toDouble)
-      il.commitResumable(s, base, dir, buckets = 4, snap = 1L)
-      val upd = base.filter(t => (t.col0 / 64) % 2 == 0)
-        .map(t => t.copy(payload = t.payload.map(_ + 1000.0)))
-      val snap2 = il.upsert(s, dir, upd)
-      il.rollback(dir, 1L)
-      val extra = s.createDataset(Seq(graft.core.Tile(
-        graft.core.CellId.encode(tileRes, 999, 999), 999 * 64, 999 * 64,
-        2, 2, Array(1.0, 2.0, 3.0, 4.0))))
-      val snap3 = il.upsert(s, dir, extra) // must land PAST the abandoned head
-      require(snap3 == snap2 + 1, s"id allocation reused $snap3")
-      def stats(snap: Long, stage: Long) =
-        il.read(s, dir, snap).map { t =>
-          var sv = 0L
-          t.payload.foreach(v => sv += Math.rint(v).toLong)
-          (stage, 1L, t.payload.length.toLong, sv)
-        }.toDF("stage", "t", "n", "sv")
-      // 1: the rolled-back head's image (== base, read via the pin the
-      //    rollback re-pointed to); 2: the abandoned upsert, readable by
-      //    pin; 3: the branched head (base + extra)
-      stats(1L, 1L).unionByName(stats(snap2, 2L)).unionByName(stats(snap3, 3L))
-        .groupBy($"stage")
-        .agg(sum($"t").as("n_tiles"), sum($"n").as("n_cells"),
-          sum($"sv").as("sum_v"))
-        .orderBy($"stage")
-    }),
-
-    // ICELITE METADATA TABLES (q27): the Iceberg `table$files` analog —
-    // per-file rows straight from the manifest, NO parquet footer opened.
-    // The single-tile-row strip makes the Z-order bucket layout exact:
-    // ids are (6<<58) + spread(tx), so every file's row count and
-    // min/max cell stats are closed-form — the oracle hardcodes the
-    // interleave table. This gates the PRUNING METADATA itself (the
-    // stats every range-pruned read depends on).
-    "q27_files_meta" -> ((s, _) => {
-      import s.implicits._
-      val il = graft.icelite.IceLite
-      val dir = scratchDir("q27-icelite")
-      val ref = GridRef(ncols = 1024, nrows = 64, xll = 0, yll = 0,
-        cellsize = 1, nodata = -9999)
-      val strip = TileOps.tileGrid(s, ref, tileRes)((r, c) =>
-        ((r * 7 + c * 3) % 100).toDouble)
-      il.commitResumable(s, strip, dir, buckets = 4, snap = 1L)
-      il.filesDf(s, dir, 1L)
-        .select($"bucket".cast("long").as("bucket"), $"file_rows",
-          $"min_cell", $"max_cell")
-        .orderBy($"bucket")
-    }),
-
-    // ICELITE RANGE DELETE (q25): the retention / partition-drop shape.
-    // A single tile row makes Z-order ids monotonic in tx, so the range
-    // edges hit bucket boundaries: deleting col0 in [448, 576) drops one
-    // data file at the METADATA level (manifest rows -> 0, file never
-    // opened — O(manifest) partition drops at 100 TB), COW-rewrites the
-    // one straddling file, and carries the rest by reference; the old
-    // snapshot still time-travels to the full strip (stage 3 == stage 1).
-    // File-level behavior is pinned in IceLiteSpec; this gates content.
-    "q25_range_delete" -> ((s, _) => {
-      import s.implicits._
-      val il = graft.icelite.IceLite
-      val dir = scratchDir("q25-icelite")
-      val ref = GridRef(ncols = 1024, nrows = 64, xll = 0, yll = 0,
-        cellsize = 1, nodata = -9999)
-      val strip = TileOps.tileGrid(s, ref, tileRes)((r, c) =>
-        ((r * 7 + c * 3) % 100).toDouble)
-      il.commitResumable(s, strip, dir, buckets = 4, snap = 1L)
-      val s2 = il.deleteRange(s, dir,
-        graft.core.CellId.encode(tileRes, 7, 0),
-        graft.core.CellId.encode(tileRes, 8, 0))
-      def stats(snap: Long, stage: Long) =
-        il.read(s, dir, snap).map { t =>
-          var sv = 0L
-          t.payload.foreach(v => sv += Math.rint(v).toLong)
-          (stage, 1L, t.payload.length.toLong, sv)
-        }.toDF("stage", "t", "n", "sv")
-      stats(1L, 1L).unionByName(stats(s2, 2L)).unionByName(stats(1L, 3L))
-        .groupBy($"stage")
-        .agg(sum($"t").as("n_tiles"), sum($"n").as("n_cells"),
-          sum($"sv").as("sum_v"))
-        .orderBy($"stage")
-    }),
-
-    // ICELITE WRITE-AUDIT-PUBLISH (q24): the Iceberg staging-branch
-    // pattern — THE production ingestion shape at 100 TB: a full
-    // snapshot (data + lineage + manifest) is committed to a NAMED REF
-    // without moving the current pointer, an audit validates it by
-    // reading the ref, and one atomic metadata flip publishes. Gated as
-    // three stages: main before publish (must still be the old
-    // snapshot), the staged branch, and main after publish.
-    "q24_wap" -> ((s, _) => {
-      import s.implicits._
-      val il = graft.icelite.IceLite
-      val dir = scratchDir("q24-icelite")
-      val ref = GridRef(ncols = 160, nrows = 96, xll = 0, yll = 0,
-        cellsize = 1, nodata = -9999)
-      val base = TileOps.tileGrid(s, ref, tileRes)((r, c) =>
-        ((r * 7 + c * 3) % 100).toDouble)
-      il.commitResumable(s, base, dir, buckets = 4, snap = 1L)
-      val staged = base.map(t => t.copy(payload = t.payload.map(_ + 1000.0)))
-      il.commitResumable(s, staged, dir, buckets = 4, snap = 2L,
-        stageRef = Some("audit"))
-      def stats(snap: Long, stage: String) =
-        il.read(s, dir, snap).map { t =>
-          var sv = 0L
-          t.payload.foreach(v => sv += Math.rint(v).toLong)
-          (stage, 1L, t.payload.length.toLong, sv)
-        }.toDF("stage", "t", "n", "sv")
-      val preMain = stats(il.currentSnapshot(dir).get, "a_pre_main")
-      val auditSnap = il.refSnapshot(dir, "audit").get
-      val branch = stats(auditSnap, "b_branch")
-      // the audit: staged row count must match main before the flip
-      require(il.read(s, dir, auditSnap).count() ==
-        il.read(s, dir, 1L).count(), "WAP audit failed")
-      il.publish(dir, "audit")
-      val postMain = stats(il.currentSnapshot(dir).get, "c_post_main")
-      preMain.unionByName(branch).unionByName(postMain)
-        .groupBy($"stage")
-        .agg(sum($"t").as("n_tiles"), sum($"n").as("n_cells"),
-          sum($"sv").as("sum_v"))
-        .orderBy($"stage")
-    }),
-
-    // ICELITE CDC REPLICATION (q23): the changelog is proven COMPLETE
-    // and REPLAYABLE by rebuilding a second physical table from NOTHING
-    // but q22's per-interval readChanges feed — mirror starts as a copy
-    // of snapshot 1, then each interval's inserts/update-postimages
-    // upsert and deletes delete, exactly the Iceberg-CDC-to-downstream
-    // pattern. Gated as per-stage invariants where mirror must equal
-    // source after every applied interval.
-    "q23_cdc_apply" -> ((s, _) => {
-      import s.implicits._
-      val il = graft.icelite.IceLite
-      val src = scratchDir("q23-src")
-      val mir = scratchDir("q23-mir")
-      val ref = GridRef(ncols = 160, nrows = 96, xll = 0, yll = 0,
-        cellsize = 1, nodata = -9999)
-      val base = TileOps.tileGrid(s, ref, tileRes)((r, c) =>
-        ((r * 7 + c * 3) % 100).toDouble)
-      il.commitResumable(s, base, src, buckets = 4, snap = 1L)
-      val upd = base.filter(t => (t.col0 / 64) % 2 == 0)
-        .map(t => t.copy(payload = t.payload.map(_ + 1000.0)))
-      val extra = s.createDataset(Seq(graft.core.Tile(
-        graft.core.CellId.encode(tileRes, 999, 999), 999 * 64, 999 * 64,
-        2, 2, Array(1.0, 2.0, 3.0, 4.0))))
-      val snap2 = il.upsert(s, src, upd.union(extra))
-      val delKeys = base.filter(t => t.row0 == 0 && t.col0 == 64).toDF()
-        .select($"cellId").unionByName(extra.toDF().select($"cellId"))
-      val snap3 = il.deleteRows(s, src, delKeys)
-      // mirror boots from the snapshot-1 image, then consumes ONLY the feed
-      il.commitResumableDf(s, il.readDf(s, src, 1L), mir, buckets = 2,
-        snap = 1L)
-      def stats(table: String, snap: Long, stage: Long, side: String) =
-        il.read(s, table, snap).map { t =>
-          var sv = 0L
-          t.payload.foreach(v => sv += Math.rint(v).toLong)
-          (stage, side, 1L, t.payload.length.toLong, sv)
-        }.toDF("stage", "side", "t", "n", "sv")
-      val parts = Seq(snap2, snap3).map { sn =>
-        // localCheckpoint, not persist: the columnar InMemoryRelation
-        // encode of 4096-double payload arrays cost more than the
-        // changelog itself (measured ~1.6s/interval); the RDD-block
-        // checkpoint caches rows as-is
-        val ch = il.readChanges(s, src, sn - 1, sn).localCheckpoint(false)
-        // ONE action decides both apply branches (and materializes the
-        // lazily checkpointed changelog) — two separate isEmpty probes
-        // were two extra driver round-trips per interval
-        val nByType = ch.groupBy($"_change_type").count()
-          .as[(String, Long)].collect().toMap
-        val ups = ch.filter($"_change_type".isin("insert", "update_postimage"))
-          .drop("_change_type")
-        if (nByType.getOrElse("insert", 0L) +
-            nByType.getOrElse("update_postimage", 0L) > 0) il.upsertDf(s, mir, ups)
-        val dels = ch.filter($"_change_type" === "delete").select($"cellId")
-        if (nByType.getOrElse("delete", 0L) > 0) il.deleteRows(s, mir, dels)
-        ch.unpersist()
-        val mHead = il.currentSnapshot(mir).get
-        stats(src, sn, sn, "source").unionByName(stats(mir, mHead, sn, "mirror"))
-      }
-      parts.reduce(_ unionByName _)
-        .groupBy($"stage", $"side")
-        .agg(sum($"t").as("n_tiles"), sum($"n").as("n_cells"),
-          sum($"sv").as("sum_v"))
-        .orderBy($"stage", $"side")
-    }),
-
-    // ICELITE TIME TRAVEL end-to-end through the driver harness: write
-    // snapshot 1 (resumable bucketed commit), row-level COW upsert (4 of
-    // 6 tiles updated + 1 appended) -> snapshot 2, then read BOTH pinned
-    // snapshots and emit per-snapshot integer invariants. Gates the
-    // north-star resumability claim where it matters: the snap-1 pin is
-    // bit-identical AFTER the upsert (readers never see partial merges),
-    // and the snap-2 read shows exactly the COW rule (updated cells
-    // replace, new cells append, untouched buckets carry by reference).
-    "q18_snapshot_travel" -> ((s, _) => {
-      import s.implicits._
-      val dir = scratchDir("q18-icelite")
-      val ref = GridRef(ncols = 160, nrows = 96, xll = 0, yll = 0,
-        cellsize = 1, nodata = -9999)
-      val base = TileOps.tileGrid(s, ref, tileRes)((r, c) =>
-        ((r * 7 + c * 3) % 100).toDouble)
-      graft.icelite.IceLite.commitResumable(s, base, dir, buckets = 4,
-        snap = 1L)
-      val upd = base.filter(t => (t.col0 / 64) % 2 == 0)
-        .map(t => t.copy(payload = t.payload.map(_ + 1000.0)))
-      val extra = s.createDataset(Seq(graft.core.Tile(
-        graft.core.CellId.encode(tileRes, 999, 999), 999 * 64, 999 * 64,
-        2, 2, Array(1.0, 2.0, 3.0, 4.0))))
-      val snap2 = graft.icelite.IceLite.upsert(s, dir, upd.union(extra))
-      def stats(snap: Long, tag: Long) =
-        graft.icelite.IceLite.read(s, dir, snap).map { t =>
-          var sv = 0L
-          t.payload.foreach(v => sv += Math.rint(v).toLong)
-          (tag, 1L, t.payload.length.toLong, sv)
-        }.toDF("snap", "t", "n", "sv")
-      stats(1L, 1L).unionByName(stats(snap2, 2L))
-        .groupBy($"snap")
-        .agg(sum($"t").as("n_tiles"), sum($"n").as("n_cells"),
-          sum($"sv").as("sum_v"))
-        .orderBy($"snap")
-    }),
-
-    // SET operations (INTERSECT / EXCEPT built-ins, SURVEY §2.7): the
-    // audience-segmentation shape — users who both clicked and purchased
-    // vs users who clicked but never purchased. Both compile to
-    // hash-aggregate + shuffle-on-user_id plans (left-semi / left-anti
-    // after dedup), no driver-side set math.
-    "q12_set_ops" -> ((s, dir) => {
-      import s.implicits._
-      val ev = table(s, dir, "events")
-      val clickers = ev.filter($"event_type" === "click").select($"user_id")
-      val buyers = ev.filter($"event_type" === "purchase" && $"value" >= 90)
-        .select($"user_id")
-      clickers.intersect(buyers).withColumn("grp", lit("both"))
-        .unionByName(
-          clickers.except(buyers).withColumn("grp", lit("click_only")))
-        .select($"grp", $"user_id")
-        .orderBy($"grp", $"user_id")
-    }),
-
-    // native Catalyst expressions (doGenCode): cell_of / cell_parent in SQL
-    "q5_cell_functions" -> ((s, _) => {
-      import s.implicits._
-      graft.functions.GraftFunctions.register(s)
-      s.range(5000)
-        .selectExpr("id % 300 AS row", "(id * 7) % 280 AS col")
-        .selectExpr("cell_of(row, col, 6) AS cell")
-        .selectExpr("cell", "cell_parent(cell) AS parent")
-        .groupBy($"cell", $"parent")
-        .agg(count(lit(1)).as("n"))
-        .orderBy($"cell")
-    }),
-
-    // ---- training-data pipeline over the documents table ----
-    // exact dedup by canonical token-set signature
-    "d1_dedup_sets" -> ((s, dir) => {
-      import s.implicits._
-      table(s, dir, "documents")
-        .withColumn("sig",
-          md5(concat_ws(" ", array_sort(array_distinct(split($"text", " "))))))
-        .groupBy($"sig")
-        .agg(min($"doc_id").as("keep_id"), count(lit(1)).as("n_docs"))
-        .filter($"n_docs" > 1)
-        .orderBy($"sig")
-    }),
-
-    // INCREMENTAL dedup — the steady-state shape of a crawl pipeline:
-    // new documents (odd ids) anti-joined on the d1 token-set signature
-    // against the existing corpus index (even ids). LEFT ANTI is the
-    // plan: one shuffle on the md5 sig, the index side carries
-    // signatures only (at 100 TB the index is the compact sig table,
-    // never the corpus), survivors are the genuinely-new docs.
-    "d18_incremental_dedup" -> ((s, dir) => {
-      import s.implicits._
-      val docs = table(s, dir, "documents").withColumn("sig",
-        md5(concat_ws(" ", array_sort(array_distinct(split($"text", " "))))))
-      val index = docs.filter($"doc_id" % 2 === 0).select($"sig").distinct()
-      docs.filter($"doc_id" % 2 === 1)
-        .join(index, Seq("sig"), "left_anti")
-        .select($"doc_id", $"sig")
-        .orderBy($"doc_id")
-    }),
-
-    // Per-SOURCE curation rollup — the URL/domain-level filtering shape
-    // of C4/RefinedWeb: one shuffle on the d1 signature marks each doc's
-    // duplication (window count over sig), one partial/final hash agg
-    // rolls docs up to their source with an integer keep rule (drop a
-    // source once >20% of its docs are exact dups). At 100 TB the sig
-    // window and the source agg are the only shuffles; both key on
-    // compact columns.
-    "d22_source_stats" -> ((s, dir) => {
-      import s.implicits._
-      val docs = table(s, dir, "documents").withColumn("sig",
-        md5(concat_ws(" ", array_sort(array_distinct(split($"text", " "))))))
-      val withDup = docs.withColumn("sig_n",
-        count(lit(1)).over(Window.partitionBy($"sig")))
-      withDup.groupBy($"source")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(when($"sig_n" > 1, 1L).otherwise(0L)).as("n_dup"),
-          sum($"n_chars").as("chars"))
-        .withColumn("dup_frac", $"n_dup".cast("double") / $"n_docs")
-        .withColumn("keep", $"n_dup" * 5 <= $"n_docs")
-        .orderBy($"source")
-    }),
-
-    // SQ8 scalar-quantized ANN — int8 codes (4x scan compression), exact
-    // INTEGER candidate dots. The GATE covers the full 32-deep integer
-    // shortlist layer: per-dim max-abs scales, floor(+0.5) quantization,
-    // integer dots, (idot desc, vid) ranking — every gated column an exact
-    // integer, so no float near-tie can flip the hash across engines (the
-    // r4 regression: the float cosine re-rank layer ordered a near-tie
-    // differently under the driver's DuckDB). The float re-rank
-    // ([[Similarity.sq8TopK]]) is gated in SimilaritySpec against a
-    // driver-exact reference instead.
-    "e6_ann_sq8" -> ((s, dir) => {
-      import s.implicits._
-      val e = table(s, dir, "embeddings")
-      graft.sim.Similarity.sq8Shortlist(s,
-          e.select($"vec_id", $"embedding"), "vec_id", "embedding",
-          e.filter($"vec_id" < 10).select($"vec_id", $"embedding"),
-          "vec_id", "embedding", shortlist = 32)
-        .orderBy($"qid", $"rank")
-    }),
-
-    // kNN label-vote classification — the embedding-eval op: each query
-    // takes the majority label of its exact top-5 cosine neighbours
-    // (ties -> smallest label). The vote layer is deterministic over the
-    // e1-proven rank rows; at scale the same layer rides the IVF/PQ
-    // shortlists.
-    "e5_knn_classify" -> ((s, dir) => {
-      import s.implicits._
-      val e = table(s, dir, "embeddings")
-      val labels = e.select($"vec_id".as("vid"),
-        $"label".cast("long").as("label"))
-      val q = e.filter($"vec_id" < 50)
-        .select($"vec_id".as("qid"), $"embedding".as("qv"))
-      graft.sim.Similarity.knnClassify(q,
-          e.select($"vec_id".as("vid"), $"embedding".as("v")), labels, 5)
-        .orderBy($"qid")
-    }),
-
-    // PageRank over a link graph — the crawl-graph source-quality prior
-    // of a web corpus pipeline. Fixture: 64 nodes, two deterministic
-    // out-edges each (2i+1 and i²+7 mod 64 — disjoint families, so
-    // outdeg = 2 everywhere, indegree irregular 0..8), damping 7/8,
-    // 3 power iterations. Every quantity is dyadic (rank/2, ×7/8,
-    // +1/512) with denominators ≤ 2⁻¹⁸, so Spark's shuffle-order sums
-    // and DuckDB's join sums produce IDENTICAL doubles and pr×2¹⁸ is an
-    // exact integer. Per iteration: one contribution shuffle on dst +
-    // one id join — the 100 TB plan shape.
-    "g1_pagerank" -> ((s, _) => {
-      import s.implicits._
-      val ids = s.range(64).toDF("id")
-      val edges = ids.select($"id".as("src"), (($"id" * 2 + 1) % 64).as("dst"))
-        .unionByName(ids.select($"id".as("src"),
-          (($"id" * $"id" + 7) % 64).as("dst")))
-      graft.operators.GraphOps.pageRank(edges, "src", "dst",
-          iters = 3, damping = 0.875)
-        .select($"node", $"pr", ($"pr" * 262144).cast("long").as("pr_scaled"))
-        .orderBy($"node")
-    }),
-
-    // PERSONALIZED PageRank (g5) — restart to seed set {0, 13} over the
-    // g1 link graph: the seed-proximity prior (recommendation / crawl
-    // frontier scoring). Same dyadic exactness engineering as g1
-    // (outdeg 2 everywhere, damping 7/8, |S| = 2, NO dangling nodes),
-    // so shuffle-order sums are bit-identical and pr*2^18 is an exact
-    // integer; nodes far from the seeds genuinely rank 0.
-    "g5_personalized_pr" -> ((s, _) => {
-      import s.implicits._
-      val ids = s.range(64).toDF("id")
-      val edges = ids.select($"id".as("src"), (($"id" * 2 + 1) % 64).as("dst"))
-        .unionByName(ids.select($"id".as("src"),
-          (($"id" * $"id" + 7) % 64).as("dst")))
-      graft.operators.GraphOps.personalizedPageRank(edges, "src", "dst",
-          sources = Seq(0L, 13L), iters = 3, damping = 0.875)
-        .select($"node", $"pr", ($"pr" * 262144).cast("long").as("pr_scaled"))
-        .orderBy($"node")
-    }),
-
-    // Multi-source BFS hop distance over the g1 link graph (crawl depth
-    // from a seed set — the graph analog of the r42 distance transform):
-    // frontier relaxation, one (id, dist) shuffle per round, rounds =
-    // source-set eccentricity. Integer hop counts are engine-independent;
-    // the oracle walks the same edges with a recursive CTE.
-    "g2_bfs_depth" -> ((s, _) => {
-      import s.implicits._
-      val ids = s.range(64).toDF("id")
-      val edges = ids.select($"id".as("src"), (($"id" * 2 + 1) % 64).as("dst"))
-        .unionByName(ids.select($"id".as("src"),
-          (($"id" * $"id" + 7) % 64).as("dst")))
-      graft.operators.GraphOps.bfsDistances(edges, "src", "dst",
-          sources = Seq(0L, 13L))
-        .orderBy($"node")
-    }),
-
-    // Distributed triangle counting over the link graph (clustering
-    // coefficient numerator — dense-cluster / link-ring detection in
-    // crawl curation). Degree-ordered orientation bounds wedge fan-out
-    // at hubs to O(sqrt(m)); two skew-safe equi-joins, each triangle
-    // found once at its min-(deg, id) corner. Fixture: 60-node ring +
-    // skip-2 chords (every i closes triangle {i, i+1, i+2}) + i*i+7
-    // chords for irregularity; all-integer output, oracle is the brute
-    // a<b<c triple join over the same closed-form edge table.
-    "g3_triangles" -> ((s, _) => {
-      import s.implicits._
-      val ids = s.range(60).toDF("i")
-      val edges = ids.select($"i".as("x"), (($"i" + 1) % 60).as("y"))
-        .unionByName(ids.select($"i".as("x"), (($"i" + 2) % 60).as("y")))
-        .unionByName(ids.select($"i".as("x"), (($"i" * $"i" + 7) % 60).as("y")))
-      graft.operators.GraphOps.triangleCounts(edges, "x", "y")
-        .orderBy($"node")
-    }),
-
-    // k-CORE decomposition (k=3) — the link-graph density filter. The
-    // fixture plants the three canonical behaviours: a K6 clique and a
-    // circular-ladder prism (every node degree 3) SURVIVE; an open
-    // 4-rung ladder, BOTH rails anchored to the clique (edges (5,30)
-    // and (4,40) hold the near end at degree 3), unravels over 4
-    // cascading peel rounds — round r removes exactly rung r counted
-    // from the far end, because each round's removals drop the next
-    // rung below k — the multi-round path the oracle replays with
-    // unrolled peel CTEs.
-    "g4_kcore" -> ((s, _) => {
-      import s.implicits._
-      val clique = for { i <- 0 until 6; j <- i + 1 until 6 }
-        yield (i.toLong, j.toLong)
-      val prism = (0 until 8).flatMap(i => Seq(
-        (10L + i, 10L + (i + 1) % 8), (20L + i, 20L + (i + 1) % 8),
-        (10L + i, 20L + i)))
-      val ladder = (0 until 3).flatMap(i =>
-        Seq((30L + i, 31L + i), (40L + i, 41L + i))) ++
-        (0 until 4).map(i => (30L + i, 40L + i))
-      val edges = s.createDataset(
-          (clique ++ prism ++ ladder ++ Seq((5L, 30L), (4L, 40L))).toSeq)
-        .toDF("a", "b")
-      graft.operators.GraphOps.kCore(edges, "a", "b", k = 3)
-        .orderBy($"node")
-    }),
-
-    // Bloom-prefiltered incremental dedup — d18's 100 TB steady-state
-    // shape: the corpus sig index folds to a broadcast Bloom filter
-    // (treeAggregate; driver holds bits, never sigs), bloom-NEGATIVE
-    // incoming rows are provably new and skip the anti-join shuffle
-    // entirely, bloom-positive rows (true dups + ~1% false positives)
-    // exact-verify via LEFT ANTI. No false negatives -> the output is
-    // EXACTLY the plain anti-join's, so the d18 oracle gates the whole
-    // mechanism.
-    "d21_bloom_dedup" -> ((s, dir) => {
-      import s.implicits._
-      val docs = table(s, dir, "documents").withColumn("sig",
-        md5(concat_ws(" ", array_sort(array_distinct(split($"text", " "))))))
-      val corpus = docs.filter($"doc_id" % 2 === 0)
-      val incoming = docs.filter($"doc_id" % 2 === 1).select($"doc_id", $"sig")
-      graft.text.TextOps.incrementalDedupBloom(incoming, corpus, "sig",
-          expectedItems = 10000L, fpp = 0.01)
-        .select($"doc_id", $"sig")
-        .orderBy($"doc_id")
-    }),
-
-    // Token-window chunking with overlap — the pretraining/RAG chunker:
-    // every doc splits into 32-token windows stepped by 24 (8-token
-    // overlap), each chunk keyed by the md5 of its rejoined window for
-    // downstream chunk-level dedup/contamination. One narrow generator
-    // pass per document (split/sequence/explode/slice — all codegen'd
-    // built-ins), NO shuffle or join: at 100 TB the fan-out happens
-    // inside each input split.
-    "d24_chunking" -> ((s, dir) => {
-      import s.implicits._
-      graft.text.TextOps.chunkTokens(
-          table(s, dir, "documents"), "doc_id", "text",
-          chunkSize = 32, stride = 24)
-        .orderBy($"doc_id", $"chunk_idx")
-    }),
-
-    // BPE merge learning — tokenizer training as a corpus job: corpus
-    // folds once to the word-freq table, then 6 vocab-sized rounds of
-    // (pair count -> deterministic argmax -> greedy merge). The oracle
-    // runs FULL unrolled BPE in SQL (round 6 fuses a round-1 product:
-    // genuinely second-order), so the gate covers overlap counting,
-    // tie-break, and the greedy re-tokenization rule.
-    "d25_bpe_merges" -> ((s, dir) => {
-      graft.text.TextOps.bpeLearnMerges(
-          table(s, dir, "documents"), "text", nMerges = 6)
-        .orderBy(col("merge_rank"))
-    }),
-
-    // Sequence PACKING (GPT pretraining prep): whitespace token counts ->
-    // global token offsets via a DISTRIBUTED prefix sum (range partition
-    // + per-partition subtotals + driver scan of #partitions longs —
-    // never a single-partition global window) -> each doc's first/last
-    // 512-token training block.
-    "d27_seq_packing" -> ((s, dir) => {
-      import s.implicits._
-      val withTok = table(s, dir, "documents")
-        .select($"doc_id",
-          size(filter(split(trim($"text"), "\\s+"), t => t =!= lit("")))
-            .cast("long").as("n_tok"))
-        .where($"n_tok" > 0)
-      graft.text.TextOps.packContiguous(withTok, "doc_id", "n_tok", 512)
-        .orderBy($"doc_id")
-    }),
-
-    // URL-canonicalization dedup — the classic web-crawl pipeline step
-    // (CCNet/RefinedWeb dedupe by canonical URL before any content
-    // hashing). The documents table carries no URL column, so a URL is
-    // SYNTHESIZED deterministically per row: docs doc_id and
-    // doc_id + nDocs/2 describe the SAME logical page (lid = doc_id %
-    // (nDocs/2)) but with crawl-variant noise keyed off the RAW doc_id —
-    // scheme case, www. prefix, explicit :443 port, trailing slash,
-    // utm_* tracking params, #fragment. Canonicalization (lowercase,
-    // strip fragment / tracking query / www. / default port / trailing
-    // slash — each a codegen'd regexp_replace; every pattern matches at
-    // most once so first-match semantics agree cross-engine) must
-    // collapse each variant pair to ONE canonical URL. Scale shape: one
-    // projection + one map-side-combined groupBy on the canonical
-    // string — the exact-dedup shuffle shape of d1, no new machinery.
-    "d28_url_dedup" -> ((s, dir) => {
-      import s.implicits._
-      val docs = table(s, dir, "documents")
-      val half = (docs.count() / 2).max(1L)
-      val raw = docs.select($"doc_id", ($"doc_id" % half).as("lid"))
-        .withColumn("url", concat(
-          when($"doc_id" % 3 === 0, lit("HTTPS://WWW.")).otherwise(lit("https://")),
-          concat(lit("site"), ($"lid" % 20).cast("string"), lit(".example.com")),
-          when($"doc_id" % 4 === 0, lit(":443")).otherwise(lit("")),
-          lit("/docs/"), $"lid".cast("string"),
-          when($"doc_id" % 2 === 0, lit("/")).otherwise(lit("")),
-          when($"doc_id" % 5 === 0, lit("?utm_source=feed&utm_campaign=x"))
-            .otherwise(lit("")),
-          when($"doc_id" % 7 === 0, lit("#section-2")).otherwise(lit(""))))
-      raw
-        .withColumn("cu", regexp_replace(lower($"url"), "#.*$", ""))
-        .withColumn("cu", regexp_replace($"cu", "\\?utm_[^#]*$", ""))
-        .withColumn("cu", regexp_replace($"cu", "://www\\.", "://"))
-        .withColumn("cu", regexp_replace($"cu", ":443/", "/"))
-        .withColumn("cu", regexp_replace($"cu", "/$", ""))
-        .groupBy($"cu")
-        .agg(min($"doc_id").as("keep_id"), count(lit(1)).as("n_ids"))
-        .select($"cu".as("url"), $"keep_id", $"n_ids")
-        .orderBy($"url")
-    }),
-
-    // Zipf-rank fluency score — a log-free pseudo-perplexity: rank every
-    // vocabulary word by corpus frequency (ties by word), score each doc
-    // by the SUM of its words' ranks (a doc of common words scores low =
-    // fluent; rare-word soup scores high), keep when mean rank <= 18 via
-    // the integer cross-multiply (sum_rank <= 18 * n_words — no float
-    // division near the gate). Everything stays exact integers, unlike
-    // true unigram NLL whose ln() is not bit-specified cross-engine.
-    // Scale shape: word counts are a map-side-combined groupBy; the rank
-    // runs on the FOLDED vocabulary table — corpus-size-independent
-    // (the d25 bound), so its single-partition window is driver-bounded
-    // by construction; ranks broadcast-join back to the word stream.
-    "d29_rank_fluency" -> ((s, dir) => {
-      import s.implicits._
-      val words = table(s, dir, "documents")
-        .select($"doc_id", explode(split(trim($"text"), "\\s+")).as("w"))
-        .where($"w" =!= "")
-      val rank = words.groupBy($"w").agg(count(lit(1)).as("cnt"))
-        .withColumn("rank", row_number().over(
-          Window.orderBy($"cnt".desc, $"w")).cast("long"))
-        .select($"w", $"rank")
-      words.join(broadcast(rank), "w")
-        .groupBy($"doc_id")
-        .agg(count(lit(1)).as("n_words"), sum($"rank").as("sum_rank"))
-        .withColumn("keep", $"sum_rank" <= lit(18L) * $"n_words")
-        .orderBy($"doc_id")
-    }),
-
-    // BPE ENCODING — the apply side of d25: the corpus tokenized with
-    // the 6 learned merges (collected once, 6 rows to the driver, ride
-    // the closure). The md5 of each doc's exact '|'-joined token stream
-    // is the gate: a single wrong fusion anywhere flips it.
-    "d26_bpe_encode" -> ((s, dir) => {
-      import s.implicits._
-      val docs = table(s, dir, "documents")
-      val merges = graft.text.TextOps.bpeLearnMerges(docs, "text", 6)
-        .orderBy($"merge_rank")
-        .select($"left_sym", $"right_sym").as[(String, String)]
-        .collect().toSeq
-      graft.text.TextOps.bpeEncode(docs, "doc_id", "text", merges)
-        .orderBy($"doc_id")
-    }),
-
-    // Edit-distance-1 FUZZY self-join (SymSpell / FastSS deletion
-    // neighborhoods) — typo-level vocabulary dedup. Fixture: 400 base
-    // 6-char words from integer alphabet formulas + 400 planted typo
-    // variants (delete at i%6 / substitute first char / insert at pos 3,
-    // by i%3), union'd and dedup'd. The deletion-key equi-join candidate
-    // set is a guaranteed SUPERSET of every ed<=1 pair (substitution:
-    // drop the differing position from both; indel: the shorter IS a
-    // 1-deletion of the longer), so the engine's pruned result must
-    // EQUAL the oracle's brute all-pairs levenshtein filter — the e8
-    // recall-1.0-by-construction pattern on strings. All-integer
-    // arithmetic + ASCII, so the pair set is engine-independent.
-    "d30_fuzzy_join" -> ((s, _) => {
-      import s.implicits._
-      val al = "abcdefghijklmnopqrst"
-      def ch(k: String) = s"substr('$al', CAST((($k) % 20) AS INT) + 1, 1)"
-      val wExpr = Seq("i*7+3", "i*11+5", "i*13+7", "i*17+1", "i*19+11", "i*23+2")
-        .map(ch).mkString("concat(", ", ", ")")
-      val ids = s.range(400).toDF("i")
-      val base = ids.select(expr(wExpr).as("w"))
-      val variant = ids.select(expr(
-        s"""CASE CAST(i % 3 AS INT)
-           |  WHEN 0 THEN concat(substr($wExpr, 1, CAST(i % 6 AS INT)),
-           |                     substr($wExpr, CAST(i % 6 AS INT) + 2, 6))
-           |  WHEN 1 THEN concat(${ch("(i*7+3) % 20 + 1 + (i % 19)")},
-           |                     substr($wExpr, 2, 6))
-           |  ELSE concat(substr($wExpr, 1, 3), ${ch("i*29+4")},
-           |              substr($wExpr, 4, 6))
-           |END""".stripMargin).as("w"))
-      graft.text.TextOps.edJoinLe1(base.union(variant), "w")
-        .orderBy($"a", $"b")
-    }),
-
-    // MIXTURE SAMPLING to per-source token budgets — d31's systematic
-    // sampler with an independent cumulative-weight line PER SOURCE and
-    // a per-source step realizing the target mixture (steps 400/700/
-    // 1000 by source index mod 3: half the step = twice that source's
-    // tokens in the sampled corpus). The grouped prefix sum stays two
-    // narrow passes (range partition on (source, id); driver holds
-    // #groups + #partitions subtotal longs, never rows). m2 interleaves
-    // modalities by quota; this WEIGHS sources inside one modality —
-    // the Pile/Dolma-style mixture curation pass.
-    "m7_mixture_sample" -> ((s, dir) => {
-      import s.implicits._
-      val withTok = table(s, dir, "documents")
-        .select($"source", $"doc_id",
-          size(filter(split(trim($"text"), "\\s+"), t => t =!= lit("")))
-            .cast("long").as("n_tok"))
-      val steps = (0 until 20)
-        .map(k => s"src$k" -> (400L + 300L * (k % 3))).toMap
-      graft.text.TextOps.weightedSampleByGroup(withTok, "source", "doc_id",
-          "n_tok", steps)
-        .orderBy($"source", $"doc_id")
-    }),
-
-    // N-GRAM NOVELTY scoring — the diversity signal of incremental
-    // corpus curation: for each doc, the fraction of its 8-gram TYPES
-    // whose corpus-wide FIRST occurrence (lowest doc_id) is this doc.
-    // A crawl snapshot full of already-seen boilerplate scores ~0, new
-    // content ~1 — the complement of d19's within-corpus duplication.
-    // Shape: distinct (gram, doc) pairs -> min-doc_id per gram (one
-    // compact-key shuffle, map-side combined) -> semi-join back. Same
-    // bound-array + xxhash64 transport as d19; at 100 TB nothing wider
-    // than (hash, doc_id) ever shuffles.
-    "d32_novelty" -> ((s, dir) => {
-      import s.implicits._
-      val gd = table(s, dir, "documents")
-        .select($"doc_id", split($"text", " ").as("ws"))
-        .select($"doc_id", explode(
-          graft.text.TextOps.wordShingles($"ws", 8)).as("g"))
-        .select($"doc_id", xxhash64($"g").as("h"))
-        .distinct()
-        // lazy: the final action's groupBy materializes every partition,
-        // so the checkpoint caches fully in the same job (one job, not
-        // an eager pre-pass + cached re-read)
-        .localCheckpoint(false)
-      val first = gd.groupBy($"h").agg(min($"doc_id").as("first_doc"))
-      gd.join(first, "h")
-        .groupBy($"doc_id")
-        .agg(count(lit(1)).as("n_types"),
-          sum(when($"first_doc" === $"doc_id", 1L).otherwise(0L))
-            .as("n_novel"))
-        .withColumn("novel_frac",
-          $"n_novel".cast("double") / $"n_types".cast("double"))
-        .orderBy($"doc_id")
-    }),
-
-    // WEIGHTED SYSTEMATIC SAMPLING — downsample the corpus to a token
-    // budget with pick probability proportional to document weight: docs
-    // lie on the cumulative-token line (id order) and one doc is kept per
-    // `step` tokens (the one whose interval covers the sample point).
-    // The deterministic, integer-exact analogue of weighted reservoir
-    // sampling; positions come from the d27 distributed prefix sum (range
-    // partition + per-partition subtotals — never a global window), so
-    // the plan holds at 100 TB. Oracle replicates the window-sum offsets
-    // and the first-multiple rule in closed form.
-    "d31_weighted_sample" -> ((s, dir) => {
-      import s.implicits._
-      val withTok = table(s, dir, "documents")
-        .select($"doc_id",
-          size(filter(split(trim($"text"), "\\s+"), t => t =!= lit("")))
-            .cast("long").as("n_tok"))
-      graft.text.TextOps.weightedSample(withTok, "doc_id", "n_tok",
-          step = 997L)
-        .orderBy($"doc_id")
-    }),
-
-    // K-MEANS TRAINING DYNAMICS gated directly — two distributed Lloyd
-    // iterations with a deliberately DEGENERATE init (the lowest-3 vids
-    // all sit inside blob 0, so assignments genuinely move across
-    // rounds; d20 by contrast inits one-per-cluster and converges
-    // instantly). Every arithmetic step is engine-reproducible: dyadic
-    // integer coordinates -> exact double sums in ANY reduction order ->
-    // one IEEE division per mean -> identical squared distances, argmin
-    // tie-broken by lowest cluster id in both engines. The oracle
-    // replays both rounds in SQL (rank-1 argmin per round, avg per
-    // cluster, lost clusters keep their previous centroid). Per round:
-    // one broadcast of k centroids + one groupByKey partial-sum — the
-    // canonical distributed training loop (driver holds k vectors,
-    // never points).
-    "e10_kmeans_assign" -> ((s, _) => {
-      import s.implicits._
-      val pts = s.range(36).map { i =>
-        val g = (i / 12).toInt; val m = (i % 12).toInt
-        val x = (if (g == 1) 100 else 0) + m % 5 - 2
-        val y = (if (g == 2) 100 else 0) + (m * 7) % 5 - 2
-        (i, Array(x.toFloat, y.toFloat))
-      }.toDF("vid", "v")
-      val (assign, _) = graft.sim.Similarity.kmeansWithCentroids(
-        s, pts, "vid", "v", k = 3, iters = 2)
-      assign.select($"vid", $"cl".cast("long").as("cl"))
-        .orderBy($"vid")
-    }),
-
-    // SEMANTIC dedup (SemDeDup, Abbas et al. 2023): k-means clusters the
-    // embedding space, then a doc is removed iff an EARLIER member of the
-    // same cluster is cosine >= 0.95. Fixture = the e2 recipe extended
-    // with planted semantics: 12 orthogonal clusters x 36 members on 24
-    // axes, each member carrying one of 12 orthogonal 4.0 "style" axes —
-    // members sharing a style axis are exact dups (cos = 1), the second
-    // copy of each style gets a 0.25 off-axis nudge (cos ~ 0.9996, a
-    // NEAR dup), cross-style cos <= 66/80 = 0.825. All margins >= 0.125
-    // around tau = 0.95 and every coordinate dyadic, so DuckDB recomputes
-    // the identical removal set from closed form. k-means init (lowest 12
-    // vids = one per cluster) provably recovers the clusters.
-    "d20_semdedup" -> ((s, _) => {
-      import s.implicits._
-      val C = 12; val M = 36; val dim = 24
-      val e = s.range(C.toLong * M).map { vid =>
-        val cl = (vid % C).toInt; val m = (vid / C).toInt; val g = m % C
-        val v = Array.tabulate(dim) { d =>
-          var x = 0.0f
-          if (d == cl) x += 8.0f
-          if (d == C + g) x += 4.0f
-          if (m >= 12 && m < 24 && d == C + ((g + 1) % C)) x += 0.25f
-          x
-        }
-        (vid, v)
-      }.toDF("vid", "v")
-      graft.sim.Similarity.semDedup(s, e, k = C, iters = 2, tau = 0.95)
-        .select($"vid", $"cl".cast("long").as("cl"), $"removed")
-        .orderBy($"vid")
-    }),
-
-    // Substring-level dedup metric (the span-dedup signal of Lee et al.
-    // 2022, gram form): per document, how many of its word-8-gram
-    // occurrences also occur in ANOTHER document — the basis for
-    // trimming boilerplate/quoted passages rather than whole docs. Three
-    // compact-key shuffles, never all-pairs: grams ride as xxhash64
-    // longs (same collision analysis as d3/d15); (h, doc) counts
-    // aggregate map-side before the cross-doc df filter; the final
-    // per-doc aggs see only hashed descriptors. dup_frac is one IEEE
-    // division on exact integer operands; keep = at most half the gram
-    // mass duplicated (integer compare, no rounding).
-    "d19_dup_grams" -> ((s, dir) => {
-      import s.implicits._
-      val gc = table(s, dir, "documents")
-        // bind the token array BEFORE the shingle lambda (wordShingles
-        // scaladoc: an inline split re-executes per element_at slot on
-        // the interpreted higher-order path — 14x the gram-pass wall)
-        .select($"doc_id", split($"text", " ").as("ws"))
-        .select($"doc_id", explode(
-          graft.text.TextOps.wordShingles($"ws", 8)).as("g"))
-        .select($"doc_id", xxhash64($"g").as("h"))
-        .groupBy($"h", $"doc_id").agg(count(lit(1)).as("c"))
-        .localCheckpoint() // eager, blocks freed with the plan — a persist()
-        // here pins the CacheManager for the SESSION (three cached
-        // relations would survive every later query of a 138-query sweep)
-      val cross = gc.groupBy($"h").agg(count(lit(1)).as("df"))
-        .filter($"df" >= 2).select($"h")
-      val nGrams = gc.groupBy($"doc_id").agg(sum($"c").as("n_grams"))
-      val nDup = gc.join(cross, Seq("h"), "left_semi")
-        .groupBy($"doc_id").agg(sum($"c").as("n_dup"))
-      nGrams.join(nDup, Seq("doc_id"), "left")
-        .select($"doc_id", $"n_grams",
-          coalesce($"n_dup", lit(0L)).as("n_dup"))
-        .withColumn("dup_frac",
-          $"n_dup".cast("double") / $"n_grams".cast("double"))
-        .withColumn("keep", $"n_dup" * 2 <= $"n_grams")
-        .orderBy($"doc_id")
-    }),
-
-    // near-dup: exact 3-gram Jaccard >= 0.8 — inverted-index candidates
-    // with a document-frequency cap (stop-shingle O(df^2) guard), exact
-    // verify over the full hashed shingle sets
-    "d3_ngram_jaccard" -> ((s, dir) => {
-      import s.implicits._
-      graft.text.TextOps.jaccardPairs(table(s, dir, "documents"),
-          "doc_id", "text", shingleN = 3, threshold10 = 8, dfCap = 1000)
-        .orderBy($"ia", $"ib")
-    }),
-
-    // MinHash+LSH near-dup (banded candidates + exact verify; rows-only —
-    // xxhash64 banding is engine-side; recall vs exact is ScalaTest-gated)
-    // Dedup CLUSTERING — the step a real dedup pipeline runs after pair
-    // generation: connected components over the verified near-dup pair
-    // graph (the d3 exact-Jaccard pairs), each doc mapped to its
-    // component's canonical representative (min doc_id — the keeper).
-    // Distributed min-label propagation (GraphOps): O(component
-    // diameter) shuffles of (id, label) pairs only; dup components are
-    // small by construction so the loop converges in a couple of rounds
-    // at any corpus size.
-    "d10_dedup_components" -> ((s, dir) => {
-      import s.implicits._
-      val pairs = graft.text.TextOps.jaccardPairs(table(s, dir, "documents"),
-          "doc_id", "text", shingleN = 3, threshold10 = 8, dfCap = 1000)
-        .select($"ia", $"ib")
-      graft.operators.GraphOps.components(pairs, "ia", "ib")
-        .select($"node".as("doc_id"), $"root".as("rep_id"))
-        .orderBy($"rep_id", $"doc_id")
-    }),
-
-    "d4_minhash_lsh" -> ((s, dir) => {
-      import s.implicits._
-      graft.text.TextOps.minhashLshPairs(table(s, dir, "documents"),
-          "doc_id", "text", shingleN = 3, k = 64, bands = 16, threshold10 = 8)
-        .orderBy($"ia", $"ib")
-    }),
-
-    // Gopher-style (Rae et al. 2021 §A1.1) per-document repetition
-    // quality: most-frequent-bigram share + duplicate-trigram occurrence
-    // share. ZERO shuffle: sorted-shingle-array run-length lambdas run
-    // per row inside codegen — a groupBy(doc, gram) would shuffle every
-    // gram occurrence of a 100 TB corpus. Fractions are single divisions
-    // of exact integers -> bit-identical across engines, no quantization.
-    "d11_repetition" -> ((s, dir) => {
-      import s.implicits._
-      import graft.text.TextOps
-      // STAGED projections: tokens, then the sorted shingle arrays, then
-      // the metrics. Each lambda output is referenced 2x downstream, so
-      // CollapseProject keeps the non-cheap array materialized once per
-      // row instead of inlining (and re-running) the sort+shingle pass
-      // per consumer — and the split itself binds before any lambda
-      // (wordShingles scaladoc / the d19 14x lesson)
-      table(s, dir, "documents")
-        .select($"doc_id", TextOps.tokens($"text").as("ws"))
-        .select($"doc_id",
-          array_sort(TextOps.wordShingles($"ws", 2)).as("big"),
-          array_sort(TextOps.wordShingles($"ws", 3)).as("tri"))
-        .withColumn("n2", size($"big").cast("long"))
-        .withColumn("n3", size($"tri").cast("long"))
-        .withColumn("top2_cnt", TextOps.maxRunLength($"big"))
-        .withColumn("dup3_occ", TextOps.dupOccurrences($"tri"))
-        .select($"doc_id", $"top2_cnt", $"dup3_occ",
-          when($"n2" > 0, $"top2_cnt".cast("double") / $"n2")
-            .otherwise(0.0).as("top2_frac"),
-          when($"n3" > 0, $"dup3_occ".cast("double") / $"n3")
-            .otherwise(0.0).as("dup3_frac"))
-        .orderBy($"doc_id")
-    }),
-
-    // Deterministic hash train/val/test split (the standard content-
-    // addressed split of a training corpus: stable under re-runs,
-    // re-partitioning and corpus growth): first md5 hex digit of the
-    // doc_id buckets 0-15 -> 13/1/2 train/val/test. Per-row hash +
-    // map-side partial agg — no data-dependent shuffle at any scale.
-    "d12_hash_split" -> ((s, dir) => {
-      import s.implicits._
-      table(s, dir, "documents")
-        .withColumn("b", expr(
-          "CAST(conv(substring(md5(CAST(CAST(doc_id AS string) AS binary)), 1, 1), 16, 10) AS INT)"))
-        .withColumn("split",
-          when($"b" <= 12, "train").when($"b" === 13, "val").otherwise("test"))
-        .groupBy($"split", $"lang")
-        .agg(count(lit(1)).as("n_docs"), sum($"n_chars").as("sum_chars"))
-        .orderBy($"split", $"lang")
-    }),
-
-    // Per-document top-3 salient terms by df-normalized term frequency
-    // (tf-idf family with idf' = 1/df — same per-doc ordering as tf*idf
-    // for any monotone idf, and ln-free so the score is ONE exact-int
-    // division, cross-engine bit-identical). Scale shape: term counts are
-    // a map-side-combined groupBy; the vocabulary df table is tiny ->
-    // broadcast join; top-k is a per-doc window, partitioned by doc_id.
-    "d13_tfidf" -> ((s, dir) => {
-      import s.implicits._
-      val terms = table(s, dir, "documents")
-        .select($"doc_id", explode(split($"text", " ")).as("tok"))
-      val cnt = terms.groupBy($"doc_id", $"tok").agg(count(lit(1)).as("cnt"))
-        .localCheckpoint() // eager, blocks freed with the plan — a persist()
-        // here pins the CacheManager for the SESSION (three cached
-        // relations would survive every later query of a 138-query sweep)
-      val df = cnt.groupBy($"tok").agg(count(lit(1)).as("df"))
-      val w = Window.partitionBy($"doc_id")
-        .orderBy($"score".desc, $"tok".asc)
-      val out = cnt.join(broadcast(df), "tok")
-        .withColumn("score", $"cnt".cast("double") / $"df")
-        .withColumn("rank", row_number().over(w))
-        .filter($"rank" <= 3)
-        .select($"doc_id", $"rank".cast("long").as("rank"), $"tok",
-          $"cnt", $"df", $"score")
-        .orderBy($"doc_id", $"rank")
-      out
-    }),
-
-    // PII-style scrubbing: email / URL / long-digit-run detection and
-    // redaction with codegen'd regexp built-ins. The corpus is synthetic,
-    // so deterministic PII is spliced in per-row (both engines build the
-    // same augmented string) and the scrubbed text itself is hash-gated.
-    // Per-row, zero shuffle — the 100 TB shape is a map-only pass.
-    "d14_pii_scrub" -> ((s, dir) => {
-      import s.implicits._
-      val email = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
-      val url = "https?://[^ ]+"
-      val num = "[0-9]{6,}"
-      table(s, dir, "documents")
-        .withColumn("aug", concat($"text", lit(" contact user"), $"doc_id",
-          lit("@mail.example.com via http://cdn"), $"doc_id",
-          lit(".example.org/asset ref "),
-          lpad(($"doc_id" * $"doc_id" % 100000000).cast("string"), 8, "0")))
-        .select($"doc_id",
-          regexp_count($"aug", lit(email)).cast("long").as("n_emails"),
-          regexp_count($"aug", lit(url)).cast("long").as("n_urls"),
-          regexp_count($"aug", lit(num)).cast("long").as("n_longnums"),
-          regexp_replace(regexp_replace(regexp_replace($"aug",
-            email, "<EMAIL>"), url, "<URL>"), num, "<NUM>").as("clean"))
-        .withColumn("clean_len", length($"clean").cast("long"))
-        .orderBy($"doc_id")
-    }),
-
-    // Benchmark-contamination check (decontamination pass of a training
-    // pipeline): word-4-gram overlap of every candidate doc against the
-    // "benchmark" subset (doc_id % 7 = 0 here). Inverted-index shape:
-    // distinct (doc, gram) -> equi-join on the gram against the DISTINCT
-    // benchmark gram set, which is tiny relative to the corpus at scale
-    // -> broadcast; count per doc = distinct contaminated grams. Never
-    // all-pairs.
-    "d15_contamination" -> ((s, dir) => {
-      import s.implicits._
-      // per-doc gram dedup happens in the ARRAY domain (array_distinct
-      // before explode) — zero shuffle, inside codegen — so the only
-      // remaining exchanges are the small bench-set distinct and the
-      // per-doc count agg; grams shuffle as xxhash64 longs, not strings
-      // (same trick as d3's hashed shingles; collision odds ~n²/2^64)
-      val grams = table(s, dir, "documents")
-        // bound token array first — see wordShingles scaladoc / d19
-        .select($"doc_id", split($"text", " ").as("ws"))
-        .select($"doc_id", explode(array_distinct(
-          graft.text.TextOps.wordShingles($"ws", 4))).as("g"))
-        .select($"doc_id", xxhash64($"g").as("h"))
-        .localCheckpoint() // eager, blocks freed with the plan — a persist()
-        // here pins the CacheManager for the SESSION (three cached
-        // relations would survive every later query of a 138-query sweep)
-      val bench = grams.filter($"doc_id" % 7 === 0).select($"h").distinct()
-      grams.filter($"doc_id" % 7 =!= 0)
-        .join(broadcast(bench), "h")
-        .groupBy($"doc_id")
-        .agg(count(lit(1)).as("n_shared"))
-        .orderBy($"doc_id")
-    }),
-
-    // Stratified sampling with per-language keep rates (data-mixing /
-    // downsampling step): deterministic md5 bucket (256 buckets, same
-    // cross-engine construction as d12) compared against a per-stratum
-    // rate. Row-level gate — the exact sampled id set must match.
-    "d16_stratified_sample" -> ((s, dir) => {
-      import s.implicits._
-      val rate = when($"lang" === "en", 128).when($"lang" === "de", 192)
-        .otherwise(64)
-      table(s, dir, "documents")
-        .withColumn("b2", expr(
-          "CAST(conv(substring(md5(CAST(CAST(doc_id AS string) AS binary)), 1, 2), 16, 10) AS INT)"))
-        .filter($"b2" < rate)
-        .select($"doc_id", $"lang", $"b2".cast("long").as("b2"))
-        .orderBy($"doc_id")
-    }),
-
-    // End-to-end curation pipeline (the composition a real training-data
-    // run executes): length/word-count/language gates -> exact dedup
-    // keeping the min doc_id per md5(text) -> deterministic train/val/
-    // test split -> per-stratum corpus stats. One codegen'd filter pass,
-    // one sig-shuffle for the keeper window, one partial-agg groupBy —
-    // nothing here holds more than O(strata) outside the shuffles.
-    "d17_curation" -> ((s, dir) => {
-      import s.implicits._
-      val f = table(s, dir, "documents")
-        .withColumn("n_words", size(split($"text", " ")))
-        .filter($"n_chars" >= 200 && $"n_chars" <= 4000 &&
-          $"n_words" >= 30 && $"lang".isin("en", "de", "fr"))
-        .withColumn("sig", md5($"text".cast("binary")))
-      val kept = f.withColumn("rk",
-          row_number().over(Window.partitionBy($"sig").orderBy($"doc_id")))
-        .filter($"rk" === 1)
-      kept
-        .withColumn("b", expr(
-          "CAST(conv(substring(md5(CAST(CAST(doc_id AS string) AS binary)), 1, 1), 16, 10) AS INT)"))
-        .withColumn("split",
-          when($"b" <= 12, "train").when($"b" === 13, "val").otherwise("test"))
-        .groupBy($"split", $"lang")
-        .agg(count(lit(1)).as("n_docs"), sum($"n_chars").as("sum_chars"),
-          sum($"n_words").cast("long").as("sum_words"))
-        .orderBy($"split", $"lang")
-    }),
-
-    // SimHash fingerprints + hamming-near pairs via pigeonhole banding
-    // (7 chunks guarantee recall for hamming<=6; shuffled equi-join, not
-    // the O(N²) cartesian; banded==all-pairs is ScalaTest-gated)
-    "d5_simhash" -> ((s, dir) => {
-      import s.implicits._
-      val hashed = table(s, dir, "documents").select($"doc_id", $"text")
-        .as[(Long, String)]
-        .map { case (id, t) => (id, graft.text.TextOps.simhash64(t)) }
-        .toDF("doc_id", "simhash")
-      graft.text.TextOps.simhashNearPairs(hashed, maxHamming = 6)
-        .orderBy($"ia", $"ib")
-    }),
-
-    // language-ID heuristic (marker-count argmax; SQL-oracle-checked)
-    "d6_langid" -> ((s, dir) => {
-      import s.implicits._
-      table(s, dir, "documents")
-        .select($"doc_id", graft.text.TextOps.langId($"text").as("pred_lang"),
-          graft.text.TextOps.langScore($"text", "en").as("en_score"))
-        .orderBy($"doc_id")
-    }),
-
-    // rolling-hash document fingerprint (rows-only)
-    "d7_fingerprint" -> ((s, dir) => {
-      import s.implicits._
-      table(s, dir, "documents").select($"doc_id", $"text").as[(Long, String)]
-        .map { case (id, t) => (id, graft.text.TextOps.fingerprint(t)) }
-        .toDF("doc_id", "fp")
-        .orderBy($"doc_id")
-    }),
-
-    // Embedding-cosine near-dup dedup: 50 deterministic planted twins
-    // (0.9*v + 0.1*partner) over the embeddings table; sign-LSH banded
-    // candidates + exact cosine verify. Threshold margins are huge by
-    // construction (planted ~0.994, background <= ~0.52 vs tau 0.95), so
-    // the integer pair set is engine-independent and DuckDB-hashable.
-    "d8_embed_neardup" -> ((s, dir) => {
-      import s.implicits._
-      val e = table(s, dir, "embeddings")
-      val base = e.select($"vec_id".as("vid"),
-        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-      val twins = e.as("a").filter($"vec_id" < 50)
-        .join(e.as("b"), expr("b.vec_id = a.vec_id + 50"))
-        .select(($"a.vec_id" + 1000000L).as("vid"),
-          expr("zip_with(a.embedding, b.embedding, (x, y) -> 0.9D * CAST(x AS DOUBLE) + 0.1D * CAST(y AS DOUBLE))").as("v"))
-      graft.sim.Similarity.nearDupPairs(base.unionByName(twins), threshold = 0.95)
-        .orderBy($"ia", $"ib")
-    }),
-
-    // Image AUGMENTATION kernels (flip / rotate / center-crop) — the
-    // training-data transform stage: decode -> per-image permutation /
-    // selection kernels -> position-WEIGHTED integer checksums, so the
-    // gate proves the exact pixel permutation (a plain sum is
-    // permutation-invariant and would pass a broken flip). Zero shuffle;
-    // DuckDB replicates the checksums from the exact corpus's closed-form
-    // codes. At 10^12 images this is embarrassingly parallel, bounded by
-    // decode bandwidth like i6.
-    "i7_image_augment" -> ((s, _) => {
-      import s.implicits._
-      val corpus = ImageCorpus.generateExact(s, 64L, 8)
-      ImageCorpus.decodeTiles(corpus, 8).map { t =>
-        def wsum(p: Array[Double]): Long = {
-          var acc = 0L; var i = 0
-          while (i < p.length) {
-            acc += i.toLong * Math.rint(p(i) * 64.0).toLong; i += 1
-          }
-          acc
-        }
-        def qsum(p: Array[Double]): Long = {
-          var acc = 0L; var i = 0
-          while (i < p.length) { acc += Math.rint(p(i) * 64.0).toLong; i += 1 }
-          acc
-        }
-        val fl = graft.codecs.ImageCodec.flipH(t.payload, t.w, t.h)
-        val rt = graft.codecs.ImageCodec.rot90cw(t.payload, t.w, t.h)
-        val cr = graft.codecs.ImageCodec.cropCenter(t.payload, t.w, t.h, 128, 128)
-        (t.imageId, wsum(fl), wsum(rt), qsum(cr))
-      }.toDF("image_id", "flip_wsum", "rot_wsum", "crop_qsum")
-        .orderBy($"image_id")
-    }),
-
-    // CLIP-style contrastive BATCH construction over the image+caption
-    // pair table (the north-star table shape): content dedup by
-    // md5(bytes) kills false in-batch negatives (16 planted exact
-    // duplicates under 'dup-' ids — the keeper rule picks them over
-    // their 'img-' twins), md5(id) gives the deterministic shuffle, and
-    // the global batch position comes from the distributed
-    // range-partition + zipWithIndex pass — never a one-partition
-    // window. Oracle regenerates the keeper set and the md5 permutation
-    // in closed form.
-    "m1_contrastive_batches" -> ((s, _) => {
-      import s.implicits._
-      val base = ImageCorpus.generateExact(s, 64L, 8).toDF()
-      val dups = base
-        .withColumn("i", substring($"image_id", 5, 8).cast("long"))
-        .filter($"i" % 4 === 0)
-        .withColumn("image_id",
-          concat(lit("dup-"), lpad($"i".cast("string"), 8, "0")))
-        .drop("i")
-      val pairs = base.unionByName(dups)
-        .withColumn("content_key", md5($"bytes"))
-      graft.ml.Batching.contrastiveBatches(pairs, "image_id", "content_key",
-          batchSize = 16)
-        .orderBy($"image_id")
-    }),
-
-    // Modality MIXTURE INTERLEAVING — the data-mixing op: text/image/
-    // audio/video streams woven 4:2:1:1 per 8-slot period, each stream
-    // independently md5-shuffled and distributed-indexed, truncated at
-    // the last COMPLETE period (here 8 periods = video-limited, 64
-    // rows) so the ratio is exact everywhere. Oracle replicates the
-    // permutations and the slot arithmetic per modality.
-    "m2_mixture_interleave" -> ((s, dir) => {
-      import s.implicits._
-      val text = table(s, dir, "documents")
-        .select(concat(lit("doc-"), $"doc_id").as("item_id"))
-      val image = ImageCorpus.generateExact(s, 64L, 8)
-        .select($"image_id".as("item_id"))
-      val audio = s.range(100)
-        .select(concat(lit("wav-"), $"id").as("item_id"))
-      val video = s.range(8)
-        .select(concat(lit("gif-"), $"id").as("item_id"))
-      graft.ml.Batching.mixtureInterleave(
-          Seq(("text", text, 4), ("image", image, 2),
-            ("audio", audio, 1), ("video", video, 1)), "item_id")
-        .orderBy($"global_pos")
-    }),
-
-    // ViT-style patchification — decode -> 16x16 patch grid (256 patches
-    // per 256x256 image) with per-patch integer code sums/maxes. The
-    // position-WEIGHTED patch checksum (sum of patch_idx x patch_sum)
-    // gates the raster patch ORDER, the per-patch max gates the patch
-    // GROUPING (a plain total would pass any pixel partition). Per-image
-    // kernel, no shuffle.
-    "i8_patchify" -> ((s, _) => {
-      import s.implicits._
-      val corpus = ImageCorpus.generateExact(s, 64L, 8)
-      ImageCorpus.decodeTiles(corpus, 8).map { t =>
-        val patches = graft.codecs.ImageCodec.patchify(t.payload, t.w, t.h, 16)
-        var wsum = 0L; var maxSum = 0L
-        var pi = 0
-        while (pi < patches.length) {
-          val p = patches(pi)
-          var psum = 0L; var pmax = 0L
-          var j = 0
-          while (j < p.length) {
-            val code = Math.rint(p(j) * 64.0).toLong
-            psum += code; if (code > pmax) pmax = code; j += 1
-          }
-          wsum += pi.toLong * psum; maxSum += pmax; pi += 1
-        }
-        (t.imageId, patches.length.toLong, wsum, maxSum)
-      }.toDF("image_id", "n_patches", "patch_wsum", "sum_patch_max")
-        .orderBy($"image_id")
-    }),
-
-    // Dataset PIXEL-NORMALIZATION statistics — the mean/std constants
-    // every vision training pipeline computes over the full corpus
-    // before training. Decode is the real PNG path; each image reduces
-    // to one partial row (n, sum, sum_sq, min, max of the integer
-    // codes), and a partial/final hash agg rolls the partials up per
-    // shard (grid column) — the exact two-level shape a 10^12-image
-    // corpus needs (no posexplode of pixels into the shuffle, ever).
-    "i9_pixel_stats" -> ((s, _) => {
-      import s.implicits._
-      val corpus = ImageCorpus.generateExact(s, 64L, 8)
-      ImageCorpus.decodeTiles(corpus, 8).map { t =>
-        val i = t.imageId.stripPrefix("img-").toLong
-        var n = 0L; var sm = 0L; var sq = 0L
-        var mn = Long.MaxValue; var mx = Long.MinValue
-        var j = 0
-        while (j < t.payload.length) {
-          val c = Math.rint(t.payload(j) * 64.0).toLong
-          n += 1; sm += c; sq += c * c
-          if (c < mn) mn = c
-          if (c > mx) mx = c
-          j += 1
-        }
-        (i % 8, n, sm, sq, mn, mx)
-      }.toDF("shard", "n", "sm", "sq", "mn", "mx")
-        .groupBy($"shard")
-        .agg(sum($"n").as("n_px"), sum($"sm").as("sum_code"),
-          sum($"sq").as("sum_sq"), min($"mn").as("min_code"),
-          max($"mx").as("max_code"))
-        .orderBy($"shard")
-    }),
-
-    // HISTOGRAM EQUALIZATION — the per-image contrast-normalization pass
-    // an image pipeline runs before augmentation: real PNG decode ->
-    // integer-code histogram -> exact floor-division CDF remap to 256
-    // levels (ImageCodec.equalizeCodes). Per-row kernel over the decoded
-    // plane: zero shuffle, embarrassingly parallel at 10^12 rows; the
-    // histogram is per IMAGE (<= 1000 bins here, 2^20 hard bound), never
-    // per partition. All-Long arithmetic end to end, so DuckDB
-    // regenerates the equalized plane from the closed-form corpus codes
-    // alone (window-sum CDF) and the per-image stats hash-match exactly.
-    "i10_hist_equalize" -> ((s, _) => {
-      import s.implicits._
-      import graft.codecs.ImageCodec
-      val corpus = ImageCorpus.generateExact(s, 64L, 8)
-      corpus.map { row =>
-        val (px, _, _) = ImageCodec.decode(row.bytes, row.fmt)
-        val codes = new Array[Int](px.length)
-        var j = 0
-        while (j < px.length) {
-          codes(j) = Math.rint(px(j) * ImageCodec.PngScale).toInt
-          j += 1
-        }
-        val eq = ImageCodec.equalizeCodes(codes, 256)
-        var sm = 0L; var mn = Long.MaxValue; var mx = Long.MinValue
-        val seen = new java.util.BitSet(256)
-        j = 0
-        while (j < eq.length) {
-          val e = eq(j); sm += e; seen.set(e)
-          if (e < mn) mn = e
-          if (e > mx) mx = e
-          j += 1
-        }
-        (row.image_id, sm, seen.cardinality().toLong, mn, mx)
-      }.toDF("image_id", "eq_sum", "n_levels", "eq_min", "eq_max")
-        .orderBy($"image_id")
-    }),
-
-    // CORPUS-GLOBAL histogram equalization (i11) — the cross-image
-    // contrast-normalization pass (one CDF for the whole dataset, so
-    // relative brightness ACROSS images is preserved — i10's per-image
-    // equalization deliberately destroys it). Scale shape: pixels never
-    // shuffle — each image folds to (code, n) partials that map-side
-    // combine into a <= 1000-row global histogram; the CDF remap is
-    // driver-built over that bounded code domain and BROADCAST back for
-    // the per-image remap pass. Same floor-division CDF rule as i10.
-    "i11_global_equalize" -> ((s, _) => {
-      import s.implicits._
-      import graft.codecs.ImageCodec
-      val codes = ImageCorpus.generateExact(s, 64L, 8).map { row =>
-        val (px, _, _) = ImageCodec.decode(row.bytes, row.fmt)
-        val cs = new Array[Int](px.length)
-        var j = 0
-        while (j < px.length) {
-          cs(j) = Math.rint(px(j) * ImageCodec.PngScale).toInt
-          j += 1
-        }
-        (row.image_id, cs)
-      }.localCheckpoint(false)
-      val hist = codes.flatMap { case (_, cs) =>
-        val m = new Array[Long](1000)
-        cs.foreach(c => m(c) += 1)
-        m.iterator.zipWithIndex.collect { case (n, code) if n > 0 =>
-          (code, n) }
-      }.toDF("code", "n")
-        .groupBy($"code").agg(sum($"n").as("n"))
-        .as[(Int, Long)].collect().sortBy(_._1)
-      val total = hist.map(_._2).sum
-      val remap = new Array[Int](1000)
-      var cum = 0L
-      var cdfMin = -1L
-      hist.foreach { case (code, n) =>
-        cum += n
-        if (cdfMin < 0) cdfMin = cum
-        remap(code) =
-          if (total == cdfMin) 0
-          else ((cum - cdfMin) * 255 / (total - cdfMin)).toInt
-      }
-      val bc = s.sparkContext.broadcast(remap)
-      val out = codes.map { case (id, cs) =>
-        var sm = 0L; var mn = Long.MaxValue; var mx = Long.MinValue
-        val seen = new java.util.BitSet(256)
-        var j = 0
-        while (j < cs.length) {
-          val e = bc.value(cs(j)); sm += e; seen.set(e)
-          if (e < mn) mn = e
-          if (e > mx) mx = e
-          j += 1
-        }
-        (id, sm, seen.cardinality().toLong, mn, mx)
-      }.toDF("image_id", "eq_sum", "n_levels", "eq_min", "eq_max")
-        .orderBy($"image_id")
-        .localCheckpoint(true)
-      codes.unpersist()
-      out
-    }),
-
-    // CURRICULUM ordering — easy-to-hard training order over the
-    // documents table: integer difficulty tiers from n_chars
-    // (<200 / <400 / rest -> 148/206/146 docs at sf0.01), md5-shuffled
-    // within tier, positioned by the distributed range-partition +
-    // zipWithIndex pass. Oracle replicates the composite-key
-    // row_number in closed form.
-    "m3_curriculum" -> ((s, dir) => {
-      import s.implicits._
-      val docs = table(s, dir, "documents")
-        .withColumn("tier",
-          when($"n_chars" < 200, 0L).when($"n_chars" < 400, 1L).otherwise(2L))
-      graft.ml.Batching.curriculumOrder(docs, "doc_id", "tier")
-        .orderBy($"global_pos")
-    }),
-
-    // EPOCH RESHUFFLING — 3 epochs over the documents table, each a
-    // different reproducible md5(epoch:id) permutation, positions global
-    // across the run (epoch e = block [e*n, (e+1)*n)). Oracle replicates
-    // the salted-hash row_number in closed form.
-    "m5_epoch_order" -> ((s, dir) => {
-      import s.implicits._
-      graft.ml.Batching.epochOrder(table(s, dir, "documents"), "doc_id",
-          epochs = 3)
-        .orderBy($"global_pos")
-    }),
-
-    // LENGTH-BUCKETED batching (group-by-length): docs sort by (token
-    // count, id) into batches of 8; the per-batch rollup carries the
-    // padding-waste metric the bucketing minimizes. d27's exact token
-    // count feeds it, so the whole chain is integer-exact.
-    "m6_length_buckets" -> ((s, dir) => {
-      import s.implicits._
-      val withTok = table(s, dir, "documents")
-        .select($"doc_id",
-          size(filter(split(trim($"text"), "\\s+"), t => t =!= lit("")))
-            .cast("long").as("n_tok"))
-      graft.ml.Batching.lengthBuckets(withTok, "doc_id", "n_tok", 8)
-        .orderBy($"batch_id")
-    }),
-
-    // End-to-end multimodal CURATION -> BATCHES flagship (the image-side
-    // d17): perceptual-hash near-dup graph (i4's banded hamming join) ->
-    // connected-component canonical keepers (i5's min-id rule; non-keeper
-    // members drop) -> CLIP-style contrastive batches over the SURVIVING
-    // unique content (m1's md5 shuffle + distributed global index) — the
-    // whole image curation chain as ONE composed Spark plan. The oracle
-    // replicates the full phash kernel, the recursive closure and the
-    // batch arithmetic end to end.
-    "m4_curated_batches" -> ((s, _) => {
-      import s.implicits._
-      import graft.codecs.ImageCodec
-      val corpus = perceptualCorpusTable(s)
-      val sig = phashedPerceptual(s)
-      val pairs = graft.text.TextOps.simhashNearPairs(sig, maxHamming = 6)
-        .select($"ia", $"ib")
-      val dropped = graft.operators.GraphOps.components(pairs, "ia", "ib")
-        .filter($"node" =!= $"root")
-        .select(format_string("img-%08d", $"node").as("image_id"))
-      val survivors = corpus.select($"image_id")
-        .join(dropped, Seq("image_id"), "left_anti")
-      graft.ml.Batching.contrastiveBatches(survivors, "image_id", "image_id",
-          batchSize = 16)
-        .orderBy($"image_id")
-    }),
-
-    // Image resize pipeline op: decode -> bilinear half-resolution resize
-    // (per-image kernel, no shuffle) -> deterministic integer stats of the
-    // resized plane (rows-only: no SQL-engine image decode; kernel parity
-    // is ScalaTest-gated against linear-ramp/constant/hand oracles)
-    "i2_image_resize" -> ((s, _) => {
-      import s.implicits._
-      // Oracle-gated: the exact corpus's decoded pixels are code/64 with
-      // integer codes, so half-res bilinear output * 256 is EXACTLY the
-      // 2x2 code-block sum — an integer reproducible by formula in DuckDB
-      // without any image codec. The PNG encode -> decode -> resize path
-      // on the Spark side is still the real one.
-      val corpus = ImageCorpus.generateExact(s, 64L, 8)
-      ImageCorpus.decodeTiles(corpus, 8).map { t =>
-        val w2 = t.w / 2; val h2 = t.h / 2
-        val rs = graft.codecs.ImageCodec.resizeBilinear(t.payload, t.w, t.h, w2, h2)
-        var qsum = 0L; var nan = 0L
-        var i = 0
-        while (i < rs.length) {
-          if (rs(i).isNaN) nan += 1
-          else qsum += Math.rint(rs(i) * 256.0).toLong
-          i += 1
-        }
-        (t.imageId, w2, h2, qsum, nan)
-      }.toDF("image_id", "w2", "h2", "qsum", "nan_px")
-        .orderBy($"image_id")
-    }),
-
-    // Phash-bucketed exact-duplicate detection over the image+caption
-    // corpus — the north-star table's phash:int64 column as the candidate
-    // key. Candidate pairs come from an equi-join on the 8-byte perceptual
-    // hash carrying only (image_id, phash, md5-of-bytes); the encoded
-    // payloads never shuffle, and a pair survives only on exact content
-    // equality (md5 digest match). At 10^12 rows the plan holds: the join
-    // key is fixed-width, hot phash buckets are bounded by the true
-    // duplicate rate, and perceptual-but-not-byte collisions drop in the
-    // digest predicate instead of surfacing as false duplicates. The
-    // input is a MATERIALIZED parquet corpus table (corpusTable), so the
-    // query reads phash/bytes off storage like the production job; at
-    // 10^12 rows, additionally materialize the narrow (id, phash,
-    // digest) projection first so the binary column is scanned and
-    // hashed exactly once before the self-join.
-    // Oracle: the planted duplicates are closed-form (ImageCorpus.rowOf
-    // re-emits payload i-1 when i % 251 == 0), so DuckDB regenerates the
-    // expected pair list from the rule alone.
-    "i3_phash_dedup" -> ((s, _) => {
-      import s.implicits._
-      val corpus = corpusTable(s)
-      val sig = corpus.select($"image_id", $"phash", md5($"bytes").as("digest"))
-      sig.as("a").join(sig.as("b"),
-          $"a.phash" === $"b.phash" && $"a.digest" === $"b.digest" &&
-            $"a.image_id" < $"b.image_id")
-        .select($"a.image_id".as("id_a"), $"b.image_id".as("id_b"))
-        .orderBy($"id_a")
-    }),
-
-    // Image quality curation gates: real PNG decode -> per-image
-    // fixed-point quality kernel (contrast span, distinct-code texture
-    // count, L1 gradient energy as the blur/sharpness proxy) -> keep
-    // verdict — the pre-training image filters (drop solid-fill /
-    // low-contrast / blurred junk). Per-image executor kernel, zero
-    // shuffle: at 10^12 rows the job is one scan -> map -> write.
-    // Oracle: the exact corpus decodes to closed-form integer codes
-    // (code = (gr*31+gc*17) % 1000, payload = code/64), so DuckDB
-    // regenerates every statistic — including both gradient sums via the
-    // mod-1000 wrap rule — without an image codec; the engine side still
-    // runs the real encode -> decode -> kernel path.
-    "i6_image_quality" -> ((s, _) => {
-      import s.implicits._
-      val corpus = ImageCorpus.generateExact(s, 64L, 8)
-      ImageCorpus.decodeTiles(corpus, 8).map { t =>
-        val q = graft.codecs.ImageCodec.qualityStats(t.payload, t.w, t.h)
-        (t.imageId, q.qMin, q.qMax, q.qMax - q.qMin, q.nDistinct, q.gradL1,
-          q.qMax - q.qMin >= 64L && q.nDistinct >= 16L)
-      }.toDF("image_id", "q_min", "q_max", "q_span", "n_distinct",
-          "grad_l1", "keep")
-        .orderBy($"image_id")
-    }),
-
-    // PERCEPTUAL near-dup join over the image corpus: decode -> phash64
-    // -> pigeonhole-banded hamming<=6 join (the same shuffled equi-join
-    // scale shape as d5 — never the O(N²) cartesian). Input is the
-    // materialized perceptual corpus (ImageCorpus.generatePerceptual):
-    // block-constant payloads make every phash bit the integer
-    // comparison 64*K(i,b) > sum_b K(i,b), so DuckDB regenerates all
-    // hashes AND hamming distances from the closed-form block codes —
-    // the full kernel is oracle-replicated, planted near-dups
-    // (i % 167 == 0 re-emits i-1 with blocks 0,1 raised) and any
-    // chance pair alike. phash is recomputed from the DECODED bytes on
-    // executors (not the stored column) so the gate covers the decode
-    // path too.
-    // Image dedup CLUSTERING: connected components over the i4 perceptual
-    // near-dup pair graph, each image mapped to its component's min-id
-    // keeper — the d10 step for the multimodal corpus (same GraphOps
-    // hybrid: descriptor-only label propagation, never payload shuffles)
-    "i5_image_dedup_components" -> ((s, _) => {
-      import s.implicits._
-      import graft.codecs.ImageCodec
-      val sig = phashedPerceptual(s)
-      val pairs = graft.text.TextOps.simhashNearPairs(sig, maxHamming = 6)
-        .select($"ia", $"ib")
-      graft.operators.GraphOps.components(pairs, "ia", "ib")
-        .select(format_string("img-%08d", $"node").as("image_id"),
-          format_string("img-%08d", $"root").as("keeper_id"))
-        .orderBy($"keeper_id", $"image_id")
-    }),
-
-    "i4_phash_neardup" -> ((s, _) => {
-      import s.implicits._
-      import graft.codecs.ImageCodec
-      val sig = phashedPerceptual(s)
-      graft.text.TextOps.simhashNearPairs(sig, maxHamming = 6)
-        .select(format_string("img-%08d", $"ia").as("id_a"),
-          format_string("img-%08d", $"ib").as("id_b"),
-          $"hamming".cast("long").as("hamming"))
-        .orderBy($"id_a", $"id_b")
-    }),
-
-    // Vectorize GEOMETRY hash gate: the engine's own WKT polygons (r10's
-    // output — distributed label + seam merge + ring assembly) are parsed
-    // back and decomposed into their canonical unit boundary edges in
-    // pixel-corner units. That edge multiset is exactly the boundary of
-    // each component's pixel set (outer ring + holes together, every unit
-    // edge once), so DuckDB regenerates it from the mask rule + the
-    // recursive-CTE component closure — the polygon geometry itself is
-    // hash-verified, not just its stats (r22). Ring-assembly choices at
-    // saddle corners don't affect the edge set, so the gate is exact and
-    // representation-independent.
-    "r23_vectorize_edges" -> ((s, _) => {
-      import s.implicits._
-      val blocky = TileOps.tileGrid(s, Synth.gridARef, tileRes)(Synth.blockyValue)
-      val polys = Vectorize.polygons(blocky, Synth.gridARef, tileRes)
-      val left = Synth.gridARef.left
-      val top = Synth.gridARef.top
-      val cs = Synth.gridARef.cellsize
-      polys.select($"feature_id", $"wkt").as[(Long, String)].flatMap {
-        case (fid, wkt) =>
-          val body = wkt.trim.stripPrefix("POLYGON").trim
-            .stripPrefix("(").stripSuffix(")")
-          body.split("\\)\\s*,\\s*\\(").iterator.flatMap { ringStr =>
-            val pts = ringStr.replace("(", "").replace(")", "")
-              .split(",").map { p =>
-                val xy = p.trim.split("\\s+")
-                (Math.rint((xy(0).toDouble - left) / cs).toLong,
-                  Math.rint((top - xy(1).toDouble) / cs).toLong)
-              }
-            pts.iterator.sliding(2).withPartial(false).flatMap { pair =>
-              val (x0, y0) = pair.head
-              val (x1, y1) = pair.last
-              val dx = java.lang.Long.signum(x1 - x0)
-              val dy = java.lang.Long.signum(y1 - y0)
-              val len = math.max(math.abs(x1 - x0), math.abs(y1 - y0))
-              (0L until len).iterator.map { k =>
-                val ax = x0 + dx * k; val ay = y0 + dy * k
-                val bx = ax + dx; val by = ay + dy
-                if (bx < ax || (bx == ax && by < ay)) (fid, bx, by, ax, ay)
-                else (fid, ax, ay, bx, by)
-              }
-            }
-          }
-      }.toDF("feature_id", "x0", "y0", "x1", "y1")
-        .orderBy($"feature_id", $"x0", $"y0", $"x1", $"y1")
-    }),
-
-    // Structured Streaming, hash-gated: the watermarked 1-hour tumbling
-    // window aggregation runs as a REAL streaming query (file source ->
-    // watermark -> window state -> append-mode sink, drained with
-    // AvailableNow over the chronologically staged event stream) and must
-    // equal the batch/SQL windowed aggregate exactly. See
-    // streaming/StreamOps for the one-batch-lagged flush mechanics.
-    "s1_stream_window" -> ((s, dir) => {
-      val staged = stagedEvents(s, dir)
-      val ckpt = scratchDir("s1_ckpt")
-      // fixed sink name: the memory sink replaces the temp view on each
-      // run, so repeated invocations in one session don't accumulate
-      // result tables on the driver heap
-      val df = withFewPartitions(s) {
-        graft.streaming.StreamOps.windowedEventCounts(s, staged, ckpt, "s1_mem")
-      }
-      dropCheckpoint(ckpt)
-      df
-    }),
-
-    // Gap-rule sessionization as CUSTOM STREAMING STATE
-    // (flatMapGroupsWithState carrying per-user (lastTs, sessions,
-    // events) across micro-batches) — must equal the batch
-    // window-function sessionization (the q4 oracle).
-    "s2_stream_sessionize" -> ((s, dir) => {
-      val staged = stagedEvents(s, dir)
-      val ckpt = scratchDir("s2_ckpt")
-      val df = withFewPartitions(s) {
-        graft.streaming.StreamOps.sessionize(s, staged, ckpt, "s2_mem")
-      }
-      dropCheckpoint(ckpt)
-      df
-    }),
-
-    // Streaming EXACT dedup: state-store dropDuplicates over the key,
-    // each (user_id, event_type) emitted once on first sight across all
-    // micro-batches; must equal batch SELECT DISTINCT exactly. The
-    // ingest-time dedup primitive of a training pipeline.
-    "s3_stream_dedup" -> ((s, dir) => {
-      val staged = stagedEvents(s, dir)
-      val ckpt = scratchDir("s3_ckpt")
-      val df = withFewPartitions(s) {
-        graft.streaming.StreamOps.streamDedup(s, staged, ckpt, "s3_mem")
-      }
-      dropCheckpoint(ckpt)
-      df
-    }),
-
-    // STREAM-STREAM interval join: purchases attributed to same-user
-    // clicks within the preceding 30 minutes — watermarked self-join of
-    // the staged event stream with a time-range condition bounding the
-    // join state. Must equal the batch interval join exactly.
-    "s4_stream_join" -> ((s, dir) => {
-      val staged = stagedEvents(s, dir)
-      val ckpt = scratchDir("s4_ckpt")
-      val df = withFewPartitions(s) {
-        graft.streaming.StreamOps.intervalJoin(s, staged, ckpt, "s4_mem")
-      }
-      dropCheckpoint(ckpt)
-      df
-    }),
-
-    // LEFT OUTER stream-stream interval join — the hardest streaming
-    // join path: unmatched clicks emit null purchase columns only once
-    // the watermark proves no match can arrive; the staged far-future
-    // sentinels advance it past every real click. Must equal the batch
-    // LEFT JOIN exactly.
-    "s5_stream_join_outer" -> ((s, dir) => {
-      val staged = stagedEvents(s, dir)
-      val ckpt = scratchDir("s5_ckpt")
-      val df = withFewPartitions(s) {
-        graft.streaming.StreamOps.intervalJoinOuter(s, staged, ckpt, "s5_mem")
-      }
-      dropCheckpoint(ckpt)
-      df
-    }),
-
-    // STREAM-STATIC enrichment join + windowed aggregate — the fourth
-    // streaming-join surface: each micro-batch broadcast-joins a static
-    // per-user segment dimension (stateless — no join state store), then
-    // the watermarked 1-hour windows aggregate per (segment, event_type).
-    // Must equal the batch join + GROUP BY exactly.
-    "s6_stream_static" -> ((s, dir) => {
-      val staged = stagedEvents(s, dir)
-      val ckpt = scratchDir("s6_ckpt")
-      val df = withFewPartitions(s) {
-        graft.streaming.StreamOps.streamStaticEnrich(s, staged, ckpt, "s6_mem")
-      }
-      dropCheckpoint(ckpt)
-      df
-    }),
-
-    // STREAMING image curation — the modality counterpart of s1-s6: the
-    // exact corpus arrives as 8 micro-batches, each batch decodes +
-    // scores on the executors (the i6 quality kernel) and foreachBatch
-    // lands verdicts in a batch-id-keyed idempotent parquet sink. The
-    // drained table must equal the batch i6 computation — same closed-
-    // form oracle.
-    // LATE-DATA DISCARD — the watermark semantics gate: a third staged
-    // file re-delivers 100 closed-window events (ids offset 10^9) AFTER
-    // the watermark has advanced past their windows; the engine must
-    // drop every one. The oracle aggregates the ORIGINAL events only —
-    // if late rows leak into closed windows, the counts inflate and the
-    // hash fails. Same windowed aggregate as s1.
-    "s8_stream_late_drop" -> ((s, dir) => {
-      val staged = stagedLateEvents(s, dir)
-      val ckpt = scratchDir("s8_ckpt")
-      val df = withFewPartitions(s) {
-        graft.streaming.StreamOps.windowedEventCounts(s, staged, ckpt, "s8_mem")
-      }
-      dropCheckpoint(ckpt)
-      df
-    }),
-
-    "s7_stream_image_quality" -> ((s, _) => {
-      val staged = stagedImageStream(s) // cached across runs like s1-s6
-      val ckpt = scratchDir("s7_ckpt")
-      val out = scratchDir("s7_out")
-      val df = withFewPartitions(s) {
-        graft.streaming.StreamOps.imageQualityCuration(s, staged, ckpt, out)
-      }
-      dropCheckpoint(ckpt)
-      df
-    }),
-
-    // Video modality: deterministic synthetic clips as REAL GIF89a binary
-    // columns (8 clips x 12 frames), frame-sampled every 3rd frame and
-    // reduced to integer stats on the executor (rows-only: no SQL-engine
-    // GIF decode; encode->decode round trip is ScalaTest-gated)
-    "v1_video_frames" -> ((s, _) => {
-      import s.implicits._
-      val clips = s.range(8).map { cid =>
-        val frames = (0 until 12).map { f =>
-          Array.tabulate(48 * 32)(i => ((cid * 37 + f * 11 + i) % 251).toDouble)
-        }
-        (cid.toLong, graft.sources.GifWriter.writeAnimatedBytes(
-          frames, 48, 32, lo = 0, hi = 250, delayCs = 10))
-      }
-      graft.codecs.VideoOps.frameStats(clips, every = 3)
-        .orderBy($"clip_id", $"frame_idx")
-    }),
-
-    // W1: Horn gradient via distributed halo exchange (sampled pixels)
-    "r8_gradient" -> ((s, _) => {
-      import s.implicits._
-      val dem = TileOps.tileGrid(s, Synth.demRef, tileRes)(Synth.demValue)
-      Stencil.hornGradient(dem, Synth.demRef, tileRes)
-        .filter(($"row" * lit(Synth.demRef.ncols) + $"col") % 37 === 5)
-        .select($"row".cast("long").as("row"), $"col".cast("long").as("col"),
-          $"gx", $"gy")
-        .orderBy($"row", $"col")
-    }),
-
-    // J7: 1:1 equi zip join of two same-grid rasters (vectorshow pairing)
-    "r9_zipjoin" -> ((s, _) => {
-      import s.implicits._
-      val a = TileOps.cells(TileOps.tileGrid(s, Synth.gridARef, tileRes)(Synth.gridAValue))
-      val b = TileOps.cells(TileOps.tileGrid(s, Synth.gridARef, tileRes)(Synth.gridBValue))
-        .withColumnRenamed("v", "u")
-      a.join(b, Seq("row", "col"))
-        .withColumn("uv", $"v" * $"u")
-        .withColumn("band", floor($"row" / 16).cast("long"))
-        .groupBy($"band")
-        .agg(count($"uv").as("n_valid"), sum($"uv").as("sum_uv"))
-        .orderBy($"band")
-    }),
-
-    // Band math over the zip join (the NDVI-style normalized difference
-    // (a-b)/(a+b)): per-pixel arithmetic on the 1:1 cell equi-join — one
-    // codegen span after the join; each division is a single IEEE op on
-    // identical dyadic operands in both engines, so it hashes. Zero
-    // denominators (a+b = 0 happens only at a = b = 0) map to null, like
-    // SQL's NULLIF guard.
-    "r48_normdiff" -> ((s, _) => {
-      import s.implicits._
-      val a = TileOps.cells(TileOps.tileGrid(s, Synth.gridARef, tileRes)(Synth.gridAValue))
-      val b = TileOps.cells(TileOps.tileGrid(s, Synth.gridARef, tileRes)(Synth.gridBValue))
-        .withColumnRenamed("v", "u")
-      a.join(b, Seq("row", "col"))
-        .filter($"v".isNotNull && $"u".isNotNull)
-        .select($"row", $"col",
-          when($"v" + $"u" =!= 0.0, ($"v" - $"u") / ($"v" + $"u")).as("nd"))
-        .filter(($"row" * lit(Synth.gridARef.ncols) + $"col") % 7 === 2)
-        .orderBy($"row", $"col")
-    }),
-
-    // V1: vectorize — per-component POLYGON geometry (exterior + holes,
-    // WKT) + value + pixel count, the reference's (geometry, value) stream.
-    // FULLY hash-gated since r5: the oracle replicates the whole ring
-    // assembly (left-turn successor, canonical rotation, ring order,
-    // vertex formatting) in DuckDB SQL — the WKT STRINGS compare equal,
-    // closing the last no_oracle row (VERDICT r4 #3). The even-odd
-    // rasterization round-trip ScalaTest and the r23 edge gate remain as
-    // independent geometry checks.
-    "r10_vectorize" -> ((s, _) => {
-      import s.implicits._
-      val blocky = TileOps.tileGrid(s, Synth.gridARef, tileRes)(Synth.blockyValue)
-      Vectorize.polygons(blocky, Synth.gridARef, tileRes)
-    }),
-
-    // V1 stats form: per-value connected-component count + pixel count —
-    // hash-gated against a DuckDB RECURSIVE-CTE oracle (transitive
-    // closure of the same-value 4-adjacency, min label per cell), so the
-    // distributed label/seam machinery is oracle-checked; the geometry
-    // form stays r10 + the rasterization round-trip ScalaTest.
-    "r22_component_stats" -> ((s, _) => {
-      import s.implicits._
-      val blocky = TileOps.tileGrid(s, Synth.gridARef, tileRes)(Synth.blockyValue)
-      Vectorize.componentStats(blocky, Synth.gridARef, tileRes)
-    }),
-
-    // H1 (beyond-reference, in-domain hydrology): D8 flow direction over
-    // the icelite-backed DEM — steepest positive drop, ESRI power-of-two
-    // codes, smallest code on ties, 0 at pits. Hash-gated per cell: z is
-    // dyadic and sqrt(2) is exact-rounded, so every drop double is
-    // bit-identical cross-engine and comparisons can never diverge.
-    "r24_flowdir" -> ((s, _) => {
-      import s.implicits._
-      Flow.flowDir(demTiles(s), Synth.demRef, tileRes)
-        .select($"row", $"col", $"dir".cast("long").as("dir"))
-        .orderBy($"row", $"col")
-    }),
-
-    // H2: D8 flow accumulation (cells draining through, incl. self) via
-    // the tile-condensation pattern — local topological accumulate per
-    // tile, a crossing-edge-only condensed solve (O(perimeter)), then a
-    // seeded second pass. Oracle = WITH RECURSIVE downstream closure.
-    "r25_flowacc" -> ((s, _) => {
-      import s.implicits._
-      Flow.flowAcc(demTiles(s), Synth.demRef, tileRes)
-        .orderBy($"row", $"col")
-    }),
-
-    // H3: watershed delineation + downstream flow length — every cell's
-    // basin outlet (terminal pit of its D8 path) and the path's step
-    // counts, kept as exact (cardinal, diagonal) integers so the length
-    // `cs*(ncard + ndiag*sqrt2)` never enters the hash. Same condensation
-    // scale shape as r25. Oracle = terminal row of the recursive
-    // downstream walk (the one cell on each path with no outgoing edge).
-    "r26_watershed" -> ((s, _) => {
-      import s.implicits._
-      Flow.downstream(demTiles(s), Synth.demRef, tileRes)
-        .orderBy($"row", $"col")
-    }),
-
-    // Tabulate-area overlay (the classic zonal cross-tab): per
-    // (basin, elevation-class) cell counts — ONE equi-join of the r26
-    // watershed labels with the r13 classification plus one partial/final
-    // hash agg; overlay analysis costs two gated operators and a join,
-    // never a new kernel. NULL class = valid cells below the first break
-    // (the rankshow rule r13 gates).
-    "r51_tabulate" -> ((s, _) => {
-      import s.implicits._
-      val basins = Flow.downstream(demTiles(s), Synth.demRef, tileRes)
-        .select($"row", $"col", $"basin_r", $"basin_c")
-      val classed = TileOps.cells(
-          TileFns.classify(demTiles(s), Array(50.0, 100.0, 150.0, 200.0)))
-        .select($"row", $"col", $"v".as("class"))
-      basins.join(classed, Seq("row", "col"))
-        .groupBy($"basin_r", $"basin_c", $"class")
-        .agg(count(lit(1)).as("n"))
-        .orderBy($"basin_r", $"basin_c", $"class")
-    }),
-
-    // H4: stream-network extraction — D8 edges whose source cell's
-    // accumulation meets the channel-initiation threshold (support-area
-    // rule). One equi-join of r25's accumulation with r24's directions.
-    "r27_streams" -> ((s, _) => {
-      import s.implicits._
-      Flow.streamNetwork(demTiles(s), Synth.demRef, tileRes, threshold = 25L)
-        .orderBy($"row", $"col")
-    }),
-
-    // H5: longest upstream drainage path (hydraulic-length analog) via a
-    // max-plus condensed solve (mirror of r25's sum solve); weighted
-    // comparator `ncard + ndiag*sqrt2` with ties to the larger cardinal
-    // count, replicated verbatim in the oracle's window ORDER BY.
-    "r28_flowlength" -> ((s, _) => {
-      import s.implicits._
-      Flow.longestUpstream(demTiles(s), Synth.demRef, tileRes)
-        .orderBy($"row", $"col")
-    }),
-
-    // H6: depression filling (Priority-Flood) — the standard DEM
-    // conditioning step before D8 routing. Fill values are max/min
-    // SELECTIONS of input z values (no arithmetic), so the minimax
-    // fixpoint is bit-exact cross-engine. Oracle = Jacobi relaxation of
-    // the same fixpoint, run for a fixed 60 rounds (the fixture converges
-    // in 36 — margin documented; check_oracle proves the slack).
-    "r29_fill_sinks" -> ((s, _) => {
-      import s.implicits._
-      Flow.fillSinks(demTiles(s), Synth.demRef, tileRes)
-        .orderBy($"row", $"col")
-    }),
-
-    // W1b: focal terrain indices — TPI (Weiss 2001) and TRI (Riley 1999)
-    // over the valid 8-neighborhood, one halo exchange. Hash-exact: the
-    // dyadic fixture makes every square/sum exact (order-free), and
-    // mean/sqrt of identical operands round identically cross-engine.
-    "r30_terrain_indices" -> ((s, _) => {
-      import s.implicits._
-      Stencil.terrainIndices(demTiles(s), Synth.demRef, tileRes)
-        .orderBy($"row", $"col")
-    }),
-
-    // R1 (beyond-reference rendering): marching-squares contour at a
-    // level chosen OFF the fixture's dyadic value lattice (100.125 vs
-    // quarter-valued z), so every edge interpolation is a division of
-    // exact doubles — bit-identical cross-engine, no quantization. One
-    // halo exchange; blocks owned by their TL corner's tile (no seams).
-    "r31_contour" -> ((s, _) => {
-      import s.implicits._
-      Contour.segments(demTiles(s), Synth.demRef, tileRes, level = 100.125)
-        .orderBy($"x1", $"y1", $"x2", $"y2")
-    }),
-
-    // H8: zonal statistics — per-watershed aggregates of the DEM
-    // (count / min / max / sum; the quarter-valued fixture keeps the sum
-    // exact, so no quantization). Pure relational composition: the r26
-    // basin labels equi-join the cell values and aggregate — the classic
-    // "zonal stats" operator expressed as the engine's native
-    // join+groupBy; at scale it is one shuffle on the basin key with
-    // partial aggregation map-side.
-    "r32_zonal_stats" -> ((s, _) => {
-      import s.implicits._
-      val dem = demTiles(s)
-      val basins = Flow.downstream(dem, Synth.demRef, tileRes)
-        .select($"row", $"col", $"basin_r", $"basin_c")
-      val cells = TileOps.cells(dem).where($"v".isNotNull)
-        .select($"row".cast("long").as("row"), $"col".cast("long").as("col"), $"v")
-      basins.join(cells, Seq("row", "col"))
-        .groupBy($"basin_r", $"basin_c")
-        .agg(count(lit(1)).as("n_cells"), min($"v").as("min_z"),
-          max($"v").as("max_z"), sum($"v").as("sum_z"))
-        .orderBy($"basin_r", $"basin_c")
-    }),
-
-    // H9: hydrologically-conditioned flow direction — D8 over the
-    // Priority-Flood-FILLED surface (the real-world sequence: condition,
-    // then route; filled lake interiors become pits/flats with dir 0).
-    // Exercises fillSinksTiles -> flowDir operator chaining; the oracle
-    // composes the r29 Jacobi fill CTE with the r24 direction rule over
-    // the filled values (fill values are selections of dyadic z, so the
-    // drop doubles stay bit-identical cross-engine).
-    "r33_conditioned_flowdir" -> ((s, _) => {
-      import s.implicits._
-      val filled = Flow.fillSinksTiles(demTiles(s), Synth.demRef, tileRes)
-      Flow.flowDir(filled, Synth.demRef, tileRes)
-        .select($"row", $"col", $"dir".cast("long").as("dir"))
-        .orderBy($"row", $"col")
-    }),
-
-    // P7: to_points — cell-center coordinates of every cell
-    // (Raster.py:553-567). Integer header × dyadic 0.5 offsets keep every
-    // x/y exact in both engines; v is NULL at the NODATA holes (the
-    // reference meshgrid includes them).
-    "r34_to_points" -> ((s, _) => {
-      import s.implicits._
-      TileOps.toPoints(demTiles(s), Synth.demRef)
-        .select($"row".cast("long").as("row"), $"col".cast("long").as("col"),
-          $"x", $"y", $"v")
-        .orderBy($"row", $"col")
-    }),
-
-    // A6: axis-wise stats — per-column (axis 0) and per-row (axis 1)
-    // NaN-ignoring min/max/median (Raster.py:844-854). Exact median via
-    // percentile over quarter-valued cells: the even-count midpoint mean
-    // is an eighth, exact in IEEE double in both engines (the r1 rule,
-    // per-group).
-    "r35_axis_stats" -> ((s, _) => {
-      import s.implicits._
-      val dem = demTiles(s)
-      TileOps.axisStats(dem, 0).withColumn("axis", lit(0L))
-        .unionByName(TileOps.axisStats(dem, 1).withColumn("axis", lit(1L)))
-        .select($"axis", $"idx", $"n_valid", $"min_v", $"max_v", $"median_v")
-        .orderBy($"axis", $"idx")
-    }),
-
-    // J4: paste_on — the small aligned fixture pasted onto the DEM
-    // (ignore_nan=true), window clipped at the DEM's right edge
-    // (Raster.py:517-551 minus its row/col-0 exclusion quirk, which the
-    // RefKernel parity oracle pins separately). Distributed: precedence
-    // patches folded by the streaming mosaic — one shuffle on cell id.
-    "r36_paste_on" -> ((s, _) => {
-      import s.implicits._
-      val large = Raster(demTiles(s), Synth.demRef, tileRes)
-      val small = Raster(
-        TileOps.tileGrid(s, Synth.pasteRef, tileRes)(Synth.pasteValue),
-        Synth.pasteRef, tileRes)
-      small.pasteOn(large).cells
-        .select($"row".cast("long").as("row"), $"col".cast("long").as("col"), $"v")
-        .orderBy($"row", $"col")
-    }),
-
-    // H10: HAND — height above nearest drainage (Rennó 2008). Stream set
-    // = r27's acc>=25 rule; per cell, the FIRST stream cell on its D8
-    // path, exact (ncard, ndiag) step counts, and hand = z − z_stream
-    // (difference of dyadic quarters — exact, no quantization). Cells
-    // draining to a pit before any stream are omitted (HAND undefined).
-    "r37_hand" -> ((s, _) => {
-      import s.implicits._
-      Raster(demTiles(s), Synth.demRef, tileRes).hand(threshold = 25L)
-        .select($"row", $"col", $"stream_r", $"stream_c",
-          $"ncard", $"ndiag", $"hand")
-        .orderBy($"row", $"col")
-    }),
-
-    // H11: Strahler stream order at threshold 4 (the richest network the
-    // fixture yields — orders reach 3 with 2,359 order-2 cells). Pointer-
-    // doubling chain condensation + junction-forest solve; oracle is the
-    // Jacobi order relaxation (55 rounds > the fixture's 49-cell max
-    // stream path).
-    "r38_strahler" -> ((s, _) => {
-      import s.implicits._
-      Raster(demTiles(s), Synth.demRef, tileRes).strahler(threshold = 4L)
-        .orderBy($"row", $"col")
-    }),
-
-    // Fixed-point focal statistics (5x5 moving window): exact Long
-    // windowed (n, sum) per grid position via the separable two-pass
-    // strip stack — partitioning-stable where a float focal sum is not.
-    // q = 4*v is the DEM's native integer domain, so the brute
-    // offset-join oracle is hash-perfect.
-    "r43_focal_stats" -> ((s, _) => {
-      import s.implicits._
-      val vals = TileOps.cells(demTiles(s)).filter($"v".isNotNull)
-        .select($"row", $"col", ($"v" * 4).cast("long").as("q"))
-      Focal.window(vals, Synth.demRef.nrows, Synth.demRef.ncols, k = 2)
-        .orderBy($"row", $"col")
-    }),
-
-    // Cross-section profile extraction (the reference's polyline-z
-    // domain, Raster.py line tooling + hydro river sections): walk the
-    // r7-proven line2sub cell chain over the DEM, attach elevations
-    // (LEFT join keeps NODATA holes as null), and carry EXACT chainage as
-    // (ncard, ndiag) running step counts — the r26/r28 integer-distance
-    // convention; chainage = (ncard + ndiag*sqrt(2)) * cellsize at
-    // presentation time. One window over (line_id, seq) + one cell join.
-    "r50_xsection" -> ((s, _) => {
-      import s.implicits._
-      val (xs, ys) = Synth.demLine
-      val lines = s.createDataset(Seq(Line2Sub.LineRec(0L, xs, ys)))
-      val walk = Line2Sub.cells(lines, Synth.demRef)
-      val w = Window.partitionBy($"line_id").orderBy($"seq")
-      val steps = walk
-        .withColumn("pr", lag($"row", 1).over(w))
-        .withColumn("pc", lag($"col", 1).over(w))
-        .withColumn("sd", when($"pr".isNull, 0L)
-          .when($"row" =!= $"pr" && $"col" =!= $"pc", 1L).otherwise(0L))
-        .withColumn("sc", when($"pr".isNull, 0L).otherwise(lit(1L) - $"sd"))
-        .withColumn("ncard", sum($"sc").over(
-          w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .withColumn("ndiag", sum($"sd").over(
-          w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      steps
-        .join(TileOps.cells(demTiles(s)), Seq("row", "col"), "left")
-        .select($"line_id", $"seq", $"row", $"col", $"v", $"ncard", $"ndiag")
-        .orderBy($"seq")
-    }),
-
-    // Composed bankline -> bathymetry (the reference's documented river
-    // module, docs/source/Modules/index.rst:4-15): cross-section lines
-    // with endpoint depths -> stations along each line's Line2Sub walk ->
-    // distributed Delaunay-linear surface -> bankline polygon clip. The
-    // oracle rides the same linear-precision trick as r20: station depths
-    // lie on the dyadic plane 4 + x/4 + y/2 (z interpolates linearly
-    // ALONG each straight line, so every station is plane-exact), Delaunay
-    // linear interpolation reproduces the plane, and the clip polygon's
-    // edges have parity-mixed reduced directions so no pixel center can
-    // lie exactly on an edge. Values are multiples of 1/16 -> vq lattice
-    // exact (FIXTURES.md §9).
-    "r57_line2surface" -> ((s, _) => {
-      import s.implicits._
-      val lines = s.createDataset((0 until 20).map { j =>
-        val x = -4.0 + 3.0 * j
-        graft.operators.LineSurface.CrossLine(j.toLong,
-          Array(x, x), Array(29.0, 1.0),
-          z0 = 4.0 + 0.25 * x + 0.5 * 29.0,
-          z1 = 4.0 + 0.25 * x + 0.5 * 1.0)
-      })
-      val bank = Seq(Feature(0, "polygon",
-        Array(0.0, 48.0, 50.0, 1.0, 0.0),
-        Array(3.0, 5.0, 29.0, 25.0, 3.0), attr = 1.0, seq = 0))
-      val tiles = graft.operators.LineSurface.bathymetry(
-        s, lines, bank, Synth.knnRef, res = 5)
-      TileOps.cells(tiles).filter($"v".isNotNull)
-        .select($"row".cast("long").as("row"), $"col".cast("long").as("col"),
-          expr("CAST(round(v * 10000) AS BIGINT)").as("vq"))
-        .orderBy($"row", $"col")
-    }),
-
-    // Kernel-density heatmap (quartic/biweight, radius 8): scaled-integer
-    // kernel (R^2-d^2)^2 scattered via a broadcast offset disk + ONE hash
-    // agg — exact Longs, so the offset-join oracle hash-matches. Points
-    // are the q % 61 == 7 subset of the DEM's valid cells (~1.6%).
-    "r49_kde" -> ((s, _) => {
-      import s.implicits._
-      val pts = TileOps.cells(demTiles(s)).filter($"v".isNotNull)
-        .filter((($"v" * 4).cast("long") % 61) === 7)
-        .select($"row", $"col")
-      graft.operators.Density.quartic(pts, Synth.demRef.nrows,
-          Synth.demRef.ncols, radius = 8)
-        .orderBy($"row", $"col")
-    }),
-
-    // Overview pyramid (COG-style): 3 levels of 2x2 block aggregation,
-    // level L built incrementally from L-1 — one base scan, each level's
-    // shuffle 1/4 the previous. Exact Long (n, sum_q) keeps every level
-    // order-free; fully declarative groupBy/sum (whole-stage codegen).
-    "r46_pyramid" -> ((s, _) => {
-      import s.implicits._
-      val vals = TileOps.cells(demTiles(s)).filter($"v".isNotNull)
-        .select($"row", $"col", ($"v" * 4).cast("long").as("q"))
-      graft.operators.Pyramid.build(vals, levels = 3)
-        .orderBy($"level", $"row", $"col")
-    }),
-
-    // Focal median despeckle (5x5): row-band replication shuffle + exact
-    // Long window sort; SQL median semantics for even counts, so the
-    // offset-join median oracle hashes bit-for-bit.
-    "r47_focal_median" -> ((s, _) => {
-      import s.implicits._
-      val vals = TileOps.cells(demTiles(s)).filter($"v".isNotNull)
-        .select($"row", $"col", ($"v" * 4).cast("long").as("q"))
-      Focal.median(vals, Synth.demRef.nrows, Synth.demRef.ncols, k = 2)
-        .orderBy($"row", $"col")
-    }),
-
-    // Weighted cost-distance accumulation (least-cost path from the
-    // v >= 240 seed set, midpoint rule scaled x20, rational diagonal 14):
-    // iterated tile-local Dijkstra against 1-px halo estimates — the
-    // minisum sibling of r29's Priority-Flood. All arithmetic is dyadic
-    // (quarter-unit costs x 10/14), so the Jacobi SQL oracle hash-matches
-    // bit-for-bit.
-    "r45_cost_distance" -> ((s, _) => {
-      import s.implicits._
-      graft.operators.CostDistance.accumulate(demTiles(s), Synth.demRef,
-          tileRes, isSource = _ >= 240.0)
-        .orderBy($"row", $"col")
-    }),
-
-    // Focal majority (5x5 mode filter) over the r13 classification —
-    // the categorical Expand/Nibble primitive. Separable in COUNT space
-    // (per-class sums), ties to the smallest class; exact Long counts,
-    // so the offset-join + argmax oracle hash-matches.
-    "r52_focal_majority" -> ((s, _) => {
-      import s.implicits._
-      val classed = TileOps.cells(
-          TileFns.classify(demTiles(s), Array(50.0, 100.0, 150.0, 200.0)))
-        .filter($"v".isNotNull)
-        .select($"row", $"col", ($"v" - 1).cast("int").as("cls"))
-      Focal.majority(classed, Synth.demRef.nrows, Synth.demRef.ncols,
-          k = 2, nClasses = 4)
-        .select($"row", $"col", ($"mode_cls" + 1).as("mode_class"), $"n_mode")
-        .orderBy($"row", $"col")
-    }),
-
-    // Topographic wetness (TWI argument) + stream power (SPI): the
-    // classic hydrology composite of specific catchment area
-    // (flowAcc * cellsize, integer-exact) against the Horn slope
-    // magnitude. ln() is deliberately NOT applied — every emitted value
-    // is a chain of single correctly-rounded IEEE ops (multiply, divide,
-    // sqrt) on operands already proven bit-identical cross-engine by the
-    // r25 and r8 gates, so the composite hash-matches where a libm log
-    // would diverge in the last ulp (callers apply ln downstream; it is
-    // monotone, so ranking/thresholding on twi_arg is equivalent).
-    // Scale shape: one row/col equi-join of two gated operators
-    // (r25 tile condensation x r8 halo stencil) — overlay composition,
-    // no new kernel, no extra shuffle beyond the join.
-    "r53_twi" -> ((s, _) => {
-      import s.implicits._
-      Raster(demTiles(s), Synth.demRef, tileRes).wetness
-        .filter(($"row" * lit(Synth.demRef.ncols) + $"col") % 5 === 1)
-        .orderBy($"row", $"col")
-    }),
-
-    // Morphological erosion + dilation (7x7 focal min/max): separable
-    // monotone-deque sliding extrema — O(1)/cell amortized, exact Longs,
-    // so the brute offset-join oracle is hash-perfect
-    "r44_focal_extrema" -> ((s, _) => {
-      import s.implicits._
-      val vals = TileOps.cells(demTiles(s)).filter($"v".isNotNull)
-        .select($"row", $"col", ($"v" * 4).cast("long").as("q"))
-      Focal.extrema(vals, Synth.demRef.nrows, Synth.demRef.ncols, k = 3)
-        .orderBy($"row", $"col")
-    }),
-
-    // Exact squared Euclidean distance transform (Felzenszwalb
-    // separable two-pass, all-Long envelope arithmetic): dist2 to the
-    // nearest high cell (v >= 240) for EVERY grid cell — integer-exact,
-    // so the brute cross-join oracle is hash-perfect
-    "r42_distance_transform" -> ((s, _) => {
-      import s.implicits._
-      val src = TileOps.cells(demTiles(s)).filter($"v" >= 240)
-        .select($"row", $"col")
-      graft.operators.DistanceTransform.squared(src,
-          Synth.demRef.nrows, Synth.demRef.ncols)
-        .orderBy($"row", $"col")
-    }),
-
-    // Bounded-radius viewshed: R3 line-of-sight with integer-DDA
-    // sampling and the cross-multiplied slope test — all rational
-    // arithmetic + sqrt, mirrored exactly in the SQL oracle. One
-    // descriptor-keyed shuffle of each observer's window; kernel is
-    // executor-side per observer.
-    "r41_viewshed" -> ((s, _) => {
-      import s.implicits._
-      graft.operators.Viewshed(demTiles(s), Synth.demRef, tileRes,
-          Seq(graft.operators.Viewshed.Observer(0, 60, 40),
-            graft.operators.Viewshed.Observer(1, 150, 100),
-            graft.operators.Viewshed.Observer(2, 30, 120)),
-          radius = 24, eyeH = 10.0)
-        .orderBy($"oid", $"row", $"col")
-    }),
-
-    // Zevenbergen-Thorne curvature (general/profile/plan) over one halo
-    // exchange — pure rational arithmetic so the SQL oracle is bit-exact
-    // (sampled pixels, like r8)
-    "r39_curvature" -> ((s, _) => {
-      import s.implicits._
-      Stencil.curvature(demTiles(s), Synth.demRef, tileRes)
-        .filter(($"row" * lit(Synth.demRef.ncols) + $"col") % 29 === 3)
-        .orderBy($"row", $"col")
-    }),
-
-    // Slope/aspect 8-sector classification over the Horn gradient —
-    // fully declarative Column expressions (one codegen span); tan^2
-    // slope + integer octant keep the oracle transcendental-free
-    "r40_aspect" -> ((s, _) => {
-      import s.implicits._
-      Stencil.aspectClass(demTiles(s), Synth.demRef, tileRes)
-        .filter(($"row" * lit(Synth.demRef.ncols) + $"col") % 29 === 3)
-        .select($"row".cast("long").as("row"), $"col".cast("long").as("col"),
-          $"tan2_slope", $"octant".cast("long").as("octant"), $"compass")
-        .orderBy($"row", $"col")
-    }),
-
-    // W2: bilinear resample via halo'd gather join
-    "r11_bilinear" -> ((s, _) => {
-      import s.implicits._
-      val dem = TileOps.tileGrid(s, Synth.demRef, tileRes)(Synth.demValue)
-      Bilinear.resample(dem, Synth.demRef, Synth.resampleTargetRef, tileRes)
-        .select($"row".cast("long").as("row"), $"col".cast("long").as("col"), $"v")
-        .orderBy($"row", $"col")
-    }),
-
-    // S4: GeoTIFF ingest — pure-JVM tiled-layout reader -> distributed
-    // tile split (the reference's default .tif ingest path)
-    "r16_tif_ingest" -> ((s, _) => {
-      import s.implicits._
-      val ref = Synth.demRef
-      val tmp = "/tmp/graft_r16_dem.tif"
-      val data = Array.tabulate(ref.nrows * ref.ncols)(i =>
-        Synth.demValue(i / ref.ncols, i % ref.ncols))
-      graft.sources.GeoTiffWriter.write(tmp, ref, data, tileSize = 64)
-      val tiles = graft.sources.GeoTiffReader.readTiles(s, tmp, tileRes)
-        .map(_._2)
-      TileOps.cells(tiles)
-        .withColumn("band", floor($"row" / 16).cast("long"))
-        .groupBy($"band")
-        .agg(count($"v").as("n_valid"), sum($"v").as("sum_v"))
-        .orderBy($"band")
-    }),
-
-    // W2: cubic convolution resample (rows-only: masked-renormalized
-    // 4x4 kernel sums are not cross-engine hashable; all four convolution
-    // kernels are ScalaTest-gated vs direct computation)
-    "r19_resample_cubic" -> ((s, _) => {
-      import s.implicits._
-      val dem = TileOps.tileGrid(s, Synth.demRef, tileRes)(Synth.demValue)
-      Convolve.resample(dem, Synth.demRef, Synth.resampleTargetRef, tileRes, "cubic")
-        .filter(($"row" * lit(Synth.resampleTargetRef.ncols) + $"col") % 11 === 3)
-        .select($"row".cast("long").as("row"), $"col".cast("long").as("col"), $"v")
-        .orderBy($"row", $"col")
-    }),
-
-    // J5 point_interpolate method='linear': distributed Delaunay linear
-    // with circumcircle-containment exactness proof per cell. Oracle-gated
-    // via LINEAR PRECISION: points sample a dyadic plane (hull corners
-    // included so all 7200 cells resolve), barycentric interpolation must
-    // reproduce it, and the DuckDB oracle is the closed-form polynomial at
-    // cell centers quantized to round(v*10^4) (Synth.delaunayPlanePoints
-    // scaladoc carries the error budget). distributed == driver-global
-    // Delaunay stays ScalaTest-gated on the non-polynomial knnPoints.
-    "r20_delaunay" -> ((s, _) => {
-      import s.implicits._
-      val pts = s.createDataset(Synth.delaunayPlanePoints(2.0, 0.5, 0.25)
-        .map(p => PtRec(p._1, p._2, p._3, p._4)).toSeq)
-      graft.operators.Delaunay.linearBucketed(s, pts, Synth.knnRef, res = 5)
-        .select($"row".cast("long").as("row"), $"col".cast("long").as("col"),
-          expr("CAST(round(v * 10000) AS BIGINT)").as("vq"))
-        .orderBy($"row", $"col")
-    }),
-
-    // J5 point_interpolate method='cubic': distributed reduced
-    // Clough-Tocher C1 cubic with per-vertex 1-ring exactness proof.
-    // Oracle-gated via the CT linear-precision property (WLS 1-ring
-    // gradients are exact on linear fields — DelaunaySpec): a different
-    // dyadic plane than r20, same round(v*10^4) quantization. The full
-    // C1/quadratic-with-exact-gradients behavior stays ScalaTest-gated.
-    "r21_delaunay_cubic" -> ((s, _) => {
-      import s.implicits._
-      val pts = s.createDataset(Synth.delaunayPlanePoints(-1.0, 0.75, -0.5)
-        .map(p => PtRec(p._1, p._2, p._3, p._4)).toSeq)
-      graft.operators.Delaunay.cubicBucketed(s, pts, Synth.knnRef, res = 5)
-        .select($"row".cast("long").as("row"), $"col".cast("long").as("col"),
-          expr("CAST(round(v * 10000) AS BIGINT)").as("vq"))
-        .orderBy($"row", $"col")
-    }),
-
-    // J5 variant: IDW over the exact k nearest. Oracle-gated: the fixture
-    // coords are dyadic so every candidate d2 is EXACT in both engines
-    // (identical (d2, pid) neighbor ranking); the 1/d2-weighted mean then
-    // differs only in final-ULP summation order, absorbed by the
-    // round(v*10^4) quantization. DuckDB replicates the full kernel:
-    // top-4 by (d2, pid), w = 1/d2, sum(w*v)/sum(w). bucketed==brute
-    // stays ScalaTest-gated bitwise.
-    "r18_idw" -> ((s, _) => {
-      import s.implicits._
-      val pts = s.createDataset(Synth.knnPoints.map(p => PtRec(p._1, p._2, p._3, p._4)))
-      Knn.idwBucketed(s, pts, Synth.knnRef, res = 5, k = 4)
-        .filter(($"row" * lit(Synth.knnRef.ncols) + $"col") % 13 === 2)
-        .select($"row".cast("long").as("row"), $"col".cast("long").as("col"),
-          expr("CAST(round(v * 10000) AS BIGINT)").as("vq"))
-        .orderBy($"row", $"col")
-    }),
-
-    // W5: reproject warp BNG -> UTM30N (rows-only: pixel placement is
-    // trig-dependent, not cross-engine hashable; parity vs the direct
-    // per-pixel transform is ScalaTest-gated)
-    "r17_reproject" -> ((s, _) => {
-      import s.implicits._
-      val ref = Synth.demRef.withEpsg(27700)
-      val dem = TileOps.tileGrid(s, ref, tileRes)(Synth.demValue)
-      val (warped, _) = Reproject.warp(dem, ref, 32630, tileRes)
-      TileOps.cells(warped)
-        .withColumn("band", floor($"row" / 16).cast("long"))
-        .groupBy($"band")
-        .agg(count($"v").as("n_valid"), sum($"v").as("sum_v"))
-        .orderBy($"band")
-    }),
-
-    // W2: window-agg downsample kernels (zero-shuffle per-tile windows)
-    "r14_resample_avg" -> ((s, _) => {
-      import s.implicits._
-      val dem = TileOps.tileGrid(s, Synth.demRef, tileRes)(Synth.demValue)
-      Downsample.stats(dem, Synth.demRef, tileRes, factor = 4, "average")
-        .select($"row".cast("long").as("row"), $"col".cast("long").as("col"), $"v")
-        .orderBy($"row", $"col")
-    }),
-
-    "r15_resample_med" -> ((s, _) => {
-      import s.implicits._
-      val dem = TileOps.tileGrid(s, Synth.demRef, tileRes)(Synth.demValue)
-      Downsample.stats(dem, Synth.demRef, tileRes, factor = 4, "med")
-        .select($"row".cast("long").as("row"), $"col".cast("long").as("col"), $"v")
-        .orderBy($"row", $"col")
-    }),
-
-    // quality scoring: token/char/punct stats, pure arithmetic
-    "d2_quality" -> ((s, dir) => {
-      import s.implicits._
-      table(s, dir, "documents")
-        .withColumn("n_tokens",
-          (length($"text") - length(regexp_replace($"text", " ", ""))) + 1)
-        .withColumn("avg_tok_len",
-          ($"n_chars" - ($"n_tokens" - 1)).cast("double") / $"n_tokens")
-        .select($"doc_id", $"n_tokens".cast("long").as("n_tokens"),
-          $"avg_tok_len")
-        .orderBy($"doc_id")
-    }),
-
-    // Token counting, whitespace + BPE-ish regex (letter runs / single
-    // digits / single punctuation — the GPT-2-style pre-tokenizer shape):
-    // pure codegen'd regexp built-ins, one pass, no shuffle beyond sort
-    "d9_token_stats" -> ((s, dir) => {
-      import s.implicits._
-      table(s, dir, "documents")
-        .withColumn("ws_tokens",
-          ((length($"text") - length(regexp_replace($"text", " ", ""))) + 1).cast("long"))
-        .withColumn("bpe_tokens",
-          size(regexp_extract_all($"text", lit("[A-Za-z]+|[0-9]|[^A-Za-z0-9\\s]"), lit(0))).cast("long"))
-        .withColumn("tok_ratio", $"bpe_tokens".cast("double") / $"ws_tokens")
-        .select($"doc_id", $"ws_tokens", $"bpe_tokens", $"tok_ratio")
-        .orderBy($"doc_id")
-    })
-  )
-
-  // ------------------------------------------------------------- oracle SQL
-
-  /** DuckDB-side regeneration of the DEM fixture grid (must mirror
-    * Synth.demValue exactly — integer arithmetic only). */
-  private def demSql: String =
-    s"""SELECT (i // ${Synth.demRef.ncols}) AS r, (i % ${Synth.demRef.ncols}) AS c,
-       | CASE WHEN (i % 97) = 13 THEN NULL
-       |      ELSE (((i // ${Synth.demRef.ncols}) * 31 + (i % ${Synth.demRef.ncols}) * 17) % 1000) / 4.0 END AS v
-       |FROM range(${Synth.demRef.nrows.toLong * Synth.demRef.ncols}) t(i)""".stripMargin
-
-  /** r17 oracle: full replication of the reproject warp in DuckDB — the
-    * target-grid derivation (boundary-ring transform, cal_tsf cellsize/
-    * dims), the per-pixel inverse transform (TM inverse w/ 20 guarded
-    * footpoint iterations, Helmert datum shift, 10-iteration ECEF ->
-    * geodetic, TM forward) and the nearest gather + band sums. The TM/
-    * Helmert arithmetic is generated by [[ProjSql]] with every derived
-    * constant interpolated as the exact engine-computed double; the
-    * fixture's nearest-pixel rint margins (>= 1e-5 px, measured over all
-    * 30,954 target pixels) absorb cross-engine libm ULP divergence.
-    *
-    * Scope note: SQL and engine share the OSGB/Snyder series FORMULAS, so
-    * this oracle gates the warp machinery (target-grid derivation, cover,
-    * per-pixel gather, band aggregation) rather than the series itself —
-    * the series is anchored to external truth by the ProjSpec OSGB
-    * worked-example test (< 5 mm vs the published TM coordinates). */
-  /** The d3 exact-Jaccard pair CTE block, interpolated into BOTH the d3
-    * and d10 oracles so the pair rule (shingle construction, threshold
-    * 0.8) can never desynchronize between them. */
-  /** Shared D8 CTE block (DEM fixture + candidate drops + per-cell best
-    * direction), interpolated into BOTH the r24 and r25 oracles so the
-    * direction rule can never desynchronize between them. Drops use the
-    * engine's exact operand order — `(z - zn) / (5.0 * sqrt(2.0))` for
-    * diagonals — so every compared double is bit-identical cross-engine
-    * (dyadic z, IEEE exact-rounded sqrt). MATERIALIZED keeps DuckDB from
-    * re-inlining the fixture grid into each join (50x). */
-  /** Just the DEM fixture grid (NULL at the NaN holes) — the shared base
-    * of every D8/fill oracle. */
-  private def demGridCte: String = {
-    val nc = Synth.demRef.ncols
-    s"""g AS MATERIALIZED (
-       |  SELECT (i // $nc) AS r, (i % $nc) AS c,
-       |         CASE WHEN (i % 97) = 13 THEN NULL
-       |              ELSE (((i // $nc) * 31 + (i % $nc) * 17) % 1000) / 4.0 END AS v
-       |  FROM range(${Synth.demRef.nrows.toLong * nc}) t(i))""".stripMargin
+  /** Every gated query, family by family; names are unique. */
+  val gated: Seq[GatedQuery] = {
+    val all = RasterGates.gated ++ TerrainGates.gated ++ IceliteGates.gated ++
+      RelationalGates.gated ++ ImageGates.gated ++ AudioGates.gated ++
+      VideoGates.gated ++ TextGates.gated ++ EmbeddingGates.gated ++
+      BatchGates.gated ++ StreamGates.gated ++ GraphGates.gated
+    val dups = all.groupBy(_.name).collect { case (n, qs) if qs.size > 1 => n }
+    require(dups.isEmpty, s"duplicate gated query names: ${dups.toSeq.sorted.mkString(", ")}")
+    all
   }
 
-  private def d8Ctes: String = {
-    s"""$demGridCte,
-       |dd(code, dr, dc) AS (VALUES (1,0,1),(2,1,1),(4,1,0),(8,1,-1),
-       |                            (16,0,-1),(32,-1,-1),(64,-1,0),(128,-1,1)),
-       |cand AS (
-       |  SELECT a.r, a.c, d.code, d.dr, d.dc,
-       |         (a.v - b.v) / (CASE WHEN d.dr != 0 AND d.dc != 0
-       |                             THEN 5.0 * sqrt(2.0) ELSE 5.0 END) AS dp
-       |  FROM g a JOIN dd d ON true
-       |  JOIN g b ON b.r = a.r + d.dr AND b.c = a.c + d.dc
-       |  WHERE a.v IS NOT NULL AND b.v IS NOT NULL),
-       |best AS MATERIALIZED (
-       |  SELECT r, c, code, dr, dc, dp,
-       |         row_number() OVER (PARTITION BY r, c ORDER BY dp DESC, code ASC) AS rn
-       |  FROM cand)""".stripMargin
+  /** The named queries, in the order given; no names means every query.
+    * Throws IllegalArgumentException listing every unknown name, so a
+    * typo can never select nothing. */
+  def select(names: Seq[String]): Seq[GatedQuery] = {
+    val unknown = names.filterNot(n => gated.exists(_.name == n))
+    require(unknown.isEmpty, s"unknown gated query names: ${unknown.mkString(", ")}")
+    if (names.isEmpty) gated else names.distinct.map(n => gated.find(_.name == n).get)
   }
-
-  /** The D8 downstream walk with step counts, shared by the r25/r26/r27/
-    * r28 oracles (one closure definition — the queries can never
-    * desynchronize on the edge set or the count rule). Each walk row is
-    * (start cell, cell on its path, cardinal/diagonal steps start->cell);
-    * terminates because z strictly decreases along every edge. */
-  private def d8WalkCtes: String =
-    s"""$d8Ctes,
-       |edges AS MATERIALIZED (
-       |  SELECT r, c, r + dr AS r2, c + dc AS c2,
-       |         CASE WHEN dr != 0 AND dc != 0 THEN 1 ELSE 0 END AS diag
-       |  FROM best WHERE rn = 1 AND dp > 0),
-       |walk AS (
-       |  SELECT r AS sr, c AS sc, r, c, 0 AS ncard, 0 AS ndiag
-       |  FROM g WHERE v IS NOT NULL
-       |  UNION ALL
-       |  SELECT w.sr, w.sc, e.r2, e.c2, w.ncard + 1 - e.diag, w.ndiag + e.diag
-       |  FROM walk w JOIN edges e ON w.r = e.r AND w.c = e.c)""".stripMargin
-
-  /** The r29 Jacobi-relaxation fill CTE block (f_{k+1}(c) = min(f_k(c),
-    * max(z(c), min over 8-neighbors f_k(n))), f_0 = z on drains — grid
-    * border / NODATA-adjacent — else 1e30, fixed 60 rounds; the fixture
-    * converges in 36). Shared by the r29 and r33 oracles. The recursive
-    * term carries each cell's contribution to itself (offset 0,0) and to
-    * its neighbors, then one aggregate per target cell — DuckDB allows
-    * aggregates in the recursive term. Final state: `fs` at `it = 60`. */
-  private def jacobiFillCtes: String = {
-    val nr = Synth.demRef.nrows
-    val nc = Synth.demRef.ncols
-    s"""$demGridCte,
-       |dd9(dr, dc, self) AS (VALUES (0,0,1),(0,1,0),(1,1,0),(1,0,0),(1,-1,0),
-       |                             (0,-1,0),(-1,-1,0),(-1,0,0),(-1,1,0)),
-       |cells AS MATERIALIZED (
-       |  SELECT a.r, a.c, a.v,
-       |    (a.r = 0 OR a.r = ${nr - 1} OR a.c = 0 OR a.c = ${nc - 1} OR EXISTS (
-       |      SELECT 1 FROM dd9 d JOIN g n
-       |      ON n.r = a.r + d.dr AND n.c = a.c + d.dc
-       |      WHERE d.self = 0 AND n.v IS NULL)) AS drain
-       |  FROM g a WHERE a.v IS NOT NULL),
-       |fs AS (
-       |  SELECT 0 AS it, r, c, CASE WHEN drain THEN v ELSE 1e30 END AS f
-       |  FROM cells
-       |  UNION ALL
-       |  SELECT p.it + 1, t.r, t.c,
-       |    CASE WHEN t.drain THEN t.v
-       |         ELSE least(min(CASE WHEN d.self = 1 THEN p.f END),
-       |                    greatest(t.v, min(CASE WHEN d.self = 0 THEN p.f END)))
-       |    END AS f
-       |  FROM fs p JOIN dd9 d ON true
-       |  JOIN cells t ON t.r = p.r + d.dr AND t.c = p.c + d.dc
-       |  WHERE p.it < 60
-       |  GROUP BY p.it, t.r, t.c, t.v, t.drain)""".stripMargin
-  }
-
-  /** The i6 image-quality oracle (exact-corpus codes by formula; span/
-    * distinct/gradient stats + keep rule) — shared by the batch i6 gate
-    * and the streamed s7 gate, which must produce identical tables. */
-  private val i6QualitySql: String =
-      """WITH px AS (
-        |  SELECT t.i AS i, r.r AS r, c.c AS c,
-        |    (((t.i // 8) * 256 + r.r) * 31 + ((t.i % 8) * 256 + c.c) * 17) % 1000 AS q
-        |  FROM range(64) t(i), range(256) r(r), range(256) c(c)),
-        |st AS (
-        |  SELECT i, min(q) AS q_min, max(q) AS q_max,
-        |    count(DISTINCT q) AS n_distinct,
-        |    sum(CASE WHEN c < 255 THEN (CASE WHEN q >= 983 THEN 983 ELSE 17 END) ELSE 0 END
-        |      + CASE WHEN r < 255 THEN (CASE WHEN q >= 969 THEN 969 ELSE 31 END) ELSE 0 END) AS grad_l1
-        |  FROM px GROUP BY i)
-        |SELECT 'img-' || lpad(CAST(i AS VARCHAR), 8, '0') AS image_id,
-        |  CAST(q_min AS BIGINT) AS q_min, CAST(q_max AS BIGINT) AS q_max,
-        |  CAST(q_max - q_min AS BIGINT) AS q_span,
-        |  CAST(n_distinct AS BIGINT) AS n_distinct,
-        |  CAST(grad_l1 AS BIGINT) AS grad_l1,
-        |  (q_max - q_min >= 64 AND n_distinct >= 16) AS keep
-        |FROM st ORDER BY image_id""".stripMargin
-
-  /** The i4 perceptual-hash pair CTE chain (block codes by formula, bit
-    * rule, all-pairs hamming) — shared by the i4, i5 and m4 oracles. */
-  private val i4PairCtes: String =
-    """cell AS (
-      |  SELECT t.i AS i, b.b AS b,
-      |    CASE WHEN t.i > 0 AND (t.i % 167 = 0 OR t.i % 311 = 0)
-      |      THEN (t.i - 1) * 64 + b.b ELSE t.i * 64 + b.b END AS x,
-      |    CASE WHEN t.i > 0 AND t.i % 167 = 0 AND b.b < 2 + t.i // 167 THEN 128
-      |         WHEN t.i > 0 AND t.i % 311 = 0 AND b.b < 24 THEN 257
-      |         ELSE 0 END AS bump
-      |  FROM range(1024) t(i), range(64) b(b)),
-      |h AS (SELECT i, b, bump, (x * 2654435761) % 4294967296 AS h1 FROM cell),
-      |hh AS (SELECT i, b, bump,
-      |    (xor(h1, h1 // 65536) * 60493) % 4294967296 AS h3 FROM h),
-      |k AS (SELECT i, b, xor(h3, h3 // 65536) % 512 + bump AS kv FROM hh),
-      |s AS (SELECT i, sum(kv) AS tot FROM k GROUP BY 1),
-      |bits AS (SELECT k.i, k.b, CASE WHEN 64 * k.kv > s.tot THEN 1 ELSE 0 END AS bit
-      |  FROM k JOIN s ON k.i = s.i),
-      |ham AS (SELECT a.i AS ia, c.i AS ib,
-      |    sum(CASE WHEN a.bit <> c.bit THEN 1 ELSE 0 END) AS hamming
-      |  FROM bits a JOIN bits c ON a.b = c.b AND a.i < c.i
-      |  GROUP BY 1, 2)""".stripMargin
-
-  private val d3PairCtes: String =
-    """toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-      |sh AS (SELECT DISTINCT doc_id, s FROM (
-      |  SELECT doc_id,
-      |    unnest([w[i] || ' ' || w[i + 1] || ' ' || w[i + 2] for i in range(1, len(w) - 1)]) AS s
-      |  FROM toks WHERE len(w) >= 3) t),
-      |sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-      |inter AS (SELECT a.doc_id AS ia, b.doc_id AS ib, count(*) AS c
-      |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
-      |p AS (SELECT ia, ib, c, sa.sz AS sza, sb.sz AS szb FROM inter
-      |  JOIN sizes sa ON ia = sa.doc_id JOIN sizes sb ON ib = sb.doc_id
-      |  WHERE c * 10 >= 8 * (sa.sz + sb.sz - c))""".stripMargin
-
-  private def r17Sql: String = {
-    val src = graft.core.Proj.fromEpsg(27700)
-    val dst = graft.core.Proj.fromEpsg(32630)
-    val (fwdCtes, fwdOut) = ProjSql.transformCtes("fw", "ring", Seq(), "rx", "ry", src, dst)
-    val (invCtes, invOut) = ProjSql.transformCtes("pv", "px", Seq("pr", "pc"), "qx", "qy", dst, src)
-    s"""WITH ring AS (
-       |  SELECT 340760.0e0 + 770.0e0 * t1.i / 21 AS rx,
-       |         554667.0e0 + 1015.0e0 * t2.j / 21 AS ry
-       |  FROM range(22) t1(i), range(22) t2(j)
-       |  WHERE t1.i = 0 OR t1.i = 21 OR t2.j = 0 OR t2.j = 21),
-       |$fwdCtes,
-       |bbox AS (SELECT min(ox) AS xmin, max(ox) AS xmax,
-       |                min(oy) AS ymin, max(oy) AS ymax FROM $fwdOut),
-       |hdr AS (SELECT xmin,
-       |  greatest((xmax - xmin) / 154, (ymax - ymin) / 203) AS cs,
-       |  greatest(1, CAST(round((xmax - xmin) / cs) AS BIGINT)) AS w,
-       |  greatest(1, CAST(round((ymax - ymin) / cs) AS BIGINT)) AS h,
-       |  ymax - h * cs AS yll,
-       |  yll + h * cs AS top
-       |  FROM bbox),
-       |px AS (SELECT r.r AS pr, c.c AS pc,
-       |  hdr.xmin + (c.c + 0.5e0) * hdr.cs AS qx,
-       |  hdr.top - (r.r + 0.5e0) * hdr.cs AS qy
-       |  FROM hdr, range(1024) r(r), range(1024) c(c)
-       |  WHERE r.r < hdr.h AND c.c < hdr.w),
-       |$invCtes,
-       |gath AS (SELECT pr, pc,
-       |  CAST(round((555679.5e0 - oy) / 5.0e0) AS BIGINT) AS sr,
-       |  CAST(round((ox - 340762.5e0) / 5.0e0) AS BIGINT) AS sc
-       |  FROM $invOut),
-       |vals AS (SELECT pr,
-       |  CASE WHEN sr < 0 OR sr >= 203 OR sc < 0 OR sc >= 154 THEN NULL
-       |       WHEN (sr * 154 + sc) % 97 = 13 THEN NULL
-       |       ELSE ((sr * 31 + sc * 17) % 1000) / 4.0e0 END AS v
-       |  FROM gath)
-       |SELECT CAST(pr // 16 AS BIGINT) AS band,
-       |  CAST(count(v) AS BIGINT) AS n_valid, sum(v) AS sum_v
-       |FROM vals GROUP BY 1 ORDER BY 1""".stripMargin
-  }
-
-  /** Ray-casting point-in-polygon as SQL, bit-identical to
-    * RefKernel.pointInPolygon (same operand order in the cross test). */
-  private def pipSql(xs: Array[Double], ys: Array[Double]): String = {
-    val terms = (1 until xs.length).map { i =>
-      val j = i - 1
-      val (xi, yi, xj, yj) = (xs(i), ys(i), xs(j), ys(j))
-      s"(CASE WHEN (($yi > py) != ($yj > py)) AND (px < ($xj - $xi) * (py - $yi) / ($yj - $yi) + $xi) THEN 1 ELSE 0 END)"
-    }
-    s"((${terms.mkString(" + ")}) % 2 = 1)"
-  }
-
-  def oracleSql: Map[String, String] = Map(
-    "q1_lineitem_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        | sum(l_quantity) AS sum_qty,
-        | CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sum_price_cents,
-        | CAST(sum(CAST(floor(l_extendedprice * (1.0 - l_discount) * 100 + 0.5) AS BIGINT)) AS BIGINT) AS rev_cents,
-        | count(*) AS n
-        |FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q2_top_orders" ->
-      """WITH rev AS (
-        |  SELECT l_orderkey,
-        |    CAST(sum(CAST(floor(l_extendedprice * (1.0 - l_discount) * 100 + 0.5) AS BIGINT)) AS BIGINT) AS rev_cents
-        |  FROM lineitem GROUP BY 1)
-        |SELECT o.o_orderkey, c.c_name, rev.rev_cents,
-        |  epoch_ms(o.o_orderdate) AS order_epoch
-        |FROM rev JOIN orders o ON rev.l_orderkey = o.o_orderkey
-        |JOIN customer c ON o.o_custkey = c.c_custkey
-        |ORDER BY rev.rev_cents DESC, o.o_orderkey LIMIT 10""".stripMargin,
-
-    "q3_events_window" ->
-      """WITH w AS (
-        |  SELECT user_id, event_id, ts,
-        |    row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn,
-        |    lag(event_id) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_event
-        |  FROM events)
-        |SELECT user_id, CAST(rn AS INT) AS rn, event_id,
-        |  epoch_ms(ts) AS ts_epoch, prev_event
-        |FROM w WHERE rn <= 3 ORDER BY user_id, rn""".stripMargin,
-
-    "q4_sessionize" ->
-      """WITH g AS (
-        |  SELECT user_id, event_id,
-        |    epoch_ms(ts)
-        |      - lag(epoch_ms(ts))
-        |        OVER (PARTITION BY user_id ORDER BY ts, event_id) AS gap,
-        |    ts
-        |  FROM events),
-        |s AS (
-        |  SELECT user_id, event_id, ts,
-        |    CASE WHEN gap IS NULL OR gap > 1800000 THEN 1 ELSE 0 END AS new_sess
-        |  FROM g),
-        |c AS (
-        |  SELECT user_id,
-        |    CAST(sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS sess
-        |  FROM s)
-        |SELECT user_id, max(sess) AS n_sessions, count(*) AS n_events
-        |FROM c GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "r1_grid_stats" ->
-      s"""WITH g AS ($demSql)
-         |SELECT max(v) AS max_v, min(v) AS min_v, median(v) AS median_v,
-         |  CAST(count(v) AS BIGINT) AS valid_cells, sum(v) AS sum_v
-         |FROM g""".stripMargin,
-
-    // r55: the same 25 m banding + reverse-cumulative window
-    "r55_hypsometry" ->
-      s"""WITH g AS ($demSql),
-         |h AS (SELECT CAST(floor(v / 25.0) AS BIGINT) AS bucket,
-         |  CAST(count(*) AS BIGINT) AS n
-         |  FROM g WHERE v IS NOT NULL GROUP BY 1)
-         |SELECT bucket, n,
-         |  CAST(sum(n) OVER (ORDER BY bucket DESC) AS BIGINT) AS n_at_or_above
-         |FROM h ORDER BY bucket""".stripMargin,
-
-    // r56: per-level block sums from the closed form; tile code sum =
-    // sum over blocks of 64*s/4^z (integer since 4^z <= 64)
-    "r56_xyz_tiles" ->
-      """WITH px AS (
-        |  SELECT r.r AS r, c.c AS c, (r.r*31 + c.c*17) % 1000 AS v
-        |  FROM range(256) r(r), range(256) c(c)),
-        |lv AS (
-        |  SELECT z.z AS z, r // (1 << z.z) AS br, c // (1 << z.z) AS bc,
-        |    sum(v) AS s
-        |  FROM px, range(4) z(z)
-        |  GROUP BY 1, 2, 3),
-        |tl AS (
-        |  SELECT z, bc // 64 AS x, br // 64 AS y,
-        |    sum(s * (64 // (1 << (2*z)))) AS sum_code
-        |  FROM lv GROUP BY 1, 2, 3)
-        |SELECT CAST(z AS BIGINT) AS z, CAST(x AS BIGINT) AS x,
-        |  CAST(y AS BIGINT) AS y,
-        |  CAST(least(64, (256 // (1 << z)) - x * 64) AS INT) AS w,
-        |  CAST(least(64, (256 // (1 << z)) - y * 64) AS INT) AS h,
-        |  CAST(sum_code AS BIGINT) AS sum_code
-        |FROM tl ORDER BY z, y, x""".stripMargin,
-
-    // d23: quantile_cont uses the same a + f*(b-a) exact-integer
-    // interpolation as Spark's percentile
-    "d23_length_profile" ->
-      """SELECT lang, count(*) AS n,
-        |  CAST(min(n_chars) AS BIGINT) AS min_chars,
-        |  CAST(max(n_chars) AS BIGINT) AS max_chars,
-        |  quantile_cont(n_chars, 0.5) AS p50,
-        |  quantile_cont(n_chars, 0.9) AS p90,
-        |  quantile_cont(n_chars, 0.99) AS p99
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-
-    // r34: cell-center coordinates — integer header + (idx+0.5)·cellsize,
-    // exact doubles both engines.
-    "r34_to_points" -> {
-      val ref = Synth.demRef
-      s"""WITH g AS ($demSql)
-         |SELECT CAST(r AS BIGINT) AS row, CAST(c AS BIGINT) AS col,
-         |  ${ref.left}e0 + (c + 0.5e0) * ${ref.cellsize}e0 AS x,
-         |  ${ref.top}e0 - (r + 0.5e0) * ${ref.cellsize}e0 AS y, v
-         |FROM g ORDER BY row, col""".stripMargin
-    },
-
-    // r35: per-column (axis 0) / per-row (axis 1) NaN-ignoring stats;
-    // median follows the r1 rule (even-count midpoint of quarters = exact
-    // eighth).
-    "r35_axis_stats" ->
-      s"""WITH g AS ($demSql)
-         |SELECT CAST(0 AS BIGINT) AS axis, CAST(c AS BIGINT) AS idx,
-         |  CAST(count(v) AS BIGINT) AS n_valid, min(v) AS min_v,
-         |  max(v) AS max_v, median(v) AS median_v
-         |FROM g GROUP BY c
-         |UNION ALL
-         |SELECT CAST(1 AS BIGINT), CAST(r AS BIGINT),
-         |  CAST(count(v) AS BIGINT), min(v), max(v), median(v)
-         |FROM g GROUP BY r
-         |ORDER BY axis, idx""".stripMargin,
-
-    // r36: paste_on fixture — the 40x30 eighth-valued small grid lands at
-    // DEM pixel offset (row 103, col 130), clipped at the right edge;
-    // ignore_nan=true keeps the DEM where the small grid has holes.
-    "r36_paste_on" -> {
-      val p = Synth.pasteRef
-      val rowOff = Math.rint((Synth.demRef.top - p.top) / p.cellsize).toInt
-      val colOff = Math.rint((p.left - Synth.demRef.left) / p.cellsize).toInt
-      s"""WITH g AS ($demSql),
-         |s AS (SELECT (i // ${p.ncols}) AS r, (i % ${p.ncols}) AS c,
-         |  CASE WHEN ((i // ${p.ncols}) * 31 + (i % ${p.ncols})) % 41 = 5 THEN NULL
-         |       ELSE (((i // ${p.ncols}) * 13 + (i % ${p.ncols}) * 7) % 400) / 8.0 END AS v
-         |  FROM range(${p.nrows.toLong * p.ncols}) t(i)),
-         |sp AS (SELECT r + $rowOff AS r, c + $colOff AS c, v FROM s
-         |  WHERE c + $colOff < ${Synth.demRef.ncols}
-         |    AND r + $rowOff < ${Synth.demRef.nrows})
-         |SELECT CAST(g.r AS BIGINT) AS row, CAST(g.c AS BIGINT) AS col,
-         |  CASE WHEN sp.r IS NOT NULL AND sp.v IS NOT NULL THEN sp.v
-         |       ELSE g.v END AS v
-         |FROM g LEFT JOIN sp ON sp.r = g.r AND sp.c = g.c
-         |ORDER BY row, col""".stripMargin
-    },
-
-    "r2_rect_clip" -> {
-      val (r0, r1, c0, c1) = Synth.demRef.clipWindow(Synth.tutorialClip)
-      s"""WITH g AS ($demSql)
-         |SELECT CAST((r - $r0) // 16 AS BIGINT) AS band,
-         |  CAST(count(v) AS BIGINT) AS n_valid,
-         |  CAST(count(*) AS BIGINT) AS n_cells, sum(v) AS sum_v
-         |FROM g WHERE r BETWEEN $r0 AND $r1 AND c BETWEEN $c0 AND $c1
-         |GROUP BY 1 ORDER BY 1""".stripMargin
-    },
-
-    "r3_mosaic" -> {
-      val m = Synth.mosaicRef
-      val a = Synth.gridARef
-      val b = Synth.gridBRef
-      // pixel offsets of A and B inside the union grid
-      val aRowOff = ((m.top - a.top) / m.cellsize).toInt
-      val aColOff = ((a.left - m.left) / m.cellsize).toInt
-      val bRowOff = ((m.top - b.top) / m.cellsize).toInt
-      val bColOff = ((b.left - m.left) / m.cellsize).toInt
-      s"""WITH g AS (SELECT (i // ${m.ncols}) AS r, (i % ${m.ncols}) AS c
-         |  FROM range(${m.nrows.toLong * m.ncols}) t(i)),
-         |v AS (SELECT r, c,
-         |  CASE WHEN r BETWEEN $bRowOff AND ${bRowOff + b.nrows - 1}
-         |        AND c BETWEEN $bColOff AND ${bColOff + b.ncols - 1} THEN
-         |    CASE WHEN ((r - $bRowOff) * ${b.ncols} + (c - $bColOff)) % 71 = 3 THEN NULL
-         |         ELSE (((r - $bRowOff) * 5 + (c - $bColOff) * 3) % 80) / 4.0 END
-         |  WHEN r BETWEEN $aRowOff AND ${aRowOff + a.nrows - 1}
-         |        AND c BETWEEN $aColOff AND ${aColOff + a.ncols - 1} THEN
-         |    CASE WHEN ((r - $aRowOff) * ${a.ncols} + (c - $aColOff)) % 89 = 7 THEN NULL
-         |         ELSE (((r - $aRowOff) * 13 + (c - $aColOff) * 7) % 100) / 4.0 END
-         |  END AS v FROM g)
-         |SELECT CAST(r // 16 AS BIGINT) AS band,
-         |  CAST(count(v) AS BIGINT) AS n_valid, sum(v) AS sum_v
-         |FROM v GROUP BY 1 ORDER BY 1""".stripMargin
-    },
-
-    "r4_rasterize" -> {
-      val ref = Synth.demRef
-      // reverse feature order = sequential last-wins (Raster.py:330)
-      val cases = Synth.ca1Features.sortBy(-_.seq).map { f =>
-        s"WHEN ${pipSql(f.xs, f.ys)} THEN ${f.attr}"
-      }.mkString(" ")
-      s"""WITH g AS (SELECT (i // ${ref.ncols}) AS r, (i % ${ref.ncols}) AS c,
-         |  ${ref.left} + ((i % ${ref.ncols}) + 0.5) * ${ref.cellsize} AS px,
-         |  ${ref.top} - ((i // ${ref.ncols}) + 0.5) * ${ref.cellsize} AS py
-         |  FROM range(${ref.nrows.toLong * ref.ncols}) t(i)),
-         |f AS (SELECT r, c, CASE $cases END AS burn FROM g)
-         |SELECT burn, CAST(count(*) AS BIGINT) AS n,
-         |  CAST(sum(r) AS BIGINT) AS sum_row, CAST(sum(c) AS BIGINT) AS sum_col
-         |FROM f WHERE burn IS NOT NULL GROUP BY 1 ORDER BY 1""".stripMargin
-    },
-
-    // r54: the r2 clip window x the r4 burn CASE, composed with the
-    // tutorial's edit rule (dem - 2*burn under the mask); quarter-unit
-    // dyadic values make the band sums exact in any order
-    "r54_edit_dem" -> {
-      val ref = Synth.demRef
-      val (r0, r1, c0, c1) = ref.clipWindow(Synth.tutorialClip)
-      val cases = Synth.ca1Features.sortBy(-_.seq).map { f =>
-        s"WHEN ${pipSql(f.xs, f.ys)} THEN ${f.attr}"
-      }.mkString(" ")
-      s"""WITH g AS ($demSql),
-         |w AS (SELECT r, c, v,
-         |  ${ref.left} + (c + 0.5) * ${ref.cellsize} AS px,
-         |  ${ref.top} - (r + 0.5) * ${ref.cellsize} AS py
-         |  FROM g WHERE r BETWEEN $r0 AND $r1 AND c BETWEEN $c0 AND $c1),
-         |e AS (SELECT r, c, v, CASE $cases END AS burn FROM w)
-         |SELECT CAST((r - $r0) // 16 AS BIGINT) AS band,
-         |  CAST(count(*) AS BIGINT) AS n_cells,
-         |  sum(v) AS sum_v,
-         |  sum(CASE WHEN burn IS NOT NULL THEN v - burn * 2.0 ELSE v END) AS sum_edit,
-         |  CAST(count(CASE WHEN v IS NOT NULL AND burn IS NOT NULL THEN 1 END) AS BIGINT) AS n_edited
-         |FROM e GROUP BY 1 ORDER BY 1""".stripMargin
-    },
-
-    // r60: PIP footprint + brute nearest over all surviving valid cells
-    // (rank-1 by the same exact (d2, pid) key the bucketed kernel
-    // proves) + band aggregates of the repaired surface
-    "r60_remove_block" -> {
-      val ref = Synth.demRef
-      val insides = Synth.ca1Features.map(f => pipSql(f.xs, f.ys)).mkString(" OR ")
-      s"""WITH g AS ($demSql),
-         |w AS (SELECT r, c, v,
-         |  ${ref.left} + (c + 0.5) * ${ref.cellsize} AS px,
-         |  ${ref.top} - (r + 0.5) * ${ref.cellsize} AS py
-         |  FROM g),
-         |m AS (SELECT r, c, v, px, py, ($insides) AS blocked FROM w),
-         |pts AS (SELECT r * ${ref.ncols} + c AS pid, px, py, v FROM m
-         |  WHERE NOT blocked AND v IS NOT NULL),
-         |holes AS (SELECT r, c, px, py FROM m WHERE blocked),
-         |cand AS (SELECT h.r AS r, h.c AS c, p.v AS v,
-         |    row_number() OVER (PARTITION BY h.r, h.c ORDER BY
-         |      (p.px - h.px) * (p.px - h.px) + (p.py - h.py) * (p.py - h.py),
-         |      p.pid) AS rn
-         |  FROM holes h, pts p),
-         |fill AS (SELECT r, c, v FROM cand WHERE rn = 1),
-         |rep AS (SELECT m.r, m.c, m.blocked,
-         |    CASE WHEN m.blocked THEN f.v ELSE m.v END AS rv
-         |  FROM m LEFT JOIN fill f ON f.r = m.r AND f.c = m.c)
-         |SELECT CAST(r // 16 AS BIGINT) AS band,
-         |  CAST(count(CASE WHEN blocked THEN 1 END) AS BIGINT) AS n_filled,
-         |  CAST(count(rv) AS BIGINT) AS n_valid,
-         |  CAST(sum(CAST(rv * 4 AS BIGINT)) AS BIGINT) AS sum_vq
-         |FROM rep GROUP BY 1 ORDER BY 1""".stripMargin
-    },
-
-    "r5_knn" ->
-      """WITH pts AS (SELECT i AS pid,
-        |  -5.0 + ((i * 37) % 113) * 0.5 + 0.125 AS x,
-        |  ((i * 53) % 107) * 0.25 + 0.0625 AS y,
-        |  ((i * 29) % 400) / 4.0 AS v
-        |  FROM range(60) t(i)),
-        |cells AS (SELECT (i // 120) AS r, (i % 120) AS c,
-        |  -5.0 + ((i % 120) + 0.5) * 0.5 AS cx,
-        |  30.0 - ((i // 120) + 0.5) * 0.5 AS cy
-        |  FROM range(7200) t(i)),
-        |d AS (SELECT r, c, pid, v,
-        |  row_number() OVER (PARTITION BY r, c
-        |    ORDER BY (x - cx) * (x - cx) + (y - cy) * (y - cy), pid) AS rn
-        |  FROM cells, pts)
-        |SELECT r AS row, c AS col, v, pid FROM d WHERE rn = 1
-        |ORDER BY row, col""".stripMargin,
-
-    "r6_resample" ->
-      """WITH t AS (SELECT (i // 77) AS r, (i % 77) AS c FROM range(7777) t(i))
-        |SELECT r AS row, c AS col,
-        |  CASE WHEN ((2 * r + 1) * 154 + (2 * c + 1)) % 97 = 13 THEN NULL
-        |       ELSE (((2 * r + 1) * 31 + (2 * c + 1) * 17) % 1000) / 4.0 END AS v
-        |FROM t ORDER BY row, col""".stripMargin,
-
-    "r7_line2sub" ->
-      // every segment drops its last point (incl. the polyline endpoint):
-      // Raster.py:356's guard is always true between integer subscripts
-      """SELECT j AS seq, 50 - j AS row, 10 AS col FROM range(10) t(j)
-        |UNION ALL SELECT j + 10, 40 - j, 10 + j FROM range(10) t(j)
-        |UNION ALL SELECT j + 20, 30, 20 + j FROM range(40) t(j)
-        |ORDER BY seq""".stripMargin,
-
-    "e1_knn_cosine" ->
-      """WITH q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < 10),
-        |p AS (SELECT q.qid, e.vec_id AS vid,
-        |  (SELECT sum(q.qv[i + 1]::DOUBLE * e.embedding[i + 1]::DOUBLE) FROM range(64) t(i)) AS dot,
-        |  sqrt((SELECT sum(q.qv[i + 1]::DOUBLE * q.qv[i + 1]::DOUBLE) FROM range(64) t(i))) AS qn,
-        |  sqrt((SELECT sum(e.embedding[i + 1]::DOUBLE * e.embedding[i + 1]::DOUBLE) FROM range(64) t(i))) AS en
-        |  FROM q, embeddings e WHERE e.vec_id != q.qid),
-        |r AS (SELECT qid, vid,
-        |  row_number() OVER (PARTITION BY qid ORDER BY dot / (qn * en) DESC, vid) AS rank
-        |  FROM p)
-        |SELECT qid, rank, vid FROM r WHERE rank <= 5 ORDER BY qid, rank""".stripMargin,
-
-    "d3_ngram_jaccard" ->
-      s"""WITH $d3PairCtes
-        |SELECT ia, ib, CAST(c AS BIGINT) AS inter,
-        |  CAST(sza AS BIGINT) AS sza, CAST(szb AS BIGINT) AS szb
-        |FROM p ORDER BY ia, ib""".stripMargin,
-
-    "d6_langid" -> {
-      def score(lang: String): String =
-        graft.text.TextOps.langMarkers(lang)
-          .map(m => s"(length(p) - length(replace(p, '$m', ''))) / ${m.length}")
-          .mkString("CAST(", " + ", " AS BIGINT)")
-      s"""WITH s AS (SELECT doc_id, ' ' || text || ' ' AS p FROM documents),
-         |sc AS (SELECT doc_id, ${score("en")} AS en, ${score("de")} AS de,
-         |  ${score("es")} AS es, ${score("fr")} AS fr FROM s)
-         |SELECT doc_id,
-         |  CASE WHEN greatest(en, de, es, fr) = 0 THEN 'und'
-         |       WHEN en = greatest(en, de, es, fr) THEN 'en'
-         |       WHEN de = greatest(en, de, es, fr) THEN 'de'
-         |       WHEN es = greatest(en, de, es, fr) THEN 'es'
-         |       ELSE 'fr' END AS pred_lang,
-         |  en AS en_score
-         |FROM sc ORDER BY doc_id""".stripMargin
-    },
-
-    // d5: full SimHash recomputation in DuckDB — FNV-1a 64 per token via a
-    // HUGEINT wrapping-multiply fold, bit-majority vote, then the exact
-    // all-pairs hamming join (the ORACLE side may be quadratic; the engine
-    // side is the banded join). Constants: 2^64, 2^63, FNV prime/offset.
-    "d5_simhash" -> {
-      val P64 = "CAST(18446744073709551616 AS HUGEINT)" // 2^64
-      val P63 = "CAST(9223372036854775808 AS HUGEINT)" // 2^63
-      // (h XOR c) * FNV_PRIME mod 2^64, back to signed BIGINT
-      def u = s"(CASE WHEN xor(h, c) < 0 THEN CAST(xor(h, c) AS HUGEINT) + $P64 ELSE CAST(xor(h, c) AS HUGEINT) END)"
-      def m = s"(($u * 1099511628211) % $P64)"
-      s"""WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM documents),
-         |th AS (SELECT doc_id,
-         |  list_reduce(
-         |    list_prepend(CAST(-3750763034362895579 AS BIGINT),
-         |      list_transform(string_split_regex(t, ''), c -> CAST(ord(c) AS BIGINT))),
-         |    (h, c) -> CAST(CASE WHEN $m >= $P63 THEN $m - $P64 ELSE $m END AS BIGINT)
-         |  ) AS h FROM tok WHERE t <> ''),
-         |bits AS (SELECT b, CASE WHEN b = 63 THEN CAST(-9223372036854775808 AS BIGINT)
-         |  ELSE CAST(1 AS BIGINT) << CAST(b AS INTEGER) END AS mask FROM range(64) r(b)),
-         |cnt AS (SELECT th.doc_id, bits.mask,
-         |  SUM(CASE WHEN (th.h & bits.mask) <> 0 THEN 1 ELSE 0 END) AS s, COUNT(*) AS t
-         |  FROM th CROSS JOIN bits GROUP BY 1, 2),
-         |sh AS (SELECT doc_id, CAST(SUM(CASE WHEN 2 * s >= t THEN mask ELSE 0 END) AS BIGINT) AS simhash
-         |  FROM cnt GROUP BY 1)
-         |SELECT a.doc_id AS ia, b.doc_id AS ib,
-         |  CAST(bit_count(xor(a.simhash, b.simhash)) AS INTEGER) AS hamming
-         |FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-         |WHERE bit_count(xor(a.simhash, b.simhash)) <= 6
-         |ORDER BY ia, ib""".stripMargin
-    },
-
-    // d7: rolling polynomial fingerprint mod 2^61-1; space-run collapse ==
-    // the kernel's skip-repeated-space rule, chars are ASCII so ord() ==
-    // the JVM's UTF-16 unit
-    "d7_fingerprint" ->
-      """SELECT doc_id,
-        |  CAST(list_reduce(
-        |    list_prepend(CAST(0 AS HUGEINT),
-        |      list_transform(string_split_regex(regexp_replace(text, ' +', ' ', 'g'), ''),
-        |        c -> CAST(ord(c) AS HUGEINT))),
-        |    (h, ch) -> (h * 131 + ch) % CAST(2305843009213693951 AS HUGEINT)
-        |  ) AS BIGINT) AS fp
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // d8: exact all-pairs cosine over the same planted-twin augmentation
-    // (the ORACLE side may be quadratic; the engine side is the banded
-    // sign-LSH join). Threshold margins make the float path irrelevant to
-    // the integer pair set.
-    "d8_embed_neardup" ->
-      """WITH base AS (SELECT vec_id AS vid, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-        |tw AS (SELECT a.vec_id + 1000000 AS vid,
-        |  list_transform(range(1, 65), i -> 0.9 * a.embedding[i]::DOUBLE + 0.1 * b.embedding[i]::DOUBLE) AS v
-        |  FROM embeddings a JOIN embeddings b ON b.vec_id = a.vec_id + 50 WHERE a.vec_id < 50),
-        |aug AS (SELECT * FROM base UNION ALL SELECT * FROM tw)
-        |SELECT a.vid AS ia, b.vid AS ib
-        |FROM aug a JOIN aug b ON a.vid < b.vid
-        |WHERE list_cosine_similarity(a.v, b.v) >= 0.95
-        |ORDER BY ia, ib""".stripMargin,
-
-    "r8_gradient" -> {
-      val nc = Synth.demRef.ncols
-      def v(rr: String, cc: String): String =
-        s"((($rr) * 31 + ($cc) * 17) % 1000) / 4.0"
-      def hole(rr: String, cc: String): String =
-        s"(($rr) * $nc + ($cc)) % 97 = 13"
-      val n = Seq( // 3x3 neighborhood in (dr, dc)
-        ("tl", -1, -1), ("tp", -1, 0), ("tr", -1, 1),
-        ("l", 0, -1), ("rt", 0, 1),
-        ("bl", 1, -1), ("bt", 1, 0), ("br", 1, 1))
-      val holes = (n.map { case (_, dr, dc) => hole(s"r + $dr", s"c + $dc") } :+
-        hole("r", "c")).mkString(" OR ")
-      val defs = n.map { case (nm, dr, dc) => s"${v(s"r + $dr", s"c + $dc")} AS $nm" }
-        .mkString(",\n  ")
-      s"""WITH g AS (SELECT (i // $nc) AS r, (i % $nc) AS c
-         |  FROM range(${Synth.demRef.nrows.toLong * nc}) t(i)
-         |  WHERE i % 37 = 5
-         |    AND (i // $nc) BETWEEN 1 AND ${Synth.demRef.nrows - 2}
-         |    AND (i % $nc) BETWEEN 1 AND ${nc - 2}
-         |    AND NOT ($holes)),
-         |nb AS (SELECT r, c,
-         |  $defs FROM g)
-         |SELECT r AS row, c AS col,
-         |  ((tr + 2 * rt + br) - (tl + 2 * l + bl)) / (8 * 5.0) AS gx,
-         |  ((tl + 2 * tp + tr) - (bl + 2 * bt + br)) / (8 * 5.0) AS gy
-         |FROM nb ORDER BY row, col""".stripMargin
-    },
-
-    // r43: brute 5x5 offset join over the valid-cell table (exact
-    // integers; q = 4*v = (r*31+c*17) % 1000 is the pre-division value)
-    "r43_focal_stats" -> {
-      val nc = Synth.demRef.ncols
-      val n = Synth.demRef.nrows.toLong * nc
-      s"""WITH g AS (SELECT (i // $nc) AS r, (i % $nc) AS c FROM range($n) t(i)),
-         |vals AS (SELECT r, c, (r * 31 + c * 17) % 1000 AS q FROM g
-         |  WHERE NOT ((r * $nc + c) % 97 = 13))
-         |SELECT g.r AS row, g.c AS col,
-         |  CAST(count(*) AS BIGINT) AS n,
-         |  CAST(sum(v.q) AS BIGINT) AS sum_q
-         |FROM g JOIN vals v
-         |  ON v.r BETWEEN g.r - 2 AND g.r + 2
-         | AND v.c BETWEEN g.c - 2 AND g.c + 2
-         |GROUP BY 1, 2 ORDER BY row, col""".stripMargin
-    },
-
-    // r50: the r7-proven closed-form walk + dem values + running step
-    // counts (diagonal iff both coordinates change)
-    "r50_xsection" -> {
-      val nc = Synth.demRef.ncols
-      s"""WITH walk AS (
-         |  SELECT CAST(0 AS BIGINT) AS line_id, j AS seq, 50 - j AS r, 10 AS c FROM range(10) t(j)
-         |  UNION ALL SELECT 0, j + 10, 40 - j, 10 + j FROM range(10) t(j)
-         |  UNION ALL SELECT 0, j + 20, 30, 20 + j FROM range(40) t(j)),
-         |st AS (
-         |  SELECT line_id, seq, r, c,
-         |    lag(r) OVER (PARTITION BY line_id ORDER BY seq) AS pr,
-         |    lag(c) OVER (PARTITION BY line_id ORDER BY seq) AS pc
-         |  FROM walk),
-         |sd AS (
-         |  SELECT line_id, seq, r, c,
-         |    CASE WHEN pr IS NULL THEN 0
-         |         WHEN r <> pr AND c <> pc THEN 1 ELSE 0 END AS is_d,
-         |    CASE WHEN pr IS NULL THEN 0
-         |         WHEN r <> pr AND c <> pc THEN 0 ELSE 1 END AS is_c
-         |  FROM st)
-         |SELECT line_id, seq, CAST(r AS BIGINT) AS row, CAST(c AS BIGINT) AS col,
-         |  CASE WHEN (r * $nc + c) % 97 = 13 THEN NULL
-         |       ELSE ((r * 31 + c * 17) % 1000) / 4.0 END AS v,
-         |  CAST(sum(is_c) OVER (PARTITION BY line_id ORDER BY seq
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS ncard,
-         |  CAST(sum(is_d) OVER (PARTITION BY line_id ORDER BY seq
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS ndiag
-         |FROM sd ORDER BY seq""".stripMargin
-    },
-
-    // r49: the same quartic scatter as a distance-bounded offset join
-    "r49_kde" -> {
-      val nc = Synth.demRef.ncols
-      val n = Synth.demRef.nrows.toLong * nc
-      s"""WITH g AS (SELECT (i // $nc) AS r, (i % $nc) AS c FROM range($n) t(i)),
-         |vals AS (SELECT r, c, (r * 31 + c * 17) % 1000 AS q FROM g
-         |  WHERE NOT ((r * $nc + c) % 97 = 13)),
-         |pts AS (SELECT r, c FROM vals WHERE q % 61 = 7)
-         |SELECT g.r AS row, g.c AS col,
-         |  CAST(count(*) AS BIGINT) AS n_pts,
-         |  CAST(sum((64 - ((g.r - p.r) * (g.r - p.r) + (g.c - p.c) * (g.c - p.c)))
-         |         * (64 - ((g.r - p.r) * (g.r - p.r) + (g.c - p.c) * (g.c - p.c)))) AS BIGINT) AS density
-         |FROM g JOIN pts p
-         |  ON (g.r - p.r) * (g.r - p.r) + (g.c - p.c) * (g.c - p.c) <= 64
-         | AND p.r BETWEEN g.r - 8 AND g.r + 8
-         | AND p.c BETWEEN g.c - 8 AND g.c + 8
-         |GROUP BY 1, 2 ORDER BY row, col""".stripMargin
-    },
-
-    // r46: per-level block aggregation of the base grid — equal to the
-    // engine's incremental level chain because Long sums are associative
-    "r46_pyramid" -> {
-      val nc = Synth.demRef.ncols
-      val n = Synth.demRef.nrows.toLong * nc
-      val lvls = (1 to 3).map { l =>
-        s"""SELECT CAST($l AS BIGINT) AS level,
-           |  r // ${1 << l} AS row, c // ${1 << l} AS col,
-           |  CAST(count(*) AS BIGINT) AS n, CAST(sum(q) AS BIGINT) AS sum_q
-           |FROM vals GROUP BY 2, 3""".stripMargin
-      }.mkString("\nUNION ALL\n")
-      s"""WITH g AS (SELECT (i // $nc) AS r, (i % $nc) AS c FROM range($n) t(i)),
-         |vals AS (SELECT r, c, (r * 31 + c * 17) % 1000 AS q FROM g
-         |  WHERE NOT ((r * $nc + c) % 97 = 13))
-         |$lvls
-         |ORDER BY level, row, col""".stripMargin
-    },
-
-    // r47: brute 5x5 offset join + SQL median over exact integers
-    "r47_focal_median" -> {
-      val nc = Synth.demRef.ncols
-      val n = Synth.demRef.nrows.toLong * nc
-      s"""WITH g AS (SELECT (i // $nc) AS r, (i % $nc) AS c FROM range($n) t(i)),
-         |vals AS (SELECT r, c, (r * 31 + c * 17) % 1000 AS q FROM g
-         |  WHERE NOT ((r * $nc + c) % 97 = 13))
-         |SELECT g.r AS row, g.c AS col, median(v.q) AS med_q
-         |FROM g JOIN vals v
-         |  ON v.r BETWEEN g.r - 2 AND g.r + 2
-         | AND v.c BETWEEN g.c - 2 AND g.c + 2
-         |GROUP BY 1, 2 ORDER BY row, col""".stripMargin
-    },
-
-    // r45: Jacobi relaxation of the cost-distance fixpoint (bounded
-    // iteration count, same discipline as r29's fill oracle) — per-edge
-    // weights are the identical dyadic doubles the engine sums, so min()
-    // over exact values hash-matches.
-    "r45_cost_distance" -> {
-      val nc = Synth.demRef.ncols
-      val n = Synth.demRef.nrows.toLong * nc
-      val iters = 120
-      s"""WITH RECURSIVE gg AS (SELECT (i // $nc) AS r, (i % $nc) AS c FROM range($n) t(i)),
-         |vals AS MATERIALIZED (SELECT r, c, ((r * 31 + c * 17) % 1000) / 4.0 AS q FROM gg
-         |  WHERE NOT ((r * $nc + c) % 97 = 13)),
-         |dd9(dr, dc, wgt) AS (VALUES (0,0,0),(0,1,10),(1,1,14),(1,0,10),(1,-1,14),
-         |                           (0,-1,10),(-1,-1,14),(-1,0,10),(-1,1,14)),
-         |cd AS (
-         |  SELECT 0 AS it, r, c, q, CASE WHEN q >= 240.0 THEN 0.0 ELSE 1e30 END AS d
-         |  FROM vals
-         |  UNION ALL
-         |  SELECT p.it + 1, t.r, t.c, t.q,
-         |    CASE WHEN t.q >= 240.0 THEN 0.0
-         |         ELSE least(min(CASE WHEN d.wgt = 0 THEN p.d END),
-         |                    min(CASE WHEN d.wgt > 0 THEN p.d + (p.q + t.q) * d.wgt END))
-         |    END AS d
-         |  FROM cd p JOIN dd9 d ON true
-         |  JOIN vals t ON t.r = p.r + d.dr AND t.c = p.c + d.dc
-         |  WHERE p.it < $iters
-         |  GROUP BY p.it, t.r, t.c, t.q)
-         |SELECT CAST(r AS BIGINT) AS row, CAST(c AS BIGINT) AS col, d AS dist
-         |FROM cd WHERE it = $iters AND d < 1e30 ORDER BY row, col""".stripMargin
-    },
-
-    // r52: offset join over the classed cells + per-class counts + the
-    // (n DESC, cls ASC) argmax — the engine's exact tie-break replicated
-    "r52_focal_majority" -> {
-      val nc = Synth.demRef.ncols
-      val n = Synth.demRef.nrows.toLong * nc
-      s"""WITH g AS (SELECT (i // $nc) AS r, (i % $nc) AS c FROM range($n) t(i)),
-         |vv AS (SELECT r, c, CASE WHEN (r * $nc + c) % 97 = 13 THEN NULL
-         |    ELSE ((r * 31 + c * 17) % 1000) / 4.0 END AS v FROM g),
-         |cls AS (SELECT r, c, CASE WHEN v < 100 THEN 1 WHEN v < 150 THEN 2
-         |    WHEN v < 200 THEN 3 ELSE 4 END AS cl
-         |  FROM vv WHERE v IS NOT NULL AND v >= 50),
-         |win AS (
-         |  SELECT g.r AS row, g.c AS col, x.cl, count(*) AS n
-         |  FROM g JOIN cls x
-         |    ON x.r BETWEEN g.r - 2 AND g.r + 2
-         |   AND x.c BETWEEN g.c - 2 AND g.c + 2
-         |  GROUP BY 1, 2, 3),
-         |best AS (SELECT row, col, cl, n,
-         |  row_number() OVER (PARTITION BY row, col ORDER BY n DESC, cl ASC) AS rn
-         |  FROM win)
-         |SELECT row, col, CAST(cl AS BIGINT) AS mode_class,
-         |  CAST(n AS BIGINT) AS n_mode
-         |FROM best WHERE rn = 1 ORDER BY row, col""".stripMargin
-    },
-
-    // r53: the recursive D8 walk (acc) joined to the closed-form Horn
-    // gradient (r8's CTE shape), composed with the exact op order of the
-    // engine: sca = acc*cs, slope = sqrt(gx*gx + gy*gy), spi = sca*slope,
-    // twi_arg = sca/slope — each a single correctly-rounded IEEE op
-    "r53_twi" -> {
-      val nc = Synth.demRef.ncols
-      def v(rr: String, cc: String): String =
-        s"((($rr) * 31 + ($cc) * 17) % 1000) / 4.0"
-      def hole(rr: String, cc: String): String =
-        s"(($rr) * $nc + ($cc)) % 97 = 13"
-      val nbr = Seq(
-        ("tl", -1, -1), ("tp", -1, 0), ("tr", -1, 1),
-        ("l", 0, -1), ("rt", 0, 1),
-        ("bl", 1, -1), ("bt", 1, 0), ("br", 1, 1))
-      val holes = (nbr.map { case (_, dr, dc) => hole(s"gg.r + $dr", s"gg.c + $dc") } :+
-        hole("gg.r", "gg.c")).mkString(" OR ")
-      val defs = nbr.map { case (nm, dr, dc) => s"${v(s"gg.r + $dr", s"gg.c + $dc")} AS $nm" }
-        .mkString(",\n  ")
-      s"""WITH RECURSIVE $d8WalkCtes,
-         |acc AS (SELECT r, c, CAST(count(*) AS DOUBLE) AS acc
-         |  FROM walk GROUP BY 1, 2),
-         |intr AS (SELECT gg.r, gg.c, $defs
-         |  FROM g gg
-         |  WHERE gg.r BETWEEN 1 AND ${Synth.demRef.nrows - 2}
-         |    AND gg.c BETWEEN 1 AND ${nc - 2}
-         |    AND NOT ($holes)),
-         |grad AS (SELECT r, c,
-         |  ((tr + 2 * rt + br) - (tl + 2 * l + bl)) / (8 * 5.0) AS gx,
-         |  ((tl + 2 * tp + tr) - (bl + 2 * bt + br)) / (8 * 5.0) AS gy
-         |  FROM intr),
-         |tw AS (SELECT a.r, a.c,
-         |  a.acc * 5.0 AS sca,
-         |  sqrt(gd.gx * gd.gx + gd.gy * gd.gy) AS slope
-         |  FROM acc a JOIN grad gd ON gd.r = a.r AND gd.c = a.c)
-         |SELECT CAST(r AS BIGINT) AS row, CAST(c AS BIGINT) AS col,
-         |  sca, slope, sca * slope AS spi,
-         |  CASE WHEN slope <> 0 THEN sca / slope END AS twi_arg
-         |FROM tw WHERE (r * $nc + c) % 5 = 1 ORDER BY row, col""".stripMargin
-    },
-
-    // r44: brute 7x7 offset join, min/max over valid neighbors
-    "r44_focal_extrema" -> {
-      val nc = Synth.demRef.ncols
-      val n = Synth.demRef.nrows.toLong * nc
-      s"""WITH g AS (SELECT (i // $nc) AS r, (i % $nc) AS c FROM range($n) t(i)),
-         |vals AS (SELECT r, c, (r * 31 + c * 17) % 1000 AS q FROM g
-         |  WHERE NOT ((r * $nc + c) % 97 = 13))
-         |SELECT g.r AS row, g.c AS col,
-         |  CAST(min(v.q) AS BIGINT) AS min_q,
-         |  CAST(max(v.q) AS BIGINT) AS max_q
-         |FROM g JOIN vals v
-         |  ON v.r BETWEEN g.r - 3 AND g.r + 3
-         | AND v.c BETWEEN g.c - 3 AND g.c + 3
-         |GROUP BY 1, 2 ORDER BY row, col""".stripMargin
-    },
-
-    // r42: brute min over the source cross join (exact integers)
-    "r42_distance_transform" -> {
-      val nc = Synth.demRef.ncols
-      val n = Synth.demRef.nrows.toLong * nc
-      s"""WITH g AS (SELECT (i // $nc) AS r, (i % $nc) AS c FROM range($n) t(i)),
-         |vv AS (SELECT r, c, CASE WHEN (r * $nc + c) % 97 = 13 THEN NULL
-         |    ELSE ((r * 31 + c * 17) % 1000) / 4.0 END AS v FROM g),
-         |src AS (SELECT r, c FROM vv WHERE v >= 240)
-         |SELECT g.r AS row, g.c AS col,
-         |  CAST(min((g.r - s.r) * (g.r - s.r) + (g.c - s.c) * (g.c - s.c)) AS BIGINT) AS dist2
-         |FROM g CROSS JOIN src s GROUP BY 1, 2 ORDER BY row, col""".stripMargin
-    },
-
-    // r41: the full R3 viewshed replicated — same DDA rounding, same
-    // cross-multiplied slope rule, NaN-transparent intermediates
-    "r41_viewshed" -> {
-      val nc = Synth.demRef.ncols
-      val nr = Synth.demRef.nrows
-      def v(rr: String, cc: String): String =
-        s"((($rr) * 31 + ($cc) * 17) % 1000) / 4.0"
-      def hole(rr: String, cc: String): String =
-        s"(($rr) * $nc + ($cc)) % 97 = 13"
-      s"""WITH obs AS (SELECT * FROM (VALUES (0, 60, 40), (1, 150, 100), (2, 30, 120)) o(oid, orr, occ)),
-         |tgt AS (
-         |  SELECT o.oid, o.orr, o.occ, o.orr + dr.d AS r, o.occ + dc.d AS c,
-         |    dr.d AS dr, dc.d AS dc,
-         |    greatest(abs(dr.d), abs(dc.d)) AS n,
-         |    sqrt(CAST(dr.d * dr.d + dc.d * dc.d AS DOUBLE)) AS dt
-         |  FROM obs o, range(-24, 25) dr(d), range(-24, 25) dc(d)
-         |  WHERE (dr.d <> 0 OR dc.d <> 0) AND dr.d * dr.d + dc.d * dc.d <= 576
-         |    AND o.orr + dr.d BETWEEN 0 AND ${nr - 1}
-         |    AND o.occ + dc.d BETWEEN 0 AND ${nc - 1}
-         |    AND NOT ${hole("o.orr + dr.d", "o.occ + dc.d")}),
-         |stp AS (
-         |  SELECT t.*,
-         |    CAST(floor(t.orr + (k.k * t.dr) / CAST(t.n AS DOUBLE) + 0.5) AS INT) AS pr,
-         |    CAST(floor(t.occ + (k.k * t.dc) / CAST(t.n AS DOUBLE) + 0.5) AS INT) AS pc
-         |  FROM tgt t JOIN range(1, 25) k(k) ON k.k < t.n),
-         |blk AS (
-         |  SELECT oid, r, c, bool_or(
-         |      (${v("pr", "pc")} - (${v("orr", "occ")} + 10.0)) * dt >=
-         |      (${v("r", "c")} - (${v("orr", "occ")} + 10.0)) *
-         |        sqrt(CAST((pr - orr) * (pr - orr) + (pc - occ) * (pc - occ) AS DOUBLE)))
-         |    FILTER (WHERE NOT ((pr = orr AND pc = occ) OR (pr = r AND pc = c))
-         |      AND NOT ${hole("pr", "pc")}) AS blocked
-         |  FROM stp GROUP BY 1, 2, 3)
-         |SELECT CAST(t.oid AS BIGINT) AS oid, CAST(t.r AS BIGINT) AS row, CAST(t.c AS BIGINT) AS col,
-         |  coalesce(b.blocked, FALSE) = FALSE AS visible
-         |FROM tgt t LEFT JOIN blk b ON t.oid = b.oid AND t.r = b.r AND t.c = b.c
-         |ORDER BY oid, row, col""".stripMargin
-    },
-
-    // r39: the ZT coefficients and curvatures spelled in the kernel's
-    // exact textual order — every op is a correctly-rounded IEEE double
-    // op on identical operands, so the hash is bit-exact
-    "r39_curvature" -> {
-      val nc = Synth.demRef.ncols
-      def v(rr: String, cc: String): String =
-        s"((($rr) * 31 + ($cc) * 17) % 1000) / 4.0"
-      def hole(rr: String, cc: String): String =
-        s"(($rr) * $nc + ($cc)) % 97 = 13"
-      val n = Seq(
-        ("tl", -1, -1), ("tp", -1, 0), ("tr", -1, 1),
-        ("l", 0, -1), ("z", 0, 0), ("rt", 0, 1),
-        ("bl", 1, -1), ("bt", 1, 0), ("br", 1, 1))
-      val holes = n.map { case (_, dr, dc) => hole(s"r + $dr", s"c + $dc") }
-        .mkString(" OR ")
-      val defs = n.map { case (nm, dr, dc) => s"${v(s"r + $dr", s"c + $dc")} AS $nm" }
-        .mkString(",\n  ")
-      s"""WITH g AS (SELECT (i // $nc) AS r, (i % $nc) AS c
-         |  FROM range(${Synth.demRef.nrows.toLong * nc}) t(i)
-         |  WHERE i % 29 = 3
-         |    AND (i // $nc) BETWEEN 1 AND ${Synth.demRef.nrows - 2}
-         |    AND (i % $nc) BETWEEN 1 AND ${nc - 2}
-         |    AND NOT ($holes)),
-         |nb AS (SELECT r, c,
-         |  $defs FROM g),
-         |co AS (SELECT r, c,
-         |  ((l + rt) / 2 - z) / (5.0 * 5.0) AS dd,
-         |  ((tp + bt) / 2 - z) / (5.0 * 5.0) AS ee,
-         |  (-tl + tr + bl - br) / (4 * 5.0 * 5.0) AS ff,
-         |  (-l + rt) / (2 * 5.0) AS gg,
-         |  (tp - bt) / (2 * 5.0) AS hh
-         |  FROM nb)
-         |SELECT r AS row, c AS col,
-         |  -2 * (dd + ee) AS curv,
-         |  CASE WHEN gg * gg + hh * hh = 0 THEN 0.0
-         |    ELSE 2 * (dd * gg * gg + ee * hh * hh + ff * gg * hh) / (gg * gg + hh * hh) END AS prof,
-         |  CASE WHEN gg * gg + hh * hh = 0 THEN 0.0
-         |    ELSE -2 * (dd * hh * hh + ee * gg * gg - ff * gg * hh) / (gg * gg + hh * hh) END AS plan
-         |FROM co ORDER BY row, col""".stripMargin
-    },
-
-    // r40: Horn gradient -> tan^2 slope + 8-sector aspect; sector
-    // boundaries via the shared tan(pi/8) double literal, downslope
-    // direction = -gradient; transcendental-free like r8/r39
-    "r40_aspect" -> {
-      val nc = Synth.demRef.ncols
-      def v(rr: String, cc: String): String =
-        s"((($rr) * 31 + ($cc) * 17) % 1000) / 4.0"
-      def hole(rr: String, cc: String): String =
-        s"(($rr) * $nc + ($cc)) % 97 = 13"
-      val n = Seq(
-        ("tl", -1, -1), ("tp", -1, 0), ("tr", -1, 1),
-        ("l", 0, -1), ("rt", 0, 1),
-        ("bl", 1, -1), ("bt", 1, 0), ("br", 1, 1))
-      val holes = (n.map { case (_, dr, dc) => hole(s"r + $dr", s"c + $dc") } :+
-        hole("r", "c")).mkString(" OR ")
-      val defs = n.map { case (nm, dr, dc) => s"${v(s"r + $dr", s"c + $dc")} AS $nm" }
-        .mkString(",\n  ")
-      s"""WITH g AS (SELECT (i // $nc) AS r, (i % $nc) AS c
-         |  FROM range(${Synth.demRef.nrows.toLong * nc}) t(i)
-         |  WHERE i % 29 = 3
-         |    AND (i // $nc) BETWEEN 1 AND ${Synth.demRef.nrows - 2}
-         |    AND (i % $nc) BETWEEN 1 AND ${nc - 2}
-         |    AND NOT ($holes)),
-         |nb AS (SELECT r, c,
-         |  $defs FROM g),
-         |gr AS (SELECT r, c,
-         |  ((tr + 2 * rt + br) - (tl + 2 * l + bl)) / (8 * 5.0) AS gx,
-         |  ((tl + 2 * tp + tr) - (bl + 2 * bt + br)) / (8 * 5.0) AS gy
-         |  FROM nb),
-         |oc AS (SELECT r, c, gx, gy,
-         |  CASE WHEN gx = 0 AND gy = 0 THEN -1
-         |    WHEN abs(-gy) <= abs(-gx) * 0.4142135623730951 THEN
-         |      CASE WHEN -gx > 0 THEN 2 ELSE 6 END
-         |    WHEN abs(-gx) <= abs(-gy) * 0.4142135623730951 THEN
-         |      CASE WHEN -gy > 0 THEN 0 ELSE 4 END
-         |    ELSE CASE WHEN -gy > 0 THEN CASE WHEN -gx > 0 THEN 1 ELSE 7 END
-         |      ELSE CASE WHEN -gx > 0 THEN 3 ELSE 5 END END
-         |  END AS octant
-         |  FROM gr)
-         |SELECT r AS row, c AS col, gx * gx + gy * gy AS tan2_slope,
-         |  CAST(octant AS BIGINT) AS octant,
-         |  CASE octant WHEN -1 THEN 'FLAT' WHEN 0 THEN 'N' WHEN 1 THEN 'NE'
-         |    WHEN 2 THEN 'E' WHEN 3 THEN 'SE' WHEN 4 THEN 'S' WHEN 5 THEN 'SW'
-         |    WHEN 6 THEN 'W' ELSE 'NW' END AS compass
-         |FROM oc ORDER BY row, col""".stripMargin
-    },
-
-    "r9_zipjoin" -> {
-      val a = Synth.gridARef
-      s"""WITH g AS (SELECT (i // ${a.ncols}) AS r, (i % ${a.ncols}) AS c FROM range(${a.nrows.toLong * a.ncols}) t(i)),
-         |vals AS (SELECT r, c,
-         |  CASE WHEN (r * ${a.ncols} + c) % 89 = 7 THEN NULL
-         |       ELSE ((r * 13 + c * 7) % 100) / 4.0 END AS v,
-         |  CASE WHEN (r * ${Synth.gridBRef.ncols} + c) % 71 = 3 THEN NULL
-         |       ELSE ((r * 5 + c * 3) % 80) / 4.0 END AS u
-         |  FROM g)
-         |SELECT CAST(r // 16 AS BIGINT) AS band,
-         |  CAST(count(v * u) AS BIGINT) AS n_valid, sum(v * u) AS sum_uv
-         |FROM vals GROUP BY 1 ORDER BY 1""".stripMargin
-    },
-
-    // r48: the same normalized difference in SQL — identical dyadic
-    // operands, one correctly-rounded division, NULLIF zero guard
-    "r48_normdiff" -> {
-      val a = Synth.gridARef
-      s"""WITH g AS (SELECT (i // ${a.ncols}) AS r, (i % ${a.ncols}) AS c FROM range(${a.nrows.toLong * a.ncols}) t(i)),
-         |vals AS (SELECT r, c,
-         |  CASE WHEN (r * ${a.ncols} + c) % 89 = 7 THEN NULL
-         |       ELSE ((r * 13 + c * 7) % 100) / 4.0 END AS v,
-         |  CASE WHEN (r * ${Synth.gridBRef.ncols} + c) % 71 = 3 THEN NULL
-         |       ELSE ((r * 5 + c * 3) % 80) / 4.0 END AS u
-         |  FROM g)
-         |SELECT CAST(r AS BIGINT) AS row, CAST(c AS BIGINT) AS col,
-         |  (v - u) / NULLIF(v + u, 0.0) AS nd
-         |FROM vals
-         |WHERE v IS NOT NULL AND u IS NOT NULL AND (r * ${a.ncols} + c) % 7 = 2
-         |ORDER BY row, col""".stripMargin
-    },
-
-    "r11_bilinear" -> {
-      val nc = Synth.demRef.ncols
-      def v(rr: String, cc: String): String =
-        s"(CASE WHEN (($rr) * $nc + ($cc)) % 97 = 13 THEN NULL ELSE ((($rr) * 31 + ($cc) * 17) % 1000) / 4.0 END)"
-      // target (r, c) reads source corners (2r+1, 2c)..(2r+2, 2c+1) with
-      // dr = 0.25, dc = 0.75 (exact by the +1.25m offset construction);
-      // formula order mirrors the kernel exactly
-      s"""WITH t AS (SELECT (i // 77) AS r, (i % 77) AS c FROM range(7777) t(i))
-         |SELECT r AS row, c AS col,
-         |  (1 - 0.25) * ((1 - 0.75) * ${v("2*r+1", "2*c")} + 0.75 * ${v("2*r+1", "2*c+1")})
-         |    + 0.25 * ((1 - 0.75) * ${v("2*r+2", "2*c")} + 0.75 * ${v("2*r+2", "2*c+1")}) AS v
-         |FROM t ORDER BY row, col""".stripMargin
-    },
-
-    "r12_clip_polygon" -> {
-      val ref = Synth.demRef
-      val insides = Synth.ca1Features.map(f => pipSql(f.xs, f.ys)).mkString(" OR ")
-      s"""WITH g AS (SELECT (i // ${ref.ncols}) AS r, (i % ${ref.ncols}) AS c,
-         |  CASE WHEN (i % 97) = 13 THEN NULL
-         |       ELSE (((i // ${ref.ncols}) * 31 + (i % ${ref.ncols}) * 17) % 1000) / 4.0 END AS v,
-         |  ${ref.left} + ((i % ${ref.ncols}) + 0.5) * ${ref.cellsize} AS px,
-         |  ${ref.top} - ((i // ${ref.ncols}) + 0.5) * ${ref.cellsize} AS py
-         |  FROM range(${ref.nrows.toLong * ref.ncols}) t(i))
-         |SELECT CAST(r // 16 AS BIGINT) AS band,
-         |  CAST(count(*) AS BIGINT) AS n_valid, sum(v) AS sum_v
-         |FROM g WHERE v IS NOT NULL AND ($insides)
-         |GROUP BY 1 ORDER BY 1""".stripMargin
-    },
-
-    "r13_classify" ->
-      s"""WITH g AS ($demSql)
-         |SELECT CASE WHEN v IS NULL OR v < 50 THEN NULL
-         |            WHEN v < 100 THEN 1.0 WHEN v < 150 THEN 2.0
-         |            WHEN v < 200 THEN 3.0 ELSE 4.0 END AS class,
-         |  CAST(count(*) AS BIGINT) AS n
-         |FROM g GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "a1_audio_features" ->
-      """WITH s AS (SELECT (i // 1000) AS clip, (i % 1000) AS idx,
-        |  ((i // 1000) * 7 + (i % 1000) * 31) % 2001 - 1000 AS v
-        |  FROM range(100000) t(i)),
-        |lagd AS (SELECT clip, idx // 250 AS win, v,
-        |  lag(v) OVER (PARTITION BY clip, idx // 250 ORDER BY idx) AS prev
-        |  FROM s)
-        |SELECT clip AS clip_id, CAST(win AS BIGINT) AS win,
-        |  CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(v * v) AS BIGINT) AS sum_sq,
-        |  CAST(sum(CASE WHEN prev IS NOT NULL AND ((v < 0) != (prev < 0))
-        |           THEN 1 ELSE 0 END) AS BIGINT) AS zc
-        |FROM lagd GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q6_json_props" ->
-      """SELECT event_type,
-        |  CAST(count(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS n,
-        |  CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
-        |  CAST(sum(CASE WHEN CAST(json_extract_string(props, '$.k') AS BIGINT) > 50 THEN 1 ELSE 0 END) AS BIGINT) AS n_gt50
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // q7: as-of semantics spelled explicitly (LEFT JOIN + row_number)
-    // rather than DuckDB's native ASOF, to pin the deterministic
-    // (ts DESC, event_id DESC) tie-break the engine uses
-    "q7_asof_join" ->
-      """WITH c AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
-        |v AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'view'),
-        |j AS (SELECT c.event_id, c.user_id, c.ts,
-        |    v.event_id AS view_event_id, v.ts AS view_ts,
-        |    row_number() OVER (PARTITION BY c.event_id
-        |      ORDER BY v.ts DESC, v.event_id DESC) AS rn
-        |  FROM c LEFT JOIN v ON c.user_id = v.user_id AND v.ts <= c.ts)
-        |SELECT event_id, user_id, ts, view_event_id, view_ts,
-        |  (epoch_us(ts) - epoch_us(view_ts)) / 1000000.0 AS gap_sec
-        |FROM j WHERE rn = 1 ORDER BY event_id""".stripMargin,
-
-    // q8: the inequality join DuckDB can afford at oracle scale; the
-    // engine's bucketed equi-join must produce the identical pair set
-    "q8_range_join" ->
-      """SELECT c.event_id AS event_id, e.event_id AS err_event_id,
-        |  (epoch_us(e.ts) - epoch_us(c.ts)) / 1000000.0 AS dt_sec
-        |FROM events c JOIN events e ON c.user_id = e.user_id
-        |WHERE c.event_type = 'click' AND e.event_type = 'error'
-        |  AND abs(epoch_us(e.ts) - epoch_us(c.ts)) <= 7200000000
-        |ORDER BY event_id, err_event_id""".stripMargin,
-
-    // q9: identical window spec; ALL value columns are exact integer cents
-    // via floor(value*100 + 0.5) — IEEE-deterministic, unlike round()
-    "q9_window_analytics" ->
-      """WITH ev AS (SELECT *, CAST(floor(value * 100 + 0.5) AS BIGINT) AS value_c
-        |  FROM events)
-        |SELECT event_id, user_id, value_c,
-        |  lag(value_c, 1) OVER w AS prev_value_c,
-        |  sum(value_c) OVER (PARTITION BY user_id
-        |    ORDER BY ts, event_id ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS mov_sum_c3,
-        |  max(value_c) OVER (PARTITION BY user_id
-        |    ORDER BY ts, event_id ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS mov_max_c3,
-        |  CAST(row_number() OVER w AS BIGINT) AS seq
-        |FROM ev
-        |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        |ORDER BY event_id""".stripMargin,
-
-    // q10: ROLLUP with GROUPING bits (first arg = MSB in both engines)
-    "q10_rollup" ->
-      """SELECT CAST(ts AS DATE) AS day, event_type,
-        |  CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sum_c,
-        |  CAST(GROUPING(CAST(ts AS DATE), event_type) AS BIGINT) AS lvl
-        |FROM events
-        |GROUP BY ROLLUP(CAST(ts AS DATE), event_type)
-        |ORDER BY lvl, day, event_type""".stripMargin,
-
-    // q11: the pivot as conditional counts
-    "q11_pivot" ->
-      """SELECT user_id,
-        |  CAST(count(*) FILTER (WHERE event_type = 'click') AS BIGINT) AS n_click,
-        |  CAST(count(*) FILTER (WHERE event_type = 'error') AS BIGINT) AS n_error,
-        |  CAST(count(*) FILTER (WHERE event_type = 'purchase') AS BIGINT) AS n_purchase,
-        |  CAST(count(*) FILTER (WHERE event_type = 'signup') AS BIGINT) AS n_signup,
-        |  CAST(count(*) FILTER (WHERE event_type = 'view') AS BIGINT) AS n_view
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    // q12: INTERSECT / EXCEPT with the same labels
-    "q12_set_ops" ->
-      """SELECT 'both' AS grp, user_id FROM (
-        |  SELECT user_id FROM events WHERE event_type = 'click'
-        |  INTERSECT
-        |  SELECT user_id FROM events WHERE event_type = 'purchase' AND value >= 90)
-        |UNION ALL
-        |SELECT 'click_only' AS grp, user_id FROM (
-        |  SELECT user_id FROM events WHERE event_type = 'click'
-        |  EXCEPT
-        |  SELECT user_id FROM events WHERE event_type = 'purchase' AND value >= 90)
-        |ORDER BY grp, user_id""".stripMargin,
-
-    // q13: CUBE with DuckDB's 0-based dayofweek shifted to Spark's
-    // 1-based (both Sunday-first); GROUPING bit order matches q10
-    "q13_cube" ->
-      """SELECT dayofweek(ts) + 1 AS dow, event_type,
-        |  CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sum_c,
-        |  CAST(GROUPING(dayofweek(ts) + 1, event_type) AS BIGINT) AS lvl
-        |FROM events
-        |GROUP BY CUBE(dayofweek(ts) + 1, event_type)
-        |ORDER BY lvl, dow, event_type""".stripMargin,
-
-    // q14: the exact count is the hash gate; hll_ok is the invariant the
-    // sketch must satisfy by construction (HLL++ rsd 0.05, asserted at
-    // 3x + 1 slack) — a wild sketch flips it and fails the hash
-    "q14_approx_distinct" ->
-      """SELECT event_type, CAST(count(DISTINCT user_id) AS BIGINT) AS n_exact,
-        |  TRUE AS hll_ok
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    // q15: Spark's min_by/max_by on the composite (ts, event_id) key
-    // expressed as first/last row ranks (DuckDB arg_min takes no
-    // struct keys) — same deterministic tie-break
-    "q15_ohlc_bars" ->
-      """WITH b AS (SELECT user_id, date_trunc('hour', ts) AS bar, ts, event_id,
-        |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS c FROM events),
-        |o AS (SELECT user_id, bar, c,
-        |    row_number() OVER (PARTITION BY user_id, bar
-        |      ORDER BY ts, event_id) AS rf,
-        |    row_number() OVER (PARTITION BY user_id, bar
-        |      ORDER BY ts DESC, event_id DESC) AS rl
-        |  FROM b)
-        |SELECT user_id, bar,
-        |  max(CASE WHEN rf = 1 THEN c END) AS open_c,
-        |  max(CASE WHEN rl = 1 THEN c END) AS close_c,
-        |  max(c) AS high_c, min(c) AS low_c,
-        |  CAST(count(*) AS BIGINT) AS n, CAST(sum(c) AS BIGINT) AS vol_c
-        |FROM o GROUP BY user_id, bar ORDER BY user_id, bar""".stripMargin,
-
-    // q16: conditional-aggregation replica of the pivot grid (DuckDB's
-    // PIVOT statement can't run inside a plain SELECT compare)
-    "q16_pivot" ->
-      """SELECT dayofweek(ts) + 1 AS dow,
-        |  sum(CASE WHEN event_type = 'click' THEN c END) AS click,
-        |  sum(CASE WHEN event_type = 'error' THEN c END) AS error,
-        |  sum(CASE WHEN event_type = 'purchase' THEN c END) AS purchase,
-        |  sum(CASE WHEN event_type = 'signup' THEN c END) AS signup,
-        |  sum(CASE WHEN event_type = 'view' THEN c END) AS view
-        |FROM (SELECT ts, event_type,
-        |        CAST(floor(value * 100 + 0.5) AS BIGINT) AS c FROM events)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // q17: rank selection replicated with a plain row_number (the oracle
-    // MAY global-sort — it is DuckDB at sf0.01, not the 100 TB plan);
-    // same x4 fixed-point interpolation in pure integer arithmetic
-    "q17_exact_quantiles" ->
-      """WITH v AS (SELECT l_returnflag AS flag,
-        |    CAST(l_quantity AS BIGINT) AS v FROM lineitem),
-        |r AS (SELECT flag, v,
-        |    row_number() OVER (PARTITION BY flag ORDER BY v) - 1 AS i FROM v),
-        |n AS (SELECT flag, count(*) AS n FROM v GROUP BY 1),
-        |q AS (SELECT r.flag, p.p4, sum(
-        |    CASE WHEN r.i = (p.p4 * (n.n - 1)) // 4
-        |      THEN (4 - (p.p4 * (n.n - 1)) % 4) * r.v ELSE 0 END
-        |    + CASE WHEN (p.p4 * (n.n - 1)) % 4 > 0
-        |        AND r.i = (p.p4 * (n.n - 1)) // 4 + 1
-        |      THEN ((p.p4 * (n.n - 1)) % 4) * r.v ELSE 0 END) AS qx4
-        |  FROM r JOIN n USING (flag),
-        |    (SELECT unnest([1, 2, 3]) AS p4) p
-        |  GROUP BY 1, 2)
-        |SELECT q.flag AS flag, CAST(n.n AS BIGINT) AS n,
-        |  CAST(max(CASE WHEN p4 = 1 THEN qx4 END) AS BIGINT) AS q25_x4,
-        |  CAST(max(CASE WHEN p4 = 2 THEN qx4 END) AS BIGINT) AS q50_x4,
-        |  CAST(max(CASE WHEN p4 = 3 THEN qx4 END) AS BIGINT) AS q75_x4
-        |FROM q JOIN n ON q.flag = n.flag
-        |GROUP BY 1, 2 ORDER BY flag""".stripMargin,
-
-    // s9: the exact-corpus pixel codes summed globally in closed form
-    // (64 tiles, 256x256, code = (gr*31 + gc*17) % 1000)
-    "s9_stream_ingest" ->
-      """WITH px AS (
-        |  SELECT (((t.i // 8) * 256 + r.r) * 31
-        |        + ((t.i % 8) * 256 + c.c) * 17) % 1000 AS code
-        |  FROM range(64) t(i), range(256) r(r), range(256) c(c))
-        |SELECT CAST(64 AS BIGINT) AS n_tiles,
-        |  CAST(count(*) AS BIGINT) AS n_cells,
-        |  CAST(sum(code) AS BIGINT) AS sum_q
-        |FROM px""".stripMargin,
-
-    // q19: the same running frame via DuckDB's IGNORE NULLS last_value;
-    // cents by the shared floor(x*100 + 0.5) rule
-    "q19_gap_fill" ->
-      """SELECT user_id, event_id, (c IS NULL) AS was_gap,
-        |  coalesce(last_value(c IGNORE NULLS) OVER (
-        |    PARTITION BY user_id ORDER BY ts, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), -1)
-        |    AS filled_cents
-        |FROM (SELECT user_id, event_id, ts,
-        |    CASE WHEN event_type <> 'view'
-        |      THEN CAST(floor(value * 100 + 0.5) AS BIGINT) END AS c
-        |  FROM events)
-        |ORDER BY user_id, event_id""".stripMargin,
-
-    // q20: compaction is content-neutral, so both snapshots are the SAME
-    // closed-form row (6 tiles of the 96x160 formula grid)
-    "q20_compact_equiv" ->
-      """WITH cells AS (
-        |  SELECT (r.r * 7 + c.c * 3) % 100 AS v
-        |  FROM range(96) r(r), range(160) c(c)),
-        |one AS (SELECT 6 AS n_tiles, count(*) AS n_cells,
-        |    sum(v) AS sum_v FROM cells)
-        |SELECT CAST(t.s AS BIGINT) AS snap,
-        |  CAST(n_tiles AS BIGINT) AS n_tiles,
-        |  CAST(n_cells AS BIGINT) AS n_cells,
-        |  CAST(sum_v AS BIGINT) AS sum_v
-        |FROM one, (VALUES (1), (2)) t(s) ORDER BY snap""".stripMargin,
-
-    // q21: constants from the evolution contract (6 tiles, 2 backfilled
-    // at grade 7) + the formula-grid payload sum proving data stability
-    "q21_schema_evolution" ->
-      """WITH cells AS (
-        |  SELECT (r.r * 7 + c.c * 3) % 100 AS v
-        |  FROM range(96) r(r), range(160) c(c)),
-        |one AS (SELECT sum(v) AS sum_v FROM cells)
-        |SELECT CAST(p.p AS BIGINT) AS phase, CAST(6 AS BIGINT) AS n_tiles,
-        |  CAST(CASE WHEN p.p = 2 THEN 2 ELSE 0 END AS BIGINT) AS n_grade_set,
-        |  CAST(CASE WHEN p.p = 2 THEN 14 ELSE 0 END AS BIGINT) AS sum_grade,
-        |  CAST(sum_v AS BIGINT) AS sum_v
-        |FROM one, (VALUES (1), (2)) p(p) ORDER BY phase""".stripMargin,
-
-    // q18: both snapshots in closed form — snap 1 is the 96x160 formula
-    // grid in 6 tiles; snap 2 adds +1000 to every cell of the even-tx
-    // tiles (cols [0,64) and [128,160)), one 2x2 appended tile (+4
-    // cells, payload 1+2+3+4 = 10), and one extra tile row
-    // r61: the SAT's box sums replayed as a direct windowed join over
-    // the synthetic cell formula — clamping falls out of the BETWEEN
-    // bounds intersecting the finite ranges
-    "r61_sat_boxstats" ->
-      """WITH cells AS (
-        |  SELECT r.r AS r, c.c AS c,
-        |    CAST((r.r * 7 + c.c * 3) % 100 AS BIGINT) AS v
-        |  FROM range(512) r(r), range(768) c(c)),
-        |q AS (SELECT 16 * r.r AS qr, 16 * c.c AS qc
-        |  FROM range(32) r(r), range(48) c(c))
-        |SELECT CAST(q.qr AS BIGINT) AS qr, CAST(q.qc AS BIGINT) AS qc,
-        |  CAST(count(*) AS BIGINT) AS box_n,
-        |  CAST(sum(cells.v) AS BIGINT) AS box_sum
-        |FROM q JOIN cells
-        |  ON cells.r BETWEEN q.qr - 20 AND q.qr + 20
-        | AND cells.c BETWEEN q.qc - 20 AND q.qc + 20
-        |GROUP BY q.qr, q.qc
-        |ORDER BY qr, qc""".stripMargin,
-
-    // r62: SAT replayed in SQL (two window cumsums), box sums via the
-    // same signed 4-corner formula as equi self-joins with zero-padding
-    // (COALESCE of out-of-range lookups), identical scaled-integer
-    // classification. sat is AS MATERIALIZED — referenced 10 times.
-    "r62_tpi_landform" ->
-      """WITH cells AS MATERIALIZED (
-        |  SELECT r.r AS r, c.c AS c,
-        |    CAST((r.r * 7 + c.c * 3) % 100 AS BIGINT) AS v
-        |  FROM range(256) r(r), range(384) c(c)),
-        |cc AS MATERIALIZED (SELECT r, c, v,
-        |  sum(v) OVER (PARTITION BY r ORDER BY c) AS cv FROM cells),
-        |sat AS MATERIALIZED (SELECT r, c, v,
-        |  sum(cv) OVER (PARTITION BY c ORDER BY r) AS s FROM cc),
-        |b4 AS (
-        |  SELECT t.r, t.c, t.v,
-        |    (LEAST(t.r + 4, 255) - GREATEST(t.r - 4, 0) + 1) *
-        |    (LEAST(t.c + 4, 383) - GREATEST(t.c - 4, 0) + 1) AS n,
-        |    coalesce(s22.s, 0) - coalesce(s12.s, 0)
-        |      - coalesce(s21.s, 0) + coalesce(s11.s, 0) AS bs
-        |  FROM sat t
-        |  LEFT JOIN sat s22 ON s22.r = LEAST(t.r + 4, 255)
-        |    AND s22.c = LEAST(t.c + 4, 383)
-        |  LEFT JOIN sat s12 ON s12.r = GREATEST(t.r - 4, 0) - 1
-        |    AND s12.c = LEAST(t.c + 4, 383)
-        |  LEFT JOIN sat s21 ON s21.r = LEAST(t.r + 4, 255)
-        |    AND s21.c = GREATEST(t.c - 4, 0) - 1
-        |  LEFT JOIN sat s11 ON s11.r = GREATEST(t.r - 4, 0) - 1
-        |    AND s11.c = GREATEST(t.c - 4, 0) - 1),
-        |b16 AS (
-        |  SELECT t.r, t.c,
-        |    (LEAST(t.r + 16, 255) - GREATEST(t.r - 16, 0) + 1) *
-        |    (LEAST(t.c + 16, 383) - GREATEST(t.c - 16, 0) + 1) AS n,
-        |    coalesce(s22.s, 0) - coalesce(s12.s, 0)
-        |      - coalesce(s21.s, 0) + coalesce(s11.s, 0) AS bs
-        |  FROM sat t
-        |  LEFT JOIN sat s22 ON s22.r = LEAST(t.r + 16, 255)
-        |    AND s22.c = LEAST(t.c + 16, 383)
-        |  LEFT JOIN sat s12 ON s12.r = GREATEST(t.r - 16, 0) - 1
-        |    AND s12.c = LEAST(t.c + 16, 383)
-        |  LEFT JOIN sat s21 ON s21.r = LEAST(t.r + 16, 255)
-        |    AND s21.c = GREATEST(t.c - 16, 0) - 1
-        |  LEFT JOIN sat s11 ON s11.r = GREATEST(t.r - 16, 0) - 1
-        |    AND s11.c = GREATEST(t.c - 16, 0) - 1),
-        |j AS (
-        |  SELECT b4.v * b4.n - b4.bs AS tpi_s, b4.n AS n_s,
-        |    b4.v * b16.n - b16.bs AS tpi_l, b16.n AS n_l
-        |  FROM b4 JOIN b16 ON b4.r = b16.r AND b4.c = b16.c)
-        |SELECT
-        |  CAST(CASE WHEN tpi_s > 5 * n_s THEN 1
-        |    WHEN tpi_s < -5 * n_s THEN -1 ELSE 0 END AS BIGINT) AS class_s,
-        |  CAST(CASE WHEN tpi_l > 5 * n_l THEN 1
-        |    WHEN tpi_l < -5 * n_l THEN -1 ELSE 0 END AS BIGINT) AS class_l,
-        |  CAST(count(*) AS BIGINT) AS n_cells,
-        |  CAST(sum(tpi_s) AS BIGINT) AS sum_tpi_s,
-        |  CAST(sum(tpi_l) AS BIGINT) AS sum_tpi_l
-        |FROM j GROUP BY 1, 2 ORDER BY class_s, class_l""".stripMargin,
-
-    // r63: converged r45 Bellman-Ford surface + the exact-witness argmin
-    // (min direction k whose neighbor satisfies d_n + (q_n+q)*wgt = d —
-    // all values dyadic-exact, so = is legitimate); sources get 0
-    "r63_cost_backlink" -> {
-      val nc = Synth.demRef.ncols
-      val n = Synth.demRef.nrows.toLong * nc
-      val iters = 120
-      s"""WITH RECURSIVE gg AS (SELECT (i // $nc) AS r, (i % $nc) AS c FROM range($n) t(i)),
-         |vals AS MATERIALIZED (SELECT r, c, ((r * 31 + c * 17) % 1000) / 4.0 AS q FROM gg
-         |  WHERE NOT ((r * $nc + c) % 97 = 13)),
-         |dd9(dr, dc, wgt) AS (VALUES (0,0,0),(0,1,10),(1,1,14),(1,0,10),(1,-1,14),
-         |                           (0,-1,10),(-1,-1,14),(-1,0,10),(-1,1,14)),
-         |cd AS (
-         |  SELECT 0 AS it, r, c, q, CASE WHEN q >= 240.0 THEN 0.0 ELSE 1e30 END AS d
-         |  FROM vals
-         |  UNION ALL
-         |  SELECT p.it + 1, t.r, t.c, t.q,
-         |    CASE WHEN t.q >= 240.0 THEN 0.0
-         |         ELSE least(min(CASE WHEN d.wgt = 0 THEN p.d END),
-         |                    min(CASE WHEN d.wgt > 0 THEN p.d + (p.q + t.q) * d.wgt END))
-         |    END AS d
-         |  FROM cd p JOIN dd9 d ON true
-         |  JOIN vals t ON t.r = p.r + d.dr AND t.c = p.c + d.dc
-         |  WHERE p.it < $iters
-         |  GROUP BY p.it, t.r, t.c, t.q),
-         |final AS MATERIALIZED (SELECT r, c, q, d FROM cd WHERE it = $iters AND d < 1e30),
-         |dirs(k, dr, dc, wgt) AS (VALUES (1,0,1,10),(2,1,1,14),(3,1,0,10),(4,1,-1,14),
-         |                               (5,0,-1,10),(6,-1,-1,14),(7,-1,0,10),(8,-1,1,14)),
-         |nb AS (SELECT f.r, f.c, min(dd.k) AS mink
-         |  FROM final f JOIN dirs dd ON true
-         |  JOIN final x ON x.r = f.r + dd.dr AND x.c = f.c + dd.dc
-         |  WHERE f.d > 0 AND x.d + (x.q + f.q) * dd.wgt = f.d
-         |  GROUP BY f.r, f.c)
-         |SELECT CAST(f.r AS BIGINT) AS row, CAST(f.c AS BIGINT) AS col,
-         |  CAST(CASE WHEN f.d = 0 THEN 0 ELSE nb.mink END AS BIGINT) AS dir
-         |FROM final f LEFT JOIN nb ON nb.r = f.r AND nb.c = f.c
-         |ORDER BY row, col""".stripMargin
-    },
-
-    // r64: the backlink table walked from (200, 150) by a second
-    // recursive CTE — one step per iteration, dir 0 terminates at the
-    // source; positions and distances must match the engine's
-    // pointer-doubled enumeration row-for-row
-    "r64_cost_path" -> {
-      val nc = Synth.demRef.ncols
-      val n = Synth.demRef.nrows.toLong * nc
-      val iters = 120
-      s"""WITH RECURSIVE gg AS (SELECT (i // $nc) AS r, (i % $nc) AS c FROM range($n) t(i)),
-         |vals AS MATERIALIZED (SELECT r, c, ((r * 31 + c * 17) % 1000) / 4.0 AS q FROM gg
-         |  WHERE NOT ((r * $nc + c) % 97 = 13)),
-         |dd9(dr, dc, wgt) AS (VALUES (0,0,0),(0,1,10),(1,1,14),(1,0,10),(1,-1,14),
-         |                           (0,-1,10),(-1,-1,14),(-1,0,10),(-1,1,14)),
-         |cd AS (
-         |  SELECT 0 AS it, r, c, q, CASE WHEN q >= 240.0 THEN 0.0 ELSE 1e30 END AS d
-         |  FROM vals
-         |  UNION ALL
-         |  SELECT p.it + 1, t.r, t.c, t.q,
-         |    CASE WHEN t.q >= 240.0 THEN 0.0
-         |         ELSE least(min(CASE WHEN d.wgt = 0 THEN p.d END),
-         |                    min(CASE WHEN d.wgt > 0 THEN p.d + (p.q + t.q) * d.wgt END))
-         |    END AS d
-         |  FROM cd p JOIN dd9 d ON true
-         |  JOIN vals t ON t.r = p.r + d.dr AND t.c = p.c + d.dc
-         |  WHERE p.it < $iters
-         |  GROUP BY p.it, t.r, t.c, t.q),
-         |final AS MATERIALIZED (SELECT r, c, q, d FROM cd WHERE it = $iters AND d < 1e30),
-         |dirs(k, dr, dc, wgt) AS (VALUES (1,0,1,10),(2,1,1,14),(3,1,0,10),(4,1,-1,14),
-         |                               (5,0,-1,10),(6,-1,-1,14),(7,-1,0,10),(8,-1,1,14)),
-         |nb AS (SELECT f.r, f.c, min(dd.k) AS mink
-         |  FROM final f JOIN dirs dd ON true
-         |  JOIN final x ON x.r = f.r + dd.dr AND x.c = f.c + dd.dc
-         |  WHERE f.d > 0 AND x.d + (x.q + f.q) * dd.wgt = f.d
-         |  GROUP BY f.r, f.c),
-         |bl AS MATERIALIZED (SELECT f.r, f.c, f.d,
-         |    CASE WHEN f.d = 0 THEN 0 ELSE nb.mink END AS dir
-         |  FROM final f LEFT JOIN nb ON nb.r = f.r AND nb.c = f.c),
-         |walk AS (
-         |  SELECT 0 AS pos, b.r, b.c, b.d, b.dir FROM bl b
-         |  WHERE b.r = 200 AND b.c = 150
-         |  UNION ALL
-         |  SELECT w.pos + 1, b.r, b.c, b.d, b.dir
-         |  FROM walk w JOIN dirs dd ON dd.k = w.dir
-         |  JOIN bl b ON b.r = w.r + dd.dr AND b.c = w.c + dd.dc
-         |  WHERE w.dir > 0)
-         |SELECT CAST(pos AS BIGINT) AS pos, CAST(r AS BIGINT) AS row,
-         |  CAST(c AS BIGINT) AS col, d AS dist
-         |FROM walk ORDER BY pos""".stripMargin
-    },
-
-    // q28: the closed-form Z-order layout (q27's spread table) bucketed
-    // by the value-range rule, each bucket's checksum re-derived as
-    // XOR of (cid*31 + 4096) under HUGEINT mod-2^64 -> signed-BIGINT
-    // wraparound — exactly Scala's Long overflow semantics
-    "q28_lineage_audit" ->
-      """WITH sp(tx, z) AS (VALUES (0,0),(1,1),(2,4),(3,5),(4,16),(5,17),(6,20),
-        |    (7,21),(8,64),(9,65),(10,68),(11,69),(12,80),(13,81),(14,84),(15,85)),
-        |t AS (SELECT CAST(6 AS BIGINT) * 288230376151711744 + z AS cid,
-        |    LEAST(3, (z * 4) // 86) AS bucket FROM sp),
-        |term AS (SELECT bucket,
-        |    CAST(CASE WHEN m >= 9223372036854775808 THEN m - 18446744073709551616
-        |         ELSE m END AS BIGINT) AS x
-        |  FROM (SELECT bucket,
-        |      (CAST(cid AS HUGEINT) * 31 + 4096) % 18446744073709551616 AS m
-        |    FROM t) s),
-        |agg AS (SELECT bucket, count(*) AS n, bit_xor(x) AS chk
-        |  FROM term GROUP BY bucket)
-        |SELECT CAST(b.b AS BIGINT) AS bucket,
-        |  CAST(coalesce(a.n, 0) AS BIGINT) AS "rows",
-        |  CAST(coalesce(a.chk, 0) AS BIGINT) AS checksum
-        |FROM range(4) b(b) LEFT JOIN agg a ON a.bucket = b.b
-        |ORDER BY bucket""".stripMargin,
-
-    // q29: derived from the construction — stage 1 commits 16 tiles into
-    // buckets {0: tx0-7, 2: tx8, 3: tx9-15} (bucket 1 empty -> 3 live
-    // files); the delete drops tx7 (COW, bucket 0 -> 7 rows) and all of
-    // bucket 2 (metadata-only -> 0 rows, file count 2); the tx0 upsert
-    // rewrites bucket 0 in place (counts unchanged)
-    "q29_meta_count" ->
-      """WITH rows AS (
-        |  SELECT 1 AS stage, 3 AS n_files, 16 AS n_rows
-        |  UNION ALL SELECT 2, 2, 14
-        |  UNION ALL SELECT 3, 2, 14)
-        |SELECT CAST(stage AS BIGINT) AS stage,
-        |  CAST(n_files AS BIGINT) AS n_files,
-        |  CAST(n_rows AS BIGINT) AS n_rows
-        |FROM rows ORDER BY stage""".stripMargin,
-
-    // q30: files re-derived from the spread table + the range-bucket
-    // rule; a probe opens a file iff [min,max] overlaps, scans ALL its
-    // rows, and the in-range count is the spread values inside the probe
-    "q30_scan_prune" ->
-      """WITH sp(z) AS (VALUES (0),(1),(4),(5),(16),(17),(20),(21),(64),(65),
-        |    (68),(69),(80),(81),(84),(85)),
-        |f AS (SELECT LEAST(3, (z * 4) // 86) AS bucket, min(z) AS lo,
-        |    max(z) AS hi, count(*) AS nrows FROM sp GROUP BY 1),
-        |pr(probe, plo, phi) AS (VALUES (1, 0, 21), (2, 22, 63), (3, 21, 64),
-        |    (4, 65, 85), (5, 0, 85)),
-        |scan AS (SELECT p.probe, count(f.bucket) AS n_files,
-        |    coalesce(sum(f.nrows), 0) AS n_scanned
-        |  FROM pr p LEFT JOIN f ON f.hi >= p.plo AND f.lo <= p.phi
-        |  GROUP BY p.probe),
-        |rng AS (SELECT p.probe, count(sp.z) AS n_in_range
-        |  FROM pr p LEFT JOIN sp ON sp.z BETWEEN p.plo AND p.phi
-        |  GROUP BY p.probe)
-        |SELECT CAST(s.probe AS BIGINT) AS probe,
-        |  CAST(s.n_files AS BIGINT) AS n_files,
-        |  CAST(s.n_scanned AS BIGINT) AS n_scanned,
-        |  CAST(r.n_in_range AS BIGINT) AS n_in_range
-        |FROM scan s JOIN rng r ON r.probe = s.probe
-        |ORDER BY probe""".stripMargin,
-
-    // e11: the e10 Lloyd replay (translated +10) -> final assignment +
-    // final centroids -> nProbe=1 probe by euclidean d2 (tie: lowest cl)
-    // -> in-list cosine top-3 vs all-pairs cosine top-3 -> per-query
-    // intersection counts. Cosines on the raw integer coordinates
-    // (x1*y1 + x2*y2, one IEEE division) — bit-identical cross-engine.
-    "e11_recall_eval" ->
-      """WITH p AS MATERIALIZED (
-        |  SELECT t.i AS vid,
-        |    10 + (CASE WHEN t.i // 12 = 1 THEN 100 ELSE 0 END)
-        |      + (t.i % 12) % 5 - 2 AS x,
-        |    10 + (CASE WHEN t.i // 12 = 2 THEN 100 ELSE 0 END)
-        |      + ((t.i % 12) * 7) % 5 - 2 AS y
-        |  FROM range(36) t(i)),
-        |c0 AS MATERIALIZED (SELECT vid AS cl, CAST(x AS DOUBLE) AS mx,
-        |    CAST(y AS DOUBLE) AS my FROM p WHERE vid < 3),
-        |a1 AS MATERIALIZED (SELECT vid, cl FROM (
-        |    SELECT p.vid, c.cl, row_number() OVER (PARTITION BY p.vid
-        |      ORDER BY (p.x - c.mx) * (p.x - c.mx)
-        |             + (p.y - c.my) * (p.y - c.my), c.cl) AS rn
-        |    FROM p, c0 c) WHERE rn = 1),
-        |c1 AS MATERIALIZED (
-        |  SELECT c0.cl, coalesce(u.mx, c0.mx) AS mx,
-        |    coalesce(u.my, c0.my) AS my
-        |  FROM c0 LEFT JOIN (
-        |    SELECT a.cl, avg(CAST(p.x AS DOUBLE)) AS mx,
-        |      avg(CAST(p.y AS DOUBLE)) AS my
-        |    FROM a1 a JOIN p ON p.vid = a.vid GROUP BY 1) u
-        |  ON u.cl = c0.cl),
-        |a2 AS MATERIALIZED (SELECT vid, cl FROM (
-        |    SELECT p.vid, c.cl, row_number() OVER (PARTITION BY p.vid
-        |      ORDER BY (p.x - c.mx) * (p.x - c.mx)
-        |             + (p.y - c.my) * (p.y - c.my), c.cl) AS rn
-        |    FROM p, c1 c) WHERE rn = 1),
-        |c2 AS MATERIALIZED (
-        |  SELECT c1.cl, coalesce(u.mx, c1.mx) AS mx,
-        |    coalesce(u.my, c1.my) AS my
-        |  FROM c1 LEFT JOIN (
-        |    SELECT a.cl, avg(CAST(p.x AS DOUBLE)) AS mx,
-        |      avg(CAST(p.y AS DOUBLE)) AS my
-        |    FROM a2 a JOIN p ON p.vid = a.vid GROUP BY 1) u
-        |  ON u.cl = c1.cl),
-        |af AS MATERIALIZED (SELECT vid, cl FROM (
-        |    SELECT p2.vid, c.cl, row_number() OVER (PARTITION BY p2.vid
-        |      ORDER BY (p2.x - c.mx) * (p2.x - c.mx)
-        |             + (p2.y - c.my) * (p2.y - c.my), c.cl) AS rn
-        |    FROM p p2, c2 c) WHERE rn = 1),
-        |probe AS MATERIALIZED (SELECT vid AS qid, cl FROM (
-        |    SELECT p.vid, c.cl, row_number() OVER (PARTITION BY p.vid
-        |      ORDER BY (p.x - c.mx) * (p.x - c.mx)
-        |             + (p.y - c.my) * (p.y - c.my), c.cl) AS rn
-        |    FROM p, c2 c) WHERE rn = 1),
-        |norms AS MATERIALIZED (SELECT vid,
-        |    sqrt(CAST(x * x + y * y AS DOUBLE)) AS n FROM p),
-        |ann AS MATERIALIZED (SELECT qid, vid FROM (
-        |    SELECT pr.qid, m.vid,
-        |      row_number() OVER (PARTITION BY pr.qid ORDER BY
-        |        CAST(q.x * m.x + q.y * m.y AS DOUBLE) / (nq.n * nm.n) DESC,
-        |        m.vid) AS rank
-        |    FROM probe pr
-        |    JOIN af ON af.cl = pr.cl
-        |    JOIN p m ON m.vid = af.vid
-        |    JOIN p q ON q.vid = pr.qid
-        |    JOIN norms nq ON nq.vid = pr.qid
-        |    JOIN norms nm ON nm.vid = m.vid
-        |    WHERE m.vid <> pr.qid) WHERE rank <= 3),
-        |exact AS MATERIALIZED (SELECT qid, vid FROM (
-        |    SELECT q.vid AS qid, m.vid,
-        |      row_number() OVER (PARTITION BY q.vid ORDER BY
-        |        CAST(q.x * m.x + q.y * m.y AS DOUBLE) / (nq.n * nm.n) DESC,
-        |        m.vid) AS rank
-        |    FROM p q JOIN p m ON m.vid <> q.vid
-        |    JOIN norms nq ON nq.vid = q.vid
-        |    JOIN norms nm ON nm.vid = m.vid) WHERE rank <= 3),
-        |annN AS (SELECT qid, count(*) AS na FROM ann GROUP BY qid),
-        |hitN AS (SELECT a.qid, count(*) AS nh FROM ann a
-        |  JOIN exact e ON e.qid = a.qid AND e.vid = a.vid GROUP BY a.qid)
-        |SELECT CAST(t.i AS BIGINT) AS qid,
-        |  CAST(coalesce(annN.na, 0) AS BIGINT) AS n_ann,
-        |  CAST(coalesce(hitN.nh, 0) AS BIGINT) AS n_hits
-        |FROM range(36) t(i)
-        |LEFT JOIN annN ON annN.qid = t.i
-        |LEFT JOIN hitN ON hitN.qid = t.i
-        |ORDER BY qid""".stripMargin,
-
-    // m8: the e7 brute oracle with the label predicate INVERTED —
-    // candidates must differ in lang (vid % 3) from the anchor
-    "m8_hard_negatives" ->
-      """WITH v AS (
-        |  SELECT t.vid AS vid, d.d AS d,
-        |    (CASE WHEN d.d = t.vid % 16 THEN 8.0 ELSE 0.0 END)
-        |      + (((t.vid // 16) * 31 + d.d * 17 + (t.vid % 16) * 7) % 13 - 6) * 0.125 AS x
-        |  FROM range(480) t(vid), range(16) d(d)),
-        |norms AS (SELECT vid, sqrt(sum(x*x)) AS n FROM v GROUP BY vid),
-        |pairs AS (
-        |  SELECT q.vid AS qid, c.vid AS vid, sum(q.x * c.x) AS dot
-        |  FROM v q JOIN v c ON q.d = c.d AND q.vid < 10 AND c.vid <> q.vid
-        |    AND c.vid % 3 <> q.vid % 3
-        |  GROUP BY q.vid, c.vid),
-        |cs AS (
-        |  SELECT p.qid, p.vid, p.dot / (nq.n * nc.n) AS cos
-        |  FROM pairs p JOIN norms nq ON nq.vid = p.qid
-        |              JOIN norms nc ON nc.vid = p.vid),
-        |rk AS (SELECT qid, vid,
-        |  row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vid) AS rank
-        |  FROM cs)
-        |SELECT qid, CAST(rank AS BIGINT) AS rank, vid
-        |FROM rk WHERE rank <= 5 ORDER BY qid, rank""".stripMargin,
-
-    // q31: stage numbers derived from the construction — head carries
-    // both upserts (+1000 and +500 on one 4096-cell tile each), the
-    // kept snap-2 pin carries only the first, expiry deletes exactly
-    // one dead directory and the expired snapshot must be unreadable
-    "q31_expire_gc" ->
-      """WITH cells AS (
-        |  SELECT r.r AS r, c.c AS c, (r.r * 7 + c.c * 3) % 100 AS v
-        |  FROM range(64) r(r), range(1024) c(c)),
-        |b AS (SELECT sum(v) AS sv FROM cells),
-        |rows AS (
-        |  SELECT 'a_before' AS stage, 3 AS n,
-        |    (SELECT sv FROM b) + 4096000 + 2048000 AS rint_sum
-        |  UNION ALL SELECT 'b_after', 2,
-        |    (SELECT sv FROM b) + 4096000 + 2048000
-        |  UNION ALL SELECT 'c_gc', 1, (SELECT sv FROM b) + 4096000
-        |  UNION ALL SELECT 'd_expired_pin', 1, 0)
-        |SELECT stage, CAST(n AS BIGINT) AS n,
-        |  CAST(rint_sum AS BIGINT) AS rint_sum
-        |FROM rows ORDER BY stage""".stripMargin,
-
-    // q32: numbers from the construction — main 6 tiles/base sum, the
-    // staged branch 4 tiles / the c >= 64 sub-sum, audit rejects, GC
-    // deletes the 4 unshared staged bucket dirs, main unchanged
-    "q32_wap_reject" ->
-      """WITH cells AS (
-        |  SELECT r.r AS r, c.c AS c, (r.r * 7 + c.c * 3) % 100 AS v
-        |  FROM range(96) r(r), range(160) c(c)),
-        |rows AS (
-        |  SELECT 'a_main_pre' AS stage, 6 AS n, sum(v) AS rint_sum
-        |    FROM cells
-        |  UNION ALL SELECT 'b_staged', 4, sum(v) FROM cells WHERE c >= 64
-        |  UNION ALL SELECT 'c_reject', 1, 0
-        |  UNION ALL SELECT 'd_gc', 4, 0
-        |  UNION ALL SELECT 'e_main_post', 6, (SELECT sum(v) FROM cells)
-        |  UNION ALL SELECT 'f_staged_gone', 1, 0)
-        |SELECT stage, CAST(n AS BIGINT) AS n,
-        |  CAST(rint_sum AS BIGINT) AS rint_sum
-        |FROM rows ORDER BY stage""".stripMargin,
-
-    // r65: the r8 Horn CTE + the identical sqrt-only shade chain —
-    // GREATEST(0, (sqrt(.5) - sqrt(.5)*(gx*sin_az + gy*cos_az)) /
-    // sqrt(1 + gx^2 + gy^2)) averaged over the four azimuths, every
-    // constant and op in the same order as the engine's Column tree
-    "r65_multidir_hillshade" -> {
-      val nc = Synth.demRef.ncols
-      def v(rr: String, cc: String): String =
-        s"((($rr) * 31 + ($cc) * 17) % 1000) / 4.0"
-      def hole(rr: String, cc: String): String =
-        s"(($rr) * $nc + ($cc)) % 97 = 13"
-      val n = Seq(
-        ("tl", -1, -1), ("tp", -1, 0), ("tr", -1, 1),
-        ("l", 0, -1), ("rt", 0, 1),
-        ("bl", 1, -1), ("bt", 1, 0), ("br", 1, 1))
-      val holes = (n.map { case (_, dr, dc) => hole(s"r + $dr", s"c + $dc") } :+
-        hole("r", "c")).mkString(" OR ")
-      val defs = n.map { case (nm, dr, dc) => s"${v(s"r + $dr", s"c + $dc")} AS $nm" }
-        .mkString(",\n  ")
-      def sh(sinAz: String, cosAz: String): String =
-        s"GREATEST(0.0, (sqrt(0.5) - sqrt(0.5) * (gx * ($sinAz) + gy * ($cosAz)))" +
-          s" / sqrt(1.0 + gx * gx + gy * gy))"
-      s"""WITH g AS (SELECT (i // $nc) AS r, (i % $nc) AS c
-         |  FROM range(${Synth.demRef.nrows.toLong * nc}) t(i)
-         |  WHERE i % 23 = 7
-         |    AND (i // $nc) BETWEEN 1 AND ${Synth.demRef.nrows - 2}
-         |    AND (i % $nc) BETWEEN 1 AND ${nc - 2}
-         |    AND NOT ($holes)),
-         |nb AS (SELECT r, c,
-         |  $defs FROM g),
-         |gr AS (SELECT r, c,
-         |  ((tr + 2 * rt + br) - (tl + 2 * l + bl)) / (8 * 5.0) AS gx,
-         |  ((tl + 2 * tp + tr) - (bl + 2 * bt + br)) / (8 * 5.0) AS gy
-         |FROM nb)
-         |SELECT r AS row, c AS col,
-         |  (${sh("-sqrt(0.5)", "-sqrt(0.5)")}
-         |   + ${sh("-1.0", "0.0")}
-         |   + ${sh("-sqrt(0.5)", "sqrt(0.5)")}
-         |   + ${sh("0.0", "1.0")}) / 4.0 AS shade
-         |FROM gr ORDER BY row, col""".stripMargin
-    },
-
-    // q22: changelog totals in closed form from the construction — the
-    // upsert touches the (c // 64) even bands (+1000/cell, 4 tiles,
-    // 9216 cells), the insert is the 4-cell [1,2,3,4] tile, the delete
-    // phase removes that tile plus the untouched (r<64, 64<=c<128) tile
-    "q22_incremental_read" ->
-      """WITH cells AS (
-        |  SELECT r.r AS r, c.c AS c, (r.r * 7 + c.c * 3) % 100 AS v
-        |  FROM range(96) r(r), range(160) c(c)),
-        |upd AS (SELECT * FROM cells WHERE (c // 64) % 2 = 0),
-        |del AS (SELECT * FROM cells WHERE r < 64 AND c >= 64 AND c < 128),
-        |rows AS (
-        |  SELECT 1 AS phase, 'insert' AS change_type,
-        |      1 AS n_tiles, 4 AS n_cells, 10 AS sum_v
-        |  UNION ALL SELECT 1, 'update_postimage', 4, count(*),
-        |      sum(v + 1000) FROM upd
-        |  UNION ALL SELECT 1, 'update_preimage', 4, count(*),
-        |      sum(v) FROM upd
-        |  UNION ALL SELECT 2, 'delete', 2, count(*) + 4,
-        |      sum(v) + 10 FROM del)
-        |SELECT CAST(phase AS BIGINT) AS phase, change_type,
-        |  CAST(n_tiles AS BIGINT) AS n_tiles,
-        |  CAST(n_cells AS BIGINT) AS n_cells,
-        |  CAST(sum_v AS BIGINT) AS sum_v
-        |FROM rows ORDER BY phase, change_type""".stripMargin,
-
-    // q26: stage 1/3 are the base image (+extra at 3); stage 2 is the
-    // abandoned upsert, still pinned
-    "q26_rollback" ->
-      """WITH cells AS (
-        |  SELECT r.r AS r, c.c AS c, (r.r * 7 + c.c * 3) % 100 AS v
-        |  FROM range(96) r(r), range(160) c(c)),
-        |upd AS (SELECT * FROM cells WHERE (c // 64) % 2 = 0),
-        |rows AS (
-        |  SELECT 1 AS stage, 6 AS n_tiles, count(*) AS n_cells,
-        |    sum(v) AS sum_v FROM cells
-        |  UNION ALL SELECT 2, 6, (SELECT count(*) FROM cells),
-        |    (SELECT sum(v) FROM cells) + 1000 * count(*) FROM upd
-        |  UNION ALL SELECT 3, 7, count(*) + 4, sum(v) + 10 FROM cells)
-        |SELECT CAST(stage AS BIGINT) AS stage,
-        |  CAST(n_tiles AS BIGINT) AS n_tiles,
-        |  CAST(n_cells AS BIGINT) AS n_cells,
-        |  CAST(sum_v AS BIGINT) AS sum_v
-        |FROM rows ORDER BY stage""".stripMargin,
-
-    // q27: the Z-order layout in closed form — ids are
-    // 6*2^58 + spread(tx) with spread the bit-interleave table for
-    // tx 0..15: {0,1,4,5,16,17,20,21,64,65,68,69,80,81,84,85}; the
-    // value-range bucketing over span 86 puts tx 0-7 in bucket 0,
-    // nothing in 1, tx 8 alone in 2, tx 9-15 in 3
-    "q27_files_meta" ->
-      """WITH z AS (SELECT CAST(6 AS BIGINT) * 288230376151711744 AS b),
-        |rows AS (
-        |  SELECT 0 AS bucket, 8 AS file_rows,
-        |    (SELECT b FROM z) + 0 AS min_cell,
-        |    (SELECT b FROM z) + 21 AS max_cell
-        |  UNION ALL SELECT 1, 0, 0, 0
-        |  UNION ALL SELECT 2, 1, (SELECT b FROM z) + 64,
-        |    (SELECT b FROM z) + 64
-        |  UNION ALL SELECT 3, 7, (SELECT b FROM z) + 65,
-        |    (SELECT b FROM z) + 85)
-        |SELECT CAST(bucket AS BIGINT) AS bucket,
-        |  CAST(file_rows AS BIGINT) AS file_rows,
-        |  CAST(min_cell AS BIGINT) AS min_cell,
-        |  CAST(max_cell AS BIGINT) AS max_cell
-        |FROM rows ORDER BY bucket""".stripMargin,
-
-    // q25: survivors are exactly the cells outside col [448, 576);
-    // stage 3 time-travels back to the full strip
-    "q25_range_delete" ->
-      """WITH cells AS (
-        |  SELECT r.r AS r, c.c AS c, (r.r * 7 + c.c * 3) % 100 AS v
-        |  FROM range(64) r(r), range(1024) c(c)),
-        |kept AS (SELECT * FROM cells WHERE c < 448 OR c >= 576),
-        |rows AS (
-        |  SELECT 1 AS stage, 16 AS n_tiles, count(*) AS n_cells,
-        |    sum(v) AS sum_v FROM cells
-        |  UNION ALL SELECT 2, 14, count(*), sum(v) FROM kept
-        |  UNION ALL SELECT 3, 16, count(*), sum(v) FROM cells)
-        |SELECT CAST(stage AS BIGINT) AS stage,
-        |  CAST(n_tiles AS BIGINT) AS n_tiles,
-        |  CAST(n_cells AS BIGINT) AS n_cells,
-        |  CAST(sum_v AS BIGINT) AS sum_v
-        |FROM rows ORDER BY stage""".stripMargin,
-
-    // q24: pre-publish main = base grid; branch and post-publish main =
-    // the +1000 staged image
-    "q24_wap" ->
-      """WITH cells AS (
-        |  SELECT r.r AS r, c.c AS c, (r.r * 7 + c.c * 3) % 100 AS v
-        |  FROM range(96) r(r), range(160) c(c)),
-        |rows AS (
-        |  SELECT 'a_pre_main' AS stage, 6 AS n_tiles, count(*) AS n_cells,
-        |    sum(v) AS sum_v FROM cells
-        |  UNION ALL SELECT 'b_branch', 6, count(*), sum(v + 1000) FROM cells
-        |  UNION ALL SELECT 'c_post_main', 6, count(*), sum(v + 1000)
-        |    FROM cells)
-        |SELECT stage, CAST(n_tiles AS BIGINT) AS n_tiles,
-        |  CAST(n_cells AS BIGINT) AS n_cells,
-        |  CAST(sum_v AS BIGINT) AS sum_v
-        |FROM rows ORDER BY stage""".stripMargin,
-
-    // q23: mirror must carry the SAME closed-form invariants as source
-    // after every applied changelog interval
-    "q23_cdc_apply" ->
-      """WITH cells AS (
-        |  SELECT r.r AS r, c.c AS c, (r.r * 7 + c.c * 3) % 100 AS v
-        |  FROM range(96) r(r), range(160) c(c)),
-        |upd AS (SELECT * FROM cells WHERE (c // 64) % 2 = 0),
-        |del AS (SELECT * FROM cells WHERE r < 64 AND c >= 64 AND c < 128),
-        |s2 AS (SELECT (SELECT sum(v) FROM cells)
-        |  + 1000 * (SELECT count(*) FROM upd) + 10 AS sv),
-        |s3 AS (SELECT (SELECT sv FROM s2) - 10
-        |  - (SELECT sum(v) FROM del) AS sv),
-        |rows AS (
-        |  SELECT 2 AS stage, 'mirror' AS side, 7 AS n_tiles,
-        |    15364 AS n_cells, (SELECT sv FROM s2) AS sum_v
-        |  UNION ALL SELECT 2, 'source', 7, 15364, (SELECT sv FROM s2)
-        |  UNION ALL SELECT 3, 'mirror', 5, 11264, (SELECT sv FROM s3)
-        |  UNION ALL SELECT 3, 'source', 5, 11264, (SELECT sv FROM s3))
-        |SELECT CAST(stage AS BIGINT) AS stage, side,
-        |  CAST(n_tiles AS BIGINT) AS n_tiles,
-        |  CAST(n_cells AS BIGINT) AS n_cells,
-        |  CAST(sum_v AS BIGINT) AS sum_v
-        |FROM rows ORDER BY stage, side""".stripMargin,
-
-    "q18_snapshot_travel" ->
-      """WITH cells AS (
-        |  SELECT r.r AS r, c.c AS c, (r.r * 7 + c.c * 3) % 100 AS v
-        |  FROM range(96) r(r), range(160) c(c)),
-        |s1 AS (SELECT 1 AS snap, 6 AS n_tiles, count(*) AS n_cells,
-        |    sum(v) AS sum_v FROM cells),
-        |s2 AS (SELECT 2 AS snap, 7 AS n_tiles, count(*) + 4 AS n_cells,
-        |    sum(v + CASE WHEN (c // 64) % 2 = 0 THEN 1000 ELSE 0 END) + 10
-        |      AS sum_v FROM cells)
-        |SELECT CAST(snap AS BIGINT) AS snap,
-        |  CAST(n_tiles AS BIGINT) AS n_tiles,
-        |  CAST(n_cells AS BIGINT) AS n_cells,
-        |  CAST(sum_v AS BIGINT) AS sum_v
-        |FROM (SELECT * FROM s1 UNION ALL SELECT * FROM s2)
-        |ORDER BY snap""".stripMargin,
-
-    // m1: keeper set + md5 permutation + batch arithmetic in closed
-    // form ('dup-k' < 'img-k' so planted duplicates win the keeper rule)
-    "m1_contrastive_batches" ->
-      """WITH ids AS (
-        |  SELECT CASE WHEN i.i % 4 = 0
-        |      THEN 'dup-' || lpad(CAST(i.i AS VARCHAR), 8, '0')
-        |      ELSE 'img-' || lpad(CAST(i.i AS VARCHAR), 8, '0') END AS image_id
-        |  FROM range(64) i(i)),
-        |r AS (SELECT image_id,
-        |    row_number() OVER (ORDER BY md5(image_id), image_id) - 1 AS idx
-        |  FROM ids)
-        |SELECT image_id, CAST(idx // 16 AS BIGINT) AS batch_id,
-        |  CAST(idx % 16 AS BIGINT) AS pos
-        |FROM r ORDER BY image_id""".stripMargin,
-
-    // m2: per-modality md5 permutations + the period/offset slot
-    // arithmetic; periods = min(500/4, 64/2, 100/1, 8/1) = 8
-    "m2_mixture_interleave" ->
-      """WITH t AS (SELECT 'doc-' || CAST(doc_id AS VARCHAR) AS id FROM documents),
-        |i AS (SELECT 'img-' || lpad(CAST(x.x AS VARCHAR), 8, '0') AS id FROM range(64) x(x)),
-        |a AS (SELECT 'wav-' || CAST(x.x AS VARCHAR) AS id FROM range(100) x(x)),
-        |v AS (SELECT 'gif-' || CAST(x.x AS VARCHAR) AS id FROM range(8) x(x)),
-        |ti AS (SELECT id, row_number() OVER (ORDER BY md5(id), id) - 1 AS idx FROM t),
-        |ii AS (SELECT id, row_number() OVER (ORDER BY md5(id), id) - 1 AS idx FROM i),
-        |ai AS (SELECT id, row_number() OVER (ORDER BY md5(id), id) - 1 AS idx FROM a),
-        |vi AS (SELECT id, row_number() OVER (ORDER BY md5(id), id) - 1 AS idx FROM v)
-        |SELECT modality, id AS item_id, CAST(global_pos AS BIGINT) AS global_pos FROM (
-        |  SELECT 'text' AS modality, id, (idx // 4) * 8 + 0 + idx % 4 AS global_pos
-        |    FROM ti WHERE idx < 32
-        |  UNION ALL
-        |  SELECT 'image', id, (idx // 2) * 8 + 4 + idx % 2 FROM ii WHERE idx < 16
-        |  UNION ALL
-        |  SELECT 'audio', id, (idx // 1) * 8 + 6 + idx % 1 FROM ai WHERE idx < 8
-        |  UNION ALL
-        |  SELECT 'video', id, (idx // 1) * 8 + 7 + idx % 1 FROM vi WHERE idx < 8)
-        |ORDER BY global_pos""".stripMargin,
-
-    // i8: the same patch grid from the closed-form exact-corpus codes —
-    // patch idx = (r/16)*16 + c/16, grouped per (image, patch)
-    "i8_patchify" ->
-      """WITH px AS (
-        |  SELECT t.i AS i, r.r AS r, c.c AS c,
-        |    ((((t.i // 8) * 256 + r.r) * 31
-        |      + ((t.i % 8) * 256 + c.c) * 17) % 1000) AS code
-        |  FROM range(64) t(i), range(256) r(r), range(256) c(c)),
-        |pp AS (SELECT i, (r // 16) * 16 + (c // 16) AS pidx,
-        |    sum(code) AS psum, max(code) AS pmax
-        |  FROM px GROUP BY 1, 2)
-        |SELECT 'img-' || lpad(CAST(i AS VARCHAR), 8, '0') AS image_id,
-        |  CAST(count(*) AS BIGINT) AS n_patches,
-        |  CAST(sum(pidx * psum) AS BIGINT) AS patch_wsum,
-        |  CAST(sum(pmax) AS BIGINT) AS sum_patch_max
-        |FROM pp GROUP BY i ORDER BY image_id""".stripMargin,
-
-    // i9: the normalization constants straight from the closed-form
-    // exact-corpus codes, grouped by grid column (shard = i % 8)
-    "i9_pixel_stats" ->
-      """WITH px AS (
-        |  SELECT t.i AS i,
-        |    ((((t.i // 8) * 256 + r.r) * 31
-        |      + ((t.i % 8) * 256 + c.c) * 17) % 1000) AS code
-        |  FROM range(64) t(i), range(256) r(r), range(256) c(c))
-        |SELECT CAST(i % 8 AS BIGINT) AS shard,
-        |  CAST(count(*) AS BIGINT) AS n_px,
-        |  CAST(sum(code) AS BIGINT) AS sum_code,
-        |  CAST(sum(code * code) AS BIGINT) AS sum_sq,
-        |  CAST(min(code) AS BIGINT) AS min_code,
-        |  CAST(max(code) AS BIGINT) AS max_code
-        |FROM px GROUP BY 1 ORDER BY shard""".stripMargin,
-
-    // i10: the exact CDF remap replicated in SQL — per-image histogram
-    // over the closed-form codes, window-sum CDF ordered by code, cdfmin
-    // = the smallest present code's cumulative count, then the same
-    // floor division (all operands positive, so DuckDB // == the
-    // engine's Long '/'); 65536 px per image, codes 0..999
-    "i10_hist_equalize" ->
-      """WITH px AS (
-        |  SELECT t.i AS i,
-        |    ((((t.i // 8) * 256 + r.r) * 31
-        |      + ((t.i % 8) * 256 + c.c) * 17) % 1000) AS code
-        |  FROM range(64) t(i), range(256) r(r), range(256) c(c)),
-        |hist AS (SELECT i, code, count(*) AS n FROM px GROUP BY 1, 2),
-        |cdf AS (SELECT i, code, n,
-        |    sum(n) OVER (PARTITION BY i ORDER BY code) AS cum FROM hist),
-        |mn AS (SELECT i, min(cum) AS cdfmin FROM cdf GROUP BY i),
-        |eq AS (SELECT c.i AS i, c.n AS n,
-        |    ((c.cum - m.cdfmin) * 255) // (65536 - m.cdfmin) AS e
-        |  FROM cdf c JOIN mn m ON c.i = m.i)
-        |SELECT 'img-' || lpad(CAST(i AS VARCHAR), 8, '0') AS image_id,
-        |  CAST(sum(e * n) AS BIGINT) AS eq_sum,
-        |  CAST(count(DISTINCT e) AS BIGINT) AS n_levels,
-        |  CAST(min(e) AS BIGINT) AS eq_min,
-        |  CAST(max(e) AS BIGINT) AS eq_max
-        |FROM eq GROUP BY i ORDER BY image_id""".stripMargin,
-
-    // i11: ONE global CDF over all 64 images' codes (total 4,194,304
-    // pixels), same floor-division rule, then per-image rollups
-    "i11_global_equalize" ->
-      """WITH px AS (
-        |  SELECT t.i AS i,
-        |    ((((t.i // 8) * 256 + r.r) * 31
-        |      + ((t.i % 8) * 256 + c.c) * 17) % 1000) AS code
-        |  FROM range(64) t(i), range(256) r(r), range(256) c(c)),
-        |ghist AS (SELECT code, count(*) AS n FROM px GROUP BY 1),
-        |gcdf AS (SELECT code, n,
-        |    sum(n) OVER (ORDER BY code) AS cum FROM ghist),
-        |gmn AS (SELECT min(cum) AS cdfmin FROM gcdf),
-        |gmap AS (SELECT code,
-        |    ((cum - (SELECT cdfmin FROM gmn)) * 255)
-        |      // (4194304 - (SELECT cdfmin FROM gmn)) AS e
-        |  FROM gcdf),
-        |eq AS (SELECT px.i AS i, gmap.e AS e
-        |  FROM px JOIN gmap ON px.code = gmap.code)
-        |SELECT 'img-' || lpad(CAST(i AS VARCHAR), 8, '0') AS image_id,
-        |  CAST(sum(e) AS BIGINT) AS eq_sum,
-        |  CAST(count(DISTINCT e) AS BIGINT) AS n_levels,
-        |  CAST(min(e) AS BIGINT) AS eq_min,
-        |  CAST(max(e) AS BIGINT) AS eq_max
-        |FROM eq GROUP BY i ORDER BY image_id""".stripMargin,
-
-    // m3: the composite curriculum key (zeropad(tier) | md5(id))
-    // replicated as a row_number in closed form
-    "m3_curriculum" ->
-      """WITH d AS (SELECT CAST(doc_id AS VARCHAR) AS id,
-        |    CASE WHEN n_chars < 200 THEN 0
-        |         WHEN n_chars < 400 THEN 1 ELSE 2 END AS tier
-        |  FROM documents)
-        |SELECT id AS doc_id, CAST(tier AS BIGINT) AS tier,
-        |  row_number() OVER (
-        |    ORDER BY lpad(CAST(tier AS VARCHAR), 10, '0') || '|' || md5(id),
-        |      id) - 1 AS global_pos
-        |FROM d ORDER BY global_pos""".stripMargin,
-
-    // m5: the salted-hash permutation per epoch as one row_number over
-    // the composite (zeropad(epoch) | md5(epoch:id)) key
-    "m5_epoch_order" ->
-      """WITH d AS (SELECT CAST(doc_id AS VARCHAR) AS id FROM documents),
-        |x AS (SELECT id, e.e AS epoch FROM d, range(3) e(e))
-        |SELECT id AS doc_id, CAST(epoch AS BIGINT) AS epoch,
-        |  row_number() OVER (
-        |    ORDER BY lpad(CAST(epoch AS VARCHAR), 10, '0') || '|'
-        |      || md5(CAST(epoch AS VARCHAR) || ':' || id), id) - 1
-        |    AS global_pos
-        |FROM x ORDER BY global_pos""".stripMargin,
-
-    // m4: i4's full phash kernel -> i5's recursive closure (non-keeper
-    // members drop) -> m1's md5 permutation + batch arithmetic over the
-    // survivors
-    "m4_curated_batches" ->
-      s"""WITH RECURSIVE $i4PairCtes,
-        |p AS (SELECT ia, ib FROM ham WHERE hamming <= 6),
-        |e AS (SELECT ia AS n, ib AS m FROM p UNION ALL SELECT ib, ia FROM p),
-        |reach(n, lbl) AS (
-        |  SELECT n, n FROM (SELECT DISTINCT n FROM e) t
-        |  UNION
-        |  SELECT e.m, reach.lbl FROM reach JOIN e ON e.n = reach.n),
-        |dropped AS (SELECT n FROM reach GROUP BY n HAVING min(lbl) < n),
-        |ids AS (SELECT 'img-' || lpad(CAST(i.i AS VARCHAR), 8, '0') AS image_id
-        |  FROM range(1024) i(i) WHERE i.i NOT IN (SELECT n FROM dropped)),
-        |r AS (SELECT image_id,
-        |    row_number() OVER (ORDER BY md5(image_id), image_id) - 1 AS idx
-        |  FROM ids)
-        |SELECT image_id, CAST(idx // 16 AS BIGINT) AS batch_id,
-        |  CAST(idx % 16 AS BIGINT) AS pos
-        |FROM r ORDER BY image_id""".stripMargin,
-
-    // i7: the augmentation checksums from the closed-form exact-corpus
-    // codes — flip/rot are position-weighted over the PERMUTED arrays
-    // (substituted back to source coordinates), crop is the center
-    // 128x128 selection
-    "i7_image_augment" ->
-      """WITH px AS (
-        |  SELECT t.i AS i, r.r AS r, c.c AS c,
-        |    ((((t.i // 8) * 256 + r.r) * 31
-        |      + ((t.i % 8) * 256 + c.c) * 17) % 1000) AS code
-        |  FROM range(64) t(i), range(256) r(r), range(256) c(c))
-        |SELECT 'img-' || lpad(CAST(i AS VARCHAR), 8, '0') AS image_id,
-        |  CAST(sum((r * 256 + 255 - c) * code) AS BIGINT) AS flip_wsum,
-        |  CAST(sum((c * 256 + 255 - r) * code) AS BIGINT) AS rot_wsum,
-        |  CAST(sum(CASE WHEN r BETWEEN 64 AND 191 AND c BETWEEN 64 AND 191
-        |       THEN code ELSE 0 END) AS BIGINT) AS crop_qsum
-        |FROM px GROUP BY i ORDER BY image_id""".stripMargin,
-
-    // s5: the outer variant — unmatched clicks carry NULL purchase/lag
-    "s5_stream_join_outer" ->
-      """SELECT c.event_id AS click_id, p.event_id AS purchase_id,
-        |  c.user_id AS user_id,
-        |  epoch_ms(p.ts) - epoch_ms(c.ts) AS lag_ms
-        |FROM events c LEFT JOIN events p
-        |  ON c.user_id = p.user_id
-        | AND p.event_type = 'purchase'
-        | AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 30 MINUTE
-        |WHERE c.event_type = 'click'
-        |ORDER BY click_id, purchase_id""".stripMargin,
-
-    "q5_cell_functions" -> {
-      // Morton interleave replicated in pure bit-op SQL: a CTE chain of the
-      // 5-step spread over 4 lanes (cx/cy at res 6 and 7)
-      val masks = Seq(
-        (16, 281470681808895L), (8, 71777214294589695L),
-        (4, 1085102592571150095L), (2, 3689348814741910323L),
-        (1, 6148914691236517205L))
-      val lanes = Seq("x6", "y6", "x7", "y7")
-      val steps = masks.zipWithIndex.map { case ((sh, m), k) =>
-        val cols = lanes.map(l => s"(($l | ($l << $sh)) & $m) AS $l").mkString(", ")
-        s"s${k + 1} AS (SELECT $cols FROM s$k)"
-      }.mkString(",\n")
-      val res6 = 6L << 58
-      val res7 = 7L << 58
-      s"""WITH px AS (SELECT (i % 300) AS row, ((i * 7) % 280) AS col FROM range(5000) t(i)),
-         |s0 AS (SELECT (col >> 6) & 536870911 AS x6, (row >> 6) & 536870911 AS y6,
-         |  (col >> 7) & 536870911 AS x7, (row >> 7) & 536870911 AS y7 FROM px),
-         |$steps,
-         |cells AS (SELECT (x6 | (y6 << 1) | $res6) AS cell,
-         |  (x7 | (y7 << 1) | $res7) AS parent FROM s5)
-         |SELECT cell, parent, CAST(count(*) AS BIGINT) AS n
-         |FROM cells GROUP BY 1, 2 ORDER BY 1""".stripMargin
-    },
-
-    "r16_tif_ingest" ->
-      s"""WITH g AS ($demSql)
-         |SELECT CAST(r // 16 AS BIGINT) AS band,
-         |  CAST(count(v) AS BIGINT) AS n_valid, sum(v) AS sum_v
-         |FROM g GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "r14_resample_avg" ->
-      s"""WITH g AS ($demSql)
-         |SELECT r // 4 AS row, c // 4 AS col, avg(v) AS v
-         |FROM g GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "r15_resample_med" ->
-      s"""WITH g AS ($demSql)
-         |SELECT r // 4 AS row, c // 4 AS col, median(v) AS v
-         |FROM g GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "d1_dedup_sets" ->
-      """SELECT md5(array_to_string(list_sort(list_distinct(string_split(text, ' '))), ' ')) AS sig,
-        | min(doc_id) AS keep_id, CAST(count(*) AS BIGINT) AS n_docs
-        |FROM documents GROUP BY 1 HAVING count(*) > 1 ORDER BY 1""".stripMargin,
-
-    // d18: NOT EXISTS over the same signature rule
-    "d18_incremental_dedup" ->
-      """WITH sigs AS (
-        |  SELECT doc_id,
-        |    md5(array_to_string(list_sort(list_distinct(string_split(text, ' '))), ' ')) AS sig
-        |  FROM documents)
-        |SELECT n.doc_id, n.sig FROM sigs n
-        |WHERE n.doc_id % 2 = 1
-        |  AND NOT EXISTS (SELECT 1 FROM sigs e
-        |    WHERE e.doc_id % 2 = 0 AND e.sig = n.sig)
-        |ORDER BY n.doc_id""".stripMargin,
-
-    // d22: the same sig-window + source rollup in SQL
-    "d22_source_stats" ->
-      """WITH sigs AS (SELECT doc_id, source, n_chars,
-        |    md5(array_to_string(list_sort(list_distinct(string_split(text, ' '))), ' ')) AS sig
-        |  FROM documents),
-        |d AS (SELECT source, n_chars,
-        |    count(*) OVER (PARTITION BY sig) AS sig_n FROM sigs)
-        |SELECT source, count(*) AS n_docs,
-        |  CAST(sum(CASE WHEN sig_n > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup,
-        |  CAST(sum(n_chars) AS BIGINT) AS chars,
-        |  CAST(sum(CASE WHEN sig_n > 1 THEN 1 ELSE 0 END) AS DOUBLE) / count(*) AS dup_frac,
-        |  sum(CASE WHEN sig_n > 1 THEN 1 ELSE 0 END) * 5 <= count(*) AS keep
-        |FROM d GROUP BY source ORDER BY source""".stripMargin,
-
-    // e5: e1's exact top-5 CTE extended with the label vote (majority,
-    // ties -> smallest label)
-    "e5_knn_classify" ->
-      """WITH q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < 50),
-        |p AS (SELECT q.qid, e.vec_id AS vid, e.label AS label,
-        |  (SELECT sum(q.qv[i + 1]::DOUBLE * e.embedding[i + 1]::DOUBLE) FROM range(64) t(i)) AS dot,
-        |  sqrt((SELECT sum(q.qv[i + 1]::DOUBLE * q.qv[i + 1]::DOUBLE) FROM range(64) t(i))) AS qn,
-        |  sqrt((SELECT sum(e.embedding[i + 1]::DOUBLE * e.embedding[i + 1]::DOUBLE) FROM range(64) t(i))) AS en
-        |  FROM q, embeddings e WHERE e.vec_id != q.qid),
-        |r AS (SELECT qid, vid, label,
-        |  row_number() OVER (PARTITION BY qid ORDER BY dot / (qn * en) DESC, vid) AS rank
-        |  FROM p),
-        |votes AS (SELECT qid, CAST(label AS BIGINT) AS pred, count(*) AS votes
-        |  FROM r WHERE rank <= 5 GROUP BY 1, 2),
-        |best AS (SELECT qid, pred, votes,
-        |  row_number() OVER (PARTITION BY qid ORDER BY votes DESC, pred) AS vr
-        |  FROM votes)
-        |SELECT b.qid, CAST(e.label AS BIGINT) AS true_label, b.pred, b.votes
-        |FROM best b JOIN embeddings e ON e.vec_id = b.qid
-        |WHERE b.vr = 1 ORDER BY b.qid""".stripMargin,
-
-    // g1: the same 3 power iterations unrolled as CTEs — teleport
-    // 1/512, damping 7/8, contributions rank/outdeg summed by dst; all
-    // dyadic so the doubles match bit-for-bit and pr*2^18 is integral
-    "g1_pagerank" ->
-      """WITH nodes AS (SELECT i AS id FROM range(64) t(i)),
-        |e AS (
-        |  SELECT i AS src, (2*i+1) % 64 AS dst FROM range(64) t(i)
-        |  UNION ALL
-        |  SELECT i AS src, (i*i+7) % 64 AS dst FROM range(64) t(i)),
-        |deg AS (SELECT src, count(*) AS outdeg FROM e GROUP BY 1),
-        |r0 AS (SELECT id, 1::DOUBLE/64 AS pr FROM nodes),
-        |c1 AS (SELECT e.dst AS id, sum(r0.pr / d.outdeg) AS c
-        |  FROM e JOIN r0 ON r0.id = e.src JOIN deg d ON d.src = e.src GROUP BY 1),
-        |r1 AS (SELECT n.id, 1::DOUBLE/512 + (7::DOUBLE/8) * coalesce(c1.c, 0) AS pr
-        |  FROM nodes n LEFT JOIN c1 ON c1.id = n.id),
-        |c2 AS (SELECT e.dst AS id, sum(r1.pr / d.outdeg) AS c
-        |  FROM e JOIN r1 ON r1.id = e.src JOIN deg d ON d.src = e.src GROUP BY 1),
-        |r2 AS (SELECT n.id, 1::DOUBLE/512 + (7::DOUBLE/8) * coalesce(c2.c, 0) AS pr
-        |  FROM nodes n LEFT JOIN c2 ON c2.id = n.id),
-        |c3 AS (SELECT e.dst AS id, sum(r2.pr / d.outdeg) AS c
-        |  FROM e JOIN r2 ON r2.id = e.src JOIN deg d ON d.src = e.src GROUP BY 1),
-        |r3 AS (SELECT n.id, 1::DOUBLE/512 + (7::DOUBLE/8) * coalesce(c3.c, 0) AS pr
-        |  FROM nodes n LEFT JOIN c3 ON c3.id = n.id)
-        |SELECT id AS node, pr, CAST(pr * 262144 AS BIGINT) AS pr_scaled
-        |FROM r3 ORDER BY id""".stripMargin,
-
-    // g5: the g1 unrolled-iteration oracle with the PERSONALIZED
-    // teleport — restart mass 1/16 lands only on {0, 13} (no dangling
-    // nodes in this graph, so the dangling term is exactly 0)
-    "g5_personalized_pr" ->
-      """WITH nodes AS (SELECT i AS id FROM range(64) t(i)),
-        |e AS (
-        |  SELECT i AS src, (2*i+1) % 64 AS dst FROM range(64) t(i)
-        |  UNION ALL
-        |  SELECT i AS src, (i*i+7) % 64 AS dst FROM range(64) t(i)),
-        |deg AS (SELECT src, count(*) AS outdeg FROM e GROUP BY 1),
-        |r0 AS (SELECT id, CASE WHEN id IN (0, 13) THEN 1::DOUBLE/2
-        |    ELSE 0::DOUBLE END AS pr FROM nodes),
-        |c1 AS (SELECT e.dst AS id, sum(r0.pr / d.outdeg) AS c
-        |  FROM e JOIN r0 ON r0.id = e.src JOIN deg d ON d.src = e.src GROUP BY 1),
-        |r1 AS (SELECT n.id, CASE WHEN n.id IN (0, 13) THEN 1::DOUBLE/16
-        |    ELSE 0::DOUBLE END + (7::DOUBLE/8) * coalesce(c1.c, 0) AS pr
-        |  FROM nodes n LEFT JOIN c1 ON c1.id = n.id),
-        |c2 AS (SELECT e.dst AS id, sum(r1.pr / d.outdeg) AS c
-        |  FROM e JOIN r1 ON r1.id = e.src JOIN deg d ON d.src = e.src GROUP BY 1),
-        |r2 AS (SELECT n.id, CASE WHEN n.id IN (0, 13) THEN 1::DOUBLE/16
-        |    ELSE 0::DOUBLE END + (7::DOUBLE/8) * coalesce(c2.c, 0) AS pr
-        |  FROM nodes n LEFT JOIN c2 ON c2.id = n.id),
-        |c3 AS (SELECT e.dst AS id, sum(r2.pr / d.outdeg) AS c
-        |  FROM e JOIN r2 ON r2.id = e.src JOIN deg d ON d.src = e.src GROUP BY 1),
-        |r3 AS (SELECT n.id, CASE WHEN n.id IN (0, 13) THEN 1::DOUBLE/16
-        |    ELSE 0::DOUBLE END + (7::DOUBLE/8) * coalesce(c3.c, 0) AS pr
-        |  FROM nodes n LEFT JOIN c3 ON c3.id = n.id)
-        |SELECT id AS node, pr, CAST(pr * 262144 AS BIGINT) AS pr_scaled
-        |FROM r3 ORDER BY id""".stripMargin,
-
-    // g2: recursive-CTE walk over the same edges; min depth per node,
-    // depth bound 64 keeps the state space finite
-    "g2_bfs_depth" ->
-      """WITH RECURSIVE e AS (
-        |  SELECT i AS src, (2*i+1) % 64 AS dst FROM range(64) t(i)
-        |  UNION ALL
-        |  SELECT i AS src, (i*i+7) % 64 AS dst FROM range(64) t(i)),
-        |walk(node, d) AS (
-        |  SELECT s.s, 0 FROM (VALUES (0), (13)) s(s)
-        |  UNION
-        |  SELECT e.dst, walk.d + 1 FROM walk JOIN e ON e.src = walk.node
-        |  WHERE walk.d < 64)
-        |SELECT CAST(node AS BIGINT) AS node, CAST(min(d) AS BIGINT) AS dist
-        |FROM walk GROUP BY node ORDER BY node""".stripMargin,
-
-    // g3: brute triple-join triangle count on the same closed-form edges
-    // (a<b<c canonical corners), per-node participation via corner union
-    "g3_triangles" ->
-      """WITH raw AS (
-        |  SELECT i AS x, (i+1) % 60 AS y FROM range(60) t(i)
-        |  UNION ALL
-        |  SELECT i AS x, (i+2) % 60 AS y FROM range(60) t(i)
-        |  UNION ALL
-        |  SELECT i AS x, (i*i+7) % 60 AS y FROM range(60) t(i)),
-        |e AS (
-        |  SELECT DISTINCT least(x, y) AS a, greatest(x, y) AS b
-        |  FROM raw WHERE x <> y),
-        |tri AS (
-        |  SELECT e1.a AS x, e1.b AS y, e2.b AS z
-        |  FROM e e1
-        |  JOIN e e2 ON e2.a = e1.b
-        |  JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b),
-        |corners AS (
-        |  SELECT x AS node FROM tri
-        |  UNION ALL SELECT y FROM tri
-        |  UNION ALL SELECT z FROM tri)
-        |SELECT CAST(node AS BIGINT) AS node, count(*) AS n_tri
-        |FROM corners GROUP BY node ORDER BY node""".stripMargin,
-
-    // g4: the peel replayed as SIX unrolled degree-filter rounds (the
-    // fixture's one-rung-per-round cascade completes in 4; rounds 5-6
-    // prove the fixpoint). Each round: recount degrees over surviving
-    // edges, keep edges whose BOTH endpoints still hold >= 3. Every CTE
-    // is MATERIALIZED — inlined, the self-referencing round chain
-    // re-expands ~5^6-fold and DuckDB plans for minutes.
-    "g4_kcore" ->
-      """WITH e0 AS MATERIALIZED (
-        |  SELECT i.i AS a, j.j AS b FROM range(6) i(i), range(6) j(j)
-        |    WHERE i.i < j.j
-        |  UNION ALL SELECT 10 + i.i, 10 + (i.i + 1) % 8 FROM range(8) i(i)
-        |  UNION ALL SELECT 20 + i.i, 20 + (i.i + 1) % 8 FROM range(8) i(i)
-        |  UNION ALL SELECT 10 + i.i, 20 + i.i FROM range(8) i(i)
-        |  UNION ALL SELECT 30 + i.i, 31 + i.i FROM range(3) i(i)
-        |  UNION ALL SELECT 40 + i.i, 41 + i.i FROM range(3) i(i)
-        |  UNION ALL SELECT 30 + i.i, 40 + i.i FROM range(4) i(i)
-        |  UNION ALL SELECT 5, 30
-        |  UNION ALL SELECT 4, 40),
-        |d0 AS MATERIALIZED (SELECT node, count(*) AS d FROM
-        |  (SELECT a AS node FROM e0 UNION ALL SELECT b FROM e0) GROUP BY 1),
-        |e1 AS MATERIALIZED (SELECT e.a, e.b FROM e0 e JOIN d0 x ON x.node = e.a
-        |  JOIN d0 y ON y.node = e.b WHERE x.d >= 3 AND y.d >= 3),
-        |d1 AS MATERIALIZED (SELECT node, count(*) AS d FROM
-        |  (SELECT a AS node FROM e1 UNION ALL SELECT b FROM e1) GROUP BY 1),
-        |e2 AS MATERIALIZED (SELECT e.a, e.b FROM e1 e JOIN d1 x ON x.node = e.a
-        |  JOIN d1 y ON y.node = e.b WHERE x.d >= 3 AND y.d >= 3),
-        |d2 AS MATERIALIZED (SELECT node, count(*) AS d FROM
-        |  (SELECT a AS node FROM e2 UNION ALL SELECT b FROM e2) GROUP BY 1),
-        |e3 AS MATERIALIZED (SELECT e.a, e.b FROM e2 e JOIN d2 x ON x.node = e.a
-        |  JOIN d2 y ON y.node = e.b WHERE x.d >= 3 AND y.d >= 3),
-        |d3 AS MATERIALIZED (SELECT node, count(*) AS d FROM
-        |  (SELECT a AS node FROM e3 UNION ALL SELECT b FROM e3) GROUP BY 1),
-        |e4 AS MATERIALIZED (SELECT e.a, e.b FROM e3 e JOIN d3 x ON x.node = e.a
-        |  JOIN d3 y ON y.node = e.b WHERE x.d >= 3 AND y.d >= 3),
-        |d4 AS MATERIALIZED (SELECT node, count(*) AS d FROM
-        |  (SELECT a AS node FROM e4 UNION ALL SELECT b FROM e4) GROUP BY 1),
-        |e5 AS MATERIALIZED (SELECT e.a, e.b FROM e4 e JOIN d4 x ON x.node = e.a
-        |  JOIN d4 y ON y.node = e.b WHERE x.d >= 3 AND y.d >= 3),
-        |d5 AS MATERIALIZED (SELECT node, count(*) AS d FROM
-        |  (SELECT a AS node FROM e5 UNION ALL SELECT b FROM e5) GROUP BY 1),
-        |e6 AS MATERIALIZED (SELECT e.a, e.b FROM e5 e JOIN d5 x ON x.node = e.a
-        |  JOIN d5 y ON y.node = e.b WHERE x.d >= 3 AND y.d >= 3)
-        |SELECT CAST(node AS BIGINT) AS node,
-        |  CAST(count(*) AS BIGINT) AS core_deg FROM
-        |  (SELECT a AS node FROM e6 UNION ALL SELECT b FROM e6)
-        |GROUP BY 1 ORDER BY node""".stripMargin,
-
-    // e6: SQ8 integer-layer replication — scales, floor(+0.5) int8 codes,
-    // exact integer candidate dots, shortlist 32 ranked by (idot, vid).
-    // Integer end to end; the float re-rank is ScalaTest-gated.
-    "e6_ann_sq8" ->
-      """WITH sc AS (
-        |  SELECT i.i AS d, max(abs(e.embedding[i.i + 1]::DOUBLE)) AS s
-        |  FROM embeddings e, range(64) i(i) GROUP BY 1),
-        |cq AS (
-        |  SELECT e.vec_id AS vid, i.i AS d,
-        |    CASE WHEN sc.s = 0 THEN 0
-        |      ELSE CAST(greatest(-127, least(127,
-        |        floor(127 * e.embedding[i.i + 1]::DOUBLE / sc.s + 0.5))) AS BIGINT)
-        |    END AS q
-        |  FROM embeddings e, range(64) i(i), sc WHERE sc.d = i.i),
-        |dots AS (
-        |  SELECT q.vid AS qid, b.vid AS vid, sum(q.q * b.q) AS idot
-        |  FROM cq q JOIN cq b ON b.d = q.d AND b.vid != q.vid
-        |  WHERE q.vid < 10 GROUP BY 1, 2)
-        |SELECT qid, rank, vid, idot FROM (
-        |  SELECT qid, vid, idot,
-        |    CAST(row_number() OVER (PARTITION BY qid ORDER BY idot DESC, vid) AS BIGINT) AS rank
-        |  FROM dots)
-        |WHERE rank <= 32 ORDER BY qid, rank""".stripMargin,
-
-    // d21: identical rule to d18 — the Bloom pre-filter cannot change
-    // the result (no false negatives; positives are exact-verified)
-    "d21_bloom_dedup" ->
-      """WITH sigs AS (
-        |  SELECT doc_id,
-        |    md5(array_to_string(list_sort(list_distinct(string_split(text, ' '))), ' ')) AS sig
-        |  FROM documents)
-        |SELECT n.doc_id, n.sig FROM sigs n
-        |WHERE n.doc_id % 2 = 1
-        |  AND NOT EXISTS (SELECT 1 FROM sigs e
-        |    WHERE e.doc_id % 2 = 0 AND e.sig = n.sig)
-        |ORDER BY n.doc_id""".stripMargin,
-
-    // d24: the same window arithmetic in SQL — token list, chunk index
-    // range (end-exclusive range == Spark's inclusive sequence), 1-based
-    // clamped list slice, md5 of the space-rejoined window
-    "d24_chunking" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split(trim(text), ' '), x -> x != '') AS t
-        |  FROM documents),
-        |n AS (SELECT doc_id, t, len(t) AS n FROM toks WHERE len(t) > 0),
-        |c AS (SELECT doc_id, t, n,
-        |  unnest(range(0, (n - 1) // 24 + 1)) AS chunk_idx FROM n)
-        |SELECT doc_id, CAST(chunk_idx AS INT) AS chunk_idx,
-        |  CAST(chunk_idx * 24 AS INT) AS start_tok,
-        |  CAST(least(32, n - chunk_idx * 24) AS INT) AS n_tok,
-        |  md5(array_to_string(t[chunk_idx * 24 + 1 : chunk_idx * 24 + 32], ' ')) AS chunk_md5
-        |FROM c ORDER BY doc_id, chunk_idx""".stripMargin,
-
-    // d25: full BPE in SQL — see bpeOracleSql
-    "d25_bpe_merges" -> bpeOracleSql(6),
-
-    // d26: the same learned chain applied back to the corpus
-    "d26_bpe_encode" -> bpeEncodeOracleSql(6),
-
-    // d27: the same packing arithmetic as one exclusive-prefix window
-    "d27_seq_packing" ->
-      """WITH t AS (SELECT doc_id,
-        |    len(list_filter(string_split(trim(text), ' '), x -> x != '')) AS n_tok
-        |  FROM documents),
-        |c AS (SELECT doc_id, n_tok,
-        |    coalesce(sum(n_tok) OVER (ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS start_tok
-        |  FROM t WHERE n_tok > 0)
-        |SELECT doc_id, CAST(n_tok AS BIGINT) AS n_tok,
-        |  CAST(start_tok AS BIGINT) AS start_tok,
-        |  CAST(start_tok // 512 AS BIGINT) AS first_seq,
-        |  CAST((start_tok + n_tok - 1) // 512 AS BIGINT) AS last_seq
-        |FROM c ORDER BY doc_id""".stripMargin,
-
-    // d28: same synthetic crawl-variant URL construction, canonicalized
-    // by the same 5 regex passes (each pattern matches at most once, so
-    // DuckDB's first-match regexp_replace agrees with Spark's)
-    "d28_url_dedup" ->
-      """WITH half AS (SELECT greatest(count(*) // 2, 1) AS h FROM documents),
-        |raw AS (
-        |  SELECT doc_id,
-        |    (CASE WHEN doc_id % 3 = 0 THEN 'HTTPS://WWW.' ELSE 'https://' END)
-        |    || 'site' || CAST((doc_id % h) % 20 AS VARCHAR) || '.example.com'
-        |    || (CASE WHEN doc_id % 4 = 0 THEN ':443' ELSE '' END)
-        |    || '/docs/' || CAST(doc_id % h AS VARCHAR)
-        |    || (CASE WHEN doc_id % 2 = 0 THEN '/' ELSE '' END)
-        |    || (CASE WHEN doc_id % 5 = 0 THEN '?utm_source=feed&utm_campaign=x' ELSE '' END)
-        |    || (CASE WHEN doc_id % 7 = 0 THEN '#section-2' ELSE '' END) AS url
-        |  FROM documents, half),
-        |canon AS (
-        |  SELECT doc_id,
-        |    regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-        |      regexp_replace(lower(url), '#.*$', ''),
-        |      '\?utm_[^#]*$', ''), '://www\.', '://'), ':443/', '/'),
-        |      '/$', '') AS cu
-        |  FROM raw)
-        |SELECT cu AS url, CAST(min(doc_id) AS BIGINT) AS keep_id,
-        |  CAST(count(*) AS BIGINT) AS n_ids
-        |FROM canon GROUP BY cu ORDER BY url""".stripMargin,
-
-    // d29: identical rank table (frequency desc, word asc) and identical
-    // integer cross-multiply keep rule — no float anywhere
-    // m6: identical (n_tok, doc_id) total order via row_number, identical
-    // batch fill and padding-waste arithmetic — all integers
-    "m6_length_buckets" ->
-      """WITH t AS (SELECT doc_id,
-        |    len(list_filter(string_split(trim(text), ' '), x -> x != '')) AS n_tok
-        |  FROM documents),
-        |r AS (SELECT doc_id, n_tok,
-        |    row_number() OVER (ORDER BY n_tok, doc_id) - 1 AS rn FROM t)
-        |SELECT CAST(rn // 8 AS BIGINT) AS batch_id,
-        |  CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(max(n_tok) AS BIGINT) AS max_len,
-        |  CAST(sum(n_tok) AS BIGINT) AS sum_len,
-        |  CAST(count(*) * max(n_tok) - sum(n_tok) AS BIGINT) AS pad_waste
-        |FROM r GROUP BY 1 ORDER BY batch_id""".stripMargin,
-
-    "d29_rank_fluency" ->
-      """WITH w AS (SELECT doc_id, unnest(string_split(trim(text), ' ')) AS w
-        |  FROM documents),
-        |ww AS (SELECT doc_id, w FROM w WHERE w != ''),
-        |r AS (SELECT w, CAST(row_number() OVER (ORDER BY count(*) DESC, w) AS BIGINT) AS rank
-        |  FROM ww GROUP BY w)
-        |SELECT d.doc_id, CAST(count(*) AS BIGINT) AS n_words,
-        |  CAST(sum(r.rank) AS BIGINT) AS sum_rank,
-        |  (sum(r.rank) <= 18 * count(*)) AS keep
-        |FROM ww d JOIN r USING (w)
-        |GROUP BY d.doc_id ORDER BY d.doc_id""".stripMargin,
-
-    // d30: the UNPRUNED brute — all distinct-token pairs filtered by
-    // levenshtein <= 1 (the deletion-key candidate set is an exact
-    // superset, so pruned must equal this)
-    "d30_fuzzy_join" ->
-      """WITH ids AS (SELECT i FROM range(400) t(i)),
-        |al(a) AS (SELECT 'abcdefghijklmnopqrst'),
-        |w AS (SELECT i,
-        |    substr(a, ((i*7+3)%20)+1, 1) || substr(a, ((i*11+5)%20)+1, 1)
-        |    || substr(a, ((i*13+7)%20)+1, 1) || substr(a, ((i*17+1)%20)+1, 1)
-        |    || substr(a, ((i*19+11)%20)+1, 1) || substr(a, ((i*23+2)%20)+1, 1) AS w
-        |  FROM ids, al),
-        |v AS (SELECT i, CASE i%3
-        |    WHEN 0 THEN substr(w, 1, i%6) || substr(w, (i%6)+2, 6)
-        |    WHEN 1 THEN substr(a, (((i*7+3) % 20 + 1 + (i%19)) % 20)+1, 1) || substr(w, 2, 6)
-        |    ELSE substr(w, 1, 3) || substr(a, ((i*29+4)%20)+1, 1) || substr(w, 4, 6)
-        |  END AS w FROM w, al),
-        |toks AS (SELECT DISTINCT w FROM (SELECT w FROM w UNION ALL SELECT w FROM v))
-        |SELECT x.w AS a, y.w AS b, CAST(levenshtein(x.w, y.w) AS BIGINT) AS dist
-        |FROM toks x JOIN toks y ON x.w < y.w AND levenshtein(x.w, y.w) <= 1
-        |ORDER BY a, b""".stripMargin,
-
-    // m7: per-source window-sum offsets + the first-multiple rule with
-    // the per-source step derived from the source index
-    "m7_mixture_sample" ->
-      """WITH t AS (SELECT source, doc_id,
-        |    len(list_filter(string_split(trim(text), ' '), x -> x != '')) AS n_tok,
-        |    400 + 300 * (CAST(substr(source, 4) AS INT) % 3) AS step
-        |  FROM documents),
-        |c AS (SELECT source, doc_id, n_tok, step,
-        |    coalesce(sum(n_tok) OVER (PARTITION BY source ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS start_w
-        |  FROM t)
-        |SELECT source, doc_id, CAST(n_tok AS BIGINT) AS weight,
-        |  CAST(start_w AS BIGINT) AS start_w,
-        |  CAST((start_w + (step - start_w % step) % step) // step AS BIGINT)
-        |    AS pick_idx
-        |FROM c
-        |WHERE n_tok > 0 AND (step - start_w % step) % step < n_tok
-        |ORDER BY source, doc_id""".stripMargin,
-
-    // d32: the same string-gram construction as d19 (engine xxhash64
-    // keys are pure transport), first-seen = min(doc_id) per gram type
-    "d32_novelty" ->
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        |gr AS (SELECT DISTINCT doc_id, g FROM (
-        |    SELECT doc_id,
-        |      unnest([w[i] || ' ' || w[i+1] || ' ' || w[i+2] || ' ' || w[i+3]
-        |        || ' ' || w[i+4] || ' ' || w[i+5] || ' ' || w[i+6] || ' ' || w[i+7]
-        |        for i in range(1, len(w) - 6)]) AS g
-        |    FROM toks WHERE len(w) >= 8)),
-        |fs AS (SELECT g, min(doc_id) AS first_doc FROM gr GROUP BY 1)
-        |SELECT gr.doc_id AS doc_id, CAST(count(*) AS BIGINT) AS n_types,
-        |  CAST(sum(CASE WHEN fs.first_doc = gr.doc_id THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_novel,
-        |  CAST(sum(CASE WHEN fs.first_doc = gr.doc_id THEN 1 ELSE 0 END)
-        |    AS DOUBLE) / CAST(count(*) AS DOUBLE) AS novel_frac
-        |FROM gr JOIN fs USING (g)
-        |GROUP BY 1 ORDER BY doc_id""".stripMargin,
-
-    // d31: the cumulative-token line as a window sum (the oracle MAY use
-    // the global window — it is DuckDB, not the 100 TB plan), then the
-    // same first-multiple-of-step rule in pure integer arithmetic
-    "d31_weighted_sample" ->
-      """WITH t AS (SELECT doc_id,
-        |    len(list_filter(string_split(trim(text), ' '), x -> x != '')) AS n_tok
-        |  FROM documents),
-        |c AS (SELECT doc_id, n_tok,
-        |    coalesce(sum(n_tok) OVER (ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS start_w
-        |  FROM t)
-        |SELECT doc_id, CAST(n_tok AS BIGINT) AS weight,
-        |  CAST(start_w AS BIGINT) AS start_w,
-        |  CAST((start_w + (997 - start_w % 997) % 997) // 997 AS BIGINT)
-        |    AS pick_idx
-        |FROM c
-        |WHERE n_tok > 0 AND (997 - start_w % 997) % 997 < n_tok
-        |ORDER BY doc_id""".stripMargin,
-
-    // e10: both Lloyd rounds replayed in SQL — per-round rank-1 argmin
-    // (tie-break lowest cl, matching the kernel's strict-< scan), avg
-    // per captured cluster, lost clusters keep their previous centroid;
-    // dyadic inputs make every double op bit-identical across engines
-    "e10_kmeans_assign" ->
-      """WITH p AS MATERIALIZED (
-        |  SELECT t.i AS vid,
-        |    (CASE WHEN t.i // 12 = 1 THEN 100 ELSE 0 END)
-        |      + (t.i % 12) % 5 - 2 AS x,
-        |    (CASE WHEN t.i // 12 = 2 THEN 100 ELSE 0 END)
-        |      + ((t.i % 12) * 7) % 5 - 2 AS y
-        |  FROM range(36) t(i)),
-        |c0 AS MATERIALIZED (SELECT vid AS cl, CAST(x AS DOUBLE) AS mx,
-        |    CAST(y AS DOUBLE) AS my FROM p WHERE vid < 3),
-        |a1 AS MATERIALIZED (SELECT vid, cl FROM (
-        |    SELECT p.vid, c.cl, row_number() OVER (PARTITION BY p.vid
-        |      ORDER BY (p.x - c.mx) * (p.x - c.mx)
-        |             + (p.y - c.my) * (p.y - c.my), c.cl) AS rn
-        |    FROM p, c0 c) WHERE rn = 1),
-        |c1 AS MATERIALIZED (
-        |  SELECT c0.cl, coalesce(u.mx, c0.mx) AS mx,
-        |    coalesce(u.my, c0.my) AS my
-        |  FROM c0 LEFT JOIN (
-        |    SELECT a.cl, avg(CAST(p.x AS DOUBLE)) AS mx,
-        |      avg(CAST(p.y AS DOUBLE)) AS my
-        |    FROM a1 a JOIN p ON p.vid = a.vid GROUP BY 1) u
-        |  ON u.cl = c0.cl),
-        |a2 AS MATERIALIZED (SELECT vid, cl FROM (
-        |    SELECT p.vid, c.cl, row_number() OVER (PARTITION BY p.vid
-        |      ORDER BY (p.x - c.mx) * (p.x - c.mx)
-        |             + (p.y - c.my) * (p.y - c.my), c.cl) AS rn
-        |    FROM p, c1 c) WHERE rn = 1),
-        |c2 AS MATERIALIZED (
-        |  SELECT c1.cl, coalesce(u.mx, c1.mx) AS mx,
-        |    coalesce(u.my, c1.my) AS my
-        |  FROM c1 LEFT JOIN (
-        |    SELECT a.cl, avg(CAST(p.x AS DOUBLE)) AS mx,
-        |      avg(CAST(p.y AS DOUBLE)) AS my
-        |    FROM a2 a JOIN p ON p.vid = a.vid GROUP BY 1) u
-        |  ON u.cl = c1.cl)
-        |SELECT CAST(f.vid AS BIGINT) AS vid, CAST(f.cl AS BIGINT) AS cl
-        |FROM (SELECT vid, cl FROM (
-        |    SELECT p2.vid, c.cl, row_number() OVER (PARTITION BY p2.vid
-        |      ORDER BY (p2.x - c.mx) * (p2.x - c.mx)
-        |             + (p2.y - c.my) * (p2.y - c.my), c.cl) AS rn
-        |    FROM p p2, c2 c) WHERE rn = 1) f
-        |ORDER BY vid""".stripMargin,
-
-    // d20: regenerate the clustered fixture from closed form (cluster =
-    // vid % 12, provably what k-means recovers), compute every within-
-    // cluster cosine exactly (all-dyadic coordinates), apply the same
-    // earlier-member EXISTS rule at tau = 0.95
-    "d20_semdedup" ->
-      """WITH v AS (
-        |  SELECT t.vid AS vid, d.d AS d,
-        |    (CASE WHEN d.d = t.vid % 12 THEN 8.0 ELSE 0.0 END)
-        |    + (CASE WHEN d.d = 12 + (t.vid // 12) % 12 THEN 4.0 ELSE 0.0 END)
-        |    + (CASE WHEN (t.vid // 12) BETWEEN 12 AND 23
-        |            AND d.d = 12 + ((t.vid // 12) % 12 + 1) % 12
-        |       THEN 0.25 ELSE 0.0 END) AS x
-        |  FROM range(432) t(vid), range(24) d(d)),
-        |norms AS (SELECT vid, sqrt(sum(x*x)) AS n FROM v GROUP BY vid),
-        |pairs AS (
-        |  SELECT a.vid AS ia, b.vid AS ib, sum(a.x * b.x) AS dot
-        |  FROM v a JOIN v b
-        |    ON a.d = b.d AND a.vid % 12 = b.vid % 12 AND a.vid < b.vid
-        |  GROUP BY 1, 2),
-        |dup AS (
-        |  SELECT DISTINCT p.ib AS vid FROM pairs p
-        |  JOIN norms na ON na.vid = p.ia
-        |  JOIN norms nb ON nb.vid = p.ib
-        |  WHERE p.dot / (na.n * nb.n) >= 0.95)
-        |SELECT t.vid AS vid, t.vid % 12 AS cl,
-        |  (dup.vid IS NOT NULL) AS removed
-        |FROM range(432) t(vid) LEFT JOIN dup ON dup.vid = t.vid
-        |ORDER BY t.vid""".stripMargin,
-
-    // d19: the same gram/count/df construction over string grams (the
-    // engine's xxhash64 gram keys are a pure transport encoding)
-    "d19_dup_grams" ->
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        |g AS (SELECT doc_id,
-        |    unnest([w[i] || ' ' || w[i+1] || ' ' || w[i+2] || ' ' || w[i+3] || ' ' ||
-        |            w[i+4] || ' ' || w[i+5] || ' ' || w[i+6] || ' ' || w[i+7]
-        |            for i in range(1, len(w) - 6)]) AS g
-        |  FROM toks WHERE len(w) >= 8),
-        |gc AS (SELECT doc_id, g, count(*) AS c FROM g GROUP BY 1, 2),
-        |cg AS (SELECT g FROM gc GROUP BY g HAVING count(*) >= 2),
-        |ng AS (SELECT doc_id, sum(c) AS n_grams FROM gc GROUP BY 1),
-        |nd AS (SELECT gc.doc_id, sum(gc.c) AS n_dup FROM gc JOIN cg USING (g) GROUP BY 1)
-        |SELECT ng.doc_id AS doc_id, CAST(n_grams AS BIGINT) AS n_grams,
-        |  CAST(coalesce(n_dup, 0) AS BIGINT) AS n_dup,
-        |  CAST(coalesce(n_dup, 0) AS DOUBLE) / CAST(n_grams AS DOUBLE) AS dup_frac,
-        |  coalesce(n_dup, 0) * 2 <= n_grams AS keep
-        |FROM ng LEFT JOIN nd ON nd.doc_id = ng.doc_id
-        |ORDER BY ng.doc_id""".stripMargin,
-
-    "d2_quality" ->
-      """SELECT doc_id,
-        | CAST(length(text) - length(replace(text, ' ', '')) + 1 AS BIGINT) AS n_tokens,
-        | CAST(n_chars - (length(text) - length(replace(text, ' ', ''))) AS DOUBLE)
-        |   / (length(text) - length(replace(text, ' ', '')) + 1) AS avg_tok_len
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "d9_token_stats" ->
-      """SELECT doc_id,
-        | CAST(length(text) - length(replace(text, ' ', '')) + 1 AS BIGINT) AS ws_tokens,
-        | CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]')) AS BIGINT) AS bpe_tokens,
-        | CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]')) AS DOUBLE)
-        |   / (length(text) - length(replace(text, ' ', '')) + 1) AS tok_ratio
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // d4: the engine's output is the EXACT-verified (inter, na, nb) over
-    // distinct 3-shingle sets (hash identity ~ string identity at 2^-64
-    // collision odds), so the oracle recomputes it from string shingles —
-    // identical shape to d3 at threshold 0.8. The minhash-LSH banding is
-    // thereby recall-GATED: any qualifying pair the bands miss breaks the
-    // hash.
-    "d4_minhash_lsh" ->
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        |sh AS (SELECT DISTINCT doc_id, s FROM (
-        |  SELECT doc_id,
-        |    unnest([w[i] || ' ' || w[i + 1] || ' ' || w[i + 2] for i in range(1, len(w) - 1)]) AS s
-        |  FROM toks WHERE len(w) >= 3) t),
-        |sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-        |inter AS (SELECT a.doc_id AS ia, b.doc_id AS ib, count(*) AS c
-        |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2)
-        |SELECT ia, ib, CAST(c AS BIGINT) AS inter,
-        |  CAST(sa.sz AS BIGINT) AS na, CAST(sb.sz AS BIGINT) AS nb
-        |FROM inter JOIN sizes sa ON ia = sa.doc_id JOIN sizes sb ON ib = sb.doc_id
-        |WHERE c * 10 >= 8 * (sa.sz + sb.sz - c)
-        |ORDER BY ia, ib""".stripMargin,
-
-    // r20/r21: closed-form plane at cell centers (linear precision of the
-    // Delaunay/CT interpolants; see Synth.delaunayPlanePoints scaladoc for
-    // the quantization error budget). knnRef: x = -5 + (col+0.5)*0.5,
-    // y = 30 - (row+0.5)*0.5.
-    "r20_delaunay" ->
-      """SELECT CAST(r.a AS BIGINT) AS row, CAST(c.b AS BIGINT) AS col,
-        |  CAST(round((2.0 + 0.5 * (-5.0 + (c.b + 0.5) * 0.5)
-        |    + 0.25 * (30.0 - (r.a + 0.5) * 0.5)) * 10000) AS BIGINT) AS vq
-        |FROM range(60) r(a), range(120) c(b) ORDER BY row, col""".stripMargin,
-
-    // r58: replay the sibling-merge rounds level by level — a parent
-    // exists iff its 4 children all survive the previous level; three
-    // rounds exhaust this fixture (the res-3 survivor is a singleton)
-    "r58_cell_compact" ->
-      """WITH l0 AS (SELECT CAST(0 AS BIGINT) AS r, x.x AS x, y.y AS y
-        |  FROM range(14) x(x), range(11) y(y)),
-        |m1 AS (SELECT x // 2 AS x, y // 2 AS y FROM l0
-        |  GROUP BY 1, 2 HAVING count(*) = 4),
-        |rem0 AS (SELECT l0.r, l0.x, l0.y FROM l0 LEFT JOIN m1
-        |  ON m1.x = l0.x // 2 AND m1.y = l0.y // 2 WHERE m1.x IS NULL),
-        |l1 AS (SELECT CAST(1 AS BIGINT) AS r, x, y FROM m1),
-        |m2 AS (SELECT x // 2 AS x, y // 2 AS y FROM l1
-        |  GROUP BY 1, 2 HAVING count(*) = 4),
-        |rem1 AS (SELECT l1.r, l1.x, l1.y FROM l1 LEFT JOIN m2
-        |  ON m2.x = l1.x // 2 AND m2.y = l1.y // 2 WHERE m2.x IS NULL),
-        |l2 AS (SELECT CAST(2 AS BIGINT) AS r, x, y FROM m2),
-        |m3 AS (SELECT x // 2 AS x, y // 2 AS y FROM l2
-        |  GROUP BY 1, 2 HAVING count(*) = 4),
-        |rem2 AS (SELECT l2.r, l2.x, l2.y FROM l2 LEFT JOIN m3
-        |  ON m3.x = l2.x // 2 AND m3.y = l2.y // 2 WHERE m3.x IS NULL),
-        |l3 AS (SELECT CAST(3 AS BIGINT) AS r, x, y FROM m3)
-        |SELECT r, CAST(x AS BIGINT) AS x, CAST(y AS BIGINT) AS y FROM (
-        |  SELECT * FROM rem0 UNION ALL SELECT * FROM rem1
-        |  UNION ALL SELECT * FROM rem2 UNION ALL SELECT * FROM l3)
-        |ORDER BY r, x, y""".stripMargin,
-
-    // r57: the composed surface by linear precision — stations sit on the
-    // plane 4 + x/4 + y/2, Delaunay reproduces it, and the oracle is the
-    // plane at every pixel center inside the bankline polygon (the same
-    // ray-cast PIP expression ClipPolygon's kernel evaluates)
-    "r57_line2surface" -> {
-      val pip = pipSql(Array(0.0, 48.0, 50.0, 1.0, 0.0),
-        Array(3.0, 5.0, 29.0, 25.0, 3.0))
-      s"""WITH g AS (SELECT (i // 120) AS r, (i % 120) AS c,
-         |  -5 + ((i % 120) + 0.5) * 0.5 AS px,
-         |  30 - ((i // 120) + 0.5) * 0.5 AS py
-         |  FROM range(7200) t(i))
-         |SELECT CAST(r AS BIGINT) AS row, CAST(c AS BIGINT) AS col,
-         |  CAST(round((4.0 + 0.25 * px + 0.5 * py) * 10000) AS BIGINT) AS vq
-         |FROM g WHERE $pip ORDER BY row, col""".stripMargin
-    },
-
-    // r59: valid cells from the DEM formula, rook pairs as 4 explicit
-    // shifted equi-joins (hash joins — the abs-distance form would be a
-    // 31k x 31k nested loop), same seven integer sufficient statistics
-    "r59_spatial_autocorr" ->
-      """WITH cells AS (
-        |  SELECT r.r AS row, c.c AS col, (r.r * 31 + c.c * 17) % 1000 AS q
-        |  FROM range(203) r(r), range(154) c(c)
-        |  WHERE (r.r * 154 + c.c) % 97 != 13),
-        |base AS (SELECT count(*) AS n, sum(q) AS s_sum,
-        |    sum(q * q) AS q2 FROM cells),
-        |prs AS (
-        |  SELECT a.q AS q, b.q AS qn FROM cells a JOIN cells b
-        |    ON b.row = a.row AND b.col = a.col + 1
-        |  UNION ALL SELECT a.q, b.q FROM cells a JOIN cells b
-        |    ON b.row = a.row AND b.col = a.col - 1
-        |  UNION ALL SELECT a.q, b.q FROM cells a JOIN cells b
-        |    ON b.row = a.row + 1 AND b.col = a.col
-        |  UNION ALL SELECT a.q, b.q FROM cells a JOIN cells b
-        |    ON b.row = a.row - 1 AND b.col = a.col),
-        |pa AS (SELECT count(*) AS w_pairs, sum(q * qn) AS pair_prod,
-        |    sum(q) AS deg_val, sum(q * q) AS deg_val_sq FROM prs)
-        |SELECT CAST(n AS BIGINT) AS n, CAST(s_sum AS BIGINT) AS s_sum,
-        |  CAST(q2 AS BIGINT) AS q2, CAST(w_pairs AS BIGINT) AS w_pairs,
-        |  CAST(pair_prod AS BIGINT) AS pair_prod,
-        |  CAST(deg_val AS BIGINT) AS deg_val,
-        |  CAST(deg_val_sq AS BIGINT) AS deg_val_sq
-        |FROM base, pa""".stripMargin,
-
-    "r21_delaunay_cubic" ->
-      """SELECT CAST(r.a AS BIGINT) AS row, CAST(c.b AS BIGINT) AS col,
-        |  CAST(round((-1.0 + 0.75 * (-5.0 + (c.b + 0.5) * 0.5)
-        |    - 0.5 * (30.0 - (r.a + 0.5) * 0.5)) * 10000) AS BIGINT) AS vq
-        |FROM range(60) r(a), range(120) c(b) ORDER BY row, col""".stripMargin,
-
-    // r18: full IDW kernel replication — dyadic coords make every d2 exact
-    // in both engines (identical (d2, pid) ranking); the 1/d2-weighted
-    // mean differs only in final-ULP summation order, absorbed by the
-    // 1e-4 quantum.
-    "r18_idw" ->
-      """WITH pts AS (
-        |  SELECT i AS pid,
-        |    -5.0 + ((i*37) % 113) * 0.5 + 0.125 AS px,
-        |    ((i*53) % 107) * 0.25 + 0.0625 AS py,
-        |    ((i*29) % 400) / 4.0 AS pv
-        |  FROM range(60) t(i)),
-        |cells AS (
-        |  SELECT (id // 120) AS row, (id % 120) AS col FROM range(7200) t(id)
-        |  WHERE id % 13 = 2),
-        |d AS (
-        |  SELECT c.row, c.col, p.pid, p.pv,
-        |    (p.px - (-5.0 + (c.col + 0.5) * 0.5)) * (p.px - (-5.0 + (c.col + 0.5) * 0.5))
-        |    + (p.py - (30.0 - (c.row + 0.5) * 0.5)) * (p.py - (30.0 - (c.row + 0.5) * 0.5)) AS d2
-        |  FROM cells c, pts p),
-        |rk AS (
-        |  SELECT row, col, pid, pv, d2,
-        |    row_number() OVER (PARTITION BY row, col ORDER BY d2, pid) AS rn
-        |  FROM d)
-        |SELECT CAST(row AS BIGINT) AS row, CAST(col AS BIGINT) AS col,
-        |  CAST(round(sum((1.0/d2) * pv) / sum(1.0/d2) * 10000) AS BIGINT) AS vq
-        |FROM rk WHERE rn <= 4 GROUP BY row, col ORDER BY row, col""".stripMargin,
-
-    // r19: the 4x4 Keys cubic (a=-0.5) at the fixed .25/.75 fractional
-    // offsets of the resample target — every weight, product and partial
-    // sum is an exact dyadic rational, so the masked-renormalized result
-    // is BIT-identical across engines (no quantization needed). Weight
-    // literals are w(1.25), w(0.25), w(0.75), w(1.75) per tap index.
-    "r19_resample_cubic" ->
-      """WITH cells AS (
-        |  SELECT (id // 77) AS trow, (id % 77) AS tcol FROM range(7777) t(id)
-        |  WHERE id % 11 = 3),
-        |taps AS (
-        |  SELECT c.trow, c.tcol,
-        |    2*c.trow + dr.k AS sr, 2*c.tcol - 1 + dc.k AS sc,
-        |    (CASE dr.k WHEN 0 THEN -0.0703125 WHEN 1 THEN 0.8671875
-        |               WHEN 2 THEN 0.2265625 ELSE -0.0234375 END)
-        |    * (CASE dc.k WHEN 0 THEN -0.0234375 WHEN 1 THEN 0.2265625
-        |                 WHEN 2 THEN 0.8671875 ELSE -0.0703125 END) AS w
-        |  FROM cells c, range(4) dr(k), range(4) dc(k)
-        |  WHERE 2*c.trow + dr.k BETWEEN 0 AND 202
-        |    AND 2*c.tcol - 1 + dc.k BETWEEN 0 AND 153),
-        |tv AS (
-        |  SELECT trow, tcol, w,
-        |    CASE WHEN (sr*154 + sc) % 97 = 13 THEN NULL
-        |         ELSE ((sr*31 + sc*17) % 1000) / 4.0 END AS v
-        |  FROM taps),
-        |agg AS (
-        |  SELECT trow, tcol,
-        |    sum(w*v) FILTER (v IS NOT NULL) AS num,
-        |    sum(w) FILTER (v IS NOT NULL) AS den
-        |  FROM tv GROUP BY 1, 2)
-        |SELECT CAST(trow AS BIGINT) AS row, CAST(tcol AS BIGINT) AS col,
-        |  CASE WHEN den IS NULL OR den = 0 THEN 'NaN'::DOUBLE ELSE num/den END AS v
-        |FROM agg ORDER BY row, col""".stripMargin,
-
-    // i2: decoded exact-corpus pixels are code/64 with integer codes, so
-    // the half-res bilinear output * 256 is exactly the 2x2 code-block
-    // sum — regenerated here by formula, no image codec needed.
-    "i2_image_resize" ->
-      """WITH px AS (
-        |  SELECT t.i AS i,
-        |    (((t.i // 8) * 256 + 2 * r.r + dr.d) * 31
-        |     + ((t.i % 8) * 256 + 2 * c.c + dc.d) * 17) % 1000 AS code
-        |  FROM range(64) t(i), range(128) r(r), range(128) c(c),
-        |       range(2) dr(d), range(2) dc(d))
-        |SELECT 'img-' || lpad(CAST(i AS VARCHAR), 8, '0') AS image_id,
-        |  128 AS w2, 128 AS h2,
-        |  CAST(sum(code) AS BIGINT) AS qsum, CAST(0 AS BIGINT) AS nan_px
-        |FROM px GROUP BY i ORDER BY image_id""".stripMargin,
-
-    // i1: north-star invariant counts regenerated from the corpus layout
-    // rules (ImageCorpus.rowOf): fmt cycles jpg on i % 4 == 3 (the
-    // duplicate rule i % 251 == 0 never fires below i = 251, so src = i
-    // for n = 64). The invariants themselves — every row PSNR >= 40 dB,
-    // every png round-trips bit-exactly (psnr = inf), every caption
-    // propagates byte-equal — are what the engine must prove; raw PSNR
-    // values are decoder-specific and deliberately excluded. The oracle
-    // pins jpg n_exact = 0 on purpose: a jpg tile round-tripping
-    // bit-exactly would mean the fixture stopped exercising the lossy
-    // path, and the gate failing IS the desired signal there.
-    "i1_image_invariants" ->
-      """WITH r AS (
-        |  SELECT CASE WHEN t.i % 4 = 3 THEN 'jpg' ELSE 'png' END AS fmt
-        |  FROM range(64) t(i))
-        |SELECT fmt, count(*) AS n, count(*) AS n_psnr40_ok,
-        |  CAST(CASE WHEN fmt = 'png' THEN count(*) ELSE 0 END AS BIGINT) AS n_exact,
-        |  count(*) AS n_caption_ok
-        |FROM r GROUP BY fmt ORDER BY fmt""".stripMargin,
-
-    // i3: the planted byte-identical duplicates are exactly the rows where
-    // the corpus duplicate rule fired (i % 251 == 0, i > 0 — each re-emits
-    // payload i-1 under a new id, same fmt), so the expected pair list is
-    // closed-form; distinct tile payloads never byte-collide (the terrain
-    // field's periods are irrational in pixel units) and perceptual-only
-    // phash collisions are filtered by the digest predicate engine-side.
-    "i3_phash_dedup" ->
-      """SELECT 'img-' || lpad(CAST(i - 1 AS VARCHAR), 8, '0') AS id_a,
-        |  'img-' || lpad(CAST(i AS VARCHAR), 8, '0') AS id_b
-        |FROM range(1024) t(i) WHERE i > 0 AND i % 251 = 0
-        |ORDER BY id_a""".stripMargin,
-
-    // i6: codes regenerate by formula; within an image the horizontal
-    // neighbor code is (q+17) mod 1000 and the vertical (q+31) mod 1000,
-    // so each |Δ| is 17 (983 on wrap, q >= 983) resp. 31 (969 on wrap,
-    // q >= 969) — the gradient sums collapse to one scan, no self-join
-    "i6_image_quality" -> i6QualitySql,
-
-    // s7: the STREAMED i6 — same closed-form oracle; the gate proves the
-    // foreachBatch micro-batch path reproduces the batch kernel exactly
-    "s7_stream_image_quality" -> i6QualitySql,
-
-
-    // v1: the GIF frame gray code is trunc((v-0)/250*255) of the integer
-    // frame formula — identical IEEE double arithmetic in both engines
-    // (including the v=150 -> 152 floor glitch), and the GIF89a round
-    // trip is code-exact (ScalaTest-gated), so frame stats regenerate by
-    // formula.
-    "v1_video_frames" ->
-      """WITH px AS (
-        |  SELECT t1.cid AS cid, t2.f AS f,
-        |    CAST((t1.cid*37 + t2.f*11 + t3.i) % 251 AS DOUBLE) AS v
-        |  FROM range(8) t1(cid), (VALUES (0),(3),(6),(9)) t2(f), range(1536) t3(i))
-        |SELECT cid AS clip_id, CAST(f AS INT) AS frame_idx, 48 AS w, 32 AS h,
-        |  CAST(sum(CAST(trunc(v / 250.0 * 255.0) AS BIGINT)) AS BIGINT) AS sum_intensity,
-        |  CAST(sum(CASE WHEN trunc(v / 250.0 * 255.0) <> 0 THEN 1 ELSE 0 END) AS BIGINT) AS nonblack
-        |FROM px GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // v5: the (out_idx, src_frame) pairs are closed-form under the
-    // half-up rule (12 frames, 10 -> 4 fps => 5 picks), and the decoded
-    // gray code is the same trunc(v/250*255) mapping as v1
-    "v5_fps_resample" ->
-      """WITH px AS (
-        |  SELECT t1.cid AS cid, t2.k AS k, t2.src AS src,
-        |    CAST((t1.cid*37 + t2.src*11 + t3.i) % 251 AS DOUBLE) AS v
-        |  FROM range(8) t1(cid),
-        |    (VALUES (0, 0), (1, 3), (2, 5), (3, 8), (4, 10)) t2(k, src),
-        |    range(1536) t3(i))
-        |SELECT cid AS clip_id, CAST(k AS BIGINT) AS out_idx,
-        |  CAST(src AS BIGINT) AS src_frame,
-        |  CAST(sum(CAST(trunc(v / 250.0 * 255.0) AS BIGINT)) AS BIGINT)
-        |    AS sum_intensity
-        |FROM px GROUP BY 1, 2, 3 ORDER BY 1, 2""".stripMargin,
-
-    // a2: regenerate the planted-silence samples, window the energies,
-    // derive lead/trail runs from the four per-clip silent flags
-    // a3: the decimated stream from the closed-form sample rule —
-    // floor((a+b)/2) == the kernel's arithmetic shift for all ints
-    "a3_audio_resample" ->
-      """WITH s AS (
-        |  SELECT k.k AS clip_id, j.j AS j,
-        |    ((k.k * 7 + (2 * j.j) * 31) % 2001) - 1000 AS a,
-        |    ((k.k * 7 + (2 * j.j + 1) * 31) % 2001) - 1000 AS b
-        |  FROM range(100) k(k), range(500) j(j)),
-        |d AS (SELECT clip_id, j, CAST(floor((a + b) / 2.0) AS BIGINT) AS v FROM s)
-        |SELECT clip_id, CAST(count(*) AS BIGINT) AS n_out,
-        |  CAST(sum((j + 1) * v) AS BIGINT) AS wsum,
-        |  CAST(sum(abs(v)) AS BIGINT) AS sum_abs
-        |FROM d GROUP BY clip_id ORDER BY clip_id""".stripMargin,
-
-    // a4: peak per clip (trunc-divided pattern), the maximal shift with
-    // peak<<s <= 32767 from a 16-row shift table, and the normalized
-    // position-weighted checksum — all exact integers
-    "a4_audio_gain" ->
-      """WITH s AS (
-        |  SELECT k.k AS clip_id, i.i AS i,
-        |    CAST(trunc(CAST(((k.k * 7 + i.i * 31) % 2001) - 1000 AS DOUBLE)
-        |      / (1 + k.k % 4)) AS BIGINT) AS v
-        |  FROM range(100) k(k), range(1000) i(i)),
-        |p AS (SELECT clip_id, max(abs(v)) AS peak FROM s GROUP BY 1),
-        |g AS (SELECT p.clip_id, p.peak,
-        |    CASE WHEN p.peak = 0 THEN 0 ELSE
-        |      COALESCE(max(CASE WHEN (p.peak << sh.s) <= 32767
-        |                        THEN sh.s END), 0) END AS shift
-        |  FROM p CROSS JOIN range(16) sh(s)
-        |  GROUP BY 1, 2)
-        |SELECT s.clip_id, CAST(g.peak AS BIGINT) AS peak,
-        |  CAST(g.shift AS BIGINT) AS shift,
-        |  CAST(sum((s.i + 1) * (s.v * (1 << g.shift))) AS BIGINT) AS norm_wsum
-        |FROM s JOIN g ON g.clip_id = s.clip_id
-        |GROUP BY 1, 2, 3 ORDER BY s.clip_id""".stripMargin,
-
-    // a6: 667 outputs for n=1000 (k=667 is the first whose straddling
-    // pair runs past the end). The pair mean must be an explicit
-    // floor(): Scala's >> 1 floors toward -inf but DuckDB's integer //
-    // TRUNCATES toward zero on negatives ((-7)//2 = -3, not -4) —
-    // tap-index divisions stay // because those operands are
-    // non-negative, where the two agree
-    "a6_rate_convert" ->
-      """WITH o AS (
-        |  SELECT c.c AS clip, k.k AS k
-        |  FROM range(100) c(c), range(667) k(k)),
-        |s AS (
-        |  SELECT clip, k,
-        |    CASE WHEN k % 2 = 0
-        |      THEN ((clip*7 + (3*k//2)*31) % 2001) - 1000
-        |      ELSE CAST(floor((
-        |            (((clip*7 + ((3*k-1)//2)*31) % 2001) - 1000)
-        |          + (((clip*7 + ((3*k+1)//2)*31) % 2001) - 1000)) / 2.0)
-        |        AS BIGINT)
-        |    END AS v
-        |  FROM o)
-        |SELECT CAST(clip AS BIGINT) AS clip_id,
-        |  CAST(667 AS BIGINT) AS n_out,
-        |  CAST(sum((k + 1) * v) AS BIGINT) AS wsum,
-        |  CAST(sum(abs(v)) AS BIGINT) AS sum_abs
-        |FROM s GROUP BY 1 ORDER BY clip_id""".stripMargin,
-
-    // a5: gaps-and-islands over the closed-form window energies — loud
-    // windows (ss >= 1e6) grouped by the classic w - row_number() island
-    // key, then one row per island; the per-clip segment index is the
-    // island rank by start window
-    "a5_vad_segments" ->
-      """WITH s AS (
-        |  SELECT k.k AS k, i.i // 250 AS w,
-        |    CASE WHEN (k.k + 3 * (i.i // 250)) % 4 = 0
-        |      THEN ((k.k * 7 + i.i * 31) % 41) - 20
-        |      ELSE ((k.k * 7 + i.i * 31) % 2001) - 1000 END AS v
-        |  FROM range(100) k(k), range(2000) i(i)),
-        |wf AS (SELECT k, w, sum(v * v) AS ss FROM s GROUP BY 1, 2),
-        |loud AS (SELECT k, w, ss,
-        |    w - row_number() OVER (PARTITION BY k ORDER BY w) AS grp
-        |  FROM wf WHERE ss >= 1000000),
-        |seg AS (SELECT k, grp, min(w) AS start_win, count(*) AS n_win,
-        |    sum(ss) AS energy
-        |  FROM loud GROUP BY 1, 2)
-        |SELECT CAST(k AS BIGINT) AS clip_id,
-        |  CAST(row_number() OVER (PARTITION BY k ORDER BY start_win) - 1
-        |    AS BIGINT) AS seg,
-        |  CAST(start_win AS BIGINT) AS start_win,
-        |  CAST(n_win AS BIGINT) AS n_win,
-        |  CAST(energy AS BIGINT) AS energy
-        |FROM seg ORDER BY clip_id, seg""".stripMargin,
-
-    "a2_audio_trim" ->
-      """WITH s AS (SELECT (i // 1000) AS clip, (i % 1000) AS idx,
-        |  CASE WHEN (i % 1000) < 250 * ((i // 1000) % 3)
-        |         OR (i % 1000) >= 1000 - 250 * ((i // 1000) % 2)
-        |    THEN ((i // 1000) * 7 + (i % 1000) * 31) % 41 - 20
-        |    ELSE ((i // 1000) * 7 + (i % 1000) * 31) % 2001 - 1000 END AS v
-        |  FROM range(100000) t(i)),
-        |w AS (SELECT clip, idx // 250 AS win, sum(v * v) AS ss
-        |  FROM s GROUP BY 1, 2),
-        |f AS (SELECT clip,
-        |  max(CASE WHEN win = 0 THEN (ss < 1000000)::INT END) AS s0,
-        |  max(CASE WHEN win = 1 THEN (ss < 1000000)::INT END) AS s1,
-        |  max(CASE WHEN win = 2 THEN (ss < 1000000)::INT END) AS s2,
-        |  max(CASE WHEN win = 3 THEN (ss < 1000000)::INT END) AS s3
-        |  FROM w GROUP BY clip),
-        |r AS (SELECT clip,
-        |  s0 + s0*s1 + s0*s1*s2 + s0*s1*s2*s3 AS lead,
-        |  s3 + s3*s2 + s3*s2*s1 + s3*s2*s1*s0 AS trail
-        |  FROM f)
-        |SELECT clip AS clip_id, CAST(4 AS BIGINT) AS n_win,
-        |  CAST(lead AS BIGINT) AS lead_silent,
-        |  CAST(trail AS BIGINT) AS trail_silent,
-        |  CAST((4 - lead - trail) * 250 AS BIGINT) AS kept_samples
-        |FROM r ORDER BY clip""".stripMargin,
-
-    // v2: regenerate both frame regimes, gray = trunc(v/250*255) like v1,
-    // SAD over the (cid, i) self-join of consecutive frames
-    "v2_scene_cuts" ->
-      """WITH px AS (
-        |  SELECT t1.cid AS cid, t2.f AS f, t3.i AS i,
-        |    CAST(trunc(CAST(CASE WHEN t2.f < 6
-        |        THEN (t1.cid*37 + t2.f*11 + t3.i) % 251
-        |        ELSE (t1.cid*37 + t2.f*11 + t3.i*3 + 97) % 251 END
-        |      AS DOUBLE) / 250.0 * 255.0) AS BIGINT) AS g
-        |  FROM range(8) t1(cid), range(12) t2(f), range(1536) t3(i)),
-        |d AS (SELECT a.cid, a.f, sum(abs(a.g - b.g)) AS sad
-        |  FROM px a JOIN px b ON b.cid = a.cid AND b.i = a.i AND b.f = a.f - 1
-        |  WHERE a.f >= 1 GROUP BY 1, 2)
-        |SELECT cid AS clip_id, CAST(f AS INT) AS frame_idx,
-        |  CAST(sad AS BIGINT) AS sad, sad > 65000 AS is_cut
-        |FROM d ORDER BY 1, 2""".stripMargin,
-
-    // v3: same decoded-gray formula as v2 (incl. the GIF palette
-    // trunc(code/250*255) quantization), summed per frame, windowed
-    // 4-stride-3 with the position-weighted checksum
-    "v3_clip_windows" ->
-      """WITH px AS (
-        |  SELECT t1.cid AS cid, t2.f AS f, t3.i AS i,
-        |    CAST(trunc(CAST(CASE WHEN t2.f < 6
-        |        THEN (t1.cid*37 + t2.f*11 + t3.i) % 251
-        |        ELSE (t1.cid*37 + t2.f*11 + t3.i*3 + 97) % 251 END
-        |      AS DOUBLE) / 250.0 * 255.0) AS BIGINT) AS g
-        |  FROM range(8) t1(cid), range(12) t2(f), range(1536) t3(i)),
-        |fs AS (SELECT cid, f, sum(g) AS gsum FROM px GROUP BY 1, 2),
-        |wins AS (SELECT c.c AS clip_id, s.s AS win_idx, s.s * 3 AS first_frame
-        |  FROM range(8) c(c), range(4) s(s))
-        |SELECT w.clip_id, CAST(w.win_idx AS INT) AS win_idx,
-        |  CAST(w.first_frame AS INT) AS first_frame,
-        |  CAST(least(4, 12 - w.first_frame) AS INT) AS n_frames,
-        |  CAST(sum((fs.f - w.first_frame + 1) * fs.gsum) AS BIGINT) AS wsum
-        |FROM wins w JOIN fs ON fs.cid = w.clip_id
-        |  AND fs.f >= w.first_frame AND fs.f < w.first_frame + 4
-        |GROUP BY w.clip_id, w.win_idx, w.first_frame
-        |ORDER BY 1, 2""".stripMargin,
-
-    // v4: the same per-frame gray-sums as v3; each window elects its
-    // argmax frame via row_number (gsum DESC, frame ASC = the engine's
-    // smallest-index tie-break)
-    "v4_keyframes" ->
-      """WITH px AS (
-        |  SELECT t1.cid AS cid, t2.f AS f, t3.i AS i,
-        |    CAST(trunc(CAST(CASE WHEN t2.f < 6
-        |        THEN (t1.cid*37 + t2.f*11 + t3.i) % 251
-        |        ELSE (t1.cid*37 + t2.f*11 + t3.i*3 + 97) % 251 END
-        |      AS DOUBLE) / 250.0 * 255.0) AS BIGINT) AS g
-        |  FROM range(8) t1(cid), range(12) t2(f), range(1536) t3(i)),
-        |fs AS (SELECT cid, f, sum(g) AS gsum FROM px GROUP BY 1, 2),
-        |wins AS (SELECT c.c AS clip_id, s.s AS win_idx, s.s * 3 AS first_frame
-        |  FROM range(8) c(c), range(4) s(s)),
-        |sel AS (SELECT w.clip_id, w.win_idx, fs.f, fs.gsum,
-        |    row_number() OVER (PARTITION BY w.clip_id, w.win_idx
-        |      ORDER BY fs.gsum DESC, fs.f) AS rn
-        |  FROM wins w JOIN fs ON fs.cid = w.clip_id
-        |    AND fs.f >= w.first_frame AND fs.f < w.first_frame + 4)
-        |SELECT clip_id, CAST(win_idx AS INT) AS win_idx,
-        |  CAST(f AS INT) AS key_frame, CAST(gsum AS BIGINT) AS key_gsum
-        |FROM sel WHERE rn = 1 ORDER BY 1, 2""".stripMargin,
-
-    // r17: full reproject replication — see r17Sql scaladoc
-    "r17_reproject" -> r17Sql,
-
-    // r24: per-cell D8 direction from the shared CTE block; LEFT JOIN
-    // restores pit cells (no positive drop) as dir 0.
-    "r24_flowdir" -> s"""WITH $d8Ctes,
-      |dirx AS (SELECT r, c, code FROM best WHERE rn = 1 AND dp > 0)
-      |SELECT g.r AS row, g.c AS col, CAST(COALESCE(d.code, 0) AS BIGINT) AS dir
-      |FROM g LEFT JOIN dirx d ON d.r = g.r AND d.c = g.c
-      |WHERE g.v IS NOT NULL ORDER BY row, col""".stripMargin,
-
-    // r25: downstream closure of the D8 edge set — every (start, cell on
-    // its path) pair, counted per cell (= upstream cells incl. self).
-    // Terminates because z strictly decreases along every edge (DAG).
-    "r25_flowacc" -> s"""WITH RECURSIVE $d8WalkCtes
-      |SELECT r AS row, c AS col, CAST(count(*) AS BIGINT) AS acc
-      |FROM walk GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // r26: the terminal row of each start's downstream walk — the unique
-    // path cell with no outgoing D8 edge (the basin pit) + step counts.
-    "r26_watershed" -> s"""WITH RECURSIVE $d8WalkCtes,
-      |term AS (SELECT w.sr, w.sc, w.r, w.c, w.ncard, w.ndiag FROM walk w
-      |  WHERE NOT EXISTS (SELECT 1 FROM edges e WHERE e.r = w.r AND e.c = w.c))
-      |SELECT CAST(sr AS BIGINT) AS row, CAST(sc AS BIGINT) AS col,
-      |       CAST(r AS BIGINT) AS basin_r, CAST(c AS BIGINT) AS basin_c,
-      |       CAST(ncard AS BIGINT) AS ncard, CAST(ndiag AS BIGINT) AS ndiag
-      |FROM term ORDER BY row, col""".stripMargin,
-
-    // r51: the walk-terminal basin label joined to the class rule
-    "r51_tabulate" -> s"""WITH RECURSIVE $d8WalkCtes,
-      |term AS (SELECT w.sr, w.sc, w.r AS br, w.c AS bc FROM walk w
-      |  WHERE NOT EXISTS (SELECT 1 FROM edges e WHERE e.r = w.r AND e.c = w.c)),
-      |cls AS (SELECT r, c,
-      |  CASE WHEN v IS NULL OR v < 50 THEN NULL
-      |       WHEN v < 100 THEN 1.0 WHEN v < 150 THEN 2.0
-      |       WHEN v < 200 THEN 3.0 ELSE 4.0 END AS class
-      |  FROM g)
-      |SELECT CAST(t.br AS BIGINT) AS basin_r, CAST(t.bc AS BIGINT) AS basin_c,
-      |       cl.class AS class, CAST(count(*) AS BIGINT) AS n
-      |FROM term t JOIN cls cl ON cl.r = t.sr AND cl.c = t.sc
-      |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
-
-    // r27: channel-initiation filter over the walk-derived accumulation,
-    // joined back to the D8 edge set (threshold 25 support cells).
-    "r27_streams" -> s"""WITH RECURSIVE $d8WalkCtes,
-      |acc AS (SELECT r, c, count(*) AS a FROM walk GROUP BY 1, 2)
-      |SELECT CAST(e.r AS BIGINT) AS row, CAST(e.c AS BIGINT) AS col,
-      |       CAST(e.r2 AS BIGINT) AS to_r, CAST(e.c2 AS BIGINT) AS to_c,
-      |       CAST(a.a AS BIGINT) AS acc
-      |FROM edges e JOIN acc a ON a.r = e.r AND a.c = e.c
-      |WHERE a.a >= 25 ORDER BY row, col""".stripMargin,
-
-    // r37: HAND — the walk closure joined to the r27 stream set; the
-    // first stream cell on a path is the hit with the minimum step count
-    // (steps strictly increase along the walk, so the minimum is unique).
-    // hand = z(start) − z(hit), both quarters — exact cross-engine.
-    "r37_hand" -> s"""WITH RECURSIVE $d8WalkCtes,
-      |acc AS (SELECT r, c, count(*) AS a FROM walk GROUP BY 1, 2),
-      |stream AS (SELECT r, c FROM acc WHERE a >= 25),
-      |hits AS (
-      |  SELECT w.sr, w.sc, w.r, w.c, w.ncard, w.ndiag,
-      |    row_number() OVER (PARTITION BY w.sr, w.sc
-      |      ORDER BY w.ncard + w.ndiag ASC) AS rn
-      |  FROM walk w JOIN stream s ON s.r = w.r AND s.c = w.c)
-      |SELECT CAST(h.sr AS BIGINT) AS row, CAST(h.sc AS BIGINT) AS col,
-      |  CAST(h.r AS BIGINT) AS stream_r, CAST(h.c AS BIGINT) AS stream_c,
-      |  CAST(h.ncard AS BIGINT) AS ncard, CAST(h.ndiag AS BIGINT) AS ndiag,
-      |  g1.v - g2.v AS hand
-      |FROM hits h JOIN g g1 ON g1.r = h.sr AND g1.c = h.sc
-      |            JOIN g g2 ON g2.r = h.r AND g2.c = h.c
-      |WHERE h.rn = 1
-      |ORDER BY row, col""".stripMargin,
-
-    // r38: Strahler order — Jacobi relaxation over the stream forest:
-    // ord_{k+1}(c) = rule over parents' ord_k (max, +1 when the top two
-    // tie), sources stay 1; correct once k exceeds the longest stream
-    // path (49 cells at threshold 4), run to 55. Contributions carry a
-    // self marker so source cells survive each round (the r29 pattern);
-    // the tie test reads the descending parent-order list.
-    "r38_strahler" -> s"""WITH RECURSIVE $d8WalkCtes,
-      |acc AS (SELECT r, c, count(*) AS a FROM walk GROUP BY 1, 2),
-      |stream AS MATERIALIZED (SELECT r, c FROM acc WHERE a >= 4),
-      |sedges AS MATERIALIZED (
-      |  SELECT e.r, e.c, e.r2, e.c2 FROM edges e
-      |  JOIN stream s ON s.r = e.r AND s.c = e.c),
-      |cmap AS MATERIALIZED (
-      |  SELECT r, c, r AS tr, c AS tc, 1 AS self FROM stream
-      |  UNION ALL
-      |  SELECT r, c, r2 AS tr, c2 AS tc, 0 AS self FROM sedges),
-      |sord AS (
-      |  SELECT 0 AS it, r, c, 1 AS o FROM stream
-      |  UNION ALL
-      |  SELECT p.it + 1, m.tr AS r, m.tc AS c,
-      |    CASE WHEN count(CASE WHEN m.self = 0 THEN 1 END) = 0 THEN 1
-      |         WHEN count(CASE WHEN m.self = 0 THEN 1 END) >= 2
-      |              AND (list(p.o ORDER BY p.o DESC) FILTER (m.self = 0))[1]
-      |                = (list(p.o ORDER BY p.o DESC) FILTER (m.self = 0))[2]
-      |         THEN (list(p.o ORDER BY p.o DESC) FILTER (m.self = 0))[1] + 1
-      |         ELSE (list(p.o ORDER BY p.o DESC) FILTER (m.self = 0))[1] END AS o
-      |  FROM sord p JOIN cmap m ON m.r = p.r AND m.c = p.c
-      |  WHERE p.it < 55
-      |  GROUP BY p.it, m.tr, m.tc)
-      |SELECT CAST(r AS BIGINT) AS row, CAST(c AS BIGINT) AS col,
-      |  CAST(o AS BIGINT) AS strahler
-      |FROM sord WHERE it = 55 ORDER BY row, col""".stripMargin,
-
-    // r28: longest upstream path per cell — max over walk rows ending at
-    // the cell, weighted `ncard + ndiag*sqrt(2.0)` with ties to the larger
-    // cardinal count (the engine's comparator, verbatim).
-    "r28_flowlength" -> s"""WITH RECURSIVE $d8WalkCtes,
-      |up AS (SELECT r, c, ncard, ndiag,
-      |  row_number() OVER (PARTITION BY r, c
-      |    ORDER BY (ncard + ndiag * sqrt(2.0)) DESC, ncard DESC) AS rn
-      |  FROM walk)
-      |SELECT CAST(r AS BIGINT) AS row, CAST(c AS BIGINT) AS col,
-      |       CAST(ncard AS BIGINT) AS ncard, CAST(ndiag AS BIGINT) AS ndiag
-      |FROM up WHERE rn = 1 ORDER BY row, col""".stripMargin,
-
-    // r29: Jacobi relaxation of the Priority-Flood minimax fixpoint —
-    // see jacobiFillCtes (shared with r33 so the fill rule can never
-    // desynchronize between the two oracles).
-    "r29_fill_sinks" ->
-      s"""WITH RECURSIVE $jacobiFillCtes
-      |SELECT CAST(r AS BIGINT) AS row, CAST(c AS BIGINT) AS col, f AS fill
-      |FROM fs WHERE it = 60 ORDER BY row, col""".stripMargin,
-
-    // r32: zonal statistics over the r26 basins — the walk terminal row
-    // labels each cell, joined back to the grid values and aggregated.
-    // Sums of quarter-valued z are exact, so no quantization.
-    "r32_zonal_stats" -> s"""WITH RECURSIVE $d8WalkCtes,
-      |term AS (SELECT w.sr, w.sc, w.r AS br, w.c AS bc FROM walk w
-      |  WHERE NOT EXISTS (SELECT 1 FROM edges e WHERE e.r = w.r AND e.c = w.c))
-      |SELECT CAST(t.br AS BIGINT) AS basin_r, CAST(t.bc AS BIGINT) AS basin_c,
-      |       CAST(count(*) AS BIGINT) AS n_cells,
-      |       min(g.v) AS min_z, max(g.v) AS max_z, sum(g.v) AS sum_z
-      |FROM term t JOIN g ON g.r = t.sr AND g.c = t.sc
-      |WHERE g.v IS NOT NULL
-      |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // r33: D8 direction rule over the Jacobi-FILLED surface (fill CTE
-    // shared with r29 verbatim; drop expressions mirror r24's with f in
-    // place of v — fill values are selections of dyadic z, so every
-    // compared double stays bit-identical cross-engine).
-    "r33_conditioned_flowdir" -> s"""WITH RECURSIVE $jacobiFillCtes,
-      |fg AS MATERIALIZED (SELECT r, c, f FROM fs WHERE it = 60),
-      |ddx(code, dr, dc) AS (VALUES (1,0,1),(2,1,1),(4,1,0),(8,1,-1),
-      |                             (16,0,-1),(32,-1,-1),(64,-1,0),(128,-1,1)),
-      |candx AS (
-      |  SELECT a.r, a.c, d.code,
-      |         (a.f - b.f) / (CASE WHEN d.dr != 0 AND d.dc != 0
-      |                             THEN 5.0 * sqrt(2.0) ELSE 5.0 END) AS dp
-      |  FROM fg a JOIN ddx d ON true
-      |  JOIN fg b ON b.r = a.r + d.dr AND b.c = a.c + d.dc),
-      |bestx AS (
-      |  SELECT r, c, code, dp,
-      |         row_number() OVER (PARTITION BY r, c ORDER BY dp DESC, code ASC) AS rn
-      |  FROM candx),
-      |dirx AS (SELECT r, c, code FROM bestx WHERE rn = 1 AND dp > 0)
-      |SELECT fg.r AS row, fg.c AS col, CAST(COALESCE(d.code, 0) AS BIGINT) AS dir
-      |FROM fg LEFT JOIN dirx d ON d.r = fg.r AND d.c = fg.c
-      |ORDER BY row, col""".stripMargin,
-
-    // r30: TPI/TRI per cell over the valid 8-neighborhood — sums of exact
-    // dyadic squares are order-free; division and sqrt of identical
-    // operands are identical correctly-rounded doubles in both engines.
-    "r30_terrain_indices" -> s"""WITH $demGridCte,
-      |dd8(dr, dc) AS (VALUES (0,1),(1,1),(1,0),(1,-1),(0,-1),(-1,-1),(-1,0),(-1,1)),
-      |nb AS (
-      |  SELECT a.r, a.c, a.v, b.v AS vn FROM g a JOIN dd8 d ON true
-      |  JOIN g b ON b.r = a.r + d.dr AND b.c = a.c + d.dc
-      |  WHERE a.v IS NOT NULL AND b.v IS NOT NULL)
-      |SELECT CAST(r AS BIGINT) AS row, CAST(c AS BIGINT) AS col,
-      |       v - sum(vn) / count(*) AS tpi,
-      |       sqrt(sum((v - vn) * (v - vn))) AS tri
-      |FROM nb GROUP BY r, c, v ORDER BY row, col""".stripMargin,
-
-    // r31: marching squares replicated in SQL — the textbook case table
-    // as a VALUES relation (edge ids 0=top 1=right 2=bottom 3=left; the
-    // saddle rows key on the block-center mean), crossings as divisions
-    // of the same exact operands the engine uses, canonical endpoint
-    // order replicated verbatim.
-    "r31_contour" -> s"""WITH $demGridCte,
-      |blk AS (
-      |  SELECT a.r, a.c, a.v AS ztl, b.v AS ztr, d.v AS zbl, e.v AS zbr
-      |  FROM g a JOIN g b ON b.r = a.r AND b.c = a.c + 1
-      |  JOIN g d ON d.r = a.r + 1 AND d.c = a.c
-      |  JOIN g e ON e.r = a.r + 1 AND e.c = a.c + 1
-      |  WHERE a.v IS NOT NULL AND b.v IS NOT NULL
-      |    AND d.v IS NOT NULL AND e.v IS NOT NULL),
-      |cs AS (
-      |  SELECT r, c, ztl, ztr, zbl, zbr,
-      |    (CASE WHEN ztl >= 100.125e0 THEN 8 ELSE 0 END) +
-      |    (CASE WHEN ztr >= 100.125e0 THEN 4 ELSE 0 END) +
-      |    (CASE WHEN zbr >= 100.125e0 THEN 2 ELSE 0 END) +
-      |    (CASE WHEN zbl >= 100.125e0 THEN 1 ELSE 0 END) AS code,
-      |    (ztl + ztr + zbr + zbl) / 4.0e0 AS ctr
-      |  FROM blk),
-      |pts AS (
-      |  SELECT r, c, code, ctr,
-      |    c + (100.125e0 - ztl) / (ztr - ztl) AS topx,
-      |    r + (100.125e0 - ztr) / (zbr - ztr) AS righty,
-      |    c + (100.125e0 - zbl) / (zbr - zbl) AS botx,
-      |    r + (100.125e0 - ztl) / (zbl - ztl) AS lefty
-      |  FROM cs WHERE code NOT IN (0, 15)),
-      |segdef(code, ctrin, ea, eb) AS (VALUES
-      |  (1, NULL, 3, 2), (2, NULL, 2, 1), (3, NULL, 3, 1), (4, NULL, 0, 1),
-      |  (6, NULL, 0, 2), (7, NULL, 3, 0), (8, NULL, 3, 0), (9, NULL, 0, 2),
-      |  (11, NULL, 0, 1), (12, NULL, 3, 1), (13, NULL, 2, 1), (14, NULL, 3, 2),
-      |  (5, true, 3, 0), (5, true, 2, 1), (5, false, 3, 2), (5, false, 0, 1),
-      |  (10, true, 0, 1), (10, true, 3, 2), (10, false, 3, 0), (10, false, 2, 1)),
-      |segs AS (
-      |  SELECT p.*, s.ea, s.eb FROM pts p JOIN segdef s
-      |  ON s.code = p.code
-      |  AND (s.ctrin IS NULL OR s.ctrin = (p.ctr >= 100.125e0))),
-      |ends AS (
-      |  SELECT
-      |    CASE ea WHEN 0 THEN topx WHEN 1 THEN c + 1.0e0
-      |            WHEN 2 THEN botx ELSE c * 1.0e0 END AS ax,
-      |    CASE ea WHEN 0 THEN r * 1.0e0 WHEN 1 THEN righty
-      |            WHEN 2 THEN r + 1.0e0 ELSE lefty END AS ay,
-      |    CASE eb WHEN 0 THEN topx WHEN 1 THEN c + 1.0e0
-      |            WHEN 2 THEN botx ELSE c * 1.0e0 END AS bx,
-      |    CASE eb WHEN 0 THEN r * 1.0e0 WHEN 1 THEN righty
-      |            WHEN 2 THEN r + 1.0e0 ELSE lefty END AS b_y
-      |  FROM segs)
-      |SELECT
-      |  CASE WHEN ax < bx OR (ax = bx AND ay <= b_y) THEN ax ELSE bx END AS x1,
-      |  CASE WHEN ax < bx OR (ax = bx AND ay <= b_y) THEN ay ELSE b_y END AS y1,
-      |  CASE WHEN ax < bx OR (ax = bx AND ay <= b_y) THEN bx ELSE ax END AS x2,
-      |  CASE WHEN ax < bx OR (ax = bx AND ay <= b_y) THEN b_y ELSE ay END AS y2
-      |FROM ends ORDER BY x1, y1, x2, y2""".stripMargin,
-
-    // r10: the FULL vectorize oracle — WKT strings and all. Components by
-    // the r22 recursive closure; boundary sides by the r23 rule; then the
-    // ring ASSEMBLY is replicated exactly: each side becomes a DIRECTED
-    // unit edge with the interior on its left (top->+x, bottom->-x,
-    // left->-y, right->+y), the successor of an edge is the unique
-    // outgoing edge at its head with the most-negative cross(in, out)
-    // (= sharpest left turn; ties are impossible — at a saddle the two
-    // incoming directions are perpendicular to both outgoing ones, so
-    // cross is +/-1 and each incoming picks a distinct outgoing). succ is
-    // therefore a permutation; rings are its cycles, traced by a
-    // recursive CTE from every edge and deduped to the canonical rotation
-    // (start = the ring's min (y, x) corner — vertex-unique within a
-    // cycle because the left-turn rule splits saddles into separate
-    // rings). Exterior = positive shoelace area in y-down corner coords;
-    // ring order (exterior first, then holes by first vertex), vertex
-    // spelling (left + x*cs, top - y*cs, integral -> integer format) and
-    // separators replicate graft.operators.Vectorize.assembleWkt. The
-    // MATERIALIZED hints keep DuckDB from re-inlining the succ pipeline
-    // on every recursion step (170 s -> 5 s measured).
-    "r10_vectorize" ->
-      """WITH RECURSIVE g AS MATERIALIZED (
-        |  SELECT (id // 100) AS r, (id % 100) AS c, id AS cell,
-        |    CAST(((id // 100) // 8 * 31 + (id % 100) // 8 * 17) % 5 AS DOUBLE) AS v
-        |  FROM range(8000) t(id)
-        |  WHERE id % 53 <> 11),
-        |adj AS (
-        |  SELECT a.cell AS c1, b.cell AS c2 FROM g a JOIN g b
-        |  ON a.v = b.v AND ((abs(a.r - b.r) = 1 AND a.c = b.c)
-        |                 OR (a.r = b.r AND abs(a.c - b.c) = 1))),
-        |reach(cell, lbl) AS (
-        |  SELECT cell, cell FROM g
-        |  UNION
-        |  SELECT a.c2, reach.lbl FROM reach JOIN adj a ON a.c1 = reach.cell),
-        |lab AS (SELECT cell, min(lbl) AS root FROM reach GROUP BY cell),
-        |cells AS MATERIALIZED (
-        |  SELECT g.r, g.c, g.v, lab.root FROM g JOIN lab ON g.cell = lab.cell),
-        |cand AS (
-        |  SELECT x.root, x.r, x.c, x.v, s.s,
-        |    x.r + CASE s.s WHEN 0 THEN -1 WHEN 1 THEN 1 ELSE 0 END AS nr,
-        |    x.c + CASE s.s WHEN 2 THEN -1 WHEN 3 THEN 1 ELSE 0 END AS nc
-        |  FROM cells x, (VALUES (0), (1), (2), (3)) s(s)),
-        |bdry AS (
-        |  SELECT cand.root, cand.r, cand.c, cand.s
-        |  FROM cand LEFT JOIN g nb ON nb.r = cand.nr AND nb.c = cand.nc
-        |  WHERE nb.cell IS NULL OR nb.v <> cand.v),
-        |ed AS (
-        |  SELECT root, (r * 100 + c) * 4 + s AS eid,
-        |    CASE s WHEN 0 THEN c     WHEN 1 THEN c + 1 WHEN 2 THEN c     ELSE c + 1 END AS fx,
-        |    CASE s WHEN 0 THEN r     WHEN 1 THEN r + 1 WHEN 2 THEN r + 1 ELSE r     END AS fy,
-        |    CASE s WHEN 0 THEN c + 1 WHEN 1 THEN c     WHEN 2 THEN c     ELSE c + 1 END AS tx,
-        |    CASE s WHEN 0 THEN r     WHEN 1 THEN r + 1 WHEN 2 THEN r     ELSE r + 1 END AS ty
-        |  FROM bdry),
-        |ed2 AS MATERIALIZED (SELECT *, tx - fx AS dx, ty - fy AS dy FROM ed),
-        |succ AS MATERIALIZED (
-        |  SELECT eid, succ_eid FROM (
-        |    SELECT e.eid, o.eid AS succ_eid,
-        |      row_number() OVER (PARTITION BY e.eid
-        |        ORDER BY e.dx * o.dy - e.dy * o.dx) AS rn
-        |    FROM ed2 e JOIN ed2 o
-        |      ON o.root = e.root AND o.fx = e.tx AND o.fy = e.ty)
-        |  WHERE rn = 1),
-        |walk(start_eid, cur_eid, step) AS (
-        |  SELECT eid, eid, 0 FROM ed2
-        |  UNION ALL
-        |  SELECT w.start_eid, s.succ_eid, w.step + 1
-        |  FROM walk w JOIN succ s ON s.eid = w.cur_eid
-        |  WHERE s.succ_eid <> w.start_eid),
-        |wv AS MATERIALIZED (
-        |  SELECT w.start_eid, w.step, e.root, e.fx, e.fy, e.tx, e.ty
-        |  FROM walk w JOIN ed2 e ON e.eid = w.cur_eid),
-        |ringstat AS (
-        |  SELECT start_eid, root,
-        |    min(CASE WHEN step = 0 THEN fy END) AS y0,
-        |    min(CASE WHEN step = 0 THEN fx END) AS x0,
-        |    min(fy * 256 + fx) AS minkey,
-        |    sum(fx * ty - tx * fy) AS area2
-        |  FROM wv GROUP BY 1, 2),
-        |canon AS (
-        |  SELECT start_eid, root,
-        |    CASE WHEN area2 > 0 THEN 0 ELSE 1 END AS is_hole, y0, x0
-        |  FROM ringstat WHERE y0 * 256 + x0 = minkey),
-        |ringstr AS (
-        |  SELECT c.start_eid, c.root, c.is_hole, c.y0, c.x0,
-        |    '(' || string_agg(
-        |        CAST(wv.fx * 5 AS BIGINT) || ' ' || CAST(400 - wv.fy * 5 AS BIGINT),
-        |        ', ' ORDER BY wv.step)
-        |      || ', ' || CAST(c.x0 * 5 AS BIGINT) || ' '
-        |      || CAST(400 - c.y0 * 5 AS BIGINT) || ')' AS rs
-        |  FROM canon c JOIN wv ON wv.start_eid = c.start_eid
-        |  GROUP BY 1, 2, 3, 4, 5),
-        |polys AS (
-        |  SELECT root,
-        |    'POLYGON (' || string_agg(rs, ', ' ORDER BY is_hole, y0, x0) || ')' AS wkt
-        |  FROM ringstr GROUP BY root),
-        |meta AS (
-        |  SELECT root, min(v) AS v, CAST(count(*) AS BIGINT) AS n_pixels
-        |  FROM cells GROUP BY root)
-        |SELECT CAST(p.root AS BIGINT) AS feature_id, m.v, m.n_pixels, p.wkt
-        |FROM polys p JOIN meta m ON m.root = p.root
-        |ORDER BY feature_id""".stripMargin,
-
-    // r22: connected components by transitive closure over the same-value
-    // 4-adjacency (closure rows bounded by sum of component-size^2 — the
-    // blocky fixture's 8x8 blocks keep that ~500k), min label per cell =
-    // the component root, then per-value distinct-root/pixel counts.
-    "r22_component_stats" ->
-      """WITH RECURSIVE g AS (
-        |  SELECT (id // 100) AS r, (id % 100) AS c, id AS cell,
-        |    CAST(((id // 100) // 8 * 31 + (id % 100) // 8 * 17) % 5 AS DOUBLE) AS v
-        |  FROM range(8000) t(id)
-        |  WHERE id % 53 <> 11),
-        |adj AS (
-        |  SELECT a.cell AS c1, b.cell AS c2 FROM g a JOIN g b
-        |  ON a.v = b.v AND ((abs(a.r - b.r) = 1 AND a.c = b.c)
-        |                 OR (a.r = b.r AND abs(a.c - b.c) = 1))),
-        |reach(cell, lbl) AS (
-        |  SELECT cell, cell FROM g
-        |  UNION
-        |  SELECT a.c2, reach.lbl FROM reach JOIN adj a ON a.c1 = reach.cell),
-        |lab AS (SELECT cell, min(lbl) AS root FROM reach GROUP BY cell)
-        |SELECT g.v, CAST(count(DISTINCT lab.root) AS BIGINT) AS n_components,
-        |  CAST(count(*) AS BIGINT) AS n_pixels
-        |FROM g JOIN lab ON g.cell = lab.cell
-        |GROUP BY g.v ORDER BY g.v""".stripMargin,
-
-    // r23: the canonical unit-edge decomposition of the vectorized
-    // polygons — a boundary edge is any pixel side whose 4-neighbor is
-    // missing from the mask (NaN / off-grid) or carries a different
-    // value; the component label (feature_id) is the min global pixel
-    // index from the same recursive closure r22 uses. Side -> normalized
-    // pixel-corner edge: top (c,r)-(c+1,r), bottom (c,r+1)-(c+1,r+1),
-    // left (c,r)-(c,r+1), right (c+1,r)-(c+1,r+1).
-    "r23_vectorize_edges" ->
-      """WITH RECURSIVE g AS (
-        |  SELECT (id // 100) AS r, (id % 100) AS c, id AS cell,
-        |    CAST(((id // 100) // 8 * 31 + (id % 100) // 8 * 17) % 5 AS DOUBLE) AS v
-        |  FROM range(8000) t(id)
-        |  WHERE id % 53 <> 11),
-        |adj AS (
-        |  SELECT a.cell AS c1, b.cell AS c2 FROM g a JOIN g b
-        |  ON a.v = b.v AND ((abs(a.r - b.r) = 1 AND a.c = b.c)
-        |                 OR (a.r = b.r AND abs(a.c - b.c) = 1))),
-        |reach(cell, lbl) AS (
-        |  SELECT cell, cell FROM g
-        |  UNION
-        |  SELECT a.c2, reach.lbl FROM reach JOIN adj a ON a.c1 = reach.cell),
-        |lab AS (SELECT cell, min(lbl) AS root FROM reach GROUP BY cell),
-        |cells AS (
-        |  SELECT g.r, g.c, g.v, lab.root FROM g JOIN lab ON g.cell = lab.cell),
-        |cand AS (
-        |  SELECT x.root, x.r, x.c, x.v, s.s,
-        |    x.r + CASE s.s WHEN 0 THEN -1 WHEN 1 THEN 1 ELSE 0 END AS nr,
-        |    x.c + CASE s.s WHEN 2 THEN -1 WHEN 3 THEN 1 ELSE 0 END AS nc
-        |  FROM cells x, (VALUES (0), (1), (2), (3)) s(s)),
-        |bdry AS (
-        |  SELECT cand.root, cand.r, cand.c, cand.s
-        |  FROM cand LEFT JOIN g nb ON nb.r = cand.nr AND nb.c = cand.nc
-        |  WHERE nb.cell IS NULL OR nb.v <> cand.v)
-        |SELECT CAST(root AS BIGINT) AS feature_id,
-        |  CAST(CASE WHEN s = 3 THEN c + 1 ELSE c END AS BIGINT) AS x0,
-        |  CAST(CASE WHEN s = 1 THEN r + 1 ELSE r END AS BIGINT) AS y0,
-        |  CAST(CASE WHEN s = 2 THEN c ELSE c + 1 END AS BIGINT) AS x1,
-        |  CAST(CASE WHEN s = 0 THEN r ELSE r + 1 END AS BIGINT) AS y1
-        |FROM bdry ORDER BY feature_id, x0, y0, x1, y1""".stripMargin,
-
-    // d10: recursive closure over the d3 pair graph (same CTEs), each
-    // node labeled by its component's min doc_id.
-    "d10_dedup_components" ->
-      s"""WITH RECURSIVE $d3PairCtes,
-        |e AS (SELECT ia AS n, ib AS m FROM p UNION ALL SELECT ib, ia FROM p),
-        |reach(n, lbl) AS (
-        |  SELECT n, n FROM (SELECT DISTINCT n FROM e) t
-        |  UNION
-        |  SELECT e.m, reach.lbl FROM reach JOIN e ON e.n = reach.n)
-        |SELECT n AS doc_id, CAST(min(lbl) AS BIGINT) AS rep_id
-        |FROM reach GROUP BY n ORDER BY rep_id, doc_id""".stripMargin,
-
-    // d11: bigram/trigram multiplicities recomputed by unnest+group; the
-    // engine's run-length lambdas over sorted shingle arrays compute the
-    // same multiplicities without any shuffle. Fractions are single
-    // divisions of exact ints — bit-identical, no quantization.
-    "d11_repetition" ->
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        |b AS (SELECT doc_id, unnest([w[i] || ' ' || w[i + 1] for i in range(1, len(w))]) AS g
-        |  FROM toks WHERE len(w) >= 2),
-        |t AS (SELECT doc_id,
-        |    unnest([w[i] || ' ' || w[i + 1] || ' ' || w[i + 2] for i in range(1, len(w) - 1)]) AS g
-        |  FROM toks WHERE len(w) >= 3),
-        |bc AS (SELECT doc_id, max(c) AS top2_cnt, sum(c) AS n2
-        |  FROM (SELECT doc_id, g, count(*) AS c FROM b GROUP BY 1, 2) GROUP BY 1),
-        |tc AS (SELECT doc_id, coalesce(sum(c) FILTER (c >= 2), 0) AS dup3_occ, sum(c) AS n3
-        |  FROM (SELECT doc_id, g, count(*) AS c FROM t GROUP BY 1, 2) GROUP BY 1)
-        |SELECT d.doc_id,
-        |  CAST(coalesce(bc.top2_cnt, 0) AS BIGINT) AS top2_cnt,
-        |  CAST(coalesce(tc.dup3_occ, 0) AS BIGINT) AS dup3_occ,
-        |  CASE WHEN coalesce(bc.n2, 0) > 0
-        |    THEN bc.top2_cnt / CAST(bc.n2 AS DOUBLE) ELSE 0.0 END AS top2_frac,
-        |  CASE WHEN coalesce(tc.n3, 0) > 0
-        |    THEN tc.dup3_occ / CAST(tc.n3 AS DOUBLE) ELSE 0.0 END AS dup3_frac
-        |FROM documents d
-        |LEFT JOIN bc ON d.doc_id = bc.doc_id
-        |LEFT JOIN tc ON d.doc_id = tc.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // d12: md5 of the decimal doc_id string in both engines; first hex
-    // digit -> 16 buckets -> 13/1/2 train/val/test.
-    "d12_hash_split" ->
-      """SELECT CASE WHEN b <= 12 THEN 'train' WHEN b = 13 THEN 'val' ELSE 'test' END AS split,
-        |  lang, CAST(count(*) AS BIGINT) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS sum_chars
-        |FROM (SELECT lang, n_chars,
-        |    strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1 AS b
-        |  FROM documents) t
-        |GROUP BY 1, 2 ORDER BY split, lang""".stripMargin,
-
-    // d13: identical kernel — term counts, doc frequency, score = cnt/df
-    // (one exact-int division), top-3 per doc by (score desc, tok asc).
-    "d13_tfidf" ->
-      """WITH terms AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
-        |cnt AS (SELECT doc_id, tok, count(*) AS cnt FROM terms GROUP BY 1, 2),
-        |df AS (SELECT tok, count(*) AS df FROM cnt GROUP BY 1),
-        |scored AS (SELECT c.doc_id, c.tok, c.cnt, d.df,
-        |    c.cnt / CAST(d.df AS DOUBLE) AS score,
-        |    row_number() OVER (PARTITION BY c.doc_id
-        |      ORDER BY c.cnt / CAST(d.df AS DOUBLE) DESC, c.tok) AS rank
-        |  FROM cnt c JOIN df d USING (tok))
-        |SELECT doc_id, CAST(rank AS BIGINT) AS rank, tok,
-        |  CAST(cnt AS BIGINT) AS cnt, CAST(df AS BIGINT) AS df, score
-        |FROM scored WHERE rank <= 3 ORDER BY doc_id, rank""".stripMargin,
-
-    // d14: identical augmented string, identical regexes; DuckDB needs
-    // the 'g' flag (its regexp_replace is first-match by default; Spark's
-    // is global). Counts via regexp_extract_all length.
-    "d14_pii_scrub" -> {
-      val email = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
-      val url = "https?://[^ ]+"
-      val num = "[0-9]{6,}"
-      s"""WITH a AS (SELECT doc_id,
-         |    text || ' contact user' || doc_id || '@mail.example.com via http://cdn'
-         |      || doc_id || '.example.org/asset ref '
-         |      || lpad(CAST((doc_id * doc_id) % 100000000 AS VARCHAR), 8, '0') AS aug
-         |  FROM documents)
-         |SELECT doc_id,
-         |  CAST(len(regexp_extract_all(aug, '$email')) AS BIGINT) AS n_emails,
-         |  CAST(len(regexp_extract_all(aug, '$url')) AS BIGINT) AS n_urls,
-         |  CAST(len(regexp_extract_all(aug, '$num')) AS BIGINT) AS n_longnums,
-         |  regexp_replace(regexp_replace(regexp_replace(aug,
-         |    '$email', '<EMAIL>', 'g'), '$url', '<URL>', 'g'), '$num', '<NUM>', 'g') AS clean,
-         |  CAST(length(regexp_replace(regexp_replace(regexp_replace(aug,
-         |    '$email', '<EMAIL>', 'g'), '$url', '<URL>', 'g'), '$num', '<NUM>', 'g')) AS BIGINT) AS clean_len
-         |FROM a ORDER BY doc_id""".stripMargin
-    },
-
-    // d15: same tokenization (single-space split) and 4-gram window as
-    // the engine; n_shared = distinct grams shared with the benchmark set
-    "d15_contamination" ->
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        |g AS (SELECT doc_id,
-        |    unnest([w[i] || ' ' || w[i+1] || ' ' || w[i+2] || ' ' || w[i+3] for i in range(1, len(w) - 2)]) AS g
-        |  FROM toks WHERE len(w) >= 4),
-        |gd AS (SELECT DISTINCT doc_id, g FROM g),
-        |bench AS (SELECT DISTINCT g FROM gd WHERE doc_id % 7 = 0)
-        |SELECT c.doc_id, CAST(count(*) AS BIGINT) AS n_shared
-        |FROM (SELECT * FROM gd WHERE doc_id % 7 <> 0) c JOIN bench b USING (g)
-        |GROUP BY 1 ORDER BY doc_id""".stripMargin,
-
-    // d16: md5 of the decimal doc_id string, first TWO hex digits -> 256
-    // buckets, per-lang keep threshold
-    "d16_stratified_sample" ->
-      """SELECT doc_id, lang, CAST(b2 AS BIGINT) AS b2 FROM (
-        |  SELECT doc_id, lang,
-        |    (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 16
-        |      + strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1 AS b2
-        |  FROM documents) t
-        |WHERE b2 < CASE WHEN lang = 'en' THEN 128 WHEN lang = 'de' THEN 192 ELSE 64 END
-        |ORDER BY doc_id""".stripMargin,
-
-    // d17: the full curation chain replicated — filters, md5-keeper
-    // window, md5 split bucket, stratum aggregate
-    "d17_curation" ->
-      """WITH f AS (SELECT doc_id, lang, n_chars,
-        |    len(string_split(text, ' ')) AS n_words, md5(text) AS sig
-        |  FROM documents
-        |  WHERE n_chars BETWEEN 200 AND 4000
-        |    AND len(string_split(text, ' ')) >= 30
-        |    AND lang IN ('en', 'de', 'fr')),
-        |k AS (SELECT *, row_number() OVER (PARTITION BY sig ORDER BY doc_id) AS rk FROM f),
-        |s AS (SELECT CASE WHEN b <= 12 THEN 'train' WHEN b = 13 THEN 'val'
-        |      ELSE 'test' END AS split, lang, n_chars, n_words
-        |  FROM (SELECT *, strpos('0123456789abcdef',
-        |      substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1 AS b
-        |    FROM k WHERE rk = 1))
-        |SELECT split, lang, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-        |  CAST(sum(n_words) AS BIGINT) AS sum_words
-        |FROM s GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // i4: the FULL perceptual-hash kernel replicated in SQL — block codes
-    // K(i,b) by formula (incl. the i%167 near-dup plant), phash bit b =
-    // 64*K(i,b) > sum_b K(i,b) (pure integer comparison — payloads are
-    // block-constant dyadic rationals, see ImageCorpus.perceptualCode),
-    // hamming over all pairs, threshold <= 6. No separation assumption:
-    // whatever pair set the formula implies, both engines must agree.
-    "i4_phash_neardup" ->
-      s"""WITH $i4PairCtes
-        |SELECT 'img-' || lpad(CAST(ia AS VARCHAR), 8, '0') AS id_a,
-        |  'img-' || lpad(CAST(ib AS VARCHAR), 8, '0') AS id_b,
-        |  CAST(hamming AS BIGINT) AS hamming
-        |FROM ham WHERE hamming <= 6 ORDER BY id_a, id_b""".stripMargin,
-
-    // i5: dedup clustering over the i4 near-dup pair graph — recursive
-    // closure over the same CTEs, keeper = min image id per component
-    "i5_image_dedup_components" ->
-      s"""WITH RECURSIVE $i4PairCtes,
-        |p AS (SELECT ia, ib FROM ham WHERE hamming <= 6),
-        |e AS (SELECT ia AS n, ib AS m FROM p UNION ALL SELECT ib, ia FROM p),
-        |reach(n, lbl) AS (
-        |  SELECT n, n FROM (SELECT DISTINCT n FROM e) t
-        |  UNION
-        |  SELECT e.m, reach.lbl FROM reach JOIN e ON e.n = reach.n)
-        |SELECT 'img-' || lpad(CAST(n AS VARCHAR), 8, '0') AS image_id,
-        |  'img-' || lpad(CAST(min(lbl) AS VARCHAR), 8, '0') AS keeper_id
-        |FROM reach GROUP BY n ORDER BY keeper_id, image_id""".stripMargin,
-
-    // s1: the streaming windowed aggregate must equal the plain SQL
-    // windowed aggregate — 1-hour tumbling windows align to epoch hours
-    // in both engines (Spark windows anchor at the 1970 epoch,
-    // date_trunc('hour') likewise), counts are longs and the money sum
-    // uses the established exact-cents rule.
-    "s1_stream_window" ->
-      """SELECT epoch_ms(date_trunc('hour', ts)) AS w_start, event_type,
-        |  count(*) AS n,
-        |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS value_cents
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // s8: the ORIGINAL events only — the 100 late re-deliveries must
-    // contribute nothing, so the expected table is exactly s1's
-    "s8_stream_late_drop" ->
-      """SELECT epoch_ms(date_trunc('hour', ts)) AS w_start, event_type,
-        |  count(*) AS n,
-        |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS value_cents
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // s6: the stream-static broadcast enrichment + windowed aggregate ==
-    // the batch join + GROUP BY; the segment lookup's closed form is
-    // 'seg' || (user_id % 5), exactly what the static dimension carries.
-    "s6_stream_static" ->
-      """SELECT epoch_ms(date_trunc('hour', ts)) AS w_start,
-        |  'seg' || CAST(user_id % 5 AS VARCHAR) AS segment, event_type,
-        |  count(*) AS n,
-        |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS value_cents
-        |FROM events GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
-
-    // s2: the streaming sessionizer's final per-user rows equal the batch
-    // window-function sessionization — byte-identical to the q4 oracle.
-    "s2_stream_sessionize" ->
-      """WITH g AS (
-        |  SELECT user_id, event_id,
-        |    epoch_ms(ts)
-        |      - lag(epoch_ms(ts))
-        |        OVER (PARTITION BY user_id ORDER BY ts, event_id) AS gap,
-        |    ts
-        |  FROM events),
-        |s AS (
-        |  SELECT user_id, event_id, ts,
-        |    CASE WHEN gap IS NULL OR gap > 1800000 THEN 1 ELSE 0 END AS new_sess
-        |  FROM g),
-        |c AS (
-        |  SELECT user_id,
-        |    CAST(sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS sess
-        |  FROM s)
-        |SELECT user_id, max(sess) AS n_sessions, count(*) AS n_events
-        |FROM c GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    // s3: streaming first-sight dedup over the key projection == batch
-    // DISTINCT (key-only emission is what makes this deterministic).
-    "s3_stream_dedup" ->
-      """SELECT DISTINCT user_id, event_type FROM events
-        |ORDER BY user_id, event_type""".stripMargin,
-
-    // s4: the stream-stream interval join == the batch interval join;
-    // the range condition compares full-precision timestamps in both
-    // engines, lag_ms is a difference of per-event truncated epoch-ms.
-    "s4_stream_join" ->
-      """SELECT c.event_id AS click_id, p.event_id AS purchase_id,
-        |  c.user_id AS user_id,
-        |  epoch_ms(p.ts) - epoch_ms(c.ts) AS lag_ms
-        |FROM events c JOIN events p
-        |  ON c.user_id = p.user_id
-        | AND c.event_type = 'click' AND p.event_type = 'purchase'
-        | AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 30 MINUTE
-        |ORDER BY click_id, purchase_id""".stripMargin,
-
-    // e2: exact cosine top-5 on the clustered fixture — equal to the IVF
-    // result by construction (every query's true top-5 lives in its
-    // probed lists; dyadic coords make cosines bit-identical and rank
-    // gaps ~1e-3).
-    // e3: exact top-5 over the same fixture — PQ shortlist + exact
-    // re-rank must reproduce it (see the e3 query comment for the proof)
-    "e3_ann_pq" ->
-      """WITH v AS (
-        |  SELECT t.vid AS vid, d.d AS d,
-        |    (CASE WHEN d.d = t.vid % 16 THEN 8.0 ELSE 0.0 END)
-        |      + (((t.vid // 16) * 31 + d.d * 17 + (t.vid % 16) * 7) % 13 - 6) * 0.125 AS x
-        |  FROM range(480) t(vid), range(16) d(d)),
-        |norms AS (SELECT vid, sqrt(sum(x*x)) AS n FROM v GROUP BY vid),
-        |pairs AS (
-        |  SELECT q.vid AS qid, c.vid AS vid, sum(q.x * c.x) AS dot
-        |  FROM v q JOIN v c ON q.d = c.d AND q.vid < 10 AND c.vid <> q.vid
-        |  GROUP BY q.vid, c.vid),
-        |cs AS (
-        |  SELECT p.qid, p.vid, p.dot / (nq.n * nc.n) AS cos
-        |  FROM pairs p JOIN norms nq ON nq.vid = p.qid
-        |              JOIN norms nc ON nc.vid = p.vid),
-        |rk AS (SELECT qid, vid,
-        |  row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vid) AS rank
-        |  FROM cs)
-        |SELECT qid, CAST(rank AS BIGINT) AS rank, vid
-        |FROM rk WHERE rank <= 5 ORDER BY qid, rank""".stripMargin,
-
-    // e4: exact top-5 again — IVF-PQ must reproduce it (probed lists
-    // contain the true neighbors; ADC margins per the e3/e4 comments)
-    "e4_ann_ivfpq" ->
-      """WITH v AS (
-        |  SELECT t.vid AS vid, d.d AS d,
-        |    (CASE WHEN d.d = t.vid % 16 THEN 8.0 ELSE 0.0 END)
-        |      + (((t.vid // 16) * 31 + d.d * 17 + (t.vid % 16) * 7) % 13 - 6) * 0.125 AS x
-        |  FROM range(480) t(vid), range(16) d(d)),
-        |norms AS (SELECT vid, sqrt(sum(x*x)) AS n FROM v GROUP BY vid),
-        |pairs AS (
-        |  SELECT q.vid AS qid, c.vid AS vid, sum(q.x * c.x) AS dot
-        |  FROM v q JOIN v c ON q.d = c.d AND q.vid < 10 AND c.vid <> q.vid
-        |  GROUP BY q.vid, c.vid),
-        |cs AS (
-        |  SELECT p.qid, p.vid, p.dot / (nq.n * nc.n) AS cos
-        |  FROM pairs p JOIN norms nq ON nq.vid = p.qid
-        |              JOIN norms nc ON nc.vid = p.vid),
-        |rk AS (SELECT qid, vid,
-        |  row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vid) AS rank
-        |  FROM cs)
-        |SELECT qid, CAST(rank AS BIGINT) AS rank, vid
-        |FROM rk WHERE rank <= 5 ORDER BY qid, rank""".stripMargin,
-
-    "e2_ann_ivf" ->
-      """WITH v AS (
-        |  SELECT t.vid AS vid, d.d AS d,
-        |    (CASE WHEN d.d = t.vid % 16 THEN 8.0 ELSE 0.0 END)
-        |      + (((t.vid // 16) * 31 + d.d * 17 + (t.vid % 16) * 7) % 13 - 6) * 0.125 AS x
-        |  FROM range(480) t(vid), range(16) d(d)),
-        |norms AS (SELECT vid, sqrt(sum(x*x)) AS n FROM v GROUP BY vid),
-        |pairs AS (
-        |  SELECT q.vid AS qid, c.vid AS vid, sum(q.x * c.x) AS dot
-        |  FROM v q JOIN v c ON q.d = c.d AND q.vid < 10 AND c.vid <> q.vid
-        |  GROUP BY q.vid, c.vid),
-        |cs AS (
-        |  SELECT p.qid, p.vid, p.dot / (nq.n * nc.n) AS cos
-        |  FROM pairs p JOIN norms nq ON nq.vid = p.qid
-        |              JOIN norms nc ON nc.vid = p.vid),
-        |rk AS (SELECT qid, vid,
-        |  row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vid) AS rank
-        |  FROM cs)
-        |SELECT qid, CAST(rank AS BIGINT) AS rank, vid
-        |FROM rk WHERE rank <= 5 ORDER BY qid, rank""".stripMargin,
-
-    // e8: brute-force radius filter on the same reconstructed fixture —
-    // the ball-bound probe set is an exact superset, so the engine's
-    // pruned result must EQUAL this unpruned oracle
-    "e8_range_search" ->
-      """WITH v AS (
-        |  SELECT t.vid AS vid, d.d AS d,
-        |    (CASE WHEN d.d = t.vid % 16 THEN 8.0 ELSE 0.0 END)
-        |      + (((t.vid // 16) * 31 + d.d * 17 + (t.vid % 16) * 7) % 13 - 6) * 0.125 AS x
-        |  FROM range(480) t(vid), range(16) d(d)),
-        |norms AS (SELECT vid, sqrt(sum(x*x)) AS n FROM v GROUP BY vid),
-        |pairs AS (
-        |  SELECT q.vid AS qid, c.vid AS vid, sum(q.x * c.x) AS dot
-        |  FROM v q JOIN v c ON q.d = c.d AND q.vid < 10 AND c.vid <> q.vid
-        |  GROUP BY q.vid, c.vid)
-        |SELECT p.qid AS qid, p.vid AS vid
-        |FROM pairs p JOIN norms nq ON nq.vid = p.qid
-        |            JOIN norms nc ON nc.vid = p.vid
-        |WHERE p.dot / (nq.n * nc.n) >= 0.6
-        |ORDER BY p.qid, p.vid""".stripMargin,
-
-    // e9: brute raw inner-product top-5 over the norm-skewed fixture —
-    // the augmented engine path must reproduce the raw MIPS ranking
-    "e9_mips" ->
-      """WITH v AS (
-        |  SELECT t.vid AS vid, d.d AS d,
-        |    ((CASE WHEN d.d = t.vid % 16 THEN 8.0 ELSE 0.0 END)
-        |      + (((t.vid // 16) * 31 + d.d * 17 + (t.vid % 16) * 7) % 13 - 6) * 0.125)
-        |    * ((t.vid % 5 + 1) * 0.25) AS x
-        |  FROM range(480) t(vid), range(16) d(d)),
-        |pairs AS (
-        |  SELECT q.vid AS qid, c.vid AS vid,
-        |    CAST(sum(q.x * c.x) AS DOUBLE) AS ip
-        |  FROM v q JOIN v c ON q.d = c.d AND q.vid < 10 AND c.vid <> q.vid
-        |  GROUP BY q.vid, c.vid),
-        |rk AS (SELECT qid, vid, ip,
-        |  row_number() OVER (PARTITION BY qid ORDER BY ip DESC, vid) AS rank
-        |  FROM pairs)
-        |SELECT qid, CAST(rank AS BIGINT) AS rank, vid, ip
-        |FROM rk WHERE rank <= 5 ORDER BY qid, rank""".stripMargin,
-
-    // e7: the e2 brute oracle with the metadata predicate applied to the
-    // corpus side (vid % 3 = 0 <=> lang = 'en')
-    "e7_ann_filtered" ->
-      """WITH v AS (
-        |  SELECT t.vid AS vid, d.d AS d,
-        |    (CASE WHEN d.d = t.vid % 16 THEN 8.0 ELSE 0.0 END)
-        |      + (((t.vid // 16) * 31 + d.d * 17 + (t.vid % 16) * 7) % 13 - 6) * 0.125 AS x
-        |  FROM range(480) t(vid), range(16) d(d)),
-        |norms AS (SELECT vid, sqrt(sum(x*x)) AS n FROM v GROUP BY vid),
-        |pairs AS (
-        |  SELECT q.vid AS qid, c.vid AS vid, sum(q.x * c.x) AS dot
-        |  FROM v q JOIN v c ON q.d = c.d AND q.vid < 10 AND c.vid <> q.vid
-        |    AND c.vid % 3 = 0
-        |  GROUP BY q.vid, c.vid),
-        |cs AS (
-        |  SELECT p.qid, p.vid, p.dot / (nq.n * nc.n) AS cos
-        |  FROM pairs p JOIN norms nq ON nq.vid = p.qid
-        |              JOIN norms nc ON nc.vid = p.vid),
-        |rk AS (SELECT qid, vid,
-        |  row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vid) AS rank
-        |  FROM cs)
-        |SELECT qid, CAST(rank AS BIGINT) AS rank, vid
-        |FROM rk WHERE rank <= 5 ORDER BY qid, rank""".stripMargin
-  )
 }

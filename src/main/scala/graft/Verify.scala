@@ -1,8 +1,9 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+import scala.util.control.NonFatal
+/** Correctness dump: each gated query's result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare (tools/check_oracle.py). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -15,20 +16,18 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // local-iteration filter: comma-separated query names (driver sets none)
-    // trimmed, blanks dropped; an effectively-empty filter means none
-    // (SPARK_GRAFT_ONLY="" silently selecting ZERO queries would dump an
-    // empty oracle_sql.json that "passes" with nothing checked)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty)
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    // local-iteration filter: comma-separated query names (unset for a
+    // full run); trimmed, blanks dropped. An effectively-empty filter means
+    // every query, and an unknown name fails the run (a typo selecting
+    // ZERO queries would dump an empty oracle_sql.json that "passes"
+    // with nothing checked)
+    val selected = SparkEntry.select(sys.env.get("SPARK_GRAFT_ONLY").toSeq
+      .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty))
+    selected.foreach { g =>
+      try g.run(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${g.name}")
+      catch { case NonFatal(e) =>
+        System.err.println(s"[verify] ${g.name} failed: ${e.getMessage}")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -43,12 +42,11 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    // honor the same SPARK_GRAFT_ONLY filter: a partial dump must not ship
-    // oracle entries for queries it didn't run, or the compare reports
-    // "no spark output" failures for every omitted query
-    val json = SparkEntry.oracleSql
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    // the same selection: a partial dump must not ship oracle entries for
+    // queries it didn't run, or the compare reports "no spark output"
+    // failures for every omitted query
+    val json = selected.map(g => s"${q(g.name)}: ${q(g.oracle)}")
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

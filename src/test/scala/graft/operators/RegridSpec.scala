@@ -396,7 +396,7 @@ class RegridSpec extends AnyFunSuite {
 
   test("r23 edge decomposition: WKT-parsed unit edges == mask boundary edges") {
     val ref = Synth.gridARef
-    val got = graft.SparkEntry.queries("r23_vectorize_edges")(spark, "")
+    val got = graft.SparkEntry.select(Seq("r23_vectorize_edges")).head.run(spark, "")
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
       .toSet
