@@ -59,10 +59,12 @@ object Prof {
     override def onJobStart(js: SparkListenerJobStart): Unit = if (enabled) {
       def prop(k: String) = Option(js.properties)
         .flatMap(p => Option(p.getProperty(k))).getOrElse("")
-      val desc = prop("spark.job.description") match {
-        case "" => prop("callSite.short")
-        case d => d
-      }
+      // one line per job (a stream batch's description spans several);
+      // ordinary DataFrame jobs set neither property, and their result
+      // stage's name carries the call site
+      val desc = Seq(prop("spark.job.description"), prop("callSite.short"))
+        .map(_.replaceAll("\\s+", " ").trim).find(_.nonEmpty)
+        .getOrElse(js.stageInfos.maxByOption(_.stageId).fold("")(_.name))
       open.put(js.jobId, J(js.jobId, System.nanoTime(), desc))
       ()
     }

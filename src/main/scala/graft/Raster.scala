@@ -493,43 +493,32 @@ final case class Raster(tiles: Dataset[Tile], ref: GridRef, res: Int = 6) {
     var cur = tiles
     var curRef = ref
     var exact = !hasNaN // dims even + hole-free -> progressive fold exact
-    var prevCached: Option[Dataset[Tile]] = None
-    val parts = (0 until levels).map { level =>
-      if (level > 0) {
-        if (exact && (curRef.nrows % 2 == 0) && (curRef.ncols % 2 == 0)) {
-          val cellsL = operators.Downsample.stats(cur, curRef, res, 2, "average")
-          curRef = operators.Downsample.targetRef(curRef, 2)
-          // persist each level: without it, evaluating level L lazily
-          // re-runs the whole chain from the base (O(levels^2) scans)
-          // localCheckpoint, not persist: blocks release with the RDD
-          // once the pyramid's frames go out of scope (a CacheManager
-          // entry pinned them for the session), and the columnar encode
-          // of tile payloads is skipped
-          cur = TileOps.tilesFromCells(cellsL, curRef, res)
-            .localCheckpoint(false)
-        } else {
-          // odd dimension or NaN holes: partial/hole-reduced 2x2 windows
-          // would bias mean-of-means; this level (and the rest)
-          // downsample from the base directly
-          exact = false
-          val cellsL = operators.Downsample.stats(tiles, ref, res, 1 << level,
-            "average")
-          curRef = operators.Downsample.targetRef(ref, 1 << level)
-          cur = TileOps.tilesFromCells(cellsL, curRef, res)
+    // each level's png is an eager cut: the union reads no owned level
+    val parts = Owned { own =>
+      (0 until levels).map { level =>
+        if (level > 0) {
+          if (exact && (curRef.nrows % 2 == 0) && (curRef.ncols % 2 == 0)) {
+            val cellsL = operators.Downsample.stats(cur, curRef, res, 2, "average")
+            curRef = operators.Downsample.targetRef(curRef, 2)
+            // cache each level: without it, evaluating level L lazily
+            // re-runs the whole chain from the base (O(levels^2) scans)
+            cur = own.reuse(TileOps.tilesFromCells(cellsL, curRef, res))
+          } else {
+            // odd dimension or NaN holes: partial/hole-reduced 2x2 windows
+            // would bias mean-of-means; this level (and the rest)
+            // downsample from the base directly
+            exact = false
+            val cellsL = operators.Downsample.stats(tiles, ref, res, 1 << level,
+              "average")
+            curRef = operators.Downsample.targetRef(ref, 1 << level)
+            cur = TileOps.tilesFromCells(cellsL, curRef, res)
+          }
         }
+        TileFns.renderPng(cur, lo, hi).map { case (cid, png) =>
+          (level.toLong, core.CellId.cx(cid), core.CellId.cy(cid), png)
+        }.toDF("level", "x", "y", "png").localCheckpoint(true)
       }
-      // eager per-level materialization (localCheckpoint) so the PREVIOUS
-      // level's cache releases immediately — repeated pyramid calls no
-      // longer accumulate cached blocks for the session lifetime
-      // (ADVICE r4 #2)
-      val png = TileFns.renderPng(cur, lo, hi).map { case (cid, png) =>
-        (level.toLong, core.CellId.cx(cid), core.CellId.cy(cid), png)
-      }.toDF("level", "x", "y", "png").localCheckpoint(true)
-      prevCached.foreach(_.unpersist())
-      prevCached = if (cur ne tiles) Some(cur) else None
-      png
     }
-    prevCached.foreach(_.unpersist())
     parts.reduce(_ unionByName _)
   }
 

@@ -254,12 +254,8 @@ object IceliteGates {
           t.payload.foreach(v => sv += Math.rint(v).toLong)
           (stage, side, 1L, t.payload.length.toLong, sv)
         }.toDF("stage", "side", "t", "n", "sv")
-      val parts = Seq(snap2, snap3).map { sn =>
-        // localCheckpoint, not persist: the columnar InMemoryRelation
-        // encode of 4096-double payload arrays cost more than the
-        // changelog itself (measured ~1.6s/interval); the RDD-block
-        // checkpoint caches rows as-is
-        val ch = il.readChanges(s, src, sn - 1, sn).localCheckpoint(false)
+      val parts = Seq(snap2, snap3).map { sn => Owned { own =>
+        val ch = own.reuse(il.readChanges(s, src, sn - 1, sn))
         // ONE action decides both apply branches (and materializes the
         // lazily checkpointed changelog) — two separate isEmpty probes
         // were two extra driver round-trips per interval
@@ -271,10 +267,9 @@ object IceliteGates {
             nByType.getOrElse("update_postimage", 0L) > 0) il.upsertDf(s, mir, ups)
         val dels = ch.filter($"_change_type" === "delete").select($"cellId")
         if (nByType.getOrElse("delete", 0L) > 0) il.deleteRows(s, mir, dels)
-        ch.unpersist()
         val mHead = il.currentSnapshot(mir).get
         stats(src, sn, sn, "source").unionByName(stats(mir, mHead, sn, "mirror"))
-      }
+      }}
       parts.reduce(_ unionByName _)
         .groupBy($"stage", $"side")
         .agg(sum($"t").as("n_tiles"), sum($"n").as("n_cells"),

@@ -2,6 +2,7 @@ package graft
 package gated
 
 import org.apache.spark.sql.functions._
+import graft.core.Owned
 import graft.corpus.ImageCorpus
 import Fixtures.{corpusTable, phashedPerceptual, i4PairCtes, i6QualitySql}
 
@@ -435,10 +436,10 @@ object ImageGates {
     // combine into a <= 1000-row global histogram; the CDF remap is
     // driver-built over that bounded code domain and BROADCAST back for
     // the per-image remap pass. Same floor-division CDF rule as i10.
-    GatedQuery("i11_global_equalize", (s, _) => {
+    GatedQuery("i11_global_equalize", (s, _) => Owned { own =>
       import s.implicits._
       import graft.codecs.ImageCodec
-      val codes = ImageCorpus.generateExact(s, 64L, 8).map { row =>
+      val codes = own.reuse(ImageCorpus.generateExact(s, 64L, 8).map { row =>
         val (px, _, _) = ImageCodec.decode(row.bytes, row.fmt)
         val cs = new Array[Int](px.length)
         var j = 0
@@ -447,7 +448,7 @@ object ImageGates {
           j += 1
         }
         (row.image_id, cs)
-      }.localCheckpoint(false)
+      })
       val hist = codes.flatMap { case (_, cs) =>
         val m = new Array[Long](1000)
         cs.foreach(c => m(c) += 1)
@@ -468,7 +469,7 @@ object ImageGates {
           else ((cum - cdfMin) * 255 / (total - cdfMin)).toInt
       }
       val bc = s.sparkContext.broadcast(remap)
-      val out = codes.map { case (id, cs) =>
+      codes.map { case (id, cs) =>
         var sm = 0L; var mn = Long.MaxValue; var mx = Long.MinValue
         val seen = new java.util.BitSet(256)
         var j = 0
@@ -482,8 +483,6 @@ object ImageGates {
       }.toDF("image_id", "eq_sum", "n_levels", "eq_min", "eq_max")
         .orderBy($"image_id")
         .localCheckpoint(true)
-      codes.unpersist()
-      out
     },
       // i11: ONE global CDF over all 64 images' codes (total 4,194,304
       // pixels), same floor-division rule, then per-image rollups

@@ -1439,7 +1439,7 @@ object RasterGates {
     // kernel (deterministic (d2, pid) tie-break; d2 is exact — all
     // coordinates dyadic multiples of 2.5, so squares and sums carry no
     // rounding). Band aggregates gate the whole repaired surface.
-    GatedQuery("r60_remove_block", (s, _) => {
+    GatedQuery("r60_remove_block", (s, _) => Owned { own =>
       import s.implicits._
       val ref = Synth.demRef
       // footprint mask from the r4 PIP burn (the burn VALUE is not
@@ -1448,12 +1448,11 @@ object RasterGates {
           useAttr = false)
         .toDF("row", "col", "burn")
         .select($"row", $"col", lit(true).as("m"))
-      // persist: the mask join + DEM scan feed BOTH the repair kernel's
+      // reused: the mask join + DEM scan feed BOTH the repair kernel's
       // point/hole sides and the final stitch — without it the burn job
       // and the icelite scan would run twice
-      val masked = TileOps.cells(demTiles(s))
-        .join(mask, Seq("row", "col"), "left")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val masked = own.reuse(TileOps.cells(demTiles(s))
+        .join(mask, Seq("row", "col"), "left"))
       val pts = masked.filter($"m".isNull && $"v".isNotNull)
         .select(($"row".cast("long") * ref.ncols + $"col").as("pid"),
           (lit(ref.left) + ($"col" + 0.5) * ref.cellsize).as("x"),
@@ -1467,7 +1466,7 @@ object RasterGates {
           targets = Some(holes))
         .select($"row".cast("long").as("row"), $"col".cast("long").as("col"),
           $"v".as("fv"))
-      val out = masked.join(filled, Seq("row", "col"), "left")
+      masked.join(filled, Seq("row", "col"), "left")
         .select($"row",
           when($"m".isNotNull, $"fv").otherwise($"v").as("rv"),
           $"m".isNotNull.as("was_block"))
@@ -1477,9 +1476,7 @@ object RasterGates {
           count($"rv").as("n_valid"),
           sum(($"rv" * 4).cast("long")).as("sum_vq"))
         .orderBy($"band")
-        .localCheckpoint(true) // eager, so the persist can release now
-      masked.unpersist()
-      out
+        .localCheckpoint(true)
     },
     // r60: PIP footprint + brute nearest over all surviving valid cells
     // (rank-1 by the same exact (d2, pid) key the bucketed kernel

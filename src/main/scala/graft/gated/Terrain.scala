@@ -792,14 +792,13 @@ object TerrainGates {
     // tpi*n = v*box_n - box_sum, classified against threshold*box_n, so
     // no float mean ever forms. Probes are generated distributively
     // (4 corner rows per cell), joined home on the owning tile id.
-    GatedQuery("r62_tpi_landform", (s, _) => {
+    GatedQuery("r62_tpi_landform", (s, _) => Owned { own =>
       import s.implicits._
       val ref = GridRef(ncols = 384, nrows = 256, xll = 0, yll = 0,
         cellsize = 1, nodata = -9999)
       val tiles = TileOps.tileGrid(s, ref, tileRes)((r, c) =>
         ((r * 7 + c * 3) % 100).toDouble)
-      val sat = graft.operators.Sat.satTiles(tiles)
-        .localCheckpoint(false)
+      val sat = own.reuse(graft.operators.Sat.satTiles(tiles))
       val cells = TileOps.cells(tiles)
         .select($"row".cast("int").as("qr"), $"col".cast("int").as("qc"),
           $"v".cast("long").as("v"))
@@ -814,7 +813,7 @@ object TerrainGates {
           max(when($"k" === 4, $"box_sum")).cast("long").as("bs_s"),
           max(when($"k" === 16, $"box_n")).as("n_l"),
           max(when($"k" === 16, $"box_sum")).cast("long").as("bs_l"))
-      val out = cells
+      cells
         .join(boxes, Seq("qr", "qc"))
         .withColumn("tpi_s", $"v" * $"n_s" - $"bs_s")
         .withColumn("tpi_l", $"v" * $"n_l" - $"bs_l")
@@ -829,8 +828,6 @@ object TerrainGates {
           sum($"tpi_s").as("sum_tpi_s"), sum($"tpi_l").as("sum_tpi_l"))
         .orderBy($"class_s", $"class_l")
         .localCheckpoint(true)
-      sat.unpersist()
-      out
     },
       // r62: SAT replayed in SQL (two window cumsums), box sums via the
       // same signed 4-corner formula as equi self-joins with zero-padding

@@ -421,9 +421,7 @@ object TextGates {
       val terms = table(s, dir, "documents")
         .select($"doc_id", explode(split($"text", " ")).as("tok"))
       val cnt = terms.groupBy($"doc_id", $"tok").agg(count(lit(1)).as("cnt"))
-        .localCheckpoint() // eager, blocks freed with the plan — a persist()
-        // here pins the CacheManager for the SESSION (three cached
-        // relations would survive every later query of a 138-query sweep)
+        .localCheckpoint()
       val df = cnt.groupBy($"tok").agg(count(lit(1)).as("df"))
       val w = Window.partitionBy($"doc_id")
         .orderBy($"score".desc, $"tok".asc)
@@ -517,9 +515,7 @@ object TextGates {
         .select($"doc_id", explode(array_distinct(
           graft.text.TextOps.wordShingles($"ws", 4))).as("g"))
         .select($"doc_id", xxhash64($"g").as("h"))
-        .localCheckpoint() // eager, blocks freed with the plan — a persist()
-        // here pins the CacheManager for the SESSION (three cached
-        // relations would survive every later query of a 138-query sweep)
+        .localCheckpoint()
       val bench = grams.filter($"doc_id" % 7 === 0).select($"h").distinct()
       grams.filter($"doc_id" % 7 =!= 0)
         .join(broadcast(bench), "h")
@@ -657,9 +653,7 @@ object TextGates {
           graft.text.TextOps.wordShingles($"ws", 8)).as("g"))
         .select($"doc_id", xxhash64($"g").as("h"))
         .groupBy($"h", $"doc_id").agg(count(lit(1)).as("c"))
-        .localCheckpoint() // eager, blocks freed with the plan — a persist()
-        // here pins the CacheManager for the SESSION (three cached
-        // relations would survive every later query of a 138-query sweep)
+        .localCheckpoint()
       val cross = gc.groupBy($"h").agg(count(lit(1)).as("df"))
         .filter($"df" >= 2).select($"h")
       val nGrams = gc.groupBy($"doc_id").agg(sum($"c").as("n_grams"))

@@ -179,10 +179,10 @@ object IceLite {
     import spark.implicits._
     require(rows.columns.contains("cellId") && rows.columns.contains("payload"),
       "commitResumableDf: rows must carry cellId and payload columns")
-    // NOT persisted: the commit's passes recompute the input, which
-    // measures FASTER than paying the InMemoryRelation columnar cache
-    // build for typical commit inputs (generated tiles / just-read
-    // parquet); callers with an expensive upstream persist at their level
+    // NOT cached: the commit's passes recompute the input, which
+    // measures FASTER than building a cache for typical commit inputs
+    // (generated tiles / just-read parquet); callers with an expensive
+    // upstream cache it in their own [[graft.core.Owned]] scope
     val done = committedBuckets(table, snap)
     // range-bucket on the Z-order id so each bucket is a CONTIGUOUS cell
     // range -> manifest min/max stats stay tight and reads prune by range

@@ -116,7 +116,9 @@ object Batching {
     val indexed = sources.map { case (mod, df, quota) =>
       val rows = df.select(col(idCol).as("id"),
         md5(col(idCol).cast("string")).as("k"))
-      (mod, quota, globalIndex(rows).cache())
+      // a lineage cut: the count below fills it and the returned plan
+      // reads it; the ContextCleaner releases its blocks with the result
+      (mod, quota, globalIndex(rows).localCheckpoint())
     }
     val periods = indexed.map { case (_, quota, rdd) =>
       rdd.count() / quota
@@ -128,8 +130,6 @@ object Batching {
           (mod, id, (idx / quota) * period + off + idx % quota)
         })
     }.reduce(_ union _)
-    // cached index RDDs stay referenced by `out`'s lineage; the
-    // ContextCleaner releases their blocks once the result is dropped
     out.toDF("modality", idCol, "global_pos")
   }
 

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions.{col, expr, min => sqlMin}
-import graft.core.{GridRef, Tile}
+import graft.core.{GridRef, Owned, Tile}
 
 /** Weighted cost-distance accumulation (the map-algebra CostDistance /
   * least-cost "friction surface" primitive): for every valid cell, the
@@ -123,8 +123,8 @@ object CostDistance {
   def tilesDist(cost: Dataset[Tile], ref: GridRef, res: Int,
       isSource: Double => Boolean, maxRounds: Int = 10000): Dataset[Tile] = {
     import cost.sparkSession.implicits._
-    val pfQ = Stencil.padded(cost, ref, res).localCheckpoint(false)
-    try {
+    Owned { own =>
+      val pfQ = own.reuse(Stencil.padded(cost, ref, res))
       var state: Dataset[Tile] = cost.map { t =>
         val payload = t.payload.map { q =>
           if (q.isNaN) Double.NaN else if (isSource(q)) 0.0 else INF
@@ -165,7 +165,7 @@ object CostDistance {
         state = stepped.map(_._1)
       }
       state
-    } finally pfQ.unpersist()
+    }
   }
 
   /** Accumulated cost distance `(row, col, dist)` for every REACHABLE

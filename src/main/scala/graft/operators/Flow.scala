@@ -334,9 +334,8 @@ object Flow {
       stop
     }
 
-  /** Halo'd tiles paired with their stop cells, held for the two passes.
-    * (A localCheckpoint is not a cache-manager entry: it is released with
-    * its lineage, not by `unpersist`.) */
+  /** Halo'd tiles paired with their stop cells, held for the two passes
+    * by a lineage cut. */
   private def masked(tiles: Dataset[Tile], ref: GridRef, res: Int,
       stops: Option[Dataset[(Long, Array[Int])]]): Dataset[Masked] = {
     import tiles.sparkSession.implicits._
@@ -483,14 +482,22 @@ object Flow {
     case Right(ds) =>
       import ds.sparkSession.implicits._
       // lazy checkpoints: each round's frontier count materializes both
-      // the active rows and the frontier
+      // the active rows and the frontier. The frontier reads `active` in
+      // one scan (each row keyed by itself, and a blocker keyed by its
+      // successor): an anti-join against its own successors would read the
+      // uncomputed cut from two stages at once.
       var active = ds.localCheckpoint(false)
       var remaining = active.count()
       val done = scala.collection.mutable.ArrayBuffer[Dataset[FoldNode]]()
       while (remaining > 0) {
-        val blocked = active.filter(_.hasSucc).select($"sr".as("xr"), $"sc".as("xc"))
-        val frontier = active.join(blocked, Seq("xr", "xc"), "left_anti").as[FoldNode]
-          .localCheckpoint(false)
+        val frontier = active.flatMap { n =>
+            val self = Iterator.single(((n.xr, n.xc), Option(n)))
+            if (n.hasSucc) self ++ Iterator.single(((n.sr, n.sc), Option.empty[FoldNode]))
+            else self
+          }.groupByKey(_._1).flatMapGroups { (_, it) =>
+            val xs = it.map(_._2).toArray
+            if (xs.exists(_.isEmpty)) Iterator.empty else xs.iterator.flatten
+          }.localCheckpoint(false)
         val nf = frontier.count()
         require(nf > 0, "crossing graph is cyclic — non-monotone dirs")
         done += frontier
@@ -1040,9 +1047,8 @@ object Flow {
     val INF = Double.PositiveInfinity
     val ncols = ref.ncols.toLong
     val nrows = ref.nrows.toLong
-    val pad = Stencil.padded(tiles, ref, res)
-      .localCheckpoint(false)
-    try {
+    Owned { own =>
+      val pad = own.reuse(Stencil.padded(tiles, ref, res))
       val rows = pad.flatMap(pf => tileSpillGraph(pf, ncols)).collect()
       // assemble the global border graph: terminals carry z; DRAIN edges
       // seed the solve; saddles + cross-tile adjacencies connect it
@@ -1090,7 +1096,7 @@ object Flow {
       val bfill: scala.collection.Map[Long, Double] = dist
       val bc = tiles.sparkSession.sparkContext.broadcast(bfill)
       pad.map(pf => refloodTile(pf, bc.value, ncols)).localCheckpoint(true)
-    } finally pad.unpersist()
+    }
   }
 
   /** Iterative halo-relaxation fill (the pre-Barnes path, kept as the
@@ -1099,8 +1105,8 @@ object Flow {
       res: Int, maxRounds: Int = 10000): Dataset[Tile] = {
     import tiles.sparkSession.implicits._
     val INF = Double.PositiveInfinity
-    val z = tiles.localCheckpoint(false)
-    try {
+    Owned { own =>
+      val z = own.reuse(tiles)
       // init: drains (grid border / NaN-adjacent, via the padded z halo
       // which is NaN off-grid) start at z; everything else at +inf
       var state: Dataset[Tile] = Stencil.padded(z, ref, res).map { pz =>
@@ -1159,7 +1165,7 @@ object Flow {
         state = stepped.map(_._1)
       }
       state
-    } finally z.unpersist()
+    }
   }
 
   /** Nearest drainage along the D8 path — the routing core of HAND (Height
@@ -1216,12 +1222,15 @@ object Flow {
     // streamNetwork here would run the whole tile condensation twice)
     val streamCells = flowAcc(tiles, ref, res).where($"acc" >= threshold)
       .select($"row", $"col")
-    val net = streamCells.join(flowDir(tiles, ref, res).where($"dir" > 0), Seq("row", "col"))
-      .select($"row", $"col",
-        ($"row" + expr(D8RowCase)).as("to_r"),
-        ($"col" + expr(D8ColCase)).as("to_c"))
-      .persist()
-    try {
+    Owned { own =>
+      val net = own.reuse(streamCells.join(flowDir(tiles, ref, res).where($"dir" > 0),
+        Seq("row", "col"))
+        .select($"row", $"col",
+          ($"row" + expr(D8RowCase)).as("to_r"),
+          ($"col" + expr(D8ColCase)).as("to_c")))
+      // filled by one job: the chain below reads it from concurrent
+      // stages, whose tasks would otherwise fill each block side by side
+      net.count()
       val indeg = net.groupBy($"to_r".as("row"), $"to_c".as("col"))
         .agg(count(lit(1)).as("indeg"))
       val deg = streamCells.join(indeg, Seq("row", "col"), "left")
@@ -1255,7 +1264,7 @@ object Flow {
       heads.join(orders, Seq("hr", "hc"))
         .select($"row", $"col", $"strahler")
         .localCheckpoint(true)
-    } finally net.unpersist()
+    }
   }
 
   /** Stream-network extraction: the D8 edges whose source cell's flow

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Owned
 
 /** Distributed connected components by iterative min-label propagation —
   * the dissolve step shared by dedup clustering (near-dup pair graphs)
@@ -24,11 +25,10 @@ object GraphOps {
       driverLimit: Long = 2000000L): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val pairs = edges.select(col(aCol).cast("long").as("a"),
-      col(bCol).cast("long").as("b")).persist()
-    val n = pairs.count()
-    val out =
-      if (n > driverLimit) minLabelComponents(pairs, "a", "b")
+    Owned { own =>
+      val pairs = own.reuse(edges.select(col(aCol).cast("long").as("a"),
+        col(bCol).cast("long").as("b")))
+      if (pairs.count() > driverLimit) minLabelComponents(pairs, "a", "b")
       else {
         val es = pairs.as[(Long, Long)].collect()
         val parent = scala.collection.mutable.LongMap[Long]()
@@ -48,8 +48,7 @@ object GraphOps {
         spark.createDataset(parent.keys.toSeq.map(k => (k, find(k))))
           .toDF("node", "root")
       }
-    pairs.unpersist()
-    out
+    }
   }
 
   /** Distributed PageRank by power iteration over a directed edge table —
@@ -57,12 +56,11 @@ object GraphOps {
     * quality priors for curation). Per iteration ONE shuffle builds the
     * contribution table (rank/outdeg summed by dst) and one id-join
     * rebuilds the rank vector; `localCheckpoint` truncates lineage each
-    * round so the plan stays constant-size over any iteration count
-    * (same rationale as [[minLabelComponents]]). Dangling nodes (no
-    * out-links) leak rank; the standard uniform redistribution is
-    * applied — their mass is a single scalar agg over the checkpointed
-    * rank vector, O(1) driver data per round. At 100 TB both the edge
-    * table (joined once with outdegree and persisted) and the rank
+    * round so the plan stays constant-size over any iteration count.
+    * Dangling nodes (no out-links) leak rank; the standard uniform
+    * redistribution is applied — their mass is a single scalar agg over
+    * the checkpointed rank vector, O(1) driver data per round. At 100 TB
+    * both the edge table (joined once with outdegree) and the rank
     * vector shuffle on the node id only — no payload ever rides the
     * loop. Multi-edges contribute multiply, matching the multigraph
     * convention. Returns (node, pr) over all nodes appearing as src or
@@ -70,50 +68,7 @@ object GraphOps {
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int, damping: Double = 0.85): DataFrame = {
     require(iters >= 1, s"pageRank: iters must be >= 1, got $iters")
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")).persist(mem)
-    val nodes = e.select($"src".as("id"))
-      .unionByName(e.select($"dst".as("id"))).distinct().persist(mem)
-    val n = nodes.count()
-    val deg = e.groupBy($"src").agg(count(lit(1)).as("outdeg"))
-    val ed = e.join(deg, "src").persist(mem)
-    val teleport = (1.0 - damping) / n
-    // the dangling-node SET is iteration-invariant — compute it once;
-    // only its rank MASS changes per round. The mass is a 1-row scalar
-    // subquery CROSS-JOINED into the next rank plan (broadcast of one
-    // row), NOT collected to the driver: the fixed-iteration loop then
-    // builds ONE lazy plan with zero per-round actions — every round's
-    // shuffle runs inside the single job of whichever action consumes
-    // the result (guide §2.4/§5: no driver round-trips in query paths).
-    val dangIds = nodes
-      .join(deg.select($"src".as("id")), Seq("id"), "left_anti")
-      .persist(mem)
-    // localCheckpoint(eager = false): the catalyst plan is truncated to a
-    // LogicalRDD immediately (constant-size plans per round), but no job
-    // runs now — the RDD chain materializes, and caches, inside the
-    // first consuming action.
-    var ranks = nodes.withColumn("pr", lit(1.0 / n)).localCheckpoint(false)
-    for (_ <- 1 to iters) {
-      val dang = ranks.join(dangIds, Seq("id"), "left_semi")
-        .agg(coalesce(sum($"pr"), lit(0.0)).as("_dang"))
-      val contribs = ed.join(ranks.withColumnRenamed("id", "src"), "src")
-        .groupBy($"dst").agg(sum($"pr" / $"outdeg").as("c"))
-      ranks = nodes
-        .join(contribs.withColumnRenamed("dst", "id"), Seq("id"), "left")
-        .crossJoin(broadcast(dang))
-        .select($"id", (lit(teleport) + lit(damping) *
-          (coalesce($"c", lit(0.0)) + $"_dang" / n)).as("pr"))
-        .localCheckpoint(false)
-    }
-    // ONE eager materialization of the whole iteration chain (every lazy
-    // checkpoint above caches during this job), then the parents can
-    // release their blocks safely.
-    val out = ranks.select($"id".as("node"), $"pr").localCheckpoint(true)
-    e.unpersist(); ed.unpersist(); nodes.unpersist(); dangIds.unpersist()
-    out
+    powerIteration(edges, srcCol, dstCol, None, iters, damping)
   }
 
   /** PERSONALIZED PageRank — random walk with restart to a SOURCE set
@@ -121,35 +76,48 @@ object GraphOps {
     * scoring, related-document ranking): teleports land ONLY on
     * `sources`, so ranks measure proximity to the seeds instead of
     * global centrality; dangling mass also restarts to the sources.
-    * Identical plan shape to [[pageRank]] — per iteration ONE
-    * contribution shuffle on dst + one id join, dangling set computed
-    * once, localCheckpoint'd constant-size plans. */
+    * The same power iteration as [[pageRank]]. */
   def personalizedPageRank(edges: DataFrame, srcCol: String, dstCol: String,
       sources: Seq[Long], iters: Int, damping: Double = 0.85): DataFrame = {
     require(iters >= 1, s"personalizedPageRank: iters must be >= 1, got $iters")
     require(sources.nonEmpty, "personalizedPageRank: sources must be non-empty")
+    powerIteration(edges, srcCol, dstCol, Some(sources.distinct), iters, damping)
+  }
+
+  /** The one power iteration: teleports and dangling mass restart to
+    * `restart`, or uniformly to every node when it is None. The dangling
+    * SET is iteration-invariant and computed once; its rank MASS is a
+    * 1-row scalar cross-joined (broadcast) into the next rank plan, never
+    * collected, so rounds add no driver round-trip. One eager checkpoint
+    * at the end materializes the whole chain. */
+  private def powerIteration(edges: DataFrame, srcCol: String, dstCol: String,
+      restart: Option[Seq[Long]], iters: Int, damping: Double): DataFrame = Owned { own =>
     val spark = edges.sparkSession
     import spark.implicits._
-    val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val srcSet = sources.distinct
-    val k = srcSet.size
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")).persist(mem)
-    val nodes = e.select($"src".as("id"))
-      .unionByName(e.select($"dst".as("id"))).distinct().persist(mem)
+    val e = own.reuse(edges.select(col(srcCol).cast("long").as("src"),
+      col(dstCol).cast("long").as("dst")))
+    // one scan of `e` fills its cache: a union of two scans would have two
+    // tasks filling each partition at once
+    val nodes = own.reuse(e.select(explode(array($"src", $"dst")).as("id")).distinct())
+    // (initial rank, next rank from the summed contributions c and the
+    // dangling mass); each branch keeps its own operation order
+    val (init, next) = restart match {
+      case None =>
+        val n = nodes.count()
+        (lit(1.0 / n), (c: Column, dang: Column) =>
+          lit((1.0 - damping) / n) + lit(damping) * (c + dang / n))
+      case Some(srcSet) =>
+        val k = srcSet.size
+        val isSrc = $"id".isInCollection(srcSet)
+        (when(isSrc, lit(1.0 / k)).otherwise(lit(0.0)), (c: Column, dang: Column) =>
+          when(isSrc, lit((1.0 - damping) / k) + lit(damping) * (dang / k))
+            .otherwise(lit(0.0)) + lit(damping) * c)
+    }
     val deg = e.groupBy($"src").agg(count(lit(1)).as("outdeg"))
-    val ed = e.join(deg, "src").persist(mem)
-    val dangIds = nodes
-      .join(deg.select($"src".as("id")), Seq("id"), "left_anti")
-      .persist(mem)
-    val isSrc = $"id".isInCollection(srcSet)
-    // same single-lazy-plan iteration discipline as [[pageRank]]: the
-    // dangling mass rides a broadcast 1-row scalar, rounds add zero
-    // driver actions, and one eager checkpoint at the end materializes
-    // the whole chain before the parents unpersist.
-    var ranks = nodes
-      .withColumn("pr", when(isSrc, lit(1.0 / k)).otherwise(lit(0.0)))
-      .localCheckpoint(false)
+    val ed = own.reuse(e.join(deg, "src"))
+    val dangIds = own.reuse(nodes
+      .join(deg.select($"src".as("id")), Seq("id"), "left_anti"))
+    var ranks = nodes.withColumn("pr", init).localCheckpoint(false)
     for (_ <- 1 to iters) {
       val dang = ranks.join(dangIds, Seq("id"), "left_semi")
         .agg(coalesce(sum($"pr"), lit(0.0)).as("_dang"))
@@ -158,57 +126,43 @@ object GraphOps {
       ranks = nodes
         .join(contribs.withColumnRenamed("dst", "id"), Seq("id"), "left")
         .crossJoin(broadcast(dang))
-        .select($"id",
-          (when(isSrc,
-            lit((1.0 - damping) / k) + lit(damping) * ($"_dang" / k))
-            .otherwise(lit(0.0))
-            + lit(damping) * coalesce($"c", lit(0.0))).as("pr"))
+        .select($"id", next(coalesce($"c", lit(0.0)), $"_dang").as("pr"))
         .localCheckpoint(false)
     }
-    val out = ranks.select($"id".as("node"), $"pr").localCheckpoint(true)
-    e.unpersist(); ed.unpersist(); nodes.unpersist(); dangIds.unpersist()
-    out
+    ranks.select($"id".as("node"), $"pr").localCheckpoint(true)
   }
 
   /** `edges`: two long columns naming an undirected edge per row.
     * Returns (node, root) for every node appearing in `edges`, where
     * root is the component's minimum node id. */
-  def minLabelComponents(edges: DataFrame, aCol: String, bCol: String): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val sym = edges.select(col(aCol).as("n"), col(bCol).as("m"))
-      .unionByName(edges.select(col(bCol).as("n"), col(aCol).as("m")))
-      .distinct().persist(mem)
-    // localCheckpoint every round, NOT persist: each round's plan embeds
-    // the previous round's, so with plain caching the LOGICAL plan (and
-    // catalyst analysis time) grows exponentially in the round count —
-    // on graphs with diameter ~15+ the driver ends up spending minutes
-    // in plan analysis. localCheckpoint truncates the lineage to a
-    // materialized LogicalRDD, keeping every round's plan constant-size;
-    // the checkpoint blocks are released by the ContextCleaner when the
-    // superseded frames are collected.
-    // lazy checkpoints: the convergence-check agg below is the ONLY job
-    // per round — it materializes (and caches) the round's checkpoint as
-    // a side effect, halving the round cost vs eager checkpoint + agg
-    var labels = sym.select($"n").distinct().withColumn("lbl", $"n")
-      .localCheckpoint(false)
-    var changed = 1L
-    while (changed > 0) {
-      val next = sym.join(labels.withColumnRenamed("n", "m")
-            .withColumnRenamed("lbl", "nbLbl"), "m")
-        .groupBy($"n").agg(min($"nbLbl").as("nbMin"))
-        .join(labels, "n")
-        .select($"n", least($"nbMin", $"lbl").as("lbl"),
-          ($"nbMin" < $"lbl").cast("long").as("chg"))
-        .localCheckpoint(false)
-      val chgRow = next.agg(sum($"chg")).collect()(0)
-      changed = if (chgRow.isNullAt(0)) 0L else chgRow.getLong(0) // null: no nodes
-      labels = next.select($"n", $"lbl")
+  def minLabelComponents(edges: DataFrame, aCol: String, bCol: String): DataFrame =
+    Owned { own =>
+      val spark = edges.sparkSession
+      import spark.implicits._
+      val sym = own.reuse(edges.select(col(aCol).as("n"), col(bCol).as("m"))
+        .unionByName(edges.select(col(bCol).as("n"), col(aCol).as("m")))
+        .distinct())
+      // the first round reads the initial labels on both join sides: an
+      // eager cut computes them once, not once per side. Later rounds
+      // read a cut the previous round's convergence agg materialized;
+      // that agg is the round's only job.
+      var labels = sym.select($"n").distinct().withColumn("lbl", $"n")
+        .localCheckpoint(true)
+      var changed = 1L
+      while (changed > 0) {
+        val next = sym.join(labels.withColumnRenamed("n", "m")
+              .withColumnRenamed("lbl", "nbLbl"), "m")
+          .groupBy($"n").agg(min($"nbLbl").as("nbMin"))
+          .join(labels, "n")
+          .select($"n", least($"nbMin", $"lbl").as("lbl"),
+            ($"nbMin" < $"lbl").cast("long").as("chg"))
+          .localCheckpoint(false)
+        val chgRow = next.agg(sum($"chg")).collect()(0)
+        changed = if (chgRow.isNullAt(0)) 0L else chgRow.getLong(0) // null: no nodes
+        labels = next.select($"n", $"lbl")
+      }
+      labels.select($"n".as("node"), $"lbl".as("root"))
     }
-    sym.unpersist()
-    labels.select($"n".as("node"), $"lbl".as("root"))
-  }
 
   /** Multi-source BFS hop distance over DIRECTED edges: for every node
     * reachable from `sources`, the minimum hop count from the nearest
@@ -223,43 +177,43 @@ object GraphOps {
   def bfsDistances(edges: DataFrame, srcCol: String, dstCol: String,
       sources: Seq[Long]): DataFrame = {
     require(sources.nonEmpty, "bfsDistances: no sources")
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val INF = Long.MaxValue
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")).distinct().persist(mem)
-    // node universe includes the seeds themselves: a source with no
-    // incident edges is still at distance 0 (matches the recursive-CTE
-    // oracle, which seeds every source unconditionally)
-    val nodes = e.select($"src".as("id"))
-      .unionByName(e.select($"dst".as("id")))
-      .unionByName(spark.createDataset(sources).toDF("id"))
-      .distinct()
-    // lazy checkpoints + one convergence agg per round (see
-    // [[minLabelComponents]]): one job per relax round, not two
-    var dist = nodes
-      .select($"id", when($"id".isin(sources: _*), 0L).otherwise(INF).as("d"))
-      .localCheckpoint(false)
-    var changed = 1L
-    while (changed > 0) {
-      val relax = e
-        .join(dist.withColumnRenamed("id", "src").withColumnRenamed("d", "ds"),
-          "src")
-        .filter($"ds" =!= INF)
-        .groupBy($"dst").agg(min($"ds" + 1).as("cand"))
-        .withColumnRenamed("dst", "id")
-      val next = dist.join(relax, Seq("id"), "left")
-        .select($"id",
-          least($"d", coalesce($"cand", lit(INF))).as("d"),
-          (coalesce($"cand", lit(INF)) < $"d").cast("long").as("chg"))
-        .localCheckpoint(false)
-      val chgRow = next.agg(sum($"chg")).collect()(0)
-      changed = if (chgRow.isNullAt(0)) 0L else chgRow.getLong(0)
-      dist = next.select($"id", $"d")
+    Owned { own =>
+      val spark = edges.sparkSession
+      import spark.implicits._
+      val INF = Long.MaxValue
+      val e = own.reuse(edges.select(col(srcCol).cast("long").as("src"),
+        col(dstCol).cast("long").as("dst")).distinct())
+      // node universe includes the seeds themselves: a source with no
+      // incident edges is still at distance 0 (matches the recursive-CTE
+      // oracle, which seeds every source unconditionally); one scan of `e`
+      // (see [[powerIteration]])
+      val nodes = e.select(explode(array($"src", $"dst")).as("id"))
+        .unionByName(spark.createDataset(sources).toDF("id"))
+        .distinct()
+      // eager first cut, one convergence agg per relax round (see
+      // [[minLabelComponents]])
+      var dist = nodes
+        .select($"id", when($"id".isin(sources: _*), 0L).otherwise(INF).as("d"))
+        .localCheckpoint(true)
+      var changed = 1L
+      while (changed > 0) {
+        val relax = e
+          .join(dist.withColumnRenamed("id", "src").withColumnRenamed("d", "ds"),
+            "src")
+          .filter($"ds" =!= INF)
+          .groupBy($"dst").agg(min($"ds" + 1).as("cand"))
+          .withColumnRenamed("dst", "id")
+        val next = dist.join(relax, Seq("id"), "left")
+          .select($"id",
+            least($"d", coalesce($"cand", lit(INF))).as("d"),
+            (coalesce($"cand", lit(INF)) < $"d").cast("long").as("chg"))
+          .localCheckpoint(false)
+        val chgRow = next.agg(sum($"chg")).collect()(0)
+        changed = if (chgRow.isNullAt(0)) 0L else chgRow.getLong(0)
+        dist = next.select($"id", $"d")
+      }
+      dist.filter($"d" =!= INF).select($"id".as("node"), $"d".as("dist"))
     }
-    e.unpersist()
-    dist.filter($"d" =!= INF).select($"id".as("node"), $"d".as("dist"))
   }
 
   /** Distributed triangle counting over an undirected edge table — the
@@ -281,10 +235,9 @@ object GraphOps {
     * no overflow ceiling on degree or id. Self-loops and duplicate /
     * reversed edges are canonicalized away first.
     */
-  def triangleCounts(edges: DataFrame, aCol: String, bCol: String): DataFrame = {
+  def triangleCounts(edges: DataFrame, aCol: String, bCol: String): DataFrame = Owned { own =>
     val spark = edges.sparkSession
     import spark.implicits._
-    val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val und = edges.select(
         least(col(aCol).cast("long"), col(bCol).cast("long")).as("a"),
         greatest(col(aCol).cast("long"), col(bCol).cast("long")).as("b"))
@@ -297,12 +250,11 @@ object GraphOps {
     val both = und
       .join(keyed.select($"node".as("a"), $"okey".as("ka")), "a")
       .join(keyed.select($"node".as("b"), $"okey".as("kb")), "b")
-    val oriented = both.select(
+    val oriented = own.reuse(both.select(
         when($"ka" < $"kb",
           struct($"a".as("u"), $"b".as("v"), $"kb".as("kv")))
         .otherwise(struct($"b".as("u"), $"a".as("v"), $"ka".as("kv"))).as("e"))
-      .select($"e.u".as("u"), $"e.v".as("v"), $"e.kv".as("kv"))
-      .persist(mem)
+      .select($"e.u".as("u"), $"e.v".as("v"), $"e.kv".as("kv")))
     oriented.count() // materialize once; reused by wedge build AND close
     val wedges = oriented.as("x").join(oriented.as("y"),
         col("x.u") === col("y.u") && col("x.kv") < col("y.kv"))
@@ -313,9 +265,7 @@ object GraphOps {
       .select($"u", $"v1", $"v2")
     val out = tris.select(explode(array($"u", $"v1", $"v2")).as("node"))
       .groupBy($"node").agg(count(lit(1)).as("n_tri"))
-    val res = out.localCheckpoint()
-    oriented.unpersist()
-    res
+    out.localCheckpoint()
   }
 
   /** Distributed k-CORE membership: peel nodes of degree < k until a

@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.storage.StorageLevel
 import graft.core._
 
 /** Scattered point record for kNN interpolation. */
@@ -64,18 +63,14 @@ final case class BucketLattice(ref: GridRef, res: Int) {
     * last, so it must prove every cell that has an answer.
     *
     * Each increment and each open set is a lineage-cut local checkpoint,
-    * so a long run neither replays a deep lazy union nor keeps dead
-    * rounds cached; each round's cache and the bucketed points are
-    * released in `finally`. The emptiness test is one collect of the open
-    * buckets, which the Delaunay gather also needs. */
+    * so a long run never replays a deep lazy union; each round's solved
+    * frame and the bucketed points are [[Owned]]. The emptiness test is
+    * one collect of the open buckets, which the Delaunay gather also
+    * needs. */
   def escalate(spark: SparkSession, points: Dataset[PtRec], firstRing: Int,
       settled: DataFrame, open: DataFrame)(round: BucketLattice.Round): DataFrame = {
     import spark.implicits._
     val outCols = settled.columns.map(col)
-    // built on the first round only: a call that proves everything in
-    // pass 1 never keys the points
-    lazy val byBucket = points.map(p => (pointBucket(p), p))
-      .persist(StorageLevel.MEMORY_AND_DISK)
     def bucketsOf(cells: DataFrame): Array[Long] =
       cells.select($"row", $"col").as[(Int, Int)]
         .map { case (r, c) => cellBucket(r, c) }.distinct().collect().sorted
@@ -83,26 +78,23 @@ final case class BucketLattice(ref: GridRef, res: Int) {
     var live = open
     var need = bucketsOf(live)
     var ring = firstRing
-    var rounds = 0
-    try {
+    Owned { own =>
+      // built on the first round only: a call that proves everything in
+      // pass 1 never keys the points
+      lazy val byBucket = own.reuse(points.map(p => (pointBucket(p), p)))
       while (need.nonEmpty) {
-        rounds += 1
         val exhaustive = ring >= maxRing
         val bcNeed = spark.sparkContext.broadcast(need)
-        val solved = round(live, bcNeed, byBucket, ring, exhaustive)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        try {
+        try Owned { roundOwn =>
+          val solved = roundOwn.reuse(round(live, bcNeed, byBucket, ring, exhaustive))
           out = out.unionByName(
             solved.filter($"proven").select(outCols: _*).localCheckpoint(true))
           if (!exhaustive) live = solved.filter(!$"proven").localCheckpoint(true)
-        } finally {
-          solved.unpersist()
-          bcNeed.destroy()
-        }
+        } finally bcNeed.destroy()
         need = if (exhaustive) Array.empty else bucketsOf(live)
         ring *= 2
       }
-    } finally if (rounds > 0) byBucket.unpersist()
+    }
     out
   }
 }
@@ -246,7 +238,7 @@ object Knn {
           (lat.cellBucket(r, c), r, c)
         }
     }
-    // a lazy local checkpoint, not a cache: the escalation loop's emptiness
+    // a lazy lineage cut: the escalation loop's emptiness
     // collect materializes it in full, and the proven leg of the result
     // reads it on the caller's action
     val p1 = cells.groupByKey(_._1).cogroup(candidates.groupByKey(_._1)) {

@@ -32,12 +32,10 @@ object Pyramid {
         .groupBy(shiftright(col("row"), 1).as("row"),
           shiftright(col("col"), 1).as("col"))
         .agg(sum(col("n")).as("n"), sum(col("sum_q")).as("sum_q"))
-      // each level feeds two consumers (its output branch and level L+1);
-      // eager localCheckpoint pins single computation without leaking
-      // CacheManager entries (blocks release when the plan is GC'd,
-      // unlike persist which would pin until an unpersist the caller of
-      // a lazy union can never safely issue) — level sizes shrink 4x per
-      // step, so the materialized footprint is < 1/3 of the base
+      // each level feeds two consumers (its output branch and level L+1)
+      // of the returned union: an eager lineage cut computes it once —
+      // level sizes shrink 4x per step, so the materialized footprint is
+      // < 1/3 of the base
       if (l < levels) cur = cur.localCheckpoint(true)
       cur.select(lit(l.toLong).as("level"), col("row"), col("col"),
         col("n"), col("sum_q"))

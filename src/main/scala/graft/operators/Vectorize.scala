@@ -202,8 +202,9 @@ object Vectorize {
     import spark.implicits._
     val lab = labeled(tiles, ref, res)
       .localCheckpoint(false)
+    // read twice below, uncached: resolveRoots' result is already cut by
+    // lineage (driver-built rows, or the last label checkpoint)
     val roots = resolveRoots(lab, driverLimit)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     val meta = lab.flatMap { tl =>
       tl.counts.iterator.map { case (g, v, k, mp) => (g, v, k, mp) }

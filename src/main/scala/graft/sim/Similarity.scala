@@ -3,6 +3,7 @@ package graft.sim
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.core.Owned
 
 /** Embedding similarity search over an `Array[Float]` column.
   *
@@ -129,6 +130,7 @@ object Similarity extends Serializable {
       idCol: String, vecCol: String, k: Int, iters: Int)
       : (DataFrame, DataFrame) = {
     import spark.implicits._
+    // a lineage cut: the returned assignment plan reads it
     val base = corpus.select(col(idCol).as("vid"), col(vecCol).as("v"))
       .as[(Long, Array[Float])].localCheckpoint(false)
     var centroids: Array[Array[Double]] = base.orderBy($"vid").limit(k)
@@ -183,7 +185,6 @@ object Similarity extends Serializable {
       }
       (vid, best)
     }.toDF("vid", "cl")
-    base.unpersist()
     val centroidDf = spark.createDataFrame(
       spark.sparkContext.parallelize(
         centroids.zipWithIndex.map { case (cv, i) => org.apache.spark.sql.Row(i, cv.toSeq) }.toSeq, 1),
@@ -312,18 +313,18 @@ object Similarity extends Serializable {
     * mirroring [[kmeansWithCentroids]]. */
   def pqTrain(spark: SparkSession, corpus: DataFrame, idCol: String,
       vecCol: String, m: Int, ksub: Int, iters: Int)
-      : Array[Array[Array[Double]]] = {
+      : Array[Array[Array[Double]]] = Owned { own =>
     import spark.implicits._
-    val base = corpus.select(col(idCol).as("vid"), col(vecCol).as("v"))
-      .as[(Long, Array[Float])].localCheckpoint(false)
-    val dim = base.head()._2.length
+    val base = own.reuse(corpus.select(col(idCol).as("vid"), col(vecCol).as("v"))
+      .as[(Long, Array[Float])])
+    // the seed read sorts every partition, so it fills the cut in full
+    val seed = base.orderBy($"vid").limit(ksub).collect().map(_._2)
+    val dim = seed.head.length
     require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
     val subDim = dim / m
-    var books: Array[Array[Array[Double]]] = {
-      val seed = base.orderBy($"vid").limit(ksub).collect().map(_._2)
+    var books: Array[Array[Array[Double]]] =
       Array.tabulate(m)(s => Array.tabulate(ksub)(c =>
         Array.tabulate(subDim)(j => seed(c)(s * subDim + j).toDouble)))
-    }
     def bestCode(bk: Array[Array[Double]], v: Array[Float], off: Int): Int = {
       var best = 0; var bestD = Double.MaxValue; var c = 0
       while (c < bk.length) {
@@ -356,7 +357,6 @@ object Similarity extends Serializable {
       updated.foreach { case (s, c, cw) => next(s)(c) = cw }
       books = next
     }
-    base.unpersist()
     books
   }
 
@@ -847,9 +847,9 @@ object Similarity extends Serializable {
     val clusters = kmeansClusters(spark, vecs.select(col("vid"), col("v")),
       "vid", "v", k, iters)
     // norm precomputed ONCE per row (O(N*dim)) instead of per pair inside
-    // the cluster join (O(pairs*dim)); persisted because three consumers
-    // follow (both self-join sides + the final left join) — unpersisted,
-    // each would re-run the assignment scan
+    // the cluster join (O(pairs*dim)); a lineage cut because three
+    // consumers follow (both self-join sides + the final left join) —
+    // uncut, each would re-run the assignment scan
     val withCl = vecs.join(clusters, Seq("vid"))
       .withColumn("nrm", sqrt(dot("v", "v")))
       .localCheckpoint(false)

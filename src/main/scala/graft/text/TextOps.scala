@@ -147,7 +147,7 @@ object TextOps {
     import spark.implicits._
     val sets = minhashSignatures(docs, idCol, textCol, shingleN, k = 0)
       .toDF("doc_id", "hs", "sig").drop("sig")
-      .localCheckpoint(false) // hs arrays: block cache, no columnar encode
+      .localCheckpoint(false)
     val postings = sets.select($"doc_id", explode($"hs").as("h"))
     val rare = postings.groupBy($"h").count()
       .filter($"count" <= dfCap).select($"h")
@@ -314,13 +314,13 @@ object TextOps {
         (shiftrightunsigned($"simhash", los(j))
           .bitwiseAND(lit(mask(widths(j))))).as("cv"))
     }
-    // persisted: feeds the df-cap aggregate AND both self-join sides —
-    // without it the document scan + simhash kernel + explode recompute
-    // once per consumer (the same one-pass rule as jaccardPairs' sets)
+    // an eager lineage cut: the df-cap aggregate AND both self-join sides
+    // of the returned plan read it, so the document scan + simhash kernel
+    // + explode run once, before any of those readers
     val postings = hashed
       .select($"doc_id", $"simhash", explode(array(chunks: _*)).as("ch"))
       .select($"doc_id", $"simhash", $"ch.ci".as("ci"), $"ch.cv".as("cv"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(true)
     val rare = postings.groupBy($"ci", $"cv").count()
       .filter($"count" <= dfCap).select($"ci", $"cv")
     val exploded = postings.join(rare, Seq("ci", "cv"))
@@ -398,10 +398,10 @@ object TextOps {
   def incrementalDedupBloom(incoming: DataFrame, corpusSigs: DataFrame,
       sigCol: String, expectedItems: Long, fpp: Double): DataFrame = {
     val spark = incoming.sparkSession
-    // persisted: consumed by the bloomFilter treeAggregate AND the
-    // anti-join build — without it the corpus distinct computes twice
+    // a lineage cut read by the bloomFilter aggregate (which fills it)
+    // AND the anti-join build — the corpus distinct computes once
     val index = corpusSigs.select(col(sigCol)).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(false)
     val bloom = index.stat.bloomFilter(sigCol, expectedItems, fpp)
     val bc = spark.sparkContext.broadcast(bloom)
     // a NULL signature never equi-matches in the anti-join (the row is
@@ -409,10 +409,10 @@ object TextOps {
     // mightContainString(null) would NPE inside the hash
     val mightContain = udf((sig: String) =>
       sig != null && bc.value.mightContainString(sig))
-    // persisted: the two branches below are independent plan consumers;
-    // unpersisted, the full incoming scan + sig + probe would run twice
+    // an eager lineage cut: the two branches below read it side by side,
+    // so the full incoming scan + sig + probe runs once, before either
     val flagged = incoming.withColumn("__maybe_dup", mightContain(col(sigCol)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(true)
     val definitelyNew = flagged.filter(!col("__maybe_dup"))
     val verifiedNew = flagged.filter(col("__maybe_dup"))
       .join(index, Seq(sigCol), "left_anti")

@@ -462,27 +462,23 @@ class FlowSpec extends AnyFunSuite {
   }
 
   test("crossing-graph operators release every Dataset they persist, both placements") {
-    // a persisted Dataset is a cache-manager entry until unpersisted; from
-    // an empty cache, a call must leave it empty, on either placement
-    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sharedState.cacheManager
-    spark.catalog.clearCache()
     val ref = Synth.demRef
     val tiles = TileOps.tileGrid(spark, ref, 6)(Synth.demValue)
-    for (limit <- Seq(2000000, 0)) {
-      val ops = Seq[(String, () => org.apache.spark.sql.DataFrame)](
-        "flowAcc" -> (() => Flow.flowAcc(tiles, ref, 6, driverLimit = limit)),
-        "downstream" -> (() => Flow.downstream(tiles, ref, 6, driverLimit = limit)),
-        "longestUpstream" -> (() => Flow.longestUpstream(tiles, ref, 6, driverLimit = limit)),
-        "nearestDrainage" -> (() =>
+    val bad = Seq(2000000, 0).flatMap { limit =>
+      graft.CacheAudit(spark)(
+        s"flowAcc driverLimit=$limit" -> (() => Flow.flowAcc(tiles, ref, 6, driverLimit = limit)),
+        s"downstream driverLimit=$limit" -> (() =>
+          Flow.downstream(tiles, ref, 6, driverLimit = limit)),
+        s"longestUpstream driverLimit=$limit" -> (() =>
+          Flow.longestUpstream(tiles, ref, 6, driverLimit = limit)),
+        s"nearestDrainage driverLimit=$limit" -> (() =>
           Flow.nearestDrainage(tiles, ref, 6, threshold = 25L, driverLimit = limit)),
-        "strahlerOrder" -> (() =>
-          Flow.strahlerOrder(tiles, ref, 6, threshold = 25L, driverLimit = limit)))
-      for ((name, op) <- ops) {
-        assert(op().count() > 0, s"$name driverLimit=$limit empty")
-        assert(cache.isEmpty, s"$name driverLimit=$limit left a persisted Dataset cached")
-      }
+        s"strahlerOrder driverLimit=$limit" -> (() =>
+          Flow.strahlerOrder(tiles, ref, 6, threshold = 25L, driverLimit = limit)),
+        s"fillSinksTiles driverLimit=$limit" -> (() =>
+          Flow.fillSinksTiles(tiles, ref, 6, driverLimit = limit)))
     }
+    assert(bad.isEmpty, bad.mkString("; "))
   }
 
   test("crossing-graph solvers: driver placement == distributed placement; cycles rejected") {

@@ -153,11 +153,7 @@ class KnnSpec extends AnyFunSuite {
 
   test("interpolators release every Dataset they persist") {
     import spark.implicits._
-    // a persisted Dataset is a cache-manager entry until unpersisted; from
-    // an empty cache, a call must leave it empty, with or without escalation
-    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sharedState.cacheManager
-    spark.catalog.clearCache()
+    // with or without escalation
     val ref = Synth.knnRef
     val targets = (for (r <- 0 until ref.nrows by 5; c <- 0 until ref.ncols by 5)
       yield (r, c)).toDF("row", "col")
@@ -166,18 +162,15 @@ class KnnSpec extends AnyFunSuite {
       Array(PtRec(0L, -4.75, 0.25, 1.0), PtRec(1L, -4.25, 0.75, 2.0),
         PtRec(2L, -3.75, 0.25, 3.0), PtRec(3L, 50.25, 25.25, 4.0)))) {
       val pts = spark.createDataset(ptsArr.toSeq)
-      val ops = Seq[(String, () => org.apache.spark.sql.DataFrame)](
-        "nearest" -> (() => Knn.nearestBucketed(spark, pts, ref, res = 5)),
-        "nearest targets" -> (() =>
+      val n = ptsArr.length
+      val bad = graft.CacheAudit(spark)(
+        s"nearest ($n points)" -> (() => Knn.nearestBucketed(spark, pts, ref, res = 5)),
+        s"nearest targets ($n points)" -> (() =>
           Knn.nearestBucketed(spark, pts, ref, res = 5, targets = Some(targets))),
-        "idw" -> (() => Knn.idwBucketed(spark, pts, ref, res = 5, k = 3)),
-        "linear" -> (() => Delaunay.linearBucketed(spark, pts, ref, res = 5)),
-        "cubic" -> (() => Delaunay.cubicBucketed(spark, pts, ref, res = 5)))
-      for ((name, op) <- ops) {
-        assert(op().count() > 0, s"$name (${ptsArr.length} points) empty")
-        assert(cache.isEmpty,
-          s"$name (${ptsArr.length} points) left a persisted Dataset cached")
-      }
+        s"idw ($n points)" -> (() => Knn.idwBucketed(spark, pts, ref, res = 5, k = 3)),
+        s"linear ($n points)" -> (() => Delaunay.linearBucketed(spark, pts, ref, res = 5)),
+        s"cubic ($n points)" -> (() => Delaunay.cubicBucketed(spark, pts, ref, res = 5)))
+      assert(bad.isEmpty, bad.mkString("; "))
     }
   }
 
