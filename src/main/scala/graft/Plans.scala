@@ -232,10 +232,10 @@ object Plans {
       |- **r25 flowAcc / r26 watershed / r28 flowlength / r37 hand /
       |  r38 strahler**: halo exchange -> per-tile local solve -> driver
       |  condensed solve over CROSSING EDGES ONLY (O(perimeter) rows,
-      |  `require`-bounded by driverLimit=2e6 with a documented
-      |  recursive-supertile escape) -> broadcast of resolved seeds (same
-      |  O(perimeter) size) -> second per-tile pass. Two passes over the
-      |  cached padded tiles; zero per-cell shuffle.
+      |  while they fit the DriverGate byte budget; above it a
+      |  distributed peel or pointer doubling) -> broadcast of resolved
+      |  seeds (same O(perimeter) size) -> second per-tile pass. Two passes
+      |  over the cached padded tiles; zero per-cell shuffle.
       |- **r27 streams**: one equi-join (row, col) of the r25 and r24 outputs —
       |  sort-merge/hash on 32 partitions; the acc >= threshold filter runs
       |  BEFORE the join (selectivity ~1% of cells), so the join input is the

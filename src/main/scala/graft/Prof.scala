@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.scheduler._
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
@@ -54,15 +55,22 @@ object Prof {
   private final class JobLog extends SparkListener {
     case class J(id: Int, t0: Long, desc: String)
     private val open = scala.collection.concurrent.TrieMap[Int, J]()
+    private val executions = scala.collection.concurrent.TrieMap[String, String]()
     val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     @volatile var enabled = false
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart => executions.put(s.executionId.toString, s.description)
+      case s: SparkListenerSQLExecutionEnd => executions.remove(s.executionId.toString)
+      case _ =>
+    }
     override def onJobStart(js: SparkListenerJobStart): Unit = if (enabled) {
       def prop(k: String) = Option(js.properties)
         .flatMap(p => Option(p.getProperty(k))).getOrElse("")
-      // one line per job (a stream batch's description spans several);
-      // ordinary DataFrame jobs set neither property, and their result
-      // stage's name carries the call site
-      val desc = Seq(prop("spark.job.description"), prop("callSite.short"))
+      // one line per job (a stream batch's description spans several); a
+      // DataFrame job by its SQL execution (AQE stage jobs carry its id,
+      // their call site is a pool frame), else its result stage's name
+      val desc = Seq(prop("spark.job.description"),
+          executions.getOrElse(prop("spark.sql.execution.id"), ""), prop("callSite.short"))
         .map(_.replaceAll("\\s+", " ").trim).find(_.nonEmpty)
         .getOrElse(js.stageInfos.maxByOption(_.stageId).fold("")(_.name))
       open.put(js.jobId, J(js.jobId, System.nanoTime(), desc))

@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -63,26 +61,4 @@ object RewriteCellWindowPredicates extends Rule[LogicalPlan] {
           }
         }
     }
-}
-
-/** `spark.sql.extensions=graft.functions.GraftExtensions` — installs the
-  * engine's native functions and the spatial-predicate rewrite into every
-  * session (the SparkSessionExtensions deployment path; tests also inject
-  * the rule via `spark.experimental.extraOptimizations`). */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectOptimizerRule(_ => RewriteCellWindowPredicates)
-    ext.injectFunction((FunctionIdentifier("cell_of"),
-      new ExpressionInfo(classOf[CellOfExpr].getName, "cell_of"),
-      (es: Seq[Expression]) => CellOfExpr(es(0), es(1), es(2))))
-    ext.injectFunction((FunctionIdentifier("cell_parent"),
-      new ExpressionInfo(classOf[CellParentExpr].getName, "cell_parent"),
-      (es: Seq[Expression]) => CellParentExpr(es.head)))
-    ext.injectFunction((FunctionIdentifier("valid_count"),
-      new ExpressionInfo(classOf[ValidCountExpr].getName, "valid_count"),
-      (es: Seq[Expression]) => ValidCountExpr(es.head)))
-    ext.injectFunction((FunctionIdentifier("cell_in_window"),
-      new ExpressionInfo(classOf[CellInWindowExpr].getName, "cell_in_window"),
-      (es: Seq[Expression]) => CellInWindowExpr(es)))
-  }
 }

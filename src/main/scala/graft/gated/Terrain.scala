@@ -940,10 +940,10 @@ object TerrainGates {
 
     // LEAST-COST PATH (r64) — CostPath from a fixed target back to the
     // nearest source, following r63's deterministic backlink chain.
-    // Scale shape: the chain is enumerated by POINTER DOUBLING over the
-    // predecessor DataFrame (jump table doubles its stride each round,
-    // path prefix doubles with one equi-join) — O(log pathLen) rounds,
-    // never a per-step driver walk; no path cell is ever collected.
+    // Scale shape: the target's cost ball is collected and walked on the
+    // driver while it fits the DriverGate budget; above it POINTER DOUBLING
+    // over the predecessor DataFrame (jump table and path prefix double
+    // each round) — O(log pathLen) rounds, no path cell collected.
     GatedQuery("r64_cost_path", (s, _) => {
       graft.operators.CostDistance.leastCostPath(demTiles(s), Synth.demRef,
         tileRes, isSource = _ >= 240.0, targetRow = 200, targetCol = 150)

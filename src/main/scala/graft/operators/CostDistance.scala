@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions.{col, expr, min => sqlMin}
-import graft.core.{GridRef, Owned, Tile}
+import graft.core.{DriverGate, GridRef, Owned, Tile}
 
 /** Weighted cost-distance accumulation (the map-algebra CostDistance /
   * least-cost "friction surface" primitive): for every valid cell, the
@@ -264,17 +264,16 @@ object CostDistance {
     * last row a source cell (dist 0) — the CostPath primitive over
     * [[backlinkTiles]]'s deterministic predecessor choice.
     *
-    * Distributed shape: the predecessor pointers stay a DataFrame and the
-    * chain is enumerated by POINTER DOUBLING (the [[Flow]] list-ranking
-    * discipline): round k doubles the jump table (`J_k(u)` = the
-    * `2^k`-step predecessor with its step carry, terminal-capped at the
-    * source) and doubles the known path prefix with one equi-join each —
-    * `O(log pathLen)` rounds, never a per-step driver loop, no path cell
-    * ever collected. Work is `O(cells · log pathLen)` shuffle — the same
-    * family as a few extra halo sweeps of the converged solve. */
+    * Within the [[DriverGate]] budget the target's cost ball is collected
+    * and the chain walks on the driver. Above it the chain is enumerated
+    * by POINTER DOUBLING (the [[Flow]] list-ranking discipline): round k
+    * doubles the jump table (`J_k(u)` = the `2^k`-step predecessor with
+    * its step carry, terminal-capped at the source) and the known path
+    * prefix with one equi-join each — `O(log pathLen)` rounds, no path
+    * cell collected, `O(cells · log pathLen)` shuffle. */
   def leastCostPath(cost: Dataset[Tile], ref: GridRef, res: Int,
       isSource: Double => Boolean, targetRow: Int, targetCol: Int,
-      maxRounds: Int = 10000, driverLimit: Int = 2000000): DataFrame = {
+      maxRounds: Int = 10000): DataFrame = {
     val spark = cost.sparkSession
     import spark.implicits._
     val ncols = ref.ncols
@@ -316,73 +315,65 @@ object CostDistance {
     // COST-BOUNDED pruning: backlink steps never increase dist (step
     // weights are >= 0), so every cell on the target's chain has
     // dist <= dist(target) — only the target's cost ball is ever probed.
-    // HYBRID chain walk (the GraphOps condensation discipline): below
-    // `driverLimit` the pruned ball collects once and the inherently
-    // sequential chain walks on the driver — ONE job instead of the
-    // O(log pathLen) doubling rounds (each a count + two joins). Above
-    // the limit the pointer-doubling branch below runs unchanged, so no
-    // driver structure ever exceeds the budget.
-    val ballRows = pred0.filter(col("dist") <= targetDist)
-      .select("id", "to", "steps", "dist")
-      .limit(driverLimit + 1).collect()
-    if (ballRows.length <= driverLimit) {
-      val m = new java.util.HashMap[Long, (Long, Long, Double)](
-        ballRows.length * 2)
-      ballRows.foreach(r => m.put(r.getLong(0),
-        (r.getLong(2), r.getLong(1), r.getDouble(3))))
-      val out = Array.newBuilder[(Long, Long, Long, Double)]
-      var id = targetId
-      var pos = 0L
-      var walking = true
-      while (walking) {
-        val e = m.get(id)
-        require(e != null, s"leastCostPath: chain left the cost ball at $id")
-        require(pos <= ballRows.length,
-          "leastCostPath: backlink cycle (zero-cost tie — cost surface must be > 0)")
-        out += ((pos, id / ncols, id % ncols, e._3))
-        if (e._1 == 0L) walking = false else { id = e._2; pos += 1 }
-      }
-      return spark.createDataset(out.result())
-        .toDF("pos", "row", "col", "dist").orderBy("pos")
+    // A ball within the driver budget collects once and the sequential
+    // chain walks on the driver: no doubling rounds (each a count + two joins).
+    val ball = pred0.filter(col("dist") <= targetDist)
+      .select("id", "to", "steps", "dist").as[(Long, Long, Long, Double)]
+    DriverGate.place("CostDistance.leastCostPath cost ball", ball)(_ => 4 * 8L) match {
+      case Left(ballRows) =>
+        val m = new java.util.HashMap[Long, (Long, Long, Double)](ballRows.length * 2)
+        ballRows.foreach { case (cell, to, steps, dist) => m.put(cell, (steps, to, dist)) }
+        val out = Array.newBuilder[(Long, Long, Long, Double)]
+        var id = targetId
+        var pos = 0L
+        var walking = true
+        while (walking) {
+          val e = m.get(id)
+          require(e != null, s"leastCostPath: chain left the cost ball at $id")
+          require(pos <= ballRows.length,
+            "leastCostPath: backlink cycle (zero-cost tie — cost surface must be > 0)")
+          out += ((pos, id / ncols, id % ncols, e._3))
+          if (e._1 == 0L) walking = false else { id = e._2; pos += 1 }
+        }
+        spark.createDataset(out.result())
+          .toDF("pos", "row", "col", "dist").orderBy("pos")
+      case Right(_) =>
+        // lazy checkpoints: each round's ONLY job is nextPath.count(),
+        // which materializes the round's path AND (on the following
+        // round) the doubled jump table.
+        var jumps = ball.select("id", "to", "steps").localCheckpoint(false)
+        var path = Seq((targetId, 0L)).toDF("id", "pos")
+        var n = 1L
+        var grown = true
+        var round = 0
+        while (grown) {
+          round += 1
+          require(round <= 64, "leastCostPath: pointer doubling did not terminate")
+          val extended = path.as("p")
+            .join(jumps.as("j"), col("p.id") === col("j.id"), "inner")
+            .filter(col("j.steps") > 0)
+            .select(col("j.to").as("id"), (col("p.pos") + col("j.steps")).as("pos"))
+          val nextPath = path.unionByName(extended)
+            .groupBy("id").agg(sqlMin("pos").as("pos"))
+            .localCheckpoint(false)
+          val n2 = nextPath.count()
+          grown = n2 > n
+          n = n2
+          path = nextPath
+          if (grown) {
+            // double the jump table: 2^k + 2^k steps, terminal-capped
+            jumps = jumps.as("a")
+              .join(jumps.as("b"), col("a.to") === col("b.id"), "inner")
+              .select(col("a.id"), col("b.to"),
+                (col("a.steps") + col("b.steps")).as("steps"))
+              .localCheckpoint(false)
+          }
+        }
+        path.as("p").join(pred0.as("d"), col("p.id") === col("d.id"), "inner")
+          .select(col("p.pos"),
+            expr(s"p.id DIV $ncols").as("row"),
+            (col("p.id") % ncols).as("col"), col("d.dist"))
+          .orderBy("pos")
     }
-    // lazy checkpoints throughout the doubling loop: each round's ONLY
-    // job is nextPath.count(), which materializes the round's path AND
-    // (transitively, on the following round) the doubled jump table —
-    // one job per round instead of the previous three eager-checkpoint
-    // jobs per round.
-    var jumps = pred0.filter(col("dist") <= targetDist)
-      .select("id", "to", "steps").localCheckpoint(false)
-    var path = Seq((targetId, 0L)).toDF("id", "pos")
-    var n = 1L
-    var grown = true
-    var round = 0
-    while (grown) {
-      round += 1
-      require(round <= 64, "leastCostPath: pointer doubling did not terminate")
-      val extended = path.as("p")
-        .join(jumps.as("j"), col("p.id") === col("j.id"), "inner")
-        .filter(col("j.steps") > 0)
-        .select(col("j.to").as("id"), (col("p.pos") + col("j.steps")).as("pos"))
-      val nextPath = path.unionByName(extended)
-        .groupBy("id").agg(sqlMin("pos").as("pos"))
-        .localCheckpoint(false)
-      val n2 = nextPath.count()
-      grown = n2 > n
-      n = n2
-      path = nextPath
-      if (grown) {
-        // double the jump table: 2^k + 2^k steps, terminal-capped
-        jumps = jumps.as("a")
-          .join(jumps.as("b"), col("a.to") === col("b.id"), "inner")
-          .select(col("a.id"), col("b.to"),
-            (col("a.steps") + col("b.steps")).as("steps"))
-          .localCheckpoint(false)
-      }
-    }
-    path.as("p").join(pred0.as("d"), col("p.id") === col("d.id"), "inner")
-      .select(col("p.pos"),
-        expr(s"p.id DIV $ncols").as("row"),
-        (col("p.id") % ncols).as("col"), col("d.dist"))
-      .orderBy("pos")
   }
 }

@@ -1,9 +1,10 @@
 package graft.operators
 
 import scala.reflect.ClassTag
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 import graft.core._
+import graft.core.DriverGate.Placed
 
 /** D8 hydrological flow operators — beyond-reference additions in the
   * reference's own problem domain (hydro-raster feeds flood models;
@@ -23,20 +24,8 @@ import graft.core._
   *
   * Scale shape: `flowDir` is one halo exchange ([[Stencil.padded]],
   * shuffle volume ~4/2^res of the payload) + a per-tile loop. `flowAcc`
-  * is the tile-condensation pattern (same seam idea as [[Vectorize]]):
-  *   1. per-tile LOCAL topological accumulation (in-tile upstream
-  *      counts) + the tile's boundary summary — crossing edges
-  *      (cell -> neighbor-tile cell, carrying the in-tile count) and
-  *      border-cell routing (which crossing edge an inflow entering at
-  *      a border cell would exit through);
-  *   2. a condensed solve over CROSSING EDGES ONLY (O(perimeter), the
-  *      same ~4/2^res fraction) — a weighted accumulation on a
-  *      functional DAG (acyclic because z strictly decreases along
-  *      flow). On the driver while the collected summaries stay within
-  *      `driverLimit` rows; above it a distributed batched topological
-  *      peel, one round per level of the crossing DAG ([[foldUpstream]]);
-  *   3. a second per-tile pass seeding resolved external inflows at
-  *      entry cells and re-running the local accumulation.
+  * is the tile-condensation pattern (same seam idea as [[Vectorize]])
+  * set out in the "Tile condensation" section below.
   * Both DuckDB-oracled: flowDir per-cell (identical IEEE operand order,
   * so drops are bit-equal cross-engine) and flowAcc against a
   * WITH RECURSIVE downstream-closure count (r24/r25).
@@ -126,8 +115,7 @@ object Flow {
   //      target's in-tile path reaches; z strictly decreases along flow,
   //      so the graph is a functional forest. [[foldUpstream]] or
   //      [[resolveChains]] solves it — on the driver while the summaries
-  //      stay within `driverLimit` collected rows ([[place]]), distributed
-  //      above;
+  //      fit the [[DriverGate]] byte budget, distributed above;
   //   3. a second per-tile pass seeded with the solved values ([[seeded]]).
   // Path lengths are kept as INTEGER (cardinal, diagonal) step counts so
   // results are exact cross-engine; physical length = cellsize * (ncard +
@@ -390,31 +378,6 @@ object Flow {
   // its combine rule as Scala functions; the driver placement and the
   // distributed placement run the same functions.
 
-  /** Rows of a solve: `Left` on the driver, `Right` distributed. */
-  private[operators] type Placed[T] = Either[Array[T], Dataset[T]]
-
-  /** The driver-vs-distributed gate, for every solve: collect `ds` for the
-    * driver placement when the rows that brings to the driver — `rows` of
-    * each element, summed — stay within `driverLimit`; else leave it
-    * distributed. For tile summaries that is crossing AND routing rows: a
-    * tiling where most border cells drain inward has crossings << routing
-    * rows, and a crossing-only gate would admit an O(border cells)
-    * driver materialization the limit was meant to bound. */
-  private def place[T](ds: Dataset[T], driverLimit: Int)(rows: T => Long): Placed[T] = {
-    import ds.sparkSession.implicits._
-    val n = ds.map(rows).toDF("n").agg(coalesce(sum($"n"), lit(0L))).collect()(0).getLong(0)
-    if (n <= driverLimit) Left(ds.collect()) else Right(ds)
-  }
-
-  private def mapPlaced[T, U: Encoder: ClassTag](p: Placed[T])(f: T => U): Placed[U] =
-    p match {
-      case Left(a) => Left(a.map(f))
-      case Right(ds) => Right(ds.map(f))
-    }
-
-  private def toDs[T: Encoder](spark: SparkSession, p: Placed[T]): Dataset[T] =
-    p.fold(a => spark.createDataset(a.toSeq), identity)
-
   /** Node of an upstream fold: key (xr, xc); the crossing target (tr, tc)
     * the tile pass seeds; successor (sr, sc) when `hasSucc`; value (a, b);
     * and the carry (ea, eb) [[LongestRule]]'s message picks up on its way
@@ -594,10 +557,12 @@ object Flow {
 
   /** The crossing graph: `node(crossing, its target's routing row)` per
     * crossing edge, the routing row null when there is none — a route map
-    * on the driver, a left equi-join distributed. */
-  private def crossingGraph[N: Encoder: ClassTag](summaries: Dataset[TraceSummary],
-      driverLimit: Int)(node: (Crossing, Route) => N): Placed[N] =
-    place(summaries, driverLimit)(s => s.crossing.length + s.routing.length) match {
+    * on the driver, a left equi-join distributed. The driver holds both:
+    * where border cells drain inward, crossings << routing rows. */
+  private def crossingGraph[N: Encoder: ClassTag](op: String,
+      summaries: Dataset[TraceSummary])(node: (Crossing, Route) => N): Placed[N] =
+    DriverGate.place(s"$op crossing graph", summaries)(s =>
+      s.crossing.length * (6 * 8L) + s.routing.length * (6 * 8L + 4)) match {
       case Left(s) =>
         val route = s.iterator.flatMap(_.routing).map(r => (r._1, r._2) -> r).toMap
         Left(s.flatMap(_.crossing).map(x => node(x, route.getOrElse((x._3, x._4), null))))
@@ -654,15 +619,15 @@ object Flow {
     * upstream fold of the crossing graph under `rule`, then `local` again
     * with each entry cell seeded by `seed` of the crossings into it
     * (merged by the rule). Columns (row, col, a, b), every valid cell. */
-  private def upstreamTiles(tiles: Dataset[Tile], ref: GridRef, res: Int,
-      driverLimit: Int, rule: FoldRule, local: Local)(seed: FoldNode => (Long, Long))
+  private def upstreamTiles(op: String, tiles: Dataset[Tile], ref: GridRef, res: Int,
+      rule: FoldRule, local: Local)(seed: FoldNode => (Long, Long))
       : DataFrame = {
     import tiles.sparkSession.implicits._
     val cs = ref.cellsize
     val padded = masked(tiles, ref, res, None)
     val summaries = traceSummariesDs(padded, cs, local).localCheckpoint(false)
-    val nodes = crossingGraph(summaries, driverLimit)(foldNode)
-    val seeds = mapPlaced(foldUpstream(nodes, rule))(n => ((n.tr, n.tc), seed(n)))
+    val nodes = crossingGraph(op, summaries)(foldNode)
+    val seeds = DriverGate.mapPlaced(foldUpstream(nodes, rule))(n => ((n.tr, n.tc), seed(n)))
     seeded(padded, res, seeds, rule.merge) { case ((pt, _), m) =>
       val dirs = dirPlane(pt, cs)
       val (a, b) = local(pt, dirs, m)
@@ -682,15 +647,15 @@ object Flow {
     * and the exact step counts to it — `localTrace` per tile, a chain
     * resolve of the crossing graph, and `localTrace` again finishing every
     * path that leaves its tile. */
-  private def traceTiles(tiles: Dataset[Tile], ref: GridRef, res: Int,
-      driverLimit: Int, stops: Option[Dataset[(Long, Array[Int])]], terminal: Int)
+  private def traceTiles(op: String, tiles: Dataset[Tile], ref: GridRef, res: Int,
+      stops: Option[Dataset[(Long, Array[Int])]], terminal: Int)
       : Dataset[(Long, Long, Long, Long, Long, Long)] = {
     import tiles.sparkSession.implicits._
     val cs = ref.cellsize
     val padded = masked(tiles, ref, res, stops)
     val summaries = traceSummariesDs(padded, cs, NoLocal).localCheckpoint(false)
-    val rows = crossingGraph(summaries, driverLimit)(chainRow(terminal))
-    val seeds = mapPlaced(resolveChains(rows))(r => ((r.xr, r.xc), r))
+    val rows = crossingGraph(op, summaries)(chainRow(terminal))
+    val seeds = DriverGate.mapPlaced(resolveChains(rows))(r => ((r.xr, r.xc), r))
     seeded(padded, res, seeds, (a: ChainRow, _: ChainRow) => a) { case ((pt, stopIdx), m) =>
       val dirs = dirPlane(pt, cs)
       val (typ, term, cnc, cnd) = localTrace(pt, dirs, stopMask(pt, stopIdx))
@@ -711,11 +676,9 @@ object Flow {
   }
 
   /** D8 flow accumulation: (row, col, acc) for every valid cell; acc
-    * includes the cell itself. `driverLimit` bounds the rows the crossing
-    * solve collects on the driver ([[place]]). */
-  def flowAcc(tiles: Dataset[Tile], ref: GridRef, res: Int,
-      driverLimit: Int = 2000000): DataFrame =
-    upstreamTiles(tiles, ref, res, driverLimit, SumRule,
+    * includes the cell itself. */
+  def flowAcc(tiles: Dataset[Tile], ref: GridRef, res: Int): DataFrame =
+    upstreamTiles("Flow.flowAcc", tiles, ref, res, SumRule,
       (pt, dirs, seeds) => (localAcc(pt, dirs, seeds), new Array[Long](dirs.length)))(
       n => (n.a, n.b))
       .select(col("row"), col("col"), col("a").as("acc"))
@@ -725,9 +688,8 @@ object Flow {
     * to that outlet — `(row, col, basin_r, basin_c, ncard, ndiag)`. Pits
     * map to themselves with (0, 0). Same condensation scale shape as
     * [[flowAcc]], with a chain resolve for the crossing solve. */
-  def downstream(tiles: Dataset[Tile], ref: GridRef, res: Int,
-      driverLimit: Int = 2000000): DataFrame =
-    traceTiles(tiles, ref, res, driverLimit, None, terminal = 1)
+  def downstream(tiles: Dataset[Tile], ref: GridRef, res: Int): DataFrame =
+    traceTiles("Flow.downstream", tiles, ref, res, None, terminal = 1)
       .toDF("row", "col", "basin_r", "basin_c", "ncard", "ndiag")
 
   /** Longest upstream drainage path per cell (time-of-concentration /
@@ -735,9 +697,8 @@ object Flow {
     * weighted path `nc + nd*sqrt2` ending at the cell; ridge cells (0,0);
     * ties broken to the larger cardinal count. Max-plus condensation over
     * crossing edges, mirroring [[flowAcc]]'s sum solve. */
-  def longestUpstream(tiles: Dataset[Tile], ref: GridRef, res: Int,
-      driverLimit: Int = 2000000): DataFrame =
-    upstreamTiles(tiles, ref, res, driverLimit, LongestRule, localLongest)({ n =>
+  def longestUpstream(tiles: Dataset[Tile], ref: GridRef, res: Int): DataFrame =
+    upstreamTiles("Flow.longestUpstream", tiles, ref, res, LongestRule, localLongest)({ n =>
       val (sc, sd) = step(n.xr, n.xc, n.tr, n.tc)
       (n.a + sc, n.b + sd)
     }).toDF("row", "col", "ncard", "ndiag")
@@ -860,19 +821,20 @@ object Flow {
     * tile/grid ratio — the fixpoint `fill(c) = max(z(c), min over
     * neighbors fill(n))` is unique, so the result is bit-identical to
     * the iterative halo relaxation (FlowSpec gates both against each
-    * other and the Jacobi oracle). Above `driverLimit` estimated border
-    * cells the driver solve would not be driver-safe, so the iterative
-    * halo relaxation ([[fillSinksIterative]]) runs instead: one job per
-    * round, rounds bounded by `maxRounds`. */
+    * other and the Jacobi oracle). When the driver solve's estimated
+    * rows do not fit the [[DriverGate]] budget, the iterative halo
+    * relaxation ([[fillSinksIterative]]) runs instead: one job per round,
+    * rounds bounded by `maxRounds`. */
   def fillSinksTiles(tiles: Dataset[Tile], ref: GridRef, res: Int,
-      maxRounds: Int = 10000, driverLimit: Int = 2000000): Dataset[Tile] = {
+      maxRounds: Int = 10000): Dataset[Tile] = {
     val tilesX = ((ref.ncols - 1) >> res) + 1
     val tilesY = ((ref.nrows - 1) >> res) + 1
     val estBorder = tilesX.toLong * tilesY * (4L << res)
-    if (estBorder > driverLimit)
-      fillSinksIterative(tiles, ref, res, maxRounds)
-    else
+    // per border cell a terminal and about one saddle row, 24 bytes each
+    if (DriverGate.fits(tiles.sparkSession, "Flow.fillSinksTiles", estBorder * 2 * 24))
       fillSinksTwoPass(tiles, ref, res)
+    else
+      fillSinksIterative(tiles, ref, res, maxRounds)
   }
 
   /** Pass-1 kernel: multi-seed Priority-Flood labeling every valid cell
@@ -1100,7 +1062,7 @@ object Flow {
   }
 
   /** Iterative halo-relaxation fill (the pre-Barnes path, kept as the
-    * above-`driverLimit` branch and as the FlowSpec equivalence gate). */
+    * over-budget branch and as the FlowSpec equivalence gate). */
   private[operators] def fillSinksIterative(tiles: Dataset[Tile], ref: GridRef,
       res: Int, maxRounds: Int = 10000): Dataset[Tile] = {
     import tiles.sparkSession.implicits._
@@ -1179,7 +1141,7 @@ object Flow {
     * stream cells — the stream mask arrives per tile via an equi-join on
     * the tile cell id (never collected). */
   def nearestDrainage(tiles: Dataset[Tile], ref: GridRef, res: Int,
-      threshold: Long, driverLimit: Int = 2000000): DataFrame = {
+      threshold: Long): DataFrame = {
     import tiles.sparkSession.implicits._
     val size = 1 << res
     val ncols = ref.ncols
@@ -1192,7 +1154,7 @@ object Flow {
         (CellId.ofPixel(r, c, res), ((r - ((r >> res) << res)) * w + (c - col0)).toInt)
       }
       .groupByKey(_._1).mapValues(_._2).mapGroups((cid, it) => (cid, it.toArray))
-    traceTiles(tiles, ref, res, driverLimit, Some(stops), terminal = 4)
+    traceTiles("Flow.nearestDrainage", tiles, ref, res, Some(stops), terminal = 4)
       .toDF("row", "col", "stream_r", "stream_c", "ncard", "ndiag")
   }
 
@@ -1211,11 +1173,11 @@ object Flow {
     *   3. an upstream fold of the junction forest ([[foldUpstream]] under
     *      [[StrahlerRule]]): a node's successor is the node its chain
     *      enters; O(#nodes) rows.
-    * Each solve runs on the driver while its rows stay within
-    * `driverLimit`; above it, pointer doubling and the batched
-    * topological peel run on the cluster. */
+    * Each solve runs on the driver while its rows fit the [[DriverGate]]
+    * budget; above it, pointer doubling and the batched topological peel
+    * run on the cluster. */
   def strahlerOrder(tiles: Dataset[Tile], ref: GridRef, res: Int,
-      threshold: Long, driverLimit: Int = 2000000): DataFrame = {
+      threshold: Long): DataFrame = {
     val spark = tiles.sparkSession
     import spark.implicits._
     // ONE flowAcc feeds both the channel mask and the edge set (calling
@@ -1245,7 +1207,8 @@ object Flow {
         .select($"row".as("xr"), $"col".as("xc"), $"done", lit(true).as("ok"),
           $"pr".as("lr"), $"pc".as("lc"), lit(0L).as("nc"), lit(0L).as("nd"))
         .as[ChainRow]
-      val heads = toDs(spark, resolveChains(place(chain, driverLimit)(_ => 1L)))
+      val heads = DriverGate.toDs(spark, resolveChains(
+          DriverGate.place("Flow.strahlerOrder chain heads", chain)(_ => 6 * 8L + 2)))
         .select($"xr".as("row"), $"xc".as("col"), $"lr".as("hr"), $"lc".as("hc"))
       val nodes = heads.where($"row" === $"hr" && $"col" === $"hc")
         .select($"row".as("xr"), $"col".as("xc"))
@@ -1259,7 +1222,8 @@ object Flow {
           coalesce($"sc", lit(0L)).as("sc"), lit(0L).as("a"), lit(0L).as("b"),
           lit(0L).as("ea"), lit(0L).as("eb"))
         .as[FoldNode]
-      val orders = toDs(spark, foldUpstream(place(forest, driverLimit)(_ => 1L), StrahlerRule))
+      val orders = DriverGate.toDs(spark, foldUpstream(
+          DriverGate.place("Flow.strahlerOrder junctions", forest)(_ => 10 * 8L + 1), StrahlerRule))
         .map(n => (n.xr, n.xc, strahler(n.a, n.b))).toDF("hr", "hc", "strahler")
       heads.join(orders, Seq("hr", "hc"))
         .select($"row", $"col", $"strahler")

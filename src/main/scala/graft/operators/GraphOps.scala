@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.core.Owned
+import graft.core.{DriverGate, Owned}
 
 /** Distributed connected components by iterative min-label propagation —
   * the dissolve step shared by dedup clustering (near-dup pair graphs)
@@ -15,38 +15,37 @@ import graft.core.Owned
   * own driver-UF fast path for tiny seam graphs). */
 object GraphOps {
 
-  /** Hybrid entry point (the Vectorize seam-resolution shape): below
-    * `driverLimit` edges a driver union-find resolves the components in
+  /** Hybrid entry point (the Vectorize seam-resolution shape): within the
+    * [[DriverGate]] budget a driver union-find resolves the components in
     * one bounded collect — near-dup pair graphs are sparse by nature, so
     * this is the common path and costs one O(#pairs) pass; above it the
     * fully distributed [[minLabelComponents]] loop runs with no driver
     * materialization anywhere. Both return (node, root = min node id). */
-  def components(edges: DataFrame, aCol: String, bCol: String,
-      driverLimit: Long = 2000000L): DataFrame = {
+  def components(edges: DataFrame, aCol: String, bCol: String): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     Owned { own =>
       val pairs = own.reuse(edges.select(col(aCol).cast("long").as("a"),
         col(bCol).cast("long").as("b")))
-      if (pairs.count() > driverLimit) minLabelComponents(pairs, "a", "b")
-      else {
-        val es = pairs.as[(Long, Long)].collect()
-        val parent = scala.collection.mutable.LongMap[Long]()
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.getOrElse(r, r) != r) r = parent(r)
-          var c = x
-          while (parent.getOrElse(c, c) != c) { val nn = parent(c); parent(c) = r; c = nn }
-          r
-        }
-        es.foreach { case (a, b) =>
-          if (!parent.contains(a)) parent(a) = a
-          if (!parent.contains(b)) parent(b) = b
-          val ra = find(a); val rb = find(b)
-          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-        }
-        spark.createDataset(parent.keys.toSeq.map(k => (k, find(k))))
-          .toDF("node", "root")
+      DriverGate.place("GraphOps.components", pairs.as[(Long, Long)])(_ => 16L) match {
+        case Right(_) => minLabelComponents(pairs, "a", "b")
+        case Left(es) =>
+          val parent = scala.collection.mutable.LongMap[Long]()
+          def find(x: Long): Long = {
+            var r = x
+            while (parent.getOrElse(r, r) != r) r = parent(r)
+            var c = x
+            while (parent.getOrElse(c, c) != c) { val nn = parent(c); parent(c) = r; c = nn }
+            r
+          }
+          es.foreach { case (a, b) =>
+            if (!parent.contains(a)) parent(a) = a
+            if (!parent.contains(b)) parent(b) = b
+            val ra = find(a); val rb = find(b)
+            if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+          }
+          spark.createDataset(parent.keys.toSeq.map(k => (k, find(k))))
+            .toDF("node", "root")
       }
     }
   }

@@ -141,7 +141,7 @@ object Vectorize {
   }
 
   /** Resolve cross-tile label equivalences. The seam-equivalence edge set
-    * is O(total tile perimeter); below `driverLimit` edges a driver
+    * is O(total tile perimeter); within the [[DriverGate]] budget a driver
     * union-find resolves it in one collect, above it the resolution runs
     * as ITERATIVE MIN-LABEL PROPAGATION fully on the cluster (label(n) :=
     * min(label(n), min(label(neighbors))) to fixpoint — O(seam-graph
@@ -151,8 +151,7 @@ object Vectorize {
     * ceiling anywhere; in the driver-UF path the table is tiny and AQE
     * broadcasts the join side adaptively. Labels without seam edges are
     * absent — consumers default root = g via a left join + coalesce. */
-  private def resolveRoots(lab: Dataset[TileVec],
-      driverLimit: Long = 2000000L): DataFrame = {
+  private def resolveRoots(lab: Dataset[TileVec]): DataFrame = {
     val spark = lab.sparkSession
     import spark.implicits._
     val b = lab.flatMap { tl =>
@@ -166,21 +165,20 @@ object Vectorize {
       .select($"a.g".as("g1"), $"x.g".as("g2"))
     val edgeDf = down.union(right).distinct()
     // one shared dissolve mechanism: GraphOps picks driver union-find
-    // under the limit, distributed min-label propagation above it
-    GraphOps.components(edgeDf, "g1", "g2", driverLimit)
+    // within the budget, distributed min-label propagation above it
+    GraphOps.components(edgeDf, "g1", "g2")
       .withColumnRenamed("node", "g")
   }
 
   /** Component stats per value class: (value, n_components, n_pixels).
-    * `driverLimit` caps the seam-edge count resolved on the driver; above
-    * it the distributed min-label propagation path runs (tests set 0). */
-  def componentStats(tiles: Dataset[Tile], ref: GridRef, res: Int,
-      driverLimit: Long = 2000000L): DataFrame = {
+    * Seam edges resolve on the driver within the [[DriverGate]] budget;
+    * above it the distributed min-label propagation path runs. */
+  def componentStats(tiles: Dataset[Tile], ref: GridRef, res: Int): DataFrame = {
     val spark = tiles.sparkSession
     import spark.implicits._
     val lab = labeled(tiles, ref, res)
       .localCheckpoint(false)
-    val roots = resolveRoots(lab, driverLimit)
+    val roots = resolveRoots(lab)
     lab.flatMap { tl =>
       tl.counts.iterator.map { case (g, v, k, _) => (g, v, k) }
     }.toDF("g", "v", "px")
@@ -196,15 +194,14 @@ object Vectorize {
     * pixel count — the reference's (geometry, value) feature stream
     * (Raster.py:767-777). feature_id = the component's minimum row-major
     * pixel index (deterministic under any partitioning). */
-  def polygons(tiles: Dataset[Tile], ref: GridRef, res: Int,
-      driverLimit: Long = 2000000L): DataFrame = {
+  def polygons(tiles: Dataset[Tile], ref: GridRef, res: Int): DataFrame = {
     val spark = tiles.sparkSession
     import spark.implicits._
     val lab = labeled(tiles, ref, res)
       .localCheckpoint(false)
     // read twice below, uncached: resolveRoots' result is already cut by
     // lineage (driver-built rows, or the last label checkpoint)
-    val roots = resolveRoots(lab, driverLimit)
+    val roots = resolveRoots(lab)
 
     val meta = lab.flatMap { tl =>
       tl.counts.iterator.map { case (g, v, k, mp) => (g, v, k, mp) }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.unsafe.types.UTF8String
+import graft.core.DriverGate
 
 /** Text-analysis operators for the training-data pipeline (dedup, quality,
   * language-id, fingerprinting) — all built from codegen'd built-ins
@@ -470,7 +471,7 @@ object TextOps {
     * row ever reaches the driver per round. Returns one row per learned
     * merge: (merge_rank, left_sym, right_sym, pair_count). */
   def bpeLearnMerges(docs: DataFrame, textCol: String,
-      nMerges: Int, driverVocabLimit: Long = 2000000L): DataFrame = {
+      nMerges: Int): DataFrame = {
     require(nMerges >= 1, s"nMerges must be positive, got $nMerges")
     val spark = docs.sparkSession
     import spark.implicits._
@@ -484,82 +485,82 @@ object TextOps {
       .groupBy($"word").agg(count(lit(1)).as("freq"))
       .as[(String, Long)]
       .map { case (w, f) => (f, w.map(_.toString).toArray) }
-      .localCheckpoint(false) // vocab.count() below materializes it fully
+      .localCheckpoint(false) // the gate's size job materializes it fully
     val merges = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
-    if (vocab.count() <= driverVocabLimit) {
-      // Driver-side learn over the folded table: the r4 shape scheduled
-      // ONE SPARK JOB PER MERGE ROUND (32k-merge vocab = 32k jobs —
-      // VERDICT r4 #6); here the whole learn costs ONE distributed job
-      // (the fold+collect) and the per-round argmax runs in memory with
-      // IDENTICAL semantics — pair counts recomputed after every merge,
-      // winner by (count desc, then (left, right) lexicographic).
-      val words = vocab.collect().map { case (f, s) => (f, s) }
-      val syms: Array[Array[String]] = words.map(_._2)
-      var r = 1
-      var exhausted = false
-      while (r <= nMerges && !exhausted) {
-        val cnt = scala.collection.mutable.HashMap[(String, String), Long]()
-        var i = 0
-        while (i < syms.length) {
-          val s = syms(i); val f = words(i)._1
-          var j = 0
-          while (j < s.length - 1) {
-            val k = (s(j), s(j + 1))
-            cnt(k) = cnt.getOrElse(k, 0L) + f
-            j += 1
-          }
-          i += 1
-        }
-        if (cnt.isEmpty) exhausted = true
-        else {
-          // tie-break with UTF-8 BYTE order, not JVM String (UTF-16 code
-          // unit) order: the distributed fallback's orderBy compares
-          // UTF8String bytes, and the two orders disagree for
-          // supplementary characters vs [U+E000, U+FFFF] BMP chars — a
-          // mixed-script corpus would otherwise learn DIFFERENT
-          // vocabularies on the two branches from the first such tie on
-          val ((a, b), c) = cnt.min(Ordering.fromLessThan[((String, String), Long)] {
-            case (((a1, b1), n1), ((a2, b2), n2)) =>
-              if (n1 != n2) n1 > n2
-              else {
-                val ca = utf8Cmp(a1, a2)
-                if (ca != 0) ca < 0 else utf8Cmp(b1, b2) < 0
-              }
-          })
-          merges += ((r, a, b, c))
-          i = 0
+    DriverGate.place("TextOps.bpeLearnMerges vocab", vocab) { case (_, syms) =>
+      8L + syms.map(2L * _.length).sum
+    } match {
+      case Left(words) =>
+        // Driver-side learn: no job per merge round; the argmax runs in
+        // memory with the distributed branch's semantics — pair counts
+        // recomputed after every merge, winner by (count desc, then (left,
+        // right) lexicographic).
+        val syms: Array[Array[String]] = words.map(_._2)
+        var r = 1
+        var exhausted = false
+        while (r <= nMerges && !exhausted) {
+          val cnt = scala.collection.mutable.HashMap[(String, String), Long]()
+          var i = 0
           while (i < syms.length) {
-            syms(i) = bpeApplyMerge(syms(i), a, b)
+            val s = syms(i); val f = words(i)._1
+            var j = 0
+            while (j < s.length - 1) {
+              val k = (s(j), s(j + 1))
+              cnt(k) = cnt.getOrElse(k, 0L) + f
+              j += 1
+            }
             i += 1
           }
-          r += 1
+          if (cnt.isEmpty) exhausted = true
+          else {
+            // tie-break with UTF-8 BYTE order, not JVM String (UTF-16 code
+            // unit) order: the distributed fallback's orderBy compares
+            // UTF8String bytes, and the two orders disagree for
+            // supplementary characters vs [U+E000, U+FFFF] BMP chars — a
+            // mixed-script corpus would otherwise learn DIFFERENT
+            // vocabularies on the two branches from the first such tie on
+            val ((a, b), c) = cnt.min(Ordering.fromLessThan[((String, String), Long)] {
+              case (((a1, b1), n1), ((a2, b2), n2)) =>
+                if (n1 != n2) n1 > n2
+                else {
+                  val ca = utf8Cmp(a1, a2)
+                  if (ca != 0) ca < 0 else utf8Cmp(b1, b2) < 0
+                }
+            })
+            merges += ((r, a, b, c))
+            i = 0
+            while (i < syms.length) {
+              syms(i) = bpeApplyMerge(syms(i), a, b)
+              i += 1
+            }
+            r += 1
+          }
         }
-      }
-    } else {
-      // Above-limit fallback (a vocabulary beyond driver memory — URLs/
-      // hashes-as-words pathologies): the per-round distributed argmax.
-      // One job per merge round, O(nMerges) jobs — documented bound; the
-      // localCheckpoint keeps each round's plan constant-size.
-      var r = 1
-      var exhausted = false
-      while (r <= nMerges && !exhausted) {
-        val win = vocab.flatMap { case (f, s) =>
-            (0 until s.length - 1).iterator.map(i => (s(i), s(i + 1), f)) }
-          .toDF("a", "b", "f")
-          .groupBy($"a", $"b").agg(sum($"f").as("cnt"))
-          .orderBy($"cnt".desc, $"a", $"b").limit(1)
-          .as[(String, String, Long)].collect()
-        if (win.isEmpty) exhausted = true
-        else {
-          val (a, b, c) = win(0)
-          merges += ((r, a, b, c))
-          vocab = vocab
-            .map { case (f, s) => (f, bpeApplyMerge(s, a, b)) }
-            // lazy: next round's winner agg scans every partition
-            .localCheckpoint(false)
-          r += 1
+      case Right(_) =>
+        // Over-budget fallback (a vocabulary beyond driver memory — URLs/
+        // hashes-as-words pathologies): the per-round distributed argmax.
+        // One job per merge round, O(nMerges) jobs — documented bound; the
+        // localCheckpoint keeps each round's plan constant-size.
+        var r = 1
+        var exhausted = false
+        while (r <= nMerges && !exhausted) {
+          val win = vocab.flatMap { case (f, s) =>
+              (0 until s.length - 1).iterator.map(i => (s(i), s(i + 1), f)) }
+            .toDF("a", "b", "f")
+            .groupBy($"a", $"b").agg(sum($"f").as("cnt"))
+            .orderBy($"cnt".desc, $"a", $"b").limit(1)
+            .as[(String, String, Long)].collect()
+          if (win.isEmpty) exhausted = true
+          else {
+            val (a, b, c) = win(0)
+            merges += ((r, a, b, c))
+            vocab = vocab
+              .map { case (f, s) => (f, bpeApplyMerge(s, a, b)) }
+              // lazy: next round's winner agg scans every partition
+              .localCheckpoint(false)
+            r += 1
+          }
         }
-      }
     }
     spark.createDataset(merges.toSeq)
       .toDF("merge_rank", "left_sym", "right_sym", "pair_count")

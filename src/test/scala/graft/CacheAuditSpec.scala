@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
-import graft.core.{GridRef, Owned}
+import graft.core.{DriverGate, GridRef, Owned}
 import graft.corpus.Synth
 import graft.icelite.IceLite
 import graft.ml.Batching
@@ -98,8 +98,8 @@ class CacheAuditSpec extends AnyFunSuite {
       .unionByName(ids.select($"id".as("src"), (($"id" * $"id" + 7) % 64).as("dst")))
     audit(
       "components" -> (() => GraphOps.components(edges, "src", "dst")),
-      "components driverLimit=0" -> (() =>
-        GraphOps.components(edges, "src", "dst", driverLimit = 0L)),
+      "components budget=0" -> (() =>
+        DriverGate.withBudget(0)(GraphOps.components(edges, "src", "dst"))),
       "minLabelComponents" -> (() => GraphOps.minLabelComponents(edges, "src", "dst")),
       "pageRank" -> (() => GraphOps.pageRank(edges, "src", "dst", iters = 3)),
       "personalizedPageRank" -> (() =>
@@ -114,10 +114,11 @@ class CacheAuditSpec extends AnyFunSuite {
     val blocky = TileOps.tileGrid(spark, ref, 6)(Synth.blockyValue)
     audit(
       "polygons" -> (() => Vectorize.polygons(blocky, ref, 6)),
-      "polygons driverLimit=0" -> (() => Vectorize.polygons(blocky, ref, 6, driverLimit = 0L)),
+      "polygons budget=0" -> (() =>
+        DriverGate.withBudget(0)(Vectorize.polygons(blocky, ref, 6))),
       "componentStats" -> (() => Vectorize.componentStats(blocky, ref, 6)),
-      "componentStats driverLimit=0" -> (() =>
-        Vectorize.componentStats(blocky, ref, 6, driverLimit = 0L)))
+      "componentStats budget=0" -> (() =>
+        DriverGate.withBudget(0)(Vectorize.componentStats(blocky, ref, 6))))
   }
 
   test("CostDistance, CellOps and both pyramids") {
@@ -156,8 +157,8 @@ class CacheAuditSpec extends AnyFunSuite {
       "jaccardPairs" -> (() => TextOps.jaccardPairs(docs, "doc_id", "text")),
       "minhashLshPairs" -> (() => TextOps.minhashLshPairs(docs, "doc_id", "text")),
       "bpeLearnMerges" -> (() => TextOps.bpeLearnMerges(docs, "text", nMerges = 4)),
-      "bpeLearnMerges driverVocabLimit=0" -> (() =>
-        TextOps.bpeLearnMerges(docs, "text", nMerges = 4, driverVocabLimit = 0L)))
+      "bpeLearnMerges budget=0" -> (() =>
+        DriverGate.withBudget(0)(TextOps.bpeLearnMerges(docs, "text", nMerges = 4))))
   }
 
   test("Similarity and Batching") {

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{expr, lit}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core._
@@ -28,8 +28,7 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(spark.read.parquet(dir).filter(expr(pred))
       .queryExecution.optimizedPlan.toString.contains("cellinwindow"))
 
-    // rule ON (runtime injection; deployments use
-    // spark.sql.extensions=graft.functions.GraftExtensions)
+    // rule ON (runtime injection)
     spark.experimental.extraOptimizations =
       spark.experimental.extraOptimizations :+ RewriteCellWindowPredicates
     try {
@@ -103,11 +102,6 @@ class ExtensionsSpec extends AnyFunSuite {
         spark.experimental.extraOptimizations
           .filterNot(_ eq RewriteCellWindowPredicates)
     }
-  }
-
-  test("GraftExtensions injects functions + rule without error") {
-    val ext = new SparkSessionExtensions
-    new GraftExtensions().apply(ext) // registration contract holds
   }
 
   test("interpreted cell_in_window agrees with the plan-time fold on " +

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import graft.core.{GridRef, Tile}
+import graft.core.{DriverGate, GridRef, Tile}
 import graft.corpus.Synth
 
 /** Cost distance: iterated tile-local Dijkstra vs a driver-global
@@ -167,11 +167,11 @@ class CostDistanceSpec extends AnyFunSuite {
     assert(got.last._3 == 0.0, "path ends at a source")
     assert(got.map(_._3).toSeq == got.map(_._3).sorted.reverse.toSeq,
       "dist non-increasing")
-    // driverLimit = 0 forces the pointer-doubling branch: both the
+    // a zero driver budget forces the pointer-doubling branch: both the
     // driver-walk hybrid and the distributed enumeration stay gated
-    val got2 = CostDistance.leastCostPath(tiles, ref, 6, _ >= 240.0, 200, 150,
-        driverLimit = 0)
-      .collect().map(x => (x.getLong(0), (x.getLong(1), x.getLong(2)), x.getDouble(3)))
+    val got2 = DriverGate.withBudget(0) {
+      CostDistance.leastCostPath(tiles, ref, 6, _ >= 240.0, 200, 150).collect()
+    }.map(x => (x.getLong(0), (x.getLong(1), x.getLong(2)), x.getDouble(3)))
     assert(got2.toSeq == got.toSeq, "doubling branch == driver-walk branch")
   }
 

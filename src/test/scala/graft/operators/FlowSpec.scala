@@ -267,9 +267,7 @@ class FlowSpec extends AnyFunSuite {
     // both head-resolution branches agree: force the distributed
     // pointer-doubling loop and compare
     val tiles6 = TileOps.tileGrid(spark, ref, 6)(Synth.demValue)
-    val dist = Flow.strahlerOrder(tiles6, ref, 6, threshold,
-        driverLimit = 0)
-      .collect()
+    val dist = DriverGate.withBudget(0)(Flow.strahlerOrder(tiles6, ref, 6, threshold).collect())
       .map(r => (r.getLong(0).toInt, r.getLong(1).toInt) -> r.getLong(2)).toMap
     assert(dist == want.toMap, "distributed branch diverges from driver chase")
   }
@@ -389,39 +387,59 @@ class FlowSpec extends AnyFunSuite {
     assert(flatLake, "no filled-flat cells — conditioning had no routing effect")
   }
 
-  test("distributed condensed solves (driverLimit=0) == driver solves, all four ops") {
-    // driverLimit=0 forces the ABOVE-LIMIT branch on the small fixture:
-    // flowAcc/longestUpstream run the distributed batched topological
-    // peel, downstream/nearestDrainage the pointer-doubling carry
-    // resolve. Outputs must be IDENTICAL to the driver-solve path (which
-    // the tests above gate against driver-global oracles).
+  test("distributed condensed solves (budget 0) == driver solves, all four ops") {
+    // a zero driver budget forces the distributed branch on the small
+    // fixture: flowAcc/longestUpstream run the distributed batched
+    // topological peel, downstream/nearestDrainage the pointer-doubling
+    // carry resolve. Outputs must be IDENTICAL to the driver-solve path
+    // (which the tests above gate against driver-global oracles).
     val ref = Synth.demRef
     val tiles = TileOps.tileGrid(spark, ref, 4)(Synth.demValue)
     // multiset compare (row -> count): a Set would mask duplicated rows
     // from a frontier fan-out regression in the distributed branches
-    def m(df: org.apache.spark.sql.DataFrame) =
+    def m(df: => org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (0 until r.length).map(r.get).toSeq)
         .groupBy(identity).map { case (k, v) => (k, v.size) }
-    assert(m(Flow.flowAcc(tiles, ref, 4, driverLimit = 0)) ==
+    def forced(df: => org.apache.spark.sql.DataFrame) = DriverGate.withBudget(0)(m(df))
+    assert(forced(Flow.flowAcc(tiles, ref, 4)) ==
       m(Flow.flowAcc(tiles, ref, 4)), "flowAcc")
-    assert(m(Flow.downstream(tiles, ref, 4, driverLimit = 0)) ==
+    assert(forced(Flow.downstream(tiles, ref, 4)) ==
       m(Flow.downstream(tiles, ref, 4)), "downstream")
-    assert(m(Flow.longestUpstream(tiles, ref, 4, driverLimit = 0)) ==
+    assert(forced(Flow.longestUpstream(tiles, ref, 4)) ==
       m(Flow.longestUpstream(tiles, ref, 4)), "longestUpstream")
-    assert(m(Flow.nearestDrainage(tiles, ref, 4, threshold = 25L, driverLimit = 0)) ==
+    assert(forced(Flow.nearestDrainage(tiles, ref, 4, threshold = 25L)) ==
       m(Flow.nearestDrainage(tiles, ref, 4, threshold = 25L)), "nearestDrainage")
-    // strahler: driverLimit=0 forces BOTH the chain-head pointer doubling
+    // strahler: a zero budget forces BOTH the chain-head pointer doubling
     // AND the distributed junction-forest peel
-    assert(m(Flow.strahlerOrder(tiles, ref, 4, threshold = 25L, driverLimit = 0)) ==
+    assert(forced(Flow.strahlerOrder(tiles, ref, 4, threshold = 25L)) ==
       m(Flow.strahlerOrder(tiles, ref, 4, threshold = 25L)), "strahler")
+  }
+
+  test("a zero budget reaches the nested flowAcc: nearestDrainage and strahlerOrder " +
+      "place nothing on the driver") {
+    val ref = Synth.demRef
+    val tiles = TileOps.tileGrid(spark, ref, 4)(Synth.demValue)
+    def labels(budget: Option[Long])(op: => org.apache.spark.sql.DataFrame) =
+      org.apache.spark.JobDescriptions(spark.sparkContext) {
+        budget.fold(op.collect())(DriverGate.withBudget(_)(op.collect()))
+      }._2
+    for ((name, op) <- Seq[(String, () => org.apache.spark.sql.DataFrame)](
+        "nearestDrainage" -> (() => Flow.nearestDrainage(tiles, ref, 4, threshold = 25L)),
+        "strahlerOrder" -> (() => Flow.strahlerOrder(tiles, ref, 4, threshold = 25L)))) {
+      val nested = "Flow.flowAcc crossing graph"
+      assert(labels(None)(op()).exists(_.startsWith(s"$nested: driver placement")), name)
+      val forced = labels(Some(0L))(op())
+      assert(forced.contains(s"$nested: sizing"), s"$name: ${forced.distinct}")
+      assert(!forced.exists(_.contains(": driver placement")), s"$name: ${forced.distinct}")
+    }
   }
 
   test("flow routing scale smoke: 2048x2048 grid, condensed solve stays O(perimeter)") {
     // 4.2M cells / 1024 tiles at res 6: the solve touches ONLY crossing
     // edges (bounded by tile perimeter sum ~ 260k) — a per-cell driver
     // walk would be 16x that and a collect would hold 4.2M rows.
-    // driverLimit=1000 << 260k crossings pushes THIS run through the
-    // fully-distributed peel (VERDICT r4 #4's done-criterion). The
+    // a zero driver budget pushes THIS run through the fully-distributed
+    // peel (VERDICT r4 #4's done-criterion). The
     // mass-conservation identity over the distributed output is the
     // correctness gate at this size (the driver-global oracle would
     // dominate test wall).
@@ -430,7 +448,7 @@ class FlowSpec extends AnyFunSuite {
       if ((r * 2048 + c) % 97 == 13) Double.NaN
       else ((r * 31 + c * 17) % 1000) / 4.0
     val tiles = TileOps.tileGrid(spark, big, 6)(v)
-    val acc = Flow.flowAcc(tiles, big, 6, driverLimit = 1000)
+    val acc = DriverGate.withBudget(0)(Flow.flowAcc(tiles, big, 6))
     val dir = Flow.flowDir(tiles, big, 6)
     import spark.implicits._
     val valid = acc.count()
@@ -441,7 +459,7 @@ class FlowSpec extends AnyFunSuite {
     // the trace family through ITS distributed branch at the same size:
     // every cell's basin outlet must be a pit (a dir=0 cell) — the
     // closure invariant survives the pointer-doubling carry resolve
-    val ds = Flow.downstream(tiles, big, 6, driverLimit = 1000)
+    val ds = DriverGate.withBudget(0)(Flow.downstream(tiles, big, 6))
     assert(ds.count() == valid)
     val pits = dir.where($"dir" === 0)
       .select($"row".as("basin_r"), $"col".as("basin_c"))
@@ -464,19 +482,17 @@ class FlowSpec extends AnyFunSuite {
   test("crossing-graph operators release every Dataset they persist, both placements") {
     val ref = Synth.demRef
     val tiles = TileOps.tileGrid(spark, ref, 6)(Synth.demValue)
-    val bad = Seq(2000000, 0).flatMap { limit =>
+    val bad = Seq(None, Some(0L)).flatMap { budget =>
+      def at(df: => AnyRef): () => AnyRef = () => budget.fold(df)(DriverGate.withBudget(_)(df))
       graft.CacheAudit(spark)(
-        s"flowAcc driverLimit=$limit" -> (() => Flow.flowAcc(tiles, ref, 6, driverLimit = limit)),
-        s"downstream driverLimit=$limit" -> (() =>
-          Flow.downstream(tiles, ref, 6, driverLimit = limit)),
-        s"longestUpstream driverLimit=$limit" -> (() =>
-          Flow.longestUpstream(tiles, ref, 6, driverLimit = limit)),
-        s"nearestDrainage driverLimit=$limit" -> (() =>
-          Flow.nearestDrainage(tiles, ref, 6, threshold = 25L, driverLimit = limit)),
-        s"strahlerOrder driverLimit=$limit" -> (() =>
-          Flow.strahlerOrder(tiles, ref, 6, threshold = 25L, driverLimit = limit)),
-        s"fillSinksTiles driverLimit=$limit" -> (() =>
-          Flow.fillSinksTiles(tiles, ref, 6, driverLimit = limit)))
+        s"flowAcc budget=$budget" -> at(Flow.flowAcc(tiles, ref, 6)),
+        s"downstream budget=$budget" -> at(Flow.downstream(tiles, ref, 6)),
+        s"longestUpstream budget=$budget" -> at(Flow.longestUpstream(tiles, ref, 6)),
+        s"nearestDrainage budget=$budget" -> at(
+          Flow.nearestDrainage(tiles, ref, 6, threshold = 25L)),
+        s"strahlerOrder budget=$budget" -> at(
+          Flow.strahlerOrder(tiles, ref, 6, threshold = 25L)),
+        s"fillSinksTiles budget=$budget" -> at(Flow.fillSinksTiles(tiles, ref, 6)))
     }
     assert(bad.isEmpty, bad.mkString("; "))
   }
@@ -498,7 +514,7 @@ class FlowSpec extends AnyFunSuite {
     }
     def key(i: Int): (Long, Long) = ((i / 37).toLong, (i % 37).toLong)
     def both[T: org.apache.spark.sql.Encoder](rows: Array[T],
-        solve: Flow.Placed[T] => Flow.Placed[T]): (Array[T], Array[T]) =
+        solve: DriverGate.Placed[T] => DriverGate.Placed[T]): (Array[T], Array[T]) =
       (solve(Left(rows)).fold(identity, _.collect()),
         solve(Right(spark.createDataset(rows.toSeq))).fold(identity, _.collect()))
 
@@ -544,10 +560,10 @@ class FlowSpec extends AnyFunSuite {
     val cycRows = cyc.indices.map { i =>
       ChainRow(key(i)._1, key(i)._2, false, false, key(cyc(i))._1, key(cyc(i))._2, 1L, 0L)
     }.toArray
-    for (placed <- Seq[Flow.Placed[FoldNode]](Left(cycNodes),
+    for (placed <- Seq[DriverGate.Placed[FoldNode]](Left(cycNodes),
         Right(spark.createDataset(cycNodes.toSeq))))
       intercept[IllegalArgumentException](Flow.foldUpstream(placed, Flow.SumRule))
-    for (placed <- Seq[Flow.Placed[ChainRow]](Left(cycRows),
+    for (placed <- Seq[DriverGate.Placed[ChainRow]](Left(cycRows),
         Right(spark.createDataset(cycRows.toSeq))))
       intercept[IllegalArgumentException](Flow.resolveChains(placed))
   }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.core.DriverGate
 
 class GraphOpsSpec extends AnyFunSuite {
 
@@ -29,8 +30,9 @@ class GraphOpsSpec extends AnyFunSuite {
       .as[(Long, Long)].collect().toMap
     assert(driver == want)
     // hybrid forced onto the distributed path
-    val forced = GraphOps.components(edges, "a", "b", driverLimit = 0L)
-      .as[(Long, Long)].collect().toMap
+    val forced = DriverGate.withBudget(0) {
+      GraphOps.components(edges, "a", "b").as[(Long, Long)].collect().toMap
+    }
     assert(forced == want)
   }
 
@@ -60,8 +62,9 @@ class GraphOpsSpec extends AnyFunSuite {
     val driver = GraphOps.components(df, "a", "b")
       .as[(Long, Long)].collect().toMap
     assert(driver == want.toMap)
-    val dist = GraphOps.components(df, "a", "b", driverLimit = 0L)
-      .as[(Long, Long)].collect().toMap
+    val dist = DriverGate.withBudget(0) {
+      GraphOps.components(df, "a", "b").as[(Long, Long)].collect().toMap
+    }
     assert(dist == want.toMap)
   }
 

@@ -235,18 +235,20 @@ class RegridSpec extends AnyFunSuite {
     val blocky = TileOps.tileGrid(spark, Synth.gridARef, 6)(Synth.blockyValue)
     val viaDriver = Vectorize.componentStats(blocky, Synth.gridARef, 6)
       .as[(Double, Long, Long)].collect().toSet
-    val viaPropagation = Vectorize
-      .componentStats(blocky, Synth.gridARef, 6, driverLimit = 0L)
-      .as[(Double, Long, Long)].collect().toSet
+    val viaPropagation = DriverGate.withBudget(0) {
+      Vectorize.componentStats(blocky, Synth.gridARef, 6)
+        .as[(Double, Long, Long)].collect().toSet
+    }
     assert(viaPropagation == viaDriver)
 
-    // full polygons under driverLimit=0: the (g -> root) mapping is joined
+    // full polygons under a zero budget: the (g -> root) mapping is joined
     // (never collected), on a fixture with a few hundred seam labels —
     // result must equal the driver-UF path row for row (WKT included)
     val polyDriver = Vectorize.polygons(blocky, Synth.gridARef, 6)
       .collect().map(_.toSeq).toSet
-    val polyJoin = Vectorize.polygons(blocky, Synth.gridARef, 6, driverLimit = 0L)
-      .collect().map(_.toSeq).toSet
+    val polyJoin = DriverGate.withBudget(0) {
+      Vectorize.polygons(blocky, Synth.gridARef, 6).collect().map(_.toSeq).toSet
+    }
     assert(polyJoin == polyDriver)
     assert(polyJoin.nonEmpty)
   }

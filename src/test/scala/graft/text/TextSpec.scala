@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.array_sort
 import org.scalatest.funsuite.AnyFunSuite
+import graft.core.DriverGate
 
 class TextSpec extends AnyFunSuite {
 
@@ -466,11 +467,11 @@ class TextSpec extends AnyFunSuite {
     assert(jobs.get() <= 8,
       s"driver-side learn ran ${jobs.get()} jobs for 64 merges — " +
         "should be O(1), not O(merges)")
-    // identical semantics on the distributed above-limit path (forced via
-    // driverVocabLimit = 0), checked on a prefix to keep job count sane
-    val dist = TextOps.bpeLearnMerges(docs, "text", nMerges = 8,
-        driverVocabLimit = 0L)
-      .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2),
+    // identical semantics on the distributed over-budget path (forced by
+    // a zero budget), checked on a prefix to keep job count sane
+    val dist = DriverGate.withBudget(0) {
+      TextOps.bpeLearnMerges(docs, "text", nMerges = 8).collect()
+    }.map(r => (r.getInt(0), r.getString(1), r.getString(2),
         r.getLong(3))).sortBy(_._1).toSeq
     assert(dist == got.take(8), "distributed path must learn the same merges")
   }
@@ -487,12 +488,12 @@ class TextSpec extends AnyFunSuite {
     // agreement is by construction, not by the mangling accident.
     // Counts tie 3-way in round 1, 2-way in rounds 2-3.
     val docs = Seq("\uD83D\uDE00a \uE000b").toDF("text")
-    def learn(limit: Long) =
-      TextOps.bpeLearnMerges(docs, "text", nMerges = 3, driverVocabLimit = limit)
+    def learn() =
+      TextOps.bpeLearnMerges(docs, "text", nMerges = 3)
         .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2),
           r.getLong(3))).sortBy(_._1).toSeq
-    val driver = learn(2000000L)
-    val dist = learn(0L)
+    val driver = learn()
+    val dist = DriverGate.withBudget(0)(learn())
     assert(driver == dist,
       s"branch divergence on tie: driver=$driver dist=$dist")
     // ("?","?") beats ("?","a") beats ("\uE000","b") in UTF-8 byte order
