@@ -17,7 +17,6 @@ package graft.core
   */
 object CellId {
   final val MaxRes = 28
-  private final val CoordBits = 29
 
   /** Interleave the low 29 bits of x into even bit positions. */
   private def spread(v: Long): Long = {
@@ -60,12 +59,6 @@ object CellId {
   /** Cell containing pixel (row, col) at resolution res. */
   def ofPixel(row: Long, col: Long, res: Int): Long =
     encode(res, col >> res, row >> res)
-
-  /** Cell containing map point (x, y) for the given grid. */
-  def ofPoint(g: GridRef, x: Double, y: Double, res: Int): Long = {
-    val (r, c) = g.map2sub(x, y)
-    ofPixel(r.toLong, c.toLong, res)
-  }
 
   /** Parent at res+1 (coarser). */
   def parent(id: Long): Long = {

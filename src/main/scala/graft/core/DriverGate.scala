@@ -7,11 +7,13 @@ import org.apache.spark.sql.functions.{coalesce, lit, sum}
 
 /** The one driver-vs-distributed gate. Its budget is in bytes: the smaller
   * of `spark.driver.maxResultSize` (0 = no bound) and 1/16 of the driver
-  * JVM's max heap, which leaves room for object overhead and the solve's
-  * own maps over the field bytes callers state. `fits` decides a size known
-  * before any job; `place` sizes a Dataset in one job, then collects it or
-  * leaves it distributed. Its jobs carry the operator and the branch, and
-  * each decision is logged. */
+  * JVM's max heap. Callers state an element's bytes as the driver heap it
+  * costs (measured: the collected object and its share of the solve's maps,
+  * above its serialized size). `fits` decides a size known before any job;
+  * `place` sizes a Dataset in one job, then collects it or leaves it
+  * distributed; `placeRows` does so for fixed-size rows in one bounded
+  * collect. Its jobs carry the operator and the branch; each decision is
+  * logged. */
 private[graft] object DriverGate {
 
   /** Rows of a solve: `Left` on the driver, `Right` distributed. */
@@ -47,6 +49,16 @@ private[graft] object DriverGate {
     if (fits(spark, op, bytes))
       Left(labelled(spark, s"$op: driver placement ($bytes bytes)")(ds.collect()))
     else Right(ds)
+  }
+
+  /** [[place]] for elements of `rowBytes` each, with no sizing job: a
+    * `limit` collect of at most one row past the budget, kept if it fits. */
+  def placeRows[T](op: String, ds: Dataset[T], rowBytes: Long): Placed[T] = {
+    val spark = ds.sparkSession
+    val n = math.min(budget(spark) / rowBytes, Int.MaxValue - 1L).toInt
+    val rows = if (n == 0) None else Some(labelled(spark,
+      s"$op: driver placement (at most $n rows of $rowBytes bytes)")(ds.limit(n + 1).collect()))
+    if (fits(spark, op, rows.fold(rowBytes)(_.length * rowBytes))) Left(rows.get) else Right(ds)
   }
 
   def mapPlaced[T, U: Encoder: ClassTag](p: Placed[T])(f: T => U): Placed[U] =

@@ -319,7 +319,8 @@ object CostDistance {
     // chain walks on the driver: no doubling rounds (each a count + two joins).
     val ball = pred0.filter(col("dist") <= targetDist)
       .select("id", "to", "steps", "dist").as[(Long, Long, Long, Double)]
-    DriverGate.place("CostDistance.leastCostPath cost ball", ball)(_ => 4 * 8L) match {
+    // 300 bytes a row: the collected tuple and its walk-map entry (measured)
+    DriverGate.placeRows("CostDistance.leastCostPath cost ball", ball, 300L) match {
       case Left(ballRows) =>
         val m = new java.util.HashMap[Long, (Long, Long, Double)](ballRows.length * 2)
         ballRows.foreach { case (cell, to, steps, dist) => m.put(cell, (steps, to, dist)) }

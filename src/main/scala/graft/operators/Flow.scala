@@ -121,6 +121,10 @@ object Flow {
   // results are exact cross-engine; physical length = cellsize * (ncard +
   // ndiag * sqrt(2)).
 
+  // Each driver solve states an element's bytes as its retained driver heap
+  // at the solve's peak (rows, maps, seeds or local rows handed on; measured
+  // on a noisy synthetic 1024x1024 DEM at res 4 and 5, then rounded up).
+
   /** Per-tile boundary summary (public for encoder derivation).
     * crossing: (xR, xC, tR, tC, a, b) — a crossing cell, its out-of-tile
     * target and the in-tile upstream value (a, b) at the crossing cell.
@@ -562,7 +566,7 @@ object Flow {
   private def crossingGraph[N: Encoder: ClassTag](op: String,
       summaries: Dataset[TraceSummary])(node: (Crossing, Route) => N): Placed[N] =
     DriverGate.place(s"$op crossing graph", summaries)(s =>
-      s.crossing.length * (6 * 8L) + s.routing.length * (6 * 8L + 4)) match {
+      s.crossing.length * 300L + s.routing.length * 220L) match {
       case Left(s) =>
         val route = s.iterator.flatMap(_.routing).map(r => (r._1, r._2) -> r).toMap
         Left(s.flatMap(_.crossing).map(x => node(x, route.getOrElse((x._3, x._4), null))))
@@ -827,11 +831,9 @@ object Flow {
     * rounds bounded by `maxRounds`. */
   def fillSinksTiles(tiles: Dataset[Tile], ref: GridRef, res: Int,
       maxRounds: Int = 10000): Dataset[Tile] = {
-    val tilesX = ((ref.ncols - 1) >> res) + 1
-    val tilesY = ((ref.nrows - 1) >> res) + 1
-    val estBorder = tilesX.toLong * tilesY * (4L << res)
-    // per border cell a terminal and about one saddle row, 24 bytes each
-    if (DriverGate.fits(tiles.sparkSession, "Flow.fillSinksTiles", estBorder * 2 * 24))
+    val tileCount = (((ref.ncols - 1) >> res) + 1).toLong * (((ref.nrows - 1) >> res) + 1)
+    // 1,200 bytes an estimated border cell (measured at most 932)
+    if (DriverGate.fits(tiles.sparkSession, "Flow.fillSinksTiles", tileCount * (4L << res) * 1200))
       fillSinksTwoPass(tiles, ref, res)
     else
       fillSinksIterative(tiles, ref, res, maxRounds)
@@ -1208,7 +1210,7 @@ object Flow {
           $"pr".as("lr"), $"pc".as("lc"), lit(0L).as("nc"), lit(0L).as("nd"))
         .as[ChainRow]
       val heads = DriverGate.toDs(spark, resolveChains(
-          DriverGate.place("Flow.strahlerOrder chain heads", chain)(_ => 6 * 8L + 2)))
+          DriverGate.placeRows("Flow.strahlerOrder chain heads", chain, 320L)))
         .select($"xr".as("row"), $"xc".as("col"), $"lr".as("hr"), $"lc".as("hc"))
       val nodes = heads.where($"row" === $"hr" && $"col" === $"hc")
         .select($"row".as("xr"), $"col".as("xc"))
@@ -1223,7 +1225,7 @@ object Flow {
           lit(0L).as("ea"), lit(0L).as("eb"))
         .as[FoldNode]
       val orders = DriverGate.toDs(spark, foldUpstream(
-          DriverGate.place("Flow.strahlerOrder junctions", forest)(_ => 10 * 8L + 1), StrahlerRule))
+          DriverGate.placeRows("Flow.strahlerOrder junctions", forest, 360L), StrahlerRule))
         .map(n => (n.xr, n.xc, strahler(n.a, n.b))).toDF("hr", "hc", "strahler")
       heads.join(orders, Seq("hr", "hc"))
         .select($"row", $"col", $"strahler")

@@ -27,7 +27,8 @@ object GraphOps {
     Owned { own =>
       val pairs = own.reuse(edges.select(col(aCol).cast("long").as("a"),
         col(bCol).cast("long").as("b")))
-      DriverGate.place("GraphOps.components", pairs.as[(Long, Long)])(_ => 16L) match {
+      // 600 bytes an edge (measured): the pair, two new nodes, their result rows
+      DriverGate.placeRows("GraphOps.components", pairs.as[(Long, Long)], 600L) match {
         case Right(_) => minLabelComponents(pairs, "a", "b")
         case Left(es) =>
           val parent = scala.collection.mutable.LongMap[Long]()

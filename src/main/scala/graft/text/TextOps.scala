@@ -33,17 +33,6 @@ object TextOps {
         i => concat_ws(" ", (1 to n).map(j => element_at(words, (i + j).cast("int"))): _*)))
       .otherwise(array().cast("array<string>"))
 
-  /** MinHash signature (k hashes) over a PRE-HASHED shingle column
-    * (array<bigint>, e.g. `transform(sh, s -> xxhash64(s))`): k fixed-width
-    * xxhash64(long, i) rehashes — no string re-hashing and ANSI-safe
-    * (wrapping (a*h+b) arithmetic would trip Spark 4's overflow checks).
-    * Column-lambda form over the passed column. Prefer
-    * [[minhashSignatures]] (typed kernel, zero per-slot allocation) on the
-    * hot path; this Column form exists for SQL-side composition. */
-  def minhashSig(shingleHashes: Column, k: Int): Column =
-    transform(sequence(lit(0), lit(k - 1)),
-      i => array_min(transform(shingleHashes, h => xxhash64(h, i))))
-
   /** Per-doc distinct-shingle hash set + minhash signature. */
   final case class DocSig(doc_id: Long, hs: Array[Long], sig: Array[Long])
 
@@ -487,9 +476,7 @@ object TextOps {
       .map { case (w, f) => (f, w.map(_.toString).toArray) }
       .localCheckpoint(false) // the gate's size job materializes it fully
     val merges = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
-    DriverGate.place("TextOps.bpeLearnMerges vocab", vocab) { case (_, syms) =>
-      8L + syms.map(2L * _.length).sum
-    } match {
+    DriverGate.place("TextOps.bpeLearnMerges vocab", vocab)(w => bpeWordBytes(w._2.length)) match {
       case Left(words) =>
         // Driver-side learn: no job per merge round; the argmax runs in
         // memory with the distributed branch's semantics — pair counts
@@ -565,6 +552,10 @@ object TextOps {
     spark.createDataset(merges.toSeq)
       .toDF("merge_rank", "left_sym", "right_sym", "pair_count")
   }
+
+  /** Driver heap of a `len`-symbol vocabulary word: its row, 56 + 52 a
+    * symbol (measured), and at most an 80-byte pair-count entry a bigram. */
+  private[text] def bpeWordBytes(len: Int): Long = 56L + 52L * len + 80L * math.max(len - 1, 0)
 
   /** GPT-style contiguous sequence PACKING: concatenate all documents'
     * tokens in id order and cut the stream into fixed seqLen training

@@ -43,6 +43,20 @@ class DriverGateSpec extends AnyFunSuite {
       distributed)
   }
 
+  test("fixed-size rows: a bounded collect, kept when it fits; no job when no row fits") {
+    import spark.implicits._
+    val ds = spark.range(10).as[Long]
+    val sc = spark.sparkContext
+    val (fit, fitJobs) = JobDescriptions(sc)(DriverGate.withBudget(80)(DriverGate.placeRows("op", ds, 8L)))
+    assert(fit.fold(_.sorted.toSeq, _ => Nil) == (0L until 10L))
+    assert(fitJobs.nonEmpty && fitJobs.forall(_ == "op: driver placement (at most 10 rows of 8 bytes)"),
+      fitJobs)
+    val (over, _) = JobDescriptions(sc)(DriverGate.withBudget(79)(DriverGate.placeRows("op", ds, 8L)))
+    assert(over.isRight)
+    val (none, noJobs) = JobDescriptions(sc)(DriverGate.withBudget(7)(DriverGate.placeRows("op", ds, 8L)))
+    assert(none.isRight && noJobs.isEmpty, noJobs)
+  }
+
   test("the override is restored when its body throws") {
     val before = DriverGate.budget(spark)
     DriverGate.withBudget(5) {

@@ -437,6 +437,21 @@ class TextSpec extends AnyFunSuite {
       TextOps.bpeLearnMerges(docs, "text", 0) }
   }
 
+  test("bpeLearnMerges: the vocabulary is gated by its driver heap") {
+    import spark.implicits._
+    val docs = Seq("ab abc ab").toDF("text")
+    val bytes = TextOps.bpeWordBytes(2) + TextOps.bpeWordBytes(3)
+    def labels(budget: Long) = org.apache.spark.JobDescriptions(spark.sparkContext) {
+      DriverGate.withBudget(budget)(TextOps.bpeLearnMerges(docs, "text", 1).collect())
+    }._2
+    val op = "TextOps.bpeLearnMerges vocab"
+    assert(labels(bytes).contains(s"$op: driver placement ($bytes bytes)"))
+    assert(!labels(bytes - 1).exists(_.startsWith(s"$op: driver")))
+    // 2M six-symbol words, the former row limit, stay off the
+    // driver at any heap: the budget is at most maxResultSize (1g default)
+    assert(!DriverGate.fits(spark, op, 2000001L * TextOps.bpeWordBytes(6)))
+  }
+
   test("bpeLearnMerges: 64+ merges cost O(1) jobs driver-side; == distributed path") {
     import spark.implicits._
     // a corpus rich enough to sustain >= 64 merges: 40 distinct long
