@@ -165,8 +165,9 @@ object Bench {
       PtRec(i, slabRef.left + (((i * 37.0) % slabWm) + 0.125),
         slabRef.bottom + ((i * 53) % yMod) * 1.25 + 0.0625, (i % 400) / 4.0)
     }
-    // NOTE: nearestBucketed's construction runs its escalation guard (a
-    // driver-side action) — built lazily INSIDE the kNN future below so
+    // NOTE: nearestBucketed's construction runs pass 1 (the escalation
+    // loop's emptiness collect is the first reader of its per-bucket cut,
+    // a driver-side action) — built lazily INSIDE the kNN future below so
     // that work overlaps the stats/burn job instead of preceding it
     def knn = Knn.nearestBucketed(spark, pts, slabRef, res = 6, ringK = 1)
 

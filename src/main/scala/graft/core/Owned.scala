@@ -24,23 +24,31 @@ import org.apache.spark.storage.StorageLevel
   * (a Dataset `unpersist` on a checkpoint does nothing), so nothing the
   * body returns may still read an owned frame lazily.
   *
-  * Cuts outside a scope are owned by lineage: a loop round's plain
-  * `localCheckpoint` and a cut read by a returned lazy plan are never
-  * unpersisted; their blocks go when the ContextCleaner collects the RDD. */
+  * `own.cut(ds)` is an eager cut the scope releases, for a loop's working
+  * set. Cuts outside a scope are owned by lineage: a cut read by a
+  * returned plan is never unpersisted here; its blocks go when the caller
+  * releases it or the ContextCleaner collects the RDD. */
 final class Owned private {
   private val release = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
 
   def reuse[T](ds: Dataset[T]): Dataset[T] =
-    if (Owned.hasPayload(ds.schema)) {
-      val cut = ds.localCheckpoint(false)
-      release += (() => cut.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
-        .foreach(_.unpersist(blocking = false)))
-      cut
-    } else {
+    if (Owned.hasPayload(ds.schema)) blocks(ds.localCheckpoint(false))
+    else {
       val cached = ds.persist(StorageLevel.MEMORY_AND_DISK)
       release += (() => cached.unpersist())
       cached
     }
+
+  /** An eager lineage cut of `ds` that the scope releases: a loop's
+    * working set, which a later round reads after the round that built
+    * it has released its own inputs. */
+  def cut[T](ds: Dataset[T]): Dataset[T] = blocks(ds.localCheckpoint(true))
+
+  private def blocks[T](cut: Dataset[T]): Dataset[T] = {
+    release += (() => cut.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
+      .foreach(_.unpersist(blocking = false)))
+    cut
+  }
 }
 
 object Owned {

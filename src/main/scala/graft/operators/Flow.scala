@@ -116,7 +116,10 @@ object Flow {
   //      so the graph is a functional forest. [[foldUpstream]] or
   //      [[resolveChains]] solves it — on the driver while the summaries
   //      fit the [[DriverGate]] byte budget, distributed above;
-  //   3. a second per-tile pass seeded with the solved values ([[seeded]]).
+  //   3. a second per-tile pass seeded with the solved values ([[seeded]]),
+  //      cut once, eagerly, one row per tile ([[CellBlock]]): the per-cell
+  //      rows an operator returns are an explode of that cut, so no cut or
+  //      shuffle of the condensation holds a row per cell.
   // Path lengths are kept as INTEGER (cardinal, diagonal) step counts so
   // results are exact cross-engine; physical length = cellsize * (ncard +
   // ndiag * sqrt(2)).
@@ -326,8 +329,7 @@ object Flow {
       stop
     }
 
-  /** Halo'd tiles paired with their stop cells, held for the two passes
-    * by a lineage cut. */
+  /** Halo'd tiles paired with their stop cells. */
   private def masked(tiles: Dataset[Tile], ref: GridRef, res: Int,
       stops: Option[Dataset[(Long, Array[Int])]]): Dataset[Masked] = {
     import tiles.sparkSession.implicits._
@@ -337,7 +339,7 @@ object Flow {
       case Some(st) =>
         bare.joinWith(st, bare("cellId") === st("_1"), "left_outer")
           .map { case (pt, s) => (pt, if (s == null) Array.emptyIntArray else s._2) }
-    }).localCheckpoint(false)
+    })
   }
 
   /** Pass 1: per tile, the crossing edges carrying `local`'s in-tile value
@@ -597,86 +599,108 @@ object Flow {
     ChainRow(x._1, x._2, r._3 != 2, r._3 == terminal, r._4, r._5, sc + r._6, sd + r._7)
   }
 
+  /** A seeded pass's answer for one tile: the local indices `at` of the
+    * cells it answers (row-major in a tile `w` wide) and one column of
+    * values per output field (public for encoder derivation). */
+  final case class CellBlock(row0: Long, col0: Long, w: Int, at: Array[Int],
+      cols: Array[Array[Long]]) {
+    def row(j: Int): Long = row0 + at(j) / w
+    def col(j: Int): Long = col0 + at(j) % w
+  }
+
   /** Pass 2: `kernel` on every tile with the solved seeds it owns, keyed by
-    * cell, duplicates folded by `merge`. Driver-placed seeds reach the
-    * tiles in one broadcast; distributed ones by an equi-join on the owning
-    * tile's cell id, so they never land on the driver. */
-  private def seeded[V, O: Encoder](padded: Dataset[Masked], res: Int,
+    * cell, duplicates folded by `merge`, cut once, eagerly, one row per
+    * tile. Driver-placed seeds reach the tiles in one broadcast, released
+    * after the cut; distributed ones by an equi-join on the owning tile's
+    * cell id, so they never land on the driver. */
+  private def seeded[V](padded: Dataset[Masked], res: Int,
       seeds: Placed[((Long, Long), V)], merge: (V, V) => V)
-      (kernel: (Masked, scala.collection.Map[(Long, Long), V]) => Iterator[O])
-      (implicit byTileEnc: Encoder[(Long, Array[((Long, Long), V)])]): Dataset[O] =
+      (kernel: (Masked, scala.collection.Map[(Long, Long), V]) => CellBlock)
+      (implicit byTileEnc: Encoder[(Long, Array[((Long, Long), V)])]): Dataset[CellBlock] = {
+    import padded.sparkSession.implicits._
     seeds match {
       case Left(s) =>
         val bc = padded.sparkSession.sparkContext.broadcast(s.groupMapReduce(_._1)(_._2)(merge))
-        padded.flatMap(p => kernel(p, bc.value))
+        try padded.map(p => kernel(p, bc.value)).localCheckpoint(true)
+        finally bc.destroy()
       case Right(ds) =>
-        import ds.sparkSession.implicits._
         val byTile = ds.groupByKey(s => CellId.ofPixel(s._1._1, s._1._2, res))
           .mapGroups((cid, it) => (cid, it.toArray))
         padded.joinWith(byTile, padded("_1.cellId") === byTile("_1"), "left_outer")
-          .flatMap { case (p, t) =>
+          .map { case (p, t) =>
             kernel(p, if (t == null) Map.empty else t._2.groupMapReduce(_._1)(_._2)(merge))
-          }
+          }.localCheckpoint(true)
     }
+  }
 
   /** Body of [[flowAcc]] and [[longestUpstream]]: `local` per tile, an
     * upstream fold of the crossing graph under `rule`, then `local` again
     * with each entry cell seeded by `seed` of the crossings into it
-    * (merged by the rule). Columns (row, col, a, b), every valid cell. */
+    * (merged by the rule). Columns (row, col, a, b), every valid cell: an
+    * explode of the per-tile cut. */
   private def upstreamTiles(op: String, tiles: Dataset[Tile], ref: GridRef, res: Int,
       rule: FoldRule, local: Local)(seed: FoldNode => (Long, Long))
       : DataFrame = {
     import tiles.sparkSession.implicits._
     val cs = ref.cellsize
-    val padded = masked(tiles, ref, res, None)
-    val summaries = traceSummariesDs(padded, cs, local).localCheckpoint(false)
-    val nodes = crossingGraph(op, summaries)(foldNode)
-    val seeds = DriverGate.mapPlaced(foldUpstream(nodes, rule))(n => ((n.tr, n.tc), seed(n)))
-    seeded(padded, res, seeds, rule.merge) { case ((pt, _), m) =>
-      val dirs = dirPlane(pt, cs)
-      val (a, b) = local(pt, dirs, m)
-      val out = Array.newBuilder[(Long, Long, Long, Long)]
-      var i = 0
-      while (i < dirs.length) {
-        if (dirs(i) >= 0)
-          out += (((pt.row0 + i / pt.w).toLong, (pt.col0 + i % pt.w).toLong, a(i), b(i)))
-        i += 1
+    Owned { own =>
+      val padded = own.reuse(masked(tiles, ref, res, None))
+      val summaries = own.reuse(traceSummariesDs(padded, cs, local))
+      val nodes = crossingGraph(op, summaries)(foldNode)
+      val seeds = DriverGate.mapPlaced(foldUpstream(nodes, rule))(n => ((n.tr, n.tc), seed(n)))
+      seeded(padded, res, seeds, rule.merge) { case ((pt, _), m) =>
+        val dirs = dirPlane(pt, cs)
+        val (a, b) = local(pt, dirs, m)
+        val (at, va, vb) = (Array.newBuilder[Int], Array.newBuilder[Long], Array.newBuilder[Long])
+        var i = 0
+        while (i < dirs.length) {
+          if (dirs(i) >= 0) { at += i; va += a(i); vb += b(i) }
+          i += 1
+        }
+        CellBlock(pt.row0, pt.col0, pt.w, at.result(), Array(va.result(), vb.result()))
       }
-      out.result().iterator
-    }.toDF("row", "col", "a", "b").localCheckpoint(true)
+    }.flatMap(t => Iterator.range(0, t.at.length)
+      .map(j => (t.row(j), t.col(j), t.cols(0)(j), t.cols(1)(j))))
+      .toDF("row", "col", "a", "b")
   }
 
   /** Body of [[downstream]] and [[nearestDrainage]]: every valid cell whose
     * D8 path ends at a `terminal` cell (1 pit, 4 stop cell), with that cell
     * and the exact step counts to it — `localTrace` per tile, a chain
     * resolve of the crossing graph, and `localTrace` again finishing every
-    * path that leaves its tile. */
+    * path that leaves its tile; an explode of the per-tile cut. */
   private def traceTiles(op: String, tiles: Dataset[Tile], ref: GridRef, res: Int,
       stops: Option[Dataset[(Long, Array[Int])]], terminal: Int)
       : Dataset[(Long, Long, Long, Long, Long, Long)] = {
     import tiles.sparkSession.implicits._
     val cs = ref.cellsize
-    val padded = masked(tiles, ref, res, stops)
-    val summaries = traceSummariesDs(padded, cs, NoLocal).localCheckpoint(false)
-    val rows = crossingGraph(op, summaries)(chainRow(terminal))
-    val seeds = DriverGate.mapPlaced(resolveChains(rows))(r => ((r.xr, r.xc), r))
-    seeded(padded, res, seeds, (a: ChainRow, _: ChainRow) => a) { case ((pt, stopIdx), m) =>
-      val dirs = dirPlane(pt, cs)
-      val (typ, term, cnc, cnd) = localTrace(pt, dirs, stopMask(pt, stopIdx))
-      val out = Array.newBuilder[(Long, Long, Long, Long, Long, Long)]
-      var i = 0
-      while (i < dirs.length) {
-        val (r, c) = ((pt.row0 + i / pt.w).toLong, (pt.col0 + i % pt.w).toLong)
-        val (er, ec) = ((pt.row0 + term(i) / pt.w).toLong, (pt.col0 + term(i) % pt.w).toLong)
-        if (typ(i) == terminal) out += ((r, c, er, ec, cnc(i).toLong, cnd(i).toLong))
-        else if (typ(i) == 2) {
-          val x = m((er, ec))
-          if (x.ok) out += ((r, c, x.lr, x.lc, cnc(i) + x.nc, cnd(i) + x.nd))
+    Owned { own =>
+      val padded = own.reuse(masked(tiles, ref, res, stops))
+      val summaries = own.reuse(traceSummariesDs(padded, cs, NoLocal))
+      val rows = crossingGraph(op, summaries)(chainRow(terminal))
+      val seeds = DriverGate.mapPlaced(resolveChains(rows))(r => ((r.xr, r.xc), r))
+      seeded(padded, res, seeds, (a: ChainRow, _: ChainRow) => a) { case ((pt, stopIdx), m) =>
+        val dirs = dirPlane(pt, cs)
+        val (typ, term, cnc, cnd) = localTrace(pt, dirs, stopMask(pt, stopIdx))
+        val at = Array.newBuilder[Int]
+        val out = Array.fill(4)(Array.newBuilder[Long])
+        def emit(i: Int, er: Long, ec: Long, nc: Long, nd: Long): Unit = {
+          at += i; out(0) += er; out(1) += ec; out(2) += nc; out(3) += nd
         }
-        i += 1
+        var i = 0
+        while (i < dirs.length) {
+          val (er, ec) = ((pt.row0 + term(i) / pt.w).toLong, (pt.col0 + term(i) % pt.w).toLong)
+          if (typ(i) == terminal) emit(i, er, ec, cnc(i).toLong, cnd(i).toLong)
+          else if (typ(i) == 2) {
+            val x = m((er, ec))
+            if (x.ok) emit(i, x.lr, x.lc, cnc(i) + x.nc, cnd(i) + x.nd)
+          }
+          i += 1
+        }
+        CellBlock(pt.row0, pt.col0, pt.w, at.result(), out.map(_.result()))
       }
-      out.result().iterator
-    }.localCheckpoint(true)
+    }.flatMap(t => Iterator.range(0, t.at.length)
+      .map(j => (t.row(j), t.col(j), t.cols(0)(j), t.cols(1)(j), t.cols(2)(j), t.cols(3)(j))))
   }
 
   /** D8 flow accumulation: (row, col, acc) for every valid cell; acc

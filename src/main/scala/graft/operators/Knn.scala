@@ -42,6 +42,16 @@ final case class BucketLattice(ref: GridRef, res: Int) {
     cellBucket(r, c)
   }
 
+  /** The grid cells of `bucket`, row-major, as parallel (rows, cols); a
+    * bucket on the lattice's right or bottom edge is clipped to the grid. */
+  def cellsOf(bucket: Long): (Array[Int], Array[Int]) = {
+    val (row0, col0, size) = CellId.pixelWindow(bucket)
+    val (r0, c0) = (row0.toInt, col0.toInt)
+    val h = math.min(size, ref.nrows - r0)
+    val w = math.min(size, ref.ncols - c0)
+    (Array.tabulate(h * w)(i => r0 + i / w), Array.tabulate(h * w)(i => c0 + i % w))
+  }
+
   /** Map coordinates of a cell centre. */
   def centreX(col: Int): Double = left + (col + 0.5) * cs
   def centreY(row: Int): Double = top - (row + 0.5) * cs
@@ -54,19 +64,22 @@ final case class BucketLattice(ref: GridRef, res: Int) {
 
   /** The ring-escalation loop. `open` holds the cells still unresolved
     * (row, col, plus whatever its round carries); `settled` the cells
-    * already final. Each round gets the open cells, the sorted buckets
-    * they fall in, the points keyed by their own bucket, the ring and
-    * whether that ring is exhaustive, and returns one row per open cell
-    * with a boolean `proven` column. Proven rows, in `settled`'s columns,
-    * join the result; the rest stay open. The ring starts at `firstRing`
-    * and doubles; a round at [[maxRing]] has seen every point and is the
-    * last, so it must prove every cell that has an answer.
+    * already final. Both come from the caller (the k-nearest solver
+    * passes two explodes of its one-row-per-bucket pass-1 cut); every
+    * later open set is a cut of a round's unproven rows. Each round gets
+    * the open cells, the sorted buckets they fall in, the points keyed by
+    * their own bucket, the ring and whether that ring is exhaustive, and
+    * returns one row per open cell with a boolean `proven` column. Proven
+    * rows, in `settled`'s columns, join the result; the rest stay open.
+    * The ring starts at `firstRing` and doubles; a round at [[maxRing]]
+    * has seen every point and is the last, so it must prove every cell
+    * that has an answer.
     *
     * Each increment and each open set is a lineage-cut local checkpoint,
-    * so a long run never replays a deep lazy union; each round's solved
-    * frame and the bucketed points are [[Owned]]. The emptiness test is
-    * one collect of the open buckets, which the Delaunay gather also
-    * needs. */
+    * so a long run never replays a deep lazy union; the open sets, each
+    * round's solved frame and the bucketed points are [[Owned]], so only
+    * the increments outlive the call. The emptiness test is one collect
+    * of the open buckets, which the Delaunay gather also needs. */
   def escalate(spark: SparkSession, points: Dataset[PtRec], firstRing: Int,
       settled: DataFrame, open: DataFrame)(round: BucketLattice.Round): DataFrame = {
     import spark.implicits._
@@ -89,7 +102,7 @@ final case class BucketLattice(ref: GridRef, res: Int) {
           val solved = roundOwn.reuse(round(live, bcNeed, byBucket, ring, exhaustive))
           out = out.unionByName(
             solved.filter($"proven").select(outCols: _*).localCheckpoint(true))
-          if (!exhaustive) live = solved.filter(!$"proven").localCheckpoint(true)
+          if (!exhaustive) live = own.cut(solved.filter(!$"proven"))
         } finally bcNeed.destroy()
         need = if (exhaustive) Array.empty else bucketsOf(live)
         ring *= 2
@@ -118,8 +131,10 @@ object BucketLattice {
   *    tiny point sets.
   *  - `nearestBucketed` / `idwBucketed`: shells over one exact k-nearest
   *    solver that never collects the point set to the driver. Pass 1
-  *    replicates points to a ringK halo of their bucket and cogroups the
-  *    target cells with those candidates (per-bucket k-d tree); a cell
+  *    replicates points to a ringK halo of their bucket and cogroups them
+  *    with one row per bucket (per-bucket k-d tree): a lattice bucket,
+  *    whose cells the kernel enumerates, or the `targets` cells grouped
+  *    by bucket. It answers each bucket with one [[HitBlock]]; a cell
   *    whose k-th distance lies inside the halo is proven. The others
   *    escalate through [[BucketLattice.escalate]] by QUERY replication:
   *    each ships a tiny (row, col) descriptor to exactly the ring its own
@@ -198,11 +213,21 @@ object Knn {
     }
   }
 
+  /** Pass 1's answer for one bucket: one entry per queried cell of the
+    * bucket, in parallel arrays, so the pass-1 cut holds one row per
+    * bucket, not one per cell. */
+  final case class HitBlock(row: Array[Int], col: Array[Int], v: Array[Double],
+      pid: Array[Long], d2: Array[Double], proven: Array[Boolean]) {
+    def hits: Iterator[Hit] = Iterator.range(0, row.length)
+      .map(i => Hit(row(i), col(i), v(i), pid(i), d2(i), proven(i)))
+  }
+
   /** The exact k-nearest solver: each queried cell's k nearest points
     * ((pid, v, d2) ordered by (d2, pid); fewer only when the whole point
     * set is smaller), reduced by `combine` to the cell's (v, pid).
-    * Returns (row, col, v, pid). Its kernels emit flat [[Hit]] rows; no
-    * per-cell array crosses a shuffle. */
+    * Returns (row, col, v, pid). Pass 1 emits one [[HitBlock]] per bucket,
+    * the escalation rounds flat [[Hit]] rows per open cell; no per-cell
+    * array crosses a shuffle. */
   private def kNearest(spark: SparkSession, points: Dataset[PtRec],
       lat: BucketLattice, ringK: Int, k: Int, targets: Option[DataFrame])(
       combine: Array[(Long, Double, Double)] => (Double, Long)): DataFrame = {
@@ -218,12 +243,29 @@ object Knn {
       } else Hit(r, c, Double.NaN, -1L, dk, proven = false)
     }
 
-    // ---- pass 1: point-replication halo cogroup --------------------------
+    // ---- pass 1: point-replication halo cogroup, keyed by bucket ---------
     val guard2 = (ringK * lat.bucketW) * (ringK * lat.bucketW)
     val candidates = points.flatMap { p =>
       lat.ring(lat.pointBucket(p), ringK).map(b => (b, p))
+    }.groupByKey(_._1)
+    // strict: pass 1 proves only inside the guard; escalation rounds
+    // prove at equality (margin argument below)
+    def block(rows: Array[Int], cols: Array[Int], candIt: Iterator[(Long, PtRec)]) = {
+      val pts = candIt.map(_._2).toArray.distinct
+      val tree = KdTree.build(pts.map(p => (p.pid, p.x, p.y, p.v)))
+      val n = rows.length
+      val b = HitBlock(rows, cols, new Array[Double](n), new Array[Long](n),
+        new Array[Double](n), new Array[Boolean](n))
+      var i = 0
+      while (i < n) {
+        val h = hit(rows(i), cols(i),
+          tree.kNearest(lat.centreX(cols(i)), lat.centreY(rows(i)), k), _ < guard2)
+        b.v(i) = h.v; b.pid(i) = h.pid; b.d2(i) = h.d2; b.proven(i) = h.proven
+        i += 1
+      }
+      b
     }
-    val cells = targets match {
+    val blocks = targets match {
       case Some(t) =>
         t.select(col("row").cast("int"), col("col").cast("int")).as[(Int, Int)]
           .map { case (r, c) =>
@@ -231,35 +273,33 @@ object Knn {
               s"nearestBucketed: target ($r, $c) outside the $nrows x $ncols grid")
             (lat.cellBucket(r, c), r, c)
           }
-      case None =>
-        spark.range(lat.ref.numCells).map { id =>
-          val r = (id / ncols).toInt
-          val c = (id % ncols).toInt
-          (lat.cellBucket(r, c), r, c)
-        }
-    }
-    // a lazy lineage cut: the escalation loop's emptiness
-    // collect materializes it in full, and the proven leg of the result
-    // reads it on the caller's action
-    val p1 = cells.groupByKey(_._1).cogroup(candidates.groupByKey(_._1)) {
-      (_, cellIt, candIt) =>
-        val cs = cellIt.toArray
-        if (cs.isEmpty) Iterator.empty
-        else {
-          val pts = candIt.map(_._2).toArray.distinct
-          val tree = KdTree.build(pts.map(p => (p.pid, p.x, p.y, p.v)))
-          // strict: pass 1 proves only inside the guard; escalation
-          // rounds prove at equality (margin argument below)
-          cs.iterator.map { case (_, r, c) =>
-            hit(r, c, tree.knn(lat.centreX(c), lat.centreY(r), k), _ < guard2)
+          .groupByKey(_._1).cogroup(candidates) { (_, cellIt, candIt) =>
+            val cs = cellIt.toArray
+            if (cs.isEmpty) Iterator.empty
+            else Iterator.single(block(cs.map(_._2), cs.map(_._3), candIt))
           }
-        }
-    }.toDF().localCheckpoint(eager = false)
+      case None =>
+        // one row per lattice bucket; the kernel enumerates its cells
+        val nbx = lat.maxCx + 1
+        spark.range((lat.maxCy + 1) * nbx).map(i => CellId.encode(lat.res, i % nbx, i / nbx))
+          .groupByKey(identity).cogroup(candidates) { (bucket, bIt, candIt) =>
+            if (bIt.isEmpty) Iterator.empty
+            else {
+              val (rows, cols) = lat.cellsOf(bucket)
+              Iterator.single(block(rows, cols, candIt))
+            }
+          }
+    }
+    // a lazy lineage cut, one row per bucket: the escalation loop's
+    // emptiness collect materializes it in full, and the proven leg of the
+    // result reads it on the caller's action
+    val p1 = blocks.localCheckpoint(eager = false)
 
     // ---- escalation: query-replication rounds ----------------------------
     lat.escalate(spark, points, math.max(2 * ringK, 2),
-      p1.filter($"proven").select($"row", $"col", $"v", $"pid"),
-      p1.filter(!$"proven")) { (open, _, byBucket, ring, exhaustive) =>
+      p1.flatMap(_.hits.filter(_.proven).map(h => (h.row, h.col, h.v, h.pid)))
+        .toDF("row", "col", "v", "pid"),
+      p1.flatMap(_.hits.filterNot(_.proven)).toDF()) { (open, _, byBucket, ring, exhaustive) =>
       // a cell with a bound queries exactly the ring that bound requires,
       // so it settles this round; a boundless cell probes `ring`
       val queries = open.as[Hit].flatMap { h =>
@@ -278,7 +318,7 @@ object Knn {
           else {
             val tree = KdTree.build(pIt.map { case (_, p) => (p.pid, p.x, p.y, p.v) }.toArray)
             qs.iterator.flatMap { q =>
-              val best = tree.knn(lat.centreX(q.col), lat.centreY(q.row), k)
+              val best = tree.kNearest(lat.centreX(q.col), lat.centreY(q.row), k)
               if (best.isEmpty)
                 Iterator.single((q.row, q.col, q.ring, -1L, Double.NaN, Double.PositiveInfinity))
               else best.iterator.map(b => (q.row, q.col, q.ring, b._1, b._2, b._3))

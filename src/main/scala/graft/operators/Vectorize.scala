@@ -170,20 +170,30 @@ object Vectorize {
       .withColumnRenamed("node", "g")
   }
 
+  /** The labelled tiles (a lazy lineage cut) and a function that roots a
+    * frame built from them: it swaps the frame's first column `g` for
+    * `root`, the label's component root, or `g` itself for a label
+    * without seam edges. The roots are read uncached by every rooted frame:
+    * [[resolveRoots]]' result is already cut by lineage (driver-built
+    * rows, or the last label checkpoint). */
+  private def rootedLabels(tiles: Dataset[Tile], ref: GridRef, res: Int)
+      : (Dataset[TileVec], DataFrame => DataFrame) = {
+    val lab = labeled(tiles, ref, res).localCheckpoint(false)
+    val roots = resolveRoots(lab)
+    (lab, df => df.join(roots, Seq("g"), "left").select(
+      coalesce(col("root"), col("g")).as("root") +: df.columns.tail.map(col).toSeq: _*))
+  }
+
   /** Component stats per value class: (value, n_components, n_pixels).
     * Seam edges resolve on the driver within the [[DriverGate]] budget;
     * above it the distributed min-label propagation path runs. */
   def componentStats(tiles: Dataset[Tile], ref: GridRef, res: Int): DataFrame = {
     val spark = tiles.sparkSession
     import spark.implicits._
-    val lab = labeled(tiles, ref, res)
-      .localCheckpoint(false)
-    val roots = resolveRoots(lab)
-    lab.flatMap { tl =>
+    val (lab, rooted) = rootedLabels(tiles, ref, res)
+    rooted(lab.flatMap { tl =>
       tl.counts.iterator.map { case (g, v, k, _) => (g, v, k) }
-    }.toDF("g", "v", "px")
-      .join(roots, Seq("g"), "left")
-      .select(coalesce($"root", $"g").as("root"), $"v", $"px")
+    }.toDF("g", "v", "px"))
       .groupBy($"v")
       .agg(countDistinct($"root").as("n_components"), sum($"px").as("n_pixels"))
       .orderBy($"v")
@@ -197,17 +207,11 @@ object Vectorize {
   def polygons(tiles: Dataset[Tile], ref: GridRef, res: Int): DataFrame = {
     val spark = tiles.sparkSession
     import spark.implicits._
-    val lab = labeled(tiles, ref, res)
-      .localCheckpoint(false)
-    // read twice below, uncached: resolveRoots' result is already cut by
-    // lineage (driver-built rows, or the last label checkpoint)
-    val roots = resolveRoots(lab)
+    val (lab, rooted) = rootedLabels(tiles, ref, res)
 
-    val meta = lab.flatMap { tl =>
+    val meta = rooted(lab.flatMap { tl =>
       tl.counts.iterator.map { case (g, v, k, mp) => (g, v, k, mp) }
-    }.toDF("g", "v", "px", "mp")
-      .join(roots, Seq("g"), "left")
-      .select(coalesce($"root", $"g").as("root"), $"v", $"px", $"mp")
+    }.toDF("g", "v", "px", "mp"))
       .as[(Long, Double, Long, Long)]
       .groupByKey(_._1).mapGroups { (root, it) =>
       val rows = it.toArray
@@ -215,11 +219,9 @@ object Vectorize {
     }.toDF("root", "v", "n_pixels", "feature_id")
 
     val (left, top, cs) = (ref.left, ref.top, ref.cellsize)
-    val rings = lab.flatMap { tl =>
+    val rings = rooted(lab.flatMap { tl =>
       tl.edges.iterator.map { case (g, r, c, side) => (g, r, c, side) }
-    }.toDF("g", "r", "c", "side")
-      .join(roots, Seq("g"), "left")
-      .select(coalesce($"root", $"g").as("root"), $"r", $"c", $"side")
+    }.toDF("g", "r", "c", "side"))
       .as[(Long, Int, Int, Byte)]
       .groupByKey(_._1).mapGroups { (root, it) =>
       val segs = it.map(e => (e._2, e._3, e._4)).toArray

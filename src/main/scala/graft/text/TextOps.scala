@@ -97,16 +97,6 @@ object TextOps {
       }
   }
 
-  /** Exact n-gram Jaccard pairs via an inverted-index join with a
-    * DOCUMENT-FREQUENCY CAP on the postings: a shingle appearing in more
-    * than `dfCap` docs is excluded from candidate generation (its posting
-    * list alone would create O(df^2) pairs — the classic stop-shingle
-    * explosion), but verification runs on the FULL hashed shingle sets so
-    * surviving pairs carry exact (inter, na, nb). A qualifying pair is
-    * missed only if EVERY shared shingle is ultra-common (df > dfCap) —
-    * at threshold >= 0.8 that needs a near-duplicate doc made entirely of
-    * stop-shingles; documented recall condition, same trade every
-    * production near-dup pipeline makes. */
   /** Exact set-overlap verify over SORTED hash arrays: two-pointer merge
     * intersection in a typed kernel — `array_intersect` builds a hash set
     * per candidate row, which dominated the d3/d4 verify stage; the
@@ -130,6 +120,16 @@ object TextOps {
       .filter(col("inter") * 10 >= lit(threshold10) * (col("na") + col("nb") - col("inter")))
   }
 
+  /** Exact n-gram Jaccard pairs via an inverted-index join with a
+    * DOCUMENT-FREQUENCY CAP on the postings: a shingle appearing in more
+    * than `dfCap` docs is excluded from candidate generation (its posting
+    * list alone would create O(df^2) pairs — the classic stop-shingle
+    * explosion), but verification runs on the FULL hashed shingle sets so
+    * surviving pairs carry exact (inter, na, nb). A qualifying pair is
+    * missed only if EVERY shared shingle is ultra-common (df > dfCap) —
+    * at threshold >= 0.8 that needs a near-duplicate doc made entirely of
+    * stop-shingles; documented recall condition, same trade every
+    * production near-dup pipeline makes. */
   def jaccardPairs(docs: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, threshold10: Int = 8,
       dfCap: Int = 1000): DataFrame = {

@@ -16,8 +16,9 @@ import graft.sim.Similarity
 import graft.text.TextOps
 
 /** [[CacheAudit]] over every operator family that caches (Knn/Delaunay
-  * and Flow audit in their own specs), plus the [[Owned]] contract and
-  * the source rule that keeps every cache behind it. */
+  * and Flow audit in their own specs), plus the [[Owned]] contract, the
+  * source rule that keeps every cache behind it, and the block cuts Knn
+  * and Flow leave once a caller releases their result. */
 class CacheAuditSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -190,5 +191,38 @@ class CacheAuditSpec extends AnyFunSuite {
       "deleteRows" -> (() =>
         IceLite.deleteRows(spark, table, Seq(ids.last).toDF("cellId"))),
       "deleteRange" -> (() => IceLite.deleteRange(spark, table, ids(1), ids(1))))
+  }
+
+  test("Knn and Flow leave no cache or block cut once the caller releases the result") {
+    import spark.implicits._
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    val sc = spark.sparkContext
+    // read the result, then release the cuts its plan reads, as a caller
+    // does; nothing else the call made may stay registered
+    def leftBehind(name: String, call: => DataFrame): Seq[String] = {
+      spark.catalog.clearCache()
+      val before = sc.getPersistentRDDs.keySet
+      val df = call
+      val rows = df.count()
+      df.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
+        .foreach(_.unpersist(blocking = true))
+      val kept = sc.getPersistentRDDs.keySet -- before
+      (if (rows == 0) Seq(s"$name returned no rows") else Nil) ++
+        (if (cache.isEmpty) Nil else Seq(s"$name left a Dataset cached")) ++
+        (if (kept.isEmpty) Nil else Seq(s"$name left block cuts ${kept.toSeq.sorted}"))
+    }
+    val dense = spark.createDataset(Synth.knnPoints.map(p => PtRec(p._1, p._2, p._3, p._4)))
+    // two far-apart points: nearly every cell escalates, to the exhaustive ring
+    val sparse = Seq(PtRec(0L, -4.75, 0.25, 1.0), PtRec(1L, 55.25, 29.75, 2.0)).toDS()
+    val ref = Synth.demRef
+    val tiles = TileOps.tileGrid(spark, ref, 6)(Synth.demValue)
+    val bad =
+      leftBehind("nearestBucketed", Knn.nearestBucketed(spark, dense, Synth.knnRef, res = 5)) ++
+        leftBehind("nearestBucketed escalating",
+          Knn.nearestBucketed(spark, sparse, Synth.knnRef, res = 5)) ++
+        leftBehind("flowAcc", Flow.flowAcc(tiles, ref, 6)) ++
+        leftBehind("downstream", Flow.downstream(tiles, ref, 6))
+    assert(bad.isEmpty, bad.mkString("; "))
   }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.LogicalRDD
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core._
 import graft.corpus.Synth
@@ -192,5 +193,79 @@ class KnnSpec extends AnyFunSuite {
       val (pid, v, _) = tree.nearest(ref.left + (c + 0.5), ref.top - (r + 0.5))
       assert(got((r, c)) == ((v, pid)), s"cell ($r,$c)")
     }
+  }
+
+  /** Linear-scan k nearest ordered by (d2, id): (id, v, d2). */
+  private def scanK(pts: Array[(Long, Double, Double, Double)], qx: Double, qy: Double,
+      k: Int): Array[(Long, Double, Double)] =
+    pts.map { case (id, x, y, v) => (id, v, (x - qx) * (x - qx) + (y - qy) * (y - qy)) }
+      .sortBy(t => (t._3, t._1)).take(k)
+
+  /** Random point sets: n = 0, 1, 2 and up to 2,000, with heavy ties
+    * (integer grids where many points are equidistant from a query, and
+    * duplicated coordinates under distinct ids). */
+  private def tiedPointSets(rnd: Random): Seq[Array[(Long, Double, Double, Double)]] = {
+    def grid(n: Int, side: Int) = Array.tabulate(n)(i =>
+      (i.toLong, rnd.nextInt(side).toDouble, rnd.nextInt(side).toDouble, rnd.nextDouble()))
+    def dups(n: Int) = {
+      val base = grid(math.max(1, n / 4), 12)
+      Array.tabulate(n) { i =>
+        val (_, x, y, _) = base(rnd.nextInt(base.length))
+        (i.toLong * 7 + 3, x, y, i * 0.5)
+      }
+    }
+    Seq(0, 1, 2, 3, 17, 200, 2000).flatMap(n => Seq(grid(n, 8), grid(n, 64), dups(n))) ++
+      Seq(Array.tabulate(400)(i => (i.toLong, (i % 20).toDouble, (i / 20).toDouble, i * 1.0)))
+  }
+
+  test("KdTree nearest, knn(k) and kNearest(k), k = 1..8, == linear scan under heavy ties") {
+    val rnd = new Random(23)
+    for (pts <- tiedPointSets(rnd)) {
+      val tree = KdTree.build(pts)
+      assert(tree.size == pts.length)
+      (0 until 60).foreach { _ =>
+        // half-integer and integer queries: many exact distance ties
+        val qx = rnd.nextInt(130) * 0.5 - 1.0
+        val qy = rnd.nextInt(130) * 0.5 - 1.0
+        for (k <- 1 to 8) {
+          val want = scanK(pts, qx, qy, k)
+          val got = tree.knn(qx, qy, k)
+          assert(got.sameElements(want), s"n=${pts.length} k=$k q=($qx,$qy)")
+          // k = 1 runs nearest, not knn
+          assert(tree.kNearest(qx, qy, k).sameElements(got), s"n=${pts.length} k=$k")
+        }
+        if (pts.nonEmpty)
+          assert(tree.nearest(qx, qy) == scanK(pts, qx, qy, 1).head, s"n=${pts.length}")
+      }
+    }
+  }
+
+  test("partial edge buckets: 300 x 170 at res 5 == brute; pass-1 cut is one row per bucket") {
+    import spark.implicits._
+    val ref = GridRef(ncols = 300, nrows = 170, xll = 0, yll = 0, cellsize = 1)
+    val rnd = new Random(31)
+    val pts = spark.createDataset((0L until 150L).map(i =>
+      PtRec(i, rnd.nextInt(600) * 0.5, rnd.nextInt(340) * 0.5, rnd.nextInt(1000) / 8.0)))
+    def byCell(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getInt(0), r.getInt(1)) -> r.toSeq.drop(2)).toMap
+    val nearest = Knn.nearestBucketed(spark, pts, ref, res = 5)
+    val near = byCell(nearest)
+    assert(near.size == ref.numCells)
+    assert(near == byCell(Knn.nearestBrute(spark, pts, ref)))
+    val idw = byCell(Knn.idwBucketed(spark, pts, ref, res = 5, k = 4))
+    assert(idw.size == ref.numCells)
+    assert(idw == byCell(Knn.idwBrute(spark, pts, ref, k = 4)))
+    // the result's pass-1 cut: one HitBlock per lattice bucket (10 x 6,
+    // the last column and row of buckets partial), together every cell
+    val cuts = nearest.queryExecution.logical.collect {
+      case r: LogicalRDD if r.output.exists(_.name == "proven") => r
+    }
+    assert(cuts.size == 1, cuts.map(_.output).mkString("; "))
+    assert(cuts.head.rdd.count() == 10 * 6)
+    assert(cuts.head.output.map(_.name) == Seq("row", "col", "v", "pid", "d2", "proven"))
+    val cells = cuts.head.rdd
+      .map(b => b.getArray(0).toIntArray().zip(b.getArray(1).toIntArray())).collect()
+    assert(cells.map(_.length).sum == ref.numCells)
+    assert(cells.flatten.toSet.size == ref.numCells)
   }
 }
