@@ -487,9 +487,12 @@ final case class Raster(tiles: Dataset[Tile], ref: GridRef, res: Int = 6) {
     // holes once on the base; a holey raster downsamples every level
     // directly from the base instead (ADVICE r4 #1).
     // (levels == 1 never downsamples, so skip the detection scan — the
-    // flag is only consulted by the level > 0 fold branch)
+    // flag is only consulted by the level > 0 fold branch). One full
+    // count, not a limit: a lazy cut in the caller's tiles is then filled
+    // whole by this first reader, and a hole-free raster is scanned whole
+    // either way.
     val hasNaN = levels > 1 &&
-      tiles.filter(_.payload.exists(_.isNaN)).limit(1).count() > 0
+      tiles.filter(_.payload.exists(_.isNaN)).count() > 0
     var cur = tiles
     var curRef = ref
     var exact = !hasNaN // dims even + hole-free -> progressive fold exact

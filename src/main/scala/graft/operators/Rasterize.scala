@@ -9,14 +9,16 @@ import graft.core._
   * `Raster.rasterize`, Raster.py:277-338), re-expressed as:
   *
   *   features --cell_cover generator--> (cell_id, feature)   [explode]
-  *        join/groupBy cell_id                               [shuffle]
-  *   per-cell burn kernel: pixel-center point-in-polygon,
-  *   features applied in seq order so the LATER feature wins [kernel]
+  *        groupBy cell_id (or (cell_id, band) when salted)    [shuffle]
+  *   per-cell-band block kernel: pixel-center point-in-polygon,
+  *   features applied in seq order so the LATER feature wins,
+  *   one NaN-padded pixel block out per (cell, band)          [kernel]
+  *   one posexplode of the blocks -> burned pixels            [explode]
   *
   * The shuffle key is the Z-ordered cell id, so at 100TB this is a
-  * range-bucketed exchange; with few features the cover side is tiny and
-  * broadcast; hot cells (many features) are handled by AQE + optional
-  * salting of the cover explode (`saltBuckets`).
+  * range-bucketed exchange; hot cells (many features) are split into row
+  * bands by `burnSalted`, its salt chosen by `autoSalt` /
+  * `autoSaltFromCover`.
   */
 object Rasterize {
 
@@ -45,12 +47,6 @@ object Rasterize {
     }
   }
 
-  /** Burn: group cover tasks by cell, run the pixel-center PIP kernel per
-    * cell window (clipped to grid), apply in seq order (last wins —
-    * Raster.py:330 sequential burn). Emits only burned pixels; the
-    * background stays NaN implicitly (out array init, Raster.py:330).
-    * The PIP is the same RefKernel.pointInPolygon the oracle uses — one
-    * boundary convention everywhere. */
   /** Collapse EXACT duplicates (same geometry + same burn value) to the
     * max-seq representative: under sequential last-wins, re-burning an
     * identical shape is a no-op, so this is semantics-preserving — and on
@@ -97,102 +93,115 @@ object Rasterize {
     }
   }
 
-  def burn(tasks: Dataset[CoverTask], ref: GridRef,
-      burnedPx: Option[LongAccumulator] = None): Dataset[CellPx] = {
-    import tasks.sparkSession.implicits._
-    val nrows = ref.nrows
-    val ncols = ref.ncols
-    tasks.groupByKey(_.cellId).flatMapGroups { (cid, it) =>
-      val fs = dedupTasks(it.toArray)
-      val (r0L, c0L, size) = CellId.pixelWindow(cid)
-      val r0 = r0L.toInt
-      val c0 = c0L.toInt
-      val r1 = math.min(nrows - 1, r0 + size - 1)
-      val c1 = math.min(ncols - 1, c0 + size - 1)
-      val h = r1 - r0 + 1
-      val w = c1 - c0 + 1
-      if (h <= 0 || w <= 0) Iterator.empty
+  /** One burned pixel block: rows [r0, r0 + v.length / w), columns
+    * [c0, c0 + w), row-major; NaN marks a pixel no feature burned. */
+  final case class PxBlock(r0: Int, c0: Int, w: Int, v: Array[Double])
+
+  /** The burn kernel, for band `s` of `salt` of one cell: features are
+    * applied in seq order, so the LATER feature wins (Raster.py:330
+    * sequential burn), each scanned only over its pixel window (bbox ∩
+    * cell window, clipped to the grid). The block spans the UNION of those
+    * windows — a feature rarely fills its cell — and band `s` is the s-th
+    * of `salt` contiguous row ranges of it, so one hot cell's work splits
+    * across `salt` tasks while every pixel still sees all its features.
+    * Emits at most one block, none for an empty band or one with nothing
+    * burned, and adds its burned-pixel count to `burnedPx` once. */
+  private[operators] def burnBand(cid: Long, tasks: Array[CoverTask], s: Int, salt: Int,
+      ref: GridRef, burnedPx: Option[LongAccumulator]): Iterator[PxBlock] = {
+    val fs = dedupTasks(tasks)
+    val (r0L, c0L, size) = CellId.pixelWindow(cid)
+    val r0 = r0L.toInt
+    val c0 = c0L.toInt
+    val r1 = math.min(ref.nrows - 1, r0 + size - 1)
+    val c1 = math.min(ref.ncols - 1, c0 + size - 1)
+    // pixel centers at left+(c+0.5)cs are >= xmin iff c >= (xmin-left)/cs-0.5
+    val wins = new Array[Int](fs.length * 4)
+    var ur0 = Int.MaxValue; var ur1 = Int.MinValue
+    var uc0 = Int.MaxValue; var uc1 = Int.MinValue
+    var fi = 0
+    while (fi < fs.length) {
+      val f = fs(fi)
+      var xmin = Double.MaxValue; var xmax = Double.MinValue
+      var ymin = Double.MaxValue; var ymax = Double.MinValue
+      var k = 0
+      while (k < f.xs.length) {
+        val x = f.xs(k); val y = f.ys(k)
+        if (x < xmin) xmin = x; if (x > xmax) xmax = x
+        if (y < ymin) ymin = y; if (y > ymax) ymax = y
+        k += 1
+      }
+      val fr0 = math.max(r0, math.ceil((ref.top - ymax) / ref.cellsize - 0.5).toInt)
+      val fr1 = math.min(r1, math.floor((ref.top - ymin) / ref.cellsize - 0.5).toInt)
+      val fc0 = math.max(c0, math.ceil((xmin - ref.left) / ref.cellsize - 0.5).toInt)
+      val fc1 = math.min(c1, math.floor((xmax - ref.left) / ref.cellsize - 0.5).toInt)
+      wins(fi * 4) = fr0; wins(fi * 4 + 1) = fr1
+      wins(fi * 4 + 2) = fc0; wins(fi * 4 + 3) = fc1
+      if (fr0 <= fr1 && fc0 <= fc1) {
+        ur0 = math.min(ur0, fr0); ur1 = math.max(ur1, fr1)
+        uc0 = math.min(uc0, fc0); uc1 = math.max(uc1, fc1)
+      }
+      fi += 1
+    }
+    val uh = ur1.toLong - ur0 + 1
+    val b0 = ur0 + (uh * s / salt).toInt
+    val b1 = ur0 + (uh * (s + 1) / salt).toInt - 1
+    if (ur0 > ur1 || uc0 > uc1 || b0 > b1) Iterator.empty
+    else {
+      val bw = uc1 - uc0 + 1
+      val vals = Array.fill((b1 - b0 + 1) * bw)(Double.NaN)
+      val scratch = new Array[Double](fs.map(_.xs.length).max)
+      fi = 0
+      while (fi < fs.length) {
+        val f = fs(fi)
+        val fr1 = math.min(b1, wins(fi * 4 + 1))
+        var r = math.max(b0, wins(fi * 4))
+        while (r <= fr1) {
+          val py = ref.top - (r + 0.5) * ref.cellsize
+          val rowBase = (r - b0) * bw - uc0
+          scanRow(f.xs, f.ys, py, ref.left, ref.cellsize, wins(fi * 4 + 2),
+            wins(fi * 4 + 3), scratch)(c => vals(rowBase + c) = f.value)
+          r += 1
+        }
+        fi += 1
+      }
+      var n = 0L
+      var i = 0
+      while (i < vals.length) { if (!vals(i).isNaN) n += 1; i += 1 }
+      if (n == 0) Iterator.empty
       else {
-        // per-feature pixel windows (bbox ∩ cell window): pixel centers at
-        // left+(c+0.5)cs are >= xmin iff c >= (xmin-left)/cs-0.5. The burn
-        // buffer is allocated over the UNION of these windows, not the full
-        // cell — a feature rarely fills its cell, so this cuts the 512KB
-        // cell buffer (pure allocation-bandwidth, the local-mode scaling
-        // ceiling) to the burnable sub-window.
-        val wins = new Array[Int](fs.length * 4)
-        var ur0 = Int.MaxValue; var ur1 = Int.MinValue
-        var uc0 = Int.MaxValue; var uc1 = Int.MinValue
-        var fi = 0
-        while (fi < fs.length) {
-          val f = fs(fi)
-          var xmin = Double.MaxValue; var xmax = Double.MinValue
-          var ymin = Double.MaxValue; var ymax = Double.MinValue
-          var k = 0
-          while (k < f.xs.length) {
-            val x = f.xs(k); val y = f.ys(k)
-            if (x < xmin) xmin = x; if (x > xmax) xmax = x
-            if (y < ymin) ymin = y; if (y > ymax) ymax = y
-            k += 1
-          }
-          val fr0 = math.max(r0, math.ceil((ref.top - ymax) / ref.cellsize - 0.5).toInt)
-          val fr1 = math.min(r1, math.floor((ref.top - ymin) / ref.cellsize - 0.5).toInt)
-          val fc0 = math.max(c0, math.ceil((xmin - ref.left) / ref.cellsize - 0.5).toInt)
-          val fc1 = math.min(c1, math.floor((xmax - ref.left) / ref.cellsize - 0.5).toInt)
-          wins(fi * 4) = fr0; wins(fi * 4 + 1) = fr1
-          wins(fi * 4 + 2) = fc0; wins(fi * 4 + 3) = fc1
-          if (fr0 <= fr1 && fc0 <= fc1) {
-            if (fr0 < ur0) ur0 = fr0
-            if (fr1 > ur1) ur1 = fr1
-            if (fc0 < uc0) uc0 = fc0
-            if (fc1 > uc1) uc1 = fc1
-          }
-          fi += 1
-        }
-        if (ur0 > ur1 || uc0 > uc1) Iterator.empty
-        else {
-          val bw = uc1 - uc0 + 1
-          val bh = ur1 - ur0 + 1
-          val vals = Array.fill(bh * bw)(Double.NaN)
-          var maxV = 0
-          fi = 0
-          while (fi < fs.length) {
-            val l = fs(fi).xs.length
-            if (l > maxV) maxV = l
-            fi += 1
-          }
-          val scratch = new Array[Double](maxV)
-          fi = 0
-          while (fi < fs.length) {
-            val f = fs(fi)
-            val fr1 = wins(fi * 4 + 1)
-            val fc0 = wins(fi * 4 + 2)
-            val fc1 = wins(fi * 4 + 3)
-            var r = wins(fi * 4)
-            while (r <= fr1) {
-              val py = ref.top - (r + 0.5) * ref.cellsize
-              val rowBase = (r - ur0) * bw - uc0
-              scanRow(f.xs, f.ys, py, ref.left, ref.cellsize, fc0, fc1,
-                scratch)(c => vals(rowBase + c) = f.value)
-              r += 1
-            }
-            fi += 1
-          }
-          // lazy emission: no intermediate CellPx array per cell
-          val emit = Iterator.range(0, bh * bw)
-            .filter(i => !vals(i).isNaN)
-            .map(i => CellPx(ur0 + i / bw, uc0 + i % bw, vals(i)))
-          burnedPx.fold(emit)(acc => emit.map { p => acc.add(1L); p })
-        }
+        burnedPx.foreach(_.add(n))
+        Iterator.single(PxBlock(b0, uc0, bw, vals))
       }
     }
   }
+
+  /** The per-pixel view of burned blocks, as ONE Catalyst step: the
+    * explode, the NaN filter and the index arithmetic run in generated
+    * code, so a count, aggregate or join over the burn never builds a
+    * pixel object. */
+  private def pixels(blocks: Dataset[PxBlock]): Dataset[CellPx] = {
+    import blocks.sparkSession.implicits._
+    blocks.select($"r0", $"c0", $"w", posexplode($"v").as(Seq("i", "v")))
+      .where(!isnan($"v"))
+      .select(($"r0" + expr("CAST(i DIV w AS INT)")).as("row"),
+        ($"c0" + $"i" % $"w").as("col"), $"v")
+      .as[CellPx]
+  }
+
+  /** Burn: group cover tasks by cell and run the kernel once per cell.
+    * Emits only burned pixels; the background stays NaN implicitly (out
+    * array init, Raster.py:330). The crossing test is the same one
+    * RefKernel.pointInPolygon makes — one boundary convention everywhere. */
+  def burn(tasks: Dataset[CoverTask], ref: GridRef,
+      burnedPx: Option[LongAccumulator] = None): Dataset[CellPx] =
+    burnSalted(tasks, ref, 1, burnedPx)
 
   /** Skew statistic -> salt factor: max number of DISTINCT (value,
     * geometry) tasks landing on one cell (exact duplicates collapse in the
     * kernel, so they are not skew), computed driver-side from the feature
     * seq — no extra Spark job. A cell with F distinct features costs
     * F x cellArea in the PIP kernel; salting by ~F/8 splits that one hot
-    * task into row-interleaved shards while last-wins stays exact. */
+    * task into contiguous row bands while last-wins stays exact. */
   private[operators] def autoSalt(features: Seq[Feature], ref: GridRef,
       res: Int, useAttr: Boolean): Int = {
     // dedup the DISTINCT (value, geometry) tasks ONCE — O(#features)
@@ -268,78 +277,27 @@ object Rasterize {
     burnSalted(coverDs(features, ref, res, useAttr), ref, salt, burnedPx)
   }
 
-  /** Explicitly SALTED burn for hot cells (many features on one cell id —
-    * the skew the north rule calls out): every cover task is replicated to
-    * `salt` sub-keys and each (cell, salt) group burns only the pixel rows
-    * with `row % salt == salt_id`, so one hot cell's work spreads across
-    * `salt` tasks while last-wins stays exact (each pixel still sees ALL
-    * its features, in seq order). salt=1 degenerates to the plain burn. */
+  /** SALTED burn for hot cells (many features on one cell id — the skew
+    * the north rule calls out): every cover task is replicated to `salt`
+    * sub-keys and each (cell, band) group burns one contiguous row band of
+    * the cell's burn window, so one hot cell's work spreads across `salt`
+    * tasks while last-wins stays exact (each pixel still sees ALL its
+    * features, in seq order). salt = 1 is the plain burn: one group per
+    * cell, no replication. */
   def burnSalted(tasks: Dataset[CoverTask], ref: GridRef, salt: Int,
       burnedPx: Option[LongAccumulator] = None): Dataset[CellPx] = {
     import tasks.sparkSession.implicits._
-    if (salt <= 1) burn(tasks, ref, burnedPx)
-    else {
-      val nrows = ref.nrows
-      val ncols = ref.ncols
-      val salted = tasks.flatMap(t => (0 until salt).iterator.map(s => (s, t)))
-      salted.groupByKey { case (s, t) => (t.cellId, s) }.flatMapGroups {
-        (key: (Long, Int), it: Iterator[(Int, CoverTask)]) =>
-          val (cid, s) = key
-          val fs = dedupTasks(it.map(_._2).toArray)
-          val (r0L, c0L, size) = CellId.pixelWindow(cid)
-          val r0 = r0L.toInt
-          val c0 = c0L.toInt
-          val r1 = math.min(nrows - 1, r0 + size - 1)
-          val c1 = math.min(ncols - 1, c0 + size - 1)
-          if (r1 < r0 || c1 < c0) Iterator.empty
-          else {
-            val w = c1 - c0 + 1
-            // bounding boxes once per feature, not per pixel row (burn()
-            // does the same ahead of its pixel loops)
-            val bbox = fs.map { f =>
-              var xmin = Double.MaxValue; var xmax = Double.MinValue
-              var ymin = Double.MaxValue; var ymax = Double.MinValue
-              var k = 0
-              while (k < f.xs.length) {
-                val x = f.xs(k); val y = f.ys(k)
-                if (x < xmin) xmin = x; if (x > xmax) xmax = x
-                if (y < ymin) ymin = y; if (y > ymax) ymax = y
-                k += 1
-              }
-              (xmin, xmax, ymin, ymax)
-            }
-            val out = Array.newBuilder[CellPx]
-            val scratch = new Array[Double](
-              if (fs.isEmpty) 0 else fs.iterator.map(_.xs.length).max)
-            var r = r0 + ((s - (r0 % salt)) % salt + salt) % salt // first row with r % salt == s
-            while (r <= r1) {
-              val rowVals = Array.fill(w)(Double.NaN)
-              var fi = 0
-              while (fi < fs.length) {
-                val f = fs(fi)
-                val (xmin, xmax, ymin, ymax) = bbox(fi)
-                val py = ref.top - (r + 0.5) * ref.cellsize
-                if (py >= ymin && py <= ymax) {
-                  val fc0 = math.max(c0, math.ceil((xmin - ref.left) / ref.cellsize - 0.5).toInt)
-                  val fc1 = math.min(c1, math.floor((xmax - ref.left) / ref.cellsize - 0.5).toInt)
-                  scanRow(f.xs, f.ys, py, ref.left, ref.cellsize, fc0, fc1,
-                    scratch)(c => rowVals(c - c0) = f.value)
-                }
-                fi += 1
-              }
-              var c = 0
-              while (c < w) {
-                if (!rowVals(c).isNaN) out += CellPx(r, c0 + c, rowVals(c))
-                c += 1
-              }
-              r += salt
-            }
-            val emit = out.result()
-            burnedPx.foreach(_.add(emit.length.toLong))
-            emit.iterator
-          }
-      }
-    }
+    pixels(
+      if (salt <= 1)
+        tasks.groupByKey(_.cellId).flatMapGroups { (cid, it) =>
+          burnBand(cid, it.toArray, 0, 1, ref, burnedPx)
+        }
+      else
+        tasks.flatMap(t => (0 until salt).iterator.map(s => (s, t)))
+          .groupByKey { case (s, t) => (t.cellId, s) }
+          .flatMapGroups { (key: (Long, Int), it: Iterator[(Int, CoverTask)]) =>
+            burnBand(key._1, it.map(_._2).toArray, key._2, salt, ref, burnedPx)
+          })
   }
 
   /** Burned-pixel DataFrame joined back as a mask/edit layer: the tutorial

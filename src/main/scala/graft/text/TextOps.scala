@@ -135,9 +135,12 @@ object TextOps {
       dfCap: Int = 1000): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
+    // an eager cut: the df-cap aggregate, both candidate self-join sides
+    // and both verify joins read it, and AQE runs their map stages at the
+    // same time, so a lazy cut had its blocks filled by two of them
     val sets = minhashSignatures(docs, idCol, textCol, shingleN, k = 0)
       .toDF("doc_id", "hs", "sig").drop("sig")
-      .localCheckpoint(false)
+      .localCheckpoint(true)
     val postings = sets.select($"doc_id", explode($"hs").as("h"))
     val rare = postings.groupBy($"h").count()
       .filter($"count" <= dfCap).select($"h")

@@ -179,6 +179,24 @@ class RasterApiSpec extends AnyFunSuite {
     }
   }
 
+  test("tilePyramidPng's NaN probe fills a lazy cut of the caller's tiles in its first job") {
+    for (holey <- Seq(false, true)) {
+      val g = Raster.fromGrid(spark, GridRef(128, 64, 0, 0, 1), 5)((r, c) =>
+        if (holey && (r * 128 + c) % 23 == 5) Double.NaN
+        else ((r * 7 + c * 3) % 97).toDouble)
+      val cut = g.tiles.localCheckpoint(false)
+      val parts = cut.queryExecution.toRdd.getNumPartitions
+      val (levels, starts) = org.apache.spark.JobStarts(spark.sparkContext) {
+        Raster(cut, g.ref, 5).tilePyramidPng(2, 0, 97).collect().map(_.getLong(0))
+      }
+      val jobs = starts.map(_.stageInfos.map(_.numTasks))
+      // 4 x 2 base tiles of 32 px; level 1 is 64 x 32 px: 2 x 1 tiles
+      assert(levels.count(_ == 0L) == 8 && levels.count(_ == 1L) == 2, s"holey=$holey")
+      // the probe is the cut's first reader: one task per partition
+      assert(jobs.head == Seq(parts), s"holey=$holey: $jobs")
+    }
+  }
+
   test("resample family wiring: cellsize, window agg, convolution kernels") {
     val half = dem.resampleToCellsize(10.0, "nearest")
     assert(half.ref.cellsize == 10.0)
