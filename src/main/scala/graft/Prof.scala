@@ -18,8 +18,11 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   *     for each named gated query (every query when none are named) at
   *     SPARK_GRAFT_CPUS cores (default 32): one untimed warm pass, then
   *     `reps` timed passes. Prints every streaming micro-batch's progress,
-  *     every Spark job of the last pass (wall, description), the pass
-  *     times and the query's `.explain("formatted")` plan.
+  *     every Spark job of the last pass, the pass times and the query's
+  *     `.explain("formatted")` plan. A job line reads
+  *       job <id> <wall>s tasks=<n> busy=<task-seconds>s occ=<occupancy> <description>
+  *     where occupancy = busy / (wall x cores): a job that keeps only two
+  *     of four cores busy reads at most 0.50.
   */
 object Prof {
 
@@ -51,10 +54,15 @@ object Prof {
     s.stop()
   }
 
-  /** Wall time and description of each Spark job while enabled. */
-  private final class JobLog extends SparkListener {
-    case class J(id: Int, t0: Long, desc: String)
+  /** Wall time, task count, busy task time, occupancy on `cores` and
+    * description of each Spark job while enabled. */
+  private final class JobLog(cores: Int) extends SparkListener {
+    case class J(id: Int, t0: Long, desc: String) {
+      @volatile var tasks = 0
+      @volatile var busyMs = 0L
+    }
     private val open = scala.collection.concurrent.TrieMap[Int, J]()
+    private val jobOfStage = scala.collection.concurrent.TrieMap[Int, Int]()
     private val executions = scala.collection.concurrent.TrieMap[String, String]()
     val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     @volatile var enabled = false
@@ -74,12 +82,23 @@ object Prof {
         .map(_.replaceAll("\\s+", " ").trim).find(_.nonEmpty)
         .getOrElse(js.stageInfos.maxByOption(_.stageId).fold("")(_.name))
       open.put(js.jobId, J(js.jobId, System.nanoTime(), desc))
-      ()
+      js.stageIds.foreach(jobOfStage.put(_, js.jobId))
     }
+    // the listener bus delivers events one at a time, so the counters of
+    // one job are never updated concurrently
+    override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
+      jobOfStage.get(te.stageId).flatMap(open.get).foreach { j =>
+        j.tasks += 1
+        j.busyMs += te.taskInfo.duration
+      }
     override def onJobEnd(je: SparkListenerJobEnd): Unit = if (enabled) {
       open.remove(je.jobId).foreach { j =>
-        lines.add(f"    job ${j.id}%4d ${secsSince(j.t0)}%7.3fs  ${j.desc}")
+        val wall = secsSince(j.t0)
+        val busy = j.busyMs / 1e3
+        val occ = if (wall > 0) busy / (wall * cores) else 0.0
+        lines.add(f"    job ${j.id}%4d $wall%7.3fs  tasks=${j.tasks}%-4d busy=$busy%7.3fs occ=$occ%.2f  ${j.desc}")
       }
+      jobOfStage.filterInPlace((_, job) => job != je.jobId)
     }
   }
 
@@ -106,7 +125,7 @@ object Prof {
     val picked = SparkEntry.select(names)
     val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
       coalesce = true)
-    val jobs = new JobLog
+    val jobs = new JobLog(spark.sparkContext.defaultParallelism)
     spark.sparkContext.addSparkListener(jobs)
     spark.streams.addListener(StreamLog)
     picked.foreach { g =>

@@ -153,8 +153,9 @@ object IceLite {
     * crash between lineage commits for tests. Returns the snapshot id
     * once ALL buckets committed + metadata flipped.
     *
-    * Scale shape: 2 jobs total regardless of bucket count (cell range,
-    * write). Bucketing is on the Z-order cell id's high bits, so each
+    * Scale shape: 3 jobs regardless of bucket count: the cell-range
+    * aggregate (two jobs under AQE: its partial stage, then the final
+    * one) and the write. Bucketing is on the Z-order cell id's high bits, so each
     * bucket is a contiguous cell range — manifest min/max stats stay
     * tight and reads prune by range. */
   def commitResumable(spark: SparkSession, tiles: Dataset[Tile], table: String,
@@ -215,9 +216,20 @@ object IceLite {
     * the values of the very rows written. A separate aggregate pass over
     * `frame` computes them instead when `frame` also holds buckets an
     * earlier attempt wrote (`resumed`: the manifest needs their stats
-    * too), when `rowsCommitted` counts the rows, past 64 buckets (4
+    * too), past 64 buckets (4
     * aggregates per bucket stops being a sane plan) or when the metrics
-    * do not arrive. */
+    * do not arrive. A `rowsCommitted` accumulator gets the total of the
+    * written buckets' row counts, added once on the driver from these
+    * stats (so a retried task does not count its rows twice).
+    *
+    * The payload's element column is written without dictionary
+    * encoding (`parquet.enable.dictionary#payload.list.element=false`);
+    * every other column keeps its dictionary. Raster payloads are
+    * continuous values whose dictionary overflows on every page, so
+    * parquet falls back to PLAIN anyway and the attempt was pure CPU
+    * (on a 4-core host a 64-tile, 24 MB bucketed write took 1.02 s
+    * without it and 1.82 s with it, for the same bytes). The cost: a low-cardinality payload (a mask, a
+    * class raster) loses the dictionary's compression. */
   private def writeBuckets(spark: SparkSession, table: String, snap: Long,
       frame: DataFrame, todo: Seq[Int], op: String, resumed: Boolean = false,
       rowsCommitted: Option[LongAccumulator] = None): Map[Int, Stats] = {
@@ -225,12 +237,10 @@ object IceLite {
     val sc = spark.sparkContext
     // the checksum term is a JVM udf: Long wraparound (the SQL expression
     // would throw under ANSI overflow on high Z ids)
-    val term = udf { (cid: Long, n: Int) =>
-      rowsCommitted.foreach(_.add(1L)); cid * 31 + n }
+    val term = udf { (cid: Long, n: Int) => cid * 31 + n }
     def withTerm(df: DataFrame) =
       df.withColumn("chk_term", term($"cellId", size($"payload")))
-    val observed = !resumed && rowsCommitted.isEmpty && todo.nonEmpty &&
-      todo.size <= 64
+    val observed = !resumed && todo.nonEmpty && todo.size <= 64
     val obs = Observation()
     if (todo.nonEmpty) {
       val rows = if (resumed) frame.filter($"bucket".isInCollection(todo)) else frame
@@ -249,6 +259,7 @@ object IceLite {
       sc.setJobDescription(s"icelite $op $table@$snap write")
       toWrite.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
+        .option("parquet.enable.dictionary#payload.list.element", "false")
         .partitionBy("bucket")
         .parquet(s"$table/data/$snap")
     }
@@ -268,6 +279,7 @@ object IceLite {
           .map { case (b, n, x, lo, hi) => b -> Stats(n, x, lo, hi) }.toMap
       }
     sc.setJobDescription(null)
+    rowsCommitted.foreach(_.add(todo.iterator.map(b => stats.get(b).fold(0L)(_.rows)).sum))
     stats.withDefaultValue(NoRows)
   }
 

@@ -290,29 +290,37 @@ object GeoTiffReader {
   /** Distributed ingest: file discovery (no content read) -> header pass
     * -> tile-aligned ROW-BAND tasks, each decoding only its strip/tile
     * byte ranges via [[readRowBand]] -> tile split (same contract as
-    * AscIO.readTiles). One large file spreads across ceil(nrows/band)
-    * tasks instead of one task decoding the whole raster — the windowed
-    * reader IS the task body, so a large strip-organized file (<= 2 GiB
-    * each — the classic-TIFF bound [[mmap]] enforces; a 100 TB corpus is
-    * MANY such files, globbed here) never decodes whole in one
-    * executor. Paths are local/POSIX (this
-    * engine's FS); on a cluster store the identical two-pass shape runs
-    * on ranged opens. Bands are tile-aligned (bandTiles * 2^res source
-    * rows) so the emitted tile set is byte-identical to a whole-file
-    * decode. */
+    * AscIO.readTiles). The windowed reader IS the task body, so a large
+    * strip-organized file (<= 2 GiB each — the classic-TIFF bound
+    * [[mmap]] enforces; a 100 TB corpus is MANY such files, globbed
+    * here) never decodes whole in one executor. Paths are local/POSIX
+    * (this engine's FS); on a cluster store the identical two-pass shape
+    * runs on ranged opens.
+    *
+    * Band rule: a file of `T` tile rows is cut into bands of
+    * `clamp(ceil(T / defaultParallelism), 1, bandTiles)` tile rows, so it
+    * yields at least `min(T, defaultParallelism)` bands and a small file
+    * still decodes (and everything downstream of it runs) on every core.
+    * `bandTiles` is only the cap: the most tile rows one task decodes at
+    * once, i.e. its decode memory. Bands are tile-aligned, so the emitted
+    * tile set is byte-identical to a whole-file decode. */
   def readTiles(spark: SparkSession, pathGlob: String, res: Int,
       bandTiles: Int = 4): Dataset[(String, Tile)] = {
     import spark.implicits._
     require(bandTiles > 0, s"bandTiles must be positive, got $bandTiles")
     val size = 1 << res
-    val bandRows = bandTiles * size
+    val parallelism = math.max(1, spark.sparkContext.defaultParallelism)
+    // (path, band index, r0, r1ex)
     val bands = spark.read.format("binaryFile").load(pathGlob)
       .select("path").as[String]
       .flatMap { uri =>
         val p = toLocalPath(uri)
         val nrows = parseHeader(mmap(p)).nrows
+        val tileRows = (nrows + size - 1) / size
+        val bandRows = size * math.min(bandTiles,
+          math.max(1, (tileRows + parallelism - 1) / parallelism))
         (0 until nrows by bandRows).iterator.map(r0 =>
-          (p, r0, math.min(nrows, r0 + bandRows)))
+          (p, r0 / bandRows, r0, math.min(nrows, r0 + bandRows)))
       }
     // Exact spread of decode tasks: a column repartition here is a
     // shuffle of tiny descriptors that AQE coalesces by BYTES into one
@@ -321,9 +329,8 @@ object GeoTiffReader {
     // partitions (guaranteed: k bands -> min(k, N) tasks) and offsets
     // different files by their path hash so a glob of many small
     // single-band files also spreads.
-    val parallelism = math.max(1, spark.sparkContext.defaultParallelism)
     val spread = bands.rdd
-      .map(b => ((b._1.hashCode, b._2 / bandRows), b))
+      .map { case (p, idx, r0, r1ex) => ((p.hashCode, idx), (p, r0, r1ex)) }
       .partitionBy(new org.apache.spark.Partitioner {
         def numPartitions: Int = parallelism
         def getPartition(key: Any): Int = key match {

@@ -77,9 +77,14 @@ object StreamOps {
     * commits and planning per drain and emits nothing. Output is
     * bit-identical either way (the oracle gates it); only the drain's
     * batch count changes. Watermark-lagged consumers (s1/s5/s6/s8 paths)
-    * must NOT use this. */
+    * must NOT use this. The conf is session-global, so the drain refuses
+    * to run while any other stream of the session is active: that stream
+    * would inherit the toggle for as long as the drain runs. */
   private def withoutNoDataBatch[A](spark: SparkSession)(f: => A): A = {
     val key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    require(spark.streams.active.isEmpty,
+      s"StreamOps: a no-data-batch-free drain sets the session-global $key; " +
+        s"stop the session's active streams first (${spark.streams.active.map(_.name).mkString(", ")})")
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, "false")
     try f finally prev match {

@@ -271,33 +271,52 @@ class SourcesSpec extends AnyFunSuite {
 
   test("distributed GeoTIFF ingest: multi-strip file decodes across >1 task; tiles == whole-file decode") {
     import spark.implicits._
-    val ref = Synth.demRef // 203 x 154, strip-organized by default
-    val p = Files.createTempDirectory("gtiffband").resolve("band.tif").toString
-    val data = Array.tabulate(ref.nrows * ref.ncols)(i =>
-      Synth.demValue(i / ref.ncols, i % ref.ncols))
-    GeoTiffWriter.write(p, ref, data)
-    // res 5 (32-px tiles), 2-tile bands -> 64-row bands -> 4 band tasks
-    val tiles = GeoTiffReader.readTiles(spark, p, res = 5, bandTiles = 2)
-    val partIds = tiles.mapPartitions { it =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      if (it.nonEmpty) Iterator.single(pid) else Iterator.empty
-    }.distinct().collect()
-    assert(partIds.length > 1,
-      s"one file must decode across >1 task, got partitions ${partIds.toSeq}")
-    val collected = tiles.collect()
-    // each tile exactly once, full cover
-    val ids = collected.map(_._2.cellId)
-    assert(ids.length == ids.distinct.length)
-    assert(ids.length == ((ref.nrows + 31) / 32) * ((ref.ncols + 31) / 32))
-    // stitched tiles == whole-file decode, bit for bit (incl. NaN holes)
-    val whole = GeoTiffReader.read(p)
-    val rebuilt = Array.fill(ref.nrows * ref.ncols)(Double.NaN)
-    collected.foreach { case (_, t) =>
-      for (r <- 0 until t.h; c <- 0 until t.w)
-        rebuilt((t.row0 + r) * ref.ncols + (t.col0 + c)) = t.payload(r * t.w + c)
+    val parallelism = spark.sparkContext.defaultParallelism
+    /** Distinct non-empty partitions of `tiles`, after checking that they
+      * hold each tile of the file at `p` once and stitch back into its
+      * whole-file decode bit for bit (incl. NaN holes). */
+    def decodePartitions(p: String, ref: GridRef,
+        tiles: org.apache.spark.sql.Dataset[(String, Tile)]): Int = {
+      val partIds = tiles.mapPartitions { it =>
+        val pid = org.apache.spark.TaskContext.getPartitionId()
+        if (it.nonEmpty) Iterator.single(pid) else Iterator.empty
+      }.distinct().collect()
+      val collected = tiles.collect()
+      // each tile exactly once, full cover
+      val ids = collected.map(_._2.cellId)
+      assert(ids.length == ids.distinct.length)
+      assert(ids.length == ((ref.nrows + 31) / 32) * ((ref.ncols + 31) / 32))
+      val whole = GeoTiffReader.read(p)
+      val rebuilt = Array.fill(ref.nrows * ref.ncols)(Double.NaN)
+      collected.foreach { case (_, t) =>
+        for (r <- 0 until t.h; c <- 0 until t.w)
+          rebuilt((t.row0 + r) * ref.ncols + (t.col0 + c)) = t.payload(r * t.w + c)
+      }
+      assert(java.util.Arrays.equals(rebuilt, whole.data))
+      assert(GeoTiffReader.readHeaderRef(p) == whole.ref)
+      partIds.length
     }
-    assert(java.util.Arrays.equals(rebuilt, whole.data))
-    assert(GeoTiffReader.readHeaderRef(p) == whole.ref)
+    def write(ref: GridRef, name: String): String = {
+      val p = Files.createTempDirectory("gtiffband").resolve(name).toString
+      GeoTiffWriter.write(p, ref, Array.tabulate(ref.nrows * ref.ncols)(i =>
+        Synth.demValue(i / ref.ncols, i % ref.ncols)))
+      p
+    }
+    val ref = Synth.demRef // 203 x 154, strip-organized by default
+    val p = write(ref, "band.tif")
+    // res 5 (32-px tiles), 2-tile bands -> 64-row bands -> 4 band tasks
+    val capped = decodePartitions(p, ref, GeoTiffReader.readTiles(spark, p, res = 5, bandTiles = 2))
+    assert(capped > 1, s"one file must decode across >1 task, got $capped partitions")
+    // default arguments: fewer tile rows than 4 x parallelism still fill
+    // min(tileRows, parallelism) tasks (7 tile rows here; 3 below)
+    val tileRows = (ref.nrows + 31) / 32
+    assert(tileRows < 4 * parallelism)
+    assert(decodePartitions(p, ref, GeoTiffReader.readTiles(spark, p, res = 5)) ==
+      math.min(tileRows, parallelism))
+    val short = ref.copy(nrows = 80) // 3 tile rows, the last one partial
+    val ps = write(short, "short.tif")
+    assert(decodePartitions(ps, short, GeoTiffReader.readTiles(spark, ps, res = 5)) ==
+      math.min(3, parallelism))
   }
 
   test("MJPEG-AVI export (make_mp4 analog): RIFF structure + every frame ImageIO-decodable") {

@@ -166,6 +166,22 @@ class StreamOpsSpec extends AnyFunSuite {
     assert(got != agg(staged))
   }
 
+  test("a no-data-batch-free drain refuses to run beside an active stream; the conf is untouched") {
+    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val before = spark.conf.getOption(key)
+    val other = spark.readStream.format("rate").option("rowsPerSecond", 1).load()
+      .writeStream.format("noop").queryName("bystander").start()
+    try {
+      val dir = Files.createTempDirectory("stream-ops-guard").toString
+      val e = intercept[IllegalArgumentException] {
+        StreamOps.streamDedup(spark, dir, dir + "/ckpt", "guardtest")
+      }
+      assert(e.getMessage.contains(key) && e.getMessage.contains("bystander"))
+      assert(spark.conf.getOption(key) == before)
+      assert(spark.streams.active.map(_.name).toSeq == Seq("bystander"))
+    } finally other.stop()
+  }
+
   test("foreachBatch image curation == batch quality kernel; one sink dir per batch") {
     import spark.implicits._
     import graft.codecs.ImageCodec
