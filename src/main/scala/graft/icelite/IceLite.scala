@@ -155,9 +155,9 @@ object IceLite {
     *
     * Scale shape: 3 jobs regardless of bucket count: the cell-range
     * aggregate (two jobs under AQE: its partial stage, then the final
-    * one) and the write. Bucketing is on the Z-order cell id's high bits, so each
-    * bucket is a contiguous cell range — manifest min/max stats stay
-    * tight and reads prune by range. */
+    * one) and the write. Bucketing is on the Z-order cell id's high
+    * bits, so each bucket is a contiguous cell range — manifest min/max
+    * stats stay tight and reads prune by range. */
   def commitResumable(spark: SparkSession, tiles: Dataset[Tile], table: String,
       buckets: Int, snap: Long, failAtBucket: Option[Int] = None,
       rowsCommitted: Option[LongAccumulator] = None,
@@ -208,6 +208,10 @@ object IceLite {
       maxCell: Long)
   private val NoRows = Stats(0L, 0L, 0L, 0L)
 
+  /** Largest dictionary one column chunk of a data file keeps before it
+    * falls back to PLAIN: 8192 doubles. */
+  private val DictionaryBytes = 64L << 10
+
   /** THE bucketed write: writes the rows of the `bucket`-partitioned
     * `frame` whose bucket is in `todo` to `data/<snap>` (dynamic partition
     * overwrite replaces ONLY those bucket dirs) and returns each bucket's
@@ -216,20 +220,19 @@ object IceLite {
     * the values of the very rows written. A separate aggregate pass over
     * `frame` computes them instead when `frame` also holds buckets an
     * earlier attempt wrote (`resumed`: the manifest needs their stats
-    * too), past 64 buckets (4
-    * aggregates per bucket stops being a sane plan) or when the metrics
-    * do not arrive. A `rowsCommitted` accumulator gets the total of the
-    * written buckets' row counts, added once on the driver from these
-    * stats (so a retried task does not count its rows twice).
+    * too), past 64 buckets (4 aggregates per bucket stops being a sane
+    * plan) or when the metrics do not arrive. A `rowsCommitted`
+    * accumulator gets the total of the written buckets' row counts,
+    * added once on the driver from these stats (so a retried task does
+    * not count its rows twice).
     *
-    * The payload's element column is written without dictionary
-    * encoding (`parquet.enable.dictionary#payload.list.element=false`);
-    * every other column keeps its dictionary. Raster payloads are
-    * continuous values whose dictionary overflows on every page, so
-    * parquet falls back to PLAIN anyway and the attempt was pure CPU
-    * (on a 4-core host a 64-tile, 24 MB bucketed write took 1.02 s
-    * without it and 1.82 s with it, for the same bytes). The cost: a low-cardinality payload (a mask, a
-    * class raster) loses the dictionary's compression. */
+    * Every column's dictionary is capped at [[DictionaryBytes]] per
+    * column chunk (parquet's default is 1 MiB). A continuous payload (a
+    * DEM) overflows any dictionary and is written PLAIN in the end; with
+    * the cap it gives up after some thousand values instead of hashing
+    * a hundred thousand first. A payload of at most 8192 distinct values
+    * per file (a mask, a class raster, an image corpus's pixels) still
+    * fits and keeps the dictionary's compression. */
   private def writeBuckets(spark: SparkSession, table: String, snap: Long,
       frame: DataFrame, todo: Seq[Int], op: String, resumed: Boolean = false,
       rowsCommitted: Option[LongAccumulator] = None): Map[Int, Stats] = {
@@ -259,7 +262,7 @@ object IceLite {
       sc.setJobDescription(s"icelite $op $table@$snap write")
       toWrite.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
-        .option("parquet.enable.dictionary#payload.list.element", "false")
+        .option("parquet.dictionary.page.size", DictionaryBytes)
         .partitionBy("bucket")
         .parquet(s"$table/data/$snap")
     }
@@ -279,7 +282,8 @@ object IceLite {
           .map { case (b, n, x, lo, hi) => b -> Stats(n, x, lo, hi) }.toMap
       }
     sc.setJobDescription(null)
-    rowsCommitted.foreach(_.add(todo.iterator.map(b => stats.get(b).fold(0L)(_.rows)).sum))
+    rowsCommitted.foreach(
+      _.add(todo.iterator.map(b => stats.get(b).fold(0L)(_.rows)).sum))
     stats.withDefaultValue(NoRows)
   }
 

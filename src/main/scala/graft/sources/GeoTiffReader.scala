@@ -297,13 +297,14 @@ object GeoTiffReader {
     * (this engine's FS); on a cluster store the identical two-pass shape
     * runs on ranged opens.
     *
-    * Band rule: a file of `T` tile rows is cut into bands of
-    * `clamp(ceil(T / defaultParallelism), 1, bandTiles)` tile rows, so it
-    * yields at least `min(T, defaultParallelism)` bands and a small file
-    * still decodes (and everything downstream of it runs) on every core.
-    * `bandTiles` is only the cap: the most tile rows one task decodes at
-    * once, i.e. its decode memory. Bands are tile-aligned, so the emitted
-    * tile set is byte-identical to a whole-file decode. */
+    * Band rule: a file of `T` tile rows is cut into
+    * `n = max(ceil(T / bandTiles), min(T, defaultParallelism))` bands of
+    * near-equal height, band `i` covering tile rows
+    * `[i * T / n, (i + 1) * T / n)`. A small file thus still decodes (and
+    * everything downstream of it runs) on every core, and no band is
+    * taller than `bandTiles`, the cap on one task's decode memory. Bands
+    * are tile-aligned, so the emitted tile set is byte-identical to a
+    * whole-file decode. */
   def readTiles(spark: SparkSession, pathGlob: String, res: Int,
       bandTiles: Int = 4): Dataset[(String, Tile)] = {
     import spark.implicits._
@@ -317,10 +318,10 @@ object GeoTiffReader {
         val p = toLocalPath(uri)
         val nrows = parseHeader(mmap(p)).nrows
         val tileRows = (nrows + size - 1) / size
-        val bandRows = size * math.min(bandTiles,
-          math.max(1, (tileRows + parallelism - 1) / parallelism))
-        (0 until nrows by bandRows).iterator.map(r0 =>
-          (p, r0 / bandRows, r0, math.min(nrows, r0 + bandRows)))
+        val n = math.max((tileRows + bandTiles - 1) / bandTiles,
+          math.min(tileRows, parallelism))
+        def edge(i: Int) = math.min(nrows, (i.toLong * tileRows / n).toInt * size)
+        (0 until n).iterator.map(i => (p, i, edge(i), edge(i + 1)))
       }
     // Exact spread of decode tasks: a column repartition here is a
     // shuffle of tiny descriptors that AQE coalesces by BYTES into one

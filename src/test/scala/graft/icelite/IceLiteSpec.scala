@@ -759,16 +759,34 @@ class IceLiteSpec extends AnyFunSuite {
       | "schema": [{"name": "cellId", "type": "BIGINT"}, {"name": "row0", "type": "INT"}, {"name": "col0", "type": "INT"}, {"name": "h", "type": "INT"}, {"name": "w", "type": "INT"}, {"name": "payload", "type": "ARRAY<DOUBLE>"}, {"name": "grade", "type": "BIGINT"}]}""".stripMargin)
   }
 
-  test("payload element column is written without a dictionary; row0 keeps PLAIN_DICTIONARY") {
+  test("a few-valued payload keeps its dictionary; past 8192 distinct values it is PLAIN") {
     import scala.jdk.CollectionConverters._
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import graft.core.GridRef
-    // 512 8x8 tiles in two tile rows: many rows per file, few distinct
-    // row0 values (so parquet keeps row0's dictionary), and a two-valued
-    // mask payload (a dictionary would be taken if it were attempted)
+    // 512 8x8 tiles in two tile rows, 4 buckets: many rows per file and
+    // few distinct row0 values (so parquet keeps row0's dictionary)
     val ref = GridRef(ncols = 2048, nrows = 16, xll = 0, yll = 0,
       cellsize = 1, nodata = -9999)
+    val conf = spark.sparkContext.hadoopConfiguration
+    /** Column path -> encodings of every data file of `snap`, over all
+      * of its row groups. */
+    def encodings(table: String, snap: Long): Seq[(String, Map[String, Set[String]])] = {
+      val walk = Files.walk(java.nio.file.Paths.get(table, "data", snap.toString))
+      val files = try walk.iterator.asScala.filter(_.toString.endsWith(".parquet")).toList
+        finally walk.close()
+      assert(files.nonEmpty, s"snapshot $snap wrote no data file")
+      files.map { f =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.toString), conf))
+        try s"$snap $f" -> r.getFooter.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala)
+          .groupMapReduce(_.getPath.toDotString)(
+            _.getEncodings.asScala.map(_.name).toSet)(_ ++ _)
+        finally r.close()
+      }
+    }
+    def dictionary(enc: Set[String]) = enc.exists(_.endsWith("_DICTIONARY"))
+    // a two-valued mask, through commit, upsert and compact
     val mask = (r: Int, c: Int) => ((r / 3 + c / 5) % 2).toDouble
     val table = Files.createTempDirectory("icelite-dict").toString
     val s1 = IceLite.commitResumable(spark, TileOps.tileGrid(spark, ref, 3)(mask),
@@ -776,27 +794,18 @@ class IceLiteSpec extends AnyFunSuite {
     val s2 = IceLite.upsert(spark, table, TileOps.tileGrid(spark, ref, 3)(
       (r, c) => 1.0 - mask(r, c)).filter(_.row0 == 0))
     val s3 = IceLite.compact(spark, table, targetBuckets = 2)
-    val conf = spark.sparkContext.hadoopConfiguration
-    /** Column path -> encodings, over every row group of one file. */
-    def encodings(f: java.nio.file.Path): Map[String, Set[String]] = {
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(f.toString), conf))
-      try r.getFooter.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala)
-        .groupMapReduce(_.getPath.toDotString)(
-          _.getEncodings.asScala.map(_.name).toSet)(_ ++ _)
-      finally r.close()
+    for (snap <- Seq(s1, s2, s3); (f, enc) <- encodings(table, snap)) {
+      assert(dictionary(enc("payload.list.element")), s"$f: payload ${enc("payload.list.element")}")
+      assert(enc("row0").contains("PLAIN_DICTIONARY"), s"$f: row0 ${enc("row0")}")
     }
-    for (snap <- Seq(s1, s2, s3)) {
-      val walk = Files.walk(java.nio.file.Paths.get(table, "data", snap.toString))
-      val files = try walk.iterator.asScala.filter(_.toString.endsWith(".parquet")).toList
-        finally walk.close()
-      assert(files.nonEmpty, s"snapshot $snap wrote no data file")
-      files.foreach { f =>
-        val enc = encodings(f)
-        assert(!enc("payload.list.element").exists(_.endsWith("_DICTIONARY")),
-          s"snapshot $snap $f: payload ${enc("payload.list.element")}")
-        assert(enc("row0").contains("PLAIN_DICTIONARY"), s"snapshot $snap $f: row0 ${enc("row0")}")
-      }
+    // one file of 16384 distinct values, each twice: parquet's default 1 MiB
+    // dictionary would take them, but they are past the cap
+    val pairs = Files.createTempDirectory("icelite-nodict").toString
+    val p1 = IceLite.commitResumable(spark, TileOps.tileGrid(spark, ref, 3)(
+      (r, c) => ((r * 2048 + c) / 2).toDouble).coalesce(1), pairs, buckets = 1, snap = 1L)
+    for ((f, enc) <- encodings(pairs, p1)) {
+      assert(!dictionary(enc("payload.list.element")), s"$f: payload ${enc("payload.list.element")}")
+      assert(enc("row0").contains("PLAIN_DICTIONARY"), s"$f: row0 ${enc("row0")}")
     }
   }
 

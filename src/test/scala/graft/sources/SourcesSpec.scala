@@ -304,19 +304,22 @@ class SourcesSpec extends AnyFunSuite {
     }
     val ref = Synth.demRef // 203 x 154, strip-organized by default
     val p = write(ref, "band.tif")
-    // res 5 (32-px tiles), 2-tile bands -> 64-row bands -> 4 band tasks
+    // res 5 (32-px tiles), bands of at most 2 tile rows -> 4 band tasks
     val capped = decodePartitions(p, ref, GeoTiffReader.readTiles(spark, p, res = 5, bandTiles = 2))
     assert(capped > 1, s"one file must decode across >1 task, got $capped partitions")
     // default arguments: fewer tile rows than 4 x parallelism still fill
-    // min(tileRows, parallelism) tasks (7 tile rows here; 3 below)
+    // min(tileRows, parallelism) tasks: 7 tile rows here; below 3, 5 and
+    // 6, the last two in bands of unequal height
     val tileRows = (ref.nrows + 31) / 32
     assert(tileRows < 4 * parallelism)
     assert(decodePartitions(p, ref, GeoTiffReader.readTiles(spark, p, res = 5)) ==
       math.min(tileRows, parallelism))
-    val short = ref.copy(nrows = 80) // 3 tile rows, the last one partial
-    val ps = write(short, "short.tif")
-    assert(decodePartitions(ps, short, GeoTiffReader.readTiles(spark, ps, res = 5)) ==
-      math.min(3, parallelism))
+    for ((nrows, rows) <- Seq(80 -> 3, 150 -> 5, 170 -> 6)) { // last row partial
+      val short = ref.copy(nrows = nrows)
+      val ps = write(short, s"short$rows.tif")
+      assert(decodePartitions(ps, short, GeoTiffReader.readTiles(spark, ps, res = 5)) ==
+        math.min(rows, parallelism), s"$rows tile rows")
+    }
   }
 
   test("MJPEG-AVI export (make_mp4 analog): RIFF structure + every frame ImageIO-decodable") {
