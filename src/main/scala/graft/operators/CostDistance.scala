@@ -1,8 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions.{col, expr, min => sqlMin}
-import graft.core.{DriverGate, GridRef, Owned, Tile}
+import org.apache.spark.sql.functions.{col, expr, isnan, min => sqlMin}
+import org.apache.spark.sql.types.LongType
+import graft.core.{CellView, DriverGate, GridRef, Owned, Tile}
 
 /** Weighted cost-distance accumulation (the map-algebra CostDistance /
   * least-cost "friction surface" primitive): for every valid cell, the
@@ -172,20 +173,9 @@ object CostDistance {
     * valid cell (unreachable and NaN cells are omitted). Distances are
     * exact integers when the cost surface is integer-valued. */
   def accumulate(cost: Dataset[Tile], ref: GridRef, res: Int,
-      isSource: Double => Boolean, maxRounds: Int = 10000): DataFrame = {
-    import cost.sparkSession.implicits._
-    tilesDist(cost, ref, res, isSource, maxRounds).flatMap { t =>
-      val out = Array.newBuilder[(Long, Long, Double)]
-      var i = 0
-      while (i < t.payload.length) {
-        val d = t.payload(i)
-        if (!d.isNaN && d != INF)
-          out += (((t.row0 + i / t.w).toLong, (t.col0 + i % t.w).toLong, d))
-        i += 1
-      }
-      out.result().iterator
-    }.toDF("row", "col", "dist")
-  }
+      isSource: Double => Boolean, maxRounds: Int = 10000): DataFrame =
+    CellView.ofTiles(tilesDist(cost, ref, res, isSource, maxRounds), "dist", LongType,
+      Some(!isnan(col("dist")) && col("dist") =!= INF))
 
   /** Cost-backlink raster over a CONVERGED distance surface (the ArcGIS
     * CostDistance "backlink" output): payload = 0 at source cells,
@@ -245,18 +235,10 @@ object CostDistance {
       isSource: Double => Boolean, maxRounds: Int = 10000): DataFrame = {
     import cost.sparkSession.implicits._
     val d = tilesDist(cost, ref, res, isSource, maxRounds)
-    backlinkTiles(d, cost, ref, res).flatMap { t =>
-      val out = Array.newBuilder[(Long, Long, Long)]
-      var i = 0
-      while (i < t.payload.length) {
-        val v = t.payload(i)
-        if (!v.isNaN)
-          out += (((t.row0 + i / t.w).toLong, (t.col0 + i % t.w).toLong,
-            v.toLong))
-        i += 1
-      }
-      out.result().iterator
-    }.toDF("row", "col", "dir")
+    // -1 marks a NaN (unreachable or invalid) cell
+    val blocks = backlinkTiles(d, cost, ref, res)
+      .map(t => (t.row0, t.col0, t.w, t.payload.map(v => if (v.isNaN) -1L else v.toLong)))
+    CellView(blocks.toDF("row0", "col0", "w", "dir"), LongType, Seq("dir"), Some(col("dir") >= 0))
   }
 
   /** Least-cost PATH from `(targetRow, targetCol)` back to the nearest

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 import graft.core._
 
 /** Window-aggregate resample kernels — the reference `resample` methods
@@ -88,14 +89,15 @@ object Downsample {
       s"factor $factor must divide tile size ${1 << res}")
     require(methods.contains(method), s"unknown method $method")
     import tiles.sparkSession.implicits._
-    tiles.flatMap { t =>
+    val blocks = tiles.map { t =>
       // tiles are anchored at multiples of 2^res, so row0 % factor == 0
       val trLo = t.row0 / factor
       val trHi = (t.row0 + t.h - 1) / factor
       val tcLo = t.col0 / factor
       val tcHi = (t.col0 + t.w - 1) / factor
+      val tw = tcHi - tcLo + 1
       val buf = new Array[Double](factor * factor)
-      val out = Array.newBuilder[CellPx]
+      val out = new Array[Double]((trHi - trLo + 1) * tw)
       var tr = trLo
       while (tr <= trHi) {
         val r0 = math.max(t.row0, tr * factor)
@@ -115,13 +117,14 @@ object Downsample {
             }
             r += 1
           }
-          out += CellPx(tr, tc, statOf(buf, n, method))
+          out((tr - trLo) * tw + tc - tcLo) = statOf(buf, n, method)
           tc += 1
         }
         tr += 1
       }
-      out.result()
-    }.toDF("row", "col", "v")
+      (trLo, tcLo, tw, out)
+    }
+    CellView(blocks.toDF("row0", "col0", "w", "v"), IntegerType, Seq("v"), keep = Some(lit(true)))
       .withColumn("v", when(isnan($"v"), lit(null)).otherwise($"v"))
   }
 

@@ -3,6 +3,7 @@ package graft.operators
 import scala.reflect.ClassTag
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 import graft.core._
 import graft.core.DriverGate.Placed
 
@@ -91,17 +92,8 @@ object Flow {
   def flowDir(tiles: Dataset[Tile], ref: GridRef, res: Int): DataFrame = {
     import tiles.sparkSession.implicits._
     val cs = ref.cellsize
-    Stencil.padded(tiles, ref, res).flatMap { pt =>
-      val dirs = dirPlane(pt, cs)
-      val out = Array.newBuilder[(Long, Long, Int)]
-      var i = 0
-      while (i < dirs.length) {
-        if (dirs(i) >= 0)
-          out += (((pt.row0 + i / pt.w).toLong, (pt.col0 + i % pt.w).toLong, dirs(i)))
-        i += 1
-      }
-      out.result().iterator
-    }.toDF("row", "col", "dir")
+    val blocks = Stencil.padded(tiles, ref, res).map(pt => (pt.row0, pt.col0, pt.w, dirPlane(pt, cs)))
+    CellView(blocks.toDF("row0", "col0", "w", "dir"), LongType, Seq("dir"), Some(col("dir") >= 0))
   }
 
   // ---------------------------------------------------------------------
@@ -117,8 +109,8 @@ object Flow {
   //      [[resolveChains]] solves it — on the driver while the summaries
   //      fit the [[DriverGate]] byte budget, distributed above;
   //   3. a second per-tile pass seeded with the solved values ([[seeded]]),
-  //      cut once, eagerly, one row per tile ([[CellBlock]]): the per-cell
-  //      rows an operator returns are an explode of that cut, so no cut or
+  //      cut once, eagerly, one dense block per tile: the per-cell rows an
+  //      operator returns are the [[CellView]] of that cut, so no cut or
   //      shuffle of the condensation holds a row per cell.
   // Path lengths are kept as INTEGER (cardinal, diagonal) step counts so
   // results are exact cross-engine; physical length = cellsize * (ncard +
@@ -599,24 +591,16 @@ object Flow {
     ChainRow(x._1, x._2, r._3 != 2, r._3 == terminal, r._4, r._5, sc + r._6, sd + r._7)
   }
 
-  /** A seeded pass's answer for one tile: the local indices `at` of the
-    * cells it answers (row-major in a tile `w` wide) and one column of
-    * values per output field (public for encoder derivation). */
-  final case class CellBlock(row0: Long, col0: Long, w: Int, at: Array[Int],
-      cols: Array[Array[Long]]) {
-    def row(j: Int): Long = row0 + at(j) / w
-    def col(j: Int): Long = col0 + at(j) % w
-  }
-
   /** Pass 2: `kernel` on every tile with the solved seeds it owns, keyed by
     * cell, duplicates folded by `merge`, cut once, eagerly, one row per
     * tile. Driver-placed seeds reach the tiles in one broadcast, released
     * after the cut; distributed ones by an equi-join on the owning tile's
     * cell id, so they never land on the driver. */
-  private def seeded[V](padded: Dataset[Masked], res: Int,
+  private def seeded[V, B](padded: Dataset[Masked], res: Int,
       seeds: Placed[((Long, Long), V)], merge: (V, V) => V)
-      (kernel: (Masked, scala.collection.Map[(Long, Long), V]) => CellBlock)
-      (implicit byTileEnc: Encoder[(Long, Array[((Long, Long), V)])]): Dataset[CellBlock] = {
+      (kernel: (Masked, scala.collection.Map[(Long, Long), V]) => B)
+      (implicit byTileEnc: Encoder[(Long, Array[((Long, Long), V)])],
+          blockEnc: Encoder[B]): Dataset[B] = {
     import padded.sparkSession.implicits._
     seeds match {
       case Left(s) =>
@@ -636,14 +620,14 @@ object Flow {
   /** Body of [[flowAcc]] and [[longestUpstream]]: `local` per tile, an
     * upstream fold of the crossing graph under `rule`, then `local` again
     * with each entry cell seeded by `seed` of the crossings into it
-    * (merged by the rule). Columns (row, col, a, b), every valid cell: an
-    * explode of the per-tile cut. */
+    * (merged by the rule). Columns (row, col, a, b), every valid cell: the
+    * cells of the per-tile cut. */
   private def upstreamTiles(op: String, tiles: Dataset[Tile], ref: GridRef, res: Int,
       rule: FoldRule, local: Local)(seed: FoldNode => (Long, Long))
       : DataFrame = {
     import tiles.sparkSession.implicits._
     val cs = ref.cellsize
-    Owned { own =>
+    val blocks = Owned { own =>
       val padded = own.reuse(masked(tiles, ref, res, None))
       val summaries = own.reuse(traceSummariesDs(padded, cs, local))
       val nodes = crossingGraph(op, summaries)(foldNode)
@@ -651,30 +635,23 @@ object Flow {
       seeded(padded, res, seeds, rule.merge) { case ((pt, _), m) =>
         val dirs = dirPlane(pt, cs)
         val (a, b) = local(pt, dirs, m)
-        val (at, va, vb) = (Array.newBuilder[Int], Array.newBuilder[Long], Array.newBuilder[Long])
-        var i = 0
-        while (i < dirs.length) {
-          if (dirs(i) >= 0) { at += i; va += a(i); vb += b(i) }
-          i += 1
-        }
-        CellBlock(pt.row0, pt.col0, pt.w, at.result(), Array(va.result(), vb.result()))
-      }
-    }.flatMap(t => Iterator.range(0, t.at.length)
-      .map(j => (t.row(j), t.col(j), t.cols(0)(j), t.cols(1)(j))))
-      .toDF("row", "col", "a", "b")
+        (pt.row0, pt.col0, pt.w, a, b, dirs)
+      }.toDF("row0", "col0", "w", "a", "b", "dir")
+    }
+    CellView(blocks, LongType, Seq("a", "b", "dir"), Some(col("dir") >= 0)).drop("dir")
   }
 
   /** Body of [[downstream]] and [[nearestDrainage]]: every valid cell whose
     * D8 path ends at a `terminal` cell (1 pit, 4 stop cell), with that cell
     * and the exact step counts to it — `localTrace` per tile, a chain
     * resolve of the crossing graph, and `localTrace` again finishing every
-    * path that leaves its tile; an explode of the per-tile cut. */
+    * path that leaves its tile; the cells of the per-tile cut. Columns
+    * (row, col, er, ec, ncard, ndiag). */
   private def traceTiles(op: String, tiles: Dataset[Tile], ref: GridRef, res: Int,
-      stops: Option[Dataset[(Long, Array[Int])]], terminal: Int)
-      : Dataset[(Long, Long, Long, Long, Long, Long)] = {
+      stops: Option[Dataset[(Long, Array[Int])]], terminal: Int): DataFrame = {
     import tiles.sparkSession.implicits._
     val cs = ref.cellsize
-    Owned { own =>
+    val blocks = Owned { own =>
       val padded = own.reuse(masked(tiles, ref, res, stops))
       val summaries = own.reuse(traceSummariesDs(padded, cs, NoLocal))
       val rows = crossingGraph(op, summaries)(chainRow(terminal))
@@ -682,25 +659,26 @@ object Flow {
       seeded(padded, res, seeds, (a: ChainRow, _: ChainRow) => a) { case ((pt, stopIdx), m) =>
         val dirs = dirPlane(pt, cs)
         val (typ, term, cnc, cnd) = localTrace(pt, dirs, stopMask(pt, stopIdx))
-        val at = Array.newBuilder[Int]
-        val out = Array.fill(4)(Array.newBuilder[Long])
-        def emit(i: Int, er: Long, ec: Long, nc: Long, nd: Long): Unit = {
-          at += i; out(0) += er; out(1) += ec; out(2) += nc; out(3) += nd
+        // er = -1 marks a cell with no answer
+        val (er, ec, nc, nd) = (Array.fill(dirs.length)(-1L), new Array[Long](dirs.length),
+          new Array[Long](dirs.length), new Array[Long](dirs.length))
+        def emit(i: Int, r: Long, c: Long, ncard: Long, ndiag: Long): Unit = {
+          er(i) = r; ec(i) = c; nc(i) = ncard; nd(i) = ndiag
         }
         var i = 0
         while (i < dirs.length) {
-          val (er, ec) = ((pt.row0 + term(i) / pt.w).toLong, (pt.col0 + term(i) % pt.w).toLong)
-          if (typ(i) == terminal) emit(i, er, ec, cnc(i).toLong, cnd(i).toLong)
+          val (tr, tc) = ((pt.row0 + term(i) / pt.w).toLong, (pt.col0 + term(i) % pt.w).toLong)
+          if (typ(i) == terminal) emit(i, tr, tc, cnc(i).toLong, cnd(i).toLong)
           else if (typ(i) == 2) {
-            val x = m((er, ec))
+            val x = m((tr, tc))
             if (x.ok) emit(i, x.lr, x.lc, cnc(i) + x.nc, cnd(i) + x.nd)
           }
           i += 1
         }
-        CellBlock(pt.row0, pt.col0, pt.w, at.result(), out.map(_.result()))
-      }
-    }.flatMap(t => Iterator.range(0, t.at.length)
-      .map(j => (t.row(j), t.col(j), t.cols(0)(j), t.cols(1)(j), t.cols(2)(j), t.cols(3)(j))))
+        (pt.row0, pt.col0, pt.w, er, ec, nc, nd)
+      }.toDF("row0", "col0", "w", "er", "ec", "ncard", "ndiag")
+    }
+    CellView(blocks, LongType, Seq("er", "ec", "ncard", "ndiag"), Some(col("er") >= 0))
   }
 
   /** D8 flow accumulation: (row, col, acc) for every valid cell; acc
@@ -821,19 +799,8 @@ object Flow {
     * Two-pass parallel Priority-Flood (Barnes 2016) via
     * [[fillSinksTiles]]. */
   def fillSinks(tiles: Dataset[Tile], ref: GridRef, res: Int,
-      maxRounds: Int = 10000): DataFrame = {
-    import tiles.sparkSession.implicits._
-    fillSinksTiles(tiles, ref, res, maxRounds).flatMap { t =>
-      val out = Array.newBuilder[(Long, Long, Double)]
-      var i = 0
-      while (i < t.payload.length) {
-        if (!t.payload(i).isNaN)
-          out += (((t.row0 + i / t.w).toLong, (t.col0 + i % t.w).toLong, t.payload(i)))
-        i += 1
-      }
-      out.result().iterator
-    }.toDF("row", "col", "fill")
-  }
+      maxRounds: Int = 10000): DataFrame =
+    CellView.ofTiles(fillSinksTiles(tiles, ref, res, maxRounds), "fill", LongType)
 
   /** [[fillSinks]] keeping the tile representation (for pipelines that
     * continue with routing over the conditioned surface).

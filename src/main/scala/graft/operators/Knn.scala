@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 import org.apache.spark.broadcast.Broadcast
 import graft.core._
 
@@ -42,14 +43,12 @@ final case class BucketLattice(ref: GridRef, res: Int) {
     cellBucket(r, c)
   }
 
-  /** The grid cells of `bucket`, row-major, as parallel (rows, cols); a
-    * bucket on the lattice's right or bottom edge is clipped to the grid. */
-  def cellsOf(bucket: Long): (Array[Int], Array[Int]) = {
+  /** The grid window of `bucket`: (row0, col0, h, w), clipped to the grid
+    * for a bucket on the lattice's right or bottom edge. */
+  def window(bucket: Long): (Int, Int, Int, Int) = {
     val (row0, col0, size) = CellId.pixelWindow(bucket)
     val (r0, c0) = (row0.toInt, col0.toInt)
-    val h = math.min(size, ref.nrows - r0)
-    val w = math.min(size, ref.ncols - c0)
-    (Array.tabulate(h * w)(i => r0 + i / w), Array.tabulate(h * w)(i => c0 + i % w))
+    (r0, c0, math.min(size, ref.nrows - r0), math.min(size, ref.ncols - c0))
   }
 
   /** Map coordinates of a cell centre. */
@@ -213,14 +212,12 @@ object Knn {
     }
   }
 
-  /** Pass 1's answer for one bucket: one entry per queried cell of the
-    * bucket, in parallel arrays, so the pass-1 cut holds one row per
-    * bucket, not one per cell. */
-  final case class HitBlock(row: Array[Int], col: Array[Int], v: Array[Double],
-      pid: Array[Long], d2: Array[Double], proven: Array[Boolean]) {
-    def hits: Iterator[Hit] = Iterator.range(0, row.length)
-      .map(i => Hit(row(i), col(i), v(i), pid(i), d2(i), proven(i)))
-  }
+  /** Pass 1's answer for one bucket, a sparse [[CellView]] block: the
+    * local indices `at` of the queried cells in the bucket's window (`w`
+    * wide at `(row0, col0)`) and one entry per cell in each of the [[Hit]]
+    * fields, so the pass-1 cut holds one row per bucket, not one per cell. */
+  final case class HitBlock(row0: Int, col0: Int, w: Int, at: Array[Int], v: Array[Double],
+      pid: Array[Long], d2: Array[Double], proven: Array[Boolean])
 
   /** The exact k-nearest solver: each queried cell's k nearest points
     * ((pid, v, d2) ordered by (d2, pid); fewer only when the whole point
@@ -250,16 +247,17 @@ object Knn {
     }.groupByKey(_._1)
     // strict: pass 1 proves only inside the guard; escalation rounds
     // prove at equality (margin argument below)
-    def block(rows: Array[Int], cols: Array[Int], candIt: Iterator[(Long, PtRec)]) = {
+    def block(bucket: Long, at: Array[Int], candIt: Iterator[(Long, PtRec)]) = {
       val pts = candIt.map(_._2).toArray.distinct
       val tree = KdTree.build(pts.map(p => (p.pid, p.x, p.y, p.v)))
-      val n = rows.length
-      val b = HitBlock(rows, cols, new Array[Double](n), new Array[Long](n),
+      val (r0, c0, _, w) = lat.window(bucket)
+      val n = at.length
+      val b = HitBlock(r0, c0, w, at, new Array[Double](n), new Array[Long](n),
         new Array[Double](n), new Array[Boolean](n))
       var i = 0
       while (i < n) {
-        val h = hit(rows(i), cols(i),
-          tree.kNearest(lat.centreX(cols(i)), lat.centreY(rows(i)), k), _ < guard2)
+        val (r, c) = (r0 + at(i) / w, c0 + at(i) % w)
+        val h = hit(r, c, tree.kNearest(lat.centreX(c), lat.centreY(r), k), _ < guard2)
         b.v(i) = h.v; b.pid(i) = h.pid; b.d2(i) = h.d2; b.proven(i) = h.proven
         i += 1
       }
@@ -273,10 +271,10 @@ object Knn {
               s"nearestBucketed: target ($r, $c) outside the $nrows x $ncols grid")
             (lat.cellBucket(r, c), r, c)
           }
-          .groupByKey(_._1).cogroup(candidates) { (_, cellIt, candIt) =>
-            val cs = cellIt.toArray
-            if (cs.isEmpty) Iterator.empty
-            else Iterator.single(block(cs.map(_._2), cs.map(_._3), candIt))
+          .groupByKey(_._1).cogroup(candidates) { (bucket, cellIt, candIt) =>
+            val (r0, c0, _, w) = lat.window(bucket)
+            val at = cellIt.map { case (_, r, c) => (r - r0) * w + (c - c0) }.toArray
+            if (at.isEmpty) Iterator.empty else Iterator.single(block(bucket, at, candIt))
           }
       case None =>
         // one row per lattice bucket; the kernel enumerates its cells
@@ -285,21 +283,21 @@ object Knn {
           .groupByKey(identity).cogroup(candidates) { (bucket, bIt, candIt) =>
             if (bIt.isEmpty) Iterator.empty
             else {
-              val (rows, cols) = lat.cellsOf(bucket)
-              Iterator.single(block(rows, cols, candIt))
+              val (_, _, h, w) = lat.window(bucket)
+              Iterator.single(block(bucket, Array.range(0, h * w), candIt))
             }
           }
     }
     // a lazy lineage cut, one row per bucket: the escalation loop's
     // emptiness collect materializes it in full, and the proven leg of the
     // result reads it on the caller's action
-    val p1 = blocks.localCheckpoint(eager = false)
+    val p1 = blocks.localCheckpoint(eager = false).toDF()
 
     // ---- escalation: query-replication rounds ----------------------------
-    lat.escalate(spark, points, math.max(2 * ringK, 2),
-      p1.flatMap(_.hits.filter(_.proven).map(h => (h.row, h.col, h.v, h.pid)))
-        .toDF("row", "col", "v", "pid"),
-      p1.flatMap(_.hits.filterNot(_.proven)).toDF()) { (open, _, byBucket, ring, exhaustive) =>
+    val settled = CellView(p1, IntegerType, Seq("v", "pid", "proven"), Some(col("proven")))
+    val unproven = CellView(p1, IntegerType, Seq("v", "pid", "d2", "proven"), Some(!col("proven")))
+    lat.escalate(spark, points, math.max(2 * ringK, 2), settled.drop("proven"), unproven) {
+      (open, _, byBucket, ring, exhaustive) =>
       // a cell with a bound queries exactly the ring that bound requires,
       // so it settles this round; a boundless cell probes `ring`
       val queries = open.as[Hit].flatMap { h =>

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 import org.apache.spark.util.LongAccumulator
 import graft.core._
 
@@ -13,7 +14,7 @@ import graft.core._
   *   per-cell-band block kernel: pixel-center point-in-polygon,
   *   features applied in seq order so the LATER feature wins,
   *   one NaN-padded pixel block out per (cell, band)          [kernel]
-  *   one posexplode of the blocks -> burned pixels            [explode]
+  *   CellView: one posexplode of the blocks -> burned pixels  [explode]
   *
   * The shuffle key is the Z-ordered cell id, so at 100TB this is a
   * range-bucketed exchange; hot cells (many features) are split into row
@@ -93,10 +94,6 @@ object Rasterize {
     }
   }
 
-  /** One burned pixel block: rows [r0, r0 + v.length / w), columns
-    * [c0, c0 + w), row-major; NaN marks a pixel no feature burned. */
-  final case class PxBlock(r0: Int, c0: Int, w: Int, v: Array[Double])
-
   /** The burn kernel, for band `s` of `salt` of one cell: features are
     * applied in seq order, so the LATER feature wins (Raster.py:330
     * sequential burn), each scanned only over its pixel window (bbox ∩
@@ -105,9 +102,12 @@ object Rasterize {
     * of `salt` contiguous row ranges of it, so one hot cell's work splits
     * across `salt` tasks while every pixel still sees all its features.
     * Emits at most one block, none for an empty band or one with nothing
-    * burned, and adds its burned-pixel count to `burnedPx` once. */
+    * burned, and adds its burned-pixel count to `burnedPx` once. The block
+    * is dense for [[CellView]]: `(row0, col0, w, v)`, rows [row0, row0 +
+    * v.length / w), NaN where no feature burned. */
   private[operators] def burnBand(cid: Long, tasks: Array[CoverTask], s: Int, salt: Int,
-      ref: GridRef, burnedPx: Option[LongAccumulator]): Iterator[PxBlock] = {
+      ref: GridRef, burnedPx: Option[LongAccumulator])
+      : Iterator[(Int, Int, Int, Array[Double])] = {
     val fs = dedupTasks(tasks)
     val (r0L, c0L, size) = CellId.pixelWindow(cid)
     val r0 = r0L.toInt
@@ -170,22 +170,9 @@ object Rasterize {
       if (n == 0) Iterator.empty
       else {
         burnedPx.foreach(_.add(n))
-        Iterator.single(PxBlock(b0, uc0, bw, vals))
+        Iterator.single((b0, uc0, bw, vals))
       }
     }
-  }
-
-  /** The per-pixel view of burned blocks, as ONE Catalyst step: the
-    * explode, the NaN filter and the index arithmetic run in generated
-    * code, so a count, aggregate or join over the burn never builds a
-    * pixel object. */
-  private def pixels(blocks: Dataset[PxBlock]): Dataset[CellPx] = {
-    import blocks.sparkSession.implicits._
-    blocks.select($"r0", $"c0", $"w", posexplode($"v").as(Seq("i", "v")))
-      .where(!isnan($"v"))
-      .select(($"r0" + expr("CAST(i DIV w AS INT)")).as("row"),
-        ($"c0" + $"i" % $"w").as("col"), $"v")
-      .as[CellPx]
   }
 
   /** Burn: group cover tasks by cell and run the kernel once per cell.
@@ -287,7 +274,7 @@ object Rasterize {
   def burnSalted(tasks: Dataset[CoverTask], ref: GridRef, salt: Int,
       burnedPx: Option[LongAccumulator] = None): Dataset[CellPx] = {
     import tasks.sparkSession.implicits._
-    pixels(
+    val blocks =
       if (salt <= 1)
         tasks.groupByKey(_.cellId).flatMapGroups { (cid, it) =>
           burnBand(cid, it.toArray, 0, 1, ref, burnedPx)
@@ -297,7 +284,8 @@ object Rasterize {
           .groupByKey { case (s, t) => (t.cellId, s) }
           .flatMapGroups { (key: (Long, Int), it: Iterator[(Int, CoverTask)]) =>
             burnBand(key._1, it.map(_._2).toArray, key._2, salt, ref, burnedPx)
-          })
+          }
+    CellView(blocks.toDF("row0", "col0", "w", "v"), IntegerType, Seq("v")).as[CellPx]
   }
 
   /** Burned-pixel DataFrame joined back as a mask/edit layer: the tutorial

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.types.{IntegerType, LongType}
 import graft.core._
 
 /** 2-D stencils with distributed halo exchange — the reference's
@@ -117,63 +118,71 @@ object Stencil {
     }
   }
 
-  /** Horn 3x3 gradient (the hillshade core): per interior pixel with all 9
+  /** Horn 3x3 gradient planes of one padded tile: per pixel with all 9
     * neighbors valid,
     *   gx = ((tr + 2*r + br) - (tl + 2*l + bl)) / (8*cs)   [eastward]
     *   gy = ((tl + 2*t + tr) - (bl + 2*b + br)) / (8*cs)   [northward]
-    * NaN/out-of-grid neighborhood -> no output row. Returns
-    * (row, col, gx, gy) cells. */
+    * and NaN in both where any of the 9 is NaN or off the grid. */
+  private def hornPlanes(pt: Padded, cs: Double): (Array[Double], Array[Double]) = {
+    val h = pt.h
+    val w = pt.w
+    val pw = w + 2
+    val pad = pt.pad
+    val gxs = Array.fill(h * w)(Double.NaN)
+    val gys = Array.fill(h * w)(Double.NaN)
+    var r = 1
+    while (r <= h) {
+      var c = 1
+      while (c <= w) {
+        val tl = pad((r - 1) * pw + (c - 1)); val tp = pad((r - 1) * pw + c); val tr = pad((r - 1) * pw + (c + 1))
+        val l = pad(r * pw + (c - 1)); val ct = pad(r * pw + c); val rt = pad(r * pw + (c + 1))
+        val bl = pad((r + 1) * pw + (c - 1)); val bt = pad((r + 1) * pw + c); val br = pad((r + 1) * pw + (c + 1))
+        if (!(tl.isNaN || tp.isNaN || tr.isNaN || l.isNaN || ct.isNaN || rt.isNaN ||
+          bl.isNaN || bt.isNaN || br.isNaN)) {
+          gxs((r - 1) * w + c - 1) = ((tr + 2 * rt + br) - (tl + 2 * l + bl)) / (8 * cs)
+          gys((r - 1) * w + c - 1) = ((tl + 2 * tp + tr) - (bl + 2 * bt + br)) / (8 * cs)
+        }
+        c += 1
+      }
+      r += 1
+    }
+    (gxs, gys)
+  }
+
+  /** Horn 3x3 gradient (the hillshade core, [[hornPlanes]]): (row, col,
+    * gx, gy) for every pixel whose 3x3 neighborhood is fully valid. */
   def hornGradient(tiles: Dataset[Tile], ref: GridRef, res: Int): DataFrame = {
     import tiles.sparkSession.implicits._
     val cs = ref.cellsize
-    padded(tiles, ref, res).flatMap { pt =>
-      val h = pt.h
-      val w = pt.w
-      val pw = w + 2
-      val pad = pt.pad
-      val r0 = pt.row0
-      val c0 = pt.col0
-      locally {
-        val out = Array.newBuilder[(Int, Int, Double, Double)]
-        var r = 1
-        while (r <= h) {
-          var c = 1
-          while (c <= w) {
-            val tl = pad((r - 1) * pw + (c - 1)); val tp = pad((r - 1) * pw + c); val tr = pad((r - 1) * pw + (c + 1))
-            val l = pad(r * pw + (c - 1)); val ct = pad(r * pw + c); val rt = pad(r * pw + (c + 1))
-            val bl = pad((r + 1) * pw + (c - 1)); val bt = pad((r + 1) * pw + c); val br = pad((r + 1) * pw + (c + 1))
-            if (!(tl.isNaN || tp.isNaN || tr.isNaN || l.isNaN || ct.isNaN || rt.isNaN ||
-              bl.isNaN || bt.isNaN || br.isNaN)) {
-              val gx = ((tr + 2 * rt + br) - (tl + 2 * l + bl)) / (8 * cs)
-              val gy = ((tl + 2 * tp + tr) - (bl + 2 * bt + br)) / (8 * cs)
-              out += ((r0 + r - 1, c0 + c - 1, gx, gy))
-            }
-            c += 1
-          }
-          r += 1
-        }
-        out.result().iterator
-      }
-    }.toDF("row", "col", "gx", "gy")
+    val blocks = padded(tiles, ref, res).map { pt =>
+      val (gx, gy) = hornPlanes(pt, cs)
+      (pt.row0, pt.col0, pt.w, gx, gy)
+    }
+    CellView(blocks.toDF("row0", "col0", "w", "gx", "gy"), IntegerType, Seq("gx", "gy"))
   }
 
   /** Full hillshade (azdeg 315, altdeg 45 like the reference default,
     * grid_show.py:136-158): illumination = cos(slope)cos(alt-complement)…
-    * standard GIS formula over the Horn gradient. Trig makes it unsuitable
-    * for cross-engine hash oracles; parity is tested against RefKernel. */
+    * standard GIS formula over the Horn gradient, computed in the gradient
+    * kernel. Trig makes it unsuitable for cross-engine hash oracles;
+    * parity is tested against RefKernel. */
   def hillshade(tiles: Dataset[Tile], ref: GridRef, res: Int,
       azdeg: Double = 315.0, altdeg: Double = 45.0): DataFrame = {
     import tiles.sparkSession.implicits._
+    val cs = ref.cellsize
     val az = math.toRadians(360.0 - azdeg + 90.0)
     val alt = math.toRadians(altdeg)
-    hornGradient(tiles, ref, res).as[(Int, Int, Double, Double)].map {
-      case (r, c, gx, gy) =>
-        val slope = math.atan(math.hypot(gx, gy))
-        val aspect = math.atan2(gy, -gx)
+    val blocks = padded(tiles, ref, res).map { pt =>
+      val (gx, gy) = hornPlanes(pt, cs)
+      (pt.row0, pt.col0, pt.w, Array.tabulate(gx.length) { i =>
+        val slope = math.atan(math.hypot(gx(i), gy(i)))
+        val aspect = math.atan2(gy(i), -gx(i))
         val shade = math.sin(alt) * math.cos(slope) +
           math.cos(alt) * math.sin(slope) * math.cos(az - aspect)
-        (r, c, math.max(0.0, math.min(1.0, shade)))
-    }.toDF("row", "col", "shade")
+        math.max(0.0, math.min(1.0, shade)) // NaN where gx is NaN
+      })
+    }
+    CellView(blocks.toDF("row0", "col0", "w", "shade"), IntegerType, Seq("shade"))
   }
 
   /** MULTIDIRECTIONAL hillshade over the Horn gradient — the
@@ -253,10 +262,11 @@ object Stencil {
   def curvature(tiles: Dataset[Tile], ref: GridRef, res: Int): DataFrame = {
     import tiles.sparkSession.implicits._
     val cs = ref.cellsize
-    padded(tiles, ref, res).flatMap { pt =>
+    val blocks = padded(tiles, ref, res).map { pt =>
       val h = pt.h; val w = pt.w; val pw = w + 2
-      val pad = pt.pad; val r0 = pt.row0; val c0 = pt.col0
-      val out = Array.newBuilder[(Long, Long, Double, Double, Double)]
+      val pad = pt.pad
+      val (curvs, profs, plans) =
+        (Array.fill(h * w)(Double.NaN), new Array[Double](h * w), new Array[Double](h * w))
       var r = 1
       while (r <= h) {
         var c = 1
@@ -272,17 +282,19 @@ object Stencil {
             val gg = (-l + rt) / (2 * cs)
             val hh = (tp - bt) / (2 * cs)
             val den = gg * gg + hh * hh
-            val curv = -2 * (dd + ee)
-            val prof = if (den == 0) 0.0 else 2 * (dd * gg * gg + ee * hh * hh + ff * gg * hh) / den
-            val plan = if (den == 0) 0.0 else -2 * (dd * hh * hh + ee * gg * gg - ff * gg * hh) / den
-            out += (((r0 + r - 1).toLong, (c0 + c - 1).toLong, curv, prof, plan))
+            val i = (r - 1) * w + c - 1
+            curvs(i) = -2 * (dd + ee)
+            profs(i) = if (den == 0) 0.0 else 2 * (dd * gg * gg + ee * hh * hh + ff * gg * hh) / den
+            plans(i) = if (den == 0) 0.0 else -2 * (dd * hh * hh + ee * gg * gg - ff * gg * hh) / den
           }
           c += 1
         }
         r += 1
       }
-      out.result().iterator
-    }.toDF("row", "col", "curv", "prof", "plan")
+      (pt.row0, pt.col0, w, curvs, profs, plans)
+    }
+    CellView(blocks.toDF("row0", "col0", "w", "curv", "prof", "plan"), LongType,
+      Seq("curv", "prof", "plan"))
   }
 
   /** Focal terrain indices over the valid 8-neighborhood:
@@ -295,8 +307,8 @@ object Stencil {
   def terrainIndices(tiles: Dataset[Tile], ref: GridRef, res: Int): DataFrame = {
     import tiles.sparkSession.implicits._
     val offsets = Array((0, 1), (1, 1), (1, 0), (1, -1), (0, -1), (-1, -1), (-1, 0), (-1, 1))
-    padded(tiles, ref, res).flatMap { pt =>
-      val out = Array.newBuilder[(Long, Long, Double, Double)]
+    val blocks = padded(tiles, ref, res).map { pt =>
+      val (tpis, tris) = (Array.fill(pt.h * pt.w)(Double.NaN), new Array[Double](pt.h * pt.w))
       var r = 0
       while (r < pt.h) {
         var c = 0
@@ -312,14 +324,14 @@ object Stencil {
               if (!zn.isNaN) { s += zn; s2 += (z - zn) * (z - zn); n += 1 }
               k += 1
             }
-            if (n > 0)
-              out += (((pt.row0 + r).toLong, (pt.col0 + c).toLong, z - s / n, math.sqrt(s2)))
+            if (n > 0) { tpis(r * pt.w + c) = z - s / n; tris(r * pt.w + c) = math.sqrt(s2) }
           }
           c += 1
         }
         r += 1
       }
-      out.result().iterator
-    }.toDF("row", "col", "tpi", "tri")
+      (pt.row0, pt.col0, pt.w, tpis, tris)
+    }
+    CellView(blocks.toDF("row0", "col0", "w", "tpi", "tri"), LongType, Seq("tpi", "tri"))
   }
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.types.IntegerType
 import graft.core._
 
 /** One pixel of the global grid in map/grid space. */
@@ -52,25 +53,9 @@ object TileOps {
   /** Explode tiles to per-pixel rows (global row/col, NaN -> null v).
     * The inverse of tiling; used at SQL-comparison boundaries and as the
     * `to_points` analogue (Raster.py:553-567). */
-  def cells(tiles: Dataset[Tile]): DataFrame = {
-    import tiles.sparkSession.implicits._
-    tiles.flatMap { t =>
-      val out = new Array[CellPx](t.h * t.w)
-      var i = 0
-      var r = 0
-      while (r < t.h) {
-        var c = 0
-        while (c < t.w) {
-          out(i) = CellPx(t.row0 + r, t.col0 + c, t.payload(r * t.w + c))
-          i += 1
-          c += 1
-        }
-        r += 1
-      }
-      out
-    }.toDF("row", "col", "v")
-      .withColumn("v", when(isnan($"v"), lit(null)).otherwise($"v"))
-  }
+  def cells(tiles: Dataset[Tile]): DataFrame =
+    CellView.ofTiles(tiles, "v", IntegerType, keep = Some(lit(true)))
+      .withColumn("v", when(isnan(col("v")), lit(null)).otherwise(col("v")))
 
   /** Reassemble (row, col, v) cell rows into tiles — the INVERSE of
     * [[cells]], for feeding cell-level operator output (downsampled

@@ -2,17 +2,12 @@ package graft.operators
 
 import scala.util.Random
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.PosExplode
-import org.apache.spark.sql.execution.{GenerateExec, SerializeFromObjectExec}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.functions.{count, lit}
-import org.apache.spark.sql.types.ObjectType
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core._
 
 /** The block burn (one pixel block per cell band, one explode to pixels)
   * against a brute per-pixel last-wins burn over the whole grid. */
-class BurnBlockSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
+class BurnBlockSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -62,9 +57,11 @@ class BurnBlockSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       .map(i => (i / ref.ncols, i % ref.ncols) -> out(i)).toMap
   }
 
-  private def pixelsOf(b: Rasterize.PxBlock): Map[(Int, Int), Double] =
-    b.v.indices.filter(i => !b.v(i).isNaN)
-      .map(i => (b.r0 + i / b.w, b.c0 + i % b.w) -> b.v(i)).toMap
+  /** A dense burn block (row0, col0, w, v) as its burned pixels. */
+  private def pixelsOf(b: (Int, Int, Int, Array[Double])): Map[(Int, Int), Double] = {
+    val (r0, c0, w, v) = b
+    v.indices.filter(i => !v(i).isNaN).map(i => (r0 + i / w, c0 + i % w) -> v(i)).toMap
+  }
 
   test("block burn == brute per-pixel last-wins burn at salt 1, 2, 7 and 300") {
     assert(brute.nonEmpty && brute.size < ref.numCells)
@@ -91,14 +88,14 @@ class BurnBlockSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       for (salt <- Seq(2, 7, 300)) {
         val bands = (0 until salt).flatMap(s => Rasterize.burnBand(cid, ts, s, salt, ref, None))
         // every emitted band burned something, and the bands tile the block
-        assert(bands.forall(b => b.v.exists(!_.isNaN)))
-        val rows = bands.flatMap(b => b.r0 until b.r0 + b.v.length / b.w)
+        assert(bands.forall(b => b._4.exists(!_.isNaN)))
+        val rows = bands.flatMap(b => b._1 until b._1 + b._4.length / b._3)
         assert(rows.distinct.size == rows.size, s"cell $cid salt $salt: bands overlap")
         assert(bands.map(pixelsOf).foldLeft(Map.empty[(Int, Int), Double])(_ ++ _) ==
           whole.headOption.map(pixelsOf).getOrElse(Map.empty), s"cell $cid salt $salt")
         if (salt == 300) {
           // no cell window has 300 rows: each band is at most one row
-          assert(bands.forall(_.v.length == bands.head.w))
+          assert(bands.forall(_._4.length == bands.head._3))
           assert(bands.size < salt)
           bandsChecked += bands.size
         }
@@ -108,15 +105,7 @@ class BurnBlockSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("burn plan: one posexplode and no per-pixel CellPx objects under an aggregate") {
-    val agg = Rasterize(spark, features, ref, res, useAttr = true).agg(count(lit(1)))
-    assert(agg.collect()(0).getLong(0) == brute.size)
-    val plan = agg.queryExecution.executedPlan
-    val explodes = collect(plan) { case g: GenerateExec => g.generator }
-    assert(explodes.size == 1 && explodes.head.isInstanceOf[PosExplode], plan.toString)
-    val pixelObjects = collect(plan) {
-      case s: SerializeFromObjectExec
-          if s.child.output.exists(_.dataType == ObjectType(classOf[CellPx])) => s
-    }
-    assert(pixelObjects.isEmpty, plan.toString)
+    assert(PlanShape.assertOneExplode("burn",
+      Rasterize(spark, features, ref, res, useAttr = true)) == brute.size)
   }
 }

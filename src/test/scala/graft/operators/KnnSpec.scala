@@ -262,9 +262,12 @@ class KnnSpec extends AnyFunSuite {
     }
     assert(cuts.size == 1, cuts.map(_.output).mkString("; "))
     assert(cuts.head.rdd.count() == 10 * 6)
-    assert(cuts.head.output.map(_.name) == Seq("row", "col", "v", "pid", "d2", "proven"))
-    val cells = cuts.head.rdd
-      .map(b => b.getArray(0).toIntArray().zip(b.getArray(1).toIntArray())).collect()
+    assert(cuts.head.output.map(_.name) ==
+      Seq("row0", "col0", "w", "at", "v", "pid", "d2", "proven"))
+    val cells = cuts.head.rdd.map { b =>
+      val (r0, c0, w) = (b.getInt(0), b.getInt(1), b.getInt(2))
+      b.getArray(3).toIntArray().map(i => (r0 + i / w, c0 + i % w))
+    }.collect()
     assert(cells.map(_.length).sum == ref.numCells)
     assert(cells.flatten.toSet.size == ref.numCells)
   }
