@@ -240,12 +240,13 @@ object Plans {
       |  sort-merge/hash on 32 partitions; the acc >= threshold filter runs
       |  BEFORE the join (selectivity ~1% of cells), so the join input is the
       |  channel skeleton, not the full raster.
-      |- **r29 fillSinks**: per ROUND one halo exchange of the current fill
-      |  plane plus one cellId equi-join against the persisted z tiles; rounds
-      |  bounded by the inter-tile drainage diameter (fixture: 2-3 rounds;
-      |  monotone non-increasing estimates guarantee termination detection via
-      |  a changed-cell count). localCheckpoint per round keeps the logical plan
-      |  constant-size (pathology #11 in the perf notes).
+      |- **r29 fillSinks / r33 conditioned routing**: halo exchange -> per-tile
+      |  spill graph (O(perimeter) rows) -> minimax-to-drain solve on the driver
+      |  while the border cells fit the DriverGate byte budget (above it, per-tile
+      |  rounds of messages over cross-tile edges, each moving O(perimeter) rows)
+      |  -> each tile's terminal fills (a broadcast, or an equi-join when
+      |  distributed) -> one seeded re-flood per tile. Two passes over the
+      |  cached padded tiles; zero per-cell shuffle.
       |
       |
       |## d11_repetition: zero-shuffle per-row repetition stats

@@ -67,7 +67,8 @@ private[graft] object DriverGate {
   def toDs[T: Encoder](spark: SparkSession, p: Placed[T]): Dataset[T] =
     p.fold(a => spark.createDataset(a.toSeq), identity)
 
-  private def labelled[A](spark: SparkSession, label: String)(body: => A): A = {
+  /** `body` with its jobs described as `label`. */
+  def labelled[A](spark: SparkSession, label: String)(body: => A): A = {
     val sc = spark.sparkContext
     val prev = sc.getLocalProperty("spark.job.description")
     sc.setJobDescription(label)

@@ -77,12 +77,9 @@ case class ValidCountExpr(child: Expression) extends UnaryExpression {
 
 /** cell_in_window(cell, minRow, maxRow, minCol, maxCol, res) -> true when
   * `cell` is a res-`res` cell whose pixel block intersects the inclusive
-  * window. Deliberately OPAQUE to Catalyst as written (a black-box
-  * predicate can't prune scans); [[graft.functions.RewriteCellWindowPredicates]]
-  * rewrites it with literal bounds into the Z-range BETWEEN disjuncts that
-  * reach Parquet min/max stats — the engine's showcase of a custom
-  * logical-optimizer rule. The interpreted eval below is the correctness
-  * net when the rule is not installed. */
+  * window. OPAQUE to Catalyst (a black-box predicate can't prune scans):
+  * a scan-prunable window filter is the Z-range cover TileOps compiles
+  * from `CellId.zRanges`. */
 case class CellInWindowExpr(children: Seq[Expression]) extends Expression
     with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
   require(children.length == 6, "cell_in_window takes 6 args")
@@ -110,12 +107,9 @@ object GraftFunctions {
 
   /** interpreted kernel for cell_in_window. An INVERTED window
     * (minRow > maxRow or minCol > maxCol) is an empty set of pixels and
-    * matches nothing — this must agree with the plan-time fold in
-    * [[RewriteCellWindowPredicates]] (which folds inverted literal
-    * windows to FALSE); without the explicit check, a cell whose pixel
+    * matches nothing; without the explicit check, a cell whose pixel
     * block straddles both inverted bounds would satisfy the two
-    * interval comparisons and the same query would return different
-    * rows depending on whether the optimizer rule fired. */
+    * interval comparisons. */
   def cellInWindow(cell: Long, minRow: Long, maxRow: Long, minCol: Long,
       maxCol: Long, res: Int): Boolean = {
     if (CellId.res(cell) != res || minRow > maxRow || minCol > maxCol) false

@@ -227,7 +227,7 @@ object EmbeddingGates {
         |    END AS q
         |  FROM embeddings e, range(64) i(i), sc WHERE sc.d = i.i),
         |dots AS (
-        |  SELECT q.vid AS qid, b.vid AS vid, sum(q.q * b.q) AS idot
+        |  SELECT q.vid AS qid, b.vid AS vid, CAST(sum(q.q * b.q) AS BIGINT) AS idot
         |  FROM cq q JOIN cq b ON b.d = q.d AND b.vid != q.vid
         |  WHERE q.vid < 10 GROUP BY 1, 2)
         |SELECT qid, rank, vid, idot FROM (

@@ -241,8 +241,8 @@ object RelationalGates {
         |  FROM events)
         |SELECT event_id, user_id, value_c,
         |  lag(value_c, 1) OVER w AS prev_value_c,
-        |  sum(value_c) OVER (PARTITION BY user_id
-        |    ORDER BY ts, event_id ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS mov_sum_c3,
+        |  CAST(sum(value_c) OVER (PARTITION BY user_id
+        |    ORDER BY ts, event_id ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS BIGINT) AS mov_sum_c3,
         |  max(value_c) OVER (PARTITION BY user_id
         |    ORDER BY ts, event_id ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS mov_max_c3,
         |  CAST(row_number() OVER w AS BIGINT) AS seq
@@ -428,11 +428,11 @@ object RelationalGates {
       // q16: conditional-aggregation replica of the pivot grid (DuckDB's
       // PIVOT statement can't run inside a plain SELECT compare)
       """SELECT dayofweek(ts) + 1 AS dow,
-        |  sum(CASE WHEN event_type = 'click' THEN c END) AS click,
-        |  sum(CASE WHEN event_type = 'error' THEN c END) AS error,
-        |  sum(CASE WHEN event_type = 'purchase' THEN c END) AS purchase,
-        |  sum(CASE WHEN event_type = 'signup' THEN c END) AS signup,
-        |  sum(CASE WHEN event_type = 'view' THEN c END) AS view
+        |  CAST(sum(CASE WHEN event_type = 'click' THEN c END) AS BIGINT) AS click,
+        |  CAST(sum(CASE WHEN event_type = 'error' THEN c END) AS BIGINT) AS error,
+        |  CAST(sum(CASE WHEN event_type = 'purchase' THEN c END) AS BIGINT) AS purchase,
+        |  CAST(sum(CASE WHEN event_type = 'signup' THEN c END) AS BIGINT) AS signup,
+        |  CAST(sum(CASE WHEN event_type = 'view' THEN c END) AS BIGINT) AS view
         |FROM (SELECT ts, event_type,
         |        CAST(floor(value * 100 + 0.5) AS BIGINT) AS c FROM events)
         |GROUP BY 1 ORDER BY 1""".stripMargin),

@@ -17,10 +17,12 @@ import graft.core.{CellView, DriverGate, GridRef, Owned, Tile}
   * engines and partitionings (a true-sqrt(2) metric would tie-break
   * differently per plan).
   *
-  * Distributed shape — the minisum sibling of [[Flow.fillSinksTiles]]'s
-  * minimax Priority-Flood: each round every tile runs an EXACT local
-  * Dijkstra against its current 1-px halo estimates, and rounds iterate
-  * until no cell improves. Rounds are bounded by the number of inter-tile
+  * Distributed shape — an iterated halo relaxation (the fill's minimax
+  * solve condenses tiles first; this minisum one does not, since a
+  * two-pass variant reassociates IEEE sums): each round every tile runs
+  * an EXACT local Dijkstra against its current 1-px halo estimates, and
+  * rounds iterate until no cell improves. Rounds are bounded by the
+  * number of inter-tile
   * crossings on any optimal path (grid diameter / tile size), each round
   * shuffles only the 1-pixel halo, and no per-cell state ever reaches the
   * driver — at 1000 executors the cost is a handful of halo exchanges,

@@ -97,17 +97,22 @@ object Flow {
   }
 
   // ---------------------------------------------------------------------
-  // Tile condensation — the scale shape of flowAcc, longestUpstream,
-  // downstream and nearestDrainage:
-  //   1. per tile, an in-tile solve plus the tile's boundary summary
-  //      ([[TraceSummary]]): crossing edges (cell -> neighbor-tile cell)
-  //      and, for every border cell, where its in-tile D8 path ends;
-  //   2. a solve over the CROSSING GRAPH only (O(perimeter), ~4/2^res of
-  //      the cells). A crossing's successor is the exit crossing its
-  //      target's in-tile path reaches; z strictly decreases along flow,
-  //      so the graph is a functional forest. [[foldUpstream]] or
-  //      [[resolveChains]] solves it — on the driver while the summaries
-  //      fit the [[DriverGate]] byte budget, distributed above;
+  // Tile condensation — the scale shape of all five crossing-graph
+  // operators: flowAcc, longestUpstream, downstream, nearestDrainage and
+  // fillSinks:
+  //   1. per tile, an in-tile solve plus the tile's boundary summary: for
+  //      the four D8 operators ([[TraceSummary]]) its crossing edges (cell
+  //      -> neighbor-tile cell) and, for every border cell, where its
+  //      in-tile D8 path ends; for the fill, its spill graph
+  //      ([[tileSpillGraph]]);
+  //   2. a solve over that CONDENSED GRAPH only (O(perimeter), ~4/2^res of
+  //      the cells) — on the driver while it fits the [[DriverGate]] byte
+  //      budget, distributed above. D8: a crossing's successor is the exit
+  //      crossing its target's in-tile path reaches; z strictly decreases
+  //      along flow, so the graph is a functional forest, which
+  //      [[foldUpstream]] or [[resolveChains]] solves. Fill:
+  //      [[minimaxToDrain]] over the union of the spill graphs, or per tile
+  //      in rounds of messages over cross-tile edges;
   //   3. a second per-tile pass seeded with the solved values ([[seeded]]),
   //      cut once, eagerly, one dense block per tile: the per-cell rows an
   //      operator returns are the [[CellView]] of that cut, so no cut or
@@ -711,180 +716,54 @@ object Flow {
 
   // ---------------------------------------------------------------------
   // Depression filling (Priority-Flood) — the standard DEM-conditioning
-  // step before D8 routing (Barnes, Lehman & Mulla 2014; the parallel
-  // tile-iteration shape follows Barnes 2016). The filled surface is the
-  // minimax fixpoint  fill(c) = max(z(c), min over 8-neighbors fill(n))
+  // step before D8 routing (Barnes, Lehman & Mulla 2014; the two-pass
+  // tile shape follows Barnes 2016). The filled surface is the minimax
+  // fixpoint  fill(c) = max(z(c), min over 8-neighbors fill(n))
   // with fill = z on DRAIN cells (grid border or NaN-adjacent — NODATA is
   // treated as ocean). Fill values are max/min selections of input z
   // values (no arithmetic), so results are bit-exact cross-engine.
 
-  /** One tile-local Priority-Flood given halo fill estimates. `zt` is the
-    * tile's elevation payload, `pf` the padded CURRENT fill plane (halo =
-    * neighbor-tile estimates, NaN off-grid / at NODATA). Returns the new
-    * fill payload. Exact within the tile for the given boundary values;
-    * monotone non-increasing vs the current estimates. */
-  private def localFill(pf: Stencil.Padded, zt: Array[Double]): Array[Double] = {
+  /** Spill-graph row's `b` for a drain seed: terminal `a` reaches a drain
+    * at height `w`. */
+  private val Drain = -1L
+
+  /** Priority-Flood over one padded tile (its halo NaN off-grid and at
+    * NODATA). `seed(i, drain)` gives valid cell i's starting value (+inf
+    * for none) and label; a cell is a drain when an 8-neighbor is NaN.
+    * The lowest value grows outward, `v(j) = max(z(j), v(u))`, handing on
+    * its label; `meet(a, b, w)` sees every pair of done neighbors with
+    * different labels a, b, meeting at height w. Returns v per local index
+    * (NaN at NODATA); v does not depend on tie order. */
+  private def flood(pf: Stencil.Padded)(seed: (Int, Boolean) => (Double, Long))
+      (meet: (Long, Long, Double) => Unit): Array[Double] = {
     val h = pf.h
     val w = pf.w
     val n = h * w
-    val INF = Double.PositiveInfinity
+    val z = new Array[Double](n)
     val cand = new Array[Double](n)
+    val lab = new Array[Long](n)
     val done = new Array[Boolean](n)
-    var i = 0
-    while (i < n) {
-      cand(i) = if (zt(i).isNaN) Double.NaN else pf.at(pf.row0 + i / w, pf.col0 + i % w)
-      i += 1
-    }
-    // seed border cells from halo estimates: entering the tile at c costs
-    // max(z(c), fill(outside neighbor))
-    var r = 0
-    while (r < h) {
-      var c = 0
-      while (c < w) {
-        if ((r == 0 || r == h - 1 || c == 0 || c == w - 1) && !zt(r * w + c).isNaN) {
-          var k = 0
-          while (k < 8) {
-            val (_, dr, dc) = D8(k)
-            val rr = r + dr
-            val cc = c + dc
-            if (rr < 0 || rr >= h || cc < 0 || cc >= w) {
-              val f = pf.at(pf.row0 + r + dr, pf.col0 + c + dc)
-              if (!f.isNaN && f != INF) {
-                val cnd = math.max(zt(r * w + c), f)
-                if (cnd < cand(r * w + c)) cand(r * w + c) = cnd
-              }
-            }
-            k += 1
-          }
-        }
-        c += 1
-      }
-      r += 1
-    }
-    // Priority-Flood: grow from the lowest candidate outward; lazy-deleted
-    // binary heap of (fill, idx). Tie order does not affect the fixpoint.
     val pq = new java.util.PriorityQueue[(Double, Int)](
       (a: (Double, Int), b: (Double, Int)) => java.lang.Double.compare(a._1, b._1))
-    i = 0
-    while (i < n) {
-      if (!cand(i).isNaN && cand(i) != INF) pq.add((cand(i), i))
-      i += 1
-    }
-    while (!pq.isEmpty) {
-      val (v, u) = pq.poll()
-      if (!done(u) && v == cand(u)) {
-        done(u) = true
-        val ur = u / w
-        val uc = u % w
-        var k = 0
-        while (k < 8) {
-          val (_, dr, dc) = D8(k)
-          val rr = ur + dr
-          val cc = uc + dc
-          if (rr >= 0 && rr < h && cc >= 0 && cc < w) {
-            val j = rr * w + cc
-            if (!done(j) && !zt(j).isNaN) {
-              val cnd = math.max(zt(j), v)
-              if (cnd < cand(j)) { cand(j) = cnd; pq.add((cnd, j)) }
-            }
-          }
-          k += 1
-        }
-      }
-    }
-    cand
-  }
-
-  /** Depression-filled DEM: `(row, col, fill)` for every valid cell.
-    * Two-pass parallel Priority-Flood (Barnes 2016) via
-    * [[fillSinksTiles]]. */
-  def fillSinks(tiles: Dataset[Tile], ref: GridRef, res: Int,
-      maxRounds: Int = 10000): DataFrame =
-    CellView.ofTiles(fillSinksTiles(tiles, ref, res, maxRounds), "fill", LongType)
-
-  /** [[fillSinks]] keeping the tile representation (for pipelines that
-    * continue with routing over the conditioned surface).
-    *
-    * Two-pass parallel Priority-Flood (Barnes 2016): pass 1 runs ONE
-    * tile-local multi-seed flood that condenses each tile to its
-    * "spillover graph" — border-cell terminals plus min-saddle edges
-    * between the flood's watershed labels (O(perimeter) nodes, the same
-    * ~4/2^res fraction as a halo); the driver solves global
-    * minimax-to-drain over the union of those graphs plus cross-tile
-    * border adjacencies; pass 2 re-floods each tile once, seeded with
-    * the exact resolved border fills. Round count is O(1) in the
-    * tile/grid ratio — the fixpoint `fill(c) = max(z(c), min over
-    * neighbors fill(n))` is unique, so the result is bit-identical to
-    * the iterative halo relaxation (FlowSpec gates both against each
-    * other and the Jacobi oracle). When the driver solve's estimated
-    * rows do not fit the [[DriverGate]] budget, the iterative halo
-    * relaxation ([[fillSinksIterative]]) runs instead: one job per round,
-    * rounds bounded by `maxRounds`. */
-  def fillSinksTiles(tiles: Dataset[Tile], ref: GridRef, res: Int,
-      maxRounds: Int = 10000): Dataset[Tile] = {
-    val tileCount = (((ref.ncols - 1) >> res) + 1).toLong * (((ref.nrows - 1) >> res) + 1)
-    // 1,200 bytes an estimated border cell (measured at most 932)
-    if (DriverGate.fits(tiles.sparkSession, "Flow.fillSinksTiles", tileCount * (4L << res) * 1200))
-      fillSinksTwoPass(tiles, ref, res)
-    else
-      fillSinksIterative(tiles, ref, res, maxRounds)
-  }
-
-  /** Pass-1 kernel: multi-seed Priority-Flood labeling every valid cell
-    * with the seed of minimal flood value. Seeds: every valid tile-edge
-    * cell (a terminal, seeded at z, labeled by its global cell index)
-    * and every interior drain (seeded at z, labeled DRAIN = -1). Emits
-    * `(key, -2, z)` per terminal, `(key, -1, z)` per drain terminal, and
-    * `(a, b, w)` min-saddle edges between labels — the tile's spillover
-    * graph, which preserves pairwise minimax between its terminals. */
-  private def tileSpillGraph(pf: Stencil.Padded, ncols: Long)
-      : Iterator[(Long, Long, Double)] = {
-    val h = pf.h
-    val w = pf.w
-    val n = h * w
-    val INF = Double.PositiveInfinity
-    val z = new Array[Double](n)
     var i = 0
     while (i < n) {
       z(i) = pf.at(pf.row0 + i / w, pf.col0 + i % w)
-      i += 1
-    }
-    def isDrain(idx: Int): Boolean = {
-      val r = idx / w
-      val c = idx % w
-      var k = 0
-      var d = false
-      while (k < 8 && !d) {
-        val (_, dr, dc) = D8(k)
-        if (pf.at(pf.row0 + r + dr, pf.col0 + c + dc).isNaN) d = true
-        k += 1
-      }
-      d
-    }
-    val cand = Array.fill(n)(INF)
-    val lab = Array.fill(n)(Long.MinValue)
-    val done = new Array[Boolean](n)
-    val pq = new java.util.PriorityQueue[(Double, Int)](
-      (a: (Double, Int), b: (Double, Int)) => java.lang.Double.compare(a._1, b._1))
-    val out = Array.newBuilder[(Long, Long, Double)]
-    i = 0
-    while (i < n) {
-      if (!z(i).isNaN) {
-        val r = i / w
-        val c = i % w
-        val edge = r == 0 || r == h - 1 || c == 0 || c == w - 1
-        if (edge) {
-          val key = (pf.row0 + r).toLong * ncols + (pf.col0 + c)
-          out += ((key, -2L, z(i)))
-          if (isDrain(i)) out += ((key, -1L, z(i)))
-          cand(i) = z(i); lab(i) = key; pq.add((z(i), i))
-        } else if (isDrain(i)) {
-          cand(i) = z(i); lab(i) = -1L; pq.add((z(i), i))
+      if (z(i).isNaN) cand(i) = Double.NaN
+      else {
+        var drain = false
+        var k = 0
+        while (k < 8 && !drain) {
+          val (_, dr, dc) = D8(k)
+          if (pf.at(pf.row0 + i / w + dr, pf.col0 + i % w + dc).isNaN) drain = true
+          k += 1
         }
+        val (v, l) = seed(i, drain)
+        cand(i) = v
+        lab(i) = l
+        if (v != Double.PositiveInfinity) pq.add((v, i))
       }
       i += 1
     }
-    val saddle = scala.collection.mutable.HashMap.empty[(Long, Long), Double]
     while (!pq.isEmpty) {
       val (v, u) = pq.poll()
       if (!done(u) && v == cand(u)) {
@@ -899,227 +778,213 @@ object Flow {
           if (rr >= 0 && rr < h && cc >= 0 && cc < w) {
             val j = rr * w + cc
             if (!z(j).isNaN) {
-              if (done(j)) {
-                if (lab(j) != lab(u)) {
-                  val p = if (lab(u) < lab(j)) (lab(u), lab(j)) else (lab(j), lab(u))
-                  val sw = math.max(v, cand(j))
-                  if (sw < saddle.getOrElse(p, INF)) saddle(p) = sw
-                }
-              } else {
+              if (!done(j)) {
                 val cnd = math.max(z(j), v)
                 if (cnd < cand(j)) { cand(j) = cnd; lab(j) = lab(u); pq.add((cnd, j)) }
-              }
+              } else if (lab(j) != lab(u)) meet(lab(u), lab(j), math.max(v, cand(j)))
             }
           }
           k += 1
         }
       }
     }
-    // (max, min) order: a saddle against the DRAIN label (-1) then lands
-    // in the edge's b slot, where the driver reads it as a drain seed —
-    // the same meaning (label a reaches a drain at weight w)
-    saddle.foreach { case (p, sw) => out += ((p._2, p._1, sw)) }
-    out.result().iterator
+    cand
   }
 
-  /** Pass-2 kernel: one tile-local flood seeded with the globally
-    * resolved border fills (and interior drains at z). */
-  private def refloodTile(pf: Stencil.Padded,
-      bfill: scala.collection.Map[Long, Double], ncols: Long): Tile = {
-    val h = pf.h
-    val w = pf.w
-    val n = h * w
-    val INF = Double.PositiveInfinity
-    val z = new Array[Double](n)
-    var i = 0
-    while (i < n) {
-      z(i) = pf.at(pf.row0 + i / w, pf.col0 + i % w)
-      i += 1
-    }
-    def isDrain(idx: Int): Boolean = {
-      val r = idx / w
-      val c = idx % w
-      var k = 0
-      var d = false
-      while (k < 8 && !d) {
-        val (_, dr, dc) = D8(k)
-        if (pf.at(pf.row0 + r + dr, pf.col0 + c + dc).isNaN) d = true
-        k += 1
-      }
-      d
-    }
-    val cand = new Array[Double](n)
-    val done = new Array[Boolean](n)
-    val pq = new java.util.PriorityQueue[(Double, Int)](
-      (a: (Double, Int), b: (Double, Int)) => java.lang.Double.compare(a._1, b._1))
-    i = 0
-    while (i < n) {
-      if (z(i).isNaN) cand(i) = Double.NaN
-      else {
-        val r = i / w
-        val c = i % w
-        var seed = INF
-        if (r == 0 || r == h - 1 || c == 0 || c == w - 1) {
-          val key = (pf.row0 + r).toLong * ncols + (pf.col0 + c)
-          seed = bfill.getOrElse(key, INF)
-        }
-        if (isDrain(i)) seed = math.min(seed, z(i))
-        cand(i) = seed
-        if (seed != INF) pq.add((seed, i))
-      }
-      i += 1
-    }
-    while (!pq.isEmpty) {
-      val (v, u) = pq.poll()
-      if (!done(u) && v == cand(u)) {
-        done(u) = true
-        val ur = u / w
-        val uc = u % w
+  private def isEdge(pf: Stencil.Padded, i: Int): Boolean = {
+    val r = i / pf.w
+    val c = i % pf.w
+    r == 0 || r == pf.h - 1 || c == 0 || c == pf.w - 1
+  }
+
+  /** Pass-1 kernel: the tile's spill graph (Barnes 2016) as rows (a, b, w).
+    * Its terminals are the valid tile-edge cells, keyed by global cell
+    * index `row * ncols + col`. A multi-seed flood labels every valid cell
+    * with the terminal (or, from an interior drain, [[Drain]]) of minimal
+    * flood value; the min-saddle between two labels is an edge, so the
+    * graph keeps the pairwise minimax between terminals. A row with
+    * b = [[Drain]] is a drain seed: a drain terminal at its z, or a saddle
+    * against an interior drain. Each terminal also has an edge of weight
+    * max(z, z') to every valid 8-neighbor in another tile (z' read from
+    * the halo); the end with the smaller key emits it, so the union over
+    * all tiles holds each cross-tile edge once. */
+  private def tileSpillGraph(pf: Stencil.Padded, ncols: Long)
+      : Iterator[(Long, Long, Double)] = {
+    val out = Array.newBuilder[(Long, Long, Double)]
+    val saddle = scala.collection.mutable.HashMap.empty[(Long, Long), Double]
+    flood(pf) { (i, drain) =>
+      val r = pf.row0 + i / pf.w
+      val c = pf.col0 + i % pf.w
+      val zi = pf.at(r, c)
+      if (isEdge(pf, i)) {
+        val key = r.toLong * ncols + c
+        if (drain) out += ((key, Drain, zi))
         var k = 0
         while (k < 8) {
           val (_, dr, dc) = D8(k)
-          val rr = ur + dr
-          val cc = uc + dc
-          if (rr >= 0 && rr < h && cc >= 0 && cc < w) {
-            val j = rr * w + cc
-            if (!done(j) && !z(j).isNaN) {
-              val cnd = math.max(z(j), v)
-              if (cnd < cand(j)) { cand(j) = cnd; pq.add((cnd, j)) }
-            }
-          }
+          val (rr, cc) = (r + dr, c + dc)
+          val zn = pf.at(rr, cc)
+          val nk = rr.toLong * ncols + cc
+          val outside = rr < pf.row0 || rr >= pf.row0 + pf.h ||
+            cc < pf.col0 || cc >= pf.col0 + pf.w
+          if (outside && !zn.isNaN && key < nk) out += ((key, nk, math.max(zi, zn)))
           k += 1
         }
-      }
+        (zi, key)
+      } else if (drain) (zi, Drain)
+      else (Double.PositiveInfinity, 0L)
+    } { (a, b, sw) =>
+      // (max, min): a saddle against the Drain label lands in the b slot
+      val p = if (a < b) (b, a) else (a, b)
+      if (sw < saddle.getOrElse(p, Double.PositiveInfinity)) saddle(p) = sw
     }
-    Tile(pf.cellId, pf.row0, pf.col0, h, w, cand)
+    saddle.foreach { case ((a, b), sw) => out += ((a, b, sw)) }
+    out.result().iterator
   }
 
-  /** Two-pass fill body: condense (1 job) -> driver minimax solve ->
-    * re-flood (1 job, eager). */
-  private def fillSinksTwoPass(tiles: Dataset[Tile], ref: GridRef,
-      res: Int): Dataset[Tile] = {
-    import tiles.sparkSession.implicits._
-    val INF = Double.PositiveInfinity
+  /** Pass-2 kernel: the tile re-flooded from its terminals' solved fills
+    * (and its interior drains at z). */
+  private def refloodTile(pf: Stencil.Padded,
+      bfill: scala.collection.Map[(Long, Long), Double]): Tile = {
+    val fill = flood(pf) { (i, drain) =>
+      val r = pf.row0 + i / pf.w
+      val c = pf.col0 + i % pf.w
+      val s = if (isEdge(pf, i)) bfill.getOrElse((r.toLong, c.toLong), Double.PositiveInfinity)
+        else Double.PositiveInfinity
+      (if (drain) math.min(s, pf.at(r, c)) else s, 0L)
+    }((_, _, _) => ())
+    Tile(pf.cellId, pf.row0, pf.col0, pf.h, pf.w, fill)
+  }
+
+  /** Minimax distance to a drain (Dijkstra with max in place of +) over
+    * the undirected `edges` (a, b, w): each node reached from a seed
+    * (node, value) gets the least, over its paths to a seed, of the
+    * largest of the seed's value and the path's edge weights. */
+  private def minimaxToDrain(seeds: Iterator[(Long, Double)],
+      edges: Iterable[(Long, Long, Double)]): scala.collection.Map[Long, Double] = {
+    val adj = scala.collection.mutable.HashMap
+      .empty[Long, scala.collection.mutable.ArrayBuffer[(Long, Double)]]
+    def nbrs(k: Long) = adj.getOrElseUpdate(k, scala.collection.mutable.ArrayBuffer.empty)
+    edges.foreach { case (a, b, w) => nbrs(a) += ((b, w)); nbrs(b) += ((a, w)) }
+    val dist = scala.collection.mutable.HashMap.empty[Long, Double]
+    val pq = new java.util.PriorityQueue[(Double, Long)](
+      (a: (Double, Long), b: (Double, Long)) => java.lang.Double.compare(a._1, b._1))
+    def offer(k: Long, v: Double): Unit =
+      if (v < dist.getOrElse(k, Double.PositiveInfinity)) { dist(k) = v; pq.add((v, k)) }
+    seeds.foreach { case (k, v) => offer(k, v) }
+    while (!pq.isEmpty) {
+      val (v, u) = pq.poll()
+      if (v == dist(u)) adj.get(u).foreach(_.foreach { case (nb, w) => offer(nb, math.max(v, w)) })
+    }
+    dist
+  }
+
+  /** A tile's row in the distributed fill solve: the spill-graph rows
+    * touching its terminals (its own and every cross-tile edge to it), its
+    * terminals' current fills, and the seeds (terminal, value) it sends
+    * this round over cross-tile edges. */
+  private final case class FillTile(cellId: Long, graph: Array[(Long, Long, Double)],
+      fill: Array[(Long, Double)], sent: Array[(Long, Double)])
+
+  /** One round of a tile: [[minimaxToDrain]] over its graph, seeded with
+    * its drain rows, its current fills and the `inbox`; every terminal
+    * whose fill went down sends max(fill, w) across each of its
+    * cross-tile edges. Fills only go down. */
+  private def relaxTile(t: FillTile, inbox: Iterator[(Long, Double)],
+      tileOf: Long => Long): FillTile = {
+    val own = (k: Long) => tileOf(k) == t.cellId
+    val (drains, edges) = t.graph.partition(_._2 == Drain)
+    val dist = minimaxToDrain(
+      drains.iterator.map(d => (d._1, d._3)) ++ t.fill.iterator ++ inbox, edges)
+    val old = t.fill.toMap
+    val fill = dist.iterator.filter(kv => own(kv._1)).toArray
+    val changed = fill.iterator
+      .filter { case (k, f) => f < old.getOrElse(k, Double.PositiveInfinity) }.toMap
+    val sent = edges.flatMap { case (a, b, w) =>
+      if (!own(b)) changed.get(a).map(f => (b, math.max(f, w)))
+      else if (!own(a)) changed.get(b).map(f => (a, math.max(f, w)))
+      else None
+    }
+    FillTile(t.cellId, t.graph, fill, sent)
+  }
+
+  /** Depression-filled DEM: `(row, col, fill)` for every valid cell, via
+    * [[fillSinksTiles]]. */
+  def fillSinks(tiles: Dataset[Tile], ref: GridRef, res: Int): DataFrame =
+    CellView.ofTiles(fillSinksTiles(tiles, ref, res), "fill", LongType)
+
+  /** [[fillSinks]] keeping the tile representation (for pipelines that
+    * continue with routing over the conditioned surface).
+    *
+    * Two-pass parallel Priority-Flood (Barnes 2016), the tile-condensation
+    * shape: pass 1 condenses each tile to its spill graph
+    * ([[tileSpillGraph]]: O(perimeter) terminals, the same ~4/2^res
+    * fraction as a halo, with min-saddle edges inside the tile and the
+    * edges to neighbor-tile terminals); [[minimaxToDrain]] solves every
+    * terminal's fill; pass 2 re-floods each tile once from its terminals'
+    * fills ([[seeded]]). While the estimated border cells fit the
+    * [[DriverGate]] budget, one solve runs on the driver over the union of
+    * the graphs. Above it, each tile's graph is one row and the solve runs
+    * in rounds: a tile re-solves its graph with the fills its neighbors
+    * sent over cross-tile edges, and sends on the fills that went down,
+    * until none does — rounds grow with the number of tiles a drainage
+    * path crosses, each moving O(perimeter) rows. The fixpoint is unique,
+    * so both placements give the same bits (FlowSpec gates both against a
+    * Jacobi oracle). */
+  def fillSinksTiles(tiles: Dataset[Tile], ref: GridRef, res: Int): Dataset[Tile] = {
+    val spark = tiles.sparkSession
+    import spark.implicits._
     val ncols = ref.ncols.toLong
-    val nrows = ref.nrows.toLong
+    val op = "Flow.fillSinksTiles"
+    val tileCount = (((ref.ncols - 1) >> res) + 1).toLong * (((ref.nrows - 1) >> res) + 1)
+    val terminals = tileCount * (4L << res)
+    def tileOf(k: Long): Long = CellId.ofPixel(k / ncols, k % ncols, res)
+    def cell(k: Long): (Long, Long) = (k / ncols, k % ncols)
     Owned { own =>
-      val pad = own.reuse(Stencil.padded(tiles, ref, res))
-      val rows = pad.flatMap(pf => tileSpillGraph(pf, ncols)).collect()
-      // assemble the global border graph: terminals carry z; DRAIN edges
-      // seed the solve; saddles + cross-tile adjacencies connect it
-      val zOf = scala.collection.mutable.HashMap.empty[Long, Double]
-      val adj = scala.collection.mutable.HashMap
-        .empty[Long, scala.collection.mutable.ArrayBuffer[(Long, Double)]]
-      def nbrs(k: Long) =
-        adj.getOrElseUpdate(k, scala.collection.mutable.ArrayBuffer.empty)
-      val dist = scala.collection.mutable.HashMap.empty[Long, Double]
-      val pq = new java.util.PriorityQueue[(Double, Long)](
-        (a: (Double, Long), b: (Double, Long)) =>
-          java.lang.Double.compare(a._1, b._1))
-      rows.foreach {
-        case (k, -2L, zv) => zOf(k) = zv
-        case (a, -1L, wv) =>
-          if (wv < dist.getOrElse(a, INF)) { dist(a) = wv; pq.add((wv, a)) }
-        case (a, b, wv) => nbrs(a) += ((b, wv)); nbrs(b) += ((a, wv))
-      }
-      zOf.foreach { case (k, zv) =>
-        val r = k / ncols
-        val c = k % ncols
-        var i = 0
-        while (i < 8) {
-          val (_, dr, dc) = D8(i)
-          val rr = r + dr
-          val cc = c + dc
-          if (rr >= 0 && rr < nrows && cc >= 0 && cc < ncols &&
-              ((rr >> res) != (r >> res) || (cc >> res) != (c >> res))) {
-            val nk = rr * ncols + cc
-            // one direction per iteration; the reverse is added at nk
-            zOf.get(nk).foreach(zn => nbrs(k) += ((nk, math.max(zv, zn))))
+      val padded = own.reuse(masked(tiles, ref, res, None))
+      val rows = padded.flatMap { case (pf, _) => tileSpillGraph(pf, ncols) }
+      // 1,200 bytes an estimated border cell (measured at most 932)
+      val seeds: Placed[((Long, Long), Double)] =
+        if (DriverGate.fits(spark, op, terminals * 1200)) {
+          val (drains, edges) = rows.collect().partition(_._2 == Drain)
+          Left(minimaxToDrain(drains.iterator.map(d => (d._1, d._3)), edges)
+            .iterator.map { case (k, f) => (cell(k), f) }.toArray)
+        } else {
+          // one row per tile, hash-partitioned by tile id and kept in place:
+          // a round shuffles only the messages, partitioned the same way
+          val part = new org.apache.spark.HashPartitioner(spark.sparkContext.defaultParallelism)
+          var state = rows.rdd
+            .flatMap(e => if (e._2 == Drain) Iterator((tileOf(e._1), e))
+              else Iterator(tileOf(e._1), tileOf(e._2)).distinct.map((_, e)))
+            .groupByKey(part)
+            .mapPartitions(_.map { case (cid, es) =>
+              (cid, relaxTile(FillTile(cid, es.toArray, Array.empty, Array.empty), Iterator.empty,
+                tileOf))
+            }, preservesPartitioning = true)
+            .localCheckpoint()
+          // each round's count fills its lazy cut; a round sends only the
+          // fills that went down, and an optimal path crosses at most
+          // `terminals` cross-tile edges
+          def sent(round: Int): Long = DriverGate.labelled(spark, s"$op: distributed round $round")(
+            state.values.flatMap(_.sent).count())
+          var round = 1
+          while (sent(round) > 0) {
+            round += 1
+            require(round <= terminals + 1, s"$op: no fixpoint in ${terminals + 1} rounds")
+            val inbox = state.values.flatMap(_.sent.iterator.map(m => (tileOf(m._1), m)))
+              .partitionBy(part)
+            state = state.zipPartitions(inbox, preservesPartitioning = true) { (ts, ms) =>
+              val byTile = ms.toArray.groupMap(_._1)(_._2)
+              ts.map { case (cid, t) => (cid, byTile.get(cid)
+                .fold(t.copy(sent = Array.empty))(m => relaxTile(t, m.iterator, tileOf))) }
+            }.localCheckpoint()
           }
-          i += 1
+          Right(spark.createDataset(
+            state.values.flatMap(_.fill.map { case (k, f) => (cell(k), f) })))
         }
+      seeded(padded, res, seeds, math.min(_: Double, _: Double)) { case ((pf, _), m) =>
+        refloodTile(pf, m)
       }
-      while (!pq.isEmpty) {
-        val (v, u) = pq.poll()
-        if (v == dist.getOrElse(u, INF)) {
-          adj.get(u).foreach(_.foreach { case (nb, wv) =>
-            val nd = math.max(v, wv)
-            if (nd < dist.getOrElse(nb, INF)) { dist(nb) = nd; pq.add((nd, nb)) }
-          })
-        }
-      }
-      val bfill: scala.collection.Map[Long, Double] = dist
-      val bc = tiles.sparkSession.sparkContext.broadcast(bfill)
-      pad.map(pf => refloodTile(pf, bc.value, ncols)).localCheckpoint(true)
-    }
-  }
-
-  /** Iterative halo-relaxation fill (the pre-Barnes path, kept as the
-    * over-budget branch and as the FlowSpec equivalence gate). */
-  private[operators] def fillSinksIterative(tiles: Dataset[Tile], ref: GridRef,
-      res: Int, maxRounds: Int = 10000): Dataset[Tile] = {
-    import tiles.sparkSession.implicits._
-    val INF = Double.PositiveInfinity
-    Owned { own =>
-      val z = own.reuse(tiles)
-      // init: drains (grid border / NaN-adjacent, via the padded z halo
-      // which is NaN off-grid) start at z; everything else at +inf
-      var state: Dataset[Tile] = Stencil.padded(z, ref, res).map { pz =>
-        val h = pz.h
-        val w = pz.w
-        val payload = new Array[Double](h * w)
-        var i = 0
-        while (i < h * w) {
-          val gz = pz.at(pz.row0 + i / w, pz.col0 + i % w)
-          payload(i) =
-            if (gz.isNaN) Double.NaN
-            else {
-              var drain = false
-              var k = 0
-              while (k < 8 && !drain) {
-                val (_, dr, dc) = D8(k)
-                if (pz.at(pz.row0 + i / w + dr, pz.col0 + i % w + dc).isNaN) drain = true
-                k += 1
-              }
-              if (drain) gz else INF
-            }
-          i += 1
-        }
-        Tile(pz.cellId, pz.row0, pz.col0, h, w, payload)
-      }.localCheckpoint(false)
-
-      var rounds = 0
-      var changed = 1L
-      while (changed > 0) {
-        rounds += 1
-        require(rounds <= maxRounds, s"fillSinks did not converge in $maxRounds rounds")
-        val pfDs = Stencil.padded(state, ref, res)
-        // lazy checkpoint: the convergence agg below is the round's ONLY
-        // job — it materializes (and caches) the (tile, changed) pairs,
-        // and the next round's state reads the cached blocks. One job
-        // per round instead of persist + agg + eager-checkpoint.
-        val stepped = pfDs
-          .joinWith(z, pfDs("cellId") === z("cellId"), "inner")
-          .map { case (pf, zt) =>
-            val out = localFill(pf, zt.payload)
-            var ch = 0L
-            var i = 0
-            while (i < out.length) {
-              val prev = pf.at(pf.row0 + i / pf.w, pf.col0 + i % pf.w)
-              if (out(i) != prev && !(out(i).isNaN && prev.isNaN)) ch += 1
-              i += 1
-            }
-            (Tile(pf.cellId, pf.row0, pf.col0, pf.h, pf.w, out), ch)
-          }.localCheckpoint(false)
-        // agg, not reduce: total over an EMPTY tiling is 0, not a crash
-        changed = stepped.map(_._2)
-          .agg(org.apache.spark.sql.functions.coalesce(
-            org.apache.spark.sql.functions.sum("value"),
-            org.apache.spark.sql.functions.lit(0L)))
-          .head().getLong(0)
-        state = stepped.map(_._1)
-      }
-      state
     }
   }
 

@@ -335,35 +335,52 @@ class FlowSpec extends AnyFunSuite {
     }
   }
 
-  test("fillSinks two-pass (Barnes) == iterative halo relaxation, randomized grids") {
-    // the two implementations share only the fixpoint definition: any
+  test("fillSinksTiles at the default budget and at budget 0 == Jacobi fixpoint, randomized grids") {
+    // both placements of the spill-graph solve against the oracle: any
     // condensation bug (lost saddle, wrong cross-tile edge, bad drain
-    // seed) shows up as a value diff on some random surface
+    // seed, a message lost between rounds) shows up as a value diff
     val rnd = new scala.util.Random(42)
-    for (trial <- 0 until 3) {
-      val nr = 90 + rnd.nextInt(80)
-      val nc = 90 + rnd.nextInt(80)
-      val ref = GridRef(ncols = nc, nrows = nr, xll = 0, yll = 0,
-        cellsize = 1, nodata = -9999)
-      val vals = Array.tabulate(nr * nc) { i =>
-        if (rnd.nextInt(23) == 0) Double.NaN
-        else rnd.nextInt(4000) / 4.0
+    def grid(nr: Int, nc: Int)(f: (Int, Int) => Double) = {
+      val vals = Array.tabulate(nr * nc)(i => f(i / nc, i % nc))
+      (GridRef(ncols = nc, nrows = nr, xll = 0, yll = 0, cellsize = 1, nodata = -9999),
+        (r: Int, c: Int) => vals(r * nc + c))
+    }
+    val random = (0 until 3).map { _ =>
+      grid(90 + rnd.nextInt(80), 90 + rnd.nextInt(80)) { (_, _) =>
+        if (rnd.nextInt(23) == 0) Double.NaN else rnd.nextInt(4000) / 4.0
       }
-      def f(r: Int, c: Int): Double = vals(r * nc + c)
-      for (res <- Seq(5, 6)) {
-        val tiles = TileOps.tileGrid(spark, ref, res)(f)
-        val a = Flow.fillSinksTiles(tiles, ref, res).collect()
-          .sortBy(_.cellId)
-        val b = Flow.fillSinksIterative(tiles, ref, res).collect()
-          .sortBy(_.cellId)
-        assert(a.length == b.length, s"trial=$trial res=$res tile count")
-        a.zip(b).foreach { case (ta, tb) =>
-          assert(ta.cellId == tb.cellId)
-          val same = ta.payload.zip(tb.payload).forall { case (x, y) =>
-            x == y || (x.isNaN && y.isNaN)
+    }
+    // one outlet, at the left end of a noisy valley 8 res-5 tiles long
+    // between walls: the right end's fill comes through every tile in
+    // between, so the distributed solve needs a round per tile
+    val (vr, vc) = (100, 260)
+    val valley = grid(vr, vc) { (r, c) =>
+      val noise = rnd.nextInt(40) / 4.0
+      if (r >= 45 && r < 55 && c < vc - 4) { if (c == 0) 0.0 else 20.0 + c / 2.0 + noise }
+      else if (r < 10 || r >= vr - 10 || c < 4 || c >= vc - 4) 1000.0 + noise
+      else 300.0 + math.abs(r - 50) * 3 + c / 2.0 + noise
+    }
+    for (((ref, f), trial) <- (random :+ valley).zipWithIndex; res <- Seq(5, 6)) {
+      val want = globalFill(ref, f)
+      val tiles = TileOps.tileGrid(spark, ref, res)(f)
+      def fills(budget: Option[Long]) = org.apache.spark.JobDescriptions(spark.sparkContext) {
+        val run = () => Flow.fillSinksTiles(tiles, ref, res).collect()
+        budget.fold(run())(DriverGate.withBudget(_)(run()))
+      }
+      for (budget <- Seq(None, Some(0L))) {
+        val (got, jobs) = fills(budget)
+        val cells = got.flatMap { t =>
+          t.payload.indices.collect { case i if !t.payload(i).isNaN =>
+            (t.row0 + i / t.w, t.col0 + i % t.w) -> t.payload(i)
           }
-          assert(same, s"trial=$trial res=$res tile=${ta.cellId} payload diff")
         }
+        assert(cells.length == want.size, s"trial=$trial res=$res budget=$budget cells")
+        assert(cells.toMap == want, s"trial=$trial res=$res budget=$budget values")
+        val rounds = jobs.count(_.startsWith("Flow.fillSinksTiles: distributed round "))
+        if (budget.isEmpty) assert(rounds == 0, s"trial=$trial res=$res driver solve ran rounds")
+        else assert(rounds >= 2, s"trial=$trial res=$res rounds=$rounds")
+        if (trial == random.length && budget.isDefined)
+          assert(rounds >= (vc >> res), s"res=$res valley solved in $rounds rounds")
       }
     }
   }
